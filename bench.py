@@ -223,7 +223,6 @@ def main() -> None:
         "rrf_quality_fusion",
         "wat_roundtrip",
         "warc_http_charset",
-        "http_robots_gate",
         "cdx_index",
         "zipnum_index",
         "http_transfer_decode",

@@ -184,8 +184,14 @@ def strip_gps_jpeg(b: bytes) -> bytes:
             gps_entry_off = eo
     if gps_off is None:
         return b
-    # zero every out-of-line value block the GPS IFD references
+    # every region zeroed below must lie inside the segment: a slice
+    # assignment past its end would append bytes and change the length
+    if gps_off + 2 > len(t):
+        raise ExifError("truncated GPS IFD")
     (n,) = struct.unpack_from(bo + "H", t, gps_off)
+    if gps_off + 2 + 12 * n > len(t):
+        raise ExifError("GPS IFD entry table overruns segment")
+    # zero every out-of-line value block the GPS IFD references
     for k in range(n):
         eo = gps_off + 2 + 12 * k
         _tag, typ, count = struct.unpack_from(bo + "HHI", t, eo)
@@ -193,6 +199,8 @@ def strip_gps_jpeg(b: bytes) -> bytes:
             size = _TYPE_SIZES[typ] * count
             if size > 4:
                 (vo,) = struct.unpack_from(bo + "I", t, eo + 8)
+                if vo + size > len(t):
+                    raise ExifError("GPS value block overruns segment")
                 t[vo : vo + size] = bytes(size)
     # zero the GPS entry table itself (count stays so walkers don't
     # misparse; entries become tag 0 type 0 = skipped)

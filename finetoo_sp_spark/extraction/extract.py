@@ -14,7 +14,7 @@ Scale design (BASELINE.json north_rule, 10^12-row design point):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -86,21 +86,37 @@ def extract_pages(
     first — the explicit skew salt required by the north rule. Leave None
     for small/benchmark runs where input splits are already balanced.
     """
+    return _map_pages(pages, repartition_buckets, keep_cols, extract_batch)
+
+
+def _map_pages(
+    pages: DataFrame,
+    repartition_buckets: int | None,
+    keep_cols: list[str] | None,
+    batch: Callable[[pd.Series, pd.Series], pd.DataFrame],
+    extra_fields: tuple[StructField, ...] = (),
+) -> DataFrame:
+    """The one extraction plan: optional url-salt repartition, then one
+    ``mapInPandas`` over ``select(url, html, *keep_cols)``.
+
+    ``batch(urls, html)`` returns EXTRACT_SCHEMA columns followed by
+    ``extra_fields``; ``keep_cols`` are appended unchanged. The output
+    schema is rebuilt per call (``StructType.add`` would mutate the
+    shared EXTRACT_SCHEMA)."""
     keep_cols = keep_cols or []
     src = pages.select("url", "html", *keep_cols)
     if repartition_buckets:
         src = src.repartition(repartition_buckets, url_salt(repartition_buckets))
 
     out_schema = StructType(
-        EXTRACT_SCHEMA.fields
-        + [pages.schema[c] for c in keep_cols]
+        EXTRACT_SCHEMA.fields + list(extra_fields) + [pages.schema[c] for c in keep_cols]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            res = extract_batch(pdf["url"], pdf["html"])
+            res = batch(pdf["url"], pdf["html"])
             for c in keep_cols:
                 res[c] = pdf[c].reset_index(drop=True)
             yield res
@@ -123,26 +139,13 @@ def extract_pages_sniffed(
     """
     from finetoo_sp_spark.extraction.charset import sniff_decode_pandas
 
-    keep_cols = keep_cols or []
-    src = pages.select("url", "html", *keep_cols)
-    if repartition_buckets:
-        src = src.repartition(repartition_buckets, url_salt(repartition_buckets))
+    def batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
+        sniffed = sniff_decode_pandas(html)
+        res = extract_batch(urls, sniffed["text"])
+        res["charset"] = sniffed["charset"].reset_index(drop=True)
+        return res
 
-    out_schema = StructType(
-        EXTRACT_SCHEMA.fields
-        + [StructField("charset", StringType(), True)]
-        + [pages.schema[c] for c in keep_cols]
+    return _map_pages(
+        pages, repartition_buckets, keep_cols, batch,
+        (StructField("charset", StringType(), True),),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sniffed = sniff_decode_pandas(pdf["html"])
-            res = extract_batch(pdf["url"], sniffed["text"])
-            res["charset"] = sniffed["charset"].reset_index(drop=True)
-            for c in keep_cols:
-                res[c] = pdf[c].reset_index(drop=True)
-            yield res
-
-    return src.mapInPandas(run, schema=out_schema)

@@ -32,16 +32,12 @@ FAKEPDF format (text, utf-8)::
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from finetoo_sp_spark.extraction.extract import EXTRACT_SCHEMA
+from finetoo_sp_spark.extraction.extract import _map_pages, extract_pages
 
 FAKE_MAGIC = b"%PDF-FAKE"
 PDF_MAGIC = b"%PDF-"
@@ -177,34 +173,13 @@ def extract_pages_any(
     The routing predicate is a JVM-side prefix check on the binary column
     (no Python touch for the split), so each path's mapInPandas sees only
     its own rows — a narrow, shuffle-free plan on both branches.
-    ``repartition_buckets``: optional hash(url) salt repartition before
-    the split (same knob as extract_pages) — drop-in replacement for it
-    in the resumable pipeline.
+    ``repartition_buckets``: optional hash(url) salt repartition of each
+    branch (same knob as extract_pages) — drop-in replacement for it in
+    the resumable pipeline.
     """
-    from finetoo_sp_spark.extraction.extract import extract_pages, url_salt
-
-    keep_cols = keep_cols or []
-    if repartition_buckets:
-        pages = pages.repartition(repartition_buckets, url_salt(repartition_buckets))
     is_pdf = F.startswith(F.col("html"), F.lit(PDF_MAGIC))
-
-    html_part = pages.filter(~is_pdf)
-    pdf_part = pages.filter(is_pdf)
-
-    # rebuild (never .add onto EXTRACT_SCHEMA: StructType.add MUTATES the
-    # shared module-level schema, so a second call would duplicate cols)
-    out_schema = StructType(EXTRACT_SCHEMA.fields + [pages.schema[c] for c in keep_cols])
-
-    def run_pdf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            res = extract_pdf_batch(pdf["url"], pdf["html"])
-            for c in keep_cols:
-                res[c] = pdf[c].reset_index(drop=True)
-            yield res
-
-    pdf_out = pdf_part.select("url", "html", *keep_cols).mapInPandas(
-        run_pdf, schema=out_schema
+    html_out = extract_pages(pages.filter(~is_pdf), repartition_buckets, keep_cols)
+    pdf_out = _map_pages(
+        pages.filter(is_pdf), repartition_buckets, keep_cols, extract_pdf_batch
     )
-    return extract_pages(html_part, keep_cols=keep_cols).unionByName(pdf_out)
+    return html_out.unionByName(pdf_out)

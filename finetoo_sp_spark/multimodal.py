@@ -1,16 +1,19 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Design for image/audio/video at 100 TB: the payload is an opaque
-``binary`` column that never leaves the JVM except through Arrow batches
-into vectorized kernels; metadata (modality, declared dims, codec) rides
-in typed sibling columns so partition pruning / filtering never touches
-bytes. Decode / resize / frame-sample are per-batch pandas kernels with
-a real schema, real batch shape, and a clearly-marked stub where the
-codec library would run (PIL/ffmpeg are not in this container —
-BASELINE environment). The deterministic fallback ("fake decode")
-hashes the payload into fixed-size pseudo-features so the whole
-pipeline, including downstream joins/aggregations, is testable
-end-to-end today and swaps to a real codec by replacing one function.
+Image/audio/video assets are (asset_id, modality, payload) rows. The
+payload is an opaque ``binary`` column that never leaves the JVM except
+through Arrow batches into a Python kernel; metadata (modality, declared
+dims, codec) rides in typed sibling columns, so pruning and filtering
+never touch bytes. Every decode goes through the pure-stdlib codecs in
+``finetoo_sp_spark.codecs``.
+
+One seam: every per-asset payload kernel below is a ``row(asset_id,
+raw)`` function handed to :func:`per_asset`, which owns the projection,
+the Arrow batch loop, the output columns and ONE skip policy. ``row``
+returns the asset's output rows; if it raises any exception in
+:data:`SKIP`, the whole asset is dropped and the task carries on. A
+hostile payload may skip a row, never kill a task. Each codec's own
+``*Error`` subclasses ``ValueError``, so the policy covers them all.
 
 Reference tie-in: the reference treats PDF payloads the same way —
 opaque binary siblings of the DXFs routed to a parallel parse path
@@ -20,9 +23,9 @@ opaque binary siblings of the DXFs routed to a parallel parse path
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-from struct import error as struct_error
-from zlib import error as zlib_error
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -41,6 +44,10 @@ from pyspark.sql.types import (
 
 FEATURE_DIM = 16
 
+# The exceptions a decoder may raise on hostile bytes (the contract
+# tests/test_fuzz_decoders.py pins); anything else is a bug and fails.
+SKIP = (ValueError, NotImplementedError, IndexError, EOFError, struct.error, zlib.error)
+
 META_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),
@@ -56,21 +63,45 @@ FEATURE_SCHEMA = StructType(
 )
 
 
+def per_asset(
+    assets: DataFrame, schema: StructType, row: Callable[[int, bytes], list[tuple]]
+) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` over (asset_id, payload).
+
+    ``row(asset_id, raw)`` returns the asset's output rows as tuples in
+    ``schema`` field order. An exception in :data:`SKIP` drops the
+    whole asset (no partial rows); no shuffle, one pass."""
+    cols = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            recs = []
+            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
+                try:
+                    recs.extend(row(asset_id, bytes(payload)))
+                except SKIP:
+                    continue
+            yield pd.DataFrame(recs, columns=cols)
+
+    return assets.select("asset_id", "payload").mapInPandas(run, schema=schema)
+
+
 def decode_image(payload: bytes) -> "np.ndarray":
     """Decode an image payload to an (H, W, C) uint8 array, routed by
     magic bytes.
 
-    PNG decodes via the pure-stdlib codec (codecs/png.py: zlib inflate,
-    chunk CRCs, all five scanline filters, vectorized de-filter);
-    JPEG via codecs/jpeg.py (baseline SOF0/SOF1 AND progressive SOF2,
-    Huffman, 4:4:4/4:2:0, restart markers); WebP-lossless via
-    codecs/vp8l.py (full VP8L: transforms, color cache, LZ77,
-    meta-prefix groups); GIF via codecs/gif.py (LZW, interlace,
-    transparency; animated files decode the first frame); BMP and ICO
-    (favicons — largest entry, PNG or DIB payload) via codecs/bmp.py.
-    Lossy-VP8 WebP and arithmetic-coded JPEG raise
-    NotImplementedError — corpus kernels catch and skip, and
-    ``fake_features`` remains the deterministic plumbing fallback.
+    PNG decodes via codecs/png.py (zlib inflate, chunk CRCs, all five
+    scanline filters); JPEG via codecs/jpeg.py (baseline SOF0/SOF1 and
+    progressive SOF2, Huffman, 4:4:4/4:2:0, restart markers);
+    WebP-lossless via codecs/vp8l.py (full VP8L: transforms, color
+    cache, LZ77, meta-prefix groups); GIF via codecs/gif.py (LZW,
+    interlace, transparency; animated files decode the first frame);
+    BMP and ICO (favicons — largest entry, PNG or DIB payload) via
+    codecs/bmp.py; baseline TIFF via codecs/tiff.py. Lossy-VP8 WebP,
+    arithmetic-coded JPEG and any other format raise
+    NotImplementedError, which :data:`SKIP` covers.
     """
     b = bytes(payload)
     if b.startswith(b"\x89PNG\r\n\x1a\n"):
@@ -102,9 +133,8 @@ def decode_image(payload: bytes) -> "np.ndarray":
 
         return decode_tiff(b)
     raise NotImplementedError(
-        "unsupported image format (PNG, JPEG, and lossless WebP decode "
-        "without a codec library); use fake_features (deterministic) "
-        "for plumbing tests"
+        "unsupported image format (decodes PNG, JPEG, lossless WebP, GIF, "
+        "BMP, ICO and TIFF)"
     )
 
 
@@ -177,40 +207,34 @@ IMAGE_STATS_SCHEMA = StructType(
 )
 
 
+def _nn_sample(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
+    """Nearest-neighbor resample to (out_h, out_w) with the pure-integer
+    floor rule src = (dst * src_dim) // dst_dim."""
+    h, w = img.shape[:2]
+    rows = (np.arange(out_h, dtype=np.int64) * h) // out_h
+    cols = (np.arange(out_w, dtype=np.int64) * w) // out_w
+    return img.take(rows, axis=0).take(cols, axis=1)
+
+
+def _stats_rows(asset_id: int, img: np.ndarray) -> list[tuple]:
+    """IMAGE_STATS_SCHEMA row: geometry plus exact per-channel sums
+    (grayscale repeats its single channel across r/g/b)."""
+    h, w, ch = img.shape
+    sums = img.reshape(-1, ch).sum(axis=0, dtype=np.int64)
+    r, g, b = (sums[0], sums[1], sums[2]) if ch >= 3 else (sums[0],) * 3
+    return [(asset_id, w, h, ch, int(r), int(g), int(b))]
+
+
 def image_stats(assets: DataFrame) -> DataFrame:
     """REAL image decode over the binary column: per asset, the decoded
     dimensions and exact per-channel pixel sums (integer sums, not
     means, so an external oracle reproduces them with no float-rounding
-    ambiguity). Arrow-batched mapInPandas; payload bytes cross into
-    Python once per batch, the decode routes by magic (PNG / baseline
-    JPEG). Grayscale sums repeat the single channel across r/g/b.
-    Undecodable payloads (progressive JPEG, corrupt bytes, unknown
-    formats) are SKIPPED, never task-fatal — at corpus scale one bad
-    payload must not kill a 10^12-row job.
+    ambiguity). The decode routes by magic (:func:`decode_image`).
+    Grayscale sums repeat the single channel across r/g/b.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    img = decode_image(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue
-                h, w, ch = img.shape
-                sums = img.reshape(-1, ch).sum(axis=0, dtype=np.int64)
-                r, g, b = (
-                    (sums[0], sums[1], sums[2]) if ch >= 3 else (sums[0], sums[0], sums[0])
-                )
-                recs.append((asset_id, w, h, ch, int(r), int(g), int(b)))
-            yield pd.DataFrame(
-                recs,
-                columns=["asset_id", "width", "height", "channels", "sum_r", "sum_g", "sum_b"],
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=IMAGE_STATS_SCHEMA)
+    return per_asset(
+        assets, IMAGE_STATS_SCHEMA, lambda a, raw: _stats_rows(a, decode_image(raw))
+    )
 
 
 def frame_sample_plan(assets: DataFrame, every_n: int = 10) -> DataFrame:
@@ -223,7 +247,7 @@ def frame_sample_plan(assets: DataFrame, every_n: int = 10) -> DataFrame:
 
 
 def resize_images(assets: DataFrame, out_h: int, out_w: int) -> DataFrame:
-    """Nearest-neighbor resize over the REAL decode path: decode the PNG
+    """Nearest-neighbor resize over the REAL decode path: decode the
     payload, remap to an (out_h, out_w) grid with the pure-integer floor
     rule src = (dst * src_dim) // dst_dim, and emit the resized image's
     per-channel integer pixel sums.  The floor rule means an external
@@ -231,39 +255,16 @@ def resize_images(assets: DataFrame, out_h: int, out_w: int) -> DataFrame:
     — no float coordinate ambiguity — which is what makes the resize
     verifiable, not just runnable.
 
-    Arrow-batched mapInPandas like image_stats: payload bytes cross into
-    Python once per batch; the index remap is two numpy take() calls.
     Downstream training pipelines consume resized tensors — the sums
     here are the verification surface for the same kernel.
     """
     if out_h <= 0 or out_w <= 0:
         raise ValueError("output dimensions must be positive")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    img = decode_image(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue
-                h, w, ch = img.shape
-                rows = (np.arange(out_h, dtype=np.int64) * h) // out_h
-                cols = (np.arange(out_w, dtype=np.int64) * w) // out_w
-                resized = img.take(rows, axis=0).take(cols, axis=1)
-                sums = resized.reshape(-1, ch).sum(axis=0, dtype=np.int64)
-                r, g, b = (
-                    (sums[0], sums[1], sums[2]) if ch >= 3 else (sums[0], sums[0], sums[0])
-                )
-                recs.append((asset_id, out_w, out_h, ch, int(r), int(g), int(b)))
-            yield pd.DataFrame(
-                recs,
-                columns=["asset_id", "width", "height", "channels", "sum_r", "sum_g", "sum_b"],
-            )
+    def row(asset_id, raw):
+        return _stats_rows(asset_id, _nn_sample(decode_image(raw), out_h, out_w))
 
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=IMAGE_STATS_SCHEMA)
+    return per_asset(assets, IMAGE_STATS_SCHEMA, row)
 
 
 AUDIO_STATS_SCHEMA = StructType(
@@ -301,31 +302,12 @@ def audio_probe(assets: DataFrame) -> DataFrame:
     Vorbis/Opus id-header + closing granule position, WAV/FLAC header
     math). This is the curation fast path for crawled audio: bucket by
     codec/rate/length and drop sub-second clips BEFORE routing the
-    survivors to the sample-exact decode kernels. One Arrow pass,
-    O(headers) per asset; unrecognized/truncated payloads SKIP."""
-    from finetoo_sp_spark.codecs.probe import ProbeError, probe_audio_meta
+    survivors to the sample-exact decode kernels. O(headers) per
+    asset."""
+    from finetoo_sp_spark.codecs.probe import probe_audio_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    fmt, rate, ch, dur, kbps, vbr = probe_audio_meta(
-                        bytes(payload)
-                    )
-                except (ProbeError, ValueError):
-                    continue
-                recs.append((asset_id, fmt, rate, ch, dur, kbps, vbr))
-            yield pd.DataFrame(
-                recs,
-                columns=["asset_id", "container", "sample_rate",
-                         "channels", "duration_ms", "bitrate_kbps", "vbr"],
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=AUDIO_PROBE_SCHEMA
+    return per_asset(
+        assets, AUDIO_PROBE_SCHEMA, lambda a, raw: [(a, *probe_audio_meta(raw))]
     )
 
 
@@ -341,47 +323,24 @@ def audio_stats(assets: DataFrame) -> DataFrame:
     frombuffer — no per-sample Python); FLAC decodes via codecs/flac.py
     (lossless, so the same sample-exact stats apply), dispatched on the
     ``fLaC`` magic; lossy/compressed audio (MP3/Opus/...) raises inside
-    the codec and is SKIPPED, never task-fatal.
+    the codec and is skipped.
     """
-    from finetoo_sp_spark.codecs.flac import FlacError, decode_flac
-    from finetoo_sp_spark.codecs.wav import WavError, decode_wav
+    from finetoo_sp_spark.codecs.flac import decode_flac
+    from finetoo_sp_spark.codecs.wav import decode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    decode = decode_flac if raw[:4] == b"fLaC" else decode_wav
-                    rate, ch, bits, samples = decode(raw)
-                except (FlacError, WavError, ValueError):
-                    continue
-                s64 = samples.astype(np.int64)
-                recs.append(
-                    (
-                        asset_id,
-                        rate,
-                        ch,
-                        bits,
-                        samples.shape[0],
-                        samples.shape[0] * 1000 // rate,
-                        int((s64 * s64).sum()),
-                        int(np.abs(s64).max(initial=0)),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "sample_rate", "channels", "bits",
-                    "n_samples", "duration_ms", "sumsq", "peak",
-                ],
+    def row(asset_id, raw):
+        decode = decode_flac if raw[:4] == b"fLaC" else decode_wav
+        rate, ch, bits, samples = decode(raw)
+        s64 = samples.astype(np.int64)
+        n = samples.shape[0]
+        return [
+            (
+                asset_id, rate, ch, bits, n, n * 1000 // rate,
+                int((s64 * s64).sum()), int(np.abs(s64).max(initial=0)),
             )
+        ]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=AUDIO_STATS_SCHEMA
-    )
+    return per_asset(assets, AUDIO_STATS_SCHEMA, row)
 
 
 DHASH_SCHEMA = StructType(
@@ -404,34 +363,18 @@ def image_dhash(assets: DataFrame) -> DataFrame:
     (brightness-shift invariant by construction: a constant luma offset
     flips only comparisons that straddle a wrap). Every step is integer
     arithmetic, so an external oracle can recompute each hash from the
-    synthesis pixel formula alone. Arrow-batched mapInPandas; the grid
-    sample is two numpy take() calls; undecodable payloads are skipped,
-    never task-fatal.
+    synthesis pixel formula alone.
     """
-    gh, gw = 8, 9
+    weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    img = decode_image(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue
-                h, w, ch = img.shape
-                rows = (np.arange(gh, dtype=np.int64) * h) // gh
-                cols = (np.arange(gw, dtype=np.int64) * w) // gw
-                grid = img.take(rows, axis=0).take(cols, axis=1).astype(np.int64)
-                gray = grid[:, :, :3].sum(axis=2) // 3 if ch >= 3 else grid[:, :, 0]
-                bits = (gray[:, :-1] > gray[:, 1:]).astype(np.uint64).reshape(-1)
-                dh = int((bits * weights).sum(dtype=np.uint64).astype(np.int64))
-                recs.append((asset_id, dh))
-            yield pd.DataFrame(recs, columns=["asset_id", "dhash"])
+    def row(asset_id, raw):
+        img = decode_image(raw)
+        grid = _nn_sample(img, 8, 9).astype(np.int64)
+        gray = grid[:, :, :3].sum(axis=2) // 3 if img.shape[2] >= 3 else grid[:, :, 0]
+        bits = (gray[:, :-1] > gray[:, 1:]).astype(np.uint64).reshape(-1)
+        return [(asset_id, int((bits * weights).sum(dtype=np.uint64).astype(np.int64)))]
 
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=DHASH_SCHEMA)
+    return per_asset(assets, DHASH_SCHEMA, row)
 
 
 def dhash_pairs(
@@ -503,51 +446,31 @@ def video_metadata(assets: DataFrame) -> DataFrame:
     curation pipeline filters on (drop sub-second clips, keep avc1/av01,
     bucket by resolution) — frame PAYLOAD decode would need a video
     entropy codec (H.264/AV1) and stays behind the NotImplementedError
-    gate. Malformed containers are SKIPPED, never task-fatal.
+    gate.
 
-    Scale: one Arrow batch pass, header-only parse (struct over the
-    first few hundred bytes; the mdat payload is never touched), no
-    shuffle.
+    Scale: header-only parse (struct over the first few hundred bytes;
+    the mdat payload is never touched).
     """
-    from finetoo_sp_spark.codecs.mp4 import Mp4Error, decode_mp4
+    from finetoo_sp_spark.codecs.mp4 import decode_mp4
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    meta = decode_mp4(bytes(payload))
-                except (Mp4Error, ValueError, IndexError, EOFError):
-                    continue
-                vid = next(
-                    (t for t in meta["tracks"] if t["handler"] == "vide"), None
-                )
-                recs.append(
-                    (
-                        asset_id,
-                        meta["major_brand"],
-                        meta["timescale"],
-                        meta["duration"],
-                        meta["duration"] * 1000 // meta["timescale"],
-                        len(meta["tracks"]),
-                        vid["width"] if vid else 0,
-                        vid["height"] if vid else 0,
-                        (vid["codec"] or "") if vid else "",
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "major_brand", "timescale", "duration_ticks",
-                    "duration_ms", "n_tracks", "width", "height", "video_codec",
-                ],
+    def row(asset_id, raw):
+        meta = decode_mp4(raw)
+        vid = next((t for t in meta["tracks"] if t["handler"] == "vide"), None)
+        return [
+            (
+                asset_id,
+                meta["major_brand"],
+                meta["timescale"],
+                meta["duration"],
+                meta["duration"] * 1000 // meta["timescale"],
+                len(meta["tracks"]),
+                vid["width"] if vid else 0,
+                vid["height"] if vid else 0,
+                (vid["codec"] or "") if vid else "",
             )
+        ]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=VIDEO_META_SCHEMA
-    )
+    return per_asset(assets, VIDEO_META_SCHEMA, row)
 
 
 DIMS_SCHEMA = StructType(
@@ -563,26 +486,11 @@ DIMS_SCHEMA = StructType(
 def image_dimensions(assets: DataFrame) -> DataFrame:
     """Header-only format + dimension probe (codecs/probe.py) across
     PNG/JPEG/GIF/WebP — the pre-decode gate a crawl pipeline filters on
-    (drop trackers/icons, route formats, bucket by resolution). Covers
-    formats whose full decode is out of scope (GIF, WebP, progressive
-    JPEG) because only the header is read; unrecognized payloads are
-    SKIPPED, never task-fatal. One Arrow pass, no shuffle."""
-    from finetoo_sp_spark.codecs.probe import ProbeError, probe_image_dims
+    (drop trackers/icons, route formats, bucket by resolution). Only the
+    header is read, so it is cheap for every format."""
+    from finetoo_sp_spark.codecs.probe import probe_image_dims
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    fmt, w, h = probe_image_dims(bytes(payload))
-                except (ProbeError, ValueError, struct_error):
-                    continue
-                recs.append((asset_id, fmt, w, h))
-            yield pd.DataFrame(recs, columns=["asset_id", "format", "width", "height"])
-
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=DIMS_SCHEMA)
+    return per_asset(assets, DIMS_SCHEMA, lambda a, raw: [(a, *probe_image_dims(raw))])
 
 
 def frame_sample_times(assets: DataFrame, interval_ms: int = 500) -> DataFrame:
@@ -616,46 +524,7 @@ GIF_ANIM_SCHEMA = StructType(
     ]
 )
 
-
-def gif_animation_stats(assets: DataFrame) -> DataFrame:
-    """REAL animated-GIF decode over the binary column: per asset the
-    frame count, NETSCAPE loop count (-1 when absent, 0 = forever),
-    total declared duration in centiseconds, logical-screen geometry
-    and the exact integer gray sum (R channel) over ALL composited
-    frames — so disposal handling (leave / restore-background /
-    restore-previous), transparency compositing and local color tables
-    are pinned by an external oracle, not just frame 1. Arrow-batched
-    mapInPandas like image_stats; undecodable payloads are SKIPPED,
-    never task-fatal. Still images are 1-frame animations (loop -1).
-    """
-    from finetoo_sp_spark.codecs.gif import decode_gif_frames
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    frames, delays, loop = decode_gif_frames(bytes(payload))
-                except (ValueError, NotImplementedError, IndexError, struct_error):
-                    continue
-                sh, sw = frames[0].shape[:2]
-                total = sum(int(f[:, :, 0].sum(dtype=np.int64)) for f in frames)
-                recs.append(
-                    (asset_id, len(frames), loop, sum(delays), sw, sh, total)
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "n_frames", "loop_count", "duration_cs",
-                    "width", "height", "sum_gray",
-                ],
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=GIF_ANIM_SCHEMA)
-
-
+# WebP and APNG animation rows (duration in milliseconds)
 WEBP_ANIM_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),
@@ -669,6 +538,33 @@ WEBP_ANIM_SCHEMA = StructType(
 )
 
 
+def _anim_rows(asset_id: int, frames: list, loop: int, duration: int) -> list[tuple]:
+    """Animation row: frame count, loop, duration, canvas geometry and
+    the exact gray (R channel) sum over all composited frames."""
+    h, w = frames[0].shape[:2]
+    gray = sum(int(f[:, :, 0].sum(dtype=np.int64)) for f in frames)
+    return [(asset_id, len(frames), loop, duration, w, h, gray)]
+
+
+def gif_animation_stats(assets: DataFrame) -> DataFrame:
+    """REAL animated-GIF decode over the binary column: per asset the
+    frame count, NETSCAPE loop count (-1 when absent, 0 = forever),
+    total declared duration in centiseconds, logical-screen geometry
+    and the exact integer gray sum (R channel) over ALL composited
+    frames — so disposal handling (leave / restore-background /
+    restore-previous), transparency compositing and local color tables
+    are pinned by an external oracle, not just frame 1. Still images
+    are 1-frame animations (loop -1).
+    """
+    from finetoo_sp_spark.codecs.gif import decode_gif_frames
+
+    def row(asset_id, raw):
+        frames, delays, loop = decode_gif_frames(raw)
+        return _anim_rows(asset_id, frames, loop, sum(delays))
+
+    return per_asset(assets, GIF_ANIM_SCHEMA, row)
+
+
 def webp_animation_stats(assets: DataFrame) -> DataFrame:
     """REAL animated-WebP decode over the binary column — the VP8X/
     ANIM/ANMF twin of gif_animation_stats: per asset the frame count,
@@ -676,53 +572,14 @@ def webp_animation_stats(assets: DataFrame) -> DataFrame:
     duration in milliseconds, canvas geometry and the exact integer
     gray sum (R channel) over ALL composited frames, so sub-frame
     placement, alpha-blend vs overwrite, and dispose-to-background are
-    pinned by an external oracle. Arrow-batched mapInPandas;
-    undecodable payloads (lossy VP8, garbage) are SKIPPED, never
-    task-fatal."""
+    pinned by an external oracle. Lossy VP8 frames are skipped."""
     from finetoo_sp_spark.codecs.vp8l import decode_webp_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    frames, durs, loop = decode_webp_frames(bytes(payload))
-                except (ValueError, NotImplementedError, IndexError,
-                        struct_error):
-                    continue
-                ch, cw = frames[0].shape[:2]
-                total = sum(
-                    int(f[:, :, 0].sum(dtype=np.int64)) for f in frames
-                )
-                recs.append(
-                    (asset_id, len(frames), loop, sum(durs), cw, ch, total)
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "n_frames", "loop_count", "duration_ms",
-                    "width", "height", "sum_gray",
-                ],
-            )
+    def row(asset_id, raw):
+        frames, durs, loop = decode_webp_frames(raw)
+        return _anim_rows(asset_id, frames, loop, sum(durs))
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=WEBP_ANIM_SCHEMA
-    )
-
-
-APNG_ANIM_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("n_frames", LongType(), False),
-        StructField("loop_count", LongType(), False),
-        StructField("duration_ms", LongType(), False),
-        StructField("width", LongType(), False),
-        StructField("height", LongType(), False),
-        StructField("sum_gray", LongType(), False),
-    ]
-)
+    return per_asset(assets, WEBP_ANIM_SCHEMA, row)
 
 
 def apng_animation_stats(assets: DataFrame) -> DataFrame:
@@ -734,43 +591,15 @@ def apng_animation_stats(assets: DataFrame) -> DataFrame:
     exact integer gray sum (R channel) over ALL composited frames — so
     dispose none/background/previous, source-vs-over blending, hidden
     default images and fdAT sequence numbering are pinned by an
-    external oracle. Arrow-batched mapInPandas; undecodable payloads
-    are SKIPPED, never task-fatal."""
+    external oracle."""
     from finetoo_sp_spark.codecs.apng import decode_apng_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    frames, delays, plays = decode_apng_frames(bytes(payload))
-                except (ValueError, NotImplementedError, IndexError,
-                        struct_error, zlib_error):
-                    continue
-                ch, cw = frames[0].shape[:2]
-                dur = sum(
-                    (num * 1000) // (den if den else 100)
-                    for num, den in delays
-                )
-                total = sum(
-                    int(f[:, :, 0].sum(dtype=np.int64)) for f in frames
-                )
-                recs.append(
-                    (asset_id, len(frames), plays, dur, cw, ch, total)
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "n_frames", "loop_count", "duration_ms",
-                    "width", "height", "sum_gray",
-                ],
-            )
+    def row(asset_id, raw):
+        frames, delays, plays = decode_apng_frames(raw)
+        dur = sum((num * 1000) // (den if den else 100) for num, den in delays)
+        return _anim_rows(asset_id, frames, plays, dur)
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=APNG_ANIM_SCHEMA
-    )
+    return per_asset(assets, WEBP_ANIM_SCHEMA, row)
 
 
 SAMPLE_TABLE_SCHEMA = StructType(
@@ -792,42 +621,20 @@ def video_sample_table(assets: DataFrame) -> DataFrame:
     into the mdat payload and keyframe flag — exactly what a
     distributed frame extractor joins against byte-range reads before
     any codec work (the decode itself stays behind the documented
-    NotImplementedError gate). Arrow-batched mapInPandas; assets
-    without a resolvable sample table are SKIPPED, never task-fatal."""
-    from finetoo_sp_spark.codecs.mp4 import Mp4Error, decode_sample_table
+    NotImplementedError gate). An asset without a resolvable sample
+    table yields no rows at all."""
+    from finetoo_sp_spark.codecs.mp4 import decode_sample_table
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    rows = decode_sample_table(bytes(payload))
-                except (Mp4Error, ValueError, struct_error, IndexError):
-                    continue
-                for r in rows:
-                    recs.append(
-                        (
-                            asset_id,
-                            r["sample_idx"],
-                            r["dts_ticks"],
-                            r["size"],
-                            r["mdat_offset"],
-                            bool(r["is_sync"]),
-                        )
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "sample_idx", "dts_ticks", "n_bytes",
-                    "mdat_offset", "is_sync",
-                ],
+    def row(asset_id, raw):
+        return [
+            (
+                asset_id, r["sample_idx"], r["dts_ticks"], r["size"],
+                r["mdat_offset"], bool(r["is_sync"]),
             )
+            for r in decode_sample_table(raw)
+        ]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=SAMPLE_TABLE_SCHEMA
-    )
+    return per_asset(assets, SAMPLE_TABLE_SCHEMA, row)
 
 
 EXIF_SCHEMA = StructType(
@@ -848,40 +655,21 @@ EXIF_SCHEMA = StructType(
 def image_exif(assets: DataFrame) -> DataFrame:
     """EXIF camera/orientation/timestamp/GPS metadata per JPEG asset
     (codecs/exif.py): the curation signals real photo corpora filter
-    on, with GPS as signed integer micro-degrees. Arrow-batched
-    mapInPandas; assets without EXIF yield absent fields, corrupt APP1
-    segments are SKIPPED."""
-    from finetoo_sp_spark.codecs.exif import ExifError, parse_exif_jpeg
+    on, with GPS as signed integer micro-degrees. Assets without EXIF
+    yield absent fields; corrupt APP1 segments are skipped."""
+    from finetoo_sp_spark.codecs.exif import parse_exif_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    m = parse_exif_jpeg(bytes(payload))
-                except (ExifError, struct_error):
-                    continue
-                recs.append(
-                    (
-                        asset_id, m["orientation"], m["make"], m["model"],
-                        m["datetime"], m["datetime_original"], m["has_gps"],
-                        m["gps_lat_micro"], m["gps_lon_micro"],
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "orientation", "make", "model", "dt",
-                    "dt_original", "has_gps", "gps_lat_micro",
-                    "gps_lon_micro",
-                ],
+    def row(asset_id, raw):
+        m = parse_exif_jpeg(raw)
+        return [
+            (
+                asset_id, m["orientation"], m["make"], m["model"],
+                m["datetime"], m["datetime_original"], m["has_gps"],
+                m["gps_lat_micro"], m["gps_lon_micro"],
             )
+        ]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=EXIF_SCHEMA
-    )
+    return per_asset(assets, EXIF_SCHEMA, row)
 
 
 REDACT_SCHEMA = StructType(
@@ -901,46 +689,20 @@ def gps_redaction_report(assets: DataFrame) -> DataFrame:
     GPS existed, whether any survives the in-place scrub (must never),
     that non-GPS EXIF is intact and that the payload length is
     unchanged (the streaming-safe property). The image-side PII gate."""
-    from finetoo_sp_spark.codecs.exif import (
-        ExifError,
-        parse_exif_jpeg,
-        strip_gps_jpeg,
-    )
+    from finetoo_sp_spark.codecs.exif import parse_exif_jpeg, strip_gps_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload)
-                try:
-                    before = parse_exif_jpeg(raw)
-                    scrubbed = strip_gps_jpeg(raw)
-                    after = parse_exif_jpeg(scrubbed)
-                except (ExifError, struct_error):
-                    continue
-                recs.append(
-                    (
-                        asset_id,
-                        before["has_gps"],
-                        after["has_gps"],
-                        after["orientation"],
-                        after["make"],
-                        len(scrubbed) == len(raw),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "had_gps", "has_gps_after", "orientation",
-                    "make", "same_length",
-                ],
+    def row(asset_id, raw):
+        before = parse_exif_jpeg(raw)
+        scrubbed = strip_gps_jpeg(raw)
+        after = parse_exif_jpeg(scrubbed)
+        return [
+            (
+                asset_id, before["has_gps"], after["has_gps"],
+                after["orientation"], after["make"], len(scrubbed) == len(raw),
             )
+        ]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=REDACT_SCHEMA
-    )
+    return per_asset(assets, REDACT_SCHEMA, row)
 
 
 ORIENTED_SCHEMA = StructType(
@@ -963,47 +725,24 @@ def image_oriented_stats(assets: DataFrame) -> DataFrame:
     rotation in first. Per asset: the oriented geometry, first-row /
     first-column channel-0 sums (together they DISTINGUISH all 8
     transforms — the total sum alone is rotation-invariant) and the
-    invariant total. Assets without EXIF orient as 1. Undecodable
-    payloads are SKIPPED, never task-fatal."""
-    from finetoo_sp_spark.codecs.exif import (
-        ExifError,
-        apply_orientation,
-        parse_exif_jpeg,
-    )
+    invariant total. Assets without EXIF orient as 1."""
+    from finetoo_sp_spark.codecs.exif import apply_orientation, parse_exif_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload)
-                try:
-                    img = decode_image(raw)
-                    o = parse_exif_jpeg(raw)["orientation"] or 1
-                    out = apply_orientation(img, o)
-                except (ValueError, NotImplementedError, ExifError):
-                    continue
-                h, w = out.shape[:2]
-                recs.append(
-                    (
-                        asset_id, o, w, h,
-                        int(out[0, :, 0].sum(dtype=np.int64)),
-                        int(out[:, 0, 0].sum(dtype=np.int64)),
-                        int(out[:, :, 0].sum(dtype=np.int64)),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "orientation", "width", "height",
-                    "row0_sum", "col0_sum", "total_sum",
-                ],
+    def row(asset_id, raw):
+        img = decode_image(raw)
+        o = parse_exif_jpeg(raw)["orientation"] or 1
+        out = apply_orientation(img, o)
+        h, w = out.shape[:2]
+        return [
+            (
+                asset_id, o, w, h,
+                int(out[0, :, 0].sum(dtype=np.int64)),
+                int(out[:, 0, 0].sum(dtype=np.int64)),
+                int(out[:, :, 0].sum(dtype=np.int64)),
             )
+        ]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=ORIENTED_SCHEMA
-    )
+    return per_asset(assets, ORIENTED_SCHEMA, row)
 
 
 ID3_SCHEMA = StructType(
@@ -1020,31 +759,15 @@ ID3_SCHEMA = StructType(
 def audio_id3_meta(assets: DataFrame) -> DataFrame:
     """ID3v2 title/artist/album per audio asset (codecs/probe.py
     parse_id3v2) — the catalog metadata an audio-curation index keys
-    on. Arrow-batched mapInPandas; tagless assets report version 0 and
-    empty fields, corrupt tags are SKIPPED."""
+    on. Tagless assets report version 0 and empty fields; corrupt tags
+    are skipped."""
     from finetoo_sp_spark.codecs.probe import parse_id3v2
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    m = parse_id3v2(bytes(payload))
-                except ValueError:
-                    continue
-                recs.append(
-                    (asset_id, m["version"], m["title"], m["artist"], m["album"])
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["asset_id", "id3_version", "title", "artist", "album"],
-            )
+    def row(asset_id, raw):
+        m = parse_id3v2(raw)
+        return [(asset_id, m["version"], m["title"], m["artist"], m["album"])]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=ID3_SCHEMA
-    )
+    return per_asset(assets, ID3_SCHEMA, row)
 
 
 TAGS_SCHEMA = StructType(
@@ -1062,39 +785,19 @@ def audio_tags(assets: DataFrame) -> DataFrame:
     """Unified catalog tags across audio containers: ID3v2 for MP3
     payloads, VorbisComment for FLAC — one (title, artist, album) row
     per asset regardless of container, the shape an audio-curation
-    index actually joins on. Arrow-batched; untagged assets report
-    empty fields, corrupt tags are SKIPPED."""
+    index actually joins on. Untagged assets report empty fields;
+    corrupt tags are skipped."""
     from finetoo_sp_spark.codecs.flac import parse_flac_tags
     from finetoo_sp_spark.codecs.probe import parse_id3v2
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload)
-                try:
-                    if raw[:4] == b"fLaC":
-                        m = parse_flac_tags(raw)
-                        recs.append(
-                            (asset_id, "flac", m["title"], m["artist"], m["album"])
-                        )
-                    else:
-                        m = parse_id3v2(raw)
-                        recs.append(
-                            (asset_id, "mp3", m["title"], m["artist"], m["album"])
-                        )
-                except ValueError:
-                    continue
-            yield pd.DataFrame(
-                recs,
-                columns=["asset_id", "container", "title", "artist", "album"],
-            )
+    def row(asset_id, raw):
+        if raw[:4] == b"fLaC":
+            container, m = "flac", parse_flac_tags(raw)
+        else:
+            container, m = "mp3", parse_id3v2(raw)
+        return [(asset_id, container, m["title"], m["artist"], m["album"])]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=TAGS_SCHEMA
-    )
+    return per_asset(assets, TAGS_SCHEMA, row)
 
 
 PHOTO_SCHEMA = StructType(
@@ -1116,45 +819,20 @@ def photo_report(assets: DataFrame) -> DataFrame:
     the geometry, scrub GPS in place and verify the scrub (nothing
     survives, length unchanged). Emits the per-asset facts the curation
     policy and the per-make rollup consume; undecodable or
-    corrupt-EXIF assets are SKIPPED."""
+    corrupt-EXIF assets are skipped."""
     from finetoo_sp_spark.codecs.exif import (
-        ExifError,
         apply_orientation,
         parse_exif_jpeg,
         strip_gps_jpeg,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload)
-                try:
-                    img = decode_image(raw)
-                    meta = parse_exif_jpeg(raw)
-                    o = meta["orientation"] or 1
-                    oriented = apply_orientation(img, o)
-                    scrubbed = strip_gps_jpeg(raw)
-                    after = parse_exif_jpeg(scrubbed)
-                except (ValueError, NotImplementedError, ExifError):
-                    continue
-                h, w = oriented.shape[:2]
-                recs.append(
-                    (
-                        asset_id, meta["make"], o, w, h, meta["has_gps"],
-                        (not after["has_gps"]) and len(scrubbed) == len(raw),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "asset_id", "make", "orientation", "width", "height",
-                    "had_gps", "scrub_ok",
-                ],
-            )
+    def row(asset_id, raw):
+        img = decode_image(raw)
+        meta = parse_exif_jpeg(raw)
+        o = meta["orientation"] or 1
+        h, w = apply_orientation(img, o).shape[:2]
+        scrubbed = strip_gps_jpeg(raw)
+        scrub_ok = not parse_exif_jpeg(scrubbed)["has_gps"] and len(scrubbed) == len(raw)
+        return [(asset_id, meta["make"], o, w, h, meta["has_gps"], scrub_ok)]
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, schema=PHOTO_SCHEMA
-    )
+    return per_asset(assets, PHOTO_SCHEMA, row)

@@ -24,20 +24,19 @@ mirroring exact_dedup's min-id survivor rule. Loudness-invariance is
 the point: re-encoded/re-mastered copies keep their pitch contour.
 
 Scale shape: fingerprinting is one Arrow-batched mapInPandas over the
-binary column (no shuffle); clustering is one groupBy on the fp key
-(uniform hex keys — the same profile as sha-keyed exact dedup) plus an
+binary column (``multimodal.per_asset``, no shuffle); clustering is one
+groupBy on the fp key (uniform hex keys — the same profile as sha-keyed exact dedup) plus an
 equi-join back. No window, no driver state, no collect.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from finetoo_sp_spark.multimodal import per_asset
 
 FP_SCHEMA = StructType(
     [
@@ -58,40 +57,21 @@ def audio_fingerprint(
     are undecodable payloads — never task-fatal. Multi-channel audio
     fingerprints channel 0."""
     from finetoo_sp_spark.codecs.wav import decode_wav
-    from struct import error as struct_error
 
     need = frame_len * n_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    _, _, _, samples = decode_wav(bytes(payload))
-                except (ValueError, NotImplementedError, struct_error):
-                    continue
-                mono = samples[:, 0]  # decode_wav: (n_frames, n_channels)
-                if mono.shape[0] < need:
-                    continue
-                fr = mono[:need].astype(np.int64).reshape(n_frames, frame_len)
-                mean_abs = np.abs(fr).sum(axis=1) // frame_len
-                eq = [min(15, int(m).bit_length()) for m in mean_abs]
-                sign_flip = (fr[:, 1:] >= 0) != (fr[:, :-1] >= 0)
-                zq = np.minimum(15, sign_flip.sum(axis=1))
-                recs.append(
-                    (
-                        asset_id,
-                        "".join("%X" % v for v in eq),
-                        "".join("%X" % v for v in zq),
-                    )
-                )
-            yield pd.DataFrame(
-                recs, columns=["asset_id", "energy_fp", "zcr_fp"]
-            )
+    def row(asset_id, raw):
+        mono = decode_wav(raw)[3][:, 0]  # decode_wav: (n_frames, n_channels)
+        if mono.shape[0] < need:
+            return []
+        fr = mono[:need].astype(np.int64).reshape(n_frames, frame_len)
+        mean_abs = np.abs(fr).sum(axis=1) // frame_len
+        eq = [min(15, int(m).bit_length()) for m in mean_abs]
+        sign_flip = (fr[:, 1:] >= 0) != (fr[:, :-1] >= 0)
+        zq = np.minimum(15, sign_flip.sum(axis=1))
+        return [(asset_id, "".join("%X" % v for v in eq), "".join("%X" % v for v in zq))]
 
-    return assets.select("asset_id", "payload").mapInPandas(run, schema=FP_SCHEMA)
+    return per_asset(assets, FP_SCHEMA, row)
 
 
 def audio_dup_clusters(

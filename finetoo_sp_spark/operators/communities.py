@@ -57,27 +57,6 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    # Adapt the loop's shuffle width to the EDGE count, not the session
-    # (the connected-components move, operators/components.py:50): each
-    # round is one join + two aggregates whose per-task latency
-    # dominates at small widths; the count is free (e is checkpointed),
-    # the width is restored in the finally, and the adaptation is a
-    # no-op when the graph is big enough to need the full width.
-    spark = e.sparkSession
-    n_edges = e.count()
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    target = max(4, min(int(prev_sp), n_edges // 50_000 + 4))
-    adapted = target < int(prev_sp)
-    if adapted:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
-        return _lpa_loop(e, rounds)
-    finally:
-        if adapted:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-
-def _lpa_loop(e: DataFrame, rounds: int) -> DataFrame:
     lab = e.select(F.col("u"), F.col("u").alias("lab")).distinct()
     for _ in range(rounds):
         votes = (

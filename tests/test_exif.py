@@ -81,6 +81,36 @@ def test_corrupt_entry_table_raises_not_overreads():
         parse_exif_jpeg(bytes(j))
 
 
+def _gps_ifd(j: bytes, tiff: int) -> int:
+    """Absolute offset of the GPS IFD in a little-endian fixture."""
+    ifd0 = tiff + struct.unpack_from("<I", j, tiff + 4)[0]
+    for k in range(struct.unpack_from("<H", j, ifd0)[0]):
+        e = ifd0 + 2 + 12 * k
+        if struct.unpack_from("<H", j, e)[0] == 0x8825:
+            return tiff + struct.unpack_from("<I", j, e + 8)[0]
+    raise AssertionError("fixture has no GPS IFD")
+
+
+@pytest.mark.parametrize("corrupt", ["value_offset", "entry_count"])
+def test_scrub_rejects_gps_regions_past_segment(corrupt):
+    # a scrub that zeroed past the APP1 segment would append bytes and
+    # break the same-length invariant; a count past it used to surface
+    # as struct.error. Both must be a documented ExifError.
+    j = bytearray(_fixture("<"))
+    tiff = bytes(j).find(b"II\x2a\x00")
+    seg_len = struct.unpack_from(">H", j, tiff - 8)[0] - 8  # minus length + "Exif\0\0"
+    gps = _gps_ifd(bytes(j), tiff)
+    if corrupt == "value_offset":
+        for k in range(struct.unpack_from("<H", j, gps)[0]):
+            e = gps + 2 + 12 * k
+            if struct.unpack_from("<HH", j, e) == (2, 5):  # GPSLatitude RATIONAL[3]
+                struct.pack_into("<I", j, e + 8, seg_len + 16)
+    else:
+        struct.pack_into("<H", j, gps, 0x7FFF)
+    with pytest.raises(ExifError, match="GPS"):
+        strip_gps_jpeg(bytes(j))
+
+
 def test_zero_denominator_rejected():
     bad = ("N", (37, 0, 46, 1, 3050, 100), "E", (122, 1, 25, 1, 990, 100))
     with pytest.raises(ExifError, match="denominator"):

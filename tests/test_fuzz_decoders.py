@@ -2,8 +2,9 @@
 raise one of its DOCUMENTED exception types on arbitrary, truncated,
 or bit-flipped bytes — never segfault, hang, OOM, or leak an
 unexpected exception class. At 10^12 documents every byte pattern that
-can exist will exist; a kernel's try/except only protects against the
-exception types it lists."""
+can exist will exist. Every Spark payload kernel skips exactly the
+classes in ``multimodal.SKIP``, so each documented class must be one of
+them, and the kernels themselves must survive the same corpus."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from zlib import error as zlib_error
 import numpy as np
 import pytest
 
+from finetoo_sp_spark import multimodal as mm
 from finetoo_sp_spark.codecs.apng import decode_apng_frames, encode_apng
 from finetoo_sp_spark.codecs.bmp import decode_bmp, encode_bmp
 from finetoo_sp_spark.codecs.exif import (
@@ -22,8 +24,8 @@ from finetoo_sp_spark.codecs.exif import (
     parse_exif_jpeg,
     strip_gps_jpeg,
 )
-from finetoo_sp_spark.codecs.flac import parse_flac_tags
-from finetoo_sp_spark.codecs.gif import decode_gif_frames
+from finetoo_sp_spark.codecs.flac import encode_flac, parse_flac_tags
+from finetoo_sp_spark.codecs.gif import decode_gif_frames, encode_gif_anim
 from finetoo_sp_spark.codecs.jpeg import decode_jpeg, encode_jpeg_baseline
 from finetoo_sp_spark.codecs.mp4 import (
     Mp4Error,
@@ -34,20 +36,23 @@ from finetoo_sp_spark.codecs.mp4 import (
 from finetoo_sp_spark.codecs.png import decode_png, encode_png
 from finetoo_sp_spark.codecs.probe import (
     ProbeError,
+    make_id3v2,
+    make_mp3,
     parse_id3v2,
     probe_audio_meta,
     probe_image_dims,
 )
 from finetoo_sp_spark.codecs.tiff import TiffError, decode_tiff
-from finetoo_sp_spark.codecs.vp8l import decode_webp
-from finetoo_sp_spark.codecs.wav import WavError, decode_wav
+from finetoo_sp_spark.codecs.vp8l import decode_webp, encode_webp_anim
+from finetoo_sp_spark.codecs.wav import WavError, decode_wav, encode_wav
 from finetoo_sp_spark.extraction.pdfcrypt import decrypt_pdf
 from finetoo_sp_spark.extraction.pdfmini import parse_pdf_fragments
+from finetoo_sp_spark.operators.audiofp import audio_fingerprint
 
 # (callable, allowed exception classes). ValueError covers every codec's
 # documented *Error subclass plus magic rejection; the parsers that walk
-# untrusted offsets may also surface struct/zlib/Index errors, which the
-# Spark kernels list explicitly.
+# untrusted offsets may also surface struct/zlib/Index errors, which
+# multimodal.SKIP covers.
 _DECODERS = [
     (decode_png, (ValueError,)),
     (decode_apng_frames, (ValueError,)),
@@ -130,3 +135,88 @@ def test_pdf_fragments_never_raise_on_noise():
     # kernel, but the common paths should degrade, not throw, on noise
     for payload in _CORPUS[:7]:
         assert len(parse_pdf_fragments(payload)) == 0
+
+
+@pytest.mark.parametrize(
+    "fn,allowed", _DECODERS, ids=[f[0].__name__ for f in _DECODERS]
+)
+def test_decoder_errors_are_kernel_skips(fn, allowed):
+    for cls in allowed:
+        assert issubclass(cls, mm.SKIP), f"{fn.__name__} may raise {cls.__name__}"
+
+
+# every per_asset kernel (resize_images with an arbitrary output size)
+_KERNELS = [
+    ("image_stats", mm.image_stats),
+    ("resize_images", lambda a: mm.resize_images(a, 5, 7)),
+    ("audio_probe", mm.audio_probe),
+    ("audio_stats", mm.audio_stats),
+    ("image_dhash", mm.image_dhash),
+    ("video_metadata", mm.video_metadata),
+    ("image_dimensions", mm.image_dimensions),
+    ("gif_animation_stats", mm.gif_animation_stats),
+    ("webp_animation_stats", mm.webp_animation_stats),
+    ("apng_animation_stats", mm.apng_animation_stats),
+    ("video_sample_table", mm.video_sample_table),
+    ("image_exif", mm.image_exif),
+    ("gps_redaction_report", mm.gps_redaction_report),
+    ("image_oriented_stats", mm.image_oriented_stats),
+    ("audio_id3_meta", mm.audio_id3_meta),
+    ("audio_tags", mm.audio_tags),
+    ("photo_report", mm.photo_report),
+    ("audio_fingerprint", audio_fingerprint),
+]
+
+
+def _valid_fixtures() -> list[bytes]:
+    """At least one decodable payload for every kernel in _KERNELS."""
+    rng = np.random.default_rng(7)
+    img = rng.integers(0, 256, (12, 10, 3), dtype=np.uint8)
+    gray16 = np.full((16, 16), 130, np.uint8)
+    tone = (np.sin(np.arange(512) / 3.0) * 8000).astype(np.int16)
+    return [
+        encode_png(img),
+        encode_apng(
+            10, 12,
+            [{"rgba": np.zeros((12, 10, 4), np.uint8), "blend": 0},
+             {"rgba": np.ones((6, 5, 4), np.uint8), "blend": 1}],
+        ),
+        insert_exif(
+            encode_jpeg_baseline(gray16),
+            make_exif_app1(3, "M", "C", "", "", gps=("N", (1, 1, 2, 1, 3, 1), "E", (4, 1, 5, 1, 6, 1))),
+        ),
+        encode_bmp(img, bits=24),
+        encode_gif_anim(
+            4, 3, np.array([[0, 0, 0], [200, 100, 50]], np.uint8), 0,
+            [{"left": 0, "top": 0, "idx": np.eye(3, 4, dtype=np.int64), "delay_cs": 5,
+              "disposal": 1, "transparent": None}],
+        ),
+        encode_webp_anim(4, 2, [{"x": 0, "y": 0, "rgba": img[:2, :4], "duration_ms": 40}]),
+        encode_mp4_samples(600, [(6, 100)], [10] * 6, 4, sync_every=2),
+        encode_wav(tone, 8000),
+        encode_flac(tone[:, None].astype(np.int64), 8000),
+        make_id3v2("T", "A", "B") + make_mp3(8),
+    ]
+
+
+def _kernel_rows(spark, payloads: list[tuple[int, bytes]]) -> list[tuple]:
+    from pyspark.sql import functions as F
+
+    assets = spark.createDataFrame(payloads, "asset_id long, payload binary")
+    out = None
+    for name, kernel in _KERNELS:
+        rows = kernel(assets).select(
+            F.lit(name).alias("kernel"), "asset_id", F.to_json(F.struct("*")).alias("row")
+        )
+        out = rows if out is None else out.unionByName(rows)
+    return sorted(tuple(r) for r in out.collect())  # one job over all kernels
+
+
+def test_kernels_survive_hostile_bytes_in_spark(spark):
+    valid = [(1000 + i, v) for i, v in enumerate(_valid_fixtures())]
+    mixed = _kernel_rows(spark, list(enumerate(_CORPUS)) + valid)
+    clean = _kernel_rows(spark, valid)
+    # hostile neighbours change nothing for the valid assets ...
+    assert [r for r in mixed if r[1] >= 1000] == clean
+    # ... and every kernel really decoded something valid
+    assert {r[0] for r in clean} == {name for name, _ in _KERNELS}
