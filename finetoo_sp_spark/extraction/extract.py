@@ -15,6 +15,7 @@ Scale design (BASELINE.json north_rule, 10^12-row design point):
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from functools import lru_cache
 
 import pandas as pd
 
@@ -72,6 +73,52 @@ def url_salt(
     return F.pmod(h, F.lit(n_buckets)).cast("int")
 
 
+def _murmur3_int(k: int, seed: int = 42) -> int:
+    """Spark's ``hash()`` of an int (Murmur3_x86_32.hashInt, seed 42) —
+    the hash ``HashPartitioning`` takes ``pmod`` of to pick a partition."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl(k * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
+    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4  # input length in bytes
+    h ^= h >> 16
+    h = h * 0x85EBCA6B & m
+    h ^= h >> 13
+    h = h * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@lru_cache(maxsize=64)
+def _placement_keys(n: int) -> tuple[int, ...]:
+    """``keys[b]`` = the smallest int k with ``pmod(hash(k), n) == b``."""
+    keys: dict[int, int] = {}
+    k = 0
+    while len(keys) < n:
+        keys.setdefault(_murmur3_int(k) % n, k)
+        k += 1
+    return tuple(keys[b] for b in range(n))
+
+
+def place_buckets(df: DataFrame, n_buckets: int) -> DataFrame:
+    """``repartition(n_buckets, "bucket")`` that sends bucket ``b`` to
+    partition ``b`` exactly.
+
+    Hash-repartitioning on the bucket id itself hashes it a second time,
+    so n buckets land in n partitions like balls in bins: 32 buckets fill
+    18 of 32 partitions and 256 fill 158 of 256, leaving the rest empty
+    and some with three or four buckets. Instead the shuffle key is a
+    per-bucket literal ``k_b`` chosen on the driver so that Spark's own
+    ``pmod(murmur3(k_b), n) == b``, looked up with ``element_at`` — one
+    key per bucket, no extra job, no extra column.
+    """
+    keys = F.array(*[F.lit(k) for k in _placement_keys(n_buckets)])
+    return df.repartition(n_buckets, F.element_at(keys, F.col("bucket") + 1))
+
+
 def extract_pages(
     pages: DataFrame,
     repartition_buckets: int | None = None,
@@ -83,6 +130,7 @@ def extract_pages(
     ``keep_cols`` (e.g. warc_ts, lang) are passed through unchanged.
 
     ``repartition_buckets``: if set, hash-repartition on xxhash64(url)
+    itself (not on an n-valued salt, which would leave partitions empty)
     first — the explicit skew salt required by the north rule. Leave None
     for small/benchmark runs where input splits are already balanced.
     """
@@ -96,7 +144,7 @@ def _map_pages(
     batch: Callable[[pd.Series, pd.Series], pd.DataFrame],
     extra_fields: tuple[StructField, ...] = (),
 ) -> DataFrame:
-    """The one extraction plan: optional url-salt repartition, then one
+    """The one extraction plan: optional url-hash repartition, then one
     ``mapInPandas`` over ``select(url, html, *keep_cols)``.
 
     ``batch(urls, html)`` returns EXTRACT_SCHEMA columns followed by
@@ -106,7 +154,7 @@ def _map_pages(
     keep_cols = keep_cols or []
     src = pages.select("url", "html", *keep_cols)
     if repartition_buckets:
-        src = src.repartition(repartition_buckets, url_salt(repartition_buckets))
+        src = src.repartition(repartition_buckets, F.xxhash64("url"))
 
     out_schema = StructType(
         EXTRACT_SCHEMA.fields + list(extra_fields) + [pages.schema[c] for c in keep_cols]

@@ -109,15 +109,19 @@ def extract_pdf_batch(urls: pd.Series, payload: pd.Series) -> pd.DataFrame:
             # vendored pure-stdlib extractor (pdfmini) — same fragment
             # schema either way; malformed payloads emit empty rows,
             # never an exception (a bad payload must not kill the task)
-            try:
-                if b"/Encrypt" in raw:
-                    # RC4 standard-security docs (commonly empty user
-                    # password) decrypt in place; AES or a real password
-                    # raises and the payload is skipped like any other
-                    # unparseable document (extraction/pdfcrypt.py)
-                    from finetoo_sp_spark.extraction.pdfcrypt import decrypt_pdf
+            if b"/Encrypt" in raw:
+                # RC4 standard-security docs (commonly empty user
+                # password) decrypt in place (extraction/pdfcrypt.py); if
+                # decryption fails (AES, a real password, or "/Encrypt"
+                # bytes that were never a trailer entry) the original
+                # bytes are parsed instead
+                from finetoo_sp_spark.extraction.pdfcrypt import decrypt_pdf
 
+                try:
                     raw = decrypt_pdf(raw)
+                except Exception:
+                    pass
+            try:
                 if use_real:
                     frags = _parse_pdfminer(raw)
                 else:

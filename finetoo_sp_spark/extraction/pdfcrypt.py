@@ -40,6 +40,11 @@ _PAD = bytes(
 )
 
 _ENCRYPT_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R")
+# /Encrypt is a trailer entry: in a classic ``trailer`` dict, or in the
+# dict of a cross-reference stream (PDF 1.5+) — never in a content stream
+_TRAILER_RE = re.compile(rb"trailer\s*<<(.*?)>>\s*startxref", re.S)
+_STREAM_DICT_RE = re.compile(rb"\sobj\s*<<((?:(?!endobj).)*?)stream", re.S)
+_XREF_TYPE_RE = re.compile(rb"/Type\s*/XRef")
 _ID_RE = re.compile(rb"/ID\s*\[\s*<([0-9A-Fa-f]+)>")
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj(.*?)endobj", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n")
@@ -163,6 +168,20 @@ def _int_entry(body: bytes, name: bytes, default: int | None = None) -> int:
     return default
 
 
+def _trailer_encrypt_ref(data: bytes) -> re.Match | None:
+    """The ``/Encrypt N G R`` entry of the last trailer dictionary that
+    has one (incremental updates append trailers), or None."""
+    dicts = [(m.start(), m.group(1)) for m in _TRAILER_RE.finditer(data)] + [
+        (m.start(), m.group(1))
+        for m in _STREAM_DICT_RE.finditer(data)
+        if _XREF_TYPE_RE.search(m.group(1))
+    ]
+    ref = None
+    for _, d in sorted(dicts):
+        ref = _ENCRYPT_REF_RE.search(d) or ref
+    return ref
+
+
 def decrypt_pdf(data: bytes, password: bytes = b"") -> bytes:
     """Decrypt every stream of an RC4 standard-security PDF in place.
 
@@ -170,10 +189,8 @@ def decrypt_pdf(data: bytes, password: bytes = b"") -> bytes:
     untouched). Raises ``NotImplementedError`` for AES / crypt-filter
     documents (/V >= 4) and ``ValueError`` when the user password does
     not authenticate or required entries are missing. A document with
-    no /Encrypt reference is returned unchanged."""
-    ref = None
-    for ref in _ENCRYPT_REF_RE.finditer(data):
-        pass  # last occurrence wins (incremental updates append trailers)
+    no /Encrypt reference in a trailer dictionary is returned unchanged."""
+    ref = _trailer_encrypt_ref(data)
     if ref is None:
         return data
     enc_num, enc_gen = int(ref.group(1)), int(ref.group(2))
@@ -279,7 +296,7 @@ def encrypt_pdf(
         # classic layout: extend the trailer dict, put the encrypt
         # object before the xref section so object scans pick it up
         out[t + len(b"trailer<<") : t + len(b"trailer<<")] = trailer_add
-        x = out.rfind(b"xref\n")
+        x = out.rfind(b"\nxref\n") + 1  # not the "xref" inside "startxref"
         out[x:x] = enc_obj
         return bytes(out)
     # PDF 1.5 xref-stream layout: the trailer entries live in the XRef

@@ -15,9 +15,10 @@ through this thin seam:
   overwrite + manifest-as-commit-marker).
 
 The lineage/resume protocol is identical in both modes: bucket column,
-per-bucket manifests, anti-join resume. On Iceberg the manifest table is
-just another table in the same catalog and each bucket commit rides an
-Iceberg snapshot, so a crashed writer leaves no torn bucket at all.
+per-bucket manifests, a resume that skips committed buckets. On Iceberg
+the manifest table is just another table in the same catalog and each
+bucket commit rides an Iceberg snapshot, so a crashed writer leaves no
+torn bucket at all.
 
 When Iceberg is absent and SNAPSHOT SEMANTICS are needed (atomic
 commits, time travel, rollback, merge-on-read upserts, exactly-once

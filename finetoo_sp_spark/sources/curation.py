@@ -34,8 +34,14 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from finetoo_sp_spark.sources.lineage import MANIFEST_DIRNAME, read_manifests
+from finetoo_sp_spark.extraction.extract import place_buckets
+from finetoo_sp_spark.sources.lineage import (
+    BUCKET_FIELD,
+    committed_buckets,
+    write_manifest_files,
+)
 
 PAIRS_MARKER = "_PHASE_COMPLETE"
 
@@ -65,7 +71,7 @@ def _write_bucketed(
     out_dir: str,
     key_cols: list[str],
     n_buckets: int,
-    exclude_buckets: DataFrame | None = None,
+    exclude_buckets: list[int] | None = None,
     hash_mode: str = "xxhash64",
 ) -> None:
     """Generic bucketed write + per-bucket manifests (counts + xor-fold
@@ -76,20 +82,22 @@ def _write_bucketed(
     rows must not be appended twice."""
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    data = df.repartition(n_buckets, "bucket")
-    data.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_dir, "data")
+    data_path = os.path.join(out_dir, "data")
+    place_buckets(df, n_buckets).write.mode("overwrite").partitionBy("bucket").parquet(
+        data_path
     )
-    written = spark.read.parquet(os.path.join(out_dir, "data"))
-    if exclude_buckets is not None:
-        written = written.join(F.broadcast(exclude_buckets), "bucket", "left_anti")
+    # explicit schema: the read-back runs no schema-inference job
+    schema = StructType([df.schema[c] for c in key_cols] + [BUCKET_FIELD])
+    written = spark.read.schema(schema).parquet(data_path)
+    if exclude_buckets:
+        written = written.filter(~F.col("bucket").isin(exclude_buckets))
     manifest = written.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("output_count"),
         _checksum_of(key_cols, hash_mode).alias("content_checksum"),
-        F.lit("committed").alias("status"),
     )
-    manifest.repartition(32, "bucket").write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(out_dir, MANIFEST_DIRNAME)
+    write_manifest_files(
+        out_dir,
+        [{**r.asDict(), "status": "committed"} for r in manifest.collect()],
     )
 
 
@@ -137,9 +145,8 @@ def run_resumable_curation(
 
     # --- phase 2: survivors (per-bucket resumable, like extraction) ----
     t = time.time()
-    committed = read_manifests(spark, surv_dir)
-    done_buckets = committed.select("bucket").distinct() if committed is not None else None
-    n_done = done_buckets.count() if done_buckets is not None else 0
+    done_buckets, _ = committed_buckets(surv_dir)
+    n_done = len(done_buckets)
 
     quality = ts.quality_scores(docs, id_col, text_col).filter(F.col("keep")).select("id")
     keep = dedup_keep_list(pairs, docs.select(F.col(id_col).alias("id"))).filter(
@@ -152,8 +159,8 @@ def run_resumable_curation(
         .withColumn("bucket", _bucket_of("id", n_buckets, hash_mode))
     )
     todo = survivors
-    if done_buckets is not None:
-        todo = survivors.join(F.broadcast(done_buckets), "bucket", "left_anti")
+    if done_buckets:
+        todo = survivors.filter(~F.col("bucket").isin(done_buckets))
     # empty-todo fast path: count the manifest (tiny), not the corpus
     if n_done < n_buckets:
         _write_bucketed(
@@ -162,15 +169,12 @@ def run_resumable_curation(
         )
     phases["survivors"] = round(time.time() - t, 2)
 
-    man = read_manifests(spark, surv_dir)
-    agg = man.agg(
-        F.countDistinct("bucket").alias("b"), F.sum("output_count").alias("o")
-    ).collect()[0]
+    committed, rows_out = committed_buckets(surv_dir)
     return {
         "pairs_reused": pairs_reused,
         "buckets_total": n_buckets,
         "buckets_committed_before": n_done,
-        "buckets_processed": int(agg["b"] or 0) - n_done,
-        "rows_out": int(agg["o"] or 0),
+        "buckets_processed": len(committed) - n_done,
+        "rows_out": rows_out,
         "phases": phases,
     }

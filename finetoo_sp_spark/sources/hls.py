@@ -15,9 +15,9 @@ item_uri, bandwidth, width, height, duration_ms). ``kind`` is
 milliseconds without a float round-trip (whole and fractional digits
 handled as strings). Attribute order inside STREAM-INF is free per the
 RFC, so each attribute lifts independently. The URI is the next
-non-comment line after its tag — recovered by pairing tag lines with
-following-line positions, all JVM regexp/split work: no UDF, and the
-only wide op is nothing at all (posexplode + filters — narrow).
+non-blank, non-tag line after its tag — recovered by keeping only item
+tags and URI lines, then pairing tag lines with following-line
+positions, all JVM regexp/split work: no UDF.
 """
 
 from __future__ import annotations
@@ -32,13 +32,22 @@ def parse_hls(
     """(url, kind, pos, item_uri, bandwidth, width, height,
     duration_ms) per playlist item (module docstring). ``pos`` is the
     item's 0-based order among items of the playlist."""
-    lines = F.split(F.col(body_col), r"\r?\n")
+    # RFC 8216: an item tag applies to the next URI line — the next line
+    # that is neither blank nor a tag; other tags (#EXT-X-BYTERANGE,
+    # #EXT-X-KEY, ...) and blank lines may sit between. So keep only the
+    # item tags and URI lines, in order, before exploding: a tag's URI is
+    # then the very next kept line, at ln+1 (a tag followed by another
+    # item tag has no URI and drops out of the join below).
+    lines = F.filter(
+        F.split(F.col(body_col), r"\r?\n"),
+        lambda s: s.startswith("#EXT-X-STREAM-INF:")
+        | s.startswith("#EXTINF:")
+        | (~s.startswith("#") & (F.trim(s) != "")),
+    )
     e = df.select(
         F.col(url_col).alias("url"), F.posexplode(lines).alias("ln", "_l")
     )
-    # pair each tag line with the next line (the URI): self-join-free —
-    # lead() needs a window, so instead explode (ln, line) twice? The
-    # cheap declarative trick: a tag's URI is at ln+1; join the
+    # pair each tag line with the next kept line (the URI): join the
     # projected tag rows to the projected line rows on (url, ln+1).
     tags = e.filter(
         F.col("_l").startswith("#EXT-X-STREAM-INF:")
@@ -49,7 +58,7 @@ def parse_hls(
         (F.col("ln") + 1).alias("uri_ln"),
         F.col("_l").alias("tag"),
     )
-    uris = e.filter(~F.col("_l").startswith("#") & (F.col("_l") != "")).select(
+    uris = e.filter(~F.col("_l").startswith("#")).select(
         "url", F.col("ln").alias("uri_ln"), F.col("_l").alias("item_uri")
     )
     joined = tags.join(uris, ["url", "uri_ln"])

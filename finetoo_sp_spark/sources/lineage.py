@@ -4,17 +4,19 @@ North-rule requirement: "writes extracted rows back with per-partition
 lineage manifests and extraction-rate metrics so any failed partition range
 can be resumed from checkpoint without recompute."
 
-Design (scale-sane — no driver-side per-bucket loops):
+Design (scale-sane — no driver-side per-row loops):
 
 1. every row gets a deterministic ``bucket = pmod(xxhash64(url), B)``;
 2. output is written ``partitionBy("bucket")`` (idempotent per-bucket
    dynamic overwrite — a re-run of a bucket replaces exactly that bucket);
-3. a *manifest* table (one row per bucket: input_count, output_count,
-   content checksum, status='committed') is computed as a single
-   ``groupBy(bucket)`` aggregation over the just-written data and appended
-   atomically per bucket (one file per bucket under ``_manifests/``);
-4. resume = anti-join the full bucket domain against committed manifest
-   buckets, re-run only the missing buckets' rows.
+3. after the data commit, ONE ``groupBy(bucket)`` over the committed
+   slim columns (``row_hash``, ``text_chars``, read back with an explicit
+   schema) yields each bucket's output_count, content checksum and chars;
+   its <= B rows are collected and the driver writes one manifest file
+   per bucket (``_manifests/bucket=N/part-*.parquet``, status='committed')
+   with pyarrow, each appearing by atomic rename from a hidden temp name;
+4. resume = the manifest files on disk name the committed buckets; only
+   the other buckets' rows are re-run.
 
 The checksum is an order-independent 64-bit fold (``bit_xor`` of
 ``xxhash64(url, text)``) so it is partition-order-proof — the
@@ -31,13 +33,29 @@ manifest file exists).
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from finetoo_sp_spark.extraction.extract import extract_pages, url_salt
+from finetoo_sp_spark.extraction.extract import extract_pages, place_buckets, url_salt
 
 MANIFEST_DIRNAME = "_manifests"
+BUCKET_FIELD = StructField("bucket", IntegerType())
+# what the manifest pass reads back from the committed data: the stats
+# stamped at write time, or (verify_content) the bytes to re-hash
+_STATS_SCHEMA = StructType(
+    [BUCKET_FIELD, StructField("row_hash", LongType()), StructField("text_chars", IntegerType())]
+)
+_TEXT_SCHEMA = StructType(
+    [BUCKET_FIELD, StructField("url", StringType()), StructField("text", StringType())]
+)
 
 
 def _row_hash(hash_mode: str):
@@ -54,31 +72,46 @@ def _row_hash(hash_mode: str):
     return F.xxhash64("url", "text")
 
 
-def _manifest_frame(
-    result: DataFrame, input_counts: DataFrame, hash_mode: str = "xxhash64"
-) -> DataFrame:
-    """One row per bucket: counts + order-independent content checksum.
+def write_manifest_files(out_dir: str, rows: list[dict]) -> None:
+    """Write each row as ``out_dir/_manifests/bucket=N/part-*.parquet``.
 
-    ``result`` must already carry ``row_hash`` / ``text_chars`` columns
-    (stamped by :func:`write_with_manifests` before the write, or
-    recomputed from text by the strict verify path)."""
-    out = result.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("output_count"),
-        # XOR-fold of row hashes -> order/partition independent, no overflow
-        F.bit_xor("row_hash").alias("content_checksum"),
-        F.sum("text_chars").alias("output_chars"),
-    )
-    return (
-        input_counts.join(out, "bucket", "left")
-        .select(
-            "bucket",
-            "input_count",
-            F.coalesce("output_count", F.lit(0)).alias("output_count"),
-            F.coalesce("content_checksum", F.lit(0)).alias("content_checksum"),
-            F.coalesce("output_chars", F.lit(0)).alias("output_chars"),
-            F.lit("committed").alias("status"),
+    Called on the driver only after the data commit. Every column but
+    ``bucket`` (which lives in the directory name, as a Spark
+    ``partitionBy`` write puts it) is int64, except string ``status`` —
+    the types Spark's own manifest writes had, so old and new files read
+    back as one table. Each file is written under a ``.``-prefixed name,
+    which Spark and pyarrow skip when listing, and renamed into place:
+    a reader sees a whole manifest or none."""
+    root = os.path.join(out_dir, MANIFEST_DIRNAME)
+    for row in rows:
+        d = os.path.join(root, f"bucket={row['bucket']}")
+        os.makedirs(d, exist_ok=True)
+        table = pa.table(
+            {
+                k: pa.array([v], pa.string() if k == "status" else pa.int64())
+                for k, v in row.items()
+                if k != "bucket"
+            }
         )
-    )
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(table, os.path.join(d, "." + name))
+        os.rename(os.path.join(d, "." + name), os.path.join(d, name))
+
+
+def committed_buckets(out_dir: str) -> tuple[list[int], int]:
+    """(sorted committed bucket ids, summed output_count) of the manifest
+    files on disk — files from Spark writes and from
+    :func:`write_manifest_files` alike — read on the driver with
+    ``pyarrow.dataset``, no Spark job. ``bucket`` comes from the
+    directory names."""
+    path = os.path.join(out_dir, MANIFEST_DIRNAME)
+    if not os.path.isdir(path):
+        return [], 0
+    man = ds.dataset(path, format="parquet", partitioning="hive")
+    if not man.files:
+        return [], 0
+    t = man.to_table(columns=["bucket", "output_count"])
+    return sorted(pc.unique(t["bucket"]).to_pylist()), pc.sum(t["output_count"]).as_py() or 0
 
 
 def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -94,20 +127,24 @@ def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
 def write_with_manifests(
     result: DataFrame,
     out_dir: str,
-    input_counts: DataFrame | None = None,
+    input_counts: dict[int, int] | None = None,
     n_buckets: int | None = None,
     hash_mode: str = "xxhash64",
     verify_content: bool = False,
-) -> None:
-    """Write a bucketed result + its manifest rows.
+) -> list[dict]:
+    """Write a bucketed result + its manifest rows; return those rows.
 
-    ``result`` must carry a ``bucket`` column; ``input_counts`` is
-    (bucket, input_count) computed from the *input* side (cheap parquet
-    count — computing it from ``result`` would re-run the extraction).
+    ``result`` must carry a ``bucket`` column; ``input_counts`` maps
+    bucket -> input_count, counted from the *input* side (counting it
+    from ``result`` would re-run the extraction). Without it each
+    bucket's input_count is its output_count — extraction is
+    row-preserving, one output row per page — and every bucket found
+    under ``data`` gets a manifest; with it, exactly its buckets do.
 
     Scale discipline:
-    - ``repartition(n_buckets, bucket)`` right before the write so each
-      task emits ~one bucket -> ~n_buckets output files total, instead of
+    - ``n_buckets`` set: :func:`place_buckets` right before the write
+      sends bucket b to partition b, so each of the n write tasks emits
+      exactly one bucket's file — n files, every task busy — instead of
       tasks x buckets tiny files whose commit serializes on the driver;
       this shuffle moves *extracted* text (much smaller than raw html)
       and IS the hash(url) anti-skew salt of the north rule.
@@ -118,9 +155,11 @@ def write_with_manifests(
       Per-row lineage stats (``row_hash``, ``text_chars``) are stamped
       as output columns BEFORE the write — the Iceberg discipline:
       manifest stats are computed at commit time from the rows being
-      committed, then the manifest aggregation reads back ONLY those
-      slim columns from disk (parquet column pruning — the text bytes
-      are decompressed once, not twice). ``verify_content=True``
+      committed, then ONE aggregation reads back ONLY those slim
+      columns from disk (explicit schema: no inference job; parquet
+      column pruning: the text bytes are decompressed once, not twice)
+      and its <= n_buckets rows become the manifest files, written from
+      the driver (:func:`write_manifest_files`). ``verify_content=True``
       switches to the strict audit that re-hashes the text actually on
       disk (catches silent data-file corruption beyond parquet's own
       page checksums, at the cost of a full second text scan).
@@ -132,38 +171,40 @@ def write_with_manifests(
         "text_chars", F.length("text")
     )
     if n_buckets:
-        result = result.repartition(n_buckets, "bucket")
+        result = place_buckets(result, n_buckets)
     result.write.mode("overwrite").partitionBy("bucket").parquet(data_path)
 
     if verify_content:
         written = (
-            spark.read.parquet(data_path)
-            .drop("row_hash", "text_chars")
+            spark.read.schema(_TEXT_SCHEMA)
+            .parquet(data_path)
             .withColumn("row_hash", _row_hash(hash_mode))
             .withColumn("text_chars", F.length("text"))
         )
     else:
-        written = spark.read.parquet(data_path).select(
-            "bucket", "row_hash", "text_chars"
+        written = spark.read.schema(_STATS_SCHEMA).parquet(data_path)
+    if input_counts is not None:  # prunes the read to this run's buckets
+        written = written.filter(F.col("bucket").isin(list(input_counts)))
+    stats = {
+        r["bucket"]: r.asDict()
+        for r in written.groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("output_count"),
+            # XOR-fold of row hashes -> order/partition independent, no overflow
+            F.bit_xor("row_hash").alias("content_checksum"),
+            F.sum("text_chars").alias("output_chars"),
         )
+        .collect()
+    }
     if input_counts is None:
-        # extraction is row-preserving (one output row per page), so the
-        # written data doubles as the input-count source when the caller
-        # didn't supply an independent one (unit-test path).
-        input_counts = written.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("input_count")
-        )
-    else:
-        written = written.join(
-            F.broadcast(input_counts.select("bucket")), "bucket", "left_semi"
-        )
-    manifest = _manifest_frame(written, input_counts, hash_mode=hash_mode)
-    # without this repartition AQE coalesces the tiny manifest frame to ONE
-    # task that then creates every bucket=* directory serially (seconds of
-    # hidden serial time); 32-way spreads the filesystem work
-    manifest.repartition(32, "bucket").write.mode("append").partitionBy(
-        "bucket"
-    ).parquet(os.path.join(out_dir, MANIFEST_DIRNAME))
+        input_counts = {b: s["output_count"] for b, s in stats.items()}
+    empty = {"output_count": 0, "content_checksum": 0, "output_chars": 0}
+    rows = [
+        {"bucket": b, "input_count": n_in, **stats.get(b, empty), "status": "committed"}
+        for b, n_in in sorted(input_counts.items())
+    ]
+    write_manifest_files(out_dir, rows)
+    return rows
 
 
 def run_resumable_extraction(
@@ -186,61 +227,39 @@ def run_resumable_extraction(
     parquet metadata count (no data scan, catches dropped-partition bugs).
 
     Salting: the ``hash(url)`` bucket id is the shuffle key for the
-    pre-write ``repartition(n_buckets, bucket)`` (inside
-    write_with_manifests), so host-level skew never concentrates in an
-    output partition. ``pre_partition=True`` additionally shuffles the
-    *raw* pages onto the bucket layout before the UDF — use when the
-    input file layout itself is host-clustered (e.g. WARC files grouped
-    by crawl host) so that UDF task sizes equalize; it costs a
-    raw-byte shuffle, so leave off for byte-balanced input splits.
-    ``n_buckets`` should be >= 4x total executor cores; it is also the
-    resume granularity.
+    pre-write bucket placement (inside write_with_manifests), so
+    host-level skew never concentrates in an output partition.
+    ``pre_partition=True`` instead places the *raw* pages on the bucket
+    layout before the UDF — use when the input file layout itself is
+    host-clustered (e.g. WARC files grouped by crawl host) so that UDF
+    task sizes equalize; it costs a raw-byte shuffle, so leave off for
+    byte-balanced input splits. ``n_buckets`` should be >= 4x total
+    executor cores; it is also the resume granularity.
 
     Returns a metrics dict (extraction-rate metrics manifest): buckets
     total/committed/processed, rows in/out, phase timings.
     """
-    import time
-
-    spark = pages.sparkSession
     phases: dict[str, float] = {}
     t = time.time()
     pages_b = pages.withColumn("bucket", url_salt(n_buckets, hash_mode=hash_mode))
 
-    committed = read_manifests(spark, out_dir)
+    done, _ = committed_buckets(out_dir)
+    todo = pages_b.filter(~F.col("bucket").isin(done)) if done else pages_b  # resume
     input_counts = None
-    if committed is not None:
-        done = committed.select("bucket").distinct()
-        todo = pages_b.join(F.broadcast(done), "bucket", "left_anti")  # resume
-        n_done = done.count()
+    if done or strict_input_counts:
         # resume path is rare + partial: always count the remaining input
-        input_counts = (
-            todo.groupBy("bucket").agg(F.count(F.lit(1)).alias("input_count")).cache()
-        )
-        n_in = int(
-            (input_counts.agg(F.sum("input_count").alias("n")).collect()[0]["n"]) or 0
-        )
+        input_counts = {
+            r["bucket"]: r["n"]
+            for r in todo.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        n_in = sum(input_counts.values())
     else:
-        todo = pages_b
-        n_done = 0
-        if strict_input_counts:
-            input_counts = (
-                todo.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("input_count"))
-                .cache()
-            )
-            n_in = int(
-                (input_counts.agg(F.sum("input_count").alias("n")).collect()[0]["n"])
-                or 0
-            )
-        else:
-            n_in = pages.count()  # parquet metadata count: no data scan
+        n_in = pages.count()  # parquet metadata count: no data scan
     phases["plan_and_count"] = round(time.time() - t, 2)
     if n_in == 0:
-        if input_counts is not None:
-            input_counts.unpersist()
         return {
             "buckets_total": n_buckets,
-            "buckets_committed_before": n_done,
+            "buckets_committed_before": len(done),
             "buckets_processed": 0,
             "rows_in": 0,
             "rows_out": 0,
@@ -249,7 +268,7 @@ def run_resumable_extraction(
 
     t = time.time()
     if pre_partition:
-        todo = todo.repartition(n_buckets, "bucket")
+        todo = place_buckets(todo, n_buckets)
     # extractor is pluggable (same signature as extract_pages): pass
     # extraction.pdf.extract_pages_any for mixed HTML/PDF corpora
     extracted = (extractor or extract_pages)(
@@ -264,20 +283,15 @@ def run_resumable_extraction(
     )
     phases["extract_write_manifest"] = round(time.time() - t, 2)
 
+    # the audit re-reads what is on disk, not the rows just returned
     t = time.time()
-    man = read_manifests(spark, out_dir)
-    agg = man.agg(
-        F.countDistinct("bucket").alias("b"),
-        F.sum("output_count").alias("o"),
-    ).collect()[0]
+    committed, rows_out = committed_buckets(out_dir)
     phases["final_audit"] = round(time.time() - t, 2)
-    if input_counts is not None:
-        input_counts.unpersist()
     return {
         "buckets_total": n_buckets,
-        "buckets_committed_before": n_done,
-        "buckets_processed": int(agg["b"]) - n_done,
+        "buckets_committed_before": len(done),
+        "buckets_processed": len(committed) - len(done),
         "rows_in": n_in,
-        "rows_out": int(agg["o"]),
+        "rows_out": rows_out,
         "phases": phases,
     }

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from finetoo_sp_spark.datagen import PAGES_SCHEMA
-from finetoo_sp_spark.extraction.extract import extract_pages, url_salt
+from finetoo_sp_spark.extraction.extract import extract_pages, place_buckets, url_salt
 
 
 def stream_pages(spark: SparkSession, pages_dir: str, max_files: int = 4) -> DataFrame:
@@ -87,7 +87,7 @@ def run_stream_once(
         s = batch_df.sparkSession
         s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         bdf = batch_df.withColumn("batch_id", F.lit(batch_id))
-        bdf.repartition(n_buckets, "bucket").write.mode("overwrite").partitionBy(
+        place_buckets(bdf, n_buckets).write.mode("overwrite").partitionBy(
             "batch_id", "bucket"
         ).parquet(data_path)
         manifest = (

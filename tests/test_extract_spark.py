@@ -7,8 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from finetoo_sp_spark.datagen import gen_pages
-from finetoo_sp_spark.extraction.extract import extract_pages, url_salt
+from finetoo_sp_spark.extraction.extract import extract_pages, place_buckets, url_salt
 from finetoo_sp_spark.sources.lineage import (
+    MANIFEST_DIRNAME,
     read_manifests,
     run_resumable_extraction,
     write_with_manifests,
@@ -104,6 +105,99 @@ def test_lineage_write_and_resume(spark, pages, tmp_path):
     )
     for r in recomputed:
         assert stored[r["bucket"]] == r["c"]
+
+
+def _manifest_rows(spark, out):
+    return sorted(
+        tuple(r)
+        for r in read_manifests(spark, out)
+        .select("bucket", "input_count", "output_count", "content_checksum",
+                "output_chars", "status")
+        .collect()
+    )
+
+
+def test_fresh_commit_job_count(spark, pages, tmp_path):
+    """A fresh commit is one data write plus one manifest aggregation:
+    at most 6 Spark jobs, counted through a statusTracker job group."""
+    sc = spark.sparkContext
+    group = "fresh-commit-job-count"
+    sc.setJobGroup(group, "fresh run_resumable_extraction")
+    try:
+        m = run_resumable_extraction(pages, str(tmp_path / "out"), n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m["rows_out"] == N_PAGES and m["buckets_processed"] == 8
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
+@pytest.mark.parametrize("n", [8, 32, 256])
+def test_place_buckets_is_exact(spark, n):
+    """Bucket b lands in partition b: the placement keys agree with
+    Spark's own hash(), and spark_partition_id() confirms it."""
+    from finetoo_sp_spark.extraction.extract import _placement_keys
+
+    keys = _placement_keys(n)
+    got = spark.createDataFrame([(k,) for k in keys], "k int").select(
+        F.pmod(F.hash("k"), F.lit(n)).alias("p")
+    )
+    assert [r.p for r in got.collect()] == list(range(n))
+    df = spark.range(4 * n).select((F.col("id") % n).cast("int").alias("bucket"))
+    bad = (
+        place_buckets(df, n)
+        .filter(F.spark_partition_id() != F.col("bucket"))
+        .count()
+    )
+    assert bad == 0
+
+
+def test_resume_reads_spark_written_manifests(spark, pages, tmp_path):
+    """Manifests an older version wrote through Spark (partitionBy under
+    _manifests) still mark their buckets committed, and the audit reads
+    them together with the driver-written ones."""
+    import shutil
+
+    out = str(tmp_path / "out")
+    part = pages.withColumn("bucket", url_salt(8)).filter(F.col("bucket") < 4)
+    write_with_manifests(extract_pages(part, keep_cols=["bucket"]), out)
+    old = read_manifests(spark, out).toPandas()
+    man_dir = f"{out}/{MANIFEST_DIRNAME}"
+    shutil.rmtree(man_dir)
+    spark.createDataFrame(old).write.partitionBy("bucket").parquet(man_dir)
+
+    m = run_resumable_extraction(pages, out, n_buckets=8)
+    assert m["buckets_committed_before"] == 4
+    assert m["buckets_processed"] == 4
+    assert m["rows_out"] == N_PAGES
+    both = read_manifests(spark, out)
+    assert both.select("bucket").distinct().count() == 8
+    assert dict(both.dtypes) == {
+        "input_count": "bigint", "output_count": "bigint",
+        "content_checksum": "bigint", "output_chars": "bigint",
+        "status": "string", "bucket": "int",
+    }
+    assert run_resumable_extraction(pages, out, n_buckets=8)["rows_in"] == 0
+
+
+def test_commit_options_give_default_manifests(spark, pages, tmp_path):
+    """strict_input_counts, pre_partition and verify_content each
+    produce exactly the default run's manifest rows."""
+    base = str(tmp_path / "default")
+    run_resumable_extraction(pages, base, n_buckets=8)
+    expect = _manifest_rows(spark, base)
+    assert len(expect) == 8
+
+    for opt in ("strict_input_counts", "pre_partition"):
+        out = str(tmp_path / opt)
+        m = run_resumable_extraction(pages, out, n_buckets=8, **{opt: True})
+        assert m["rows_out"] == N_PAGES, opt
+        assert _manifest_rows(spark, out) == expect, opt
+
+    out = str(tmp_path / "verify")
+    ext = extract_pages(pages.withColumn("bucket", url_salt(8)), keep_cols=["bucket"])
+    rows = write_with_manifests(ext, out, n_buckets=8, verify_content=True)
+    assert _manifest_rows(spark, out) == expect
+    assert sorted(tuple(r.values()) for r in rows) == expect
 
 
 def test_anchor_extraction_edge_cases(spark):

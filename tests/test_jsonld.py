@@ -128,6 +128,26 @@ def test_hls_parser_shapes(spark):
     assert by[("https://h.example/p.m3u8", 1)]["duration_ms"] == 8000
 
 
+def test_hls_uri_after_byterange_and_blank_line(spark):
+    """RFC 8216: the URI is the next non-tag, non-blank line after the
+    item tag, not the line right after it."""
+    from finetoo_sp_spark.sources.hls import parse_hls
+
+    media = (
+        "#EXTM3U\n#EXT-X-TARGETDURATION:8\n"
+        "#EXTINF:6.25,\n#EXT-X-BYTERANGE:1000@0\n\nmain.ts\n"
+        "#EXTINF:4,\n\n#EXT-X-DISCONTINUITY\nnext.ts\n"
+        "#EXTINF:2,\n#EXT-X-ENDLIST\n"  # no URI: dropped
+    )
+    rows = parse_hls(
+        spark.createDataFrame([("https://h.example/b.m3u8", media)], "url string, body string")
+    ).orderBy("pos").collect()
+    assert [(r["pos"], r["item_uri"], r["duration_ms"]) for r in rows] == [
+        (0, "main.ts", 6250),
+        (1, "next.ts", 4000),
+    ]
+
+
 def test_asset_discovery_shapes(spark):
     """SVG units, srcset descriptor edge cases, CSS data:-exclusion."""
     from finetoo_sp_spark.extraction.assets import (

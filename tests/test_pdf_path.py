@@ -271,3 +271,28 @@ def test_encrypted_objstm_composes():
     assert len(parse_pdf_fragments(enc)) == 0
     frags = parse_pdf_fragments(decrypt_pdf(enc))
     assert list(frags["text"]) == ["H", "Z", "locked tail"]
+
+
+def test_encrypt_bytes_in_content_stream_are_not_encryption(spark):
+    """An unencrypted PDF whose (uncompressed) content stream holds the
+    bytes ``/Encrypt 5 0 R`` is not an encrypted document: /Encrypt
+    counts only in a trailer dictionary, so its text still comes out."""
+    import re
+    import zlib
+
+    from finetoo_sp_spark.extraction.pdf import extract_pages_any
+    from finetoo_sp_spark.extraction.pdfcrypt import decrypt_pdf
+    from finetoo_sp_spark.extraction.pdfmini import make_real_pdf
+
+    pdf = make_real_pdf([(0, 72.0, 700.0, "see /Encrypt 5 0 R here"), (0, 72.0, 600.0, "body")])
+    m = re.search(rb"<</Length \d+/Filter/FlateDecode>>stream\n(.*?)\nendstream", pdf, re.S)
+    content = zlib.decompress(m.group(1))
+    pdf = (
+        pdf[: m.start()] + b"<</Length %d>>stream\n" % len(content)
+        + content + b"\nendstream" + pdf[m.end():]
+    )
+    assert b"/Encrypt 5 0 R" in pdf
+    assert decrypt_pdf(pdf) == pdf
+    pages = spark.createDataFrame([("https://p.example/x.pdf", pdf)], "url string, html binary")
+    row = extract_pages_any(pages).first()
+    assert row["text"] == "see /Encrypt 5 0 R here\nbody"

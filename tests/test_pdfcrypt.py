@@ -75,3 +75,19 @@ def test_key_derivation_is_rev_sensitive():
     k3 = compute_key(b"", o3, -44, b"\x00" * 16, 3, 16)
     assert len(k2) == 5 and len(k3) == 16
     assert compute_u(k2, b"\x00" * 16, 2) != compute_u(k3, b"\x00" * 16, 3)
+
+
+def test_failed_decrypt_falls_back_to_original_bytes():
+    """A document whose decryption fails is parsed as stored, not
+    dropped: a trailer /Encrypt naming a missing object leaves the plain
+    streams readable."""
+    import pandas as pd
+
+    from finetoo_sp_spark.extraction.pdf import extract_pdf_batch
+
+    plain = make_real_pdf([(0, 72.0, 700.0, "kept")])
+    forged = plain.replace(b"trailer<<", b"trailer<</Encrypt 99 0 R")
+    with pytest.raises(ValueError, match="not found"):
+        decrypt_pdf(forged)
+    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([forged]))
+    assert out.iloc[0]["text"] == "kept"
