@@ -28,6 +28,7 @@ class Mp4Error(ValueError):
 
 
 _CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
+_TABLES = {b"stts", b"stsz", b"stsc", b"stco", b"co64", b"stss"}
 
 
 def _boxes(b: bytes, start: int, end: int):
@@ -180,13 +181,14 @@ def decode_sample_table(b: bytes) -> list[dict]:
     stco/co64 (chunk offsets) and stss (sync table; absent = every
     sample is sync, per ISO 14496-12 §8.6.2).
 
-    Returns one dict per sample of the FIRST track carrying a full
-    sample table: {sample_idx (0-based), dts_ticks, size, offset
-    (absolute file offset), mdat_offset (relative to the mdat payload
-    start), is_sync}. Raises :class:`Mp4Error` on inconsistent tables
+    Tables are collected per ``trak``, never mixed across tracks. Returns
+    one dict per sample of the first track whose stbl has the full
+    stts/stsz/stsc/stco set, preferring a ``vide`` handler track:
+    {sample_idx (0-based), dts_ticks, size, offset (absolute file
+    offset), mdat_offset (relative to the mdat payload start),
+    is_sync}. Raises :class:`Mp4Error` on inconsistent tables
     (sizes/chunks/offsets disagreeing) so kernels skip, never die."""
-    stts = stsz = stsc = stco = stss = None
-    uniform_size = 0
+    traks: list[dict] = []
     mdat_start = None
 
     def entries(p0: int, p1: int, hdr: int, width: int, btype: bytes) -> int:
@@ -198,39 +200,54 @@ def decode_sample_table(b: bytes) -> list[dict]:
             raise Mp4Error(f"{btype.decode('latin-1')} count {n} overruns box")
         return n
 
+    def table(btype: bytes, p0: int, p1: int):
+        if btype == b"stts":
+            n = entries(p0, p1, 8, 8, btype)
+            return [struct.unpack_from(">II", b, p0 + 8 + 8 * k) for k in range(n)]
+        if btype == b"stsz":
+            uniform_size, n = struct.unpack_from(">II", b, p0 + 4)
+            if uniform_size:
+                return [uniform_size] * n
+            if p0 + 12 + 4 * n > p1:
+                raise Mp4Error(f"stsz count {n} overruns box")
+            return [struct.unpack_from(">I", b, p0 + 12 + 4 * k)[0] for k in range(n)]
+        if btype == b"stsc":
+            n = entries(p0, p1, 8, 12, btype)
+            return [struct.unpack_from(">III", b, p0 + 8 + 12 * k) for k in range(n)]
+        if btype == b"stss":
+            n = entries(p0, p1, 8, 4, btype)
+            return {struct.unpack_from(">I", b, p0 + 8 + 4 * k)[0] for k in range(n)}
+        fmt, w = (">Q", 8) if btype == b"co64" else (">I", 4)
+        n = entries(p0, p1, 8, w, btype)
+        return [struct.unpack_from(fmt, b, p0 + 8 + w * k)[0] for k in range(n)]
+
     def walk(start: int, end: int, path: tuple[bytes, ...]) -> None:
-        nonlocal stts, stsz, stsc, stco, stss, uniform_size, mdat_start
+        nonlocal mdat_start
         for btype, p0, p1 in _boxes(b, start, end):
             if btype == b"mdat" and mdat_start is None:
                 mdat_start = p0
-            elif btype == b"stts" and stts is None and path[-1:] == (b"stbl",):
-                n = entries(p0, p1, 8, 8, btype)
-                stts = [struct.unpack_from(">II", b, p0 + 8 + 8 * k) for k in range(n)]
-            elif btype == b"stsz" and stsz is None and path[-1:] == (b"stbl",):
-                uniform_size, n = struct.unpack_from(">II", b, p0 + 4)
-                if not uniform_size and p0 + 12 + 4 * n > p1:
-                    raise Mp4Error(f"stsz count {n} overruns box")
-                stsz = (
-                    [uniform_size] * n
-                    if uniform_size
-                    else [struct.unpack_from(">I", b, p0 + 12 + 4 * k)[0] for k in range(n)]
-                )
-            elif btype == b"stsc" and stsc is None and path[-1:] == (b"stbl",):
-                n = entries(p0, p1, 8, 12, btype)
-                stsc = [struct.unpack_from(">III", b, p0 + 8 + 12 * k) for k in range(n)]
-            elif btype in (b"stco", b"co64") and stco is None and path[-1:] == (b"stbl",):
-                fmt, w = (">Q", 8) if btype == b"co64" else (">I", 4)
-                n = entries(p0, p1, 8, w, btype)
-                stco = [struct.unpack_from(fmt, b, p0 + 8 + w * k)[0] for k in range(n)]
-            elif btype == b"stss" and stss is None and path[-1:] == (b"stbl",):
-                n = entries(p0, p1, 8, 4, btype)
-                stss = {struct.unpack_from(">I", b, p0 + 8 + 4 * k)[0] for k in range(n)}
+            elif btype == b"hdlr" and path[-2:] == (b"trak", b"mdia"):
+                traks[-1].setdefault(b"hdlr", b[p0 + 8 : p0 + 12])
+            elif btype in _TABLES and path[-1:] == (b"stbl",) and b"trak" in path:
+                key = b"stco" if btype == b"co64" else btype
+                if key not in traks[-1]:
+                    traks[-1][key] = table(btype, p0, p1)
             elif btype in _CONTAINERS:
+                if btype == b"trak":
+                    traks.append({})
                 walk(p0, p1, path + (btype,))
 
     walk(0, len(b), ())
-    if not stsz or not stts or not stsc or stco is None:
+    full = [
+        t
+        for t in traks
+        if t.get(b"stts") and t.get(b"stsz") and t.get(b"stsc") and b"stco" in t
+    ]
+    if not full:
         raise Mp4Error("missing sample tables (stts/stsz/stsc/stco)")
+    track = next((t for t in full if t.get(b"hdlr") == b"vide"), full[0])
+    stts, stsz, stsc = track[b"stts"], track[b"stsz"], track[b"stsc"]
+    stco, stss = track[b"stco"], track.get(b"stss")
     n_samples = len(stsz)
     # validate BEFORE expanding: a corrupt run count must not allocate
     total = sum(count for count, _ in stts)

@@ -1,7 +1,7 @@
 """Driver contract: queries() / oracle_sql() / entry over the parquet
-test tables — the façade is unchanged from the round-3 monolith; the
-158 query definitions now live in per-family q_*.py modules and the
-shared infra (table loader, schema, registry, oracle helpers) in
+test tables. The 269 query definitions live in per-family q_*.py
+modules, each with its DuckDB oracle inline in its ``@_q(...)``; the
+shared infra (table loader, schema, registry, oracle helpers) lives in
 _core.py. Import order of the family modules fixes registry order.
 """
 
@@ -11,72 +11,11 @@ from finetoo_sp_spark.contract._core import (
     Callable,
     DataFrame,
     SparkSession,
-    F,
-    documents_to_pages,
-    extract_pages,
-    dd,
-    sim,
-    ts,
-    ev,
-    PropertyGraphFrames,
-    op_aggregate,
-    op_compare,
-    op_filter,
-    op_group_by,
-    op_join,
-    op_match,
-    op_project,
-    op_traverse,
-    PropertyMeta,
-    Schema,
-    T,
-    tpch_schema,
-    tpch_graph,
-    _CUSTOMER_COLS,
-    _ORDERS_COLS,
-    _WORDS_SQL,
-    _STOP_ALL,
-    _docpages_expected_sql,
     _REGISTRY,
-    _q,
-    _EXTRACT_ORACLE,
-    _extracted_blocks_named,
-    _shingle_ctes,
-    _jaccard_sql,
-    _JACCARD_ORACLE,
-    _H60,
-    _minhash_oracle,
-    _simhash_oracle,
-    _INCR_CORPUS_SQL,
-    _TEMPLATE_CORPUS_SQL,
-    _template_heavy_corpus,
-    _COSINE_SQL,
-    _BUCKET_SQL,
-    _STOP_LIST_SQL,
-    _LANG_COUNTS_SQL,
-    _SLICE_BUCKET_SQL,
-    _multiprobe_oracle,
-    _recall_curve_oracle,
-    _REP_WORDS_SQL,
-    _ngram_cte,
-    _BENCH_WORDS_SQL,
-    _assets,
-    _u32_le_sql,
-    _FEATURES_U32_SQL,
-    _SANITIZE_SQL,
-    _tmp_out,
-    _blocks_cte,
-    _snapshot_b,
-    _CURATION_MAX_DF,
-    _CURATION_JACCARD,
-    _pagerank_oracle,
-    _SHA60_ID,
-    _KMEANS_CTE,
-    _curation_v2_oracle,
-    _BM25_TERMS,
-    _BM25_TERMS_SQL,
 )
 
+# Re-exported for tests, which import these from the package.
+from finetoo_sp_spark.contract._core import _template_heavy_corpus, tpch_graph  # noqa: F401
 from finetoo_sp_spark.contract.q_extraction import *  # noqa: F401,F403
 from finetoo_sp_spark.contract.q_tpch import *  # noqa: F401,F403
 from finetoo_sp_spark.contract.q_divergence import *  # noqa: F401,F403
@@ -91,89 +30,6 @@ from finetoo_sp_spark.contract.q_webgraph import *  # noqa: F401,F403
 from finetoo_sp_spark.contract.q_multimodal import *  # noqa: F401,F403
 from finetoo_sp_spark.contract.q_sketch import *  # noqa: F401,F403
 from finetoo_sp_spark.contract.q_cdx import *  # noqa: F401,F403
-
-
-
-
-# --- late-bound oracles (need _blocks_cte, defined above) -----------------
-
-_PLACEHOLDER_ORACLES = {
-    "__BLOCK_DIVERGENCE_ORACLE__": f"""
-WITH {_blocks_cte()}
-SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
-  count(DISTINCT url) AS n_docs,
-  count(DISTINCT sha256(btext)) AS n_versions,
-  count(DISTINCT sha256(btext)) > 1 AS is_divergent
-FROM blocks GROUP BY 1""",
-    "__DIVERGENCE_TOTALS_ORACLE__": f"""
-WITH {_blocks_cte()},
-r AS (
-  SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
-    count(DISTINCT btext) AS v
-  FROM blocks GROUP BY 1
-)
-SELECT count(*) AS total_names,
-  CAST(sum(CASE WHEN v > 1 THEN 1 ELSE 0 END) AS BIGINT) AS divergent,
-  CAST(sum(CASE WHEN v <= 1 THEN 1 ELSE 0 END) AS BIGINT) AS consistent
-FROM r""",
-    "__SHARED_BLOCKS_ORACLE__": f"""
-WITH {_blocks_cte()}
-SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
-  count(DISTINCT url) AS n_docs
-FROM blocks GROUP BY 1 HAVING count(DISTINCT url) >= 2""",
-    "__BLOCK_COMPARISON_ORACLE__": f"""
-WITH {_blocks_cte("doc_id < 20 OR (doc_id BETWEEN 250 AND 269)")},
-a AS (
-  SELECT doc_id AS pair_id, tag || '#' || CAST(block_id AS VARCHAR) AS name, btext
-  FROM blocks WHERE doc_id < 20
-), b AS (
-  SELECT doc_id - 250 AS pair_id, tag || '#' || CAST(block_id AS VARCHAR) AS name, btext
-  FROM blocks WHERE doc_id >= 250
-)
-SELECT pair_id, name,
-  TRUE AS in_a, TRUE AS in_b,
-  (a.btext = b.btext) AS is_equal,
-  CAST(length(b.btext) - length(a.btext) AS BIGINT) AS chars_delta,
-  CAST(len(regexp_split_to_array(b.btext, ' ')) - len(regexp_split_to_array(a.btext, ' ')) AS BIGINT) AS words_delta
-FROM a JOIN b USING (pair_id, name)""",
-    "__BLOCK_CANONICAL_ORACLE__": f"""
-WITH {_blocks_cte()},
-v AS (
-  SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
-    sha256(btext) AS canonical_hash,
-    count(*) AS n_docs_version, min(url) AS example_doc
-  FROM blocks GROUP BY 1, 2
-), r AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY name ORDER BY n_docs_version DESC, canonical_hash) AS rk
-  FROM v
-)
-SELECT name, canonical_hash, n_docs_version, example_doc FROM r WHERE rk = 1""",
-    "__BOM_TEXT_ORACLE__": """
-WITH l AS (
-  SELECT CAST(floor(doc_id / 2) AS BIGINT) AS t FROM documents
-  UNION ALL SELECT CAST(floor(doc_id / 3) AS BIGINT) FROM documents
-), bom AS (
-  SELECT 'https://src' || CAST(t % 20 AS VARCHAR) || '.example.com/doc/' || CAST(t AS VARCHAR) AS part,
-    count(*) AS quantity
-  FROM l GROUP BY t
-)
-SELECT CAST(0 AS BIGINT) AS line_no, rpad('PART', 40, ' ') || lpad('QTY', 8, ' ') AS line
-UNION ALL
-SELECT CAST(1 AS BIGINT), repeat('-', 48)
-UNION ALL
-SELECT CAST(row_number() OVER (ORDER BY quantity DESC, part) + 1 AS BIGINT),
-  rpad(part, 40, ' ') || lpad(CAST(quantity AS VARCHAR), 8, ' ')
-FROM bom""",
-}
-
-_REGISTRY[:] = [
-    (n, f, _PLACEHOLDER_ORACLES.get(s, s) if s is not None else None)
-    for (n, f, s) in _REGISTRY
-]
-
-
-# ---------------------------------------------------------------- exports
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

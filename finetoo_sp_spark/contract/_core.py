@@ -466,8 +466,9 @@ _BENCH_WORDS_SQL = _WORDS_SQL.replace("lower(text)", "lower(substr(text, 1, 200)
 
 def _assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic binary 'assets' derived from documents: payload =
-    utf-8 bytes, modality assigned round-robin — the plumbing is real,
-    the codec is the stub (multimodal.py)."""
+    utf-8 bytes of the text, modality assigned round-robin. Only the
+    metadata query (multimodal.asset_metadata) reads them; no codec
+    decodes these payloads."""
     return T(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("asset_id"),
         F.element_at(
@@ -476,21 +477,6 @@ def _assets(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("modality"),
         F.encode("text", "UTF-8").alias("payload"),
     )
-
-
-def _u32_le_sql(h_expr: str, p: int) -> str:
-    """DuckDB expr: little-endian uint32 at byte offset p of hex digest."""
-    return " + ".join(
-        f"CAST('0x' || substr({h_expr}, {2 * (p + k) + 1}, 2) AS BIGINT) * {256 ** k}"
-        for k in range(4)
-    )
-
-
-# fake_features (multimodal.py): digest repeated to dim*4 bytes -> 16
-# LE-uint32s, so feature i reads digest byte offset 4*(i % 8).
-_FEATURES_U32_SQL = " || ',' || ".join(
-    f"CAST(({_u32_le_sql('h', 4 * (i % 8))}) AS VARCHAR)" for i in range(16)
-)
 
 
 # --- sinks / lineage / PDF / reference-parity operators -------------------

@@ -7,76 +7,16 @@ every query keeps its original name, Spark plan, and DuckDB twin.
 from __future__ import annotations
 
 from finetoo_sp_spark.contract._core import (
-    Callable,
     DataFrame,
     SparkSession,
     F,
     documents_to_pages,
-    extract_pages,
     dd,
-    sim,
-    ts,
-    ev,
-    PropertyGraphFrames,
-    op_aggregate,
-    op_compare,
-    op_filter,
-    op_group_by,
-    op_join,
-    op_match,
-    op_project,
-    op_traverse,
-    PropertyMeta,
-    Schema,
     T,
-    tpch_schema,
-    tpch_graph,
-    _CUSTOMER_COLS,
-    _ORDERS_COLS,
-    _WORDS_SQL,
-    _STOP_ALL,
-    _docpages_expected_sql,
-    _REGISTRY,
     _q,
-    _EXTRACT_ORACLE,
     _extracted_blocks_named,
-    _shingle_ctes,
-    _jaccard_sql,
-    _JACCARD_ORACLE,
-    _H60,
-    _minhash_oracle,
-    _simhash_oracle,
-    _INCR_CORPUS_SQL,
-    _TEMPLATE_CORPUS_SQL,
-    _template_heavy_corpus,
-    _COSINE_SQL,
-    _BUCKET_SQL,
-    _STOP_LIST_SQL,
-    _LANG_COUNTS_SQL,
-    _SLICE_BUCKET_SQL,
-    _multiprobe_oracle,
-    _recall_curve_oracle,
-    _REP_WORDS_SQL,
-    _ngram_cte,
-    _BENCH_WORDS_SQL,
-    _assets,
-    _u32_le_sql,
-    _FEATURES_U32_SQL,
-    _SANITIZE_SQL,
-    _tmp_out,
     _blocks_cte,
-    _snapshot_b,
-    _CURATION_MAX_DF,
-    _CURATION_JACCARD,
-    _pagerank_oracle,
-    _SHA60_ID,
-    _KMEANS_CTE,
-    _curation_v2_oracle,
-    _BM25_TERMS,
-    _BM25_TERMS_SQL,
 )
-
-
 
 
 @_q(
@@ -101,8 +41,17 @@ def q_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # full oracle (was rows-only in round 1): the template's 10-block
-# decomposition is recomputed in SQL by _blocks_cte, defined below.
-@_q("block_divergence", "__BLOCK_DIVERGENCE_ORACLE__")
+# decomposition is recomputed in SQL by _blocks_cte.
+@_q(
+    "block_divergence",
+    f"""
+WITH {_blocks_cte()}
+SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
+  count(DISTINCT url) AS n_docs,
+  count(DISTINCT sha256(btext)) AS n_versions,
+  count(DISTINCT sha256(btext)) > 1 AS is_divergent
+FROM blocks GROUP BY 1""",
+)
 def q_block_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8 divergence report over real extracted DOM blocks: per (tag,
     block position), distinct content hashes across pages (reference:
@@ -113,7 +62,20 @@ def q_block_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return divergence_report(blocks, "name", "url", "content_hash").drop("versions")
 
 
-@_q("divergence_totals", "__DIVERGENCE_TOTALS_ORACLE__")
+@_q(
+    "divergence_totals",
+    f"""
+WITH {_blocks_cte()},
+r AS (
+  SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
+    count(DISTINCT btext) AS v
+  FROM blocks GROUP BY 1
+)
+SELECT count(*) AS total_names,
+  CAST(sum(CASE WHEN v > 1 THEN 1 ELSE 0 END) AS BIGINT) AS divergent,
+  CAST(sum(CASE WHEN v <= 1 THEN 1 ELSE 0 END) AS BIGINT) AS consistent
+FROM r""",
+)
 def q_divergence_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8 totals row (reference: proto/graph.proto:199-206): consistent vs
     divergent block-name counts over the extracted block frames."""
@@ -124,7 +86,14 @@ def q_divergence_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return divergence_totals(rep)
 
 
-@_q("shared_block_names", "__SHARED_BLOCKS_ORACLE__")
+@_q(
+    "shared_block_names",
+    f"""
+WITH {_blocks_cte()}
+SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
+  count(DISTINCT url) AS n_docs
+FROM blocks GROUP BY 1 HAVING count(DISTINCT url) >= 2""",
+)
 def q_shared_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E7 shared blocks / n-way intersect (reference:
     block_analyzer.cc:45-52): block names present in >= 2 documents."""
@@ -134,7 +103,24 @@ def q_shared_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_names(blocks, "name", "url", min_docs=2)
 
 
-@_q("block_comparison", "__BLOCK_COMPARISON_ORACLE__")
+@_q(
+    "block_comparison",
+    f"""
+WITH {_blocks_cte("doc_id < 20 OR (doc_id BETWEEN 250 AND 269)")},
+a AS (
+  SELECT doc_id AS pair_id, tag || '#' || CAST(block_id AS VARCHAR) AS name, btext
+  FROM blocks WHERE doc_id < 20
+), b AS (
+  SELECT doc_id - 250 AS pair_id, tag || '#' || CAST(block_id AS VARCHAR) AS name, btext
+  FROM blocks WHERE doc_id >= 250
+)
+SELECT pair_id, name,
+  TRUE AS in_a, TRUE AS in_b,
+  (a.btext = b.btext) AS is_equal,
+  CAST(length(b.btext) - length(a.btext) AS BIGINT) AS chars_delta,
+  CAST(len(regexp_split_to_array(b.btext, ' ')) - len(regexp_split_to_array(a.btext, ' ')) AS BIGINT) AS words_delta
+FROM a JOIN b USING (pair_id, name)""",
+)
 def q_block_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BlockComparison diff records (reference: proto/graph.proto:305-383
     — per pair of drawings, per block: presence, value equality, count
@@ -155,7 +141,22 @@ def q_block_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     return block_comparison(ba, bb, on=["pair_id", "name"])
 
 
-@_q("block_canonical", "__BLOCK_CANONICAL_ORACLE__")
+@_q(
+    "block_canonical",
+    f"""
+WITH {_blocks_cte()},
+v AS (
+  SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
+    sha256(btext) AS canonical_hash,
+    count(*) AS n_docs_version, min(url) AS example_doc
+  FROM blocks GROUP BY 1, 2
+), r AS (
+  SELECT *, row_number() OVER (
+    PARTITION BY name ORDER BY n_docs_version DESC, canonical_hash) AS rk
+  FROM v
+)
+SELECT name, canonical_hash, n_docs_version, example_doc FROM r WHERE rk = 1""",
+)
 def q_block_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-version choice per block name (reference:
     BlockComparison's user canonical choice, proto/graph.proto:305-383 —
@@ -167,7 +168,25 @@ def q_block_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canonical_choice(blocks, "name", "url", "content_hash")
 
 
-@_q("bom_text_render", "__BOM_TEXT_ORACLE__")
+@_q(
+    "bom_text_render",
+    """
+WITH l AS (
+  SELECT CAST(floor(doc_id / 2) AS BIGINT) AS t FROM documents
+  UNION ALL SELECT CAST(floor(doc_id / 3) AS BIGINT) FROM documents
+), bom AS (
+  SELECT 'https://src' || CAST(t % 20 AS VARCHAR) || '.example.com/doc/' || CAST(t AS VARCHAR) AS part,
+    count(*) AS quantity
+  FROM l GROUP BY t
+)
+SELECT CAST(0 AS BIGINT) AS line_no, rpad('PART', 40, ' ') || lpad('QTY', 8, ' ') AS line
+UNION ALL
+SELECT CAST(1 AS BIGINT), repeat('-', 48)
+UNION ALL
+SELECT CAST(row_number() OVER (ORDER BY quantity DESC, part) + 1 AS BIGINT),
+  rpad(part, 40, ' ') || lpad(CAST(quantity AS VARCHAR), 8, ' ')
+FROM bom""",
+)
 def q_bom_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FormatBOM fixed-width text rendering (reference:
     query_service.cc:181-206): header + separator + rpad(part)/lpad(qty)

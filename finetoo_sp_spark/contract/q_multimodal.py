@@ -7,76 +7,12 @@ every query keeps its original name, Spark plan, and DuckDB twin.
 from __future__ import annotations
 
 from finetoo_sp_spark.contract._core import (
-    Callable,
     DataFrame,
     SparkSession,
     F,
-    documents_to_pages,
-    extract_pages,
-    dd,
-    sim,
-    ts,
-    ev,
-    PropertyGraphFrames,
-    op_aggregate,
-    op_compare,
-    op_filter,
-    op_group_by,
-    op_join,
-    op_match,
-    op_project,
-    op_traverse,
-    PropertyMeta,
-    Schema,
-    T,
-    tpch_schema,
-    tpch_graph,
-    _CUSTOMER_COLS,
-    _ORDERS_COLS,
-    _WORDS_SQL,
-    _STOP_ALL,
-    _docpages_expected_sql,
-    _REGISTRY,
     _q,
-    _EXTRACT_ORACLE,
-    _extracted_blocks_named,
-    _shingle_ctes,
-    _jaccard_sql,
-    _JACCARD_ORACLE,
-    _H60,
-    _minhash_oracle,
-    _simhash_oracle,
-    _INCR_CORPUS_SQL,
-    _TEMPLATE_CORPUS_SQL,
-    _template_heavy_corpus,
-    _COSINE_SQL,
-    _BUCKET_SQL,
-    _STOP_LIST_SQL,
-    _LANG_COUNTS_SQL,
-    _SLICE_BUCKET_SQL,
-    _multiprobe_oracle,
-    _recall_curve_oracle,
-    _REP_WORDS_SQL,
-    _ngram_cte,
-    _BENCH_WORDS_SQL,
     _assets,
-    _u32_le_sql,
-    _FEATURES_U32_SQL,
-    _SANITIZE_SQL,
-    _tmp_out,
-    _blocks_cte,
-    _snapshot_b,
-    _CURATION_MAX_DF,
-    _CURATION_JACCARD,
-    _pagerank_oracle,
-    _SHA60_ID,
-    _KMEANS_CTE,
-    _curation_v2_oracle,
-    _BM25_TERMS,
-    _BM25_TERMS_SQL,
 )
-
-
 
 
 @_q(
@@ -92,40 +28,6 @@ def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.multimodal import asset_metadata
 
     return asset_metadata(_assets(spark, sf_dir))
-
-
-@_q(
-    "multimodal_features",
-    f"""
-WITH m AS (
-  SELECT doc_id AS asset_id,
-    CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
-    CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-    sha256(text) AS h
-  FROM documents
-)
-SELECT asset_id, modality, n_bytes, h AS payload_sha,
-  {_FEATURES_U32_SQL} AS features_u32
-FROM m""",
-)
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched pseudo-feature extraction with a full value oracle:
-    the fake-decode features are dyadic rationals u32/2^32, so projecting
-    round(x * 2^32) at the query boundary is EXACT — the DuckDB twin
-    recomputes the same uint32s from the sha256 hex digest."""
-    from finetoo_sp_spark.multimodal import extract_features
-
-    feat = extract_features(_assets(spark, sf_dir))
-    return feat.select(
-        "asset_id",
-        "modality",
-        "n_bytes",
-        "payload_sha",
-        F.concat_ws(
-            ",",
-            F.transform("features", lambda x: F.round(x * F.lit(4294967296.0)).cast("long")),
-        ).alias("features_u32"),
-    )
 
 
 @_q(
@@ -149,10 +51,10 @@ def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin recomputes the per-channel pixel SUMS from the pixel
     formula alone — it never sees a PNG, so agreement proves zlib
     inflate + de-filtering + geometry are all byte-correct."""
-    from finetoo_sp_spark.datagen import gen_image_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_image_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_image_assets(spark, 64))
+    return image_stats(gen_assets(spark, gen_image_pandas, 64))
 
 
 @_q(
@@ -175,10 +77,10 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     dst_dim; the DuckDB twin recomputes the resized per-channel sums
     from the pixel formula and the same floor rule — it never sees a
     PNG, so agreement proves decode AND the resize geometry."""
-    from finetoo_sp_spark.datagen import gen_image_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_image_pandas
     from finetoo_sp_spark.multimodal import resize_images
 
-    return resize_images(gen_image_assets(spark, 64), out_h=8, out_w=12)
+    return resize_images(gen_assets(spark, gen_image_pandas, 64), out_h=8, out_w=12)
 
 
 @_q(
@@ -197,7 +99,7 @@ GROUP BY i""",
 )
 def q_image_stats_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-JPEG decode under a per-pixel-exact oracle:
-    synthetic block-flat grayscale JPEGs (datagen.gen_jpeg_assets —
+    synthetic block-flat grayscale JPEGs (datagen.gen_jpeg_pandas —
     flat 8x8 blocks make the DCT path provably lossless under the
     standard quant tables) are Huffman-decoded, dequantized and
     IDCT'd by the pure-stdlib codec inside the Arrow kernel; the
@@ -205,10 +107,10 @@ def q_image_stats_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula alone — it never sees a JPEG, so agreement proves marker
     parsing, entropy decode, differential DC, dequant and IDCT are
     all pixel-correct."""
-    from finetoo_sp_spark.datagen import gen_jpeg_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_jpeg_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_jpeg_assets(spark, 48))
+    return image_stats(gen_assets(spark, gen_jpeg_pandas, 48))
 
 
 @_q(
@@ -235,10 +137,10 @@ def q_image_stats_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFram
     bits — must reconstruct every pixel bit-exactly for the sums to
     match the formula. Closes VERDICT r04 gap #1 (progressive files
     previously skipped all pixel-level ops)."""
-    from finetoo_sp_spark.datagen import gen_jpeg_progressive_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_jpeg_progressive_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_jpeg_progressive_assets(spark, 48))
+    return image_stats(gen_assets(spark, gen_jpeg_progressive_pandas, 48))
 
 
 @_q(
@@ -264,10 +166,10 @@ def q_image_stats_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reproduce the formula pixels exactly for the sums to match.
     Closes VERDICT r04 gap #2 (WebP was dimensions-probe only).
     channels = 3: the grayscale source encodes as opaque RGB."""
-    from finetoo_sp_spark.datagen import gen_webp_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_webp_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_webp_assets(spark, 48))
+    return image_stats(gen_assets(spark, gen_webp_pandas, 48))
 
 
 @_q(
@@ -290,10 +192,10 @@ def q_image_stats_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     JPEG/WebP queries — GIF is palette-lossless, so any decode slip in
     the LZW dictionary, width growth, or interlace reorder breaks the
     sums."""
-    from finetoo_sp_spark.datagen import gen_gif_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_gif_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_gif_assets(spark, 48))
+    return image_stats(gen_assets(spark, gen_gif_pandas, 48))
 
 
 @_q(
@@ -320,10 +222,10 @@ def q_image_stats_bmp_ico(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing breaks exactly its sixth of the rows. Favicons are
     fetched for nearly every crawled host, so this is the highest-
     frequency image container a web curation pipeline touches."""
-    from finetoo_sp_spark.datagen import gen_bmp_ico_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_bmp_ico_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_bmp_ico_assets(spark, 48))
+    return image_stats(gen_assets(spark, gen_bmp_ico_pandas, 48))
 
 
 @_q(
@@ -349,10 +251,10 @@ def q_image_stats_bmp_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
     mask extraction/rescale, or sub-byte row padding breaks exactly
     its quarter of the rows. RLE BMPs are the dominant form of legacy
     clip-art/scanned-diagram assets in old web corpora."""
-    from finetoo_sp_spark.datagen import gen_bmp_rle_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_bmp_rle_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_bmp_rle_assets(spark, 48))
+    return image_stats(gen_assets(spark, gen_bmp_rle_pandas, 48))
 
 
 @_q(
@@ -377,31 +279,10 @@ def q_image_stats_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     typing, strip reassembly, RLE runs, or photometric expansion
     breaks its share of the rows. TIFF is the scanned-document staple
     a crawl's PDF-adjacent corpora still carry."""
-    from finetoo_sp_spark.datagen import gen_tiff_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_tiff_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_tiff_assets(spark, 48))
-
-
-@_q(
-    "frame_sample_plan",
-    """
-SELECT doc_id AS asset_id, CAST(f AS BIGINT) AS frame_idx
-FROM documents,
-  UNNEST(generate_series(0, CAST(doc_id % 50 AS BIGINT), 10)) AS t(f)""",
-)
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plumbing (multimodal.frame_sample_plan):
-    every-Nth-frame explode from a declared frame count — the partition/
-    explode shape is real, the decode is the documented stub. Oracle =
-    generate_series over the same declared counts."""
-    from finetoo_sp_spark.multimodal import frame_sample_plan
-
-    assets = T(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("asset_id"),
-        (F.col("doc_id") % 50 + 1).cast("long").alias("n_frames"),
-    )
-    return frame_sample_plan(assets, every_n=10)
+    return image_stats(gen_assets(spark, gen_tiff_pandas, 48))
 
 
 @_q(
@@ -419,17 +300,17 @@ FROM range(0, 96) t(i)""",
 )
 def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL WAV/PCM decode under a sample-exact oracle: synthetic mono
-    square waves (datagen.gen_wav_assets — every sample +/-A so energy
+    square waves (datagen.gen_wav_pandas — every sample +/-A so energy
     and peak have closed forms) round-trip through the pure-stdlib RIFF
     parser inside the Arrow kernel; the DuckDB twin recomputes
     n*A^2 / A from the synthesis formula alone — it never sees a WAV
     byte, so agreement proves chunk walking, fmt parsing and PCM frame
     decode are sample-correct. Compressed audio raises in the codec and
     is skipped, never task-fatal."""
-    from finetoo_sp_spark.datagen import gen_wav_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_wav_pandas
     from finetoo_sp_spark.multimodal import audio_stats
 
-    return audio_stats(gen_wav_assets(spark, 96))
+    return audio_stats(gen_assets(spark, gen_wav_pandas, 96))
 
 
 @_q(
@@ -459,10 +340,10 @@ def q_audio_stats_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual decode, fixed prediction, CRC framing and stereo
     reconstruction are all sample-correct. FLAC being lossless is what
     makes the WAV-grade oracle transferable."""
-    from finetoo_sp_spark.datagen import gen_flac_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_flac_pandas
     from finetoo_sp_spark.multimodal import audio_stats
 
-    return audio_stats(gen_flac_assets(spark, 96))
+    return audio_stats(gen_assets(spark, gen_flac_pandas, 96))
 
 
 # shared with asset_curation_report below
@@ -501,10 +382,10 @@ def q_audio_probe_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin recomputes every column from the formulas alone — it
     never sees a container byte. This is the pre-decode curation path
     for crawled audio (bucket by codec/rate/length, drop clips)."""
-    from finetoo_sp_spark.datagen import gen_audio_probe_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_audio_probe_pandas
     from finetoo_sp_spark.multimodal import audio_probe
 
-    return audio_probe(gen_audio_probe_assets(spark, 120))
+    return audio_probe(gen_assets(spark, gen_audio_probe_pandas, 120))
 
 
 # Closed-form dHash oracle over the textured corpus (datagen.
@@ -551,10 +432,10 @@ def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 8x9, integer-grayscaled, adjacent columns compared. The DuckDB
     twin recomputes all 64 bits of every hash from the pixel formula —
     it never sees a PNG."""
-    from finetoo_sp_spark.datagen import gen_dhash_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_dhash_pandas
     from finetoo_sp_spark.multimodal import image_dhash
 
-    return image_dhash(gen_dhash_assets(spark, 80))
+    return image_dhash(gen_assets(spark, gen_dhash_pandas, 80))
 
 
 @_q("image_dhash_mixed_formats", _DHASH_SQL)
@@ -565,10 +446,10 @@ def q_image_dhash_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the 64 bits from the pixel formula and never sees a
     container, so any format-specific decode slip (transform inverse,
     LZW width, palette order) breaks exactly its third of the rows."""
-    from finetoo_sp_spark.datagen import gen_dhash_mixed_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_dhash_mixed_pandas
     from finetoo_sp_spark.multimodal import image_dhash
 
-    return image_dhash(gen_dhash_mixed_assets(spark, 80))
+    return image_dhash(gen_assets(spark, gen_dhash_mixed_pandas, 80))
 
 
 @_q(
@@ -586,10 +467,10 @@ def q_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator finds them by pigeonhole banding over the 8-byte
     fingerprints (the image bytes never join); the oracle is the
     brute-force all-pairs Hamming join over SQL-recomputed hashes."""
-    from finetoo_sp_spark.datagen import gen_dhash_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_dhash_pandas
     from finetoo_sp_spark.multimodal import dhash_pairs, image_dhash
 
-    h = image_dhash(gen_dhash_assets(spark, 80))
+    h = image_dhash(gen_assets(spark, gen_dhash_pandas, 80))
     return dhash_pairs(h, max_hamming=10).withColumn(
         "hamming", F.col("hamming").cast("int")
     )
@@ -623,11 +504,11 @@ def q_image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes the same pairs with a recursive CTE."""
     from pyspark.sql import Window
 
-    from finetoo_sp_spark.datagen import gen_dhash_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_dhash_pandas
     from finetoo_sp_spark.multimodal import dhash_pairs, image_dhash
     from finetoo_sp_spark.operators.components import connected_components
 
-    h = image_dhash(gen_dhash_assets(spark, 80))
+    h = image_dhash(gen_assets(spark, gen_dhash_pandas, 80))
     pairs = dhash_pairs(h, max_hamming=10)
     comp = connected_components(pairs)
     return comp.withColumn(
@@ -656,10 +537,10 @@ def q_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic containers; every probed field has a closed form the
     oracle recomputes from the asset id. Header-only Arrow kernel, mdat
     never touched, no shuffle."""
-    from finetoo_sp_spark.datagen import gen_mp4_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_mp4_pandas
     from finetoo_sp_spark.multimodal import video_metadata
 
-    return video_metadata(gen_mp4_assets(spark, 96))
+    return video_metadata(gen_assets(spark, gen_mp4_pandas, 96))
 
 
 # shared with asset_curation_report below
@@ -699,10 +580,10 @@ def q_image_dimensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     0-coded 256px sizes) corpus — every format a crawl's <img> and
     favicon fetches actually surface yields the fields curation
     filters on. Oracle recomputes everything from the id."""
-    from finetoo_sp_spark.datagen import gen_mixed_image_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_mixed_image_pandas
     from finetoo_sp_spark.multimodal import image_dimensions
 
-    return image_dimensions(gen_mixed_image_assets(spark, 140))
+    return image_dimensions(gen_assets(spark, gen_mixed_image_pandas, 140))
 
 
 @_q(
@@ -721,10 +602,10 @@ def q_frame_sample_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 500 ms of each synthetic MP4's mvhd duration becomes a
     work-list row; the oracle recomputes duration_ms from the id
     formula and unrolls the same inclusive series."""
-    from finetoo_sp_spark.datagen import gen_mp4_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_mp4_pandas
     from finetoo_sp_spark.multimodal import frame_sample_times
 
-    return frame_sample_times(gen_mp4_assets(spark, 96), interval_ms=500)
+    return frame_sample_times(gen_assets(spark, gen_mp4_pandas, 96), interval_ms=500)
 
 
 @_q(
@@ -756,10 +637,10 @@ def q_gif_animation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     masking, LCT routing, NETSCAPE loop parsing or GCE delay accounting
     breaks the sums. Extends the still-image GIF query to the animation
     semantics a video-adjacent web corpus actually carries."""
-    from finetoo_sp_spark.datagen import gen_gif_anim_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_gif_anim_pandas
     from finetoo_sp_spark.multimodal import gif_animation_stats
 
-    return gif_animation_stats(gen_gif_anim_assets(spark, 48))
+    return gif_animation_stats(gen_assets(spark, gen_gif_anim_pandas, 48))
 
 
 @_q(
@@ -807,10 +688,10 @@ def q_audio_stats_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaling, sign) — agreement proves the 256-entry decode tables are
     built exactly to spec, byte for byte. Telephony recordings and
     voicemail archives on the web are overwhelmingly G.711 WAVs."""
-    from finetoo_sp_spark.datagen import gen_g711_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_g711_pandas
     from finetoo_sp_spark.multimodal import audio_stats
 
-    return audio_stats(gen_g711_assets(spark, 48))
+    return audio_stats(gen_assets(spark, gen_g711_pandas, 48))
 
 
 @_q(
@@ -840,10 +721,10 @@ def q_webp_animation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop parsing and ANMF duration accounting all break the sums if
     they slip. WebP is the modern web's second image format; animated
     WebP is its GIF replacement, so a curation pipeline sees both."""
-    from finetoo_sp_spark.datagen import gen_webp_anim_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_webp_anim_pandas
     from finetoo_sp_spark.multimodal import webp_animation_stats
 
-    return webp_animation_stats(gen_webp_anim_assets(spark, 48))
+    return webp_animation_stats(gen_assets(spark, gen_webp_anim_pandas, 48))
 
 
 @_q(
@@ -878,18 +759,19 @@ def q_asset_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^12 assets nothing but the 11-format rollup ever shuffles.
     Oracle recomputes every cell from the two corpus formulas."""
     from finetoo_sp_spark.datagen import (
-        gen_audio_probe_assets,
-        gen_mixed_image_assets,
+        gen_assets,
+        gen_audio_probe_pandas,
+        gen_mixed_image_pandas,
     )
     from finetoo_sp_spark.multimodal import audio_probe, image_dimensions
 
-    imgs = image_dimensions(gen_mixed_image_assets(spark, 140)).select(
+    imgs = image_dimensions(gen_assets(spark, gen_mixed_image_pandas, 140)).select(
         F.lit("image").alias("modality"),
         F.col("format").alias("fmt"),
         (F.col("width") * F.col("height")).alias("metric"),
         (F.least("width", "height") >= 32).alias("keep"),
     )
-    auds = audio_probe(gen_audio_probe_assets(spark, 120)).select(
+    auds = audio_probe(gen_assets(spark, gen_audio_probe_pandas, 120)).select(
         F.lit("audio").alias("modality"),
         F.col("container").alias("fmt"),
         F.col("duration_ms").alias("metric"),
@@ -935,10 +817,10 @@ def q_apng_animation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic alone — it never sees a PNG byte — so zlib inflate,
     scanline de-filtering, fdAT sequence numbering, dispose restore
     and the integer OVER blend are all pinned externally."""
-    from finetoo_sp_spark.datagen import gen_apng_assets
+    from finetoo_sp_spark.datagen import gen_apng_pandas, gen_assets
     from finetoo_sp_spark.multimodal import apng_animation_stats
 
-    return apng_animation_stats(gen_apng_assets(spark, 48))
+    return apng_animation_stats(gen_assets(spark, gen_apng_pandas, 48))
 
 
 @_q(
@@ -973,10 +855,10 @@ def q_audio_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (64f+63)//hp - (64f)//hp — so PCM decode, frame slicing,
     nibble quantization and the min-id cluster rule are all pinned
     without the oracle seeing a WAV byte."""
-    from finetoo_sp_spark.datagen import gen_wav_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_wav_pandas
     from finetoo_sp_spark.operators.audiofp import audio_dup_clusters
 
-    return audio_dup_clusters(gen_wav_assets(spark, 96))
+    return audio_dup_clusters(gen_assets(spark, gen_wav_pandas, 96))
 
 
 @_q(
@@ -1012,10 +894,10 @@ def q_mp4_sample_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp CASE, running-sum offsets) without seeing a box — so run
     expansion, chunk walking, 32/64-bit offsets and sync marking are
     all pinned externally."""
-    from finetoo_sp_spark.datagen import gen_mp4_sample_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_mp4_sample_pandas
     from finetoo_sp_spark.multimodal import video_sample_table
 
-    return video_sample_table(gen_mp4_sample_assets(spark, 64))
+    return video_sample_table(gen_assets(spark, gen_mp4_sample_pandas, 64))
 
 
 @_q(
@@ -1050,10 +932,10 @@ def q_image_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis formula without seeing a byte, pinning IFD walking,
     sub-IFD pointers, ASCII/SHORT/RATIONAL decode and both
     endiannesses."""
-    from finetoo_sp_spark.datagen import gen_exif_jpeg_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_exif_jpeg_pandas
     from finetoo_sp_spark.multimodal import image_exif
 
-    return image_exif(gen_exif_jpeg_assets(spark, 60))
+    return image_exif(gen_assets(spark, gen_exif_jpeg_pandas, 60))
 
 
 @_q(
@@ -1075,10 +957,10 @@ def q_image_gps_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     has NONE afterward while orientation/make survive byte-identically
     — the redaction contract a responsible photo corpus publishes
     under."""
-    from finetoo_sp_spark.datagen import gen_exif_jpeg_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_exif_jpeg_pandas
     from finetoo_sp_spark.multimodal import gps_redaction_report
 
-    return gps_redaction_report(gen_exif_jpeg_assets(spark, 60))
+    return gps_redaction_report(gen_assets(spark, gen_exif_jpeg_pandas, 60))
 
 
 @_q(
@@ -1109,10 +991,10 @@ def q_image_stats_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one corpus covering the full IHDR matrix the still-image query
     never touched. The oracle recomputes per-channel sums from the
     index formula and palette polynomial alone."""
-    from finetoo_sp_spark.datagen import gen_png_variant_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_png_variant_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_png_variant_assets(spark, 60))
+    return image_stats(gen_assets(spark, gen_png_variant_pandas, 60))
 
 
 @_q(
@@ -1139,10 +1021,10 @@ def q_image_stats_png16(spark: SparkSession, sf_dir: str) -> DataFrame:
     256 — a low/high byte mixup cannot cancel — across all five
     scanline filters at the doubled per-pixel byte distance. The
     oracle recomputes the high-byte sums from the formula alone."""
-    from finetoo_sp_spark.datagen import gen_png16_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_png16_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_png16_assets(spark, 48))
+    return image_stats(gen_assets(spark, gen_png16_pandas, 48))
 
 
 @_q(
@@ -1187,10 +1069,10 @@ def q_image_autorotate(spark: SparkSession, sf_dir: str) -> DataFrame:
     they DISTINGUISH all eight transforms (mirror-H vs identity, 90 CW
     vs transpose, …) while the total stays invariant, so a wrong or
     missing rotation/flip breaks the hash."""
-    from finetoo_sp_spark.datagen import gen_jpeg_exif_orient_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_jpeg_exif_orient_pandas
     from finetoo_sp_spark.multimodal import image_oriented_stats
 
-    return image_oriented_stats(gen_jpeg_exif_orient_assets(spark, 64))
+    return image_oriented_stats(gen_assets(spark, gen_jpeg_exif_orient_pandas, 64))
 
 
 @_q(
@@ -1222,10 +1104,10 @@ def q_image_stats_cmyk(spark: SparkSession, sf_dir: str) -> DataFrame:
     which the DuckDB twin recomputes from the block formula alone —
     pinning the 4-component MCU walk, the Adobe inversion and the
     composite."""
-    from finetoo_sp_spark.datagen import gen_jpeg_cmyk_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_jpeg_cmyk_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    return image_stats(gen_jpeg_cmyk_assets(spark, 48))
+    return image_stats(gen_assets(spark, gen_jpeg_cmyk_pandas, 48))
 
 
 @_q(
@@ -1247,10 +1129,10 @@ def q_audio_stats_24bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension from bit 23) under a sample-exact oracle: amplitudes
     beyond int16 range, so any 16-bit fallback or sign-extension slip
     breaks n*A^2 / A. The studio-master shape of crawled audio."""
-    from finetoo_sp_spark.datagen import gen_wav24_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_wav24_pandas
     from finetoo_sp_spark.multimodal import audio_stats
 
-    return audio_stats(gen_wav24_assets(spark, 64))
+    return audio_stats(gen_assets(spark, gen_wav24_pandas, 64))
 
 
 @_q(
@@ -1270,10 +1152,10 @@ def q_audio_id3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames go absent on every 3rd asset and every 5th asset has no tag
     (version 0) — the full frame-walk + syncsafe-size + encoding matrix
     under one relational oracle."""
-    from finetoo_sp_spark.datagen import gen_mp3_id3_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_mp3_id3_pandas
     from finetoo_sp_spark.multimodal import audio_id3_meta
 
-    return audio_id3_meta(gen_mp3_id3_assets(spark, 70))
+    return audio_id3_meta(gen_assets(spark, gen_mp3_id3_pandas, 70))
 
 
 @_q(
@@ -1319,10 +1201,10 @@ def q_caption_keyframe_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual + partial-aggregated count; cues with no keyframe keep
     their row through the left join. Oracle regenerates both sides
     from the synthesis formulas and replays the same range join."""
-    from finetoo_sp_spark.datagen import gen_mp4_sample_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_mp4_sample_pandas
     from finetoo_sp_spark.multimodal import video_sample_table
 
-    samples = video_sample_table(gen_mp4_sample_assets(spark, 64))
+    samples = video_sample_table(gen_assets(spark, gen_mp4_sample_pandas, 64))
     keyframes = samples.filter(F.col("is_sync")).select(
         F.col("asset_id"),
         (F.col("dts_ticks") * 1000 / 600).cast("long").alias("dts_ms"),
@@ -1369,10 +1251,10 @@ def q_audio_tags_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (title, artist, album) row shape — the join key surface an
     audio-curation index builds on. Oracle relational from the id
     formula across both containers."""
-    from finetoo_sp_spark.datagen import gen_audio_tags_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_audio_tags_pandas
     from finetoo_sp_spark.multimodal import audio_tags
 
-    return audio_tags(gen_audio_tags_assets(spark, 60))
+    return audio_tags(gen_assets(spark, gen_audio_tags_pandas, 60))
 
 
 @_q(
@@ -1402,10 +1284,10 @@ def q_photo_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes every cell from the synthesis formulas; the
     scrub column is load-bearing (n_gps_scrubbed counts assets whose
     GPS existed AND verifiably vanished — scrub_ok gates keep)."""
-    from finetoo_sp_spark.datagen import gen_photo_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_photo_pandas
     from finetoo_sp_spark.multimodal import photo_report
 
-    rep = photo_report(gen_photo_assets(spark, 70))
+    rep = photo_report(gen_assets(spark, gen_photo_pandas, 70))
     keep = (
         (F.least("width", "height") >= 24)
         & (F.col("make") != "")

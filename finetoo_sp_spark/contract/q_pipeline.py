@@ -7,76 +7,26 @@ every query keeps its original name, Spark plan, and DuckDB twin.
 from __future__ import annotations
 
 from finetoo_sp_spark.contract._core import (
-    Callable,
     DataFrame,
     SparkSession,
     F,
     documents_to_pages,
     extract_pages,
     dd,
-    sim,
     ts,
-    ev,
-    PropertyGraphFrames,
-    op_aggregate,
-    op_compare,
-    op_filter,
-    op_group_by,
-    op_join,
-    op_match,
-    op_project,
-    op_traverse,
-    PropertyMeta,
-    Schema,
     T,
-    tpch_schema,
-    tpch_graph,
-    _CUSTOMER_COLS,
-    _ORDERS_COLS,
     _WORDS_SQL,
-    _STOP_ALL,
-    _docpages_expected_sql,
-    _REGISTRY,
     _q,
-    _EXTRACT_ORACLE,
-    _extracted_blocks_named,
-    _shingle_ctes,
-    _jaccard_sql,
-    _JACCARD_ORACLE,
-    _H60,
-    _minhash_oracle,
-    _simhash_oracle,
-    _INCR_CORPUS_SQL,
-    _TEMPLATE_CORPUS_SQL,
-    _template_heavy_corpus,
-    _COSINE_SQL,
-    _BUCKET_SQL,
     _STOP_LIST_SQL,
-    _LANG_COUNTS_SQL,
-    _SLICE_BUCKET_SQL,
-    _multiprobe_oracle,
-    _recall_curve_oracle,
-    _REP_WORDS_SQL,
-    _ngram_cte,
-    _BENCH_WORDS_SQL,
-    _assets,
-    _u32_le_sql,
-    _FEATURES_U32_SQL,
     _SANITIZE_SQL,
     _tmp_out,
-    _blocks_cte,
     _snapshot_b,
     _CURATION_MAX_DF,
     _CURATION_JACCARD,
     _pagerank_oracle,
     _SHA60_ID,
-    _KMEANS_CTE,
     _curation_v2_oracle,
-    _BM25_TERMS,
-    _BM25_TERMS_SQL,
 )
-
-
 
 
 @_q(

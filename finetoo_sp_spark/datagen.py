@@ -30,7 +30,8 @@ id % (1 + id % 97) pattern produces a few very hot hosts), so the
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -222,16 +223,8 @@ def gen_pages(
 ) -> DataFrame:
     """Distributed deterministic corpus: spark.range -> mapInPandas."""
     partitions = partitions or max(1, min(256, n_pages // 2000 or 1))
-    rng = spark.range(0, n_pages, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_pages_pandas(
-                    pdf["id"].to_numpy(), page_scale=page_scale, pdf_every=pdf_every
-                )
-
-    return rng.mapInPandas(gen, schema=PAGES_SCHEMA)
+    gen = partial(gen_pages_pandas, page_scale=page_scale, pdf_every=pdf_every)
+    return gen_assets(spark, gen, n_pages, partitions, schema=PAGES_SCHEMA)
 
 
 def write_pages(
@@ -256,6 +249,26 @@ IMAGE_ASSETS_SCHEMA = StructType(
 )
 
 
+def gen_assets(
+    spark: SparkSession,
+    gen: Callable[[np.ndarray], pd.DataFrame],
+    n: int,
+    partitions: int = 4,
+    schema: StructType | str = IMAGE_ASSETS_SCHEMA,
+) -> DataFrame:
+    """Distributed deterministic corpus: spark.range -> mapInPandas, where
+    ``gen(ids)`` (one of the ``gen_*_pandas`` functions) builds the rows
+    of each non-empty batch of ids."""
+    rng = spark.range(0, n, 1, partitions)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                yield gen(pdf["id"].to_numpy())
+
+    return rng.mapInPandas(run, schema=schema)
+
+
 def gen_image_pandas(ids: np.ndarray) -> pd.DataFrame:
     """Deterministic synthetic PNG assets: pixel(r, c, ch) =
     (asset_id + 3r + 5c + 11ch) % 256 over a per-id geometry
@@ -275,18 +288,6 @@ def gen_image_pandas(ids: np.ndarray) -> pd.DataFrame:
         img = ((i + 3 * r + 5 * c + 11 * ch) % 256).astype(np.uint8)
         rows.append((i, "image", encode_png(img, filter_type=i % 5)))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_image_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic PNG corpus: spark.range -> mapInPandas."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_image_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_jpeg_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -347,32 +348,6 @@ def gen_jpeg_progressive_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_jpeg_progressive_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic progressive-JPEG corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_jpeg_progressive_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
-def gen_jpeg_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic baseline-JPEG corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_jpeg_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_webp_pandas(ids: np.ndarray) -> pd.DataFrame:
     """gen_jpeg_pandas's closed-form block-flat images through the
     LOSSLESS WebP (VP8L) encoder, cycling encoder shapes per id —
@@ -400,18 +375,6 @@ def gen_webp_pandas(ids: np.ndarray) -> pd.DataFrame:
         img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
         rows.append((i, "image", encode_webp_lossless(img, **opts[i % 6])))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_webp_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic lossless-WebP corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_webp_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_gif_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -503,34 +466,6 @@ def gen_bmp_rle_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_bmp_rle_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic compressed-BMP corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_bmp_rle_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
-def gen_bmp_ico_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic BMP/ICO corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_bmp_ico_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_tiff_pandas(ids: np.ndarray) -> pd.DataFrame:
     """The block-flat formula images through the TIFF encoder — both
     byte orders x {uncompressed, PackBits, LZW, LZW+Predictor-2,
@@ -568,30 +503,6 @@ def gen_tiff_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_tiff_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic TIFF corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_tiff_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
-def gen_gif_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic GIF corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_gif_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_dhash_mixed_pandas(ids: np.ndarray) -> pd.DataFrame:
     """gen_dhash_pandas's textured formula images, rotated across the
     three LOSSLESS encoders per id — PNG (i%3=0), WebP-VP8L (1),
@@ -618,18 +529,6 @@ def gen_dhash_mixed_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_dhash_mixed_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed mixed-lossless-format dHash corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_dhash_mixed_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_wav_pandas(ids: np.ndarray) -> pd.DataFrame:
     """Deterministic synthetic WAV assets with CLOSED-FORM stats: mono
     16-bit square waves at 8 kHz where every sample of asset i is
@@ -648,18 +547,6 @@ def gen_wav_pandas(ids: np.ndarray) -> pd.DataFrame:
         s = np.where((t // (period // 2)) % 2 == 0, amp, -amp).astype(np.int16)
         rows.append((i, "audio", encode_wav(s, 8000)))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_wav_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic WAV corpus: spark.range -> mapInPandas."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_wav_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_flac_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -703,18 +590,6 @@ def gen_flac_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_flac_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic FLAC corpus: spark.range -> mapInPandas."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_flac_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_audio_probe_pandas(ids: np.ndarray) -> pd.DataFrame:
     """Deterministic compressed-audio corpus with CLOSED-FORM metadata
     for the header-only probe — cycling container per id (i%4):
@@ -752,20 +627,6 @@ def gen_audio_probe_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_audio_probe_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic compressed-audio corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_audio_probe_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_dhash_pandas(ids: np.ndarray) -> pd.DataFrame:
     """Textured synthetic PNGs for perceptual-hash tests: pixel(r,c,ch) =
     (13*id + 3r^2 + 5c^2 + (1 + id%4)*rc + 11ch) % 256. The quadratic +
@@ -790,18 +651,6 @@ def gen_dhash_pandas(ids: np.ndarray) -> pd.DataFrame:
         )
         rows.append((i, "image", encode_png(img, filter_type=i % 5)))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_dhash_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed textured PNG corpus for perceptual-hash queries."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_dhash_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_mp4_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -835,18 +684,6 @@ def gen_mp4_pandas(ids: np.ndarray) -> pd.DataFrame:
             )
         )
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_mp4_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic MP4 corpus: spark.range -> mapInPandas."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_mp4_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_mixed_image_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -899,18 +736,6 @@ def gen_mixed_image_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_mixed_image_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed mixed-format (PNG/JPEG/GIF/WebP) image corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_mixed_image_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 # --- charset-mixed HTML corpus (extraction/charset.py) ----------------
 
 # (python codec, meta label or None, BOM bytes, non-ASCII token).
@@ -939,27 +764,19 @@ def charset_page_text(i: int) -> str:
     )
 
 
+CHARSET_PAGES_SCHEMA = "page_id long, html binary"
+
+
 def gen_charset_pandas(ids: np.ndarray) -> pd.DataFrame:
+    """Mixed-encoding HTML pages: utf-8 / windows-1252 / Shift_JIS / GBK
+    metas, utf-8 + utf-16-le BOMs, and a declaration-free windows-1252
+    fallback class."""
     rows = []
     for i in ids:
         i = int(i)
         codec, _meta, bom, _tok = CHARSET_CASES[i % len(CHARSET_CASES)]
         rows.append((i, bom + charset_page_text(i).encode(codec)))
     return pd.DataFrame(rows, columns=["page_id", "html"])
-
-
-def gen_charset_pages(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed mixed-encoding HTML corpus: utf-8 / windows-1252 /
-    Shift_JIS / GBK metas, utf-8 + utf-16-le BOMs, and a
-    declaration-free windows-1252 fallback class."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_charset_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema="page_id long, html binary")
 
 
 def gen_gif_anim_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1030,20 +847,6 @@ def gen_g711_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_g711_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic G.711 WAV corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_g711_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_webp_anim_pandas(ids: np.ndarray) -> pd.DataFrame:
     """Deterministic ANIMATED WebP corpus with closed-form composited
     sums — the VP8X/ANIM/ANMF twin of gen_gif_anim_pandas: per id a
@@ -1080,32 +883,6 @@ def gen_webp_anim_pandas(ids: np.ndarray) -> pd.DataFrame:
         payload = encode_webp_anim(w, h, [f0, f1, f2], loop=i % 4)
         rows.append((i, "image", payload))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_webp_anim_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic animated-WebP corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_webp_anim_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
-def gen_gif_anim_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic animated-GIF corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_gif_anim_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_apng_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1149,18 +926,6 @@ def gen_apng_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_apng_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic APNG corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_apng_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_mp4_sample_pandas(ids: np.ndarray) -> pd.DataFrame:
     """Deterministic MP4s with FULL sample tables and closed-form rows:
     asset i carries ns = 10 + i%6 video samples in two stts runs
@@ -1186,20 +951,6 @@ def gen_mp4_sample_pandas(ids: np.ndarray) -> pd.DataFrame:
         )
         rows.append((i, "video", payload))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_mp4_sample_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic sample-table MP4 corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_mp4_sample_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_exif_jpeg_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1236,20 +987,6 @@ def gen_exif_jpeg_pandas(ids: np.ndarray) -> pd.DataFrame:
         )
         rows.append((i, "image", insert_exif(base, app1)))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_exif_jpeg_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic JPEG+EXIF corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_exif_jpeg_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_png_variant_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1312,20 +1049,6 @@ def gen_png_variant_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_png_variant_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic palette/interlace/tRNS PNG corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_png_variant_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_png16_pandas(ids: np.ndarray) -> pd.DataFrame:
     """Deterministic 16-bit PNGs (gray or RGB by parity) whose HIGH
     bytes have closed forms: sample16(r,c) = ((i + 3r + 5c + ch) * 257)
@@ -1347,18 +1070,6 @@ def gen_png16_pandas(ids: np.ndarray) -> pd.DataFrame:
             ).astype(np.uint16)
         rows.append((i, "image", encode_png_16bit(a, filter_type=i % 5)))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_png16_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic 16-bit PNG corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_png16_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_jpeg_exif_orient_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1385,20 +1096,6 @@ def gen_jpeg_exif_orient_pandas(ids: np.ndarray) -> pd.DataFrame:
             (i, "image", insert_exif(encode_jpeg_baseline(img), app1))
         )
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_jpeg_exif_orient_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic orientation-tagged JPEG corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_jpeg_exif_orient_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_jpeg_cmyk_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1428,20 +1125,6 @@ def gen_jpeg_cmyk_pandas(ids: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
 
 
-def gen_jpeg_cmyk_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic Adobe-CMYK JPEG corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_jpeg_cmyk_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
-
-
 def gen_wav24_pandas(ids: np.ndarray) -> pd.DataFrame:
     """Deterministic 24-BIT PCM WAV corpus (studio-master shape) with
     closed-form stats: mono square waves of amplitude A = 100000 +
@@ -1459,18 +1142,6 @@ def gen_wav24_pandas(ids: np.ndarray) -> pd.DataFrame:
         s = np.where((t // (period // 2)) % 2 == 0, amp, -amp)
         rows.append((i, "audio", encode_wav_24bit(s, 48000)))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_wav24_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic 24-bit WAV corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_wav24_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_mp3_id3_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1496,20 +1167,6 @@ def gen_mp3_id3_pandas(ids: np.ndarray) -> pd.DataFrame:
         )
         rows.append((i, "audio", tag + mp3))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_mp3_id3_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic ID3-tagged MP3 corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_mp3_id3_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_audio_tags_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1543,20 +1200,6 @@ def gen_audio_tags_pandas(ids: np.ndarray) -> pd.DataFrame:
             )
         rows.append((i, "audio", payload))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_audio_tags_assets(
-    spark: SparkSession, n: int, partitions: int = 4
-) -> DataFrame:
-    """Distributed deterministic mixed tagged-audio corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_audio_tags_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)
 
 
 def gen_photo_pandas(ids: np.ndarray) -> pd.DataFrame:
@@ -1595,15 +1238,3 @@ def gen_photo_pandas(ids: np.ndarray) -> pd.DataFrame:
         )
         rows.append((i, "image", insert_exif(encode_jpeg_baseline(img), app1)))
     return pd.DataFrame(rows, columns=["asset_id", "modality", "payload"])
-
-
-def gen_photo_assets(spark: SparkSession, n: int, partitions: int = 4) -> DataFrame:
-    """Distributed deterministic photo-ingest corpus."""
-    rng = spark.range(0, n, 1, partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield gen_photo_pandas(pdf["id"].to_numpy())
-
-    return rng.mapInPandas(gen, schema=IMAGE_ASSETS_SCHEMA)

@@ -1,4 +1,4 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal kernels: real decodes over opaque binary payloads.
 
 Image/audio/video assets are (asset_id, modality, payload) rows. The
 payload is an opaque ``binary`` column that never leaves the JVM except
@@ -22,7 +22,6 @@ opaque binary siblings of the DXFs routed to a parallel parse path
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 from collections.abc import Callable, Iterator
@@ -33,34 +32,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-FEATURE_DIM = 16
-
 # The exceptions a decoder may raise on hostile bytes (the contract
 # tests/test_fuzz_decoders.py pins); anything else is a bug and fails.
 SKIP = (ValueError, NotImplementedError, IndexError, EOFError, struct.error, zlib.error)
-
-META_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("modality", StringType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("payload_sha", StringType(), False),
-    ]
-)
-
-FEATURE_SCHEMA = StructType(
-    META_SCHEMA.fields
-    + [StructField("features", ArrayType(DoubleType()), False)]
-)
 
 
 def per_asset(
@@ -138,20 +119,6 @@ def decode_image(payload: bytes) -> "np.ndarray":
     )
 
 
-def fake_features(payload: pd.Series, dim: int = FEATURE_DIM) -> pd.Series:
-    """Deterministic pseudo-features: sha256(payload) bytes -> dim doubles
-    in [0,1). Pure function of the bytes — stable across partitionings."""
-
-    def feat(b: bytes) -> list[float]:
-        d = hashlib.sha256(bytes(b)).digest()
-        reps = (dim * 4 + len(d) - 1) // len(d)
-        raw = (d * reps)[: dim * 4]
-        arr = np.frombuffer(raw, dtype=np.uint32)[:dim]
-        return (arr / np.float64(2**32)).tolist()
-
-    return payload.map(feat)
-
-
 def asset_metadata(assets: DataFrame) -> DataFrame:
     """(asset_id, modality, n_bytes, payload_sha) — pure JVM column ops;
     the scan never deserializes payloads into Python."""
@@ -160,37 +127,6 @@ def asset_metadata(assets: DataFrame) -> DataFrame:
         "modality",
         F.length("payload").cast("long").alias("n_bytes"),
         F.sha2("payload", 256).alias("payload_sha"),
-    )
-
-
-def extract_features(assets: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """Arrow-batched feature extraction over (asset_id, modality, payload).
-
-    Batch shape: one pandas DataFrame per Arrow batch; the kernel is
-    vectorized over the batch (hashlib per element is the stub decode —
-    a real codec would be vectorized the same way). Output keeps the
-    metadata columns so downstream joins need no second scan.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            payload = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": payload.map(len).astype("int64"),
-                    "payload_sha": payload.map(
-                        lambda b: hashlib.sha256(bytes(b)).hexdigest()
-                    ),
-                    "features": fake_features(payload, dim),
-                }
-            )
-
-    return assets.select("asset_id", "modality", "payload").mapInPandas(
-        run, schema=FEATURE_SCHEMA
     )
 
 
@@ -235,15 +171,6 @@ def image_stats(assets: DataFrame) -> DataFrame:
     return per_asset(
         assets, IMAGE_STATS_SCHEMA, lambda a, raw: _stats_rows(a, decode_image(raw))
     )
-
-
-def frame_sample_plan(assets: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: emits (asset_id, frame_idx) rows for
-    frames 0, n, 2n, ... based on a declared frame count column
-    ``n_frames`` (decode stubbed; the explode/partition shape is real).
-    """
-    idx = F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
-    return assets.select("asset_id", F.explode(idx).alias("frame_idx"))
 
 
 def resize_images(assets: DataFrame, out_h: int, out_w: int) -> DataFrame:
@@ -497,8 +424,8 @@ def frame_sample_times(assets: DataFrame, interval_ms: int = 500) -> DataFrame:
     """Time-based video frame sampling driven by the REAL container
     parse: probe each MP4's mvhd duration (video_metadata), then emit
     one (asset_id, sample_idx, ts_ms) row per ``interval_ms`` — the
-    work-list a frame-decode stage would map over (the decode itself
-    needs an entropy codec and stays stubbed). The explode is bounded
+    work-list a frame-decode stage would map over (no video codec here
+    decodes the frames themselves). The explode is bounded
     by duration/interval, stays JVM-side (sequence + explode), and
     partitions by asset like any downstream decode batch would need."""
     meta = video_metadata(assets).select("asset_id", "duration_ms")

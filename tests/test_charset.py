@@ -81,13 +81,17 @@ def test_prescan_window_is_1024_bytes():
 
 
 def test_decode_pages_spark(spark):
-    from finetoo_sp_spark.datagen import charset_page_text, gen_charset_pages
+    from finetoo_sp_spark.datagen import (
+        CHARSET_PAGES_SCHEMA,
+        charset_page_text,
+        gen_assets,
+        gen_charset_pandas,
+    )
 
+    pages = gen_assets(spark, gen_charset_pandas, 14, schema=CHARSET_PAGES_SCHEMA)
     got = {
         r["page_id"]: (r["charset"], r["charset_src"], r["text"])
-        for r in decode_pages(
-            gen_charset_pages(spark, 14), passthrough=("page_id",)
-        ).collect()
+        for r in decode_pages(pages, passthrough=("page_id",)).collect()
     }
     assert len(got) == 14
     for i in range(14):

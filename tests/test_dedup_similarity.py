@@ -169,20 +169,6 @@ def test_sessionize_gap(spark):
     assert got[(1, 1)] == 2 and got[(1, 2)] == 1 and got[(2, 1)] == 1
 
 
-def test_multimodal_features_deterministic(spark):
-    from finetoo_sp_spark.multimodal import extract_features
-
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(b"payload-one")), (2, "audio", bytearray(b"payload-two"))],
-        ["asset_id", "modality", "payload"],
-    )
-    a = {r["asset_id"]: (r["payload_sha"], tuple(r["features"])) for r in extract_features(df).collect()}
-    b = {r["asset_id"]: (r["payload_sha"], tuple(r["features"])) for r in extract_features(df.repartition(3)).collect()}
-    assert a == b
-    assert len(a[1][1]) == 16
-    assert a[1] != a[2]
-
-
 def test_multimodal_decode_stub_raises():
     """Non-PNG formats (and truncated magics) still hit the documented
     codec-absent seam; full PNGs now decode (test_decode_image_dispatch)."""
@@ -335,10 +321,10 @@ def test_resize_images_exact(spark):
     same integer floor rule."""
     import numpy as np
 
-    from finetoo_sp_spark.datagen import gen_image_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_image_pandas
     from finetoo_sp_spark.multimodal import image_stats, resize_images
 
-    assets = gen_image_assets(spark, 12)
+    assets = gen_assets(spark, gen_image_pandas, 12)
 
     # identity: every source image is at least 12x16, so resizing to the
     # per-image native size is only possible per-row -- instead check a
@@ -361,11 +347,11 @@ def test_resize_images_exact(spark):
 def test_resize_rejects_bad_dims(spark):
     import pytest as _pytest
 
-    from finetoo_sp_spark.datagen import gen_image_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_image_pandas
     from finetoo_sp_spark.multimodal import resize_images
 
     with _pytest.raises(ValueError):
-        resize_images(gen_image_assets(spark, 1), out_h=0, out_w=4)
+        resize_images(gen_assets(spark, gen_image_pandas, 1), out_h=0, out_w=4)
 
 
 def test_edit_verify_pairs_confirms_planted_neardups(spark):

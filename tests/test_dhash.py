@@ -7,13 +7,13 @@ import numpy as np
 import pytest
 
 from finetoo_sp_spark.codecs.png import encode_png
-from finetoo_sp_spark.datagen import gen_dhash_assets
+from finetoo_sp_spark.datagen import gen_assets, gen_dhash_pandas
 from finetoo_sp_spark.multimodal import dhash_pairs, image_dhash
 
 
 @pytest.fixture(scope="module")
 def hashes(spark):
-    df = image_dhash(gen_dhash_assets(spark, 80)).cache()
+    df = image_dhash(gen_assets(spark, gen_dhash_pandas, 80)).cache()
     df.count()
     return df
 

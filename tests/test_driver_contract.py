@@ -116,3 +116,29 @@ def test_every_oracle_parses_in_duckdb():
         except Exception as ex:  # noqa: BLE001 — collecting all failures
             bad.append((name, str(ex).splitlines()[0]))
     assert not bad, bad
+
+
+def test_contract_modules_use_every_core_import():
+    """Each contract module imports from _core only the names it uses
+    (the project configures no linter, so this is the unused-import check).
+    __init__ re-exports two names that tests import from the package."""
+    import ast
+    from pathlib import Path
+
+    import finetoo_sp_spark.contract as pkg
+
+    reexported = {"__init__.py": {"tpch_graph", "_template_heavy_corpus"}}
+    unused = {}
+    for path in sorted(Path(pkg.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        imported = {
+            a.asname or a.name
+            for n in tree.body
+            if isinstance(n, ast.ImportFrom) and n.module == "finetoo_sp_spark.contract._core"
+            for a in n.names
+        }
+        extra = imported - used - reexported.get(path.name, set())
+        if extra:
+            unused[path.name] = sorted(extra)
+    assert not unused, unused

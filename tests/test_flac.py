@@ -246,10 +246,10 @@ def test_audio_stats_dispatches_wav_and_flac(spark):
 
 
 def test_flac_corpus_matches_formula(spark):
-    from finetoo_sp_spark.datagen import gen_flac_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_flac_pandas
     from finetoo_sp_spark.multimodal import audio_stats
 
-    rows = audio_stats(gen_flac_assets(spark, 24)).collect()
+    rows = audio_stats(gen_assets(spark, gen_flac_pandas, 24)).collect()
     assert len(rows) == 24
     for r in rows:
         i = r["asset_id"]

@@ -146,10 +146,11 @@ def test_probe_image_dims_formats():
 
 
 def test_image_dimensions_spark(spark):
-    from finetoo_sp_spark.datagen import gen_mixed_image_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_mixed_image_pandas
     from finetoo_sp_spark.multimodal import image_dimensions
 
-    out = {r.asset_id: r for r in image_dimensions(gen_mixed_image_assets(spark, 8)).collect()}
+    assets = gen_assets(spark, gen_mixed_image_pandas, 8)
+    out = {r.asset_id: r for r in image_dimensions(assets).collect()}
     assert len(out) == 8
     assert out[0].format == "png" and (out[0].width, out[0].height) == (16, 12)
     assert out[1].format == "jpeg"
@@ -620,3 +621,45 @@ def test_sample_table_inconsistent_tables_raise():
         from finetoo_sp_spark.codecs.mp4 import encode_mp4
 
         decode_sample_table(encode_mp4("isom", 600, 600, [("vide", 16, 16, "avc1")]))
+
+
+def _two_track_mp4(first_handler: bytes) -> bytes:
+    """Track 1: 4 samples of 10 bytes, no stss (all sync). Track 2:
+    4 samples of 20 bytes, stss marking every 2nd sample."""
+    import struct
+
+    from finetoo_sp_spark.codecs.mp4 import encode_mp4_samples
+
+    a = encode_mp4_samples(600, [(4, 100)], [10] * 4, 2, sync_every=0)
+    b = encode_mp4_samples(600, [(4, 50)], [20] * 4, 2, sync_every=2)
+
+    def trak(f: bytes) -> tuple[int, bytes]:
+        i = f.find(b"trak") - 4
+        return i, f[i : i + struct.unpack_from(">I", f, i)[0]]
+
+    ia, ta = trak(a)
+    _, tb = trak(b)
+    moov = a.find(b"moov") - 4
+    moov_size = struct.unpack_from(">I", a, moov)[0] + len(tb)
+    return (
+        a[:moov]
+        + struct.pack(">I", moov_size)
+        + a[moov + 4 : ia]
+        + ta.replace(b"vide", first_handler)
+        + tb
+        + a[ia + len(ta) :]
+    )
+
+
+def test_sample_table_never_mixes_tracks():
+    """Only track 2 has stss: track 1's samples must all stay sync (not
+    pick up track 2's keyframe flags), and a video track is preferred
+    over an earlier non-video one."""
+    from finetoo_sp_spark.codecs.mp4 import decode_sample_table
+
+    rows = decode_sample_table(_two_track_mp4(b"vide"))
+    assert [(r["size"], r["is_sync"]) for r in rows] == [(10, True)] * 4
+    rows = decode_sample_table(_two_track_mp4(b"soun"))
+    assert [r["size"] for r in rows] == [20] * 4
+    assert [r["is_sync"] for r in rows] == [True, False, True, False]
+    assert [r["dts_ticks"] for r in rows] == [0, 50, 100, 150]

@@ -156,10 +156,10 @@ def test_image_stats_dispatches_tiff(spark):
 
 
 def test_corpus_matches_formula(spark):
-    from finetoo_sp_spark.datagen import gen_tiff_assets
+    from finetoo_sp_spark.datagen import gen_assets, gen_tiff_pandas
     from finetoo_sp_spark.multimodal import image_stats
 
-    rows = image_stats(gen_tiff_assets(spark, 16)).collect()
+    rows = image_stats(gen_assets(spark, gen_tiff_pandas, 16)).collect()
     assert len(rows) == 16
     for r in rows:
         i = r["asset_id"]
