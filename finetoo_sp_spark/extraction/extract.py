@@ -104,19 +104,29 @@ def _placement_keys(n: int) -> tuple[int, ...]:
 
 
 def place_buckets(df: DataFrame, n_buckets: int) -> DataFrame:
-    """``repartition(n_buckets, "bucket")`` that sends bucket ``b`` to
-    partition ``b`` exactly.
+    """Repartition on ``bucket`` into ``P = min(n, defaultParallelism)``
+    partitions, bucket ``b`` going to partition ``b * P // n`` exactly.
+
+    Each partition holds one contiguous range of whole buckets, so a
+    ``partitionBy("bucket")`` write still emits one file per bucket, but
+    from P tasks instead of n. Every write task and every file pays the
+    local-FS committer's set-up (without the native Hadoop library each
+    file's permission set-up forks a ``chmod``: ~260 forks for a 32-task
+    write), which made a one-task-per-bucket write the largest block of
+    a fresh commit; a task that writes several buckets sorts its own rows
+    by ``bucket`` first. With ``n <= P`` bucket b goes to partition b.
 
     Hash-repartitioning on the bucket id itself hashes it a second time,
-    so n buckets land in n partitions like balls in bins: 32 buckets fill
-    18 of 32 partitions and 256 fill 158 of 256, leaving the rest empty
-    and some with three or four buckets. Instead the shuffle key is a
-    per-bucket literal ``k_b`` chosen on the driver so that Spark's own
-    ``pmod(murmur3(k_b), n) == b``, looked up with ``element_at`` — one
-    key per bucket, no extra job, no extra column.
+    so buckets land in partitions like balls in bins: 32 buckets fill 18
+    of 32 partitions, leaving the rest empty and some with three or four
+    buckets. Instead the shuffle key is a literal ``k_p`` chosen on the
+    driver so that Spark's own ``pmod(murmur3(k_p), P) == p``, looked up
+    per bucket with ``element_at`` — no extra job, no extra column.
     """
-    keys = F.array(*[F.lit(k) for k in _placement_keys(n_buckets)])
-    return df.repartition(n_buckets, F.element_at(keys, F.col("bucket") + 1))
+    p = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    part_keys = _placement_keys(p)
+    keys = F.array(*[F.lit(part_keys[b * p // n_buckets]) for b in range(n_buckets)])
+    return df.repartition(p, F.element_at(keys, F.col("bucket") + 1))
 
 
 def extract_pages(

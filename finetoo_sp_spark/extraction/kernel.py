@@ -140,12 +140,14 @@ def _seg_cumsum_multi(rows: list[np.ndarray], offsets: np.ndarray, doc: np.ndarr
 
 
 def decode_html(html: pd.Series) -> pd.Series:
-    """binary -> str; deterministic utf-8 with replacement."""
-    if len(html) and isinstance(html.iloc[0], (bytes, bytearray)):
-        try:
-            return html.str.decode("utf-8", errors="replace")
-        except TypeError:  # older pandas without errors kwarg
-            return html.map(lambda b: b.decode("utf-8", "replace"))
+    """binary -> str; deterministic utf-8 with replacement.
+
+    The path is chosen from the first non-null value: a batch that opens
+    with a null page still decodes its bytes with replacement, never
+    strictly (which would fail the whole task on one invalid byte)."""
+    valid = html.notna().to_numpy()
+    if valid.any() and isinstance(html.iloc[valid.argmax()], (bytes, bytearray)):
+        return html.str.decode("utf-8", errors="replace")
     return html.astype("string").astype(object)
 
 
@@ -487,9 +489,9 @@ def extract_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
     """Full per-batch extraction: (url, html) -> one row per page.
 
     Output columns: url, text (main content, blocks joined by '\\n'),
-    spans (list of (start, end, tag) dicts — char offsets into the decoded,
-    comment-stripped HTML), title, h1, lang_attr, n_blocks,
-    n_content_blocks, content_chars.
+    spans (Arrow list of (start, end, tag) structs, read back as lists of
+    dicts — char offsets into the decoded, comment-stripped HTML), title,
+    h1, lang_attr, n_blocks, n_content_blocks, content_chars.
     """
     urls = urls.reset_index(drop=True)
     html_text = decode_html(html.reset_index(drop=True))
@@ -513,12 +515,17 @@ def extract_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
     np.add.at(content_chars, doc_c, b.n_chars[content])
     n_blocks = np.bincount(b.doc, minlength=n_docs) if len(b.doc) else np.zeros(n_docs, np.int64)
 
-    # spans: content blocks only (few per doc) — lightweight python build
-    spans: list[list[dict]] = [[] for _ in range(n_docs)]
-    if len(content):
-        tags_c = b.block_tag.take(pa.array(content)).fill_null("").to_pylist()
-        for d, s, e, t in zip(doc_c, b.span_start[content], b.span_end[content], tags_c):
-            spans[d].append({"start": int(s), "end": int(e), "tag": t})
+    # spans: the content blocks as list<struct<start,end,tag>>, sharing
+    # the per-doc offsets of the text join above
+    span_items = pa.StructArray.from_arrays(
+        [
+            pa.array(b.span_start[content], pa.int64()),
+            pa.array(b.span_end[content], pa.int64()),
+            b.block_tag.take(pa.array(content)).fill_null("").cast(pa.string()),
+        ],
+        names=["start", "end", "tag"],
+    )
+    spans = pa.ListArray.from_arrays(join_offsets.astype(np.int32), span_items)
 
     # typed schema fields (reference analogue: typed field mapping,
     # proto/graph.proto:213-298 CAD messages; here: title/h1/lang).
@@ -539,7 +546,7 @@ def extract_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
         {
             "url": urls,
             "text": text_per_doc.to_pandas().astype(object),
-            "spans": spans,
+            "spans": pd.arrays.ArrowExtensionArray(spans),
             "title": title.to_pandas().astype(object),
             "h1": h1,
             "lang_attr": lang_attr.to_pandas().astype(object),

@@ -8,7 +8,9 @@ Design (scale-sane — no driver-side per-row loops):
 
 1. every row gets a deterministic ``bucket = pmod(xxhash64(url), B)``;
 2. output is written ``partitionBy("bucket")`` (idempotent per-bucket
-   dynamic overwrite — a re-run of a bucket replaces exactly that bucket);
+   dynamic overwrite — a re-run of a bucket replaces exactly that bucket)
+   by P = min(B, cores) tasks of B/P whole buckets each, one file per
+   bucket;
 3. after the data commit, ONE ``groupBy(bucket)`` over the committed
    slim columns (``row_hash``, ``text_chars``, read back with an explicit
    schema) yields each bucket's output_count, content checksum and chars;
@@ -143,11 +145,13 @@ def write_with_manifests(
 
     Scale discipline:
     - ``n_buckets`` set: :func:`place_buckets` right before the write
-      sends bucket b to partition b, so each of the n write tasks emits
-      exactly one bucket's file — n files, every task busy — instead of
-      tasks x buckets tiny files whose commit serializes on the driver;
-      this shuffle moves *extracted* text (much smaller than raw html)
-      and IS the hash(url) anti-skew salt of the north rule.
+      gives each of P = min(n, cores) write tasks one contiguous range
+      of n/P whole buckets, so every bucket is exactly one file — n
+      files, every task busy — instead of tasks x buckets tiny files
+      whose commit serializes on the driver, and without paying the
+      per-task write and commit set-up n times; this shuffle moves
+      *extracted* text (much smaller than raw html) and IS the
+      hash(url) anti-skew salt of the north rule.
     - dynamic partition overwrite: re-running a bucket (after a failure)
       replaces exactly that bucket's files, never duplicates.
     - manifests land under ``out_dir/_manifests`` only after the data

@@ -133,22 +133,105 @@ def test_fresh_commit_job_count(spark, pages, tmp_path):
 
 @pytest.mark.parametrize("n", [8, 32, 256])
 def test_place_buckets_is_exact(spark, n):
-    """Bucket b lands in partition b: the placement keys agree with
-    Spark's own hash(), and spark_partition_id() confirms it."""
+    """Bucket b lands in partition b * P // n, P = min(n, cores): every
+    partition holds one contiguous range of whole buckets and none is
+    empty. The placement keys agree with Spark's own hash(), and
+    spark_partition_id() confirms the placement."""
     from finetoo_sp_spark.extraction.extract import _placement_keys
 
-    keys = _placement_keys(n)
+    p = min(n, spark.sparkContext.defaultParallelism)
+    keys = _placement_keys(p)
     got = spark.createDataFrame([(k,) for k in keys], "k int").select(
-        F.pmod(F.hash("k"), F.lit(n)).alias("p")
+        F.pmod(F.hash("k"), F.lit(p)).alias("p")
     )
-    assert [r.p for r in got.collect()] == list(range(n))
+    assert [r.p for r in got.collect()] == list(range(p))
     df = spark.range(4 * n).select((F.col("id") % n).cast("int").alias("bucket"))
-    bad = (
-        place_buckets(df, n)
-        .filter(F.spark_partition_id() != F.col("bucket"))
-        .count()
-    )
+    placed = place_buckets(df, n).select("bucket", F.spark_partition_id().alias("pid"))
+    assert placed.rdd.getNumPartitions() == p
+    bad = placed.filter(F.col("pid") != F.floor(F.col("bucket") * p / n)).count()
     assert bad == 0
+    assert placed.select("pid").distinct().count() == p
+
+
+def test_fresh_commit_writes_one_file_per_bucket_from_core_tasks(spark, pages, tmp_path):
+    """With 4 buckets per core, the data write runs one task per core,
+    each writing whole buckets: exactly one parquet file per bucket.
+    The write stage is the last stage before the manifest pass's
+    collect, found through a statusTracker job group."""
+    import glob
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    n = 4 * cores
+    group = "fresh-commit-write-tasks"
+    sc.setJobGroup(group, "fresh run_resumable_extraction")
+    try:
+        out = str(tmp_path / "out")
+        m = run_resumable_extraction(pages, out, n_buckets=n)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m["rows_out"] == N_PAGES and m["buckets_processed"] == n
+    for b in range(n):
+        assert len(glob.glob(f"{out}/data/bucket={b}/*.parquet")) == 1, b
+
+    st = sc.statusTracker()
+    stages = [
+        st.getStageInfo(s)
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    ran = sorted((s for s in stages if s and s.numCompletedTasks), key=lambda s: s.stageId)
+    first_collect = next(i for i, s in enumerate(ran) if s.name.startswith("collect at"))
+    assert first_collect > 0
+    assert ran[first_collect - 1].numTasks == cores
+
+
+def test_null_first_html_still_decodes_with_replacement(spark):
+    """A partition whose first page is null still decodes the invalid
+    UTF-8 of a later page with replacement instead of failing the job."""
+    words = " ".join(["word"] * 12)
+    df = spark.createDataFrame(
+        [("u1", None), ("u2", f"<p>caf\xe9 {words}</p>".encode("latin-1"))],
+        "url string, html binary",
+    ).coalesce(1)
+    got = {r.url: r.text for r in extract_pages(df).collect()}
+    assert got == {"u1": "", "u2": f"caf\ufffd {words}"}
+
+
+def test_bucket_repartition_only_in_place_buckets():
+    """No repartition under finetoo_sp_spark is keyed on the bucket
+    column (or a url_salt bucket id) except inside place_buckets: a
+    one-task-per-bucket or double-hash placement must not come back."""
+    import ast
+    from pathlib import Path
+
+    import finetoo_sp_spark as pkg
+
+    def keyed_on_bucket(n: ast.AST) -> bool:
+        if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+            return False
+        keys = [*n.args, *(k.value for k in n.keywords)]
+        return n.func.attr == "repartition" and any(
+            (isinstance(x, ast.Constant) and x.value == "bucket")
+            or (isinstance(x, ast.Name) and x.id == "url_salt")
+            for k in keys
+            for x in ast.walk(k)
+        )
+
+    allowed, bad = [], []
+    root = Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        placer = [
+            range(f.lineno, f.end_lineno + 1)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "place_buckets"
+        ]
+        for n in filter(keyed_on_bucket, ast.walk(tree)):
+            inside = any(n.lineno in r for r in placer)
+            (allowed if inside else bad).append(f"{path.relative_to(root)}:{n.lineno}")
+    assert len(allowed) == 1, allowed
+    assert not bad, bad
 
 
 def test_resume_reads_spark_written_manifests(spark, pages, tmp_path):
