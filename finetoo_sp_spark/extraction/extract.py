@@ -41,7 +41,7 @@ SPAN_TYPE = StructType(
 
 EXTRACT_SCHEMA = StructType(
     [
-        StructField("url", StringType(), False),
+        StructField("url", StringType(), True),  # a null-url page is kept, not fatal
         StructField("text", StringType(), False),
         StructField("spans", ArrayType(SPAN_TYPE), False),
         StructField("title", StringType(), True),

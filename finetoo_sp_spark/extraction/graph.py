@@ -40,13 +40,18 @@ from pyspark.sql.types import (
 )
 
 from finetoo_sp_spark.extraction.extract import extract_pages
-from finetoo_sp_spark.extraction.kernel import blocks_batch, extract_links
+from finetoo_sp_spark.extraction.kernel import (
+    blocks_batch,
+    decode_html,
+    extract_anchors,
+    extract_links,
+)
 from finetoo_sp_spark.operators.primitives import PropertyGraphFrames
 from finetoo_sp_spark.schema.registry import web_graph_schema
 
 BLOCKS_SCHEMA = StructType(
     [
-        StructField("url", StringType(), False),
+        StructField("url", StringType(), True),  # a null-url page is kept, not fatal
         StructField("block_id", LongType(), False),
         StructField("tag", StringType(), True),
         StructField("text", StringType(), False),
@@ -84,8 +89,6 @@ def extract_link_pairs(pages: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not pdf.empty:
-                from finetoo_sp_spark.extraction.kernel import decode_html
-
                 yield extract_links(pdf["url"], decode_html(pdf["html"]))
 
     return pages.select("url", "html").mapInPandas(run, schema=LINKS_SCHEMA)
@@ -107,8 +110,6 @@ def extract_anchor_pairs(pages: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not pdf.empty:
-                from finetoo_sp_spark.extraction.kernel import decode_html, extract_anchors
-
                 yield extract_anchors(pdf["url"], decode_html(pdf["html"]))
 
     return pages.select("url", "html").mapInPandas(run, schema=ANCHORS_SCHEMA)

@@ -15,14 +15,19 @@ All functions are generic over (doc, name, content-hash) shaped frames so
 they serve both the web graph (blocks per page) and any relational table
 the driver checks against a SQL oracle.
 
-Scale: single shuffle per report (groupBy name); collect_set/sort_array
-keeps output deterministic regardless of partition order (the E3/E8
-determinism discipline).
+Scale: one hash shuffle per report (groupBy name) ahead of the final
+``orderBy`` range sort. The report is one aggregate, the version set;
+both distinct counts are read off it. Asking for ``countDistinct(doc)``
+and ``countDistinct(hash)`` beside it would make Catalyst plan two
+distinct aggregates over different columns as an ``Expand`` that copies
+every input row three times, then two more aggregate levels and a second
+hash shuffle. collect_set/sort_array keeps output deterministic
+regardless of partition order (the E3/E8 determinism discipline).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from finetoo_sp_spark.operators.primitives import PropertyGraphFrames
@@ -35,18 +40,27 @@ def divergence_report(
 
     Output: name, n_docs, n_versions, is_divergent,
     versions (sorted array of struct(doc, content_hash)).
+
+    ``versions`` is the one aggregate. ``n_docs`` and ``n_versions`` are
+    the distinct non-null docs and hashes in it, so nulls are ignored as
+    ``countDistinct`` ignores them, and both stay ``bigint``.
     """
+
+    def n_distinct(field: str) -> Column:
+        values = F.transform("versions", lambda v: v[field])
+        return F.size(F.array_distinct(F.filter(values, lambda x: x.isNotNull()))).cast("long")
+
     return (
         df.groupBy(F.col(name_col).alias("name"))
         .agg(
-            F.countDistinct(doc_col).alias("n_docs"),
-            F.countDistinct(hash_col).alias("n_versions"),
             F.sort_array(
                 F.collect_set(
                     F.struct(F.col(doc_col).alias("doc"), F.col(hash_col).alias("content_hash"))
                 )
             ).alias("versions"),
         )
+        .withColumn("n_docs", n_distinct("doc"))
+        .withColumn("n_versions", n_distinct("content_hash"))
         .withColumn("is_divergent", F.col("n_versions") > 1)
         .select("name", "n_docs", "n_versions", "is_divergent", "versions")
         .orderBy("name")

@@ -198,6 +198,22 @@ def test_null_first_html_still_decodes_with_replacement(spark):
     assert got == {"u1": "", "u2": f"caf\ufffd {words}"}
 
 
+def test_null_url_page_is_kept_not_fatal(spark):
+    """A page with a null url comes out as a row with a null url from both
+    extract_pages and extract_blocks; its valid neighbour is unchanged."""
+    from finetoo_sp_spark.extraction.graph import extract_blocks
+
+    html = bytearray(f"<h1>Title</h1><p>{' '.join(['word'] * 12)}</p>", "utf8")
+    both = spark.createDataFrame([(None, html), ("u1", html)], "url string, html binary").coalesce(1)
+    alone = spark.createDataFrame([("u1", html)], "url string, html binary")
+    for extract in (extract_pages, extract_blocks):
+        got = extract(both).collect()
+        want = extract(alone).collect()
+        assert want and [r for r in got if r.url == "u1"] == want
+        nulls = [r for r in got if r.url is None]
+        assert nulls and [r.asDict() | {"url": "u1"} for r in nulls] == [r.asDict() for r in want]
+
+
 def test_bucket_repartition_only_in_place_buckets():
     """No repartition under finetoo_sp_spark is keyed on the bucket
     column (or a url_salt bucket id) except inside place_buckets: a

@@ -2,9 +2,12 @@
 builder and divergence analytics — the reference's operator inventory
 (SURVEY.md §2) over the web graph built from the synthetic corpus."""
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from finetoo_sp_spark.datagen import gen_pages
 from finetoo_sp_spark.extraction.graph import build_web_graph
@@ -171,23 +174,59 @@ def test_plan_match_traverse(graph):
 
 
 # --- divergence / BOM --------------------------------------------------------
-def test_divergence_report(spark):
-    df = spark.createDataFrame(
+def _divergence_rows(spark):
+    return spark.createDataFrame(
         [
             ("d1", "blockA", "h1"), ("d2", "blockA", "h1"),  # consistent
+            ("d1", "blockA", "h1"),  # duplicated (doc, hash)
             ("d1", "blockB", "h2"), ("d2", "blockB", "h3"),  # divergent
             ("d1", "blockC", "h4"),
+            (None, "blockD", "h5"), ("d1", "blockD", "h5"),  # null doc
+            ("d2", "blockE", None), ("d1", "blockE", "h6"),  # null hash
+            (None, "blockF", None),  # only (null, null)
+            ("d3", None, "h7"),  # null name
         ],
-        ["doc", "name", "hash"],
+        "doc string, name string, hash string",
     )
+
+
+def test_divergence_report(spark):
+    """Counts follow countDistinct's null rules: null docs and hashes are
+    not counted, but their rows still land in ``versions``."""
+    df = _divergence_rows(spark)
     rep = divergence_report(df, "name", "doc", "hash")
-    rows = {r.name: r for r in rep.collect()}
-    assert not rows["blockA"].is_divergent
-    assert rows["blockB"].is_divergent and rows["blockB"].n_versions == 2
+    assert rep.columns == ["name", "n_docs", "n_versions", "is_divergent", "versions"]
+    assert {rep.schema[c].dataType for c in ("n_docs", "n_versions")} == {LongType()}
+    got = {
+        r.name: (r.n_docs, r.n_versions, r.is_divergent, [tuple(v) for v in r.versions])
+        for r in rep.collect()
+    }
+    assert got == {
+        "blockA": (2, 1, False, [("d1", "h1"), ("d2", "h1")]),
+        "blockB": (2, 2, True, [("d1", "h2"), ("d2", "h3")]),
+        "blockC": (1, 1, False, [("d1", "h4")]),
+        "blockD": (1, 1, False, [(None, "h5"), ("d1", "h5")]),
+        "blockE": (2, 1, False, [("d1", "h6"), ("d2", None)]),
+        "blockF": (0, 0, False, [(None, None)]),
+        None: (1, 1, False, [("d3", "h7")]),
+    }
     tot = divergence_totals(rep).collect()[0]
-    assert (tot.total_names, tot.divergent, tot.consistent) == (3, 1, 2)
+    assert (tot.total_names, tot.divergent, tot.consistent) == (7, 1, 6)
     shared = {r.name for r in shared_names(df, "name", "doc").collect()}
-    assert shared == {"blockA", "blockB"}
+    assert shared == {"blockA", "blockB", "blockE"}
+
+    empty = divergence_report(df.limit(0), "name", "doc", "hash")
+    assert empty.schema == rep.schema
+    assert empty.collect() == []
+
+
+def test_divergence_report_plan_has_no_expand(spark):
+    """One aggregate: no row-multiplying Expand (which two distinct
+    aggregates over different columns would plan) and one hash shuffle."""
+    rep = divergence_report(_divergence_rows(spark), "name", "doc", "hash")
+    plan = rep._jdf.queryExecution().executedPlan().toString()
+    assert "Expand" not in plan
+    assert len(re.findall(r"Exchange hashpartitioning\(name#", plan)) == 1
 
 
 def test_bom_report(graph):

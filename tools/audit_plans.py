@@ -365,6 +365,20 @@ CHECKS = {
         ("pair diff is an equi-join", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
         ("NO cartesian product", r"!CartesianProduct"),
     ],
+    "block_divergence": [
+        ("no row-multiplying Expand", r"!Expand"),
+        ("partial ObjectHashAggregate (map-side collect_set)", r"partial_collect_set"),
+        ("no sort-based aggregate", r"!SortAggregate"),
+        ("hash shuffle on name", r"hashpartitioning\(name#"),
+        ("only one hash shuffle", r"!hashpartitioning[\s\S]*hashpartitioning"),
+    ],
+    "divergence_totals": [
+        ("no row-multiplying Expand", r"!Expand"),
+        ("partial ObjectHashAggregate (map-side collect_set)", r"partial_collect_set"),
+        ("no sort-based aggregate", r"!SortAggregate"),
+        ("hash shuffle on name", r"hashpartitioning\(name#"),
+        ("only one hash shuffle", r"!hashpartitioning[\s\S]*hashpartitioning"),
+    ],
     "pdf_layout_extract": [
         ("both branches arrow-batched", r"MapInPandas"),
         ("union of routed branches", r"Union"),
