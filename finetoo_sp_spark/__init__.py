@@ -35,6 +35,51 @@ extraction engine) as an idiomatic Spark pipeline:
 Everything is DataFrame/SQL-first: Catalyst owns predicate pushdown, column
 pruning and join strategy; Python appears only inside Arrow-batched pandas
 UDFs (never row-at-a-time).
+
+Importing the package also makes zip imports re-read an archive only when it
+changed (CPython < 3.12). A PySpark worker calls
+``importlib.invalidate_caches()`` at the start of every task, and before
+3.12 each ``zipimporter`` then re-parses its archive's whole central
+directory in pure Python. A worker holds ~15 of them (``pyspark.zip`` and its
+sub-packages, py4j, and the ``spark-core`` jar that Spark puts on the worker
+``PYTHONPATH``): ~130 ms of CPU per task, whatever the UDF does. Every worker
+that runs one of this package's UDFs imports the package while unpickling it,
+and workers are reused, so each importer's directory is re-read only when its
+archive's ``(inode, size, mtime)`` differs from what that importer last
+read. This relies on Spark never rewriting ``pyspark.zip``, py4j or its jars
+in place while an application runs; a file added with ``addPyFile`` is a new
+path and gets a new importer. CPython 3.12 made the re-read lazy
+(gh-103200), so on 3.12+ nothing is patched.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _install_zip_cache_guard() -> None:
+    import functools
+    import os
+    import zipimport
+
+    read = zipimport.zipimporter.invalidate_caches
+    if hasattr(read, "__wrapped__"):  # already installed
+        return
+
+    @functools.wraps(read)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:  # the original handles a missing archive
+            self._archive_key = None
+            return read(self)
+        key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        if getattr(self, "_archive_key", None) != key:
+            read(self)
+            self._archive_key = key
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+if sys.version_info < (3, 12):
+    _install_zip_cache_guard()

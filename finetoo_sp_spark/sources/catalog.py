@@ -80,7 +80,7 @@ def write_table(
     if partition_by:
         w = w.partitionBy(*partition_by)
     if mode == "overwrite_partitions":
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        w = w.option("partitionOverwriteMode", "dynamic")
         w.mode("overwrite").parquet(name_or_path)
     else:
         w.mode("overwrite" if mode == "replace" else mode).parquet(name_or_path)

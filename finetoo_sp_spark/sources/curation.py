@@ -81,11 +81,10 @@ def _write_bucketed(
     their data is untouched by the dynamic overwrite and their manifest
     rows must not be appended twice."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     data_path = os.path.join(out_dir, "data")
-    place_buckets(df, n_buckets).write.mode("overwrite").partitionBy("bucket").parquet(
-        data_path
-    )
+    place_buckets(df, n_buckets).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(data_path)
     # explicit schema: the read-back runs no schema-inference job
     schema = StructType([df.schema[c] for c in key_cols] + [BUCKET_FIELD])
     written = spark.read.schema(schema).parquet(data_path)

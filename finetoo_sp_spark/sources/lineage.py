@@ -170,13 +170,14 @@ def write_with_manifests(
     """
     spark = result.sparkSession
     data_path = os.path.join(out_dir, "data")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     result = result.withColumn("row_hash", _row_hash(hash_mode)).withColumn(
         "text_chars", F.length("text")
     )
     if n_buckets:
         result = place_buckets(result, n_buckets)
-    result.write.mode("overwrite").partitionBy("bucket").parquet(data_path)
+    result.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(data_path)
 
     if verify_content:
         written = (

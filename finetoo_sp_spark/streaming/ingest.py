@@ -85,11 +85,10 @@ def run_stream_once(
         # micro-batch overwrites exactly its own partitions — idempotent
         # under at-least-once delivery, so output bytes never duplicate.
         s = batch_df.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         bdf = batch_df.withColumn("batch_id", F.lit(batch_id))
-        place_buckets(bdf, n_buckets).write.mode("overwrite").partitionBy(
-            "batch_id", "bucket"
-        ).parquet(data_path)
+        place_buckets(bdf, n_buckets).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id", "bucket").parquet(data_path)
         manifest = (
             s.read.parquet(data_path)
             .filter(F.col("batch_id") == batch_id)
@@ -100,9 +99,9 @@ def run_stream_once(
                 F.lit("committed").alias("status"),
             )
         )
-        manifest.repartition(4).write.mode("overwrite").partitionBy(
-            "batch_id"
-        ).parquet(manifest_path)
+        manifest.repartition(4).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(manifest_path)
 
     q = (
         extracted.writeStream.foreachBatch(sink)

@@ -131,6 +131,19 @@ def test_fresh_commit_job_count(spark, pages, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
+def test_commit_leaves_session_in_static_overwrite(spark, pages, tmp_path):
+    """The commit's dynamic partition overwrite is a per-write option: after
+    it, a plain partitioned overwrite still replaces the whole table."""
+    run_resumable_extraction(pages, str(tmp_path / "out"), n_buckets=8)
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper() == "STATIC"
+
+    table = str(tmp_path / "table")
+    ab = spark.createDataFrame([("a", 1), ("b", 2)], "p string, v int")
+    ab.write.mode("overwrite").partitionBy("p").parquet(table)
+    ab.filter("p = 'a'").write.mode("overwrite").partitionBy("p").parquet(table)
+    assert [r.p for r in spark.read.parquet(table).collect()] == ["a"]
+
+
 @pytest.mark.parametrize("n", [8, 32, 256])
 def test_place_buckets_is_exact(spark, n):
     """Bucket b lands in partition b * P // n, P = min(n, cores): every
