@@ -582,65 +582,6 @@ def decode_webp(data: bytes) -> np.ndarray:
 # ---------------------------------------------------------------- encode
 
 
-def _flat_lengths(alphabet: int, used: set[int]) -> list[int]:
-    """A COMPLETE canonical code over the whole alphabet (decoders
-    reject incomplete codes): with L = ceil(log2 n), 2^L - n symbols at
-    length L-1 and the rest at L. Deterministic and valid; compression
-    is irrelevant for fixtures."""
-    n = alphabet
-    if n == 1:
-        return [1]
-    length = max(1, (n - 1).bit_length())
-    m = (1 << length) - n  # symbols promoted to length-1
-    return [length - 1 if i < m and length > 1 else length for i in range(n)]
-
-
-def _write_code(bw: _LsbWriter, lengths: list[int], used: list[int]) -> None:
-    """Emit a prefix code: simple form for <=2 used symbols, else the
-    normal form with the code-length code (no repeats — fixtures are
-    small and the decoder's repeat path is covered by 17/18 zeros? no:
-    plain literals only, bounded-symbol flag off)."""
-    if len(used) == 1 and used[0] < 256:
-        bw.write(1, 1)  # simple
-        bw.write(0, 1)  # one symbol
-        if used[0] < 2:
-            bw.write(0, 1)  # 1-bit first symbol
-            bw.write(used[0], 1)
-        else:
-            bw.write(1, 1)  # 8-bit first symbol
-            bw.write(used[0], 8)
-        return
-    if len(used) == 2 and used[0] < 256 and used[1] < 256 and used[0] < 2:
-        bw.write(1, 1)
-        bw.write(1, 1)  # two symbols
-        bw.write(0, 1)  # first symbol in 1 bit
-        bw.write(used[0], 1)
-        bw.write(used[1], 8)
-        return
-    # normal form: code lengths in {L-1, L}; transmit them literally
-    bw.write(0, 1)
-    distinct = sorted(set(lengths))
-    # code-length code: give each distinct length a 1- or 2-bit code
-    cl_lengths = [0] * 19
-    if len(distinct) == 1:
-        cl_lengths[distinct[0]] = 1  # single-symbol CL code reads 0 bits
-    else:
-        for d in distinct:
-            cl_lengths[d] = 1 if len(distinct) == 2 else 2
-        if len(distinct) > 4:
-            raise ValueError("flat code should have <= 2 distinct lengths")
-    need = max(_CL_ORDER.index(d) for d in distinct) + 1
-    num_cl = max(need, 4)
-    bw.write(num_cl - 4, 4)
-    for i in range(num_cl):
-        bw.write(cl_lengths[_CL_ORDER[i]], 3)
-    bw.write(0, 1)  # no bounded-symbol-count trick
-    cl_codes = _canonical_codes(cl_lengths)
-    for ln in lengths:
-        code, n = cl_codes[ln]
-        bw.write(code, n)
-
-
 def _emit_entropy_image(
     bw: _LsbWriter,
     argb: np.ndarray,

@@ -953,7 +953,7 @@ def q_http_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write(batches):
         import datetime as _dt
 
-        from finetoo_sp_spark.sources.warc import _CRLF
+        from finetoo_sp_spark.sources.warc import warc_record
 
         cases = [
             (["noindex"], ""),
@@ -974,20 +974,8 @@ def q_http_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 url = f"https://{r.source}.example.com/doc/{i}"
                 urls.append(url)
                 body = f"<html><head>{meta}</head><body>page {i}</body></html>".encode()
-                hdr_lines = [b"HTTP/1.1 200 OK", b"Content-Type: text/html"]
-                for tok in xr:
-                    hdr_lines.append(f"X-Robots-Tag: {tok}".encode())
-                hdr_lines.append(f"Content-Length: {len(body)}".encode())
-                http = _CRLF.join(hdr_lines) + _CRLF + _CRLF + body
-                warc = (
-                    b"WARC/1.0" + _CRLF
-                    + b"WARC-Type: response" + _CRLF
-                    + f"WARC-Target-URI: {url}".encode() + _CRLF
-                    + b"WARC-Date: 2024-01-01T00:00:00Z" + _CRLF
-                    + f"Content-Length: {len(http)}".encode() + _CRLF
-                    + _CRLF + http + _CRLF + _CRLF
-                )
-                buf.append(warc)
+                headers = ["Content-Type: text/html", *(f"X-Robots-Tag: {tok}" for tok in xr)]
+                buf.append(warc_record("response", url, _dt.datetime(2024, 1, 1), headers, body))
             name = _hl.sha256(str(sorted(urls)).encode()).hexdigest()[:16]
             with open(_os.path.join(out, f"{name}.warc"), "wb") as f:
                 f.write(b"".join(buf))

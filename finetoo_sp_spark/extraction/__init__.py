@@ -8,7 +8,7 @@ part-vs-annotation region classification): HTML tokenize -> DOM region
 main text + span offsets + typed schema fields.
 """
 
-from finetoo_sp_spark.extraction.kernel import extract_batch, tokenize_batch
+from finetoo_sp_spark.extraction.kernel import extract_batch
 from finetoo_sp_spark.extraction.extract import extract_pages, EXTRACT_SCHEMA
 
-__all__ = ["extract_batch", "tokenize_batch", "extract_pages", "EXTRACT_SCHEMA"]
+__all__ = ["extract_batch", "extract_pages", "EXTRACT_SCHEMA"]

@@ -106,20 +106,6 @@ def _norm_arrow(arr: pa.Array) -> pa.Array:
     return pc.utf8_trim_whitespace(arr)
 
 
-def _seg_cumsum(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Cumulative sum restarting at each segment start.
-
-    ``offsets``: segment start indices (len = n_segments + 1, last = n).
-    """
-    if len(x) == 0:
-        return x
-    c = np.cumsum(x)
-    starts = offsets[:-1]
-    base = np.where(starts > 0, c[np.maximum(starts, 1) - 1], 0)
-    counts = np.diff(offsets)
-    return c - np.repeat(base, counts)
-
-
 def _seg_cumsum_multi(rows: list[np.ndarray], offsets: np.ndarray, doc: np.ndarray) -> list[np.ndarray]:
     """Segmented cumsum of several same-length arrays.
 
@@ -179,24 +165,6 @@ class TokenFrame:
         self.in_excluded = in_excluded
         self.block_id = block_id
         self.block_tag = block_tag
-
-    def to_pandas(self) -> pd.DataFrame:
-        """Test/debug view with the historical column layout."""
-        return pd.DataFrame(
-            {
-                "doc": self.doc,
-                "tok": pd.array(self.tok, dtype=pd.ArrowDtype(_STR)),
-                "start": self.start,
-                "end": self.end,
-                "is_tag": self.is_tag,
-                "tag": pd.array(self.tag, dtype=pd.ArrowDtype(_STR)),
-                "is_close": self.is_close,
-                "block_id": self.block_id,
-                "in_link": self.in_link,
-                "in_excluded": self.in_excluded,
-                "block_tag": pd.array(self.block_tag, dtype=pd.ArrowDtype(_STR)),
-            }
-        )
 
 
 def _isin_mask(arr: pa.Array, values: frozenset) -> np.ndarray:
@@ -264,11 +232,6 @@ def tokenize_arrays(html_text: pd.Series) -> TokenFrame:
     )
 
 
-def tokenize_batch(html_text: pd.Series) -> pd.DataFrame:
-    """Historical DataFrame view of :func:`tokenize_arrays` (tests)."""
-    return tokenize_arrays(html_text.reset_index(drop=True)).to_pandas()
-
-
 class BlockFrame:
     """One row per non-empty text block: columnar arrays."""
 
@@ -281,26 +244,6 @@ class BlockFrame:
     def __init__(self, **kw):
         for k in self.__slots__:
             setattr(self, k, kw[k])
-
-    def to_pandas(self) -> pd.DataFrame:
-        bt = self.block_tag.to_pandas() if isinstance(self.block_tag, pa.Array) else self.block_tag
-        tx = self.text.to_pandas() if isinstance(self.text, pa.Array) else self.text
-        return pd.DataFrame(
-            {
-                "doc": self.doc,
-                "block_id": self.block_id,
-                "block_tag": bt,
-                "text": tx,
-                "n_chars": self.n_chars,
-                "link_chars": self.link_chars,
-                "n_words": self.n_words,
-                "link_density": self.link_density,
-                "is_heading": self.is_heading,
-                "is_content": self.is_content,
-                "span_start": self.span_start,
-                "span_end": self.span_end,
-            }
-        )
 
 
 _EMPTY_BLOCKS = dict(
@@ -379,29 +322,6 @@ def classify_arrays(tf: TokenFrame) -> BlockFrame:
         n_chars=n_chars, link_chars=link_chars, n_words=n_words,
         link_density=link_density, is_heading=is_heading,
         is_content=is_content, span_start=span_start, span_end=span_end,
-    )
-
-
-def classify_blocks(tf) -> pd.DataFrame:
-    """Historical API: token DataFrame (or TokenFrame) -> block DataFrame."""
-    if isinstance(tf, pd.DataFrame):
-        tf = _token_frame_from_pandas(tf)
-    return classify_arrays(tf).to_pandas()
-
-
-def _token_frame_from_pandas(df: pd.DataFrame) -> TokenFrame:
-    doc = df["doc"].to_numpy(dtype=np.int64)
-    n_docs = int(doc.max()) + 1 if len(doc) else 0
-    counts = np.bincount(doc, minlength=n_docs)
-    offsets = np.concatenate(([0], np.cumsum(counts)))
-    to_arrow = lambda s: pa.array(s.astype(object), type=_STR, from_pandas=True)
-    return TokenFrame(
-        n_docs, offsets, doc, to_arrow(df["tok"]),
-        df["start"].to_numpy(np.int64), df["end"].to_numpy(np.int64),
-        df["is_tag"].to_numpy(bool), df["is_close"].to_numpy(bool),
-        to_arrow(df["tag"]), df["in_link"].to_numpy(bool),
-        df["in_excluded"].to_numpy(bool), df["block_id"].to_numpy(np.int64),
-        to_arrow(df["block_tag"]),
     )
 
 

@@ -90,8 +90,3 @@ def pii_scan(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         "redacted",
     )
 
-
-def with_redacted(df: DataFrame, text_col: str, out_col: str = "text_redacted") -> DataFrame:
-    """withColumn form for stream/pipeline composition (no self-join —
-    the streaming-safe pattern from streaming/ingest.py)."""
-    return df.withColumn(out_col, redacted_col(F.col(text_col)))

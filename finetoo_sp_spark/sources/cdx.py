@@ -25,51 +25,32 @@ split / reverse / sha2), so the Python kernel only finds member bounds
 and parses headers. LOOKUPS then never scan: filter on surt_key ranges
 (the index is written sorted, so parquet zone maps prune), join to the
 archive bytes, slice-decompress one member.
+
+Tolerance contract (the same as sources/warc.py): a damaged gzip member
+costs only itself, and nothing raises. Member bounds come from the WARC
+layer's one member iterator, which keeps only intact members; a member
+that does not decode to a record or to UTF-8 text is skipped, and its
+neighbours keep their rows.
 """
 
 from __future__ import annotations
 
 import gzip
+import hashlib
 import io
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from finetoo_sp_spark.sources.warc import parse_warc
-
-_CHUNK = 1 << 16
+from finetoo_sp_spark.sources.warc import gzip_members, parse_warc, scan_archives
 
 
 def gzip_member_spans(data: bytes) -> list[tuple[int, int]]:
-    """(offset, length) of every complete gzip member in ``data``.
-
-    RFC 1952 members are self-delimiting: a streaming inflate reaches
-    end-of-member at the trailer, and whatever it did not consume is
-    the next member. One pass, O(len(data)); a truncated or corrupt
-    tail yields the members before it (tolerant, like parse_warc)."""
-    spans: list[tuple[int, int]] = []
-    pos, n = 0, len(data)
-    while pos < n:
-        if data[pos : pos + 2] != b"\x1f\x8b":
-            break
-        d = zlib.decompressobj(wbits=31)
-        cur = pos
-        try:
-            while not d.eof and cur < n:
-                d.decompress(data[cur : cur + _CHUNK])
-                cur += _CHUNK
-        except zlib.error:
-            break
-        if not d.eof:
-            break
-        end = min(cur, n) - len(d.unused_data)
-        spans.append((pos, end - pos))
-        pos = end
-    return spans
+    """(offset, length) of every intact gzip member in ``data`` (see
+    warc.gzip_members): one streaming pass, O(len(data)); a truncated,
+    corrupt or garbage stretch costs only itself."""
+    return [(off, ln) for off, ln, _ in gzip_members(data)]
 
 
 def fetch_warc_record(data: bytes, offset: int, length: int):
@@ -79,7 +60,7 @@ def fetch_warc_record(data: bytes, offset: int, length: int):
     of the cdx contract, and what proves an index entry's offsets."""
     try:
         raw = gzip.decompress(bytes(data[offset : offset + length]))
-    except OSError:
+    except (OSError, EOFError, zlib.error):
         return None
     recs = parse_warc(raw)
     return recs[0] if recs else None
@@ -130,30 +111,17 @@ def read_cdx_entries(spark: SparkSession, path: str) -> DataFrame:
     slice — the scan that builds the index simultaneously exercises the
     random-access path it promises, so a wrong offset cannot produce a
     right payload."""
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                name = str(p).rsplit("/", 1)[-1]
-                data = bytes(blob)
-                for seq, (off, ln) in enumerate(gzip_member_spans(data)):
-                    rec = fetch_warc_record(data, off, ln)
-                    if rec is None:
-                        continue
-                    url, ts, payload = rec
-                    rows.append((name, off, ln, seq, url, ts, payload))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "filename", "offset", "length", "rec_seq",
-                        "url", "warc_ts", "html",
-                    ],
-                )
+    def rows(p: str, data: bytes) -> list[tuple]:
+        name = p.rsplit("/", 1)[-1]
+        out = []
+        for seq, (off, ln) in enumerate(gzip_member_spans(data)):
+            rec = fetch_warc_record(data, off, ln)
+            if rec is not None:
+                out.append((name, off, ln, seq, *rec))
+        return out
 
-    return files.mapInPandas(run, schema=CDX_ENTRY_SCHEMA)
+    return scan_archives(spark, path, rows, CDX_ENTRY_SCHEMA)
 
 
 ZIPNUM_BLOCK_SCHEMA = (
@@ -202,43 +170,28 @@ def read_zipnum_blocks(spark: SparkSession, path: str) -> DataFrame:
     block_no, offset, length, n_lines, first_key, last_key, block_sha).
     Each block is decoded from its OWN member slice (fetch path =
     verification path, as in read_cdx_entries); block_sha is sha256 of
-    the decompressed block text, so the packing is value-checkable."""
-    import hashlib
+    the decompressed block text, so the packing is value-checkable. A
+    block that is not UTF-8 text is skipped like an undecodable one."""
 
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
+    def rows(p: str, data: bytes) -> list[tuple]:
+        name = p.rsplit("/", 1)[-1]
+        out = []
+        for bno, (off, ln) in enumerate(gzip_member_spans(data)):
+            try:
+                raw = gzip.decompress(data[off : off + ln])
+                lines = raw.decode("utf-8").splitlines()
+            except (OSError, UnicodeDecodeError):
+                continue
+            if lines:
+                out.append((
+                    name, bno, off, ln, len(lines),
+                    lines[0].split(" ", 1)[0],
+                    lines[-1].split(" ", 1)[0],
+                    hashlib.sha256(raw).hexdigest(),
+                ))
+        return out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                name = str(p).rsplit("/", 1)[-1]
-                data = bytes(blob)
-                for bno, (off, ln) in enumerate(gzip_member_spans(data)):
-                    try:
-                        raw = gzip.decompress(data[off : off + ln])
-                    except OSError:
-                        continue
-                    lines = raw.decode("utf-8").splitlines()
-                    if not lines:
-                        continue
-                    rows.append(
-                        (
-                            name, bno, off, ln, len(lines),
-                            lines[0].split(" ", 1)[0],
-                            lines[-1].split(" ", 1)[0],
-                            hashlib.sha256(raw).hexdigest(),
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "filename", "block_no", "offset", "length",
-                        "n_lines", "first_key", "last_key", "block_sha",
-                    ],
-                )
-
-    return files.mapInPandas(run, schema=ZIPNUM_BLOCK_SCHEMA)
+    return scan_archives(spark, path, rows, ZIPNUM_BLOCK_SCHEMA)
 
 
 def build_cdx(spark: SparkSession, path: str) -> DataFrame:

@@ -104,7 +104,10 @@ def test_dechunk_chunk_extension_and_trailers():
 
 @pytest.mark.parametrize(
     "bad",
-    [b"zz\r\nhello\r\n0\r\n\r\n", b"5\r\nhel", b"5\r\nhelloXX0\r\n\r\n", b""],
+    [
+        b"zz\r\nhello\r\n0\r\n\r\n", b"5\r\nhel", b"5\r\nhelloXX0\r\n\r\n", b"",
+        b"1\r\nA\r\n-6\r\n",  # negative size: must not rewind onto itself
+    ],
 )
 def test_dechunk_malformed_returns_none(bad):
     assert _dechunk(bad) is None
@@ -116,6 +119,16 @@ def test_decode_body_layering_order():
     assert _decode_http_body(wire, "chunked", "gzip") == payload
     # tolerant: claimed-gzip that isn't decodes to itself
     assert _decode_http_body(b"plain", "", "gzip") == b"plain"
+
+
+def test_decode_body_cut_gzip_passes_through_raw():
+    from finetoo_sp_spark.sources.warc import warc_record
+
+    wire = gzip.compress(b"<p>page</p>" * 50, mtime=0)
+    for cut in (wire[:-10], wire[: len(wire) // 2]):
+        assert _decode_http_body(cut, "", "gzip") == cut
+        rec = warc_record("response", "https://x/1", TS, ["Content-Encoding: gzip"], cut)
+        assert parse_warc(rec) == [("https://x/1", TS, cut)]
 
 
 def test_make_warc_transfer_all_modes_roundtrip():
@@ -222,3 +235,21 @@ def test_read_cdx_entries_and_build_cdx(spark, tmp_path):
     assert "com,example,h9)/p?a=1&z=2" in keys
     assert all(len(r.digest) == 64 for r in cdx)
     assert cdx[0].ts14.isdigit() and len(cdx[0].ts14) == 14
+
+
+def test_read_zipnum_blocks_skips_non_utf8_block(spark, tmp_path):
+    lines = _zipnum_lines(25)
+    blob, cluster = pack_zipnum(lines, block_size=10)
+    bad = gzip.compress(b"com,bad)/ \xff\xfe not utf-8\n", mtime=0)
+    mid = cluster[1][2]
+    for name, data in (("clean", blob), ("dirty", blob[:mid] + bad + blob[mid:])):
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "part-0.zipnum.gz").write_bytes(data)
+    clean, dirty = (
+        read_zipnum_blocks(spark, str(tmp_path / name)).orderBy("block_no").collect()
+        for name in ("clean", "dirty")
+    )
+    assert [r.block_no for r in dirty] == [0, 2, 3]  # the bad block 1 is skipped
+    assert dirty[0] == clean[0]
+    cols = ["length", "n_lines", "first_key", "last_key", "block_sha"]
+    assert [[r[c] for c in cols] for r in dirty] == [[r[c] for c in cols] for r in clean]

@@ -220,3 +220,117 @@ def test_kernels_survive_hostile_bytes_in_spark(spark):
     assert [r for r in mixed if r[1] >= 1000] == clean
     # ... and every kernel really decoded something valid
     assert {r[0] for r in clean} == {name for name, _ in _KERNELS}
+
+
+# ------------------------------------------------------ WARC/CDX readers
+#
+# The archive readers share one scan that catches nothing, so the
+# tolerance lives in the member iterator and the record walker: damaged
+# archives in the same directory must not fail the job, and the intact
+# archives' rows must not change.
+
+
+def _archives(tag: str) -> dict[str, bytes]:
+    """One archive of each kind the readers take; urls are on host
+    ``{tag}.example`` and file names start with ``{tag}-``."""
+    import datetime as dt
+
+    from finetoo_sp_spark.sources.cdx import pack_zipnum
+    from finetoo_sp_spark.sources.warc import (
+        make_warc,
+        make_warc_http,
+        make_warc_mixed,
+        make_warc_transfer,
+        warc_record,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    pages = [
+        (f"https://{tag}.example/p/{i}", t0 + dt.timedelta(seconds=i), f"<p>page {i} é</p>".encode() * (i + 1))
+        for i in range(5)
+    ]
+    mixed = [("response", *p) for p in pages[:2]] + [
+        ("revisit", f"https://{tag}.example/r/{i}", t0, url, ts, f"sha256:{i:064x}")
+        for i, (url, ts, _) in enumerate(pages[:2])
+    ]
+    wet_wat = b"".join(
+        warc_record(kind, f"https://{tag}.example/{kind}/{i}", t0, [], f"{kind} {i}".encode(), gzip_member=True)
+        for kind in ("conversion", "metadata")
+        for i in range(3)
+    )
+    cdx_lines = [f"com,example,{tag})/p/{i:03d} 20240101000000 https://{tag}.example/p/{i}" for i in range(25)]
+    return {
+        f"{tag}-pages.warc.gz": make_warc(pages, gzip_members=True),
+        f"{tag}-http.warc": make_warc_http([(*p, "text/html; charset=utf-8") for p in pages]),
+        f"{tag}-mixed.warc.gz": make_warc_mixed(mixed, gzip_members=True),
+        f"{tag}-transfer.warc": make_warc_transfer(
+            [(*p, mode) for p, mode in zip(pages, ["plain", "chunked", "gzip", "chunked+gzip", "gzip"])]
+        ),
+        f"{tag}-wetwat.warc.gz": wet_wat,
+        f"{tag}-index.zipnum.gz": pack_zipnum(cdx_lines, block_size=10)[0],
+    }
+
+
+def _damaged_archives() -> dict[str, bytes]:
+    """Copies of ``_archives("bad")`` truncated at three offsets, with
+    one byte flipped at three offsets, and with a garbage tail; plus a
+    ZipNum part whose second block is not UTF-8."""
+    import gzip
+
+    from finetoo_sp_spark.sources.cdx import gzip_member_spans
+
+    out = {}
+    for name, blob in _archives("bad").items():
+        out[f"{name}.tail"] = blob + b"garbage!!"
+        for k in (1, 2, 3):
+            at = len(blob) * k // 4
+            out[f"{name}.cut{k}"] = blob[:at]
+            flipped = bytearray(blob)
+            flipped[at] ^= 0x55
+            out[f"{name}.flip{k}"] = bytes(flipped)
+    index = _archives("bad")["bad-index.zipnum.gz"]
+    mid = gzip_member_spans(index)[1][0]
+    out["bad-nonutf8.zipnum.gz"] = index[:mid] + gzip.compress(b"com,x)/ \xff\xfe\n", mtime=0) + index[mid:]
+    return out
+
+
+def _reader_rows(spark, path: str) -> list[tuple]:
+    from pyspark.sql import functions as F
+
+    from finetoo_sp_spark.sources import cdx, warc
+
+    readers = [
+        (warc.read_warc_pages, "url"),
+        (warc.read_wet_text, "url"),
+        (warc.read_wat_meta, "url"),
+        (warc.read_warc_pages_http, "url"),
+        (warc.read_warc_revisits, "url"),
+        (cdx.read_cdx_entries, "filename"),
+        (cdx.read_zipnum_blocks, "filename"),
+    ]
+    out = None
+    for reader, key in readers:
+        rows = reader(spark, path).select(
+            F.lit(reader.__name__).alias("reader"), F.col(key).alias("key"),
+            F.to_json(F.struct("*")).alias("row"),
+        )
+        out = rows if out is None else out.unionByName(rows)
+    return sorted(tuple(r) for r in out.collect())  # one job over all readers
+
+
+def test_warc_cdx_readers_survive_damaged_archives_in_spark(spark, tmp_path):
+    valid = _archives("ok")
+    for sub, files in (("mixed", {**valid, **_damaged_archives()}), ("valid", valid)):
+        (tmp_path / sub).mkdir()
+        for name, blob in files.items():
+            (tmp_path / sub / name).write_bytes(blob)
+    mixed = _reader_rows(spark, str(tmp_path / "mixed"))
+    clean = _reader_rows(spark, str(tmp_path / "valid"))
+    # damaged neighbours change nothing for the intact archives ...
+    assert [r for r in mixed if r[1].startswith(("ok-", "https://ok.example/"))] == clean
+    # ... every reader really read something, and so did the damaged set
+    assert {r[0] for r in clean} == {
+        "read_warc_pages", "read_wet_text", "read_wat_meta", "read_warc_pages_http",
+        "read_warc_revisits", "read_cdx_entries", "read_zipnum_blocks",
+    }
+    assert {r[0] for r in mixed if r[1].startswith(("bad-", "https://bad.example/"))} == {r[0] for r in clean}

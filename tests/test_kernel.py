@@ -11,9 +11,9 @@ import pytest
 
 from finetoo_sp_spark.extraction.kernel import (
     MIN_CONTENT_WORDS,
-    classify_blocks,
+    classify_arrays,
     extract_batch,
-    tokenize_batch,
+    tokenize_arrays,
 )
 
 LONG = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"  # 12 words
@@ -35,57 +35,61 @@ FIXTURE_HTML = (
 FIXTURE_EXPECTED = "Big Headline\n" + LONG + "\n" + LONG + " & more ref"
 
 
+def _tokens(html: str):
+    tf = tokenize_arrays(pd.Series([html]))
+    return tf, tf.tok.to_pylist()
+
+
+def _blocks(html: str) -> dict:
+    bf = classify_arrays(tokenize_arrays(pd.Series([html])))
+    return dict(zip(bf.text.to_pylist(), bf.is_content))
+
+
 def test_tokenizer_partitions_input():
-    html = pd.Series(["<p>hello <b>world</b></p>"])
-    tf = tokenize_batch(html)
+    html = "<p>hello <b>world</b></p>"
+    tf, toks = _tokens(html)
     # every char accounted for, offsets contiguous
-    assert "".join(tf["tok"]) == html[0]
-    assert tf["start"].iloc[0] == 0
-    assert (tf["end"] - tf["start"] == tf["tok"].str.len()).all()
-    assert (tf["start"].iloc[1:].to_numpy() == tf["end"].iloc[:-1].to_numpy()).all()
+    assert "".join(toks) == html
+    assert tf.start[0] == 0
+    assert (tf.end - tf.start == [len(t) for t in toks]).all()
+    assert (tf.start[1:] == tf.end[:-1]).all()
 
 
 def test_tokenizer_tags_and_links():
-    tf = tokenize_batch(pd.Series(['<p><a href="/x">link</a> plain</p>']))
-    link_tok = tf[tf["tok"] == "link"]
-    plain_tok = tf[tf["tok"] == " plain"]
-    assert bool(link_tok["in_link"].iloc[0])
-    assert not bool(plain_tok["in_link"].iloc[0])
+    tf, toks = _tokens('<p><a href="/x">link</a> plain</p>')
+    assert tf.in_link[toks.index("link")]
+    assert not tf.in_link[toks.index(" plain")]
 
 
 def test_script_region_excluded():
-    tf = tokenize_batch(pd.Series(["<script>var x=1;</script><p>keep</p>"]))
-    assert bool(tf[tf["tok"] == "var x=1;"]["in_excluded"].iloc[0])
-    assert not bool(tf[tf["tok"] == "keep"]["in_excluded"].iloc[0])
+    tf, toks = _tokens("<script>var x=1;</script><p>keep</p>")
+    assert tf.in_excluded[toks.index("var x=1;")]
+    assert not tf.in_excluded[toks.index("keep")]
 
 
 def test_comment_stripped():
-    tf = tokenize_batch(pd.Series(["<p>a<!-- hidden -->b</p>"]))
-    assert "".join(tf[~tf["is_tag"]]["tok"]) == "ab"
+    tf, toks = _tokens("<p>a<!-- hidden -->b</p>")
+    assert "".join(t for t, tag in zip(toks, tf.is_tag) if not tag) == "ab"
 
 
 def test_block_segmentation_cumsum():
-    tf = tokenize_batch(pd.Series(["<div>one</div><p>two</p>three"]))
-    txt = tf[~tf["is_tag"]]
-    assert txt["block_id"].nunique() == 3
+    tf, _ = _tokens("<div>one</div><p>two</p>three")
+    assert len(set(tf.block_id[~tf.is_tag])) == 3
 
 
 def test_classify_density():
-    html = pd.Series(
-        [f"<p>{LONG}</p>" '<p><a href="/a">all link text here</a></p>' "<p>short</p>"]
+    is_content = _blocks(
+        f"<p>{LONG}</p>" '<p><a href="/a">all link text here</a></p>' "<p>short</p>"
     )
-    blocks = classify_blocks(tokenize_batch(html))
-    by_text = {row.text: row for row in blocks.itertuples()}
-    assert by_text[LONG].is_content
-    assert not by_text["all link text here"].is_content  # link density 1.0
-    assert not by_text["short"].is_content  # < MIN_CONTENT_WORDS
+    assert is_content[LONG]
+    assert not is_content["all link text here"]  # link density 1.0
+    assert not is_content["short"]  # < MIN_CONTENT_WORDS
 
 
 def test_heading_rule():
-    blocks = classify_blocks(tokenize_batch(pd.Series(["<h2>Section</h2><h3><a href='/'>nav h</a></h3>"])))
-    by_text = {row.text: row for row in blocks.itertuples()}
-    assert by_text["Section"].is_content
-    assert not by_text["nav h"].is_content  # heading made of links
+    is_content = _blocks("<h2>Section</h2><h3><a href='/'>nav h</a></h3>")
+    assert is_content["Section"]
+    assert not is_content["nav h"]  # heading made of links
 
 
 def test_fixture_extraction_byte_identical():

@@ -23,7 +23,7 @@ from hypothesis import strategies as st
 from finetoo_sp_spark.extraction.kernel import (
     _COMMENT_RE,
     extract_batch,
-    tokenize_batch,
+    tokenize_arrays,
 )
 
 # HTML-ish soup: fragments of tags (well-formed and broken), entities,
@@ -45,13 +45,13 @@ _doc = st.lists(_frag, min_size=0, max_size=30).map("".join)
 @settings(max_examples=150, deadline=None)
 @given(_doc)
 def test_tokenizer_partitions_any_input(doc):
-    tf = tokenize_batch(pd.Series([doc]))
+    tf = tokenize_arrays(pd.Series([doc]))
     stripped = _COMMENT_RE.sub("", doc)
-    assert "".join(tf["tok"]) == stripped
-    if len(tf):
-        assert tf["start"].iloc[0] == 0
-        assert tf["end"].iloc[-1] == len(stripped)
-        assert (tf["end"].to_numpy()[:-1] == tf["start"].to_numpy()[1:]).all()
+    assert "".join(tf.tok.to_pylist()) == stripped
+    if len(tf.doc):
+        assert tf.start[0] == 0
+        assert tf.end[-1] == len(stripped)
+        assert (tf.end[:-1] == tf.start[1:]).all()
 
 
 @settings(max_examples=75, deadline=None)

@@ -178,3 +178,124 @@ def test_warc_record_content_type_uses_semicolon_parameter():
     )
     assert b"Content-Type: application/http;msgtype=response" in blob2
     assert b"http:msgtype" not in blob2
+
+
+# ------------------------------------------------------- damaged archives
+#
+# A damaged gzip member or record costs only itself, and nothing raises.
+# Each parser is checked on its own fixture: 3 records, one gzip member
+# each.
+
+T0 = dt.datetime(2024, 1, 1)
+
+
+def _damage_fixtures(gz: bool = True):
+    """(parser, expected records, archive) for the three public parsers."""
+    from finetoo_sp_spark.sources.warc import (
+        make_warc_mixed,
+        parse_warc_http,
+        parse_warc_revisits,
+    )
+
+    pages = [
+        (f"https://d.example/{i}", T0 + dt.timedelta(seconds=i), f"<p>payload number {i}</p>".encode())
+        for i in range(3)
+    ]
+    revisits = [
+        ("revisit", f"https://r.example/{i}", T0, f"https://o.example/{i}", T0, f"sha256:{i:064x}")
+        for i in range(3)
+    ]
+    blob = make_warc(pages, gzip_members=gz)
+    return [
+        (parse_warc, pages, blob),
+        (parse_warc_http, [(*p, "", "") for p in pages], blob),
+        (parse_warc_revisits, [r[1:] for r in revisits], make_warc_mixed(revisits, gzip_members=gz)),
+    ]
+
+
+def test_truncated_final_member_keeps_complete_members():
+    from finetoo_sp_spark.sources.cdx import gzip_member_spans
+
+    for parse, recs, blob in _damage_fixtures():
+        last = gzip_member_spans(blob)[-1][0]
+        for cut in (last + 1, last + 12, (last + len(blob)) // 2, len(blob) - 1):
+            assert parse(blob[:cut]) == recs[:2], (parse.__name__, cut)
+
+
+def test_garbage_tail_keeps_every_record():
+    for parse, recs, blob in _damage_fixtures():
+        assert parse(blob + b"garbage!!") == recs, parse.__name__
+
+
+def test_flipped_byte_costs_only_its_member():
+    from finetoo_sp_spark.sources.cdx import gzip_member_spans
+
+    for parse, recs, blob in _damage_fixtures():
+        off, ln = gzip_member_spans(blob)[1]
+        for i in range(off, off + ln):
+            bad = bytearray(blob)
+            bad[i] ^= 0x55
+            got = parse(bytes(bad))
+            assert recs[0] in got and recs[2] in got, (parse.__name__, i - off)
+            assert set(got) <= set(recs), (parse.__name__, i - off)
+
+
+def test_plain_archive_cut_mid_record_drops_the_short_record():
+    _, pages, blob = _damage_fixtures(gz=False)[0]
+    cut = blob.rindex(pages[2][2]) + len(b"<p>payload n")
+    assert parse_warc(blob[:cut]) == pages[:2]
+    # no cut point emits a record with fewer body bytes than its
+    # Content-Length: every output is a prefix of the whole archive's
+    for parse, recs, plain in _damage_fixtures(gz=False):
+        for cut in range(len(plain) + 1):
+            got = parse(plain[:cut])
+            assert got == recs[: len(got)], (parse.__name__, cut)
+
+
+def test_negative_content_length_is_skipped():
+    good = make_warc([("https://x/1", dt.datetime(2024, 1, 1), b"ok")])
+    bad = good.replace(b"Content-Length: ", b"Content-Length: -999", 1)
+    assert parse_warc(bad + good) == parse_warc(good)
+
+
+def test_gzip_members_have_zero_mtime():
+    from finetoo_sp_spark.sources.cdx import gzip_member_spans
+
+    for _parse, _recs, blob in _damage_fixtures():
+        spans = gzip_member_spans(blob)
+        assert len(spans) == 3
+        assert all(blob[off + 4 : off + 8] == b"\0\0\0\0" for off, _ in spans)
+
+
+def test_sources_have_one_record_walker_and_one_archive_scan():
+    """Within sources/, only the record walker searches for b"WARC/" and
+    only the archive scan calls format("binaryFile"): a private walker or
+    a hand-written binaryFile loop must not come back."""
+    import ast
+    from pathlib import Path
+
+    import finetoo_sp_spark.sources as pkg
+
+    def is_warc_search(n: ast.AST) -> bool:
+        return isinstance(n, ast.Constant) and isinstance(n.value, bytes) and n.value.startswith(b"WARC/")
+
+    def is_binary_file_scan(n: ast.AST) -> bool:
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "format"
+            and any(isinstance(a, ast.Constant) and a.value == "binaryFile" for a in n.args)
+        )
+
+    found = {is_warc_search: [], is_binary_file_scan: []}
+    for path in sorted(Path(pkg.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        funcs = [f for f in ast.walk(tree) if isinstance(f, (ast.FunctionDef, ast.Lambda))]
+        for n in ast.walk(tree):
+            for check, hits in found.items():
+                if check(n):
+                    owners = [f for f in funcs if f.lineno <= n.lineno <= f.end_lineno]
+                    inner = min(owners, key=lambda f: f.end_lineno - f.lineno, default=None)
+                    hits.append(f"{path.name}:{getattr(inner, 'name', '<module>')}")
+    assert found[is_warc_search] == ["warc.py:_records"]
+    assert found[is_binary_file_scan] == ["warc.py:scan_archives"]
