@@ -674,8 +674,6 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Content-Length binds each body, so multi-line text and embedded
     'WARC/' decoys survive byte-exactly; the oracle restates the
     expected rows from documents directly."""
-    import os as _os
-
     from finetoo_sp_spark.operators.sinks import write_wet
     from finetoo_sp_spark.sources.warc import read_wet_text
 
@@ -687,7 +685,7 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _tmp_out("wet_roundtrip")
     write_wet(d, path)
-    return read_wet_text(spark, _os.path.join(path, "*.txt"))
+    return read_wet_text(spark, path)  # the listing skips _SUCCESS and .crc
 
 
 @_q(
@@ -989,8 +987,6 @@ def q_wat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse_warc(metadata) and lifted with JVM get_json_object /
     json_array_length. The oracle restates title and link count from
     the template rule."""
-    import os as _os
-
     from finetoo_sp_spark.extraction.graph import extract_link_pairs
     from finetoo_sp_spark.operators.sinks import write_wat
     from finetoo_sp_spark.sources.warc import read_wat_meta
@@ -1002,7 +998,7 @@ def q_wat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _tmp_out("wat_roundtrip")
     write_wat(titles.join(links, "url"), path)
-    back = read_wat_meta(spark, _os.path.join(path, "*.txt"))
+    back = read_wat_meta(spark, path)
     meta = "$['Envelope']['Payload-Metadata']['HTTP-Response-Metadata']['HTML-Metadata']"
     return back.select(
         "url",

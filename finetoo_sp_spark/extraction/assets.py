@@ -29,12 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def svg_meta(
-    df: DataFrame, url_col: str = "url", svg_col: str = "body"
-) -> DataFrame:
+def svg_meta(df: DataFrame) -> DataFrame:
     """(url, width, height, vb_width, vb_height, text_chars) per SVG
-    document (module docstring). Non-SVG bodies yield no row."""
-    root = F.regexp_extract(F.col(svg_col), r"(?is)<svg\b[^>]*>", 0)
+    document in the ``body`` column (module docstring). Non-SVG bodies
+    yield no row."""
+    root = F.regexp_extract(F.col("body"), r"(?is)<svg\b[^>]*>", 0)
 
     def dim(name: str):
         # integer pixel values only; '42px' parses, '3em'/'50%' -> NULL
@@ -64,14 +63,14 @@ def svg_meta(
         F.lit(""),
     ).cast("long")
     texts = F.expr(
-        f"regexp_extract_all({svg_col}, '(?is)<(?:text|tspan|title)\\\\b[^>]*>([^<]*)<', 1)"
+        "regexp_extract_all(body, '(?is)<(?:text|tspan|title)\\\\b[^>]*>([^<]*)<', 1)"
     )
     text_chars = F.aggregate(
         texts, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
     )
     return (
         df.select(
-            F.col(url_col).alias("url"),
+            "url",
             root.alias("_r"),
             dim("width").alias("width"),
             dim("height").alias("height"),
@@ -84,9 +83,7 @@ def svg_meta(
     )
 
 
-def srcset_candidates(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def srcset_candidates(pages: DataFrame) -> DataFrame:
     """(url, img_idx, cand_idx, asset_url, descriptor, density_centi,
     width_px) per srcset candidate (module docstring). descriptor is
     'x' (density_centi = 100*density, integer), 'w' (width_px) or ''
@@ -94,10 +91,10 @@ def srcset_candidates(
     from finetoo_sp_spark.operators.urlnorm import resolve_refs
 
     sets = F.expr(
-        f"""regexp_extract_all(CAST({html_col} AS STRING),
+        """regexp_extract_all(CAST(html AS STRING),
             '(?is)srcset\\\\s*=\\\\s*["\\']([^"\\']+)["\\']', 1)"""
     )
-    e = pages.select(F.col(url_col).alias("url"), F.posexplode(sets).alias("img_idx", "_s"))
+    e = pages.select("url", F.posexplode(sets).alias("img_idx", "_s"))
     cands = F.transform(
         F.split(F.col("_s"), r"\s*,\s*"), lambda c: F.trim(c)
     )
@@ -133,20 +130,18 @@ def srcset_candidates(
     )
 
 
-def css_asset_urls(
-    sheets: DataFrame, url_col: str = "url", css_col: str = "body"
-) -> DataFrame:
+def css_asset_urls(sheets: DataFrame) -> DataFrame:
     """(url, ref_idx, asset_url, via) per external reference in a
-    stylesheet: via = 'url' for url(...) tokens, 'import' for bare
+    stylesheet (the ``body`` column): via = 'url' for url(...) tokens, 'import' for bare
     string @import forms. data: URIs are excluded (inline payloads)."""
     from finetoo_sp_spark.operators.urlnorm import resolve_refs
 
     urls = F.expr(
-        f"""regexp_extract_all({css_col},
+        """regexp_extract_all(body,
             'url\\\\(\\\\s*["\\']?([^"\\')\\\\s]+)["\\']?\\\\s*\\\\)', 1)"""
     )
     imports = F.expr(
-        f"""regexp_extract_all({css_col},
+        """regexp_extract_all(body,
             '@import\\\\s+["\\']([^"\\']+)["\\']', 1)"""
     )
     both = F.concat(
@@ -161,7 +156,7 @@ def css_asset_urls(
         ),
     )
     e = (
-        sheets.select(F.col(url_col).alias("url"), F.posexplode(both).alias("ref_idx", "_s"))
+        sheets.select("url", F.posexplode(both).alias("ref_idx", "_s"))
         .select("url", F.col("ref_idx").cast("long").alias("ref_idx"),
                 F.col("_s.r").alias("_ref"), F.col("_s.via").alias("via"))
     )
@@ -170,9 +165,7 @@ def css_asset_urls(
     )
 
 
-def link_icons(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def link_icons(pages: DataFrame) -> DataFrame:
     """(url, idx, icon_url, rel, size_w, size_h) per icon declaration —
     the favicon/touch-icon fetch frontier that feeds the ICO/PNG
     decoders: ``<link rel="icon|shortcut icon|apple-touch-icon">``
@@ -182,12 +175,10 @@ def link_icons(
     from finetoo_sp_spark.operators.urlnorm import resolve_refs
 
     tags = F.expr(
-        f"""regexp_extract_all(CAST({html_col} AS STRING),
+        """regexp_extract_all(CAST(html AS STRING),
             '(?is)<link\\\\s[^>]*>', 0)"""
     )
-    e = pages.select(
-        F.col(url_col).alias("url"), F.posexplode(tags).alias("_pos", "_t")
-    )
+    e = pages.select("url", F.posexplode(tags).alias("_pos", "_t"))
     rel = F.lower(
         F.regexp_extract("_t", r"""(?i)\brel\s*=\s*["']([^"']+)["']""", 1)
     )

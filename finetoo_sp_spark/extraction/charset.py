@@ -156,7 +156,6 @@ def sniff_decode_pandas(
 
 def decode_pages(
     pages: DataFrame,
-    html_col: str = "html",
     passthrough: Sequence[str] = ("url",),
     http_charset_col: str | None = None,
 ) -> DataFrame:
@@ -171,14 +170,14 @@ def decode_pages(
     schema_parts = [
         f"`{c}` {t}" for c, t in pages.select(*cols).dtypes
     ] + ["charset string", "charset_src string", "text string"]
-    sel = [*cols, html_col] + ([http_charset_col] if http_charset_col else [])
+    sel = [*cols, "html"] + ([http_charset_col] if http_charset_col else [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
             out = sniff_decode_pandas(
-                pdf[html_col],
+                pdf["html"],
                 pdf[http_charset_col] if http_charset_col else None,
             )
             yield pd.concat([pdf[cols], out], axis=1)

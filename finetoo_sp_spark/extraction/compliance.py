@@ -42,12 +42,12 @@ def _has_token(directives, token: str):
     return F.array_contains(toks, token)
 
 
-def with_compliance_cols(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def with_compliance_cols(pages: DataFrame) -> DataFrame:
     """``pages`` with (robots, noindex, nofollow, noai, license) columns
     APPENDED — the no-join form streaming composition needs (flags are
     plain expressions over the html column, never a self-join)."""
-    html = F.col(html_col)
-    if isinstance(pages.schema[html_col].dataType, BinaryType):
+    html = F.col("html")
+    if isinstance(pages.schema["html"].dataType, BinaryType):
         html = F.decode(html, "UTF-8")
     robots_sql = _ROBOTS_RE.replace("\\\\", "\\")
     license_sql = _LICENSE_RE.replace("\\\\", "\\")
@@ -62,33 +62,27 @@ def with_compliance_cols(pages: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def compliance_flags(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def compliance_flags(pages: DataFrame) -> DataFrame:
     """(url, robots, noindex, nofollow, noai, license) — robots is the
     raw directive string ('' when no robots meta), license the first
     rel=license href ('' when absent), flags are token-exact."""
-    return with_compliance_cols(pages, html_col).select(
-        F.col(url_col).alias("url"),
+    return with_compliance_cols(pages).select(
+        "url",
         "robots", "noindex", "nofollow", "noai", "license",
     )
 
 
-def with_http_compliance(
-    pages: DataFrame,
-    html_col: str = "html",
-    x_robots_col: str = "x_robots",
-) -> DataFrame:
+def with_http_compliance(pages: DataFrame) -> DataFrame:
     """with_compliance_cols PLUS the transport layer: X-Robots-Tag
-    directives (Google's documented header form of the robots meta —
-    real origins use it for non-HTML responses and CDN-level opt-outs)
-    merge with the in-document meta by OR: a page is noindex /
+    directives in the ``x_robots`` column (Google's documented header
+    form of the robots meta — real origins use it for non-HTML responses
+    and CDN-level opt-outs) merge with the in-document meta by OR: a page is noindex /
     nofollow / noai when EITHER layer says so. Adds ``src_http`` /
     ``src_meta`` booleans so corpus audits can attribute the gate.
     Token-exact matching on both layers (substring tests would confuse
     noai/noimageai). Still pure JVM column ops, no shuffle."""
-    d = with_compliance_cols(pages, html_col=html_col)
-    hdr = F.coalesce(F.col(x_robots_col), F.lit(""))
+    d = with_compliance_cols(pages)
+    hdr = F.coalesce(F.col("x_robots"), F.lit(""))
     h_noindex = _has_token(hdr, "noindex")
     h_nofollow = _has_token(hdr, "nofollow")
     h_noai = _has_token(hdr, "noai") | _has_token(hdr, "noimageai")

@@ -179,20 +179,18 @@ def dxf_version(text: str) -> str:
     return ""
 
 
-def dxf_records(
-    df: DataFrame, id_col: str = "url", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, section, block_name, entity_type, handle, layer, n_pairs)
-    — one row per parsed entity, one Arrow pass, no shuffle.
-    Undecodable payloads are skipped (corpus-kernel contract)."""
+def dxf_records(df: DataFrame, id_col: str = "url") -> DataFrame:
+    """(id, payload) -> (id, section, block_name, entity_type, handle,
+    layer, n_pairs) — one row per parsed entity, one Arrow pass, no
+    shuffle. Undecodable payloads are skipped (corpus-kernel contract)."""
     id_type = dict(df.dtypes)[id_col]
     schema = f"`{id_col}` {id_type}, {DXF_RECORD_FIELDS}"
-    sel = df.select(id_col, payload_col)
+    sel = df.select(id_col, "payload")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for rid, payload in zip(pdf[id_col], pdf["payload"]):
                 try:
                     text = bytes(payload).decode("ascii", "replace")
                     rec = parse_dxf_records(text)

@@ -54,10 +54,8 @@ EXTRACT_SCHEMA = StructType(
 )
 
 
-def url_salt(
-    n_buckets: int, url: Column | str = "url", hash_mode: str = "xxhash64"
-) -> Column:
-    """Deterministic bucket id: ``pmod(hash(url), n_buckets)``.
+def url_salt(n_buckets: int, hash_mode: str = "xxhash64") -> Column:
+    """Deterministic bucket id of the ``url`` column: ``pmod(hash(url), n_buckets)``.
 
     Used both for skew-defusing repartition and for lineage-manifest
     partitioning (resume granularity). ``hash_mode='sha'`` uses the
@@ -65,12 +63,9 @@ def url_salt(
     verification mode that lets the manifest table itself sit under a
     value oracle; production keeps xxhash64.
     """
-    c = F.col(url) if isinstance(url, str) else url
-    if hash_mode == "sha":
-        h = F.conv(F.substring(F.sha2(c, 256), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64(c)
-    return F.pmod(h, F.lit(n_buckets)).cast("int")
+    from finetoo_sp_spark.operators.dedup import _base_hash
+
+    return F.pmod(_base_hash(F.col("url"), hash_mode), F.lit(n_buckets)).cast("int")
 
 
 def _murmur3_int(k: int, seed: int = 42) -> int:

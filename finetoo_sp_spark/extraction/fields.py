@@ -88,16 +88,15 @@ def field_expr(rule: FieldRule, html_col: Column) -> Column:
 def map_fields(
     pages: DataFrame,
     rules: list[FieldRule] | None = None,
-    html_col: str = "html",
     keep: list[str] | None = None,
 ) -> DataFrame:
-    """pages -> (url, <one typed column per rule>). Pure Catalyst plan.
+    """pages(url, html) -> (url, <one typed column per rule>). Pure Catalyst plan.
     The decoded html is staged as a bound attribute so the N rules share
     ONE decode instead of embedding (and re-evaluating) the decode
     expression once per rule."""
     rules = rules if rules is not None else WEB_FIELD_RULES
     keep = keep or ["url"]
-    staged = pages.select(*keep, F.decode(F.col(html_col), "UTF-8").alias("_html"))
+    staged = pages.select(*keep, F.decode(F.col("html"), "UTF-8").alias("_html"))
     return staged.select(
         *keep, *[field_expr(r, F.col("_html")) for r in rules]
     )

@@ -29,20 +29,17 @@ _SCRIPT_RE = (
 
 
 def extract_jsonld(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    fields: dict[str, str] | None = None,
+    pages: DataFrame, fields: dict[str, str] | None = None
 ) -> DataFrame:
     """(url, blob_idx, jsonld [, <field>...]) — one row per JSON-LD blob
     in document order. ``fields`` maps output column name -> JSONPath
     (e.g. ``{"price": "$.price"}``); each is extracted with
     get_json_object (string-typed; cast downstream)."""
-    html = F.col(html_col)
-    if isinstance(pages.schema[html_col].dataType, BinaryType):
+    html = F.col("html")
+    if isinstance(pages.schema["html"].dataType, BinaryType):
         html = F.decode(html, "UTF-8")
 
-    blobs = pages.select(F.col(url_col).alias("url"), html.alias("_html")).select(
+    blobs = pages.select("url", html.alias("_html")).select(
         "url",
         F.posexplode(F.expr(f"regexp_extract_all(_html, '{_SCRIPT_RE}', 1)")).alias(
             "blob_idx", "jsonld"

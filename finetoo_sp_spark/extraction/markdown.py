@@ -90,7 +90,7 @@ def markdown_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
     )
 
 
-def extract_markdown(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_markdown(pages: DataFrame) -> DataFrame:
     """pages(url, html:binary, ...) -> (url, markdown,
     n_content_blocks). Same partition-parallel Arrow kernel shape as
     sources.extract_pages."""
@@ -99,8 +99,8 @@ def extract_markdown(pages: DataFrame, html_col: str = "html") -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            yield markdown_batch(pdf["url"], pdf[html_col])
+            yield markdown_batch(pdf["url"], pdf["html"])
 
-    return pages.select("url", html_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         run, schema="url string, markdown string, n_content_blocks long"
     )

@@ -27,26 +27,26 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType
 
 
-def _html_str(pages: DataFrame, html_col: str):
-    c = F.col(html_col)
-    if isinstance(pages.schema[html_col].dataType, BinaryType):
+def _html_str(pages: DataFrame):
+    c = F.col("html")
+    if isinstance(pages.schema["html"].dataType, BinaryType):
         c = c.cast("string")
     return c
 
 
-def _lift(pages: DataFrame, url_col: str, html_col: str, tag_re: str) -> DataFrame:
-    tags = F.expr(f"regexp_extract_all({html_col}_str, '{tag_re}', 0)")
+def _lift(pages: DataFrame, tag_re: str) -> DataFrame:
+    tags = F.expr(f"regexp_extract_all(html_str, '{tag_re}', 0)")
     return (
-        pages.select(F.col(url_col).alias("url"), _html_str(pages, html_col).alias(f"{html_col}_str"))
+        pages.select("url", _html_str(pages).alias("html_str"))
         .select("url", F.posexplode(tags).alias("idx", "tag"))
     )
 
 
-def og_meta(pages: DataFrame, url_col: str = "url", html_col: str = "html") -> DataFrame:
+def og_meta(pages: DataFrame) -> DataFrame:
     """(url, idx, og_key, og_value) — one row per og: meta tag in
     document order; og_key excludes the 'og:' prefix."""
     lifted = _lift(
-        pages, url_col, html_col,
+        pages,
         r'(?i)<meta\\s[^>]*property\\s*=\\s*["\\x27]og:[a-z:_]+["\\x27][^>]*>',
     )
     return lifted.select(
@@ -57,12 +57,10 @@ def og_meta(pages: DataFrame, url_col: str = "url", html_col: str = "html") -> D
     )
 
 
-def link_alternates(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def link_alternates(pages: DataFrame) -> DataFrame:
     """(url, idx, hreflang, href) — the cross-language edition edges."""
     lifted = _lift(
-        pages, url_col, html_col,
+        pages,
         r'(?i)<link\\s[^>]*rel\\s*=\\s*["\\x27]alternate["\\x27][^>]*>',
     )
     return lifted.select(
@@ -73,15 +71,13 @@ def link_alternates(
     ).filter(F.col("hreflang") != "")
 
 
-def microdata_props(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def microdata_props(pages: DataFrame) -> DataFrame:
     """(url, idx, prop, value) — schema.org microdata: meta-style
     ``itemprop`` tags take their ``content`` attribute; element-style
     ones (<span itemprop=...>text</span>) take the inner text of the
     same tag."""
     lifted = _lift(
-        pages, url_col, html_col,
+        pages,
         r'(?i)<[a-z0-9]+\\s[^>]*itemprop\\s*=\\s*["\\x27][a-zA-Z]+["\\x27][^>]*>'
         r"([^<]*)",
     )
@@ -95,9 +91,7 @@ def microdata_props(
     )
 
 
-def anchor_rel_links(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def anchor_rel_links(pages: DataFrame) -> DataFrame:
     """(url, idx, href, rel, is_nofollow) — one row per anchor open
     tag in document order, with the link-scheme annotations search
     engines defined for PageRank sculpting: rel values nofollow /
@@ -106,7 +100,7 @@ def anchor_rel_links(
     edges. Same JVM lift shape as og_meta: one regexp_extract_all +
     one explode, per-tag attribute extracts, no UDF."""
     lifted = _lift(
-        pages, url_col, html_col,
+        pages,
         r"(?i)<a\\s[^>]*>",
     )
     rel = F.lower(
@@ -121,9 +115,7 @@ def anchor_rel_links(
     ).filter(F.col("href") != "")
 
 
-def resolved_links(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def resolved_links(pages: DataFrame) -> DataFrame:
     """(url, href, target) — every <a href> on the page resolved to an
     absolute URL against the page's EFFECTIVE base: the first
     ``<base href>`` when the document declares one (HTML's only
@@ -137,17 +129,17 @@ def resolved_links(
     """
     from finetoo_sp_spark.operators.urlnorm import resolve_refs
 
-    hs = _html_str(pages, html_col)
+    hs = _html_str(pages)
     base_href = F.regexp_extract(
         hs, r"""(?i)<base\s[^>]*href\s*=\s*["']([^"']+)""", 1
     )
     hrefs = F.expr(
-        f"""regexp_extract_all(CAST({html_col} AS STRING),
+        """regexp_extract_all(CAST(html AS STRING),
             '(?i)<a\\\\s[^>]*href\\\\s*=\\\\s*["\\']([^"\\']*)', 1)"""
     )
     rows = pages.select(
-        F.col(url_col).alias("url"),
-        F.when(base_href != "", base_href).otherwise(F.col(url_col)).alias("base"),
+        "url",
+        F.when(base_href != "", base_href).otherwise(F.col("url")).alias("base"),
         F.explode(hrefs).alias("href"),
     )
     return resolve_refs(rows, "base", "href", "target").select(
@@ -155,9 +147,7 @@ def resolved_links(
     )
 
 
-def meta_refresh(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def meta_refresh(pages: DataFrame) -> DataFrame:
     """(url, delay_s, target) from ``<meta http-equiv="refresh">``
     elements — the CLIENT-SIDE redirect channel (WHATWG HTML
     §pragma-directives) that HTTP-level redirect resolution never sees:
@@ -172,7 +162,7 @@ def meta_refresh(
     """
     from finetoo_sp_spark.operators.urlnorm import resolve_refs
 
-    hs = _html_str(pages, html_col)
+    hs = _html_str(pages)
     tag = F.regexp_extract(
         hs,
         r"""(?i)<meta\s[^>]*http-equiv\s*=\s*["']?refresh["']?[^>]*>""",
@@ -194,7 +184,7 @@ def meta_refresh(
         F.lit(""),
     )
     rows = pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         delay.alias("delay_s"),
         raw_target.alias("_t"),
     ).filter(F.col("delay_s").isNotNull())

@@ -49,20 +49,13 @@ def _hit(col: Column) -> Column:
     return F.lower(col).rlike(_PATTERN)
 
 
-def soft404_flags(
-    extracted: DataFrame,
-    url_col: str = "url",
-    title_col: str = "title",
-    h1_col: str = "h1",
-    text_col: str = "text",
-    chars_col: str = "content_chars",
-    thin_chars: int = 200,
-) -> DataFrame:
-    """extraction output -> (url, is_soft404, reason)."""
-    title_hit = _hit(F.coalesce(F.col(title_col), F.lit("")))
-    h1_hit = _hit(F.coalesce(F.col(h1_col), F.lit("")))
-    body_hit = _hit(F.coalesce(F.col(text_col), F.lit(""))) & (
-        F.col(chars_col) < thin_chars
+def soft404_flags(extracted: DataFrame, thin_chars: int = 200) -> DataFrame:
+    """extraction output (url, title, h1, text, content_chars) ->
+    (url, is_soft404, reason)."""
+    title_hit = _hit(F.coalesce(F.col("title"), F.lit("")))
+    h1_hit = _hit(F.coalesce(F.col("h1"), F.lit("")))
+    body_hit = _hit(F.coalesce(F.col("text"), F.lit(""))) & (
+        F.col("content_chars") < thin_chars
     )
     reason = (
         F.when(title_hit, F.lit("title"))
@@ -71,7 +64,7 @@ def soft404_flags(
         .otherwise(F.lit("ok"))
     )
     return extracted.select(
-        F.col(url_col).alias("url"),
+        "url",
         (title_hit | h1_hit | body_hit).alias("is_soft404"),
         reason.alias("reason"),
     )

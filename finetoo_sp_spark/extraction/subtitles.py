@@ -43,13 +43,12 @@ def _ts_ms(block, which: int):
     )
 
 
-def parse_subtitles(
-    df: DataFrame, url_col: str = "url", body_col: str = "body"
-) -> DataFrame:
-    """(url, block_pos, start_ms, end_ms, text) per cue (module doc)."""
-    blocks = F.split(F.col(body_col), r"\r?\n[ \t]*\r?\n")
+def parse_subtitles(df: DataFrame) -> DataFrame:
+    """(url, body) caption files -> (url, block_pos, start_ms, end_ms,
+    text) per cue (module doc)."""
+    blocks = F.split(F.col("body"), r"\r?\n[ \t]*\r?\n")
     e = df.select(
-        F.col(url_col).alias("url"),
+        "url",
         F.posexplode(blocks).alias("block_pos", "_b"),
     ).filter(F.col("_b").rlike(r"-->"))
     text = F.array_join(

@@ -31,18 +31,16 @@ _ROWS = r"(?i)<tr[^>]*>([\\s\\S]*?)</tr>"
 _CELLS = r"(?i)<t[dh][^>]*>([\\s\\S]*?)</t[dh]>"
 
 
-def extract_tables(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def extract_tables(pages: DataFrame) -> DataFrame:
     """(url, table_idx, row_idx, col_idx, cell) — one row per table cell,
     indices 0-based in document order, cell = trim(inner tags stripped).
     Pages with no <table> contribute no rows."""
-    html = F.col(html_col)
-    if isinstance(pages.schema[html_col].dataType, BinaryType):
+    html = F.col("html")
+    if isinstance(pages.schema["html"].dataType, BinaryType):
         html = F.decode(html, "UTF-8")
 
     return (
-        pages.select(F.col(url_col).alias("url"), html.alias("_html"))
+        pages.select("url", html.alias("_html"))
         .select(
             "url",
             F.posexplode(F.expr(f"regexp_extract_all(_html, '{_TABLES}', 1)")).alias(

@@ -30,13 +30,13 @@ def asof_join(
     by: str,
     on: str,
     value_col: str,
-    out_col: str | None = None,
     tolerance_seconds: int | None = None,
     ts_out_col: str | None = None,
 ) -> DataFrame:
-    """Left as-of join: every left row + the ``value_col`` of the most
-    recent right row with ``right.on <= left.on`` for the same ``by``
-    key (null when no prior right row exists).
+    """Left as-of join: every left row + ``asof_<value_col>``, the
+    ``value_col`` of the most recent right row with ``right.on <=
+    left.on`` for the same ``by`` key (null when no prior right row
+    exists).
 
     ``tolerance_seconds``: pandas merge_asof-style staleness bound — a
     match older than the tolerance becomes null (a crawl-policy snapshot
@@ -50,7 +50,7 @@ def asof_join(
     """
     from pyspark.sql.window import Window
 
-    out_col = out_col or f"asof_{value_col}"
+    out_col = f"asof_{value_col}"
     r = (
         right.groupBy(by, on)
         .agg(F.max(value_col).alias("_v"))

@@ -17,22 +17,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def blocklist_gate(
-    pages: DataFrame,
-    blocklist: DataFrame,
-    id_col: str = "doc_id",
-    host_col: str = "host",
-) -> DataFrame:
-    """(id, host, blocked, matched_domain) per input row.
+def blocklist_gate(pages: DataFrame, blocklist: DataFrame) -> DataFrame:
+    """(id, host, blocked, matched_domain) per (doc_id, host) input row.
 
     ``blocklist``: one column ``domain`` of blocked registrable domains
     (dimension-sized; broadcast). ``matched_domain`` is the most
     specific (longest) matching rule, '' when not blocked.
     """
     staged = pages.select(
-        F.col(id_col).alias("id"),
-        F.col(host_col).alias("host"),
-        F.split(F.col(host_col), r"\.").alias("_parts"),
+        F.col("doc_id").alias("id"),
+        "host",
+        F.split(F.col("host"), r"\.").alias("_parts"),
     )
     sufs = staged.select(
         "id",

@@ -88,12 +88,17 @@ def sha60(col) -> "F.Column":
     return F.conv(F.substring(F.sha2(c, 256), 1, 15), 16, 10).cast("long")
 
 
+def is_sha(hash_mode: str) -> bool:
+    """The one ``hash_mode`` fork: True for 'sha' (:func:`sha60`, the
+    DuckDB-reproducible oracle mode), False for 'xxhash64' (production).
+    Any other value raises ``ValueError`` instead of meaning xxhash64."""
+    if hash_mode not in ("sha", "xxhash64"):
+        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    return hash_mode == "sha"
+
+
 def _base_hash(col, hash_mode: str) -> "F.Column":
-    if hash_mode == "sha":
-        return sha60(col)
-    if hash_mode == "xxhash64":
-        return F.xxhash64(col)
-    raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    return sha60(col) if is_sha(hash_mode) else F.xxhash64(col)
 
 
 def minhash_params(k: int) -> list[tuple[int, int]]:
@@ -475,7 +480,7 @@ def simhash(
     words = df.select(
         F.col(id_col).alias("id"), F.explode(_norm_words(text_col)).alias("w")
     ).filter(F.length("w") > 0)
-    if hash_mode == "sha":
+    if is_sha(hash_mode):
         # sha256 per OCCURRENCE is wasteful — hash once per DISTINCT
         # word and broadcast-join back (the hash is a pure function of
         # the word, so the result is identical; measured ~10% on the
@@ -560,10 +565,9 @@ def simhash_pairs(
     )
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", threshold: float = 0.95
-) -> DataFrame:
-    """All pairs (id_a < id_b) with cosine similarity >= threshold.
+def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """All pairs (id_a < id_b) of (vec_id, embedding) rows with cosine
+    similarity >= threshold.
 
     JVM-side arithmetic: F.aggregate over zip_with products (no UDF).
     O(n^2) by construction — the small-SF verification oracle for the
@@ -572,7 +576,7 @@ def embedding_near_dup_pairs(
     """
     from finetoo_sp_spark.operators.similarity import with_norm
 
-    v = with_norm(emb, id_col, vec_col)
+    v = with_norm(emb, "vec_id", "embedding")
     a = v.select(F.col("id").alias("id_a"), F.col("unit").alias("ua"))
     b = v.select(F.col("id").alias("id_b"), F.col("unit").alias("ub"))
     dot = F.aggregate(
@@ -588,8 +592,6 @@ def embedding_near_dup_pairs(
 
 def embedding_near_dup_pairs_bucketed(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_bits: int = 8,
     bucket_cap: int | None = 10_000,
@@ -609,7 +611,8 @@ def embedding_near_dup_pairs_bucketed(
 
     # unit vectors preserve coordinate signs, so bucketing the normalized
     # vector equals bucketing the raw one — one pass computes both.
-    v = with_norm(emb, id_col, vec_col).withColumn("bucket", sign_bucket("unit", n_bits))
+    v = with_norm(emb, "vec_id", "embedding")
+    v = v.withColumn("bucket", sign_bucket("unit", n_bits))
     pairs = _bucket_self_pairs(v, ["bucket"], payload_cols=["unit"], bucket_cap=bucket_cap)
     dot = F.aggregate(
         F.zip_with("unit_a", "unit_b", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x

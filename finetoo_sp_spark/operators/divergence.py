@@ -111,11 +111,9 @@ def block_comparison(
     blocks_a: DataFrame,
     blocks_b: DataFrame,
     on: list[str] | None = None,
-    text_col: str = "text",
-    chars_col: str = "n_chars",
-    words_col: str = "n_words",
 ) -> DataFrame:
-    """Per-pair block diff records (reference: BlockComparison,
+    """Per-pair block diff records over (text, n_chars, n_words) blocks
+    (reference: BlockComparison,
     proto/graph.proto:305-383 — per block: presence, value equality,
     count deltas between two drawings/pages).
 
@@ -127,15 +125,15 @@ def block_comparison(
     on = on or ["name"]
     a = blocks_a.select(
         *on,
-        F.col(text_col).alias("text_a"),
-        F.col(chars_col).alias("chars_a"),
-        F.col(words_col).alias("words_a"),
+        F.col("text").alias("text_a"),
+        F.col("n_chars").alias("chars_a"),
+        F.col("n_words").alias("words_a"),
     )
     b = blocks_b.select(
         *on,
-        F.col(text_col).alias("text_b"),
-        F.col(chars_col).alias("chars_b"),
-        F.col(words_col).alias("words_b"),
+        F.col("text").alias("text_b"),
+        F.col("n_chars").alias("chars_b"),
+        F.col("n_words").alias("words_b"),
     )
     return a.join(b, on, "full_outer").select(
         *on,

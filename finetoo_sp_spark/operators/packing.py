@@ -22,10 +22,10 @@ Two standard final-mile curation steps between "deduped corpus" and
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from finetoo_sp_spark.operators.dedup import is_sha, sha60
 
 
 def host_cap(
@@ -50,11 +50,8 @@ def host_cap(
 
 
 def _shard_of(id_col: str, n_shards: int, hash_mode: str):
-    if hash_mode == "sha":  # DuckDB-reproducible (oracle mode)
-        h = F.conv(
-            F.substring(F.sha2(F.col(id_col).cast("string"), 256), 1, 15), 16, 10
-        ).cast("long")
-        return F.pmod(h, F.lit(n_shards)).cast("int")
+    if is_sha(hash_mode):  # DuckDB-reproducible (oracle mode)
+        return F.pmod(sha60(F.col(id_col).cast("string")), F.lit(n_shards)).cast("int")
     return F.pmod(F.xxhash64(id_col), F.lit(n_shards)).cast("int")
 
 
@@ -222,10 +219,8 @@ def mix_epoch_weights(
         [(str(k), int(v)) for k, v in sorted(weights_ppm.items())],
         f"{group_col} string, _w_ppm long",
     )
-    if hash_mode == "sha":  # DuckDB-reproducible (oracle mode)
-        h = F.conv(
-            F.substring(F.sha2(F.col("id").cast("string"), 256), 1, 15), 16, 10
-        ).cast("long")
+    if is_sha(hash_mode):  # DuckDB-reproducible (oracle mode)
+        h = sha60(F.col("id").cast("string"))
     else:
         h = F.abs(F.xxhash64(F.col("id")))
     gate = h % F.lit(1_000_000)
@@ -265,8 +260,6 @@ def assign_splits(
     unsalted split would correlate test membership with sample
     membership). Narrow, shuffle-free; the sha is computed once per row.
     """
-    from finetoo_sp_spark.operators.dedup import sha60
-
     h = F.pmod(
         sha60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
         F.lit(1_000_000),
@@ -355,8 +348,6 @@ def temperature_mix(
     if alpha_quarters not in (1, 2, 3, 4):
         raise ValueError("alpha_quarters must be 1..4 (alpha = q/4)")
     from pyspark.sql.window import Window
-
-    from finetoo_sp_spark.operators.dedup import sha60
 
     n = df.groupBy(F.col(source_col).alias("source")).agg(
         F.count(F.lit(1)).alias("n_docs")

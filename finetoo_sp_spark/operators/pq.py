@@ -23,7 +23,8 @@ KBs at any corpus size), so code assignment and ADC scoring are NARROW
 column expressions over one corpus scan (no join, no shuffle); the
 only shuffles are the k-means centroid updates (k*d groups,
 size-invariant) and the final per-query top-k window. The corpus
-never crosses a crossJoin: queries broadcast.
+never crosses a crossJoin: queries broadcast. Every entry point reads
+a (vec_id, embedding) frame.
 """
 
 from __future__ import annotations
@@ -44,8 +45,6 @@ SCALE = 1 << 20
 
 def pq_train(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 4,
     ksub: int = 4,
     iters: int = 2,
@@ -56,7 +55,7 @@ def pq_train(
     One pass per k-means round covers ALL subspaces (the per-dimension
     update groups by (subspace, cluster, dim) in a single aggregate)."""
     e = emb.select(
-        F.col(id_col).alias("id"), _to_fixed(F.col(vec_col), scale).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), scale).alias("v")
     )
     init_rows = e.orderBy("id").limit(ksub).collect()
     dims = len(init_rows[0]["v"])
@@ -112,8 +111,6 @@ def pq_train(
 def pq_assign(
     emb: DataFrame,
     codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = SCALE,
 ) -> DataFrame:
     """(id, c0..c{M-1}) codebook indices per vector — one narrow select
@@ -122,7 +119,7 @@ def pq_assign(
     ksub = len(codebooks[0])
     sub = len(codebooks[0][0])
     e = emb.select(
-        F.col(id_col).alias("id"), _to_fixed(F.col(vec_col), scale).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), scale).alias("v")
     )
     cols = []
     for mi in range(m):
@@ -138,8 +135,6 @@ def pq_assign(
 
 def pq_codes(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 4,
     ksub: int = 4,
     iters: int = 2,
@@ -148,8 +143,8 @@ def pq_codes(
     """Train + assign: (id, code_str, n_subspaces) with the M indices
     comma-joined (codes are the payload; a string survives any engine's
     value hashing, the SQ8 convention in this repo)."""
-    cb = pq_train(emb, id_col, vec_col, m=m, ksub=ksub, iters=iters, scale=scale)
-    a = pq_assign(emb, cb, id_col, vec_col, scale=scale)
+    cb = pq_train(emb, m=m, ksub=ksub, iters=iters, scale=scale)
+    a = pq_assign(emb, cb, scale=scale)
     return a.select(
         "id",
         F.concat_ws(",", *[F.col(f"c{mi}") for mi in range(m)]).alias("code_str"),
@@ -169,8 +164,6 @@ def ann_ivf_pq_topk(
     nprobe: int = 2,
     m: int = 4,
     ksub: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = SCALE,
 ) -> DataFrame:
     """IVF-PQ search: (query_id, neighbor_id, adc_dist, rank) — the k
@@ -185,16 +178,18 @@ def ann_ivf_pq_topk(
     sums — a pure narrow expression; no vector math touches the corpus
     at query time (the PQ promise)."""
     centroids, assigned = kmeans_fit(
-        emb, id_col, vec_col, k=nlist, iters=2, scale=scale
+        emb, "vec_id", "embedding", k=nlist, iters=2, scale=scale
     )
-    codebooks = pq_train(emb, id_col, vec_col, m=m, ksub=ksub, scale=scale)
+    codebooks = pq_train(emb, m=m, ksub=ksub, scale=scale)
     sub = len(codebooks[0][0])
-    codes = pq_assign(emb, codebooks, id_col, vec_col, scale=scale)
+    codes = pq_assign(emb, codebooks, scale=scale)
     base = codes.join(assigned, "id")
 
     qrows = (
-        emb.filter(F.col(id_col).isin([int(q) for q in query_ids]))
-        .select(F.col(id_col).alias("id"), _to_fixed(F.col(vec_col), scale).alias("v"))
+        emb.filter(F.col("vec_id").isin([int(q) for q in query_ids]))
+        .select(
+            F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), scale).alias("v")
+        )
         .collect()
     )
     per_query = []
@@ -245,8 +240,6 @@ def ivf_pq_recall(
     nprobe: int = 2,
     m: int = 4,
     ksub: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = SCALE,
 ) -> DataFrame:
     """Measured recall@k of IVF-PQ against the EXACT integer-L2 top-k:
@@ -255,11 +248,11 @@ def ivf_pq_recall(
     recall number itself, not just the shape."""
     approx = ann_ivf_pq_topk(
         emb, query_ids, k=k, nlist=nlist, nprobe=nprobe, m=m, ksub=ksub,
-        id_col=id_col, vec_col=vec_col, scale=scale,
+        scale=scale,
     ).select("query_id", "neighbor_id")
 
     e = emb.select(
-        F.col(id_col).alias("id"), _to_fixed(F.col(vec_col), scale).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), scale).alias("v")
     )
     q = (
         e.filter(F.col("id").isin([int(x) for x in query_ids]))

@@ -32,13 +32,9 @@ def _idiv(num: Column, den: Column) -> Column:
     return ((num - num % den) / den).cast("long")
 
 
-def quantize_int8(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    fp_shift: int = FP_SHIFT,
-) -> DataFrame:
-    """Per-vector int8 quantization with exact reconstruction-error stats.
+def quantize_int8(df: DataFrame, fp_shift: int = FP_SHIFT) -> DataFrame:
+    """Per-vector int8 quantization of (vec_id, embedding) rows with exact
+    reconstruction-error stats.
 
     Returns (id, n_dims, min_fp, max_fp, q_str, max_err_fp):
     ``min_fp``/``max_fp`` are the vector's fixed-point range (the
@@ -52,9 +48,9 @@ def quantize_int8(
     """
     scale = 1 << fp_shift
     fp = F.transform(
-        emb_col, lambda x: F.floor(x.cast("double") * scale).cast("long")
+        "embedding", lambda x: F.floor(x.cast("double") * scale).cast("long")
     )
-    w = df.select(F.col(id_col).alias("id"), fp.alias("_fp"))
+    w = df.select(F.col("vec_id").alias("id"), fp.alias("_fp"))
     w = w.select(
         "id",
         "_fp",

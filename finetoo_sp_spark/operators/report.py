@@ -57,13 +57,8 @@ def corpus_report(
     )
 
 
-def snapshot_drift(
-    old: DataFrame,
-    new: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-group corpus drift between two snapshots: doc counts, exact
+def snapshot_drift(old: DataFrame, new: DataFrame) -> DataFrame:
+    """Per-``source`` corpus drift between two snapshots: doc counts, exact
     char totals, and integer-ppm deltas — the monitoring table a
     recurring crawl publishes next to each new snapshot so volume
     collapses or boilerplate floods surface as numbers, not incidents.
@@ -75,14 +70,14 @@ def snapshot_drift(
     dimension-sized aggregates — nothing corpus-scaled shuffles twice.
     """
     def agg(df: DataFrame, suffix: str) -> DataFrame:
-        return df.groupBy(F.col(group_col).alias("grp")).agg(
+        return df.groupBy(F.col("source").alias("grp")).agg(
             F.count("*").alias(f"n_{suffix}"),
-            F.sum(F.length(text_col)).alias(f"chars_{suffix}"),
+            F.sum(F.length("text")).alias(f"chars_{suffix}"),
         )
 
     a, b = agg(old, "old"), agg(new, "new")
     joined = a.join(b, "grp", "full_outer").select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("source"),
         F.coalesce("n_old", F.lit(0)).alias("n_old"),
         F.coalesce("n_new", F.lit(0)).alias("n_new"),
         F.coalesce("chars_old", F.lit(0)).alias("chars_old"),

@@ -49,12 +49,10 @@ def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
-    ``queries``: DataFrame with the same (id_col, vec_col) shape.
+    ``emb`` and ``queries``: (vec_id, embedding) frames.
     Returns (query_id, neighbor_id, cosine, rank), rank 1..k,
     deterministic tie-break on (cosine desc, neighbor_id asc). Self-pairs
     (same id) are excluded.
@@ -65,10 +63,10 @@ def brute_force_topk(
     """
     from pyspark.sql.window import Window
 
-    c = with_norm(emb, id_col, vec_col).select(
+    c = with_norm(emb, "vec_id", "embedding").select(
         F.col("id").alias("neighbor_id"), F.col("unit").alias("cv")
     )
-    q = with_norm(queries, id_col, vec_col).select(
+    q = with_norm(queries, "vec_id", "embedding").select(
         F.col("id").alias("query_id"), F.col("unit").alias("qv")
     )
     scored = (
@@ -101,8 +99,6 @@ def ann_lsh_bucketed(
     queries: DataFrame,
     k: int = 5,
     n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: exact cosine within the query's sign-LSH bucket.
 
@@ -121,14 +117,14 @@ def ann_lsh_bucketed(
     from pyspark.sql.window import Window
 
     cb = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        sign_bucket(vec_col, n_bits).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        sign_bucket("embedding", n_bits).alias("bucket"),
     )
     qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        sign_bucket(vec_col, n_bits).alias("bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        sign_bucket("embedding", n_bits).alias("bucket"),
     )
     qn = with_norm(qb, "query_id", "qvec").withColumnsRenamed({"id": "query_id", "unit": "qv"})
     cn = with_norm(cb, "neighbor_id", "cvec").withColumnsRenamed(
@@ -156,8 +152,6 @@ def ann_recall_curve(
     k: int = 10,
     n_bits: int = 8,
     n_tables_list: tuple[int, ...] = (1, 2, 3),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Measured recall@k of multi-probe ANN vs exact brute-force truth:
     one row (n_tables, recall) per probe-table count, recall = |ANN
@@ -182,12 +176,12 @@ def ann_recall_curve(
     ≈ 0.81 at 3 tables) — recall is high; the planted-cluster pytest
     (test_dedup_similarity.py) verifies >=0.75 measured.
     """
-    truth = brute_force_topk(emb, queries, k, id_col, vec_col).select(
+    truth = brute_force_topk(emb, queries, k).select(
         "query_id", "neighbor_id"
     )
     anns = None
     for t in n_tables_list:
-        a = ann_lsh_multiprobe(emb, queries, k, n_bits, t, id_col, vec_col).select(
+        a = ann_lsh_multiprobe(emb, queries, k, n_bits, t).select(
             F.lit(t).alias("n_tables"), "query_id", "neighbor_id"
         )
         anns = a if anns is None else anns.unionByName(a)
@@ -209,8 +203,6 @@ def ann_lsh_multiprobe(
     k: int = 5,
     n_bits: int = 8,
     n_tables: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-table sign-LSH ANN: table t buckets on the sign bits of
     coordinate slice [t*n_bits, (t+1)*n_bits); candidates = union of the
@@ -226,10 +218,10 @@ def ann_lsh_multiprobe(
     from pyspark.sql.window import Window
 
     def bucketed(df: DataFrame, out_id: str) -> DataFrame:
-        cols = [F.col(id_col).alias(out_id)]
+        cols = [F.col("vec_id").alias(out_id)]
         for t in range(n_tables):
             bits = F.transform(
-                F.slice(F.col(vec_col), t * n_bits + 1, n_bits),
+                F.slice(F.col("embedding"), t * n_bits + 1, n_bits),
                 lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0")),
             )
             cols.append(F.concat_ws("", bits).alias(f"b{t}"))
@@ -247,10 +239,10 @@ def ann_lsh_multiprobe(
         cand = m if cand is None else cand.unionByName(m)
     cand = cand.distinct().filter(F.col("query_id") != F.col("neighbor_id"))
 
-    qn = with_norm(queries, id_col, vec_col).withColumnsRenamed(
+    qn = with_norm(queries, "vec_id", "embedding").withColumnsRenamed(
         {"id": "query_id", "unit": "qv"}
     )
-    cn = with_norm(emb, id_col, vec_col).withColumnsRenamed(
+    cn = with_norm(emb, "vec_id", "embedding").withColumnsRenamed(
         {"id": "neighbor_id", "unit": "cv"}
     )
     scored = (

@@ -62,12 +62,11 @@ def dim_type_decode(code: Column | str) -> Column:
 
 def format_bom_lines(
     bom: DataFrame,
-    part_col: str = "part",
-    qty_col: str = "quantity",
     part_width: int = 40,
     qty_width: int = 8,
 ) -> DataFrame:
-    """Fixed-width BOM text rendering as (line_no, line) rows — an
+    """Fixed-width rendering of (part, quantity) BOM rows as (line_no,
+    line) rows — an
     analogue of the reference's FormatBOM (query_service.cc:181-206:
     padded part/qty table, quantity-desc order), not a byte-for-byte
     clone of its exact header/separator layout. line_no 0 = header,
@@ -91,16 +90,16 @@ def format_bom_lines(
         ],
         ["line_no", "line"],
     )
-    w = Window.orderBy(F.desc(qty_col), F.asc(part_col))
+    w = Window.orderBy(F.desc("quantity"), F.asc("part"))
     shown_part = F.when(
-        F.length(part_col) > part_width,
-        F.concat(F.substring(part_col, 1, part_width - 3), F.lit("...")),
-    ).otherwise(F.col(part_col))
+        F.length("part") > part_width,
+        F.concat(F.substring("part", 1, part_width - 3), F.lit("...")),
+    ).otherwise(F.col("part"))
     body = bom.select(
         (F.row_number().over(w) + 1).cast("long").alias("line_no"),
         F.concat(
             F.rpad(shown_part, part_width, " "),
-            F.lpad(F.col(qty_col).cast("string"), qty_width, " "),
+            F.lpad(F.col("quantity").cast("string"), qty_width, " "),
         ).alias("line"),
     )
     return header.select(F.col("line_no").cast("long"), "line").unionByName(body)
@@ -123,17 +122,12 @@ def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     ).csv(path)
 
 
-def write_wet(
-    df: DataFrame,
-    path: str,
-    url_col: str = "url",
-    text_col: str = "text",
-    ts_col: str | None = None,
-) -> None:
+def write_wet(df: DataFrame, path: str) -> None:
     """WET export (WARC/1.0 ``conversion`` records — the Common Crawl
-    extracted-text interchange format): one record per row with
-    WARC-Target-URI / WARC-Date headers and the UTF-8 text as the body,
-    Content-Length in bytes.
+    extracted-text interchange format): one record per (url, text) row
+    with WARC-Target-URI / WARC-Date headers (the date is the fixed
+    2026-01-01T00:00:00Z) and the UTF-8 text as the body, Content-Length
+    in bytes.
 
     Fully distributed: each record is assembled as ONE JVM string
     column (concat of headers + body, CRLF line ends) and written with
@@ -141,37 +135,25 @@ def write_wet(
     The text source appends a single '\\n' between rows; readers bind
     the body by Content-Length, so the separator is inert padding
     (sources/warc.py read_wet_text round-trips it)."""
-    ts = (
-        F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-        if ts_col
-        else F.lit("2026-01-01T00:00:00Z")
-    )
     crlf = F.lit("\r\n")
     record = F.concat(
         F.lit("WARC/1.0"), crlf,
         F.lit("WARC-Type: conversion"), crlf,
-        F.lit("WARC-Target-URI: "), F.col(url_col), crlf,
-        F.lit("WARC-Date: "), ts, crlf,
+        F.lit("WARC-Target-URI: "), F.col("url"), crlf,
+        F.lit("WARC-Date: "), F.lit("2026-01-01T00:00:00Z"), crlf,
         F.lit("Content-Type: text/plain"), crlf,
         F.lit("Content-Length: "),
-        F.octet_length(F.col(text_col)).cast("string"), crlf,
+        F.octet_length(F.col("text")).cast("string"), crlf,
         crlf,
-        F.col(text_col), crlf,
+        F.col("text"), crlf,
     )
     df.select(record.alias("value")).write.mode("overwrite").text(path)
 
 
-def write_wat(
-    df: DataFrame,
-    path: str,
-    url_col: str = "url",
-    title_col: str = "title",
-    links_col: str = "links",
-    ts_col: str | None = None,
-) -> None:
+def write_wat(df: DataFrame, path: str) -> None:
     """WAT export (WARC/1.0 ``metadata`` records whose body is the
-    Common Crawl JSON envelope): per page, Envelope.WARC-Header-Metadata
-    carries the target URI and Envelope.Payload-Metadata...HTML-Metadata
+    Common Crawl JSON envelope): per (url, title, links) page,
+    Envelope.WARC-Header-Metadata carries the target URI and Envelope.Payload-Metadata...HTML-Metadata
     carries the extracted Head.Title and Links list — the metadata
     interchange format beside WARC (raw) and WET (text).
 
@@ -180,25 +162,20 @@ def write_wat(
     WARC framing one concat, one .wat file per partition, no driver
     collection. Content-Length binds the body, so embedded newlines in
     titles survive byte-exactly."""
-    ts = (
-        F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-        if ts_col
-        else F.lit("2026-01-01T00:00:00Z")
-    )
     links_json = F.transform(
-        F.col(links_col), lambda t: F.struct(t.alias("url"))
+        F.col("links"), lambda t: F.struct(t.alias("url"))
     )
     envelope = F.to_json(
         F.struct(
             F.struct(
                 F.struct(
-                    F.col(url_col).alias("WARC-Target-URI"),
+                    F.col("url").alias("WARC-Target-URI"),
                     F.lit("response").alias("WARC-Type"),
                 ).alias("WARC-Header-Metadata"),
                 F.struct(
                     F.struct(
                         F.struct(
-                            F.struct(F.col(title_col).alias("Title")).alias("Head"),
+                            F.struct(F.col("title").alias("Title")).alias("Head"),
                             links_json.alias("Links"),
                         ).alias("HTML-Metadata")
                     ).alias("HTTP-Response-Metadata")
@@ -210,8 +187,8 @@ def write_wat(
     record = F.concat(
         F.lit("WARC/1.0"), crlf,
         F.lit("WARC-Type: metadata"), crlf,
-        F.lit("WARC-Target-URI: "), F.col(url_col), crlf,
-        F.lit("WARC-Date: "), ts, crlf,
+        F.lit("WARC-Target-URI: "), F.col("url"), crlf,
+        F.lit("WARC-Date: "), F.lit("2026-01-01T00:00:00Z"), crlf,
         F.lit("Content-Type: application/json"), crlf,
         F.lit("Content-Length: "), F.octet_length(envelope).cast("string"), crlf,
         crlf,

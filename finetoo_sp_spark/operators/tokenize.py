@@ -112,12 +112,7 @@ def bpe_token_counts(
     )
 
 
-def bpe_learn(
-    vocab: DataFrame,
-    n_merges: int,
-    word_col: str = "word",
-    count_col: str = "cnt",
-) -> DataFrame:
+def bpe_learn(vocab: DataFrame, n_merges: int) -> DataFrame:
     """BPE merge-table LEARNING (Sennrich 2016 train phase): run
     ``n_merges`` rounds of find-most-frequent-adjacent-pair -> merge
     over a (word, cnt) vocabulary. Returns the learned table
@@ -137,8 +132,8 @@ def bpe_learn(
     """
     spark = vocab.sparkSession
     toks = vocab.select(
-        F.split(F.col(word_col), "").alias("toks"),
-        F.col(count_col).cast("long").alias("cnt"),
+        F.split(F.col("word"), "").alias("toks"),
+        F.col("cnt").cast("long").alias("cnt"),
     ).localCheckpoint()
 
     out_rows = []

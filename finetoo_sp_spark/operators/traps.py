@@ -25,14 +25,13 @@ from pyspark.sql import DataFrame, functions as F
 
 def flag_trap_urls(
     urls: DataFrame,
-    url_col: str = "url",
     max_depth: int = 8,
     max_params: int = 6,
 ) -> DataFrame:
     """(.., path_depth, n_params, deep_path, repeated_segment, calendar,
-    query_explosion, is_trap) per input row."""
-    path = F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)", 1)
-    query = F.regexp_extract(F.col(url_col), r"\?([^#]*)", 1)
+    query_explosion, is_trap) per input row, from its ``url`` column."""
+    path = F.regexp_extract(F.col("url"), r"^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)", 1)
+    query = F.regexp_extract(F.col("url"), r"\?([^#]*)", 1)
     segs = F.filter(F.split(path, "/"), lambda s: s != "")
     n_params = F.when(query == "", F.lit(0)).otherwise(
         F.size(F.split(query, "&"))

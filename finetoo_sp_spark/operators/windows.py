@@ -18,27 +18,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """One row per event with its session id (per-user running index).
 
     Returns (user_id, ts, event_type, session_id).
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col)
+    w = Window.partitionBy("user_id").orderBy("ts")
     gap_s = gap_minutes * 60
-    prev = F.lag(ts_col).over(w)
+    prev = F.lag("ts").over(w)
     is_start = F.when(
         prev.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev)) > gap_s),
+        | ((F.unix_timestamp(F.col("ts")) - F.unix_timestamp(prev)) > gap_s),
         1,
     ).otherwise(0)
     return events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).alias("ts"),
+        "user_id",
+        "ts",
         "event_type",
         is_start.alias("is_start"),
     ).withColumn(
@@ -46,15 +41,10 @@ def sessionize(
     ).drop("is_start")
 
 
-def session_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Per-session rollup: (user_id, session_id, n_events, start_ts,
     end_ts, duration_s)."""
-    s = sessionize(events, user_col, ts_col, gap_minutes)
+    s = sessionize(events, gap_minutes)
     return s.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("start_ts"),
@@ -63,21 +53,21 @@ def session_stats(
     )
 
 
-def daily_rollup(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def daily_rollup(events: DataFrame) -> DataFrame:
     """(day, event_type, n_events, total_value) — calendar-day rollup."""
     return events.groupBy(
-        F.date_trunc("DAY", F.col(ts_col)).alias("day"), "event_type"
+        F.date_trunc("DAY", F.col("ts")).alias("day"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 4).alias("total_value"),
     )
 
 
-def json_prop_rollup(events: DataFrame, key: str = "k") -> DataFrame:
-    """Extract a JSON property from the props column and aggregate by
-    event_type: (event_type, n_events, avg_k). get_json_object is
+def json_prop_rollup(events: DataFrame) -> DataFrame:
+    """Extract the JSON property ``k`` from the props column and aggregate
+    by event_type: (event_type, n_events, avg_k). get_json_object is
     JVM-side (Jackson) — no Python in the path."""
-    kv = F.get_json_object("props", f"$.{key}").cast("bigint")
+    kv = F.get_json_object("props", "$.k").cast("bigint")
     return events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.avg(kv), 4).alias("avg_k"),

@@ -153,7 +153,9 @@ def zipnum_lookup(data: bytes, cluster: list, key: str) -> list[str]:
     """Consumer side of the two-level index: binary-search the cluster
     entries for the block that can contain ``key``, slice-decompress
     ONLY that member, return its matching lines. O(log blocks) compares
-    + one block decode regardless of index size."""
+    + one block decode regardless of index size. A block that does not
+    inflate or is not UTF-8 text yields ``[]``, as in
+    :func:`read_zipnum_blocks`."""
     import bisect
 
     firsts = [c[0] for c in cluster]
@@ -161,7 +163,10 @@ def zipnum_lookup(data: bytes, cluster: list, key: str) -> list[str]:
     if i < 0:
         return []
     _, _, off, ln = cluster[i]
-    text = gzip.decompress(data[off : off + ln]).decode("utf-8")
+    try:
+        text = gzip.decompress(data[off : off + ln]).decode("utf-8")
+    except (OSError, EOFError, zlib.error, UnicodeDecodeError):
+        return []
     return [l for l in text.splitlines() if l.split(" ", 1)[0] == key]
 
 

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from finetoo_sp_spark.extraction.extract import place_buckets
+from finetoo_sp_spark.operators.dedup import is_sha, sha60
 from finetoo_sp_spark.sources.lineage import (
     BUCKET_FIELD,
     committed_buckets,
@@ -46,23 +47,19 @@ from finetoo_sp_spark.sources.lineage import (
 PAIRS_MARKER = "_PHASE_COMPLETE"
 
 
-def _sha60(col):
-    return F.conv(F.substring(F.sha2(col, 256), 1, 15), 16, 10).cast("long")
-
-
 def _bucket_of(col: str, n_buckets: int, hash_mode: str):
     """Bucket id for resume partitioning. 'sha' mode hashes the id's
     string form so DuckDB reproduces it exactly (the manifest-oracle
     mode, as in sources/lineage.py); production uses xxhash64."""
-    if hash_mode == "sha":
-        return F.pmod(_sha60(F.col(col).cast("string")), F.lit(n_buckets)).cast("int")
+    if is_sha(hash_mode):
+        return F.pmod(sha60(F.col(col).cast("string")), F.lit(n_buckets)).cast("int")
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 def _checksum_of(key_cols: list[str], hash_mode: str):
     cols = [F.col(c).cast("string") for c in key_cols]
-    if hash_mode == "sha":
-        return F.bit_xor(_sha60(F.concat_ws("\x01", *cols)))
+    if is_sha(hash_mode):
+        return F.bit_xor(sha60(F.concat_ws("\x01", *cols)))
     return F.bit_xor(F.xxhash64(*key_cols))
 
 
@@ -103,23 +100,22 @@ def _write_bucketed(
 def run_resumable_curation(
     docs: DataFrame,
     out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = 100,
     n_buckets: int = 32,
     hash_mode: str = "xxhash64",
 ) -> dict:
-    """Quality gate + near-dup clustering + survivor materialization,
-    resumable from the two checkpoints described in the module
-    docstring. Returns a metrics dict (phase timings, rows, reuse
+    """Quality gate + near-dup clustering + survivor materialization of
+    ``docs`` (doc_id, text), resumable from the two checkpoints described
+    in the module docstring. Returns a metrics dict (phase timings, rows, reuse
     flags) — the curation twin of run_resumable_extraction's manifest.
     """
     from finetoo_sp_spark.operators import textstats as ts
     from finetoo_sp_spark.operators.components import dedup_keep_list
     from finetoo_sp_spark.operators.dedup import ngram_jaccard_pairs
 
+    is_sha(hash_mode)  # an unknown mode raises here, before any job
     spark = docs.sparkSession
     phases: dict[str, float] = {}
     pairs_dir = os.path.join(out_dir, "pairs")
@@ -133,7 +129,7 @@ def run_resumable_curation(
         pairs = spark.read.parquet(os.path.join(pairs_dir, "data")).drop("bucket")
     else:
         fresh = ngram_jaccard_pairs(
-            docs, id_col, text_col, n=n, threshold=threshold, max_df=max_df
+            docs, "doc_id", "text", n=n, threshold=threshold, max_df=max_df
         ).withColumn("bucket", _bucket_of("id_a", n_buckets, hash_mode))
         _write_bucketed(fresh, pairs_dir, ["id_a", "id_b"], n_buckets, hash_mode=hash_mode)
         n_pairs = spark.read.parquet(os.path.join(pairs_dir, "data")).count()
@@ -147,12 +143,12 @@ def run_resumable_curation(
     done_buckets, _ = committed_buckets(surv_dir)
     n_done = len(done_buckets)
 
-    quality = ts.quality_scores(docs, id_col, text_col).filter(F.col("keep")).select("id")
-    keep = dedup_keep_list(pairs, docs.select(F.col(id_col).alias("id"))).filter(
+    quality = ts.quality_scores(docs, "doc_id", "text").filter(F.col("keep")).select("id")
+    keep = dedup_keep_list(pairs, docs.select(F.col("doc_id").alias("id"))).filter(
         F.col("keep")
     )
     survivors = (
-        docs.withColumnRenamed(id_col, "id")
+        docs.withColumnRenamed("doc_id", "id")
         .join(quality, "id", "left_semi")
         .join(keep.select("id"), "id", "left_semi")
         .withColumn("bucket", _bucket_of("id", n_buckets, hash_mode))

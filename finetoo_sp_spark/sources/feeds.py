@@ -22,20 +22,18 @@ def _tag(block, name: str):
     return F.regexp_extract(block, rf"(?s)<{name}[^>]*>\s*(.*?)\s*</{name}>", 1)
 
 
-def parse_feeds(
-    df: DataFrame, host_col: str = "host", xml_col: str = "feed_xml"
-) -> DataFrame:
-    """Parse RSS/Atom bodies into one row per item/entry.
+def parse_feeds(df: DataFrame) -> DataFrame:
+    """Parse (host, feed_xml) RSS/Atom bodies into one row per item/entry.
 
     Returns (host, kind, link, title, published:timestamp): ``kind`` is
     'rss' or 'atom' per entry origin; ``published`` is NULL when absent
     or unparseable (RFC 822 for RSS pubDate, ISO-8601 for Atom
     updated/published — try-parse semantics, dirty feeds cost fields,
     never the task)."""
-    items = F.expr(f"regexp_extract_all({xml_col}, '(?s)<item>(.*?)</item>', 1)")
-    entries = F.expr(f"regexp_extract_all({xml_col}, '(?s)<entry>(.*?)</entry>', 1)")
+    items = F.expr("regexp_extract_all(feed_xml, '(?s)<item>(.*?)</item>', 1)")
+    entries = F.expr("regexp_extract_all(feed_xml, '(?s)<entry>(.*?)</entry>', 1)")
     lifted = df.select(
-        F.col(host_col).alias("host"),
+        "host",
         F.explode(
             F.concat(
                 F.transform(items, lambda b: F.struct(F.lit("rss").alias("kind"), b.alias("b"))),

@@ -26,10 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def parse_hls(
-    df: DataFrame, url_col: str = "url", body_col: str = "body"
-) -> DataFrame:
-    """(url, kind, pos, item_uri, bandwidth, width, height,
+def parse_hls(df: DataFrame) -> DataFrame:
+    """(url, body) playlists -> (url, kind, pos, item_uri, bandwidth, width, height,
     duration_ms) per playlist item (module docstring). ``pos`` is the
     item's 0-based order among items of the playlist."""
     # RFC 8216: an item tag applies to the next URI line — the next line
@@ -39,14 +37,12 @@ def parse_hls(
     # then the very next kept line, at ln+1 (a tag followed by another
     # item tag has no URI and drops out of the join below).
     lines = F.filter(
-        F.split(F.col(body_col), r"\r?\n"),
+        F.split(F.col("body"), r"\r?\n"),
         lambda s: s.startswith("#EXT-X-STREAM-INF:")
         | s.startswith("#EXTINF:")
         | (~s.startswith("#") & (F.trim(s) != "")),
     )
-    e = df.select(
-        F.col(url_col).alias("url"), F.posexplode(lines).alias("ln", "_l")
-    )
+    e = df.select("url", F.posexplode(lines).alias("ln", "_l"))
     # pair each tag line with the next kept line (the URI): join the
     # projected tag rows to the projected line rows on (url, ln+1).
     tags = e.filter(

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from finetoo_sp_spark.extraction.extract import extract_pages, place_buckets, url_salt
+from finetoo_sp_spark.operators.dedup import is_sha, sha60
 
 MANIFEST_DIRNAME = "_manifests"
 BUCKET_FIELD = StructField("bucket", IntegerType())
@@ -67,10 +68,8 @@ def _row_hash(hash_mode: str):
     url || \\x01 || text) so the manifest checksum itself can sit under a
     value oracle; production uses xxhash64.
     """
-    if hash_mode == "sha":
-        return F.conv(
-            F.substring(F.sha2(F.concat_ws("\x01", "url", "text"), 256), 1, 15), 16, 10
-        ).cast("long")
+    if is_sha(hash_mode):
+        return sha60(F.concat_ws("\x01", "url", "text"))
     return F.xxhash64("url", "text")
 
 

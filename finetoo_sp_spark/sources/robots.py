@@ -41,15 +41,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def parse_robots(
-    robots: DataFrame, host_col: str = "host", text_col: str = "robots_txt"
-) -> DataFrame:
-    """(host, agent, rule_idx, allow, path_prefix) — one row per
-    Allow/Disallow rule, rule_idx = 0-based line position, agent = the
+def parse_robots(robots: DataFrame) -> DataFrame:
+    """(host, robots_txt) -> (host, agent, rule_idx, allow, path_prefix):
+    one row per Allow/Disallow rule, rule_idx = 0-based line position, agent = the
     group's User-agent value (lowercased)."""
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(text_col, "\n")).alias("pos", "line"),
+        "host",
+        F.posexplode(F.split("robots_txt", "\n")).alias("pos", "line"),
     ).select("host", "pos", F.trim("line").alias("line"))
 
     kind = (
@@ -166,13 +164,11 @@ def gate_urls(
     urls: DataFrame,
     rules: DataFrame | None = None,
     agent: str = "*",
-    host_col: str = "host",
-    path_col: str = "path",
     max_rules_per_host: int = 2048,
     compiled: DataFrame | None = None,
 ) -> DataFrame:
-    """(host, path, allowed) — most-specific-match verdict per URL for
-    ``agent``'s rule group; URLs with no matching rule are allowed.
+    """(host, path, allowed) — most-specific-match verdict per (host,
+    path) URL row for ``agent``'s rule group; URLs with no matching rule are allowed.
 
     Rule paths follow RFC 9309 §2.2.3: ``*`` matches any sequence, a
     trailing ``$`` anchors to the path end, specificity is the written
@@ -194,7 +190,7 @@ def gate_urls(
             rules, agent=agent, max_rules_per_host=max_rules_per_host
         )
     r = compiled
-    u = urls.select(F.col(host_col).alias("host"), F.col(path_col).alias("path"))
+    u = urls.select("host", "path")
     match = F.when(F.col("_wild"), F.expr("rlike(path, _rx)")).otherwise(
         F.col("path").startswith(F.col("path_prefix"))
     )
@@ -209,17 +205,15 @@ def gate_urls(
     )
 
 
-def crawl_delays(
-    robots: DataFrame, host_col: str = "host", text_col: str = "robots_txt"
-) -> DataFrame:
+def crawl_delays(robots: DataFrame) -> DataFrame:
     """(host, agent, delay_s) — the ``Crawl-delay:`` directive per
     User-agent group (non-numeric or missing values yield no row),
     feeding the per-host politeness rate limiting that the streaming
     crawl-rate operator enforces. Same declarative parse shape as
     parse_robots: one running-count window + group-agent join back."""
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(text_col, "\n")).alias("pos", "line"),
+        "host",
+        F.posexplode(F.split("robots_txt", "\n")).alias("pos", "line"),
     ).select("host", "pos", F.trim("line").alias("line"))
 
     kind = (
@@ -244,9 +238,7 @@ def crawl_delays(
     )
 
 
-def sitemap_directives(
-    robots: DataFrame, host_col: str = "host", text_col: str = "robots_txt"
-) -> DataFrame:
+def sitemap_directives(robots: DataFrame) -> DataFrame:
     """(host, sitemap_url) — ``Sitemap:`` directives from robots.txt.
 
     Per sitemaps.org's robots extension (and RFC 9309 §2.3 "other
@@ -257,8 +249,8 @@ def sitemap_directives(
     ``https://``). Feeds sources/sitemap.py's fetch-and-parse loop.
     """
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.explode(F.split(text_col, "\n")).alias("line"),
+        "host",
+        F.explode(F.split("robots_txt", "\n")).alias("line"),
     )
     url = F.regexp_extract(F.trim("line"), r"(?i)^sitemap:\s*(\S+)", 1)
     return (

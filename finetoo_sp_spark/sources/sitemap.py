@@ -24,10 +24,9 @@ def _tag(block, name: str):
     return F.regexp_extract(block, rf"(?s)<{name}>\s*(.*?)\s*</{name}>", 1)
 
 
-def parse_sitemaps(
-    df: DataFrame, host_col: str = "host", xml_col: str = "sitemap_xml"
-) -> DataFrame:
-    """Parse <urlset> sitemap bodies into one typed row per <url> entry.
+def parse_sitemaps(df: DataFrame) -> DataFrame:
+    """Parse (host, sitemap_xml) <urlset> bodies into one typed row per
+    <url> entry.
 
     Returns (host, loc, lastmod:date, changefreq, priority_ppm:long):
     lastmod is NULL when absent or unparseable (try-cast semantics),
@@ -36,10 +35,8 @@ def parse_sitemaps(
     bodies yield zero rows here — their <sitemap><loc> children are new
     sitemap fetch targets, surfaced by :func:`index_entries`.
     """
-    blocks = F.expr(f"regexp_extract_all({xml_col}, '(?s)<url>(.*?)</url>', 1)")
-    e = df.select(
-        F.col(host_col).alias("host"), F.explode(blocks).alias("_b")
-    )
+    blocks = F.expr("regexp_extract_all(sitemap_xml, '(?s)<url>(.*?)</url>', 1)")
+    e = df.select("host", F.explode(blocks).alias("_b"))
     return e.select(
         "host",
         _tag(F.col("_b"), "loc").alias("loc"),
@@ -61,25 +58,21 @@ def parse_sitemaps(
     ).filter(F.col("loc") != "")
 
 
-def index_entries(
-    df: DataFrame, host_col: str = "host", xml_col: str = "sitemap_xml"
-) -> DataFrame:
+def index_entries(df: DataFrame) -> DataFrame:
     """(host, sitemap_loc) children of <sitemapindex> bodies — the next
     round of sitemap fetches (the crawl loop unions them back into the
     fetch frontier)."""
     blocks = F.expr(
-        f"regexp_extract_all({xml_col}, '(?s)<sitemap>(.*?)</sitemap>', 1)"
+        "regexp_extract_all(sitemap_xml, '(?s)<sitemap>(.*?)</sitemap>', 1)"
     )
     return (
-        df.select(F.col(host_col).alias("host"), F.explode(blocks).alias("_b"))
+        df.select("host", F.explode(blocks).alias("_b"))
         .select("host", _tag(F.col("_b"), "loc").alias("sitemap_loc"))
         .filter(F.col("sitemap_loc") != "")
     )
 
 
-def media_entries(
-    df: DataFrame, host_col: str = "host", xml_col: str = "sitemap_xml"
-) -> DataFrame:
+def media_entries(df: DataFrame) -> DataFrame:
     """Google sitemap media extensions -> one typed row per media item.
 
     Parses the three extension namespaces a media crawl plans fetches
@@ -91,10 +84,10 @@ def media_entries(
     pub_date. URLs without media yield no rows. Same narrow
     regexp-explode shape as :func:`parse_sitemaps` — two Generates,
     no UDF, no shuffle."""
-    blocks = F.expr(f"regexp_extract_all({xml_col}, '(?s)<url>(.*?)</url>', 1)")
-    base = df.select(
-        F.col(host_col).alias("host"), F.explode(blocks).alias("_u")
-    ).select("host", _tag(F.col("_u"), "loc").alias("loc"), "_u")
+    blocks = F.expr("regexp_extract_all(sitemap_xml, '(?s)<url>(.*?)</url>', 1)")
+    base = df.select("host", F.explode(blocks).alias("_u")).select(
+        "host", _tag(F.col("_u"), "loc").alias("loc"), "_u"
+    )
 
     def sub(pattern: str):
         return F.explode(

@@ -28,8 +28,8 @@ no collect.
 The fingerprint defaults to ``xxhash64`` of the raw payload column —
 change *detection* needs speed, not cryptographic strength (a false
 "unchanged" needs a 64-bit collision on the SAME url between two
-crawls). Pass ``fingerprint_col`` to compare on extracted text or a
-stored content sha instead.
+crawls). Pass ``changed_pages`` a ``fingerprint_col`` to compare on
+extracted text or a stored content sha instead.
 """
 
 from __future__ import annotations
@@ -38,35 +38,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _slim(pages: DataFrame, key: str, fingerprint_col: Column | None, alias: str) -> DataFrame:
+def _slim(pages: DataFrame, fingerprint_col: Column | None, alias: str) -> DataFrame:
     fp = fingerprint_col if fingerprint_col is not None else F.xxhash64("html")
-    return pages.select(F.col(key).alias(key), fp.alias(alias))
+    return pages.select("url", fp.alias(alias))
 
 
-def snapshot_delta(
-    old_pages: DataFrame,
-    new_pages: DataFrame,
-    key: str = "url",
-    fingerprint_col: Column | None = None,
-) -> DataFrame:
+def snapshot_delta(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
     """(url, status) for every url in either snapshot — status in
     {added, removed, changed, unchanged}. One full-outer equi-join over
     the slim (url, hash) projections."""
-    o = _slim(old_pages, key, fingerprint_col, "_h_old")
-    n = _slim(new_pages, key, fingerprint_col, "_h_new")
+    o = _slim(old_pages, None, "_h_old")
+    n = _slim(new_pages, None, "_h_new")
     status = (
         F.when(F.col("_h_old").isNull(), F.lit("added"))
         .when(F.col("_h_new").isNull(), F.lit("removed"))
         .when(F.col("_h_old") == F.col("_h_new"), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    return o.join(n, key, "full_outer").select(key, status.alias("status"))
+    return o.join(n, "url", "full_outer").select("url", status.alias("status"))
 
 
 def changed_pages(
     old_pages: DataFrame,
     new_pages: DataFrame,
-    key: str = "url",
     fingerprint_col: Column | None = None,
 ) -> DataFrame:
     """The new snapshot restricted to urls that need (re-)extraction:
@@ -75,20 +69,17 @@ def changed_pages(
     dimension, so only the fingerprints shuffle — the html payload of
     the new snapshot moves once, into its own extraction."""
     fp = fingerprint_col if fingerprint_col is not None else F.xxhash64("html")
-    o = _slim(old_pages, key, fingerprint_col, "_h_old")
+    o = _slim(old_pages, fingerprint_col, "_h_old")
     n = new_pages.withColumn("_h_new", fp)
     return (
-        n.join(o, key, "left_outer")
+        n.join(o, "url", "left_outer")
         .filter(F.col("_h_old").isNull() | (F.col("_h_old") != F.col("_h_new")))
         .drop("_h_old", "_h_new")
     )
 
 
 def merge_extracted(
-    old_extracted: DataFrame,
-    delta_extracted: DataFrame,
-    delta: DataFrame,
-    key: str = "url",
+    old_extracted: DataFrame, delta_extracted: DataFrame, delta: DataFrame
 ) -> DataFrame:
     """Previous snapshot's extracted corpus + this snapshot's churn-only
     extraction -> the full extracted corpus of the new snapshot, without
@@ -104,5 +95,5 @@ def merge_extracted(
     identity of the merge vs a full re-extraction is pinned by
     tests/test_snapshot.py.
     """
-    stale = delta.filter(F.col("status").isin("removed", "changed")).select(key)
-    return old_extracted.join(stale, key, "left_anti").unionByName(delta_extracted)
+    stale = delta.filter(F.col("status").isin("removed", "changed")).select("url")
+    return old_extracted.join(stale, "url", "left_anti").unionByName(delta_extracted)

@@ -253,3 +253,23 @@ def test_read_zipnum_blocks_skips_non_utf8_block(spark, tmp_path):
     assert dirty[0] == clean[0]
     cols = ["length", "n_lines", "first_key", "last_key", "block_sha"]
     assert [[r[c] for c in cols] for r in dirty] == [[r[c] for c in cols] for r in clean]
+
+
+def test_zipnum_lookup_damaged_block_returns_empty():
+    lines = _zipnum_lines(25)
+    blob, cluster = pack_zipnum(lines, block_size=10)
+    _, _, off, ln = cluster[1]
+    flipped = bytearray(blob)
+    flipped[off + ln // 2] ^= 0xFF  # inside block 1's deflate stream
+    bad = gzip.compress(b"com,h010)/p \xff\xfe not utf-8\n", mtime=0)
+    non_utf8 = blob[:off] + bad + blob[off + ln :]
+    shift = len(bad) - ln
+    non_utf8_cluster = [
+        (k, b, o + shift if b > 1 else o, len(bad) if b == 1 else l)
+        for k, b, o, l in cluster
+    ]
+    for data, clu in ((bytes(flipped), cluster), (non_utf8, non_utf8_cluster)):
+        assert zipnum_lookup(data, clu, "com,h013)/p") == []
+        # keys held in the intact blocks are still found
+        assert zipnum_lookup(data, clu, "com,h003)/p") == [lines[3]]
+        assert zipnum_lookup(data, clu, "com,h024)/p") == [lines[24]]

@@ -142,3 +142,92 @@ def test_contract_modules_use_every_core_import():
         if extra:
             unused[path.name] = sorted(extra)
     assert not unused, unused
+
+
+def test_every_registered_query_is_named_in_coverage():
+    """COVERAGE.md names every registered query (a new query must land
+    in its family's row)."""
+    import re
+    from pathlib import Path
+
+    from finetoo_sp_spark import contract
+    from finetoo_sp_spark.contract._core import _REGISTRY
+
+    contract.queries()
+    cov = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
+    missing = [
+        name
+        for name, _fn, _oracle in _REGISTRY
+        if not re.search(rf"(?<![\w]){re.escape(name)}(?![\w])", cov)
+    ]
+    assert not missing, missing
+
+
+def test_no_column_name_parameter_that_no_call_sets():
+    """A defaulted ``*_col``/``url``/``key`` parameter of a public
+    top-level function under finetoo_sp_spark/ must be set by some call
+    in the repository (by keyword, by position, or through a ``*``/``**``
+    splat); otherwise it is a constant and belongs in the body. A call
+    through ``functools.partial`` counts as a call, and a function used
+    as a value (passed around, stored) counts as setting every parameter."""
+    import ast
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    knob = re.compile(r".*_col|url|key")
+    sources = [
+        p for p in root.rglob("*.py")
+        if not any(s.startswith(".") or s == "__pycache__" for s in p.relative_to(root).parts)
+    ]
+    trees = {p: ast.parse(p.read_text()) for p in sources}
+
+    knobs = []  # (module, function, parameter, position or None)
+    for p, tree in trees.items():
+        if root / "finetoo_sp_spark" not in p.parents:
+            continue
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            for i, arg in enumerate(pos[first:], first):
+                if knob.fullmatch(arg.arg):
+                    knobs.append((p.relative_to(root), fn.name, arg.arg, i))
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None and knob.fullmatch(arg.arg):
+                    knobs.append((p.relative_to(root), fn.name, arg.arg, None))
+
+    def name_of(node):
+        return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
+
+    calls, as_value = {}, set()
+    for tree in trees.values():
+        callees = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                callees.add(id(n.func))
+                calls.setdefault(name_of(n.func), []).append((n.args, n.keywords))
+                if name_of(n.func) == "partial" and n.args:
+                    callees.add(id(n.args[0]))
+                    target = name_of(n.args[0])
+                    calls.setdefault(target, []).append((n.args[1:], n.keywords))
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in callees:
+                as_value.add(name_of(n))
+
+    def sets(args, keywords, param, idx):
+        if any(k.arg in (None, param) for k in keywords):
+            return True
+        if idx is None:
+            return False
+        return len(args) > idx or any(isinstance(x, ast.Starred) for x in args)
+
+    unset = [
+        f"{mod}::{fn}({param})"
+        for mod, fn, param, idx in knobs
+        if fn not in as_value
+        and not any(sets(args, kws, param, idx) for args, kws in calls.get(fn, []))
+    ]
+    assert not unset, unset
