@@ -364,16 +364,6 @@ def main() -> None:
     )
 
 
-def _steal_window(seconds: float) -> float | None:
-    """Steal %% over a short sleep window (None when /proc is absent)."""
-    s0, t0 = _cpu_steal_jiffies()
-    time.sleep(seconds)
-    s1, t1 = _cpu_steal_jiffies()
-    if t1 <= t0:
-        return None
-    return round(100.0 * (s1 - s0) / (t1 - t0), 2)
-
-
 def _loaded_steal_probe(seconds: float = 2.0) -> float | None:
     """Steal %% with every core briefly DEMANDING time — the honest
     quiet-window detector on a shared host (idle sampling reads ~0%

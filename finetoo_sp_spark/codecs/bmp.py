@@ -385,7 +385,6 @@ def encode_bmp_bitfields(
     *,
     bits: int = 32,
     masks: tuple[int, int, int] = (0x000000FF, 0x0000FF00, 0x00FF0000),
-    top_down: bool = False,
 ) -> bytes:
     """Deterministic BI_BITFIELDS encoder twin (40-byte header + the
     3 mask DWORDs). Channel values quantize to the mask width with the
@@ -399,7 +398,7 @@ def encode_bmp_bitfields(
     h, w, _ = img.shape
     if bits not in (16, 32):
         raise ValueError("BI_BITFIELDS encodes 16 or 32 bpp")
-    rows = img if top_down else img[::-1]
+    rows = img[::-1]  # bottom-up
     words = np.zeros((h, w), dtype=np.uint32)
     for ch, mask in enumerate(masks):
         shift = (mask & -mask).bit_length() - 1
@@ -415,7 +414,7 @@ def encode_bmp_bitfields(
     )
     info = struct.pack(
         "<IiihHIIiiII",
-        40, w, -h if top_down else h, 1, bits, 3,
+        40, w, h, 1, bits, 3,
         body.size, 2835, 2835, 0, 0,
     ) + struct.pack("<III", *masks)
     offset = 14 + 40 + 12

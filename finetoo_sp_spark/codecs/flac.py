@@ -630,8 +630,6 @@ def make_vorbis_comment_block(
     title: str = "",
     artist: str = "",
     album: str = "",
-    vendor: str = "finetoo-sp-spark",
-    last: bool = False,
 ) -> bytes:
     """Serialized VORBIS_COMMENT metadata block (fixture twin of
     :func:`parse_flac_tags`); splice after STREAMINFO."""
@@ -640,12 +638,13 @@ def make_vorbis_comment_block(
         for k, v in (("TITLE", title), ("ARTIST", artist), ("ALBUM", album))
         if v
     ]
-    body = len(vendor.encode()).to_bytes(4, "little") + vendor.encode()
+    vendor = b"finetoo-sp-spark"
+    body = len(vendor).to_bytes(4, "little") + vendor
     body += len(comments).to_bytes(4, "little")
     for c in comments:
         raw = c.encode("utf-8")
         body += len(raw).to_bytes(4, "little") + raw
-    hdr = bytes([(0x80 if last else 0) | 4]) + len(body).to_bytes(3, "big")
+    hdr = bytes([4]) + len(body).to_bytes(3, "big")  # type 4, not the last block
     return hdr + body
 
 

@@ -392,7 +392,7 @@ def encode_png_interlaced(arr: np.ndarray, filter_type=0) -> bytes:
     return _MAGIC + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
-def encode_png_gray_sub8(vals: np.ndarray, depth: int, filter_type=0) -> bytes:
+def encode_png_gray_sub8(vals: np.ndarray, depth: int) -> bytes:
     """1/2/4-bit grayscale PNG from (H, W) small-int values (level
     k renders as k * (255 // (2^depth - 1)))."""
     v = np.asarray(vals, dtype=np.uint8)
@@ -403,5 +403,5 @@ def encode_png_gray_sub8(vals: np.ndarray, depth: int, filter_type=0) -> bytes:
     h, w = v.shape
     rows = _pack_bits(v, depth)
     ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 0)
-    idat = zlib.compress(filter_raw(rows, 1, filter_type), 6)
+    idat = zlib.compress(filter_raw(rows, 1, 0), 6)
     return _MAGIC + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")

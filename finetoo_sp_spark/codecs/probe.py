@@ -340,8 +340,7 @@ def encode_tiff_header(width: int, height: int, *, big_endian: bool = False) -> 
     return out
 
 
-def make_ogg(codec: str, rate: int, channels: int, granule: int,
-             preskip: int = 312) -> bytes:
+def make_ogg(codec: str, rate: int, channels: int, granule: int) -> bytes:
     """Two-page Ogg stream: id-header page + a final page carrying the
     closing granule position. Page CRCs are left zero (unverified by
     the probe; see probe_audio_meta)."""
@@ -350,7 +349,7 @@ def make_ogg(codec: str, rate: int, channels: int, granule: int,
                   + struct.pack("<I", rate) + b"\x00" * 16 + b"\x01")
     elif codec == "opus":
         packet = (b"OpusHead" + bytes([1, channels])
-                  + struct.pack("<H", preskip)
+                  + struct.pack("<H", 312)
                   + struct.pack("<I", rate) + b"\x00\x00\x00")
     else:
         raise ValueError(f"unknown ogg codec {codec!r}")

@@ -285,9 +285,7 @@ def make_wav_g711_codes(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def encode_wav_ima_adpcm(
-    samples: np.ndarray, sample_rate: int, *, words_per_block: int = 63
-) -> bytes:
+def encode_wav_ima_adpcm(samples: np.ndarray, sample_rate: int) -> bytes:
     """Deterministic IMA ADPCM WAV writer (audio_format 0x11), mono or
     multichannel. Standard nibble quantization: code bits set greedily
     from step, step>>1, step>>2 against the prediction error, then the
@@ -297,6 +295,7 @@ def encode_wav_ima_adpcm(
     if s.ndim == 1:
         s = s[:, None]
     n_frames, channels = s.shape
+    words_per_block = 63  # 4-byte data words per channel after each block header
     frames_per_block = 1 + words_per_block * 8
     block_align = 4 * channels + words_per_block * 4 * channels
     pad = (-(n_frames - 1)) % (frames_per_block - 1) if n_frames > 1 else 0

@@ -176,7 +176,7 @@ def q_emb_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dd.embedding_near_dup_pairs) stays a test-only small-SF oracle
     (tests/test_dedup_similarity.py)."""
     return dd.embedding_near_dup_pairs_bucketed(
-        T(spark, sf_dir, "embeddings"), threshold=0.4, n_bits=8
+        T(spark, sf_dir, "embeddings"), threshold=0.4
     )
 
 
@@ -249,7 +249,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") % 3).cast("string"),
         ).alias("text"),
     )
-    out = dd.line_dedup(corpus, "doc_id", "text", max_line_df=2)
+    out = dd.line_dedup(corpus, "doc_id", "text")
     return out.select(F.col("id").alias("doc_id"), "text")
 
 
@@ -282,7 +282,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         k=4,
-        iters=2,
         threshold=0.4,
         n_bits=8,
     )
@@ -349,7 +348,7 @@ def q_edit_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
     )
     return edit_verify_pairs(
-        d, pairs, "doc_id", "text", max_ratio_fp=2000, broadcast_pairs=True
+        d, pairs, "doc_id", "text", broadcast_pairs=True
     )
 
 
@@ -427,9 +426,7 @@ def q_dedup_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, never a global sort. Oracle recomputes every window hash."""
     from finetoo_sp_spark.operators.substrdedup import window_dup_stats
 
-    return window_dup_stats(
-        _win_corpus(spark, sf_dir), "doc_id", "text", k=8, hash_mode="sha"
-    )
+    return window_dup_stats(_win_corpus(spark, sf_dir), k=8, hash_mode="sha")
 
 
 @_q(
@@ -475,9 +472,7 @@ def q_dedup_window_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tails; byte-exact clean_text checked by the oracle."""
     from finetoo_sp_spark.operators.substrdedup import remove_duplicate_windows
 
-    return remove_duplicate_windows(
-        _win_corpus(spark, sf_dir), "doc_id", "text", k=8, hash_mode="sha"
-    )
+    return remove_duplicate_windows(_win_corpus(spark, sf_dir), k=8, hash_mode="sha")
 
 
 @_q(
@@ -579,11 +574,7 @@ def q_canonical_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit(""),
     )
-    return dd.canonical_dedup(
-        pages.select("url", canon.alias("canonical_url")),
-        "url",
-        "canonical_url",
-    )
+    return dd.canonical_dedup(pages.select("url", canon.alias("canonical_url")))
 
 
 @_q(
@@ -617,7 +608,7 @@ def q_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    return nfc_normalize_text(corpus, "doc_id", "text")
+    return nfc_normalize_text(corpus)
 
 
 # ---------------------------------------------------------------- CDC
@@ -667,8 +658,7 @@ def q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.operators.cdc import cdc_chunks
 
     chunks = cdc_chunks(
-        _win_corpus(spark, sf_dir), "doc_id", "text",
-        window=4, divisor=16, hash_mode="sha",
+        _win_corpus(spark, sf_dir), window=4, divisor=16, hash_mode="sha"
     )
     return chunks.groupBy("id", "n_tokens").agg(
         F.count(F.lit(1)).alias("n_chunks"),
@@ -714,7 +704,4 @@ def q_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(id); both skew-free at 10^12 docs."""
     from finetoo_sp_spark.operators.cdc import cdc_dedup_stats
 
-    return cdc_dedup_stats(
-        _win_corpus(spark, sf_dir), "doc_id", "text",
-        window=4, divisor=16, hash_mode="sha",
-    )
+    return cdc_dedup_stats(_win_corpus(spark, sf_dir), hash_mode="sha")

@@ -100,7 +100,7 @@ def q_shared_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.operators.divergence import shared_names
 
     blocks = _extracted_blocks_named(spark, sf_dir)
-    return shared_names(blocks, "name", "url", min_docs=2)
+    return shared_names(blocks, "name", "url")
 
 
 @_q(
@@ -196,7 +196,7 @@ def q_bom_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.operators.sinks import format_bom_lines
 
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
-    bom = bom_report(build_web_graph(pages), edge_type="LINKS_TO")
+    bom = bom_report(build_web_graph(pages))
     return format_bom_lines(bom)
 
 
@@ -234,5 +234,5 @@ def q_bom_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.operators.divergence import bom_report, bom_totals
 
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
-    bom = bom_report(build_web_graph(pages), edge_type="LINKS_TO")
+    bom = bom_report(build_web_graph(pages))
     return bom_totals(bom)

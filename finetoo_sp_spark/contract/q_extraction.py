@@ -170,7 +170,7 @@ def q_web_bom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
     g = build_web_graph(pages)
-    bom = bom_report(g, edge_type="LINKS_TO")
+    bom = bom_report(g)
     return bom.select(
         "part", "quantity", F.size("sources").cast("long").alias("n_sources")
     )

@@ -605,7 +605,7 @@ def q_frame_sample_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.datagen import gen_assets, gen_mp4_pandas
     from finetoo_sp_spark.multimodal import frame_sample_times
 
-    return frame_sample_times(gen_assets(spark, gen_mp4_pandas, 96), interval_ms=500)
+    return frame_sample_times(gen_assets(spark, gen_mp4_pandas, 96))
 
 
 @_q(

@@ -284,7 +284,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
     g = build_web_graph(pages)
     edges = g.edges.filter(F.col("edge_type") == "LINKS_TO")
-    pr = pagerank_fixed_point(edges, iterations=5)
+    pr = pagerank_fixed_point(edges)
     return pr.select(F.col("id").alias("url"), "rank_fp")
 
 

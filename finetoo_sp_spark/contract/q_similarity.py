@@ -72,7 +72,7 @@ def q_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     operating-point numbers."""
     emb = T(spark, sf_dir, "embeddings")
     return sim.ann_recall_curve(
-        emb, emb.filter(F.col("vec_id") < 50), k=10, n_bits=8, n_tables_list=(1, 2, 3)
+        emb, emb.filter(F.col("vec_id") < 50)
     )
 
 
@@ -83,7 +83,7 @@ def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall dial over the single-table ann_lsh_bucketed."""
     emb = T(spark, sf_dir, "embeddings")
     return sim.ann_lsh_multiprobe(
-        emb, emb.filter(F.col("vec_id") < 5), k=5, n_bits=8, n_tables=3
+        emb, emb.filter(F.col("vec_id") < 5), k=5, n_tables=3
     )
 
 
@@ -193,7 +193,6 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.col("source") == "src0",
         n_buckets=256,
-        scale=1 << 16,
     )
 
 
@@ -257,8 +256,6 @@ def q_ccnet_lm_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         F.col("source") == "src0",
-        n_buckets=256,
-        scale=1 << 16,
     )
 
 

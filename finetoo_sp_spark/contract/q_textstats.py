@@ -91,7 +91,7 @@ SELECT doc_id AS id, count(*) AS n_fingerprints, min(fingerprint) AS min_fingerp
 FROM fp GROUP BY doc_id""",
 )
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.fingerprint_summary(T(spark, sf_dir, "documents"), "doc_id", "text", k=3, window=4)
+    return ts.fingerprint_summary(T(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @_q(
@@ -260,8 +260,7 @@ def q_template_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.operators.textstats import template_ngrams
 
     return template_ngrams(
-        T(spark, sf_dir, "documents"), "source", "doc_id", "text",
-        n=2, min_pages=10, ratio_ppm=150_000,
+        T(spark, sf_dir, "documents"), "source", "doc_id", "text", ratio_ppm=150_000,
     )
 
 
@@ -333,7 +332,7 @@ def q_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return hashed_linear_scores(
         T(spark, sf_dir, "documents"), "doc_id", "text",
-        n_buckets=1 << 16, weight_span=1000, scale=1 << 16, threshold_fp=0,
+        n_buckets=1 << 16, threshold_fp=0,
     )
 
 
@@ -546,7 +545,7 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring("text", 1, F.floor(F.col("n_chars") / 2).cast("int")).alias("text"),
         )
     )
-    return ts.containment_pairs(corpus, "id", "text", k=3, window=4, threshold=0.6)
+    return ts.containment_pairs(corpus, "id", "text", threshold=0.6)
 
 
 @_q(
@@ -579,7 +578,7 @@ SELECT ngram, df_docs FROM d ORDER BY df_docs DESC, ngram LIMIT 20""",
 def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level bigram document-frequency top-20 — the boilerplate
     discovery / max_df tuning surface."""
-    return dd.top_ngrams(T(spark, sf_dir, "documents"), "doc_id", "text", n=2, k=20)
+    return dd.top_ngrams(T(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 GOPHER_ORACLE = f"""

@@ -218,12 +218,11 @@ def gen_pages(
     spark: SparkSession,
     n_pages: int,
     partitions: int | None = None,
-    page_scale: int = 1,
     pdf_every: int = 0,
 ) -> DataFrame:
     """Distributed deterministic corpus: spark.range -> mapInPandas."""
     partitions = partitions or max(1, min(256, n_pages // 2000 or 1))
-    gen = partial(gen_pages_pandas, page_scale=page_scale, pdf_every=pdf_every)
+    gen = partial(gen_pages_pandas, pdf_every=pdf_every)
     return gen_assets(spark, gen, n_pages, partitions, schema=PAGES_SCHEMA)
 
 
@@ -232,12 +231,8 @@ def write_pages(
     n_pages: int,
     path: str,
     partitions: int | None = None,
-    page_scale: int = 1,
-    pdf_every: int = 0,
 ) -> None:
-    gen_pages(spark, n_pages, partitions, page_scale, pdf_every).write.mode(
-        "overwrite"
-    ).parquet(path)
+    gen_pages(spark, n_pages, partitions).write.mode("overwrite").parquet(path)
 
 
 IMAGE_ASSETS_SCHEMA = StructType(

@@ -62,13 +62,13 @@ WEB_FIELD_RULES: list[FieldRule] = [
 ]
 
 
-def parse_double_with_fallback(col: Column | str, default: float = 0.0) -> Column:
+def parse_double_with_fallback(col: Column | str) -> Column:
     """Numeric parse with fallback (reference: GetDouble,
     dxf_text_parser.cc:31-49 + graph_builder.cc:124-130 — std::stod with
     fallback to the string/default on failure). try_cast keeps malformed
     content from ever failing a task under ANSI mode."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c.try_cast("double"), F.lit(default))
+    return F.coalesce(c.try_cast("double"), F.lit(0.0))
 
 
 def _typed(col: Column, dtype: str) -> Column:
@@ -85,21 +85,14 @@ def field_expr(rule: FieldRule, html_col: Column) -> Column:
     return _typed(F.when(raw != "", raw), rule.dtype).alias(rule.name)
 
 
-def map_fields(
-    pages: DataFrame,
-    rules: list[FieldRule] | None = None,
-    keep: list[str] | None = None,
-) -> DataFrame:
+def map_fields(pages: DataFrame, rules: list[FieldRule] | None = None) -> DataFrame:
     """pages(url, html) -> (url, <one typed column per rule>). Pure Catalyst plan.
     The decoded html is staged as a bound attribute so the N rules share
     ONE decode instead of embedding (and re-evaluating) the decode
     expression once per rule."""
     rules = rules if rules is not None else WEB_FIELD_RULES
-    keep = keep or ["url"]
-    staged = pages.select(*keep, F.decode(F.col("html"), "UTF-8").alias("_html"))
-    return staged.select(
-        *keep, *[field_expr(r, F.col("_html")) for r in rules]
-    )
+    staged = pages.select("url", F.decode(F.col("html"), "UTF-8").alias("_html"))
+    return staged.select("url", *[field_expr(r, F.col("_html")) for r in rules])
 
 
 def register_field_schema(schema, node_type: str, rules: list[FieldRule]) -> None:

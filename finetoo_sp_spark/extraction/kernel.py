@@ -325,6 +325,20 @@ def classify_arrays(tf: TokenFrame) -> BlockFrame:
     )
 
 
+def _resolve_hrefs(out: pd.DataFrame) -> pd.DataFrame:
+    """Resolve each row's ``target`` href against its page ``url`` and keep
+    only http(s) targets: a protocol-relative ``//host/path`` takes the
+    page's scheme, any other root-relative ``/path`` the page's scheme and
+    host."""
+    host = out["url"].str.extract(_HOST_RE, expand=False).fillna("")
+    scheme = host.str.extract(r"^([^:]*:)", expand=False).fillna("")
+    t = out["target"]
+    out["target"] = np.where(
+        t.str.startswith("//"), scheme + t, np.where(t.str.startswith("/"), host + t, t)
+    )
+    return out[out["target"].str.match(r"https?://", na=False)]
+
+
 def extract_links(urls: pd.Series, html_text: pd.Series) -> pd.DataFrame:
     """Per-page outbound links, relative hrefs resolved against the page
     host (reference analogue: INSERT -> block REFERENCES edges,
@@ -337,11 +351,7 @@ def extract_links(urls: pd.Series, html_text: pd.Series) -> pd.DataFrame:
     )
     if out.empty:
         return pd.DataFrame({"url": pd.Series(dtype=object), "target": pd.Series(dtype=object)})
-    host = out["url"].str.extract(_HOST_RE, expand=False).fillna("")
-    rel = out["target"].str.startswith("/")
-    out["target"] = np.where(rel, host + out["target"], out["target"])
-    out = out[out["target"].str.match(r"https?://", na=False)]
-    return out.reset_index(drop=True)
+    return _resolve_hrefs(out).reset_index(drop=True)
 
 
 def extract_anchors(urls: pd.Series, html_text: pd.Series) -> pd.DataFrame:
@@ -349,9 +359,10 @@ def extract_anchors(urls: pd.Series, html_text: pd.Series) -> pd.DataFrame:
     classic web-corpus signal (anchor text describing the *target* page,
     used for retrieval and anchor-conditioned pretraining data).
 
-    Same href resolution as :func:`extract_links` (relative -> page
-    host, non-http dropped); anchor text is the <a>...</a> inner HTML
-    with nested tags stripped and whitespace collapsed. Links whose
+    Same href resolution as :func:`extract_links` (``//`` -> page
+    scheme, other relative -> page host, non-http dropped); anchor text
+    is the <a>...</a> inner HTML with nested tags stripped and
+    whitespace collapsed. Links whose
     anchor is empty after stripping (image-only anchors) are kept with
     anchor ''. Returns columns (url, target, anchor).
     """
@@ -372,11 +383,7 @@ def extract_anchors(urls: pd.Series, html_text: pd.Series) -> pd.DataFrame:
     out["target"] = out["pair"].str[0]
     anchor = out["pair"].str[1].str.replace(_TAG_RE, "", regex=True)
     out["anchor"] = anchor.str.replace(_WS_RE, " ", regex=True).str.strip()
-    host = out["url"].str.extract(_HOST_RE, expand=False).fillna("")
-    rel = out["target"].str.startswith("/")
-    out["target"] = np.where(rel, host + out["target"], out["target"])
-    out = out[out["target"].str.match(r"https?://", na=False)]
-    return out[["url", "target", "anchor"]].reset_index(drop=True)
+    return _resolve_hrefs(out)[["url", "target", "anchor"]].reset_index(drop=True)
 
 
 def blocks_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:

@@ -248,7 +248,6 @@ def encrypt_pdf(
     user_pw: bytes = b"",
     owner_pw: bytes = b"secret-owner",
     rev: int = 3,
-    permissions: int = -44,
 ) -> bytes:
     """Fixture twin of ``decrypt_pdf``: encrypt every stream of a plain
     PDF and append the /Encrypt dict + /ID to the trailer. rev 2 =
@@ -259,7 +258,7 @@ def encrypt_pdf(
     key_len = 5 if rev == 2 else 16
     id0 = hashlib.md5(b"fixture-id:" + data[:256]).digest()
     o_entry = compute_o(owner_pw, user_pw, rev, key_len)
-    key = compute_key(user_pw, o_entry, permissions, id0, rev, key_len)
+    key = compute_key(user_pw, o_entry, -44, id0, rev, key_len)
     u_entry = compute_u(key, id0, rev)
 
     out = bytearray(data)
@@ -283,7 +282,7 @@ def encrypt_pdf(
     enc_num = max_num + 1
     enc_obj = (
         f"{enc_num} 0 obj<</Filter/Standard/V {1 if rev == 2 else 2}"
-        f"/R {rev}/Length {key_len * 8}/P {permissions}"
+        f"/R {rev}/Length {key_len * 8}/P -44"
         f"/O <{o_entry.hex().upper()}>/U <{u_entry.hex().upper()}>"
         f">>\nendobj\n"
     ).encode()

@@ -49,13 +49,13 @@ def _hit(col: Column) -> Column:
     return F.lower(col).rlike(_PATTERN)
 
 
-def soft404_flags(extracted: DataFrame, thin_chars: int = 200) -> DataFrame:
+def soft404_flags(extracted: DataFrame) -> DataFrame:
     """extraction output (url, title, h1, text, content_chars) ->
     (url, is_soft404, reason)."""
     title_hit = _hit(F.coalesce(F.col("title"), F.lit("")))
     h1_hit = _hit(F.coalesce(F.col("h1"), F.lit("")))
     body_hit = _hit(F.coalesce(F.col("text"), F.lit(""))) & (
-        F.col("content_chars") < thin_chars
+        F.col("content_chars") < 200
     )
     reason = (
         F.when(title_hit, F.lit("title"))

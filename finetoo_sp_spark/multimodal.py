@@ -304,14 +304,12 @@ def image_dhash(assets: DataFrame) -> DataFrame:
     return per_asset(assets, DHASH_SCHEMA, row)
 
 
-def dhash_pairs(
-    hashes: DataFrame, max_hamming: int = 7, bucket_cap: int | None = 10_000
-) -> DataFrame:
+def dhash_pairs(hashes: DataFrame, max_hamming: int = 7) -> DataFrame:
     """(id_a, id_b, hamming) — image near-dup pairs from dHash values by
     pigeonhole banding (identical machinery to text SimHash pairs:
     max_hamming+1 bands guarantee every pair within distance d shares an
     exact band; verify with bit_count(xor); hot buckets salt-split past
-    ``bucket_cap``). The decode kernel runs once per image; the pair
+    10,000 rows). The decode kernel runs once per image; the pair
     join runs on 8-byte fingerprints only — at 100 TB the image bytes
     never shuffle.
     """
@@ -337,7 +335,7 @@ def dhash_pairs(
         ).alias("bb"),
     ).select("id", "dhash", "bb.band", "bb.bits")
     pairs = _bucket_self_pairs(
-        banded, ["band", "bits"], payload_cols=["dhash"], bucket_cap=bucket_cap
+        banded, ["band", "bits"], payload_cols=["dhash"], bucket_cap=10_000
     )
     return (
         pairs.select(
@@ -420,21 +418,21 @@ def image_dimensions(assets: DataFrame) -> DataFrame:
     return per_asset(assets, DIMS_SCHEMA, lambda a, raw: [(a, *probe_image_dims(raw))])
 
 
-def frame_sample_times(assets: DataFrame, interval_ms: int = 500) -> DataFrame:
+def frame_sample_times(assets: DataFrame) -> DataFrame:
     """Time-based video frame sampling driven by the REAL container
     parse: probe each MP4's mvhd duration (video_metadata), then emit
-    one (asset_id, sample_idx, ts_ms) row per ``interval_ms`` — the
+    one (asset_id, sample_idx, ts_ms) row per 500 ms — the
     work-list a frame-decode stage would map over (no video codec here
     decodes the frames themselves). The explode is bounded
     by duration/interval, stays JVM-side (sequence + explode), and
     partitions by asset like any downstream decode batch would need."""
     meta = video_metadata(assets).select("asset_id", "duration_ms")
     ts = F.explode(
-        F.sequence(F.lit(0), F.col("duration_ms"), F.lit(int(interval_ms)))
+        F.sequence(F.lit(0), F.col("duration_ms"), F.lit(500))
     ).alias("ts_ms")
     return meta.select("asset_id", ts).select(
         "asset_id",
-        (F.col("ts_ms") / F.lit(int(interval_ms))).cast("long").alias("sample_idx"),
+        (F.col("ts_ms") / F.lit(500)).cast("long").alias("sample_idx"),
         F.col("ts_ms").cast("long").alias("ts_ms"),
     )
 

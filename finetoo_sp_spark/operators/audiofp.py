@@ -9,14 +9,14 @@ pitch proxy, energy the loudness envelope — see Wang'03 §2 for the
 landmark family this simplifies). Everything is INTEGER, so a DuckDB
 oracle recomputes the fingerprints from the synthesis formula alone.
 
-Fingerprint layout over the first ``n_frames`` non-overlapping frames
-of ``frame_len`` mono samples:
+Fingerprint layout over the first ``N_FRAMES`` (6) non-overlapping
+frames of ``FRAME_LEN`` (64) mono samples:
 
 - ``energy_fp``: per frame, hex(min(15, bit_length(mean_abs))) where
-  mean_abs = sum(|x|) // frame_len — a log2 loudness nibble;
+  mean_abs = sum(|x|) // FRAME_LEN — a log2 loudness nibble;
 - ``zcr_fp``: per frame, hex(min(15, internal sign transitions)) — a
   pitch nibble. Transitions are counted strictly inside the frame
-  (pairs k-1,k for k in 1..frame_len-1), so frames are independent.
+  (pairs k-1,k for k in 1..FRAME_LEN-1), so frames are independent.
 
 Near-dup rule: assets with the SAME ``zcr_fp`` (same pitch contour,
 any loudness/duration) form a cluster keyed by the min asset id —
@@ -45,27 +45,27 @@ FP_SCHEMA = StructType(
         StructField("zcr_fp", StringType(), False),
     ]
 )
+FRAME_LEN = 64
+N_FRAMES = 6
 
 
-def audio_fingerprint(
-    assets: DataFrame, frame_len: int = 64, n_frames: int = 6
-) -> DataFrame:
+def audio_fingerprint(assets: DataFrame) -> DataFrame:
     """(asset_id, energy_fp, zcr_fp) per decodable audio asset.
 
-    Assets shorter than ``frame_len * n_frames`` mono samples are
+    Assets shorter than ``FRAME_LEN * N_FRAMES`` mono samples are
     SKIPPED (a fingerprint over padding would collide everything), as
     are undecodable payloads — never task-fatal. Multi-channel audio
     fingerprints channel 0."""
     from finetoo_sp_spark.codecs.wav import decode_wav
 
-    need = frame_len * n_frames
+    need = FRAME_LEN * N_FRAMES
 
     def row(asset_id, raw):
         mono = decode_wav(raw)[3][:, 0]  # decode_wav: (n_frames, n_channels)
         if mono.shape[0] < need:
             return []
-        fr = mono[:need].astype(np.int64).reshape(n_frames, frame_len)
-        mean_abs = np.abs(fr).sum(axis=1) // frame_len
+        fr = mono[:need].astype(np.int64).reshape(N_FRAMES, FRAME_LEN)
+        mean_abs = np.abs(fr).sum(axis=1) // FRAME_LEN
         eq = [min(15, int(m).bit_length()) for m in mean_abs]
         sign_flip = (fr[:, 1:] >= 0) != (fr[:, :-1] >= 0)
         zq = np.minimum(15, sign_flip.sum(axis=1))
@@ -74,14 +74,12 @@ def audio_fingerprint(
     return per_asset(assets, FP_SCHEMA, row)
 
 
-def audio_dup_clusters(
-    assets: DataFrame, frame_len: int = 64, n_frames: int = 6
-) -> DataFrame:
+def audio_dup_clusters(assets: DataFrame) -> DataFrame:
     """(asset_id, energy_fp, zcr_fp, cluster_id, n_cluster): cluster =
     all assets sharing a pitch contour (zcr_fp), keyed by min asset id.
     ``n_cluster`` sizes the cluster; keep/drop policy composes on top
     exactly as with exact_dedup (keep = asset_id == cluster_id)."""
-    fp = audio_fingerprint(assets, frame_len, n_frames)
+    fp = audio_fingerprint(assets)
     clusters = fp.groupBy("zcr_fp").agg(
         F.min("asset_id").alias("cluster_id"),
         F.count(F.lit(1)).alias("n_cluster"),

@@ -40,8 +40,6 @@ from finetoo_sp_spark.operators.dedup import _base_hash, _norm_words
 
 def cdc_chunks(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 4,
     divisor: int = 16,
     hash_mode: str = "xxhash64",
@@ -58,8 +56,8 @@ def cdc_chunks(
     if window < 1 or divisor < 1:
         raise ValueError("window and divisor must be >= 1")
     w = (
-        df.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col).alias("id"), _norm_words(text_col).alias("_w"))
+        df.filter(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id").alias("id"), _norm_words("text").alias("_w"))
         .withColumn("n_tokens", F.size("_w"))
     )
     # boundary positions: local window-hash predicate, end position
@@ -119,10 +117,6 @@ def cdc_chunks(
 
 def cdc_dedup_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 4,
-    divisor: int = 16,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Per-doc chunk-dedup statistics: (id, n_tokens, n_chunks,
@@ -135,7 +129,7 @@ def cdc_dedup_stats(
     chunk_hash partition, one groupBy(id), and a left join back to the
     full id set — two uniform-key shuffles total.
     """
-    chunks = cdc_chunks(df, id_col, text_col, window, divisor, hash_mode)
+    chunks = cdc_chunks(df, hash_mode=hash_mode)
     occ = F.count(F.lit(1)).over(Window.partitionBy("chunk_hash"))
     per_doc = (
         chunks.withColumn("n_occ", occ)
@@ -151,7 +145,7 @@ def cdc_dedup_stats(
             ).alias("dup_tokens"),
         )
     )
-    ids = df.select(F.col(id_col).alias("id")).distinct()
+    ids = df.select(F.col("doc_id").alias("id")).distinct()
     return ids.join(per_doc, "id", "left").select(
         "id",
         F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),

@@ -44,15 +44,13 @@ def hashed_linear_scores(
     text_col: str,
     weights: DataFrame | None = None,
     n_buckets: int = 1 << 16,
-    weight_span: int = 1000,
-    scale: int = 1 << 16,
     threshold_fp: int = 0,
 ) -> DataFrame:
     """(id, n_feats, score_fp, keep) — one row per input document.
 
     ``weights``: optional (bucket, w) table; defaults to the
     deterministic hash-derived table described in the module docstring.
-    ``threshold_fp`` is in score_fp units (score_fp = margin * scale /
+    ``threshold_fp`` is in score_fp units (score_fp = margin * 2^16 /
     n_feats, margin in raw weight units).
     """
     ws = _words(text_col)
@@ -62,7 +60,7 @@ def hashed_linear_scores(
     ).select("id", _bucket(F.col("feat"), n_buckets).alias("bucket"))
 
     if weights is None:
-        span = weight_span
+        span = 1000
         w = _bucket(F.concat(F.lit("w#"), F.col("bucket")), 2 * span + 1) - span
         scored = feats.select("id", w.alias("w"))
     else:
@@ -76,7 +74,7 @@ def hashed_linear_scores(
         .select(
             "id",
             "n_feats",
-            F.expr(f"(margin * {scale}) div n_feats").alias("score_fp"),
+            F.expr("(margin * 65536) div n_feats").alias("score_fp"),
         )
         .withColumn("keep", F.col("score_fp") >= F.lit(threshold_fp))
     )

@@ -109,7 +109,6 @@ def kmeans_assign(
     vec_col: str,
     k: int = 4,
     iters: int = 2,
-    scale: int = 1 << 20,
 ) -> DataFrame:
     """Lloyd's k-means over an ``array<float>`` column; returns
     ``(id, cluster)`` after ``iters`` assignment passes.
@@ -123,7 +122,7 @@ def kmeans_assign(
     ``iters`` assignment passes means ``iters - 1`` centroid updates —
     the returned labels are the assignment against the last update.
     """
-    return kmeans_fit(emb, id_col, vec_col, k=k, iters=iters, scale=scale)[1]
+    return kmeans_fit(emb, id_col, vec_col, k=k, iters=iters)[1]
 
 
 def semdedup_survivors(
@@ -131,7 +130,6 @@ def semdedup_survivors(
     id_col: str,
     vec_col: str,
     k: int = 4,
-    iters: int = 2,
     threshold: float = 0.4,
     n_bits: int = 8,
 ) -> DataFrame:
@@ -145,7 +143,7 @@ def semdedup_survivors(
     """
     from .similarity import sign_bucket, with_norm
 
-    labels = kmeans_assign(emb, id_col, vec_col, k=k, iters=iters)
+    labels = kmeans_assign(emb, id_col, vec_col, k=k)
     nd = (
         with_norm(emb, id_col, vec_col)
         .join(labels, "id")

@@ -38,7 +38,10 @@ def _sym(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev).filter(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+MAX_ITER = 30
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(id, component) for every id appearing in ``pairs`` (id_a, id_b).
 
     component = min id reachable — deterministic regardless of partition
@@ -60,13 +63,13 @@ def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     if adapted:
         spark.conf.set("spark.sql.shuffle.partitions", str(target))
     try:
-        return _cc_loop(e, max_iter)
+        return _cc_loop(e)
     finally:
         if adapted:
             spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
-def _cc_loop(e: DataFrame, max_iter: int) -> DataFrame:
+def _cc_loop(e: DataFrame) -> DataFrame:
     lab = (
         e.groupBy("u")
         .agg(F.min("v").alias("nmin"))
@@ -74,7 +77,7 @@ def _cc_loop(e: DataFrame, max_iter: int) -> DataFrame:
         .localCheckpoint()
     )
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # (a) neighbor propagation: min label among neighbors
         nb = (
             e.join(

@@ -565,9 +565,9 @@ def simhash_pairs(
     )
 
 
-def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
+def embedding_near_dup_pairs(emb: DataFrame) -> DataFrame:
     """All pairs (id_a < id_b) of (vec_id, embedding) rows with cosine
-    similarity >= threshold.
+    similarity >= 0.95.
 
     JVM-side arithmetic: F.aggregate over zip_with products (no UDF).
     O(n^2) by construction — the small-SF verification oracle for the
@@ -586,15 +586,12 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFra
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", F.round(dot, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.95)
     )
 
 
 def embedding_near_dup_pairs_bucketed(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    n_bits: int = 8,
-    bucket_cap: int | None = 10_000,
+    emb: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
     """Scale-safe embedding near-dup: sign-LSH bucket, exact cosine only
     WITHIN buckets — the registered 100 TB path (no crossJoin anywhere
@@ -603,7 +600,7 @@ def embedding_near_dup_pairs_bucketed(
     Recall: misses cross-bucket pairs by design (a pair at cosine ~1 has
     near-identical coordinates, so sign buckets agree except for
     coordinates near 0 — acceptable for near-DUP detection; add probe
-    tables for higher recall). Buckets above ``bucket_cap`` (embedding
+    tables for higher recall). Buckets above 10,000 rows (embedding
     collapse / repeated content) are salt-split so no task goes
     quadratic.
     """
@@ -612,8 +609,8 @@ def embedding_near_dup_pairs_bucketed(
     # unit vectors preserve coordinate signs, so bucketing the normalized
     # vector equals bucketing the raw one — one pass computes both.
     v = with_norm(emb, "vec_id", "embedding")
-    v = v.withColumn("bucket", sign_bucket("unit", n_bits))
-    pairs = _bucket_self_pairs(v, ["bucket"], payload_cols=["unit"], bucket_cap=bucket_cap)
+    v = v.withColumn("bucket", sign_bucket("unit", 8))
+    pairs = _bucket_self_pairs(v, ["bucket"], payload_cols=["unit"], bucket_cap=10_000)
     dot = F.aggregate(
         F.zip_with("unit_a", "unit_b", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -660,31 +657,24 @@ def contamination_flags(
     )
 
 
-def top_ngrams(
-    df: DataFrame, id_col: str, text_col: str, n: int = 2, k: int = 20
-) -> DataFrame:
-    """Corpus-level n-gram document-frequency table, top k by df — the
+def top_ngrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Corpus-level word-bigram document-frequency table, top 20 by df — the
     inspection surface for boilerplate discovery and stop-shingle
     tuning (what max_df should be set to). Deterministic tie-break on
     the ngram string."""
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df, id_col, text_col, 2)
     return (
         sh.groupBy(F.col("shingle").alias("ngram"))
         .agg(F.count(F.lit(1)).alias("df_docs"))
         .orderBy(F.desc("df_docs"), F.asc("ngram"))
-        .limit(k)
+        .limit(20)
     )
 
 
-def line_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_line_df: int = 2,
-) -> DataFrame:
+def line_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """C4-style line-level deduplication (Raffel et al. 2020 §2.2:
     "discarded any line that occurred more than X times in the corpus"):
-    lines whose corpus-wide occurrence count exceeds ``max_line_df`` are
+    lines that occur more than twice corpus-wide are
     removed from every document; surviving lines keep their original
     order. The boilerplate killer exact-document dedup can't touch —
     shared footers/cookie banners repeat across otherwise-distinct pages.
@@ -703,7 +693,7 @@ def line_dedup(
     hot = (
         lines.groupBy("line_sha")
         .agg(F.count(F.lit(1)).alias("line_count"))
-        .filter(F.col("line_count") > max_line_df)
+        .filter(F.col("line_count") > 2)
         .select("line_sha")
     )
     kept = lines.join(hot, "line_sha", "left_anti")
@@ -722,7 +712,6 @@ def edit_verify_pairs(
     pairs: DataFrame,
     id_col: str,
     text_col: str,
-    max_ratio_fp: int = 2000,
     broadcast_pairs: bool = False,
 ) -> DataFrame:
     """Exact edit-distance verification of candidate duplicate pairs.
@@ -732,7 +721,7 @@ def edit_verify_pairs(
     (id_a, id_b, lev, ratio_fp, is_dup) with Levenshtein distance
     computed JVM-side (F.levenshtein, classic DP) and
     ``ratio_fp = lev * 10000 div max(len_a, len_b)`` in integer fixed
-    point; ``is_dup = ratio_fp <= max_ratio_fp``.
+    point; ``is_dup = ratio_fp <= 2000`` (at most 20% of the longer text).
 
     Scale story (100 TB): the candidate set is LSH-pruned and thus
     orders of magnitude smaller than the corpus, so the two text
@@ -763,7 +752,7 @@ def edit_verify_pairs(
             "lev",
             F.expr("CAST(lev AS BIGINT) * 10000 div _maxlen").alias("ratio_fp"),
         )
-        .withColumn("is_dup", F.col("ratio_fp") <= max_ratio_fp)
+        .withColumn("is_dup", F.col("ratio_fp") <= 2000)
     )
 
 
@@ -882,11 +871,7 @@ def host_boilerplate_strip(
     )
 
 
-def canonical_dedup(
-    pages: DataFrame,
-    url_col: str = "url",
-    canonical_col: str = "canonical_url",
-) -> DataFrame:
+def canonical_dedup(pages: DataFrame) -> DataFrame:
     """rel=canonical cluster dedup — the FIRST dedup signal a real
     crawl applies, before any content hashing: mobile/AMP/print
     variants of a page declare a shared ``<link rel="canonical">``
@@ -905,14 +890,13 @@ def canonical_dedup(
     declared-canonical key space is naturally per-page, so no cap is
     applied here.
 
-    Returns (url, cluster_url, cluster_size, is_survivor).
+    Reads (url, canonical_url); returns (url, cluster_url, cluster_size,
+    is_survivor).
     """
     from pyspark.sql.window import Window
 
-    cluster = F.coalesce(F.col(canonical_col), F.col(url_col))
     w = Window.partitionBy("cluster_url")
-    u = F.col(url_col)
-    base = pages.select(u.alias("url"), cluster.alias("cluster_url"))
+    base = pages.select("url", F.coalesce("canonical_url", "url").alias("cluster_url"))
     has_self = F.max((F.col("url") == F.col("cluster_url")).cast("int")).over(w)
     return base.select(
         "url",

@@ -77,18 +77,18 @@ def divergence_totals(report: DataFrame) -> DataFrame:
     )
 
 
-def shared_names(df: DataFrame, name_col: str, doc_col: str, min_docs: int = 2) -> DataFrame:
-    """Names present in >= min_docs distinct documents (n-way intersect,
+def shared_names(df: DataFrame, name_col: str, doc_col: str) -> DataFrame:
+    """Names present in >= 2 distinct documents (n-way intersect,
     reference: block_analyzer.cc:45-52)."""
     return (
         df.groupBy(F.col(name_col).alias("name"))
         .agg(F.countDistinct(doc_col).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
         .orderBy("name")
     )
 
 
-def bom_report(g: PropertyGraphFrames, edge_type: str = "LINKS_TO") -> DataFrame:
+def bom_report(g: PropertyGraphFrames) -> DataFrame:
     """Per referenced target: instance count + sorted source list
     (reference BOM semantics: INSERT count per block name + source
     drawings, bom_exporter.cc:36-89, sorted by quantity desc :83-88).
@@ -96,7 +96,7 @@ def bom_report(g: PropertyGraphFrames, edge_type: str = "LINKS_TO") -> DataFrame
     One groupBy replaces the reference's nested rescan; sort_array keeps
     the provenance list deterministic.
     """
-    refs = g.edges.filter(F.col("edge_type") == edge_type)
+    refs = g.edges.filter(F.col("edge_type") == "LINKS_TO")
     return (
         refs.groupBy(F.col("dst").alias("part"))
         .agg(

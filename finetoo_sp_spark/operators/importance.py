@@ -61,7 +61,6 @@ def dsir_scores(
     text_col: str,
     target_filter,
     n_buckets: int = 256,
-    scale: int = 1 << 16,
 ) -> DataFrame:
     """(id, n_bigrams, dsir_score) — higher score = more target-like.
 
@@ -85,7 +84,7 @@ def dsir_scores(
     )
     ratios = counts.select(
         "bucket",
-        F.expr(f"((cnt_target + 1) * {scale}) div (cnt_raw + 1)").alias("ratio_fp"),
+        F.expr("((cnt_target + 1) * 65536) div (cnt_raw + 1)").alias("ratio_fp"),
     )
 
     scored = (

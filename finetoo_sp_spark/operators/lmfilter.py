@@ -14,9 +14,9 @@ integer fixed-point per-instance cost
 
     cost_fp(bigram) = ((cnt_ref_ctx + V) * scale) div (cnt_ref_bigram + 1)
 
-i.e. ``scale / p_ref(bigram | ctx)`` under add-one smoothing over V
-hashed buckets. Rationale (same trade as operators/importance.py): a
-sum of longs is exact and partition-order independent, so the score is
+i.e. ``scale / p_ref(bigram | ctx)`` under add-one smoothing over
+V = 256 hashed buckets, with scale = 2^16. Rationale (same trade as
+operators/importance.py): a sum of longs is exact and partition-order independent, so the score is
 byte-stable and a DuckDB twin reproduces it bit-for-bit, while
 monotonicity per bigram in ``-log p`` — all the tercile split consumes
 — is preserved. Feature hash: bucket = int(md5(gram)[:15 hex]) % V,
@@ -45,8 +45,6 @@ def ccnet_lm_scores(
     id_col: str,
     text_col: str,
     ref_filter,
-    n_buckets: int = 256,
-    scale: int = 1 << 16,
 ) -> DataFrame:
     """(id, n_bigrams, lm_cost_fp, cost_per_bigram_fp, ppl_bucket).
 
@@ -67,8 +65,8 @@ def ccnet_lm_scores(
     ).select(
         "id",
         "_is_ref",
-        _bucket(F.col("bigram"), n_buckets).alias("bg_bucket"),
-        _bucket(F.split(F.col("bigram"), " ")[0], n_buckets).alias("ctx_bucket"),
+        _bucket(F.col("bigram"), 256).alias("bg_bucket"),
+        _bucket(F.split(F.col("bigram"), " ")[0], 256).alias("ctx_bucket"),
     )
 
     ref = grams.filter("_is_ref")
@@ -82,8 +80,7 @@ def ccnet_lm_scores(
             "id",
             "_is_ref",
             F.expr(
-                f"((coalesce(cnt_ctx, 0) + {n_buckets}) * {scale})"
-                " div (coalesce(cnt_bg, 0) + 1)"
+                "((coalesce(cnt_ctx, 0) + 256) * 65536) div (coalesce(cnt_bg, 0) + 1)"
             ).alias("cost_fp"),
         )
     )

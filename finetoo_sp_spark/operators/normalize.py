@@ -105,12 +105,11 @@ def normalize_text(
     )
 
 
-def oracle_sql_chain(expr: str, fold_quotes: bool = True) -> str:
+def oracle_sql_chain(expr: str) -> str:
     """The identical repair chain as nested DuckDB replace() calls,
     generated from the same tables as the Spark path."""
     out = expr
-    table = list(MOJIBAKE_TABLE) + (QUOTE_FOLD_TABLE if fold_quotes else [])
-    for broken, fixed in table:
+    for broken, fixed in MOJIBAKE_TABLE + QUOTE_FOLD_TABLE:
         out = f"replace({out}, '{_sq(broken)}', '{_sq(fixed)}')"
     for ch in _SPACE_CHARS:
         out = f"replace({out}, '{ch}', ' ')"
@@ -123,9 +122,7 @@ def _sq(s: str) -> str:
     return s.replace("'", "''")
 
 
-def nfc_normalize_text(
-    df: "DataFrame", id_col: str = "doc_id", text_col: str = "text"
-) -> "DataFrame":
+def nfc_normalize_text(df: "DataFrame") -> "DataFrame":
     """Unicode NFC normalization — the canonical-composition pass every
     training corpus applies so 'e'+COMBINING ACUTE and the precomposed
     U+00E9 stop being distinct tokens (they hash, dedup, and tokenize
@@ -137,7 +134,7 @@ def nfc_normalize_text(
     composition, so the check is two independent implementations of
     UAX#15 agreeing byte-for-byte.
 
-    Returns (id, text_nfc, changed).
+    Reads (doc_id, text); returns (doc_id, text_nfc, changed).
     """
     import unicodedata
 
@@ -147,7 +144,7 @@ def nfc_normalize_text(
         for pdf in batches:
             if pdf.empty:
                 continue
-            texts = pdf[text_col].astype(object).reset_index(drop=True)
+            texts = pdf["text"].astype(object).reset_index(drop=True)
             # Fast path: unicodedata.is_normalized is a C-level quick
             # check (true for all-ASCII and precomposed text without
             # allocating the normalized copy), so the quadratic-ish
@@ -164,13 +161,13 @@ def nfc_normalize_text(
             )
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].reset_index(drop=True),
+                    "doc_id": pdf["doc_id"].reset_index(drop=True),
                     "text_nfc": out,
                     "changed": dirty.astype(bool),
                 }
             )
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} {id_type}, text_nfc string, changed boolean"
+    id_type = dict(df.dtypes)["doc_id"]
+    return df.select("doc_id", "text").mapInPandas(
+        run, schema=f"doc_id {id_type}, text_nfc string, changed boolean"
     )

@@ -247,10 +247,9 @@ def assign_splits(
     id_col: str,
     val_ppm: int = 10_000,
     test_ppm: int = 10_000,
-    salt: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment as a pure function of the
-    row id: split = f(sha(salt:id)) — identical across runs,
+    row id: split = f(sha("split:" + id)) — identical across runs,
     partitionings and cluster sizes, so a resumed or re-run pipeline can
     never leak a validation document into training. Rates are integer
     parts-per-million (exact, engine-portable — no float thresholds).
@@ -261,7 +260,7 @@ def assign_splits(
     membership). Narrow, shuffle-free; the sha is computed once per row.
     """
     h = F.pmod(
-        sha60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
+        sha60(F.concat(F.lit("split:"), F.col(id_col).cast("string"))),
         F.lit(1_000_000),
     )
     split = (
@@ -318,7 +317,6 @@ def temperature_mix(
     source_col: str,
     alpha_quarters: int = 2,
     budget_docs: int = 1000,
-    salt: str = "mix",
 ) -> DataFrame:
     """Temperature-based source mixing planner (the XLM-R / mT5
     alpha-sampling rule): sampling weight w_s = n_s^alpha flattens the
@@ -378,7 +376,7 @@ def temperature_mix(
         .select("source", "n_docs", "weight_fp", "quota_docs", "rate_ppm")
     )
     gate = F.pmod(
-        sha60(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
+        sha60(F.concat(F.lit("mix:"), F.col(id_col).cast("string"))),
         F.lit(1_000_000),
     )
     sampled = (

@@ -21,9 +21,9 @@ keeping each iteration one join + one aggregation).
 
 Scale shape per iteration: one equi-join ranks->edges on src (shuffle
 on src/id) + one groupBy(dst) partial-aggregated sum — the canonical
-iterate-on-Spark plan. The loop builds ONE lazy plan for few
-iterations; pass ``checkpoint_every`` to cut lineage via localCheckpoint
-on long runs (same pattern as operators/components.py).
+iterate-on-Spark plan. The loop builds ONE lazy plan over its five
+iterations; a longer run would cut lineage with localCheckpoint (the
+pattern operators/components.py uses).
 """
 
 from __future__ import annotations
@@ -35,12 +35,8 @@ SCALE = 1_000_000_000
 DAMP_NUM = 85  # damping 0.85 as a percentage — keeps everything integer
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    iterations: int = 5,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
-    """(id, rank_fp) after ``iterations`` rounds; rank_fp is the
+def pagerank_fixed_point(edges: DataFrame) -> DataFrame:
+    """(id, rank_fp) after five rounds; rank_fp is the
     SCALE-fixed-point rank. ``edges`` needs (src, dst) columns;
     duplicate edges collapse (authority is per linking page, not per
     anchor occurrence)."""
@@ -54,7 +50,7 @@ def pagerank_fixed_point(
     ed = e.join(deg, "src")
     ranks = nodes.select("id", F.lit(SCALE).cast("long").alias("rank_fp"))
     base = (100 - DAMP_NUM) * SCALE // 100
-    for i in range(iterations):
+    for _ in range(5):
         contrib = ed.join(ranks, ed.src == ranks.id).select(
             F.col("dst").alias("id"), F.expr("rank_fp div deg").alias("c")
         )
@@ -66,6 +62,4 @@ def pagerank_fixed_point(
                 + F.expr(f"({DAMP_NUM} * coalesce(s, 0L)) div 100")
             ).cast("long").alias("rank_fp"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
     return ranks

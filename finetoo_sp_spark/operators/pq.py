@@ -41,23 +41,22 @@ from finetoo_sp_spark.operators.clustering import (
 )
 
 SCALE = 1 << 20
+M = 4  # subspaces per vector
+KSUB = 4  # centroids per subspace codebook
+ITERS = 2  # k-means rounds, counting the init
+NLIST = 4  # IVF coarse cells
 
 
-def pq_train(
-    emb: DataFrame,
-    m: int = 4,
-    ksub: int = 4,
-    iters: int = 2,
-    scale: int = SCALE,
-) -> list[list[list[int]]]:
-    """Train M per-subspace codebooks; returns codebooks[mi][j] = the
-    j-th centroid of subspace mi as a fixed-point int list (d/M dims).
+def pq_train(emb: DataFrame, m: int = M) -> list[list[list[int]]]:
+    """Train m per-subspace codebooks of KSUB centroids; returns
+    codebooks[mi][j] = the j-th centroid of subspace mi as a fixed-point
+    int list (d/m dims).
     One pass per k-means round covers ALL subspaces (the per-dimension
     update groups by (subspace, cluster, dim) in a single aggregate)."""
     e = emb.select(
-        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), scale).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), SCALE).alias("v")
     )
-    init_rows = e.orderBy("id").limit(ksub).collect()
+    init_rows = e.orderBy("id").limit(KSUB).collect()
     dims = len(init_rows[0]["v"])
     if dims % m:
         raise ValueError(f"dims {dims} not divisible by m={m}")
@@ -72,14 +71,14 @@ def pq_train(
         for mi in range(m):
             sl = F.slice(frame_v, mi * sub + 1, sub)
             keys = [
-                (_sqdist_to(sl, c) * ksub + F.lit(j)).cast("long")
+                (_sqdist_to(sl, c) * KSUB + F.lit(j)).cast("long")
                 for j, c in enumerate(codebooks[mi])
             ]
             key = F.least(*keys) if len(keys) > 1 else keys[0]
-            cols.append((key % ksub).cast("int").alias(f"c{mi}"))
+            cols.append((key % KSUB).cast("int").alias(f"c{mi}"))
         return cols
 
-    for _ in range(iters - 1):
+    for _ in range(ITERS - 1):
         a = e.select("v", *code_cols())
         ex = (
             a.select(
@@ -108,18 +107,14 @@ def pq_train(
     return codebooks
 
 
-def pq_assign(
-    emb: DataFrame,
-    codebooks: list[list[list[int]]],
-    scale: int = SCALE,
-) -> DataFrame:
+def pq_assign(emb: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
     """(id, c0..c{M-1}) codebook indices per vector — one narrow select
     against the broadcast-literal codebooks, no shuffle."""
     m = len(codebooks)
     ksub = len(codebooks[0])
     sub = len(codebooks[0][0])
     e = emb.select(
-        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), scale).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), SCALE).alias("v")
     )
     cols = []
     for mi in range(m):
@@ -133,22 +128,15 @@ def pq_assign(
     return e.select("id", *cols)
 
 
-def pq_codes(
-    emb: DataFrame,
-    m: int = 4,
-    ksub: int = 4,
-    iters: int = 2,
-    scale: int = SCALE,
-) -> DataFrame:
+def pq_codes(emb: DataFrame) -> DataFrame:
     """Train + assign: (id, code_str, n_subspaces) with the M indices
     comma-joined (codes are the payload; a string survives any engine's
     value hashing, the SQ8 convention in this repo)."""
-    cb = pq_train(emb, m=m, ksub=ksub, iters=iters, scale=scale)
-    a = pq_assign(emb, cb, scale=scale)
+    a = pq_assign(emb, pq_train(emb))
     return a.select(
         "id",
-        F.concat_ws(",", *[F.col(f"c{mi}") for mi in range(m)]).alias("code_str"),
-        F.lit(m).cast("long").alias("n_subspaces"),
+        F.concat_ws(",", *[F.col(f"c{mi}") for mi in range(M)]).alias("code_str"),
+        F.lit(M).cast("long").alias("n_subspaces"),
     )
 
 
@@ -160,17 +148,13 @@ def ann_ivf_pq_topk(
     emb: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    nlist: int = 4,
     nprobe: int = 2,
-    m: int = 4,
-    ksub: int = 4,
-    scale: int = SCALE,
 ) -> DataFrame:
     """IVF-PQ search: (query_id, neighbor_id, adc_dist, rank) — the k
     nearest candidates per query by asymmetric PQ distance among the
     nprobe probed IVF cells, self-pairs excluded, ties to the lower id.
 
-    The coarse quantizer is clustering.kmeans_fit (nlist cells) and the
+    The coarse quantizer is clustering.kmeans_fit (NLIST cells) and the
     probe order is the exact integer distance from the query to each
     final centroid. Per query the M ADC lookup tables (ksub entries
     each) are computed driver-side from the codebooks and spliced in as
@@ -178,17 +162,17 @@ def ann_ivf_pq_topk(
     sums — a pure narrow expression; no vector math touches the corpus
     at query time (the PQ promise)."""
     centroids, assigned = kmeans_fit(
-        emb, "vec_id", "embedding", k=nlist, iters=2, scale=scale
+        emb, "vec_id", "embedding", k=NLIST, iters=2, scale=SCALE
     )
-    codebooks = pq_train(emb, m=m, ksub=ksub, scale=scale)
+    codebooks = pq_train(emb)
     sub = len(codebooks[0][0])
-    codes = pq_assign(emb, codebooks, scale=scale)
+    codes = pq_assign(emb, codebooks)
     base = codes.join(assigned, "id")
 
     qrows = (
         emb.filter(F.col("vec_id").isin([int(q) for q in query_ids]))
         .select(
-            F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), scale).alias("v")
+            F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), SCALE).alias("v")
         )
         .collect()
     )
@@ -196,18 +180,18 @@ def ann_ivf_pq_topk(
     for r in sorted(qrows, key=lambda r: r["id"]):
         qid, qv = int(r["id"]), list(r["v"])
         order = sorted(
-            (_sqdist_lists(qv, c) * nlist + j) for j, c in enumerate(centroids)
+            (_sqdist_lists(qv, c) * NLIST + j) for j, c in enumerate(centroids)
         )
-        cells = [int(x % nlist) for x in order[:nprobe]]
+        cells = [int(x % NLIST) for x in order[:nprobe]]
         adc_tables = [
             [
                 _sqdist_lists(qv[mi * sub : (mi + 1) * sub], codebooks[mi][j])
-                for j in range(ksub)
+                for j in range(KSUB)
             ]
-            for mi in range(m)
+            for mi in range(M)
         ]
         adc = None
-        for mi in range(m):
+        for mi in range(M):
             t = F.array(*[F.lit(int(x)) for x in adc_tables[mi]])
             term = F.element_at(t, F.col(f"c{mi}") + 1)
             adc = term if adc is None else adc + term
@@ -236,23 +220,18 @@ def ivf_pq_recall(
     emb: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    nlist: int = 4,
     nprobe: int = 2,
-    m: int = 4,
-    ksub: int = 4,
-    scale: int = SCALE,
 ) -> DataFrame:
     """Measured recall@k of IVF-PQ against the EXACT integer-L2 top-k:
     (query_id, n_hits, k) where n_hits = |approx top-k ∩ exact top-k|.
     Both sides are integer-deterministic, so the oracle reproduces the
     recall number itself, not just the shape."""
-    approx = ann_ivf_pq_topk(
-        emb, query_ids, k=k, nlist=nlist, nprobe=nprobe, m=m, ksub=ksub,
-        scale=scale,
-    ).select("query_id", "neighbor_id")
+    approx = ann_ivf_pq_topk(emb, query_ids, k=k, nprobe=nprobe).select(
+        "query_id", "neighbor_id"
+    )
 
     e = emb.select(
-        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), scale).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), SCALE).alias("v")
     )
     q = (
         e.filter(F.col("id").isin([int(x) for x in query_ids]))

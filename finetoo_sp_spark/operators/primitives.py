@@ -273,7 +273,6 @@ def op_join(
     right_type: str,
     edge_type: str,
     left: DataFrame | None = None,
-    right: DataFrame | None = None,
 ) -> DataFrame:
     """JOIN: relate two node sets through an edge type
     (reference spec: proto/operations.proto:193-199; skeleton
@@ -289,7 +288,7 @@ def op_join(
             f"not {left_type}->{right_type}"
         )
     lsrc = left if left is not None else g.node_frame(left_type)
-    rsrc = right if right is not None else g.node_frame(right_type)
+    rsrc = g.node_frame(right_type)
     ldf, rdf = lsrc.alias("l"), rsrc.alias("r")
     e = g.edges.filter(F.col("edge_type") == edge_type).alias("e")
     lcols = [F.col(f"l.{c}").alias(c) for c in lsrc.columns]

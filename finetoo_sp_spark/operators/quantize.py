@@ -32,7 +32,7 @@ def _idiv(num: Column, den: Column) -> Column:
     return ((num - num % den) / den).cast("long")
 
 
-def quantize_int8(df: DataFrame, fp_shift: int = FP_SHIFT) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Per-vector int8 quantization of (vec_id, embedding) rows with exact
     reconstruction-error stats.
 
@@ -46,7 +46,7 @@ def quantize_int8(df: DataFrame, fp_shift: int = FP_SHIFT) -> DataFrame:
     construction — asserted in tests). Constant vectors quantize to
     all-zero codes with zero error.
     """
-    scale = 1 << fp_shift
+    scale = 1 << FP_SHIFT
     fp = F.transform(
         "embedding", lambda x: F.floor(x.cast("double") * scale).cast("long")
     )

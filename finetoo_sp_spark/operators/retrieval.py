@@ -16,16 +16,16 @@ bit-for-bit. The rational idf is strictly monotone in the true
 textbook BM25 (summed scores weight rare terms more steeply — a
 documented, deterministic variant).
 
-Fixed-point derivation (k1 = k1_tenths/10, b = b_hundredths/100):
+Fixed-point derivation (k1 = 1.2, b = 0.75, scale = 1024):
 
     tf_term = tf*(k1+1) / (tf + k1*(1-b) + k1*b*dl/avgdl)
 
 multiplying numerator and denominator by 1000*avgdl makes every factor
 an integer:
 
-    tf_fp = ((k1_tenths+10)*100*tf*avgdl*scale)
-            div (1000*tf*avgdl + k1_tenths*(100-b_hundredths)*avgdl
-                 + k1_tenths*b_hundredths*dl)
+    tf_fp = (2200*tf*avgdl*scale) div (1000*tf*avgdl + 300*avgdl + 900*dl)
+
+with 2200 = 1000*(k1+1), 300 = 1000*k1*(1-b) and 900 = 1000*k1*b.
 
 Scale story (100 TB): query terms and the per-term df table are
 dimension-sized — both broadcast. The corpus-side plan is words ->
@@ -47,9 +47,6 @@ def bm25_topk(
     text_col: str,
     query_terms: list[str],
     k: int = 10,
-    k1_tenths: int = 12,
-    b_hundredths: int = 75,
-    scale: int = 1024,
 ) -> DataFrame:
     """(id, score, rank) — top-k docs for ``query_terms`` by rational
     BM25, rank 1..k, ties broken by ascending id. Docs matching no
@@ -72,18 +69,16 @@ def bm25_topk(
     )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
 
-    knum = (k1_tenths + 10) * 100
-    kden1 = k1_tenths * (100 - b_hundredths)
-    kden2 = k1_tenths * b_hundredths
+    knum, kden1, kden2 = 2200, 300, 900  # see the module docstring
     scored = (
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
         .select(
             "id",
             (
-                F.expr(f"((n_docs - df) * {scale}) div (df + 1)")
+                F.expr("((n_docs - df) * 1024) div (df + 1)")
                 * F.expr(
-                    f"({knum} * tf * avgdl * {scale}) div "
+                    f"({knum} * tf * avgdl * 1024) div "
                     f"(1000 * tf * avgdl + {kden1} * avgdl + {kden2} * dl)"
                 )
             ).alias("term_score"),

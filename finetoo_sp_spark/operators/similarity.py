@@ -146,15 +146,10 @@ def ann_lsh_bucketed(
     )
 
 
-def ann_recall_curve(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_bits: int = 8,
-    n_tables_list: tuple[int, ...] = (1, 2, 3),
-) -> DataFrame:
-    """Measured recall@k of multi-probe ANN vs exact brute-force truth:
-    one row (n_tables, recall) per probe-table count, recall = |ANN
+def ann_recall_curve(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Measured recall@10 of multi-probe ANN (8-bit slices) vs exact
+    brute-force truth: one row (n_tables, recall) per probe-table count
+    1, 2 and 3, recall = |ANN
     top-k ∩ exact top-k| / |exact top-k| summed over all queries.
 
     This is the adequacy measurement the superset-recall property test
@@ -176,12 +171,12 @@ def ann_recall_curve(
     ≈ 0.81 at 3 tables) — recall is high; the planted-cluster pytest
     (test_dedup_similarity.py) verifies >=0.75 measured.
     """
-    truth = brute_force_topk(emb, queries, k).select(
+    truth = brute_force_topk(emb, queries, 10).select(
         "query_id", "neighbor_id"
     )
     anns = None
-    for t in n_tables_list:
-        a = ann_lsh_multiprobe(emb, queries, k, n_bits, t).select(
+    for t in (1, 2, 3):
+        a = ann_lsh_multiprobe(emb, queries, 10, t).select(
             F.lit(t).alias("n_tables"), "query_id", "neighbor_id"
         )
         anns = a if anns is None else anns.unionByName(a)
@@ -201,11 +196,10 @@ def ann_lsh_multiprobe(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_bits: int = 8,
     n_tables: int = 3,
 ) -> DataFrame:
     """Multi-table sign-LSH ANN: table t buckets on the sign bits of
-    coordinate slice [t*n_bits, (t+1)*n_bits); candidates = union of the
+    coordinate slice [t*8, (t+1)*8); candidates = union of the
     per-table bucket matches (deduplicated), then exact cosine + per-
     query top-k. The standard recall/cost dial: n_tables× the candidate
     generation cost buys near-multiplicative recall, while each table's
@@ -221,7 +215,7 @@ def ann_lsh_multiprobe(
         cols = [F.col("vec_id").alias(out_id)]
         for t in range(n_tables):
             bits = F.transform(
-                F.slice(F.col("embedding"), t * n_bits + 1, n_bits),
+                F.slice(F.col("embedding"), t * 8 + 1, 8),
                 lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0")),
             )
             cols.append(F.concat_ws("", bits).alias(f"b{t}"))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from finetoo_sp_spark.operators.dedup import sha60
 
 HASH_BITS = 60
+CMS_DEPTH = 4  # count-min hash rows
 
 
 def hll_registers(df: DataFrame, key_col: str, group_col: str, p: int = 12) -> DataFrame:
@@ -65,14 +66,15 @@ def hll_registers(df: DataFrame, key_col: str, group_col: str, p: int = 12) -> D
     )
 
 
-def hll_estimate_py(registers: list[tuple[int, int]], p: int = 12) -> float:
+def hll_estimate_py(registers: list[tuple[int, int]]) -> float:
     """Driver-side HLL estimate from collected (bucket, register) pairs
-    — the read-out path (floats are fine here: the sketch itself is the
-    exact, mergeable artifact; the estimate is a display value).
+    of a p = 12 register file — the read-out path (floats are fine
+    here: the sketch itself is the exact, mergeable artifact; the
+    estimate is a display value).
     Includes the small-range linear-counting correction."""
     import math
 
-    m = 1 << p
+    m = 1 << 12  # 2^p buckets
     regs = dict(registers)
     s = sum(2.0 ** -regs.get(j, 0) for j in range(m))
     alpha = 0.7213 / (1 + 1.079 / m)
@@ -107,16 +109,16 @@ def kmv_distinct(df: DataFrame, key_col: str, group_col: str, k: int = 256) -> D
     return agg.select("grp", "n_kept", "kth_hash", est.cast("long").alias("est_distinct"))
 
 
-def cms_sketch(df: DataFrame, key_col: str, d: int = 4, w: int = 256) -> DataFrame:
-    """(row, col, cnt) — count-min sketch (Cormode 2005): d independent
-    hash rows of width w; every key increments one cell per row. One
-    partially-aggregated groupBy on the (d*w)-cell space — frequency
-    state bounded regardless of key cardinality, merged by cell-wise
-    sum. Hash i = portable sha-60 over a salted key, so an external
+def cms_sketch(df: DataFrame, key_col: str, w: int = 256) -> DataFrame:
+    """(row, col, cnt) — count-min sketch (Cormode 2005): CMS_DEPTH
+    independent hash rows of width w; every key increments one cell per
+    row. One partially-aggregated groupBy on the (CMS_DEPTH*w)-cell
+    space — frequency state bounded regardless of key cardinality,
+    merged by cell-wise sum. Hash i = portable sha-60 over a salted key, so an external
     engine rebuilds the identical sketch.
     """
-    if d < 1 or w < 2:
-        raise ValueError("need d >= 1 hash rows and w >= 2 columns")
+    if w < 2:
+        raise ValueError("need w >= 2 columns")
     cells = F.explode(
         F.array(
             *[
@@ -126,7 +128,7 @@ def cms_sketch(df: DataFrame, key_col: str, d: int = 4, w: int = 256) -> DataFra
                         sha60(F.concat(F.lit(f"cms{i}:"), F.col(key_col).cast("string"))) % w
                     ).alias("col"),
                 )
-                for i in range(d)
+                for i in range(CMS_DEPTH)
             ]
         )
     ).alias("cell")
@@ -138,11 +140,11 @@ def cms_sketch(df: DataFrame, key_col: str, d: int = 4, w: int = 256) -> DataFra
     )
 
 
-def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str, d: int = 4, w: int = 256) -> DataFrame:
+def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str, w: int = 256) -> DataFrame:
     """(key, est_cnt) — point-query the sketch for each probe key:
-    min over the d cells the key hashes to. est >= true always
+    min over the CMS_DEPTH cells the key hashes to. est >= true always
     (one-sided error); probes are dimension-sized and broadcast, the
-    sketch itself is at most d*w rows — no large shuffle anywhere.
+    sketch itself is at most CMS_DEPTH*w rows — no large shuffle anywhere.
     """
     coords = probes.select(
         F.col(key_col).alias("key"),
@@ -155,7 +157,7 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str, d: int = 4,
                             sha60(F.concat(F.lit(f"cms{i}:"), F.col(key_col).cast("string"))) % w
                         ).alias("col"),
                     )
-                    for i in range(d)
+                    for i in range(CMS_DEPTH)
                 ]
             )
         ).alias("cell"),

@@ -41,14 +41,15 @@ from pyspark.sql import functions as F
 from finetoo_sp_spark.operators.dedup import _base_hash, _norm_words
 
 
-def _windows(df: DataFrame, id_col: str, text_col: str, k: int, hash_mode: str) -> DataFrame:
-    """(id, n_tokens, start, wh) — every positional k-token window.
+def _windows(df: DataFrame, k: int, hash_mode: str) -> DataFrame:
+    """(id, n_tokens, start, wh) — every positional k-token window of
+    (doc_id, text).
 
     Docs shorter than k tokens produce NO windows (a shorter-than-k
     window could false-match across docs); they still appear in the
     stats output via the left join in :func:`window_dup_stats`.
     """
-    w = df.select(F.col(id_col).alias("id"), _norm_words(text_col).alias("_w"))
+    w = df.select(F.col("doc_id").alias("id"), _norm_words("text").alias("_w"))
     # materialize the words array first (lambda over the raw expression
     # would re-run regexp+split per position — see dedup.shingles)
     starts = F.when(
@@ -81,8 +82,6 @@ def _dup_windows(wins: DataFrame) -> DataFrame:
 
 def window_dup_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
@@ -97,7 +96,7 @@ def window_dup_stats(
     removal run (and a quality signal on its own: boilerplate-heavy pages
     score high).
     """
-    wins = _windows(df, id_col, text_col, k, hash_mode)
+    wins = _windows(df, k, hash_mode)
     dup = _dup_windows(wins)
     # interval union per doc: each dup start covers min(k, next_start - start)
     nxt = Window.partitionBy("id").orderBy("start")
@@ -114,7 +113,7 @@ def window_dup_stats(
     per_doc = wins.groupBy("id", "n_tokens").agg(F.count(F.lit(1)).alias("n_windows"))
     dup_counts = dup.groupBy("id").agg(F.count(F.lit(1)).alias("n_dup_windows"))
     base = df.select(
-        F.col(id_col).alias("id"), F.size(_norm_words(text_col)).alias("n_tokens")
+        F.col("doc_id").alias("id"), F.size(_norm_words("text")).alias("n_tokens")
     )
     return (
         base.join(per_doc.drop("n_tokens"), "id", "left")
@@ -137,8 +136,6 @@ def window_dup_stats(
 
 def remove_duplicate_windows(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
@@ -152,7 +149,7 @@ def remove_duplicate_windows(
     stream (the same canonicalization every dedup path uses), so
     clean_text is normalized text minus removed spans.
     """
-    wins = _windows(df, id_col, text_col, k, hash_mode)
+    wins = _windows(df, k, hash_mode)
     removed = _dup_windows(wins).filter(~F.col("keeper"))
     # positions covered by any removed window occurrence in this doc
     pos = (
@@ -162,11 +159,11 @@ def remove_duplicate_windows(
         .distinct()
     )
     toks = df.select(
-        F.col(id_col).alias("id"), F.posexplode(_norm_words(text_col)).alias("pos", "word")
+        F.col("doc_id").alias("id"), F.posexplode(_norm_words("text")).alias("pos", "word")
     )
     kept = toks.join(pos, ["id", "pos"], "left_anti")
     n_tok = df.select(
-        F.col(id_col).alias("id"), F.size(_norm_words(text_col)).alias("n_tokens")
+        F.col("doc_id").alias("id"), F.size(_norm_words("text")).alias("n_tokens")
     )
     clean = (
         kept.groupBy("id")

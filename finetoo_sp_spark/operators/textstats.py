@@ -178,32 +178,29 @@ def _winnowed(
     return staged.select("id", F.array_distinct("_t").alias("fps"))
 
 
-def winnowing_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, window: int = 4
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, fingerprint) — distinct winnowed shingle hashes per document.
 
-    k-word shingles at each position -> sha256 hex -> minimum over each
-    sliding window of `window` consecutive positions -> distinct. Hex
+    3-word shingles at each position -> sha256 hex -> minimum over each
+    sliding window of 4 consecutive positions -> distinct. Hex
     strings (not ints) so lexicographic min matches any SQL engine.
     Computed entirely row-wise (_winnowed): the explode below is the
     only row expansion and no shuffle exists anywhere in the plan.
     """
-    return _winnowed(df, id_col, text_col, k, window).select(
+    return _winnowed(df, id_col, text_col, 3, 4).select(
         "id", F.explode("fps").alias("fingerprint")
     )
 
 
-def fingerprint_summary(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, window: int = 4
-) -> DataFrame:
+def fingerprint_summary(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, n_fingerprints, min_fingerprint) — compact per-doc digest of
-    the winnowed set (the joinable form for containment candidates).
+    the winnowed set (3-word shingles, window 4; the joinable form for
+    containment candidates).
     Shuffle-free: the digest is computed from the per-row fingerprint
     array directly (docs with no complete window are filtered out inside
     _winnowed by the cheap word-count predicate, matching the historical
     explode+groupBy semantics)."""
-    return _winnowed(df, id_col, text_col, k, window).select(
+    return _winnowed(df, id_col, text_col, 3, 4).select(
         "id",
         F.size("fps").cast("long").alias("n_fingerprints"),
         F.array_min("fps").alias("min_fingerprint"),
@@ -346,10 +343,7 @@ def containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
-    window: int = 4,
     threshold: float = 0.5,
-    max_df: int | None = 100_000,
 ) -> DataFrame:
     """Asymmetric near-dup CONTAINMENT via winnowing fingerprints
     (Schleimer et al., SIGMOD'03): containment(A in B) =
@@ -357,21 +351,20 @@ def containment_pairs(
     one, which symmetric Jaccard misses when sizes differ a lot.
 
     Same scale shape as the shingle inverted index: one join keyed on
-    the fingerprint (stop-fingerprint pruning via ``max_df``), sizes
+    the fingerprint (fingerprints in more than 100,000 docs are pruned as
+    stop-fingerprints; 3-word shingles, window 4), sizes
     from the unpruned sets, both directions emitted (containment is
     asymmetric). Returns (id_small, id_big, containment) rounded 6dp
     where containment >= threshold.
     """
-    fps = winnowing_fingerprints(df, id_col, text_col, k, window)
+    fps = winnowing_fingerprints(df, id_col, text_col)
     sizes = fps.groupBy("id").agg(F.count(F.lit(1)).alias("n_fp"))
-    idx = fps
-    if max_df is not None:
-        hot = (
-            fps.groupBy("fingerprint")
-            .agg(F.count(F.lit(1)).alias("dfreq"))
-            .filter(F.col("dfreq") > max_df)
-        )
-        idx = fps.join(F.broadcast(hot), "fingerprint", "left_anti")
+    hot = (
+        fps.groupBy("fingerprint")
+        .agg(F.count(F.lit(1)).alias("dfreq"))
+        .filter(F.col("dfreq") > 100_000)
+    )
+    idx = fps.join(F.broadcast(hot), "fingerprint", "left_anti")
     a = idx.select(F.col("id").alias("id_a"), "fingerprint")
     b = idx.select(F.col("id").alias("id_b"), "fingerprint")
     inter = (
@@ -455,14 +448,12 @@ def template_ngrams(
     host_col: str,
     id_col: str,
     text_col: str,
-    n: int = 2,
-    min_pages: int = 10,
     ratio_ppm: int = 300_000,
 ) -> DataFrame:
     """(host, shingle, n_docs, host_pages, share_ppm) — host-level
-    template/boilerplate mining: the n-gram shingles that recur across
+    template/boilerplate mining: the word-bigram shingles that recur across
     at least ``ratio_ppm`` (exact integer ppm) of a host's pages, for
-    hosts with ``min_pages``+ pages. These are the navigation/footer
+    hosts with 10+ pages. These are the navigation/footer
     phrases a site template stamps on every page; downstream filters
     strip them from extracted text or down-weight the host.
 
@@ -481,8 +472,8 @@ def template_ngrams(
         _norm_words(text_col).alias("_w"),
     )
     sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("_w") - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i + 1, n)),
+        F.sequence(F.lit(0), F.greatest(F.size("_w") - 2, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i + 1, 2)),
     )
     per_doc = (
         w.select("host", "id", F.explode(sh).alias("shingle"))
@@ -493,7 +484,7 @@ def template_ngrams(
     hp = (
         docs.groupBy(F.col(host_col).alias("host"))
         .agg(F.count("*").alias("host_pages"))
-        .filter(F.col("host_pages") >= min_pages)
+        .filter(F.col("host_pages") >= 10)
     )
     return (
         df_counts.join(hp, "host")

@@ -26,8 +26,8 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from finetoo_sp_spark.operators.textstats import _words
 
-# A deterministic demonstration merge table (rank order = list order).
-# Real deployments pass their tokenizer's learned merges.
+# The deterministic demonstration merge table bpe_token_counts applies
+# (rank order = list order); bpe_learn derives a table from a corpus.
 DEFAULT_MERGES: list[tuple[str, str]] = [
     ("a", "b"),
     ("ab", "ab"),
@@ -73,17 +73,13 @@ _VOCAB_TOKENS_SCHEMA = StructType(
 )
 
 
-def bpe_token_counts(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[tuple[str, str]] | None = None,
-) -> DataFrame:
-    """(id, n_words, n_tokens) — exact BPE token budget per document:
-    explode to words, run the merge loop once per DISTINCT word
-    (Arrow-batched mapInPandas over the vocabulary), broadcast-join the
-    per-word token counts back, aggregate per document."""
-    ranks = {pair: i for i, pair in enumerate(merges or DEFAULT_MERGES)}
+def bpe_token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, n_words, n_tokens) — exact BPE token budget per document
+    under DEFAULT_MERGES: explode to words, run the merge loop once per
+    DISTINCT word (Arrow-batched mapInPandas over the vocabulary),
+    broadcast-join the per-word token counts back, aggregate per
+    document."""
+    ranks = {pair: i for i, pair in enumerate(DEFAULT_MERGES)}
 
     occurrences = df.select(
         F.col(id_col).alias("id"),

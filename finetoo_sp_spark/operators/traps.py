@@ -23,23 +23,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def flag_trap_urls(
-    urls: DataFrame,
-    max_depth: int = 8,
-    max_params: int = 6,
-) -> DataFrame:
+def flag_trap_urls(urls: DataFrame) -> DataFrame:
     """(.., path_depth, n_params, deep_path, repeated_segment, calendar,
-    query_explosion, is_trap) per input row, from its ``url`` column."""
+    query_explosion, is_trap) per input row, from its ``url`` column:
+    deep_path past 8 segments, query_explosion past 6 parameters."""
     path = F.regexp_extract(F.col("url"), r"^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)", 1)
     query = F.regexp_extract(F.col("url"), r"\?([^#]*)", 1)
     segs = F.filter(F.split(path, "/"), lambda s: s != "")
     n_params = F.when(query == "", F.lit(0)).otherwise(
         F.size(F.split(query, "&"))
     )
-    deep = F.size(segs) > max_depth
+    deep = F.size(segs) > 8
     repeated = (F.size(segs) - F.size(F.array_distinct(segs))) >= 2
     calendar = path.rlike(r"/(19|20)\d{2}/(0?[1-9]|1[0-2])(/([0-2]?\d|3[01]))?(/|$)")
-    explosion = n_params > max_params
+    explosion = n_params > 6
     return urls.select(
         "*",
         F.size(segs).cast("int").alias("path_depth"),

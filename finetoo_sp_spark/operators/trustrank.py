@@ -40,7 +40,6 @@ def trustrank_fixed_point(
     edges: DataFrame,
     seeds: DataFrame,
     iterations: int = 5,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """(id, trust_fp) after ``iterations`` rounds. ``edges`` needs
     (src, dst); ``seeds`` needs an ``id`` column (dimension-sized,
@@ -66,7 +65,7 @@ def trustrank_fixed_point(
     trust = based.select(
         "id", F.expr(f"(base_fp * 100) div {100 - DAMP_NUM}").alias("trust_fp")
     )
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = ed.join(trust, ed.src == trust.id).select(
             F.col("dst").alias("id"), F.expr("trust_fp div deg").alias("c")
         )
@@ -78,6 +77,4 @@ def trustrank_fixed_point(
                 + F.expr(f"({DAMP_NUM} * coalesce(s, 0L)) div 100")
             ).cast("long").alias("trust_fp"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            trust = trust.localCheckpoint(eager=False)
     return trust

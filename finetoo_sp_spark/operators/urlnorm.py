@@ -76,7 +76,6 @@ def canonicalize_urls(
     df: DataFrame,
     url_col: str = "url",
     out_col: str = "url_canon",
-    drop_params: tuple[str, ...] = DEFAULT_DROP_PARAMS,
 ) -> DataFrame:
     """Append ``out_col``: the RFC-3986-normalized form of ``url_col``.
 
@@ -138,7 +137,7 @@ def canonicalize_urls(
         F.col("_hostname"),
         F.col("_portout"),
         _resolve_dot_segments(F.col("_path")),
-        _clean_query(F.col("_query"), drop_params),
+        _clean_query(F.col("_query"), DEFAULT_DROP_PARAMS),
     )
     out = stage.withColumn(
         out_col, F.when(F.col("_scheme") != "", canon).otherwise(u)

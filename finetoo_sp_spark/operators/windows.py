@@ -18,13 +18,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """One row per event with its session id (per-user running index).
 
     Returns (user_id, ts, event_type, session_id).
     """
     w = Window.partitionBy("user_id").orderBy("ts")
-    gap_s = gap_minutes * 60
+    gap_s = 30 * 60  # a 30-minute gap starts a new session
     prev = F.lag("ts").over(w)
     is_start = F.when(
         prev.isNull()
@@ -41,10 +41,10 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     ).drop("is_start")
 
 
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Per-session rollup: (user_id, session_id, n_events, start_ts,
     end_ts, duration_s)."""
-    s = sessionize(events, gap_minutes)
+    s = sessionize(events)
     return s.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("start_ts"),
@@ -74,18 +74,17 @@ def json_prop_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def keep_latest(df: DataFrame, key_cols: list[str], ts_col: str, tiebreak: str | None = None) -> DataFrame:
+def keep_latest(df: DataFrame, key_cols: list[str], ts_col: str) -> DataFrame:
     """CDC upsert / MERGE INTO emulation without a table format that has
     MERGE (the pyspark-guide pattern: base ∪ updates → keep the newest
     row per key). One window pass: row_number over (key) ordered by ts
-    desc (+ deterministic tiebreak column) keeps exactly one survivor
-    per key. At scale this is the standard recrawl-handling reduction —
-    the shuffle key is the business key, skew follows the key
-    distribution (salt upstream for a pathological hot key)."""
+    desc keeps exactly one survivor per key (which of two rows tied on
+    ts is unspecified). At scale this is the standard recrawl-handling
+    reduction — the shuffle key is the business key, skew follows the
+    key distribution (salt upstream for a pathological hot key)."""
     from pyspark.sql.window import Window
 
-    order = [F.desc(ts_col)] + ([F.desc(tiebreak)] if tiebreak else [])
-    w = Window.partitionBy(*key_cols).orderBy(*order)
+    w = Window.partitionBy(*key_cols).orderBy(F.desc(ts_col))
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

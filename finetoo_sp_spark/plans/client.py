@@ -151,20 +151,17 @@ def answer_query(
     schema: Schema,
     question: str,
     client: PlannerClient,
-    retries: int = 1,
-    max_answer_rows: int = 10,
-    materialize: bool = True,
 ) -> QueryResponse:
     """The full ProcessQuery loop: schema prompt + question -> client ->
-    fence-strip/parse (retrying with error feedback up to ``retries``
-    times) -> fused plan execution -> QueryResponse with timing.
+    fence-strip/parse (retrying once with error feedback) -> fused plan
+    execution -> QueryResponse with timing.
 
     Raises ValueError with the reference's error-message shape when the
     planner never produces a parseable plan.
     """
     prompt = build_prompt(schema) + f"\n\nQuestion: {question}"
     last_err = ""
-    for _attempt in range(retries + 1):
+    for _attempt in range(2):
         raw = client.generate(prompt)
         try:
             ops = parse_plan_json(raw)
@@ -172,5 +169,5 @@ def answer_query(
             last_err = f"Failed to parse operation plan: {e}\nLLM Response: {raw}"
             prompt = prompt + "\n\n" + last_err + "\nRespond with ONLY valid JSON."
             continue
-        return process_plan(g, ops, max_answer_rows=max_answer_rows, materialize=materialize)
+        return process_plan(g, ops)
     raise ValueError(last_err)

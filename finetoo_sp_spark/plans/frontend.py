@@ -121,7 +121,6 @@ class QueryResponse:
 def process_plan(
     g: PropertyGraphFrames,
     plan: str | list[dict],
-    max_answer_rows: int = 10,
     materialize: bool = True,
 ) -> QueryResponse:
     """Execute a plan (JSON string, possibly markdown-fenced, or a parsed
@@ -129,19 +128,19 @@ def process_plan(
 
     ``materialize=False`` skips the driver-side answer rendering (no
     action is triggered) — the caller gets the lazy frame; use this at
-    corpus scale. With it on, only ``max_answer_rows`` rows cross the
-    driver (take(), never collect()).
+    corpus scale. With it on, only 10 rows (plus one to detect more)
+    cross the driver (take(), never collect()).
     """
     ops = parse_plan_json(plan) if isinstance(plan, str) else plan
     t0 = time.time()
     result = execute_plan(g, ops)
     answer = ""
     if materialize:
-        rows = result.df.take(max_answer_rows + 1)
-        shown = rows[:max_answer_rows]
+        rows = result.df.take(11)  # the first 10 rows, plus one to detect more
+        shown = rows[:10]
         cols = result.df.columns
         body = "\n".join(" | ".join(str(r[c]) for c in cols) for r in shown)
-        suffix = "\n..." if len(rows) > max_answer_rows else ""
+        suffix = "\n..." if len(rows) > 10 else ""
         answer = " | ".join(cols) + "\n" + body + suffix
     elapsed_ms = (time.time() - t0) * 1000.0
     return QueryResponse(

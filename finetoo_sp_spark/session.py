@@ -80,7 +80,7 @@ def get_spark(
     return spark
 
 
-def ensure_parallelism(df, min_fraction: float = 0.5):
+def ensure_parallelism(df):
     """Repartition a DataFrame up to the session's default parallelism
     when its scan produced far fewer partitions than there are cores.
 
@@ -96,6 +96,6 @@ def ensure_parallelism(df, min_fraction: float = 0.5):
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, int(target * min_fraction)):
+    if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df

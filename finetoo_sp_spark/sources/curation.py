@@ -100,8 +100,6 @@ def _write_bucketed(
 def run_resumable_curation(
     docs: DataFrame,
     out_dir: str,
-    n: int = 3,
-    threshold: float = 0.5,
     max_df: int | None = 100,
     n_buckets: int = 32,
     hash_mode: str = "xxhash64",
@@ -129,12 +127,12 @@ def run_resumable_curation(
         pairs = spark.read.parquet(os.path.join(pairs_dir, "data")).drop("bucket")
     else:
         fresh = ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=n, threshold=threshold, max_df=max_df
+            docs, "doc_id", "text", threshold=0.5, max_df=max_df
         ).withColumn("bucket", _bucket_of("id_a", n_buckets, hash_mode))
         _write_bucketed(fresh, pairs_dir, ["id_a", "id_b"], n_buckets, hash_mode=hash_mode)
         n_pairs = spark.read.parquet(os.path.join(pairs_dir, "data")).count()
         with open(marker, "w") as f:  # commit marker AFTER data+manifests
-            json.dump({"n_pairs": n_pairs, "threshold": threshold, "n": n}, f)
+            json.dump({"n_pairs": n_pairs, "threshold": 0.5, "n": 3}, f)
         pairs = spark.read.parquet(os.path.join(pairs_dir, "data")).drop("bucket")
     phases["pairs"] = round(time.time() - t, 2)
 

@@ -418,19 +418,12 @@ def read_version(
     return _resolve(spark, path, version)
 
 
-def read_version_pruned(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-):
+def read_version_pruned(spark: SparkSession, path: str, col: str, lo, hi):
     """Data-skipping snapshot read: ``col BETWEEN lo AND hi`` rows of
-    ``version``, opening ONLY the data files whose manifest [min, max]
-    bounds overlap the range (Iceberg's scan planning against manifest
-    lower/upper bounds). Files without recorded stats for ``col`` are
-    always read — missing stats can never lose rows. The residual
+    the current version, opening ONLY the data files whose manifest
+    [min, max] bounds overlap the range (Iceberg's scan planning against
+    manifest lower/upper bounds). Files without recorded stats for
+    ``col`` are always read — missing stats can never lose rows. The residual
     filter still applies (pruning is file-granular), and Spark pushes
     it into the parquet scan of the surviving files.
 
@@ -440,10 +433,9 @@ def read_version_pruned(
     at 10^12 rows this metadata-only planning step is what turns a
     full-corpus scan into a partition-range read.
     """
+    version = current_version(path)
     if version is None:
-        version = current_version(path)
-        if version is None:
-            raise FileNotFoundError(f"no committed versions under {path}")
+        raise FileNotFoundError(f"no committed versions under {path}")
     m = _load_manifest(path, version)
     rng = (F.col(col) >= lo) & (F.col(col) <= hi)
     mixed_schemas = m.get("schemas") and any(

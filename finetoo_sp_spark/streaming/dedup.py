@@ -162,9 +162,9 @@ def _layers_contain(blooms: list[np.ndarray], shas, k: int) -> np.ndarray:
 
 
 def _make_dedup_group(
-    state_cap: int,
-    bloom_bits: int,
-    k_hashes: int,
+    state_cap: int = DEFAULT_STATE_CAP,
+    bloom_bits: int = DEFAULT_BLOOM_BITS,
+    k_hashes: int = DEFAULT_K_HASHES,
     fp_budget: float = DEFAULT_FP_BUDGET,
     growth: int = DEFAULT_GROWTH,
 ):
@@ -237,23 +237,18 @@ def _make_dedup_group(
 def stream_exact_dedup(
     pages_stream: DataFrame,
     n_shards: int = 64,
-    state_cap: int = DEFAULT_STATE_CAP,
-    bloom_bits: int = DEFAULT_BLOOM_BITS,
-    k_hashes: int = DEFAULT_K_HASHES,
-    fp_budget: float = DEFAULT_FP_BUDGET,
-    growth: int = DEFAULT_GROWTH,
 ) -> DataFrame:
     """First-seen filter over a pages stream: emits (url, content_sha,
     shard, tier) for pages whose content hash has not appeared in ANY
     earlier micro-batch (nor earlier in this one). ``tier`` is 'exact'
-    while the shard's state is below ``state_cap`` distinct hashes and
-    'bloom' after it migrates to the scalable Bloom layers (see module
+    while the shard's state is below ``DEFAULT_STATE_CAP`` distinct hashes
+    and 'bloom' after it migrates to the scalable Bloom layers (see module
     docstring for the layers*fp_budget false-drop bound)."""
     keyed = pages_stream.select(
         "url", F.sha2(F.col("text"), 256).alias("content_sha")
     ).withColumn("shard", F.pmod(F.xxhash64("content_sha"), F.lit(n_shards)).cast("int"))
     return keyed.groupBy("shard").applyInPandasWithState(
-        _make_dedup_group(state_cap, bloom_bits, k_hashes, fp_budget, growth),
+        _make_dedup_group(),
         outputStructType=OUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -35,11 +35,11 @@ from finetoo_sp_spark.datagen import PAGES_SCHEMA
 from finetoo_sp_spark.extraction.extract import extract_pages, place_buckets, url_salt
 
 
-def stream_pages(spark: SparkSession, pages_dir: str, max_files: int = 4) -> DataFrame:
-    """File-source stream of pages (one micro-batch <= max_files files)."""
+def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
+    """File-source stream of pages (one micro-batch <= 4 files)."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", 4)
         .parquet(pages_dir)
     )
 
@@ -49,13 +49,13 @@ def stream_extract(pages_stream: DataFrame) -> DataFrame:
     return extract_pages(pages_stream, keep_cols=["warc_ts"])
 
 
-def crawl_rate_by_host(pages_stream: DataFrame, window: str = "1 hour") -> DataFrame:
+def crawl_rate_by_host(pages_stream: DataFrame) -> DataFrame:
     """Event-time windowed crawl-rate: pages per host per window, late
     data bounded by a 2-hour watermark."""
     host = F.regexp_extract("url", r"https?://([^/]+)", 1).alias("host")
     return (
         pages_stream.withWatermark("warc_ts", "2 hours")
-        .groupBy(F.window("warc_ts", window).alias("w"), host)
+        .groupBy(F.window("warc_ts", "1 hour").alias("w"), host)
         .agg(F.count(F.lit(1)).alias("n_pages"))
         .select(F.col("w.start").alias("window_start"), "host", "n_pages")
     )

@@ -37,7 +37,10 @@ def committed_epochs(path: str) -> set[int]:
     return out
 
 
-def versioned_epoch_sink(path: str, max_commit_attempts: int = 64):
+MAX_COMMIT_ATTEMPTS = 64
+
+
+def versioned_epoch_sink(path: str):
     """foreachBatch callable: commit each micro-batch as one APPEND
     version stamped with its epoch id; replayed epochs are skipped
     before any file is written (exactly-once on restart).
@@ -63,7 +66,7 @@ def versioned_epoch_sink(path: str, max_commit_attempts: int = 64):
             for f in os.listdir(snap_dir)
             if f.endswith(".parquet")
         )
-        for _ in range(max_commit_attempts):
+        for _ in range(MAX_COMMIT_ATTEMPTS):
             # Ordering matters: read the parent FIRST, then scan epoch
             # markers through that parent, then CAS on parent+1. The
             # CAS failing proves some commit landed after our scan — so
@@ -94,7 +97,7 @@ def versioned_epoch_sink(path: str, max_commit_attempts: int = 64):
             except CommitConflict:
                 continue  # someone advanced the table: rescan + retry
         raise CommitConflict(
-            f"epoch {epoch_id}: gave up after {max_commit_attempts} "
+            f"epoch {epoch_id}: gave up after {MAX_COMMIT_ATTEMPTS} "
             f"commit attempts under contention"
         )
 

@@ -61,7 +61,7 @@ def test_kmeans_partition_invariant(emb):
 
 def test_semdedup_drops_within_cluster_near_dup(emb):
     out = cl.semdedup_survivors(
-        emb, "vec_id", "embedding", k=2, iters=2, threshold=0.999, n_bits=2
+        emb, "vec_id", "embedding", k=2, threshold=0.999, n_bits=2
     )
     ids = {r["id"] for r in out.collect()}
     # 6 is nearly parallel to 0 (cosine ~0.99995) and in the same cluster;

@@ -127,7 +127,7 @@ def test_containment_pairs_matches_bruteforce(spark):
     )
     out = {
         (r["id_small"], r["id_big"]): r["containment"]
-        for r in containment_pairs(df, "id", "text", k=3, window=4, threshold=0.5).collect()
+        for r in containment_pairs(df, "id", "text", threshold=0.5).collect()
     }
     # fragment's fingerprints are a subset of the full doc's -> containment 1.0
     assert out.get((2, 1)) == 1.0

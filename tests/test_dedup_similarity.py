@@ -97,7 +97,7 @@ def emb(spark):
 
 def test_embedding_near_dup(emb):
     pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in
-             dd.embedding_near_dup_pairs(emb, threshold=0.95).collect()}
+             dd.embedding_near_dup_pairs(emb).collect()}
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     assert (0, 2) not in pairs and (0, 3) not in pairs
 
@@ -164,7 +164,7 @@ def test_sessionize_gap(spark):
         (2, t0, "view"),
     ]
     events = spark.createDataFrame(rows, ["user_id", "ts", "event_type"])
-    out = ev.session_stats(events, gap_minutes=30)
+    out = ev.session_stats(events)
     got = {(r["user_id"], r["session_id"]): r["n_events"] for r in out.collect()}
     assert got[(1, 1)] == 2 and got[(1, 2)] == 1 and got[(2, 1)] == 1
 
@@ -209,7 +209,7 @@ def test_multiprobe_recall_at_neardup_operating_point(spark):
     n_truth = t.count()
     assert n_truth >= 60  # ~2 planted neighbors per query survive
 
-    ann = sim.ann_lsh_multiprobe(emb, queries, k=2, n_bits=8, n_tables=3).select(
+    ann = sim.ann_lsh_multiprobe(emb, queries, k=2, n_tables=3).select(
         "query_id", "neighbor_id"
     )
     hits = t.join(ann, ["query_id", "neighbor_id"]).count()
@@ -371,7 +371,7 @@ def test_edit_verify_pairs_confirms_planted_neardups(spark):
     got = {
         (r["id_a"], r["id_b"]): (r["lev"], r["is_dup"])
         for r in edit_verify_pairs(
-            docs, pairs, "doc_id", "text", max_ratio_fp=2000
+            docs, pairs, "doc_id", "text"
         ).collect()
     }
     assert got[(1, 2)][0] == 3 and got[(1, 2)][1] is True

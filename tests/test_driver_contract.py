@@ -163,26 +163,36 @@ def test_every_registered_query_is_named_in_coverage():
     assert not missing, missing
 
 
-def test_no_column_name_parameter_that_no_call_sets():
-    """A defaulted ``*_col``/``url``/``key`` parameter of a public
-    top-level function under finetoo_sp_spark/ must be set by some call
-    in the repository (by keyword, by position, or through a ``*``/``**``
-    splat); otherwise it is a constant and belongs in the body. A call
-    through ``functools.partial`` counts as a call, and a function used
-    as a value (passed around, stored) counts as setting every parameter."""
+# Defaulted parameters that no call varies but that stay settable: each
+# names a deployment's own resource or secret, not a tuning value.
+_KEPT_DEFAULTS = {
+    "read_table(catalog)": "the Spark catalog name is the deployment's",
+    "write_table(catalog)": "the Spark catalog name is the deployment's",
+    "encrypt_pdf(owner_pw)": "a password is a credential, never a constant",
+}
+
+
+def test_no_defaulted_parameter_that_no_call_varies():
+    """Every defaulted parameter of a public top-level function under
+    finetoo_sp_spark/ must be passed a value other than its default by
+    some call in the repository (by keyword, by position, or through a
+    ``*``/``**`` splat); otherwise it is a constant and belongs in the
+    body. "Other" compares source text, so passing a column name its own
+    default does not count. A call through ``functools.partial`` counts
+    as a call, and a function used as a value (passed around, stored)
+    counts as varying every parameter. _KEPT_DEFAULTS lists the
+    exceptions."""
     import ast
-    import re
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]
-    knob = re.compile(r".*_col|url|key")
     sources = [
         p for p in root.rglob("*.py")
         if not any(s.startswith(".") or s == "__pycache__" for s in p.relative_to(root).parts)
     ]
     trees = {p: ast.parse(p.read_text()) for p in sources}
 
-    knobs = []  # (module, function, parameter, position or None)
+    knobs = []  # (module, function, parameter, position or None, default source)
     for p, tree in trees.items():
         if root / "finetoo_sp_spark" not in p.parents:
             continue
@@ -192,12 +202,11 @@ def test_no_column_name_parameter_that_no_call_sets():
             a = fn.args
             pos = a.posonlyargs + a.args
             first = len(pos) - len(a.defaults)
-            for i, arg in enumerate(pos[first:], first):
-                if knob.fullmatch(arg.arg):
-                    knobs.append((p.relative_to(root), fn.name, arg.arg, i))
+            for i, (arg, d) in enumerate(zip(pos[first:], a.defaults), first):
+                knobs.append((p.relative_to(root), fn.name, arg.arg, i, ast.unparse(d)))
             for arg, d in zip(a.kwonlyargs, a.kw_defaults):
-                if d is not None and knob.fullmatch(arg.arg):
-                    knobs.append((p.relative_to(root), fn.name, arg.arg, None))
+                if d is not None:
+                    knobs.append((p.relative_to(root), fn.name, arg.arg, None, ast.unparse(d)))
 
     def name_of(node):
         return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
@@ -217,17 +226,23 @@ def test_no_column_name_parameter_that_no_call_sets():
             if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in callees:
                 as_value.add(name_of(n))
 
-    def sets(args, keywords, param, idx):
-        if any(k.arg in (None, param) for k in keywords):
-            return True
+    def varies(args, keywords, param, idx, default):
+        for k in keywords:
+            if k.arg is None or (k.arg == param and ast.unparse(k.value) != default):
+                return True
         if idx is None:
             return False
-        return len(args) > idx or any(isinstance(x, ast.Starred) for x in args)
+        if any(isinstance(x, ast.Starred) for x in args[: idx + 1]):
+            return True
+        return len(args) > idx and ast.unparse(args[idx]) != default
 
-    unset = [
+    fixed = [
         f"{mod}::{fn}({param})"
-        for mod, fn, param, idx in knobs
+        for mod, fn, param, idx, default in knobs
         if fn not in as_value
-        and not any(sets(args, kws, param, idx) for args, kws in calls.get(fn, []))
+        and f"{fn}({param})" not in _KEPT_DEFAULTS
+        and not any(varies(args, kws, param, idx, default) for args, kws in calls.get(fn, []))
     ]
-    assert not unset, unset
+    assert not fixed, fixed
+    declared = {f"{fn}({param})" for _mod, fn, param, _idx, _d in knobs}
+    assert set(_KEPT_DEFAULTS) <= declared, set(_KEPT_DEFAULTS) - declared

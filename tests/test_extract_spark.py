@@ -314,28 +314,36 @@ def test_commit_options_give_default_manifests(spark, pages, tmp_path):
 
 def test_anchor_extraction_edge_cases(spark):
     """extract_anchors: nested tags stripped, whitespace collapsed,
-    relative hrefs resolved, non-http and empty anchors handled."""
+    relative and protocol-relative hrefs resolved, non-http and empty
+    anchors handled; extract_links resolves the same targets."""
     html = (
         '<html><body>'
         '<a href="/a"><b>bold</b> <i>link</i></a>'
         '<a href="https://other.example.com/x">abs\n  target</a>'
         '<a href="mailto:x@y">mail</a>'
         '<a href="/img"><img src="i.png"></a>'
+        '<a href="//cdn.example.net/l.js">cdn</a>'
         '</body></html>'
     )
     pages = spark.createDataFrame(
         [("https://host.example.com/p", bytearray(html, "utf8"))], "url string, html binary"
     )
-    from finetoo_sp_spark.extraction.graph import extract_anchor_pairs
+    from finetoo_sp_spark.extraction.graph import (
+        extract_anchor_pairs,
+        extract_link_pairs,
+    )
 
     rows = sorted(
         (r.target, r.anchor) for r in extract_anchor_pairs(pages).collect()
     )
     assert rows == [
+        ("https://cdn.example.net/l.js", "cdn"),           # protocol-relative: page scheme
         ("https://host.example.com/a", "bold link"),       # tags stripped, ws collapsed
         ("https://host.example.com/img", ""),              # image-only anchor kept, empty text
         ("https://other.example.com/x", "abs target"),     # absolute kept, newline collapsed
     ]  # mailto: dropped
+    links = sorted(r.target for r in extract_link_pairs(pages).collect())
+    assert links == [t for t, _ in rows]  # extract_links resolves alike
 
 
 def test_anchor_summary_matches_pairs(spark):

@@ -108,7 +108,7 @@ def test_answer_query_retries_with_error_feedback(spark):
             )
 
     flaky = FlakyPlanner()
-    resp = answer_query(g, web_graph_schema(), "how many orders", flaky, retries=1)
+    resp = answer_query(g, web_graph_schema(), "how many orders", flaky)
     assert len(flaky.calls) == 2
     assert "Failed to parse operation plan:" in flaky.calls[1]
     assert resp.steps == ["AGGREGATE(orders)"]
@@ -121,7 +121,7 @@ def test_answer_query_retries_with_error_feedback(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="Failed to parse operation plan"):
-        answer_query(g, web_graph_schema(), "q", AlwaysBad(), retries=1)
+        answer_query(g, web_graph_schema(), "q", AlwaysBad())
 
 
 def test_strip_fences_matches_reference_find_semantics():

@@ -119,7 +119,7 @@ def test_plan_retry_feeds_error_back_over_http(spark, fake_server):
     _FakePlanner.script = [("ok", "not a plan {"), ("ok", GOOD_PLAN)]
     g = tpch_graph(spark, "/root/testdata/sf0.001")
     c, _ = _client(fake_server)
-    resp = answer_query(g, web_graph_schema(), "count urgent orders by status", c, retries=1)
+    resp = answer_query(g, web_graph_schema(), "count urgent orders by status", c)
     assert resp.steps == ["FILTER(orders)", "GROUP_BY(orders)"]
     assert len(_FakePlanner.seen) == 2
     second_prompt = _FakePlanner.seen[1]["body"]["contents"][0]["parts"][0]["text"]

@@ -193,7 +193,7 @@ def test_frame_sample_times(spark):
     b = encode_mp4("isom", 600, 900, [("vide", 16, 16, "avc1")])
     df = spark.createDataFrame([Row(asset_id=7, payload=bytearray(b))])
     rows = sorted(
-        (r.sample_idx, r.ts_ms) for r in frame_sample_times(df, 500).collect()
+        (r.sample_idx, r.ts_ms) for r in frame_sample_times(df).collect()
     )
     assert rows == [(0, 0), (1, 500), (2, 1000), (3, 1500)]
 

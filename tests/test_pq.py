@@ -34,10 +34,10 @@ def _planted(spark, n=80, dims=16, k=4, spread=0.01):
 
 def test_codes_shape_and_determinism(spark):
     emb = _planted(spark, n=40)
-    got1 = {r["id"]: r["code_str"] for r in pq_codes(emb, m=4, ksub=4).collect()}
+    got1 = {r["id"]: r["code_str"] for r in pq_codes(emb).collect()}
     got2 = {
         r["id"]: r["code_str"]
-        for r in pq_codes(emb.repartition(7), m=4, ksub=4).collect()
+        for r in pq_codes(emb.repartition(7)).collect()
     }
     assert got1 == got2  # partitioning-invariant
     assert set(got1) == set(range(40))
@@ -54,7 +54,7 @@ def test_planted_clusters_recover_per_subspace(spark):
     scatter across the near-zero centroids — jitter decides — so full
     codes are NOT expected to match.)"""
     emb = _planted(spark, n=40, k=4)
-    cb = pq_train(emb, m=4, ksub=4)
+    cb = pq_train(emb, m=4)
     codes = {r["id"]: tuple(r[f"c{i}"] for i in range(4))
              for r in pq_assign(emb, cb).collect()}
     for s in range(4):
@@ -71,7 +71,7 @@ def test_ivf_pq_topk_on_planted_clusters(spark):
     must be exactly the 9 other members (ADC distance 0 within the
     cluster, huge across)."""
     emb = _planted(spark, n=40, k=4)
-    got = ann_ivf_pq_topk(emb, [0, 1], k=9, nlist=4, nprobe=1).collect()
+    got = ann_ivf_pq_topk(emb, [0, 1], k=9, nprobe=1).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
@@ -82,7 +82,7 @@ def test_ivf_pq_topk_on_planted_clusters(spark):
 def test_recall_is_perfect_on_planted_clusters(spark):
     emb = _planted(spark, n=40, k=4)
     got = {r["query_id"]: (r["n_hits"], r["k"])
-           for r in ivf_pq_recall(emb, [0, 1, 2], k=9, nlist=4, nprobe=1).collect()}
+           for r in ivf_pq_recall(emb, [0, 1, 2], k=9, nprobe=1).collect()}
     assert got == {0: (9, 9), 1: (9, 9), 2: (9, 9)}
 
 

@@ -230,7 +230,7 @@ def test_divergence_report_plan_has_no_expand(spark):
 
 
 def test_bom_report(graph):
-    bom = bom_report(graph, "LINKS_TO")
+    bom = bom_report(graph)
     top = bom.first()
     # page 0 and 1 are linked by the most pages (id//2, id//3 fan-in)
     assert "/page/0" in top.part or "/page/1" in top.part

@@ -45,7 +45,7 @@ def test_multiprobe_superset_of_single_table(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
     single = sim.ann_lsh_bucketed(emb, q, k=50, n_bits=8)
-    multi = sim.ann_lsh_multiprobe(emb, q, k=50, n_bits=8, n_tables=3)
+    multi = sim.ann_lsh_multiprobe(emb, q, k=50, n_tables=3)
     s_pairs = {(r["query_id"], r["neighbor_id"]) for r in single.collect()}
     m_pairs = {(r["query_id"], r["neighbor_id"]) for r in multi.collect()}
     # table 0 of the multiprobe IS the single-table bucketing, so with a
@@ -196,8 +196,7 @@ def test_template_ngrams_finds_planted_boilerplate(spark):
         for i in range(12)
     ] + [("hostB", 100 + i, f"different site {i}") for i in range(12)]
     df = spark.createDataFrame(rows, "host string, doc_id int, text string")
-    out = template_ngrams(df, "host", "doc_id", "text", n=2, min_pages=10,
-                          ratio_ppm=900_000)
+    out = template_ngrams(df, "host", "doc_id", "text", ratio_ppm=900_000)
     got = {(r["host"], r["shingle"]): r["share_ppm"] for r in out.collect()}
     # the planted footer bigrams recur on 100% of hostA pages
     assert got[("hostA", "template footer")] == 1_000_000
@@ -211,7 +210,7 @@ def test_template_ngrams_min_pages_gate(spark):
 
     rows = [("tiny", i, "same exact text") for i in range(5)]
     df = spark.createDataFrame(rows, "host string, doc_id int, text string")
-    assert template_ngrams(df, "host", "doc_id", "text", min_pages=10).count() == 0
+    assert template_ngrams(df, "host", "doc_id", "text").count() == 0
 
 
 def test_script_profile_census(spark):

@@ -39,7 +39,7 @@ def test_hll_estimate_accuracy_and_partition_invariance(spark):
     n = 10000
     df = _keys(spark, 0, n)
     regs = hll_registers(df, "k", "grp", p=12).collect()
-    est = hll_estimate_py([(r.bucket, r.register) for r in regs], p=12)
+    est = hll_estimate_py([(r.bucket, r.register) for r in regs])
     assert abs(est - n) / n < 0.06, est
     regs2 = hll_registers(df.repartition(13), "k", "grp", p=12).collect()
     assert sorted(map(tuple, regs)) == sorted(map(tuple, regs2))
@@ -102,9 +102,9 @@ def test_cms_never_underestimates_and_merges(spark):
     # zipf-ish: key j appears 200//(j+1) times
     rows = [(f"k{j}",) for j in range(60) for _ in range(200 // (j + 1))]
     df = spark.createDataFrame(rows, "k string")
-    sk = cms_sketch(df, "k", d=4, w=128)
+    sk = cms_sketch(df, "k", w=128)
     probes = df.groupBy("k").agg(F.count(F.lit(1)).alias("true_cnt"))
-    est = {r.key: r.est_cnt for r in cms_estimate(sk, probes, "k", d=4, w=128).collect()}
+    est = {r.key: r.est_cnt for r in cms_estimate(sk, probes, "k", w=128).collect()}
     truth = {r.k: r.true_cnt for r in probes.collect()}
     assert all(est[k] >= truth[k] for k in truth)
     # heavy hitters are near-exact (few collisions at this load factor)
@@ -114,8 +114,8 @@ def test_cms_never_underestimates_and_merges(spark):
     a = spark.createDataFrame(rows[:half], "k string")
     b = spark.createDataFrame(rows[half:], "k string")
     merged = (
-        cms_sketch(a, "k", d=4, w=128)
-        .union(cms_sketch(b, "k", d=4, w=128))
+        cms_sketch(a, "k", w=128)
+        .union(cms_sketch(b, "k", w=128))
         .groupBy("row", "col")
         .agg(F.sum("cnt").alias("cnt"))
     )

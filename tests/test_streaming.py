@@ -61,7 +61,7 @@ def test_crawl_rate_window(spark, pages_dir):
         .parquet(pages_dir)
     )
     q = (
-        crawl_rate_by_host(stream, window="1 hour")
+        crawl_rate_by_host(stream)
         .writeStream.format("memory")
         .queryName("rates")
         .outputMode("complete")

@@ -73,7 +73,7 @@ def cmd_graph(spark, args: list[str]) -> None:
     rep = divergence_report(g.nodes["block"], "tag", "url", "content_hash")
     tot = divergence_totals(rep).collect()[0]
     print(f"divergence: {tot['divergent']}/{tot['total_names']} block tags divergent")
-    bom = bom_report(g, edge_type="LINKS_TO")
+    bom = bom_report(g)
     write_json(rep.drop("versions"), f"{out}/divergence_json")
     write_csv(bom, f"{out}/bom_csv")
     print(f"BOM totals: {bom_totals(bom).collect()[0].asDict()}")
@@ -110,7 +110,7 @@ def cmd_bom_text(spark, args: list[str]) -> None:
     from finetoo_sp_spark.operators.sinks import format_bom_lines
 
     pages = _load_pages(spark, args[0])
-    bom = bom_report(build_web_graph(pages), edge_type="LINKS_TO")
+    bom = bom_report(build_web_graph(pages))
     lines = format_bom_lines(bom).orderBy("line_no").limit(30).collect()
     print("\n".join(r["line"] for r in lines))
 
