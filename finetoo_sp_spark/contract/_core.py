@@ -40,6 +40,7 @@ from finetoo_sp_spark.operators.primitives import (
     op_traverse,
 )
 from finetoo_sp_spark.schema.registry import PropertyMeta, Schema
+from finetoo_sp_spark.sources.curation import MAX_DF as _CURATION_MAX_DF
 
 # ---------------------------------------------------------------- helpers
 
@@ -550,10 +551,8 @@ def _snapshot_b(docs: DataFrame) -> DataFrame:
 
 # --- capstone: end-to-end curation pipeline -------------------------------
 
-# stop-shingle pruning ON (max_df=100): a shingle in >100 of the 500
-# sf0.01 docs is boilerplate; at corpus scale an unpruned hot shingle
-# makes the inverted-index self-join quadratic in its document frequency.
-_CURATION_MAX_DF = 100
+# stop-shingle pruning ON: a shingle in more than curation.MAX_DF (100)
+# of the 500 sf0.01 docs is dropped, as run_resumable_curation does.
 _CURATION_JACCARD = _jaccard_sql("doc_id >= 0", 0.5, max_df=_CURATION_MAX_DF)
 
 

@@ -480,7 +480,7 @@ def q_curation_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")
     out_dir = _tmp_out("curation_lineage")
     run_resumable_curation(
-        docs, out_dir, n_buckets=16, max_df=_CURATION_MAX_DF, hash_mode="sha"
+        docs, out_dir, n_buckets=16, hash_mode="sha"
     )
     man = read_manifests(spark, _os.path.join(out_dir, "survivors"))
     return man.select("bucket", "output_count", "content_checksum", "status")
@@ -965,7 +965,6 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand,
         "doc_id",
         {"length": "s_len", "classifier": "s_cls", "balance": "s_bal"},
-        k=60,
     ).withColumnRenamed("id", "id")
 
 

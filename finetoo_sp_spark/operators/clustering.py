@@ -9,7 +9,7 @@ never leaves a cluster. Public-knowledge algorithms only (Lloyd's
 iteration, sign-LSH bucketing).
 
 Determinism / oracle portability: all arithmetic is integer fixed-point
-(coordinates scaled by ``scale`` and cast to long), so sums are exact
+(coordinates scaled by ``SCALE`` and cast to long), so sums are exact
 longs and independent of partition order, and a DuckDB oracle can
 reproduce every centroid bit-for-bit. Integer division must truncate
 toward zero on both engines (Spark ``div`` and DuckDB ``//`` both do;
@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+SCALE = 1 << 20  # fixed-point coordinate scale
+
 
 def _tdiv(a: int, b: int) -> int:
     """Integer division truncating toward zero (matches Spark ``div``
@@ -38,9 +40,9 @@ def _tdiv(a: int, b: int) -> int:
     return -q if a < 0 else q
 
 
-def _to_fixed(vec_col, scale: int):
+def _to_fixed(vec_col):
     return F.transform(
-        vec_col, lambda x: F.round(x.cast("double") * scale).cast("long")
+        vec_col, lambda x: F.round(x.cast("double") * SCALE).cast("long")
     )
 
 
@@ -61,14 +63,13 @@ def kmeans_fit(
     vec_col: str,
     k: int = 4,
     iters: int = 2,
-    scale: int = 1 << 20,
 ) -> tuple[list[list[int]], DataFrame]:
     """kmeans_assign that ALSO returns the final centroids (fixed-point
     int lists) — the piece IVF coarse quantizers need for probing.
     Same deterministic contract; the assigned frame is the labels
     against the last centroid update."""
     e = emb.select(
-        F.col(id_col).alias("id"), _to_fixed(F.col(vec_col), scale).alias("v")
+        F.col(id_col).alias("id"), _to_fixed(F.col(vec_col)).alias("v")
     )
 
     # init: k smallest ids (tiny sorted collect — centroid-sized, not data-sized)

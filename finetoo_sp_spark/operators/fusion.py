@@ -10,7 +10,7 @@ fused sum, which is robust to any monotone rescaling of any input.
 Determinism discipline: ranks are dense ranks over (score DESC,
 id ASC) — the id tiebreak makes every rank, and hence the fused
 value, a pure function of the data; the fused score is **integer
-fixed point** (SCALE div (k + rank), summed as integers) so partial
+fixed point** (SCALE div (RRF_K + rank), summed as integers) so partial
 sums are order-independent and the whole operator is exactly portable
 to the SQL oracle.
 
@@ -38,14 +38,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000
-DEFAULT_K = 60  # the RRF paper's constant
+RRF_K = 60  # the RRF paper's constant
 
 
 def rrf_fuse(
     df: DataFrame,
     id_col: str,
     signal_cols: Mapping[str, Column | str],
-    k: int = DEFAULT_K,
 ) -> DataFrame:
     """(id, rank_<signal>..., rrf_fp) — fused integer RRF score.
 
@@ -67,5 +66,5 @@ def rrf_fuse(
         rank_col = f"rank_{name}"
         out = out.withColumn(rank_col, F.rank().over(w).cast("long"))
         keep.append(rank_col)
-        fused = fused + F.expr(f"{SCALE}L div ({int(k)}L + {rank_col})")
+        fused = fused + F.expr(f"{SCALE}L div ({RRF_K}L + {rank_col})")
     return out.select(*keep, fused.alias("rrf_fp"))

@@ -40,7 +40,6 @@ from finetoo_sp_spark.operators.clustering import (
     kmeans_fit,
 )
 
-SCALE = 1 << 20
 M = 4  # subspaces per vector
 KSUB = 4  # centroids per subspace codebook
 ITERS = 2  # k-means rounds, counting the init
@@ -54,7 +53,7 @@ def pq_train(emb: DataFrame, m: int = M) -> list[list[list[int]]]:
     One pass per k-means round covers ALL subspaces (the per-dimension
     update groups by (subspace, cluster, dim) in a single aggregate)."""
     e = emb.select(
-        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), SCALE).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding")).alias("v")
     )
     init_rows = e.orderBy("id").limit(KSUB).collect()
     dims = len(init_rows[0]["v"])
@@ -114,7 +113,7 @@ def pq_assign(emb: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
     ksub = len(codebooks[0])
     sub = len(codebooks[0][0])
     e = emb.select(
-        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), SCALE).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding")).alias("v")
     )
     cols = []
     for mi in range(m):
@@ -161,9 +160,7 @@ def ann_ivf_pq_topk(
     array literals, so candidate scoring is ``element_at(table, code)``
     sums — a pure narrow expression; no vector math touches the corpus
     at query time (the PQ promise)."""
-    centroids, assigned = kmeans_fit(
-        emb, "vec_id", "embedding", k=NLIST, iters=2, scale=SCALE
-    )
+    centroids, assigned = kmeans_fit(emb, "vec_id", "embedding", k=NLIST)
     codebooks = pq_train(emb)
     sub = len(codebooks[0][0])
     codes = pq_assign(emb, codebooks)
@@ -172,7 +169,7 @@ def ann_ivf_pq_topk(
     qrows = (
         emb.filter(F.col("vec_id").isin([int(q) for q in query_ids]))
         .select(
-            F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), SCALE).alias("v")
+            F.col("vec_id").alias("id"), _to_fixed(F.col("embedding")).alias("v")
         )
         .collect()
     )
@@ -231,7 +228,7 @@ def ivf_pq_recall(
     )
 
     e = emb.select(
-        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding"), SCALE).alias("v")
+        F.col("vec_id").alias("id"), _to_fixed(F.col("embedding")).alias("v")
     )
     q = (
         e.filter(F.col("id").isin([int(x) for x in query_ids]))

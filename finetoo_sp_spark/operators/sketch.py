@@ -66,15 +66,15 @@ def hll_registers(df: DataFrame, key_col: str, group_col: str, p: int = 12) -> D
     )
 
 
-def hll_estimate_py(registers: list[tuple[int, int]]) -> float:
+def hll_estimate_py(registers: list[tuple[int, int]], p: int = 12) -> float:
     """Driver-side HLL estimate from collected (bucket, register) pairs
-    of a p = 12 register file — the read-out path (floats are fine
-    here: the sketch itself is the exact, mergeable artifact; the
-    estimate is a display value).
+    — the read-out path (floats are fine here: the sketch itself is the
+    exact, mergeable artifact; the estimate is a display value).
+    ``p`` must be the one the registers were built with.
     Includes the small-range linear-counting correction."""
     import math
 
-    m = 1 << 12  # 2^p buckets
+    m = 1 << p
     regs = dict(registers)
     s = sum(2.0 ** -regs.get(j, 0) for j in range(m))
     alpha = 0.7213 / (1 + 1.079 / m)

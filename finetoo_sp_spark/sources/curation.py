@@ -45,6 +45,10 @@ from finetoo_sp_spark.sources.lineage import (
 )
 
 PAIRS_MARKER = "_PHASE_COMPLETE"
+# Stop-shingle pruning: a shingle in more than MAX_DF docs is boilerplate;
+# at corpus scale an unpruned hot shingle makes the inverted-index
+# self-join quadratic in its document frequency.
+MAX_DF = 100
 
 
 def _bucket_of(col: str, n_buckets: int, hash_mode: str):
@@ -100,7 +104,6 @@ def _write_bucketed(
 def run_resumable_curation(
     docs: DataFrame,
     out_dir: str,
-    max_df: int | None = 100,
     n_buckets: int = 32,
     hash_mode: str = "xxhash64",
 ) -> dict:
@@ -127,7 +130,7 @@ def run_resumable_curation(
         pairs = spark.read.parquet(os.path.join(pairs_dir, "data")).drop("bucket")
     else:
         fresh = ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5, max_df=max_df
+            docs, "doc_id", "text", threshold=0.5, max_df=MAX_DF
         ).withColumn("bucket", _bucket_of("id_a", n_buckets, hash_mode))
         _write_bucketed(fresh, pairs_dir, ["id_a", "id_b"], n_buckets, hash_mode=hash_mode)
         n_pairs = spark.read.parquet(os.path.join(pairs_dir, "data")).count()

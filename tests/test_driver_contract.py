@@ -163,12 +163,14 @@ def test_every_registered_query_is_named_in_coverage():
     assert not missing, missing
 
 
-# Defaulted parameters that no call varies but that stay settable: each
-# names a deployment's own resource or secret, not a tuning value.
+# Defaulted parameters that no call varies but that stay settable: a
+# deployment's own resource or secret, or a value that must match one
+# that calls do vary.
 _KEPT_DEFAULTS = {
     "read_table(catalog)": "the Spark catalog name is the deployment's",
     "write_table(catalog)": "the Spark catalog name is the deployment's",
     "encrypt_pdf(owner_pw)": "a password is a credential, never a constant",
+    "hll_estimate_py(p)": "must equal the hll_registers(p) the registers were built with",
 }
 
 
@@ -177,11 +179,13 @@ def test_no_defaulted_parameter_that_no_call_varies():
     finetoo_sp_spark/ must be passed a value other than its default by
     some call in the repository (by keyword, by position, or through a
     ``*``/``**`` splat); otherwise it is a constant and belongs in the
-    body. "Other" compares source text, so passing a column name its own
-    default does not count. A call through ``functools.partial`` counts
-    as a call, and a function used as a value (passed around, stored)
-    counts as varying every parameter. _KEPT_DEFAULTS lists the
-    exceptions."""
+    body. "Other" compares values where both sides fold to a constant
+    (module-level constants, own or imported, replaced by their values,
+    so ``SCALE`` equals a default of ``1 << 20`` when SCALE is that) and
+    source text otherwise, so passing a column name its own default does
+    not count. A call through ``functools.partial`` counts as a call,
+    and a function used as a value (passed around, stored) counts as
+    varying every parameter. _KEPT_DEFAULTS lists the exceptions."""
     import ast
     from pathlib import Path
 
@@ -192,7 +196,58 @@ def test_no_defaulted_parameter_that_no_call_varies():
     ]
     trees = {p: ast.parse(p.read_text()) for p in sources}
 
-    knobs = []  # (module, function, parameter, position or None, default source)
+    # Fold an expression to its value when it is built only from literals,
+    # operators and names in ``consts``; _UNFOLDED otherwise.
+    _UNFOLDED = object()
+    leaf = (ast.Constant, ast.Name, ast.Load, ast.operator, ast.unaryop)
+    shape = (ast.Expression, ast.BinOp, ast.UnaryOp, ast.Tuple, ast.List)
+
+    def fold(node, consts):
+        for n in ast.walk(node):
+            if not isinstance(n, leaf + shape) or (
+                isinstance(n, ast.Name) and n.id not in consts
+            ):
+                return _UNFOLDED
+        try:
+            return eval(compile(ast.Expression(node), "<default>", "eval"), {"__builtins__": {}}, consts)
+        except Exception:
+            return _UNFOLDED
+
+    # Module-level constants per file, imported ones included, resolved in
+    # file order until nothing new folds.
+    modname = {".".join(p.relative_to(root).with_suffix("").parts): p for p in sources}
+    consts = {p: {} for p in sources}
+    changed = True
+    while changed:
+        changed = False
+        for p, tree in trees.items():
+            for st in tree.body:
+                if (
+                    isinstance(st, ast.Assign)
+                    and len(st.targets) == 1
+                    and isinstance(st.targets[0], ast.Name)
+                    and st.targets[0].id not in consts[p]
+                ):
+                    v = fold(st.value, consts[p])
+                    if v is not _UNFOLDED:
+                        consts[p][st.targets[0].id] = v
+                        changed = True
+                elif isinstance(st, ast.ImportFrom) and st.module in modname:
+                    src = consts[modname[st.module]]
+                    for al in st.names:
+                        local = al.asname or al.name
+                        if al.name in src and local not in consts[p]:
+                            consts[p][local] = src[al.name]
+                            changed = True
+
+    def same(node, node_consts, default):
+        """Whether an argument passes the default (a (source, value) pair)."""
+        v = fold(node, node_consts)
+        if v is not _UNFOLDED and default[1] is not _UNFOLDED:
+            return (type(v), v) == (type(default[1]), default[1])
+        return ast.unparse(node) == default[0]
+
+    knobs = []  # (module, function, parameter, position or None, (default source, value))
     for p, tree in trees.items():
         if root / "finetoo_sp_spark" not in p.parents:
             continue
@@ -203,45 +258,45 @@ def test_no_defaulted_parameter_that_no_call_varies():
             pos = a.posonlyargs + a.args
             first = len(pos) - len(a.defaults)
             for i, (arg, d) in enumerate(zip(pos[first:], a.defaults), first):
-                knobs.append((p.relative_to(root), fn.name, arg.arg, i, ast.unparse(d)))
+                knobs.append((p.relative_to(root), fn.name, arg.arg, i, (ast.unparse(d), fold(d, consts[p]))))
             for arg, d in zip(a.kwonlyargs, a.kw_defaults):
                 if d is not None:
-                    knobs.append((p.relative_to(root), fn.name, arg.arg, None, ast.unparse(d)))
+                    knobs.append((p.relative_to(root), fn.name, arg.arg, None, (ast.unparse(d), fold(d, consts[p]))))
 
     def name_of(node):
         return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
 
     calls, as_value = {}, set()
-    for tree in trees.values():
+    for p, tree in trees.items():
         callees = set()
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
                 callees.add(id(n.func))
-                calls.setdefault(name_of(n.func), []).append((n.args, n.keywords))
+                calls.setdefault(name_of(n.func), []).append((n.args, n.keywords, consts[p]))
                 if name_of(n.func) == "partial" and n.args:
                     callees.add(id(n.args[0]))
                     target = name_of(n.args[0])
-                    calls.setdefault(target, []).append((n.args[1:], n.keywords))
+                    calls.setdefault(target, []).append((n.args[1:], n.keywords, consts[p]))
         for n in ast.walk(tree):
             if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in callees:
                 as_value.add(name_of(n))
 
-    def varies(args, keywords, param, idx, default):
+    def varies(args, keywords, call_consts, param, idx, default):
         for k in keywords:
-            if k.arg is None or (k.arg == param and ast.unparse(k.value) != default):
+            if k.arg is None or (k.arg == param and not same(k.value, call_consts, default)):
                 return True
         if idx is None:
             return False
         if any(isinstance(x, ast.Starred) for x in args[: idx + 1]):
             return True
-        return len(args) > idx and ast.unparse(args[idx]) != default
+        return len(args) > idx and not same(args[idx], call_consts, default)
 
     fixed = [
         f"{mod}::{fn}({param})"
         for mod, fn, param, idx, default in knobs
         if fn not in as_value
         and f"{fn}({param})" not in _KEPT_DEFAULTS
-        and not any(varies(args, kws, param, idx, default) for args, kws in calls.get(fn, []))
+        and not any(varies(*call, param, idx, default) for call in calls.get(fn, []))
     ]
     assert not fixed, fixed
     declared = {f"{fn}({param})" for _mod, fn, param, _idx, _d in knobs}

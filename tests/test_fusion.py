@@ -10,7 +10,7 @@ def test_rrf_hand_computed(spark):
     df = spark.createDataFrame(rows, "id long, a long, b long")
     got = {
         r["id"]: (r["rank_a"], r["rank_b"], r["rrf_fp"])
-        for r in rrf_fuse(df, "id", {"a": "a", "b": "b"}, k=60).collect()
+        for r in rrf_fuse(df, "id", {"a": "a", "b": "b"}).collect()
     }
     exp_ranks = {1: (1, 3), 2: (2, 1), 3: (3, 2)}
     for i, (ra, rb) in exp_ranks.items():

@@ -39,7 +39,7 @@ def test_hll_estimate_accuracy_and_partition_invariance(spark):
     n = 10000
     df = _keys(spark, 0, n)
     regs = hll_registers(df, "k", "grp", p=12).collect()
-    est = hll_estimate_py([(r.bucket, r.register) for r in regs])
+    est = hll_estimate_py([(r.bucket, r.register) for r in regs], p=12)
     assert abs(est - n) / n < 0.06, est
     regs2 = hll_registers(df.repartition(13), "k", "grp", p=12).collect()
     assert sorted(map(tuple, regs)) == sorted(map(tuple, regs2))
