@@ -2,7 +2,9 @@
 
 Headline = extraction throughput (pages/sec) over the deterministic
 synthetic corpus (datagen.gen_pages), matching BASELINE.json's metric.
-The per-query dict times the contract queries on $SPARK_GRAFT_SF_DIR.
+The per-query dict times every registered contract query
+(contract.queries()) and two production-hash variants on
+$SPARK_GRAFT_SF_DIR.
 
 Env:
   SPARK_GRAFT_SF_DIR      parquet dir (default /root/testdata/sf0.1)
@@ -99,185 +101,6 @@ def main() -> None:
     pages.unpersist()
 
     # -- contract queries on the driver tables ---------------------------
-    bench_queries = [
-        "extract_main_text",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_local_supplier",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "dedup_embedding_cosine",
-        "ann_topk_bruteforce",
-        "ann_lsh_bucketed",
-        "session_stats",
-        "fingerprint_summary",
-        "quality_scores",
-        "join_placed",
-        "divergence_parts",
-        "curation_pipeline",
-        "web_link_bom",
-        "traverse_links_2hop",
-        "tfidf_top_terms",
-        "binder_manifest",
-        "block_comparison",
-        "ann_lsh_multiprobe",
-        "asof_last_purchase",
-        "range_join_trial_events",
-        "repetition_scores",
-        "embedding_centroids",
-        "dedup_minhash_salted",
-        "dedup_simhash_salted",
-        "pagerank_links",
-        "rarity_scores",
-        "dedup_lines_c4",
-        "multimodal_image_stats",
-        "multimodal_image_stats_jpeg",
-        "pdf_real_extract",
-        "training_shard_manifest",
-        "chunk_windows",
-        "dedup_incremental",
-        "anchor_text_agg",
-        "snapshot_churn",
-        "incremental_extract",
-        # round-3 late additions
-        "bm25_topk",
-        "classifier_scores",
-        "table_extract",
-        "jsonld_extract",
-        "compliance_flags",
-        "skew_report",
-        "normalize_mojibake",
-        "edit_verify",
-        "template_ngrams",
-        "curation_v2",
-        "phrase_hits",
-        "shard_assign",
-        "robots_gate",
-        "robots_gate_wildcard",
-        "robots_gate_agent",
-        "compaction_plan",
-        "budget_alloc",
-        "script_profile",
-        "length_buckets",
-        "mirror_hosts",
-        # round-4 additions
-        "dedup_window_stats",
-        "dedup_window_removal",
-        "url_canonicalize",
-        "sitemap_parse",
-        "multimodal_audio_stats",
-        "robots_sitemaps",
-        "embedding_quantize",
-        "gopher_rules",
-        "bpe_pair_counts",
-        "sentence_stats",
-        "pii_scan",
-        "hll_sketch",
-        "kmv_distinct",
-        "image_dhash",
-        "image_neardup_pairs",
-        "cms_heavyhitters",
-        "length_quantiles",
-        "corpus_report",
-        "bpe_encode_tokens",
-        "ccnet_lm_filter",
-        "video_metadata",
-        "image_dup_clusters",
-        # round-5 additions
-        "multimodal_image_stats_jpeg_progressive",
-        "multimodal_image_stats_webp",
-        "multimodal_image_stats_gif",
-        "image_dhash_mixed_formats",
-        "dxf_entities_by_type",
-        "pq_codes",
-        "ann_ivf_pq_topk",
-        "http_robots_gate",
-        "image_dimensions",
-        "curation_v3",
-        "bpe_learn_merges",
-        "blocklist_gate",
-        "wet_roundtrip",
-        "frame_sample_times",
-        "table_time_travel",
-        "table_upsert_mor",
-        "trap_urls",
-        "snapshot_drift",
-        "og_meta_extract",
-        "hreflang_edges",
-        "microdata_extract",
-        "feed_parse",
-        "hits_scores",
-        "trustrank_scores",
-        "charset_decode",
-        "markdown_render",
-        "extract_legacy_encoded",
-        "boilerplate_strip_host",
-        "temperature_mix",
-        "redirect_resolve",
-        "canonical_clusters",
-        "nofollow_links",
-        "nfc_normalize",
-        "soft404_flags",
-        "rrf_quality_fusion",
-        "wat_roundtrip",
-        "warc_http_charset",
-        "cdx_index",
-        "zipnum_index",
-        "http_transfer_decode",
-        "warc_revisit_resolve",
-        "token_counts_multilingual",
-        "lang_id_script",
-        "gif_animation_stats",
-        "frontier_schedule",
-        "table_pruned_scan",
-        "registrable_domains",
-        "resolve_references",
-        "recrawl_plan",
-        "resolved_links",
-        "domain_quality_report",
-        # round-5 session-3 additions
-        "multimodal_audio_stats_flac",
-        "audio_probe_meta",
-        "multimodal_image_stats_bmp_ico",
-        "multimodal_image_stats_tiff",
-        "cdc_chunk_stats",
-        "cdc_dedup",
-        "asset_curation_report",
-        # round-5 session-4 additions
-        "multimodal_image_stats_bmp_rle",
-        "webp_animation_stats",
-        "multimodal_audio_stats_g711",
-        "table_schema_evolution",
-        # round-5 session-5 additions
-        "apng_animation_stats",
-        "audio_fingerprint_dups",
-        "community_labels",
-        "pdf_encrypted_extract",
-        "pdf_objstm_extract",
-        "mp4_sample_table",
-        "sitemap_media",
-        "image_exif_meta",
-        "image_gps_redact",
-        "meta_refresh_targets",
-        "multimodal_image_stats_png_palette",
-        "multimodal_image_stats_png16",
-        "image_autorotate_stats",
-        "multimodal_image_stats_cmyk",
-        "multimodal_audio_stats_24bit",
-        "audio_id3_meta",
-        "subtitle_cues",
-        "hls_playlist",
-        "caption_keyframe_align",
-        "audio_tags_meta",
-        "photo_curation_report",
-        "svg_asset_meta",
-        "srcset_assets",
-        "css_asset_refs",
-        "link_icon_assets",
-    ]
-    qs = contract.queries()
     # best-of-N per query (default 2): a single cold sample on this
     # shared-host sandbox can read 2-7x the warm time (BENCH.md round-3
     # noise note) — the min of two passes reflects the engine, and the
@@ -286,9 +109,9 @@ def main() -> None:
     steal0, total0 = _cpu_steal_jiffies()
     times: dict[str, float] = {}
     for _ in range(reps):
-        for name in bench_queries:
+        for name, fn in contract.queries().items():
             t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = round(time.time() - t0, 3)
             if name not in times or dt < times[name]:
                 times[name] = dt

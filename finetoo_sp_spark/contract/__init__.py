@@ -37,7 +37,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: sql for name, _, sql in _REGISTRY if sql is not None}
+    return {name: sql for name, _, sql in _REGISTRY}
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -17,7 +17,7 @@ from BASELINE.json.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,12 +146,17 @@ SELECT {cols} FROM exp"""
 
 # ---------------------------------------------------------------- queries
 
-_REGISTRY: list[tuple[str, Callable[[SparkSession, str], DataFrame], str | None]] = []
+_REGISTRY: list[tuple[str, Callable[[SparkSession, str], DataFrame], str]] = []
+# query -> its own physical-plan checks, (description, regex) pairs that
+# tools/audit_plans.py evaluates on the AQE-off formatted explain; a
+# leading "!" means the regex must be absent.
+_AUDIT: dict[str, list[tuple[str, str]]] = {}
 
 
-def _q(name: str, oracle: str | None):
+def _q(name: str, oracle: str, audit: Sequence[tuple[str, str]] = ()):
     def deco(fn):
         _REGISTRY.append((name, fn, oracle))
+        _AUDIT[name] = list(audit)
         return fn
 
     return deco

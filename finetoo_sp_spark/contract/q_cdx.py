@@ -102,6 +102,10 @@ SELECT 'part-' || CAST(file_id AS VARCHAR) || '.warc.gz' AS filename,
   TIMESTAMP '2024-01-01 00:00:00' + doc_id * INTERVAL 1 SECOND AS warc_ts,
   sha256(text) AS payload_sha
 FROM h""",
+    audit=[
+        ("member scan is the Arrow binaryFile kernel", r"MapInPandas"),
+        ("NO shuffle after the scan (index rows are final)", r"!Exchange"),
+    ],
 )
 def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cdx over real archives (sources/cdx.py): write gzip-member WARCs
@@ -248,6 +252,10 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
   sha256(text) AS payload_sha,
   CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
 FROM documents""",
+    audit=[
+        ("WARC parse is the Arrow binaryFile kernel", r"MapInPandas"),
+        ("NO shuffle", r"!Exchange"),
+    ],
 )
 def q_http_transfer_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """On-wire HTTP encodings through the WARC reader
@@ -306,6 +314,10 @@ def q_http_transfer_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT url, text
 FROM ({_docpages_expected_sql("url, text, doc_id")})
 WHERE doc_id % 17 = 3""",
+    audit=[
+        ("span lists broadcast against archive bytes", r"BroadcastHashJoin"),
+        ("index scan + slice fetch are Arrow kernels", r"MapInPandas"),
+    ],
 )
 def q_cdx_fetch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The access-layer capstone: the reason a crawl gets an index is so

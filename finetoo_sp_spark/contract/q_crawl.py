@@ -49,6 +49,11 @@ SELECT doc_id AS id,
         ELSE '/page' || doc_id END)
   || (CASE WHEN doc_id % 3 = 0 THEN '?a=1&b=2' ELSE '' END) AS url_canon
 FROM documents""",
+    audit=[
+        ("fully narrow plan: no shuffle at all", r"!Exchange"),
+        ("whole-stage codegen", r"codegen id : "),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 3986 URL canonicalization: messy URLs synthesized from
@@ -109,6 +114,14 @@ SELECT source AS host,
     WHEN 0 THEN 'daily' WHEN 1 THEN 'weekly' END AS changefreq,
   CASE WHEN doc_id % 5 <> 4 THEN (doc_id % 10) * 100000 END AS priority_ppm
 FROM documents""",
+    audit=[
+        # tree lines render as '+- Exchange (n)': two tree occurrences
+        # means two shuffles, one is the per-host assembly groupBy
+        ("one shuffle only (the per-host assembly groupBy; parse side narrow)",
+         r"!\+- Exchange[\s\S]*\+- Exchange"),
+        ("partial aggregation before the host shuffle", r"HashAggregate|ObjectHashAggregate"),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sitemaps.org parsing: per-host <urlset> bodies synthesized from
@@ -245,6 +258,10 @@ SELECT u.doc_id AS id, u.host,
   best.matched_domain IS NOT NULL AS blocked,
   coalesce(best.matched_domain, '') AS matched_domain
 FROM u LEFT JOIN best ON u.doc_id = best.doc_id""",
+    audit=[
+        ("blocklist dimension broadcast", r"BroadcastHashJoin"),
+        ("suffix explode stays JVM-side", r"Generate"),
+    ],
 )
 def q_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-blocklist gate: hosts synthesized from documents (spam
@@ -345,6 +362,10 @@ UNION ALL
 SELECT source, 'atom', 'https://' || source || '.example/a/' || doc_id,
   'A' || doc_id, CAST('2026-02-11 08:' || mm || ':00' AS TIMESTAMP)
 FROM d WHERE doc_id % 2 = 0""",
+    audit=[
+        ("item/entry explode stays JVM-side", r"Generate"),
+        ("NO shuffle (per-feed parse is embarrassingly parallel)", r"!Exchange"),
+    ],
 )
 def q_feed_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RSS 2.0 + Atom feed parsing (the freshness-discovery surface next
@@ -409,6 +430,11 @@ SELECT id,
     WHEN 6 THEN 'http://ext.example.org/e' || id
     ELSE pre || '/d1/d2/sub/dir' || id || '/x?k=1' END AS resolved
 FROM t""",
+    audit=[
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("whole-stage codegen", r"codegen id : "),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_resolve_references(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 3986 §5 reference resolution: eight reference shapes per
@@ -476,6 +502,10 @@ SELECT url,
        WHEN last_modified IS NOT NULL THEN last_modified
        ELSE '' END AS cond_value
 FROM j""",
+    audit=[
+        ("lastmod dimension joins by url equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+        ("NO window", r"!Window"),
+    ],
 )
 def q_recrawl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional-GET recrawl planning: a synthetic snapshot where a
@@ -530,6 +560,10 @@ SELECT url, '/a' || id AS href,
   CASE WHEN has_base THEN 'https://b' || src || '/a' || id
        ELSE 'https://' || src || '/a' || id END AS target
 FROM t""",
+    audit=[
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_resolved_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Base-aware link extraction: pages alternate between declaring a
@@ -586,6 +620,9 @@ SELECT * FROM (
     CAST('2026-02-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS DATE)
   FROM documents WHERE doc_id % 5 = 0
 )""",
+    audit=[
+        ("media blocks explode JVM-side", r"Generate"),
+    ],
 )
 def q_sitemap_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Google sitemap media extensions (image/video/news namespaces):
@@ -698,6 +735,9 @@ SELECT url, 'segment', CAST(g.j AS BIGINT), 'seg' || g.j || '.ts',
   CAST(4000 + g.j * 500 AS BIGINT)
 FROM m, UNNEST(generate_series(0, CAST(doc_id % 4 AS BIGINT) + 1)) AS g(j)
 WHERE doc_id % 2 = 1""",
+    audit=[
+        ("tag->URI pairing is a hash equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+    ],
 )
 def q_hls_playlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLS manifest parsing (RFC 8216) — the video-segment fetch

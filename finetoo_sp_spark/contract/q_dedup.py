@@ -37,12 +37,23 @@ from finetoo_sp_spark.contract._core import (
     """
 SELECT sha256(text) AS content_sha, min(doc_id) AS keep_id, count(*) AS n_copies
 FROM documents GROUP BY sha256(text)""",
+    audit=[
+        ("only doc_id+text read", r"ReadSchema: struct<doc_id:bigint,text:string>"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.exact_dedup(T(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-@_q("dedup_ngram_jaccard", _JACCARD_ORACLE)
+@_q(
+    "dedup_ngram_jaccard",
+    _JACCARD_ORACLE,
+    audit=[
+        ("stop-shingle anti-join prune present", r"LeftAnti"),
+        ("pair aggregation partial", r"HashAggregate"),
+    ],
+)
 def q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     return dd.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.05)
@@ -74,7 +85,13 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(pairs)
 
 
-@_q("dedup_minhash_lsh", _minhash_oracle("doc_id < 150", k=32, bands=8, threshold=0.12))
+@_q(
+    "dedup_minhash_lsh",
+    _minhash_oracle("doc_id < 150", k=32, bands=8, threshold=0.12),
+    audit=[
+        ("signature min-aggregates partial", r"HashAggregate"),
+    ],
+)
 def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sub-quadratic text-dedup path under a FULL value oracle:
     hash_mode='sha' swaps xxhash64 for the sha256-derived 60-bit base
@@ -117,7 +134,13 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("dedup_simhash", _simhash_oracle(max_hamming=3))
+@_q(
+    "dedup_simhash",
+    _simhash_oracle(max_hamming=3),
+    audit=[
+        ("band equi-join", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+    ],
+)
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash banded near-dup under a FULL value oracle (60-bit 'sha'
     fingerprint mode; production uses the 64-bit xxhash64 mode)."""
@@ -131,6 +154,10 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     _minhash_oracle(
         "TRUE", k=32, bands=8, threshold=0.12, src="corpus", prelude=_TEMPLATE_CORPUS_SQL
     ),
+    audit=[
+        ("hot-bucket keys broadcast", r"BroadcastHashJoin"),
+        ("triangular cell explode present", r"Explode|Generate"),
+    ],
 )
 def q_minhash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH with the hot-bucket defense ENGAGED (bucket_cap=16 on
@@ -148,6 +175,9 @@ def q_minhash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "dedup_simhash_salted",
     _simhash_oracle(max_hamming=3, src="corpus", prelude=_TEMPLATE_CORPUS_SQL),
+    audit=[
+        ("hot-bucket keys broadcast", r"BroadcastHashJoin"),
+    ],
 )
 def q_simhash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash banding with the hot-bucket defense ENGAGED (bucket_cap=16,
@@ -169,6 +199,12 @@ FROM embeddings a JOIN embeddings b
   ON a.vec_id < b.vec_id
  AND {_BUCKET_SQL.format(side='a')} = {_BUCKET_SQL.format(side='b')}
 WHERE {_COSINE_SQL} >= 0.4""",
+    audit=[
+        # The embedding dedup must be the bucket join: a nested-loop
+        # join here is the 100-TB scale-killer VERDICT r1 flagged.
+        ("NO nested-loop join", r"!BroadcastNestedLoopJoin"),
+        ("bucket equi-join", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+    ],
 )
 def q_emb_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered 100 TB path: sign-LSH bucket join + in-bucket exact
@@ -193,6 +229,9 @@ hits AS (
 SELECT doc_id AS id, CAST(coalesce(n, 0) AS BIGINT) AS n_hits,
   coalesce(n, 0) > 0 AS contaminated
 FROM documents LEFT JOIN hits ON hits.id = documents.doc_id""",
+    audit=[
+        ("benchmark shingles broadcast (corpus never shuffles for the probe)", r"BroadcastHashJoin"),
+    ],
 )
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (GPT-3 appendix-C protocol: 13-gram
@@ -230,6 +269,10 @@ WITH corpus AS (
 )
 SELECT doc_id, array_to_string(list(ln ORDER BY pos), chr(10)) AS text
 FROM kept GROUP BY doc_id""",
+    audit=[
+        ("hot-line anti-join is a hash join", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin).*LeftAnti|LeftAnti.*(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+        ("count partial-aggregates", r"HashAggregate"),
+    ],
 )
 def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style line-level dedup (the boilerplate killer document-level
@@ -268,6 +311,11 @@ pairs AS (
 )
 SELECT a2.vec_id AS id, a2.cluster FROM a2
 WHERE a2.vec_id NOT IN (SELECT id_b FROM pairs)""",
+    audit=[
+        ("pair search is a (cluster,bucket) equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+        ("survivor filter is a left-anti join", r"LeftAnti"),
+        ("NO nested-loop join", r"!BroadcastNestedLoopJoin"),
+    ],
 )
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (arXiv:2303.09540): k-means the embedding space, then
@@ -335,6 +383,10 @@ SELECT id_a, id_b,
   (CAST(levenshtein(ta, tb) AS BIGINT) * 10000)
     // greatest(length(ta), length(tb)) <= 2000 AS is_dup
 FROM p""",
+    audit=[
+        ("pairs broadcast (corpus never shuffles)", r"BroadcastHashJoin"),
+        ("NO nested-loop join", r"!BroadcastNestedLoopJoin"),
+    ],
 )
 def q_edit_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact edit-distance confirm step over candidate pairs (here:
@@ -416,6 +468,11 @@ SELECT w.doc_id AS id, CAST(len(w.ws) AS BIGINT) AS n_tokens,
 FROM w
 LEFT JOIN nw USING (doc_id) LEFT JOIN nd USING (doc_id)
 LEFT JOIN cov USING (doc_id)""",
+    audit=[
+        ("window-hash groupBy/window keyed on wh (uniform hash key)", r"\[wh#"),
+        # (the only nested-loop in this plan is the corpus CONSTRUCTION's
+        # broadcast-scalar template crossJoin — one row, test fixture only)
+    ],
 )
 def q_dedup_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup pre-pass (Lee et al. 2022, arXiv:2107.06499,
@@ -462,6 +519,10 @@ SELECT w.doc_id AS id, COALESCE(clean_text, '') AS clean_text,
   CAST(len(w.ws) AS BIGINT) AS n_tokens,
   CAST(len(w.ws) - COALESCE(n_kept, 0) AS BIGINT) AS n_removed_tokens
 FROM w LEFT JOIN clean USING (doc_id)""",
+    audit=[
+        ("keeper selection is a row_number window, not a self-join", r"row_number"),
+        ("position anti-join is a left-anti equi-join", r"LeftAnti"),
+    ],
 )
 def q_dedup_window_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring REMOVAL (Lee et al. 'except one occurrence'): every
@@ -504,6 +565,11 @@ SELECT l.doc_id,
   CAST(count(hot.ln) AS BIGINT) AS n_removed
 FROM l LEFT JOIN hot ON hot.source = l.source AND hot.ln = l.ln
 GROUP BY l.doc_id""",
+    audit=[
+        ("doc-frequency + strip are hash equi-joins", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+        ("partial aggregation on (host, line_sha)", r"HashAggregate"),
+        ("line explode stays JVM-side", r"Generate"),
+    ],
 )
 def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host line-frequency boilerplate removal (CCNet/OSCAR rule;
@@ -555,6 +621,9 @@ SELECT url, cluster_url,
        ELSE url = min(url) OVER (PARTITION BY cluster_url)
   END AS is_survivor
 FROM c""",
+    audit=[
+        ("one shuffle on the cluster key (window)", r"Window"),
+    ],
 )
 def q_canonical_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rel=canonical cluster dedup over REAL extracted declarations:
@@ -586,6 +655,10 @@ SELECT doc_id,
     ELSE text END AS text_nfc,
   doc_id % 2 = 0 AS changed
 FROM documents""",
+    audit=[
+        ("Arrow-batched NFC kernel", r"MapInPandas"),
+        ("NO shuffle", r"!Exchange"),
+    ],
 )
 def q_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode NFC canonical composition (operators/normalize.py
@@ -646,6 +719,9 @@ SELECT doc_id AS id, CAST(n AS BIGINT) AS n_tokens,
   CAST(max(chunk_tokens) AS BIGINT) AS max_chunk_tokens,
   bit_xor(chunk_hash) AS chunk_hash_xor
 FROM chunks GROUP BY doc_id, n""",
+    audit=[
+        ("partial agg before the per-doc shuffle", r"partial_count"),
+    ],
 )
 def q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (LBFS/FastCDC-style local window-hash
@@ -692,6 +768,9 @@ SELECT c.doc_id AS id,
   COALESCE(dup_tokens, 0) AS dup_tokens
 FROM (SELECT DISTINCT doc_id FROM corpus) c
 LEFT JOIN per_doc USING (doc_id)""",
+    audit=[
+        ("chunk-hash window then doc rollup, equi-join back", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+    ],
 )
 def q_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-level dedup over content-defined chunks: a chunk is dup

@@ -51,6 +51,13 @@ SELECT tag || '#' || CAST(block_id AS VARCHAR) AS name,
   count(DISTINCT sha256(btext)) AS n_versions,
   count(DISTINCT sha256(btext)) > 1 AS is_divergent
 FROM blocks GROUP BY 1""",
+    audit=[
+        ("no row-multiplying Expand", r"!Expand"),
+        ("partial ObjectHashAggregate (map-side collect_set)", r"partial_collect_set"),
+        ("no sort-based aggregate", r"!SortAggregate"),
+        ("hash shuffle on name", r"hashpartitioning\(name#"),
+        ("only one hash shuffle", r"!hashpartitioning[\s\S]*hashpartitioning"),
+    ],
 )
 def q_block_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8 divergence report over real extracted DOM blocks: per (tag,
@@ -75,6 +82,13 @@ SELECT count(*) AS total_names,
   CAST(sum(CASE WHEN v > 1 THEN 1 ELSE 0 END) AS BIGINT) AS divergent,
   CAST(sum(CASE WHEN v <= 1 THEN 1 ELSE 0 END) AS BIGINT) AS consistent
 FROM r""",
+    audit=[
+        ("no row-multiplying Expand", r"!Expand"),
+        ("partial ObjectHashAggregate (map-side collect_set)", r"partial_collect_set"),
+        ("no sort-based aggregate", r"!SortAggregate"),
+        ("hash shuffle on name", r"hashpartitioning\(name#"),
+        ("only one hash shuffle", r"!hashpartitioning[\s\S]*hashpartitioning"),
+    ],
 )
 def q_divergence_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8 totals row (reference: proto/graph.proto:199-206): consistent vs
@@ -120,6 +134,9 @@ SELECT pair_id, name,
   CAST(length(b.btext) - length(a.btext) AS BIGINT) AS chars_delta,
   CAST(len(regexp_split_to_array(b.btext, ' ')) - len(regexp_split_to_array(a.btext, ' ')) AS BIGINT) AS words_delta
 FROM a JOIN b USING (pair_id, name)""",
+    audit=[
+        ("pair diff is an equi-join", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+    ],
 )
 def q_block_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BlockComparison diff records (reference: proto/graph.proto:305-383

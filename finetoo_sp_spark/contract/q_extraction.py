@@ -21,7 +21,14 @@ from finetoo_sp_spark.contract._core import (
 )
 
 
-@_q("extract_main_text", _EXTRACT_ORACLE)
+@_q(
+    "extract_main_text",
+    _EXTRACT_ORACLE,
+    audit=[
+        ("arrow-batched python stage", r"(MapInPandas|ArrowEvalPython)"),
+        ("only url/html/doc_id scanned", r"ReadSchema: struct<doc_id:bigint,text:string,lang:string,source:string>"),
+    ],
+)
 def q_extract_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
     # hash(url) salt repartition before the kernel (the north-rule skew
@@ -110,6 +117,9 @@ SELECT 'https://pdf.example.com/' || doc_id AS url,
   CAST(length('real heading ' || doc_id || 'body block for ' || doc_id) AS BIGINT)
     AS content_chars
 FROM documents WHERE doc_id < 200""",
+    audit=[
+        ("magic-byte routing stays JVM-side", r"(?i)startswith"),
+    ],
 )
 def q_pdf_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL (spec-conformant, Flate-compressed) PDF payloads through the
@@ -195,6 +205,10 @@ WITH exp AS (
 SELECT url, text, CAST(nb AS BIGINT) AS n_blocks,
   CAST(length(text) - seps AS BIGINT) AS content_chars
 FROM exp""",
+    audit=[
+        ("both branches arrow-batched", r"MapInPandas"),
+        ("union of routed branches", r"Union"),
+    ],
 )
 def q_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 PDF layout path + magic-byte routing (extraction/pdf.py): 4/5
@@ -286,6 +300,11 @@ SELECT target, CAST(count(*) AS BIGINT) AS n_refs,
   CAST(count(DISTINCT url) AS BIGINT) AS n_sources,
   string_agg(DISTINCT anchor, '|' ORDER BY anchor) AS anchors_cs
 FROM a GROUP BY target""",
+    audit=[
+        ("arrow-batched anchor extraction", r"MapInPandas"),
+        ("single hash agg on target with partials", r"HashAggregate"),
+        ("one shuffle keyed on target", r"hashpartitioning\(target"),
+    ],
 )
 def q_anchor_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-target anchor-text profiles over the whole crawl (anchor text
@@ -316,6 +335,9 @@ SELECT source AS binder_id, 'Binder ' || source AS title,
   sha256(string_agg(h, '' ORDER BY url)) AS binder_sha,
   min(url) AS first_url, max(url) AS last_url
 FROM p GROUP BY source""",
+    audit=[
+        ("single groupBy, in-aggregate ordering", r"sort_array"),
+    ],
 )
 def q_binder_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binder/export direction (reference: BinderConfig,
@@ -360,6 +382,10 @@ cells AS (
 SELECT 'https://catalog.example.com/brand/' || brand AS url,
   0 AS table_idx, row_idx, col_idx, cell
 FROM cells""",
+    audit=[
+        ("nested cell fan-out via Generate (explode)", r"Generate"),
+        ("extraction side is join-free", r"!Join"),
+    ],
 )
 def q_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end HTML table extraction: synthesize one catalog page per
@@ -409,6 +435,11 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
   CASE WHEN doc_id % 2 = 0
     THEN 'https://creativecommons.org/licenses/by/4.0/' ELSE '' END AS license
 FROM documents""",
+    audit=[
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("NO join", r"!Join"),
+        ("whole-stage codegen", r"codegen id : "),
+    ],
 )
 def q_compliance_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end opt-out signal extraction: synthesize doc pages where
@@ -451,6 +482,11 @@ SELECT 'https://shop.example.com/order/' || o_orderkey AS url,
   o_totalprice AS price,
   o_orderstatus AS status
 FROM orders""",
+    audit=[
+        ("blob fan-out via Generate (explode)", r"Generate"),
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_jsonld_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end JSON-LD extraction: synthesize one shop page per order
@@ -625,6 +661,10 @@ SELECT i AS page_id, charset, charset_src,
   '<html><head>' || meta || '</head><body>page ' || CAST(i AS VARCHAR)
     || ' ' || token || '</body></html>' AS text
 FROM parts""",
+    audit=[
+        ("Arrow-batched sniff+decode kernel", r"MapInPandas"),
+        ("NO shuffle (embarrassingly parallel stage)", r"!Exchange"),
+    ],
 )
 def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WHATWG encoding sniffing over a mixed-encoding binary HTML
@@ -660,6 +700,10 @@ SELECT
     AS markdown,
   CAST(6 AS BIGINT) AS n_content_blocks
 FROM documents""",
+    audit=[
+        ("Arrow-batched tokenize+classify+render kernel", r"MapInPandas"),
+        ("NO shuffle (per-page render is embarrassingly parallel)", r"!Exchange"),
+    ],
 )
 def q_markdown_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structure-preserving Markdown rendering (extraction/markdown.py)
@@ -690,6 +734,13 @@ SELECT
   'heading for document ' || doc_id AS h1,
   'windows-1252' AS charset
 FROM documents""",
+    audit=[
+        ("ONE fused Arrow kernel (sniff+decode+extract)", r"MapInPandas"),
+        # formatted explain prints each node once in the tree ("MapInPandas (3)")
+        # and once in details ("(3) MapInPandas") — count details lines only.
+        ("NOT two kernels — sniff is fused, not chained", r"!\(\d+\) MapInPandas[\s\S]*\(\d+\) MapInPandas"),
+        ("NO shuffle end-to-end", r"!Exchange"),
+    ],
 )
 def q_extract_legacy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone composition: a corpus SERVED in a legacy encoding
@@ -726,6 +777,10 @@ FROM u, (VALUES
   (2, '/f2', 'ugc sponsored'),
   (3, '/f3', 'noopener')
 ) a(idx, path, rel)""",
+    audit=[
+        ("anchor explode stays JVM-side", r"Generate"),
+        ("NO shuffle (per-page lift is embarrassingly parallel)", r"!Exchange"),
+    ],
 )
 def q_nofollow_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-scheme annotations (rel=nofollow / sponsored / ugc) parsed
@@ -753,6 +808,10 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
        WHEN doc_id % 10 = 5 THEN 'ok'
        ELSE 'ok' END AS reason
 FROM documents""",
+    audit=[
+        ("flags compose onto the extraction kernel output", r"MapInPandas"),
+        ("NO shuffle (column-op flags)", r"!Exchange"),
+    ],
 )
 def q_soft404(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Soft-404 detection THROUGH real extraction: every 10th page is
@@ -794,6 +853,10 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
   '<html><head>' || meta || '</head><body>page ' || CAST(doc_id AS VARCHAR)
     || ' ' || token || '</body></html>' AS text
 FROM parts""",
+    audit=[
+        ("WARC parse + sniff are Arrow kernels", r"MapInPandas"),
+        ("NO shuffle end-to-end", r"!Exchange"),
+    ],
 )
 def q_warc_http_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL WHATWG charset priority chain over a real WARC corpus:
@@ -871,6 +934,10 @@ UNION ALL
 SELECT doc_id, 'CIRCLE', CAST(doc_id % 3 AS BIGINT) FROM documents WHERE doc_id % 3 > 0
 UNION ALL
 SELECT doc_id, 'TEXT', CAST(1 + doc_id % 2 AS BIGINT) FROM documents""",
+    audit=[
+        ("group-code kernel in one Arrow pass", r"MapInPandas"),
+        ("partial agg before the count shuffle", r"partial_count"),
+    ],
 )
 def q_dxf_entities_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's DXF group-code parser (dxf_text_parser.cc:62-156,
@@ -926,6 +993,9 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
   c IN (0, 2, 5) AS src_http,
   c IN (1, 2, 3, 4) AS src_meta
 FROM p""",
+    audit=[
+        ("WARC parse is the Arrow binaryFile kernel", r"MapInPandas"),
+    ],
 )
 def q_http_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robots/opt-out compliance across BOTH layers over a real WARC
@@ -997,6 +1067,10 @@ SELECT 'https://pdfenc.example.com/' || doc_id AS url,
   CAST(length('locked heading ' || doc_id || 'locked body for ' || doc_id) AS BIGINT)
     AS content_chars
 FROM documents WHERE doc_id < 120""",
+    audit=[
+        ("decrypt+parse is one Arrow pass", r"MapInPandas"),
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_pdf_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RC4-ENCRYPTED real PDFs through the layout path under the same
@@ -1050,6 +1124,10 @@ SELECT 'https://pdf15.example.com/' || doc_id AS url,
   CAST(3 AS BIGINT) AS n_blocks,
   CAST(length('HZpacked body ' || doc_id) AS BIGINT) AS content_chars
 FROM documents WHERE doc_id < 120""",
+    audit=[
+        ("expansion+parse is one Arrow pass", r"MapInPandas"),
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_pdf_objstm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF 1.5 COMPRESSED-OBJECT-STREAM documents through the layout
@@ -1108,6 +1186,10 @@ FROM u WHERE doc_id % 4 = 1
 UNION ALL
 SELECT url, CAST(30 AS BIGINT), CAST(NULL AS VARCHAR)
 FROM u WHERE doc_id % 4 = 2""",
+    audit=[
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+        ("NO join (resolution is column math)", r"!Join"),
+    ],
 )
 def q_meta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Client-side redirect discovery: meta-refresh directives in all
@@ -1167,6 +1249,11 @@ SELECT url,
   'cue ' || doc_id || ' ' || j ||
     CASE WHEN j % 2 = 0 THEN chr(10) || 'more ' || j ELSE '' END AS text
 FROM c""",
+    audit=[
+        ("cue blocks explode JVM-side", r"Generate"),
+        ("no window function (block_pos from posexplode)", r"!Window"),
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebVTT/SRT caption parsing — the text half of a video-caption
@@ -1242,6 +1329,10 @@ SELECT 'https://' || source || '.example/svg/' || doc_id AS url,
     + CASE WHEN doc_id % 2 = 0 THEN length('icon ' || doc_id) ELSE 0 END
   AS BIGINT) AS text_chars
 FROM documents""",
+    audit=[
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_svg_asset_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SVG curation metadata — SVG is XML, not a codec gate: px
@@ -1329,6 +1420,10 @@ UNION ALL
 SELECT url, 1, 2,
   'https://' || source || '.example/p/d-' || doc_id || '.jpg',
   '', 100, CAST(NULL AS BIGINT) FROM u WHERE doc_id % 2 = 0 AND doc_id % 5 = 0""",
+    audit=[
+        ("candidate explode is JVM-side", r"Generate"),
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_srcset_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Responsive-image asset frontier: every srcset candidate with its
@@ -1390,6 +1485,10 @@ UNION ALL
 SELECT url, 2,
   'https://' || source || '.example/css/theme' || doc_id || '.css', 'import'
 FROM u WHERE doc_id % 2 = 0""",
+    audit=[
+        ("ref explode is JVM-side", r"Generate"),
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_css_asset_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stylesheet asset discovery — the fetches HTML never mentions:
@@ -1443,6 +1542,10 @@ SELECT url, CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END,
   'https://' || source || '.example/t' || doc_id || '.png',
   'apple-touch-icon', 180, 180
 FROM u WHERE doc_id % 3 = 0""",
+    audit=[
+        ("link-tag explode is JVM-side", r"Generate"),
+        ("one partition-local window for document order", r"Window"),
+    ],
 )
 def q_link_icon_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Favicon/touch-icon fetch frontier (feeds the ICO/PNG decode

@@ -43,6 +43,10 @@ SELECT i AS asset_id,
 FROM range(0, 64) t(i), range(0, 16) rr(r), range(0, 23) cc(c)
 WHERE r < 12 + i % 5 AND c < 16 + i % 8
 GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode under a per-pixel-exact oracle: synthetic PNGs
@@ -126,6 +130,10 @@ SELECT i AS asset_id,
 FROM range(0, 48) t(i), range(0, 3) rr(br), range(0, 4) cc(bc)
 WHERE br < (2 + i%2) AND bc < (2 + i%3)
 GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROGRESSIVE (SOF2) JPEG decode under the same per-pixel-exact
@@ -156,6 +164,10 @@ SELECT i AS asset_id,
 FROM range(0, 48) t(i), range(0, 3) rr(br), range(0, 4) cc(bc)
 WHERE br < (2 + i%2) AND bc < (2 + i%3)
 GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lossless-WebP (VP8L) decode under the same per-pixel-exact
@@ -185,6 +197,10 @@ SELECT i AS asset_id,
 FROM range(0, 48) t(i), range(0, 3) rr(br), range(0, 4) cc(bc)
 WHERE br < (2 + i%2) AND bc < (2 + i%3)
 GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF decode (LZW + sub-block framing + 4-pass interlace on odd
@@ -211,6 +227,10 @@ SELECT i AS asset_id,
 FROM range(0, 48) t(i), range(0, 3) rr(br), range(0, 4) cc(bc)
 WHERE br < (2 + i%2) AND bc < (2 + i%3)
 GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_bmp_ico(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BMP + ICO (favicon) decode under the same per-pixel-exact
@@ -241,6 +261,10 @@ SELECT i AS asset_id,
 FROM range(0, 48) t(i), range(0, 3) rr(br), range(0, 4) cc(bc)
 WHERE br < (2 + i%2) AND bc < (2 + i%3)
 GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_bmp_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed/exotic BMP modes under the same per-pixel-exact
@@ -270,6 +294,10 @@ SELECT i AS asset_id,
 FROM range(0, 48) t(i), range(0, 3) rr(br), range(0, 4) cc(bc)
 WHERE br < (2 + i%2) AND bc < (2 + i%3)
 GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline-TIFF decode under the same per-pixel-exact formula
@@ -327,6 +355,10 @@ SELECT i AS asset_id,
        AS BIGINT) AS sumsq,
   CAST(1000 + (i%7)*500 AS BIGINT) AS peak
 FROM range(0, 96) t(i)""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_audio_stats_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL FLAC decode under the same sample-exact oracle as the WAV
@@ -371,7 +403,14 @@ SELECT i AS asset_id,
 FROM range(0, 120) t(i)"""
 
 
-@_q("audio_probe_meta", _AUDIO_PROBE_SQL)
+@_q(
+    "audio_probe_meta",
+    _AUDIO_PROBE_SQL,
+    audit=[
+        ("header walk in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
+)
 def q_audio_probe_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header-only compressed-audio metadata under a full value oracle:
     the corpus (datagen.gen_audio_probe_pandas) writes structurally
@@ -424,7 +463,15 @@ _DHASH_SQL = """
 """
 
 
-@_q("image_dhash", _DHASH_SQL)
+@_q(
+    "image_dhash",
+    _DHASH_SQL,
+    audit=[
+        ("Arrow-batched python kernel (not per-row UDF)", r"MapInPandas"),
+        ("NO join", r"!Join"),
+        ("NO shuffle", r"!\+- Exchange"),
+    ],
+)
 def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual difference hash over the REAL decode path: textured
     synthetic PNGs (quadratic + cross-term pixels — a linear gradient
@@ -460,6 +507,10 @@ SELECT a.asset_id AS id_a, b.asset_id AS id_b,
   CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
 FROM d a JOIN d b ON a.asset_id < b.asset_id
 WHERE bit_count(xor(a.dhash, b.dhash)) <= 10""",
+    audit=[
+        ("NO nested-loop join", r"!BroadcastNestedLoopJoin"),
+        ("hamming verify via bit_count", r"bit_count"),
+    ],
 )
 def q_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup detection end-to-end: ids congruent mod 40 are
@@ -530,6 +581,10 @@ SELECT i AS asset_id,
   CASE CAST(i % 3 AS INTEGER) WHEN 0 THEN 'avc1' WHEN 1 THEN 'hvc1' ELSE 'av01' END
     AS video_codec
 FROM range(0, 96) t(i)""",
+    audit=[
+        ("Arrow-batched kernel", r"MapInPandas"),
+        ("NO shuffle (header-only probe)", r"!Exchange"),
+    ],
 )
 def q_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video leg of the multimodal trio: REAL ISO-BMFF box parse
@@ -572,7 +627,14 @@ SELECT i AS asset_id,
 FROM range(0, 140) t(i)"""
 
 
-@_q("image_dimensions", _IMAGE_DIMS_SQL)
+@_q(
+    "image_dimensions",
+    _IMAGE_DIMS_SQL,
+    audit=[
+        ("Arrow-batched kernel", r"MapInPandas"),
+        ("NO shuffle (header-only probe)", r"!Exchange"),
+    ],
+)
 def q_image_dimensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-decode image gate: header-only format/dimension probe over a
     mixed PNG / JPEG / GIF / WebP / TIFF (both byte orders) / BMP
@@ -596,6 +658,10 @@ SELECT i AS asset_id,
   CAST(g.ts // 500 AS BIGINT) AS sample_idx,
   CAST(g.ts AS BIGINT) AS ts_ms
 FROM v, UNNEST(generate_series(0, dms, 500)) AS g(ts)""",
+    audit=[
+        ("JVM-side sequence explode", r"Generate"),
+        ("NO shuffle", r"!Exchange"),
+    ],
 )
 def q_frame_sample_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-based frame sampling over the REAL ISO-BMFF duration probe:
@@ -625,6 +691,10 @@ SELECT i AS asset_id,
           ELSE 40 + i%40 END) + (140 + i%40))
   AS BIGINT) AS sum_gray
 FROM range(0, 48) t(i)""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_gif_animation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-GIF decode under a closed-form composited-pixel oracle:
@@ -679,6 +749,10 @@ SELECT i AS asset_id,
   CAST(sum(val * val) AS BIGINT) AS sumsq,
   CAST(max(abs(val)) AS BIGINT) AS peak
 FROM v GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_audio_stats_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G.711 (mu-law / A-law) WAV decode under a sample-exact oracle:
@@ -710,6 +784,10 @@ SELECT i AS asset_id,
       * ((CASE i%2 WHEN 1 THEN 0 ELSE 90 + i%40 END) + (140 + i%40))
   AS BIGINT) AS sum_gray
 FROM range(0, 48) t(i)""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_webp_animation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-WebP decode under a closed-form composited-pixel
@@ -746,6 +824,10 @@ SELECT modality, fmt, CAST(count(*) AS BIGINT) AS n_assets,
   CAST(sum(keep) AS BIGINT) AS n_keep,
   CAST(sum(metric) AS BIGINT) AS metric_sum
 FROM u GROUP BY modality, fmt""",
+    audit=[
+        ("probe kernels present", r"MapInPandas"),
+        ("partial agg before the rollup shuffle", r"partial_count"),
+    ],
 )
 def q_asset_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone over the header-probe layer: the pre-decode curation
@@ -805,6 +887,10 @@ SELECT i AS asset_id,
           ELSE 30 + i%50 END) + (170 + i%50))
   AS BIGINT) AS sum_gray
 FROM range(0, 48) t(i)""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_apng_animation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-PNG decode under a closed-form composited-pixel oracle —
@@ -842,6 +928,11 @@ SELECT i AS asset_id, energy_fp, zcr_fp,
   CAST(i % 4 AS BIGINT) AS cluster_id,
   CAST(24 AS BIGINT) AS n_cluster
 FROM z""",
+    audit=[
+        ("fingerprinting is one Arrow pass", r"MapInPandas"),
+        ("cluster rollup partial-aggregates", r"HashAggregate"),
+        ("cluster join is a hash equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+    ],
 )
 def q_audio_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-dup detection under a sample-exact oracle: the REAL
@@ -883,6 +974,10 @@ SELECT i AS asset_id,
     AS mdat_offset,
   (k % 5 = 0) AS is_sync
 FROM s""",
+    audit=[
+        ("sample-table walk is one Arrow pass", r"MapInPandas"),
+        ("NO shuffle (per-asset explode is local)", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_mp4_sample_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-extraction WORK LIST from real ISO-BMFF sample tables: per
@@ -922,6 +1017,10 @@ SELECT i AS asset_id,
       + (((i * 11) % 6000) * 1000000) // 360000)
   END AS BIGINT) AS gps_lon_micro
 FROM range(0, 60) t(i)""",
+    audit=[
+        ("EXIF walk is one Arrow pass", r"MapInPandas"),
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_image_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXIF extraction under a field-exact oracle: JPEG+APP1 fixtures
@@ -948,6 +1047,10 @@ SELECT i AS asset_id,
   'Maker' || CAST(i % 5 AS VARCHAR) AS make,
   TRUE AS same_length
 FROM range(0, 60) t(i)""",
+    audit=[
+        ("parse->scrub->reparse is ONE Arrow pass", r"MapInPandas"),
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_image_gps_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-side PII gate: the in-place GPS scrub (pointer tag retired,
@@ -982,6 +1085,10 @@ SELECT i AS asset_id,
   CAST(sum((7 * idx + i) % 256) AS BIGINT) AS sum_g,
   CAST(sum((11 * idx + 2 * i) % 256) AS BIGINT) AS sum_b
 FROM px GROUP BY i, w, h""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PALETTE PNG decode (the dominant small-web-image shape) under a
@@ -1014,6 +1121,10 @@ SELECT i AS asset_id,
   CAST(sum((i + 3 * r + 5 * c
     + CASE WHEN i % 2 = 0 THEN 0 ELSE 2 END) % 256) AS BIGINT) AS sum_b
 FROM g GROUP BY i, w, h""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_png16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-BIT PNG decode under a byte-exact oracle: gray/RGB by parity,
@@ -1059,6 +1170,10 @@ SELECT i AS asset_id,
     ELSE row0 END AS BIGINT) AS col0_sum,
   CAST(total AS BIGINT) AS total_sum
 FROM m""",
+    audit=[
+        ("decode+orient runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_autorotate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXIF AUTO-ORIENTATION applied to real decoded pixels: the
@@ -1095,6 +1210,10 @@ SELECT i AS asset_id,
   CAST(64 * sum((sm * sk) // 255) AS BIGINT) AS sum_g,
   CAST(64 * sum((sy * sk) // 255) AS BIGINT) AS sum_b
 FROM b GROUP BY i""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_image_stats_cmyk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adobe-CMYK JPEG decode (print-origin images) under a per-pixel-
@@ -1123,6 +1242,10 @@ SELECT i AS asset_id,
        * (100000 + (i % 7) * 50000) AS BIGINT) AS sumsq,
   CAST(100000 + (i % 7) * 50000 AS BIGINT) AS peak
 FROM range(0, 64) t(i)""",
+    audit=[
+        ("decode runs in one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_audio_stats_24bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """24-bit PCM decode (packed 3-byte little-endian samples with sign
@@ -1145,6 +1268,10 @@ SELECT i AS asset_id,
   CASE WHEN i % 5 = 0 THEN '' ELSE 'Artist ' || (i % 7) END AS artist,
   CASE WHEN i % 5 = 0 OR i % 3 = 0 THEN '' ELSE 'Album ' || (i % 4) END AS album
 FROM range(0, 70) t(i)""",
+    audit=[
+        ("tag walk is one Arrow pass, no shuffle", r"!Exchange hashpartitioning"),
+        ("mapInPandas stage present", r"MapInPandas"),
+    ],
 )
 def q_audio_id3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ID3v2 catalog metadata (id3.org v2.3/2.4): versions alternate by
@@ -1190,6 +1317,11 @@ FROM cue c LEFT JOIN samp
   AND samp.dts_ms >= c.start_ms
   AND samp.dts_ms < c.start_ms + 400 + c.j * 100
 GROUP BY c.i, c.j, c.start_ms""",
+    audit=[
+        ("cue/keyframe match is an asset-keyed equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+        ("count partial-aggregates", r"HashAggregate"),
+        ("sample walk is the Arrow kernel", r"MapInPandas"),
+    ],
 )
 def q_caption_keyframe_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-caption ALIGNMENT capstone: per subtitle cue, how many
@@ -1243,6 +1375,10 @@ SELECT i AS asset_id,
   'Artist ' || (i % 7) AS artist,
   CASE WHEN i % 3 = 0 THEN '' ELSE 'Album ' || (i % 4) END AS album
 FROM range(0, 60) t(i)""",
+    audit=[
+        ("cross-container tag walk is one Arrow pass", r"MapInPandas"),
+        ("NO shuffle", r"!Exchange hashpartitioning"),
+    ],
 )
 def q_audio_tags_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Container-independent audio catalog tags: ID3v2 MP3s and FLAC
@@ -1274,6 +1410,12 @@ SELECT make,
     AS BIGINT) AS n_keep,
   CAST(sum(w0 * h0) AS BIGINT) AS px_mass
 FROM a GROUP BY make""",
+    audit=[
+        # two MapInPandas appear by design: the synthetic-corpus
+        # generator is itself an Arrow kernel; the report pass is one
+        ("decode+EXIF+orient+scrub is ONE Arrow pass", r"MapInPandas"),
+        ("per-make rollup partial-aggregates", r"HashAggregate"),
+    ],
 )
 def q_photo_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Photo-ingest CAPSTONE: decode + EXIF + auto-orientation + GPS

@@ -93,6 +93,11 @@ SELECT doc_id AS id, i AS chunk_id,
   LEAST(i * 24 + 32, n) - i * 24 AS n_chunk_tokens,
   array_to_string(toks[i * 24 + 1 : LEAST(i * 24 + 32, n)], ' ') AS chunk_text
 FROM s, UNNEST(generate_series(0, lastc)) AS t(i)""",
+    audit=[
+        ("fan-out via Generate (explode), map-only", r"Generate"),
+        ("whole-stage codegen", r"codegen id : "),
+        ("NO shuffle anywhere", r"!Exchange"),
+    ],
 )
 def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window document chunking (model-context slicing): every
@@ -130,6 +135,10 @@ c AS (
 SELECT doc_id AS id, source, i AS copy_id
 FROM (SELECT * FROM c WHERE n_copies > 0) f,
   UNNEST(generate_series(0, n_copies - 1)) AS t(i)""",
+    audit=[
+        ("weight table broadcast (corpus never shuffles)", r"BroadcastHashJoin"),
+        ("fan-out via Generate (explode)", r"Generate"),
+    ],
 )
 def q_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture re-weighting (epoch upsampling): sources 0-4 get 2.5
@@ -229,6 +238,10 @@ SELECT bucket, n_docs, max_tokens, sum_tokens,
   ((max_tokens * n_docs - sum_tokens) * 1000000)
     // (max_tokens * n_docs) AS pad_ppm
 FROM b""",
+    audit=[
+        ("partial aggregation before the shuffle", r"HashAggregate"),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Padding-waste analysis for length-bucketed batch shaping over the
@@ -258,6 +271,10 @@ r AS (
 SELECT key, weight,
   CAST(base + CASE WHEN rn <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc
 FROM r, l""",
+    audit=[
+        ("scalar weight-sum broadcast", r"(BroadcastNestedLoopJoin|BroadcastHashJoin)"),
+        ("NO shuffle of the dimension beyond the agg", r"HashAggregate"),
+    ],
 )
 def q_budget_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamilton largest-remainder apportionment of a 1000-page recrawl
@@ -290,6 +307,10 @@ SELECT part, file_id, bytes, bin,
   count(*) OVER (PARTITION BY part, bin) AS bin_files,
   count(*) OVER (PARTITION BY part, bin) > 1 AS needs_compaction
 FROM b""",
+    audit=[
+        ("window over the manifest, no join", r"!Join"),
+        ("window-based binning", r"Window"),
+    ],
 )
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg-binpack-style compaction planning over a file manifest
@@ -331,6 +352,11 @@ SELECT r8.id, CAST(r8.shard AS INT) AS shard,
   CAST(r9.shard AS INT) AS shard_after,
   r8.shard != r9.shard AS moved
 FROM r8 JOIN r9 USING (id)""",
+    audit=[
+        ("pure column expression: NO shuffle", r"!Exchange"),
+        ("no explode needed (unrolled array_max)", r"!Generate"),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous shard assignment at k=8 plus the k=9 reshard view:
@@ -393,6 +419,10 @@ SELECT r.source, r.n_docs, r.weight_fp, CAST(r.quota_docs AS BIGINT) AS quota_do
   CAST(r.rate_ppm AS BIGINT) AS rate_ppm,
   COALESCE(s.sampled, 0) AS sampled_docs
 FROM r LEFT JOIN s USING (source)""",
+    audit=[
+        ("source-size partial aggregation", r"HashAggregate"),
+        ("rates broadcast back for the sampling pass", r"BroadcastHashJoin"),
+    ],
 )
 def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature mixing planner (XLM-R alpha-sampling, alpha=1/2):

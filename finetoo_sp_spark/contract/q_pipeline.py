@@ -169,6 +169,10 @@ adds AS (SELECT source, 'added' AS status FROM documents WHERE doc_id % 13 = 1)
 SELECT source || '.example.com' AS host, status, CAST(count(*) AS BIGINT) AS n
 FROM (SELECT * FROM base UNION ALL SELECT * FROM adds)
 GROUP BY host, status""",
+    audit=[
+        ("full-outer delta join on url", r"SortMergeJoin.*FullOuter|ShuffledHashJoin.*FullOuter"),
+        ("payload hashed before the join (slim projection)", r"xxhash64"),
+    ],
 )
 def q_snapshot_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-over-crawl churn report: per-host counts of added /
@@ -198,6 +202,10 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
   'heading for document ' || doc_id || chr(10)
     || trim(regexp_replace(text, '\\s+', ' ', 'g')) AS text
 FROM work""",
+    audit=[
+        ("old side joins as slim hash dimension", r"xxhash64"),
+        ("extraction kernel only after the delta filter", r"MapInPandas"),
+    ],
 )
 def q_incremental_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental re-extraction: run the extraction kernel ONLY on
@@ -250,6 +258,12 @@ FROM features f
 LEFT JOIN cc ON cc.doc_id = f.doc_id
 WHERE f.keep_quality
   AND coalesce(cc.component, f.doc_id) = f.doc_id""",
+    audit=[
+        # NOTE: the jaccard/CC stages run behind a localCheckpoint (lineage
+        # cut), so only the post-checkpoint plan is visible here; the
+        # stop-shingle prune is audited on dedup_ngram_jaccard.
+        ("keep-list semi-join", r"LeftSemi"),
+    ],
 )
 def q_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone training-data curation chain, one lazy plan end to end:
@@ -356,6 +370,13 @@ SELECT r.url, r.warc_ts, sha256(o.text) AS payload_sha,
   TRUE AS is_revisit, (r.doc_id % 9 <> 2) AS digest_ok
 FROM d r JOIN d o ON o.doc_id = r.doc_id - 1
 WHERE r.doc_id % 3 = 2 AND r.doc_id % 9 <> 8""",
+    audit=[
+        ("WARC parse (responses + revisits) is the Arrow kernel", r"MapInPandas"),
+        (
+            "revisit resolution is a hash equi-join on the pointer key",
+            r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)",
+        ),
+    ],
 )
 def q_warc_revisit_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-time dedup via IIPC identical-payload-digest revisits
@@ -486,7 +507,15 @@ def q_curation_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return man.select("bucket", "output_count", "content_checksum", "status")
 
 
-@_q("curation_v2", _curation_v2_oracle())
+@_q(
+    "curation_v2",
+    _curation_v2_oracle(),
+    audit=[
+        ("dedup survivor filter is a semi-join", r"LeftSemi"),
+        ("score joins back on the id key", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+        ("NO nested-loop join", r"!BroadcastNestedLoopJoin"),
+    ],
+)
 def q_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone #2 — the session-2 operators composed as one lazy plan:
     deterministic corruption (mojibake wrap / NBSP flood by doc_id%3) ->
@@ -620,7 +649,14 @@ SELECT source,
 FROM surv GROUP BY source"""
 
 
-@_q("curation_v3", _curation_v3_oracle())
+@_q(
+    "curation_v3",
+    _curation_v3_oracle(),
+    audit=[
+        ("dimension-sized gates broadcast", r"BroadcastHashJoin"),
+        ("partial aggregation on source", r"HashAggregate"),
+    ],
+)
 def q_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone #3 — the round-4 LM filter composed with the Gopher
     gate and exact dedup as one lazy plan: documents pass the Gopher
@@ -751,6 +787,10 @@ SELECT 2, count(*), CAST(sum(n_chars) AS BIGINT),
        CAST(coalesce(sum(flag), 0) AS BIGINT),
        CAST(sum(CASE WHEN flag IS NULL THEN 1 ELSE 0 END) AS BIGINT)
 FROM latest""",
+    audit=[
+        ("no join: projection is per-file select, not a data join", r"!Join"),
+        ("whole-stage codegen aggregation", r"codegen id : "),
+    ],
 )
 def q_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg-style schema evolution on the versioned table
@@ -818,6 +858,9 @@ v2 AS (
 SELECT 0 AS version, count(*) AS n_rows, CAST(sum(n) AS BIGINT) AS n_sum FROM v0
 UNION ALL SELECT 1, count(*), CAST(sum(n) AS BIGINT) FROM v1
 UNION ALL SELECT 2, count(*), CAST(sum(n) AS BIGINT) FROM v2""",
+    audit=[
+        ("equality deletes apply as anti hash join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin).*LeftAnti|LeftAnti"),
+    ],
 )
 def q_table_upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read upserts (Iceberg equality-delete model,
@@ -940,6 +983,9 @@ SELECT doc_id AS id, rank_length, rank_classifier, rank_balance,
      + 1000000000 // (60 + rank_classifier)
      + 1000000000 // (60 + rank_balance) AS BIGINT) AS rrf_fp
 FROM r""",
+    audit=[
+        ("per-signal rank windows", r"Window"),
+    ],
 )
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09) of three
@@ -975,6 +1021,9 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
   'document ' || doc_id || ' from ' || source AS title,
   CAST(8 AS BIGINT) AS n_links
 FROM documents""",
+    audit=[
+        ("metadata parse is the Arrow binaryFile kernel", r"MapInPandas"),
+    ],
 )
 def q_wat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WAT export/ingest round trip — the Common Crawl METADATA
@@ -1013,6 +1062,11 @@ def q_wat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars
 FROM documents WHERE doc_id BETWEEN 100 AND 180""",
+    audit=[
+        ("range filter pushed into the parquet scan", r"PushedFilters: \[IsNotNull\(doc_id\), GreaterThanOrEqual\(doc_id,100\), LessThanOrEqual\(doc_id,180\)"),
+        ("file-granular pruning left ONE file to scan", r"InMemoryFileIndex \[[^\]]*1 entries"),
+        ("NO shuffle: metadata planning + narrow scan", r"!Exchange"),
+    ],
 )
 def q_table_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest data-skipping (Iceberg scan planning): commits record

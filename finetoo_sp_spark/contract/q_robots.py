@@ -55,6 +55,9 @@ SELECT source AS host,
     ELSE '/private' || doc_id END AS path,
   doc_id % 4 IN (1, 2) AS allowed
 FROM documents""",
+    audit=[
+        ("rule join is host-keyed (equi + prefix filter, no theta-only join)", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+    ],
 )
 def q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end robots.txt policy gate: one synthesized robots.txt per
@@ -100,6 +103,14 @@ SELECT source AS host,
     ELSE '/pub/' || doc_id END AS path,
   doc_id % 6 IN (1, 2, 4, 5) AS allowed
 FROM documents""",
+    audit=[
+        ("rule join stays a host equi-join (join keyed on host)",
+         r"Left keys \[1\]: \[host#"),
+        ("wildcard match rides as the join condition, not the key",
+         r"Join condition: CASE WHEN _wild.* THEN RLIKE"),
+        ("NO nested-loop join (wildcard match is a join filter, not the key)",
+         r"!BroadcastNestedLoopJoin"),
+    ],
 )
 def q_robots_gate_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 9309 wildcard/anchor gate end-to-end: robots rules carrying
@@ -211,6 +222,10 @@ SELECT url, host, CAST(priority AS BIGINT) AS priority,
   CAST((rank_in_host - 1) * delay_s AS BIGINT) AS scheduled_t_s,
   (rank_in_host - 1) * delay_s < 120 AS within_budget
 FROM r""",
+    audit=[
+        ("host-partitioned window (politeness key)", r"Window"),
+        ("delay dimension joins by host equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+    ],
 )
 def q_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Politeness-aware frontier scheduling: per-host serial fetch
@@ -302,6 +317,9 @@ SELECT host,
   CASE WHEN nlab > pl THEN array_to_string(labs[nlab - pl : nlab], '.')
   END AS registrable_domain
 FROM res""",
+    audit=[
+        ("PSL rule dimension broadcast to both matchers", r"BroadcastHashJoin"),
+    ],
 )
 def q_registrable_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """eTLD+1 extraction under publicsuffix.org semantics: six host
@@ -364,6 +382,10 @@ FROM q GROUP BY domain""".replace(
    AND round(length(regexp_replace(lower(text), '\\s+', '', 'g')) / greatest(n_words, 1), 4) BETWEEN 2 AND 12
    AND round(len(list_filter(ws, x -> list_contains({_STOP_LIST_SQL}, x))) / greatest(n_words, 1), 4) >= 0.01)""",
     ),
+    audit=[
+        ("PSL dimension broadcast", r"BroadcastHashJoin"),
+        ("single partial-agg rollup", r"HashAggregate"),
+    ],
 )
 def q_domain_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-domain curation rollup (the RefinedWeb move: filter

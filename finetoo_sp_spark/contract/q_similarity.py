@@ -35,6 +35,10 @@ SELECT query_id, neighbor_id, cosine,
   CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
 FROM scored
 QUALIFY rank <= 5""",
+    audit=[
+        ("query side broadcast", r"BroadcastNestedLoopJoin|BroadcastHashJoin"),
+        ("single window for top-k", r"Window"),
+    ],
 )
 def q_ann_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings")
@@ -60,7 +64,13 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.ann_lsh_bucketed(emb, emb.filter(F.col("vec_id") < 5), k=5, n_bits=8)
 
 
-@_q("ann_recall_curve", _recall_curve_oracle(k=10, n_bits=8, n_tables_list=(1, 2, 3), n_q=50))
+@_q(
+    "ann_recall_curve",
+    _recall_curve_oracle(k=10, n_bits=8, n_tables_list=(1, 2, 3), n_q=50),
+    audit=[
+        ("bucket equi-joins", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+    ],
+)
 def q_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall adequacy measurement for multi-probe ANN (the number the
     superset-recall property test can't give): recall@10 of 1/2/3 probe
@@ -76,7 +86,14 @@ def q_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ann_lsh_multiprobe", _multiprobe_oracle(k=5, n_bits=8, n_tables=3))
+@_q(
+    "ann_lsh_multiprobe",
+    _multiprobe_oracle(k=5, n_bits=8, n_tables=3),
+    audit=[
+        ("NO nested-loop join", r"!BroadcastNestedLoopJoin"),
+        ("union of per-table bucket joins", r"Union"),
+    ],
+)
 def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table sign-LSH ANN: 3 tables over disjoint coordinate
     slices, union-of-buckets candidates, exact cosine + top-k — the
@@ -133,7 +150,17 @@ def q_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("kmeans_clusters", f"WITH {_KMEANS_CTE}\nSELECT vec_id AS id, cluster FROM a2")
+@_q(
+    "kmeans_clusters",
+    f"WITH {_KMEANS_CTE}\nSELECT vec_id AS id, cluster FROM a2",
+    audit=[
+        # centroids are driver-collected constants unrolled into least();
+        # the registered plan (final assignment pass) must be a pure map
+        ("assignment is narrow (no shuffle)", r"!Exchange"),
+        ("no join anywhere", r"!Join"),
+        ("whole-stage codegen", r"codegen id : "),
+    ],
+)
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means (k=4, 2 assignment passes) in integer fixed
     point: the oracle reproduces every centroid exactly because sums of
@@ -177,6 +204,10 @@ SELECT d.doc_id AS id,
   coalesce(sc.n_bigrams, 0) AS n_bigrams,
   coalesce(sc.dsir_score, 0) AS dsir_score
 FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id""",
+    audit=[
+        ("bucket-ratio table broadcast (corpus never shuffles for the probe)", r"BroadcastHashJoin"),
+        ("bigram fan-out via Generate (explode)", r"Generate"),
+    ],
 )
 def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights (arXiv:2302.03169) with src0 as the
@@ -241,7 +272,15 @@ SELECT id, n_bigrams, lm_cost_fp, cost_per_bigram_fp,
 FROM per_doc, th"""
 
 
-@_q("ccnet_lm_filter", CCNET_ORACLE)
+@_q(
+    "ccnet_lm_filter",
+    CCNET_ORACLE,
+    audit=[
+        ("LM count tables broadcast to the gram stream", r"BroadcastHashJoin"),
+        ("scan pruned to doc_id/text/source", r"ReadSchema: struct<doc_id:bigint,text:string,source:string>"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
+)
 def q_ccnet_lm_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity filter (arXiv:1911.00359) with src0 as the
     trusted reference: a reference-trained hashed-bigram LM costs every
@@ -270,6 +309,11 @@ SELECT id,
   CAST(strpos(t, 'batch batch') AS INT) AS first_pos
 FROM t
 WHERE length(t) - length(replace(t, 'batch batch', '')) >= 11""",
+    audit=[
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("whole-stage codegen", r"codegen id : "),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_phrase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-phrase retrieval ('batch batch') via the replace-length
@@ -310,6 +354,10 @@ agg AS (SELECT id, CAST(sum(term_score) AS BIGINT) AS score FROM scored GROUP BY
 SELECT id, score,
   CAST(row_number() OVER (ORDER BY score DESC, id ASC) AS INT) AS rank
 FROM agg ORDER BY score DESC, id ASC LIMIT 10""",
+    audit=[
+        ("df dimension broadcast (corpus side never re-shuffles)", r"BroadcastHashJoin"),
+        ("global top-k is TakeOrdered, not a full sort", r"TakeOrderedAndProject"),
+    ],
 )
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rational-BM25 keyword retrieval: top-10 documents for a fixed
@@ -352,6 +400,11 @@ SELECT q.vec_id AS id, CAST(len(fp) AS INT) AS n_dims,
   array_to_string(qv, ',') AS q_str,
   COALESCE(max_err, 0) AS max_err_fp
 FROM q LEFT JOIN err ON q.vec_id = err.vec_id""",
+    audit=[
+        ("fully narrow plan: no shuffle at all", r"!\+- Exchange"),
+        ("NO join", r"!Join"),
+        ("only vec_id+embedding read", r"ReadSchema: struct<vec_id:bigint,embedding:array<float>>"),
+    ],
 )
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector int8 scalar quantization (FAISS SQ8 shape) in integer
@@ -522,7 +575,13 @@ USING (query_id)"""
 )
 
 
-@_q("pq_codes", _PQ_CODES_ORACLE)
+@_q(
+    "pq_codes",
+    _PQ_CODES_ORACLE,
+    audit=[
+        ("no per-row Python in assignment", r"!MapInPandas"),
+    ],
+)
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codes (Jegou et al. 2011): 4 subspaces x 16
     dims, 4 centroids each, integer fixed point throughout — the M-byte
@@ -535,7 +594,13 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_codes(T(spark, sf_dir, "embeddings"))
 
 
-@_q("ann_ivf_pq_topk", _IVF_PQ_TOPK_ORACLE)
+@_q(
+    "ann_ivf_pq_topk",
+    _IVF_PQ_TOPK_ORACLE,
+    audit=[
+        ("cell membership equi-join", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+    ],
+)
 def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search: probe the 2 nearest of 4 IVF cells, rank
     candidates by asymmetric PQ distance (per-subspace ADC lookup

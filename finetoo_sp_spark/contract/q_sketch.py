@@ -54,6 +54,11 @@ r AS (
 SELECT grp, CAST(bucket AS BIGINT) AS bucket,
   CAST(max(rho) AS BIGINT) AS register
 FROM r GROUP BY grp, bucket""",
+    audit=[
+        ("one partial aggregation (map-side combine)", r"HashAggregate"),
+        ("NO join", r"!Join"),
+        ("only doc_id+source read", r"ReadSchema: struct<doc_id:bigint,source:string>"),
+    ],
 )
 def q_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse HyperLogLog register file per source host over a
@@ -84,6 +89,11 @@ SELECT grp, CAST(count(*) AS BIGINT) AS n_kept,
        ELSE (CAST(63 AS BIGINT) * CAST(1099511627776 AS BIGINT))
             // greatest(max(h) >> 20, 1) END AS BIGINT) AS est_distinct
 FROM rn WHERE rn <= 64 GROUP BY grp""",
+    audit=[
+        ("per-group k-cut is a window, not a self-join", r"row_number"),
+        ("NO join", r"!Join"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-minimum-values distinct-URL estimate per source host, k=64 —
@@ -117,6 +127,10 @@ SELECT pc.user_id, CAST(max(pc.true_cnt) AS BIGINT) AS true_cnt,
   CAST(min(coalesce(sk.cnt, 0)) AS BIGINT) AS est_cnt
 FROM pc LEFT JOIN sk ON sk.row = pc.row AND sk.col = pc.col
 GROUP BY pc.user_id""",
+    audit=[
+        ("probe side broadcast to the tiny sketch", r"BroadcastHashJoin"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q_cms_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch end-to-end: build the 4x256 sketch over all
@@ -168,6 +182,11 @@ SELECT grp, CAST(q_ppm AS BIGINT) AS q_ppm,
 FROM cum, q
 WHERE cum * 1000000 >= q_ppm * total
 GROUP BY grp, q_ppm""",
+    audit=[
+        ("NO join (sketch + window only)", r"!Join"),
+        ("only source+n_chars read", r"ReadSchema: struct<source:string,n_chars:bigint>"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable quantile sketch (HdrHistogram shape: octave = bit

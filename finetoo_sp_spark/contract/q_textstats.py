@@ -110,6 +110,10 @@ s AS (
   FROM s
 )
 SELECT id, term, tf, df, round(score, 6) AS score, rk FROM r WHERE rk <= 5""",
+    audit=[
+        ("term-df equi-join", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc top-5 TF-IDF terms (ratio-idf mode: exact integer-ratio
@@ -180,6 +184,10 @@ arr AS (SELECT doc_id, list(inv ORDER BY pos) AS invs FROM j GROUP BY doc_id)
 SELECT doc_id AS id, CAST(len(invs) AS INTEGER) AS n_words,
   round(list_sum(invs) / len(invs), 6) AS rarity
 FROM arr""",
+    audit=[
+        ("word-count partial agg", r"HashAggregate"),
+        ("only doc_id+text read", r"ReadSchema: struct<doc_id:bigint,text:string>"),
+    ],
 )
 def q_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perplexity-proxy rarity score (mean inverse corpus unigram
@@ -213,6 +221,11 @@ SELECT id,
     - (length(tx) - length(regexp_replace(tx, '[0-9]', '', 'g')))
     - (length(tx) - length(regexp_replace(tx, '\\s', '', 'g'))) AS BIGINT) AS n_other
 FROM t""",
+    audit=[
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("whole-stage codegen", r"codegen id : "),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Writing-system census with injected multilingual tails (Cyrillic
@@ -251,6 +264,10 @@ SELECT host, shingle, n_docs, host_pages,
   (n_docs * 1000000) // host_pages AS share_ppm
 FROM dfc JOIN hp USING (host)
 WHERE (n_docs * 1000000) // host_pages >= 150000""",
+    audit=[
+        ("host page-count dimension equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q_template_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Host-level template/boilerplate mining: bigram shingles recurring
@@ -271,6 +288,11 @@ SELECT doc_id AS id,
   CASE WHEN doc_id % 3 = 0 THEN '"' || text || '"' ELSE text END AS text,
   doc_id % 3 IN (0, 1) AS changed
 FROM documents""",
+    audit=[
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("whole-stage codegen (replace chain fused)", r"codegen id : "),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_normalize_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end mojibake repair: corrupt each document deterministically
@@ -320,6 +342,11 @@ SELECT id, n_feats,
   (margin * 65536) // n_feats AS score_fp,
   (margin * 65536) // n_feats >= 0 AS keep
 FROM agg""",
+    audit=[
+        ("feature fan-out via Generate (explode)", r"Generate"),
+        ("partial aggregation before the shuffle", r"HashAggregate"),
+        ("default weight path has NO join at all", r"!Join"),
+    ],
 )
 def q_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed linear quality classifier (CCNet/FineWeb-style model-based
@@ -341,6 +368,9 @@ def q_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT doc_id, source FROM documents
 WHERE source NOT IN ('src0', 'src7', 'src13')""",
+    audit=[
+        ("anti-join is broadcast", r"BroadcastHashJoin.*LeftAnti|BroadcastHashJoin LeftAnti"),
+    ],
 )
 def q_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain/source blocklist via broadcast anti-join — the standard
@@ -532,6 +562,10 @@ WITH corpus AS (
 SELECT id_small, id_big, round(n / s.n_fp, 6) AS containment
 FROM inter JOIN sizes s ON s.id = id_small
 WHERE round(n / s.n_fp, 6) >= 0.6""",
+    audit=[
+        ("fingerprint equi-join (hash family)", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+        ("stop-fingerprint anti-join prune", r"LeftAnti"),
+    ],
 )
 def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment detection (winnowing fingerprint overlap /
@@ -706,6 +740,11 @@ SELECT doc_id AS id,
   || (CASE WHEN doc_id % 7 = 0 THEN ' cc [EMAIL]' ELSE '' END)
   || (CASE WHEN doc_id % 11 = 0 THEN ' origin [IP]' ELSE '' END) AS redacted
 FROM synth""",
+    audit=[
+        ("fully narrow plan: no shuffle at all", r"!\+- Exchange"),
+        ("NO join", r"!Join"),
+        ("whole-stage codegen", r"codegen id : "),
+    ],
 )
 def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII detect + redact end-to-end: a controlled corpus (emails,
@@ -841,6 +880,10 @@ LEFT JOIN q50 ON q50.grp = c.grp
 LEFT JOIN cum p50 ON p50.grp = q50.grp AND p50.bucket = q50.b
 LEFT JOIN q90 ON q90.grp = c.grp
 LEFT JOIN cum p90 ON p90.grp = q90.grp AND p90.bucket = q90.b""",
+    audit=[
+        ("pruned to text+source only (id unused, dropped)", r"ReadSchema: struct<text:string,source:string>"),
+        ("dimension-sized joins stay broadcast", r"!SortMergeJoin"),
+    ],
 )
 def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-4 composition capstone: the per-source curation dashboard
@@ -862,6 +905,10 @@ SELECT doc_id AS id,
      + (1 + doc_id % 5)              -- repeat('cde', m): (c,d) then (cd,e) -> m 'cde' tokens
      + 3 AS BIGINT) AS n_tokens      -- 'xyz': no merges apply, 3 char tokens
 FROM documents""",
+    audit=[
+        ("kernel over the distinct vocabulary", r"MapInPandas"),
+        ("token dimension joined broadcast", r"BroadcastHashJoin"),
+    ],
 )
 def q_bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL BPE apply under a closed-form oracle: a corpus with provable
@@ -959,6 +1006,11 @@ SELECT id, CAST(n_chars AS BIGINT) AS n_chars, CAST(n_cjk AS BIGINT) AS n_cjk,
   CAST(n_space_words + n_cjk AS BIGINT) AS n_words_seg,
   CAST((n_chars - n_cjk + 3) // 4 + n_cjk AS BIGINT) AS n_tokens_est
 FROM w""",
+    audit=[
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("whole-stage codegen", r"codegen id : "),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_tokens_multilingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Segmentation-aware token counting over a mixed-script corpus:
@@ -1027,6 +1079,11 @@ SELECT doc_id AS id,
          WHEN thai > 0 THEN thai WHEN han > 0 THEN han ELSE 0 END
   ELSE 0 END AS BIGINT) AS script_hits
 FROM s""",
+    audit=[
+        ("narrow plan: NO shuffle at all", r"!Exchange"),
+        ("whole-stage codegen", r"codegen id : "),
+        ("NO join", r"!Join"),
+    ],
 )
 def q_lang_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID with the writing-system fallback: five residue

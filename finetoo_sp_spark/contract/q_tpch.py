@@ -48,6 +48,12 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus""",
+    audit=[
+        ("shipdate filter pushed to scan", r"PushedFilters: \[.*LessThanOrEqual\(l_shipdate"),
+        ("column pruning (no l_orderkey read)", r"ReadSchema: [^\n]*l_returnflag"),
+        ("whole-stage codegen", r"codegen id : "),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem")
@@ -82,6 +88,11 @@ WHERE c_mktsegment = 'BUILDING'
 GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, l_orderkey
 LIMIT 10""",
+    audit=[
+        ("customer segment filter pushed", r"PushedFilters: \[.*EqualTo\(c_mktsegment,BUILDING"),
+        ("broadcast join for customer dim", r"BroadcastHashJoin"),
+        ("whole-stage codegen", r"codegen id : "),
+    ],
 )
 def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = T(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -118,6 +129,10 @@ JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 WHERE r_name = 'ASIA'
 GROUP BY n_name""",
+    audit=[
+        ("region filter pushed", r"PushedFilters: \[.*EqualTo\(r_name,ASIA"),
+        ("broadcast joins", r"BroadcastHashJoin"),
+    ],
 )
 def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = T(spark, sf_dir, "customer")
@@ -150,6 +165,10 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "match_customer",
     f"SELECT c_custkey AS node_id, {_CUSTOMER_COLS} FROM customer WHERE c_custkey = 42",
+    audit=[
+        ("point predicate pushed", r"PushedFilters: \[.*EqualTo\(c_custkey,42"),
+        ("limit short-circuit present", r"CollectLimit"),
+    ],
 )
 def q_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = tpch_graph(spark, sf_dir)
@@ -160,6 +179,9 @@ def q_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "filter_customers",
     f"SELECT c_custkey AS node_id, {_CUSTOMER_COLS} FROM customer WHERE c_acctbal > 9900.0",
+    audit=[
+        ("range predicate pushed", r"PushedFilters: \[.*GreaterThan\(c_acctbal"),
+    ],
 )
 def q_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = tpch_graph(spark, sf_dir)
@@ -170,6 +192,9 @@ def q_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "project_parts",
     "SELECT p_partkey, p_name, p_retailprice AS price FROM part",
+    audit=[
+        ("column pruning to 3 cols", r"ReadSchema: struct<p_partkey:bigint,p_name:string,p_retailprice:double>"),
+    ],
 )
 def q_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = tpch_graph(spark, sf_dir)
@@ -198,6 +223,9 @@ def q_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT o_custkey AS origin, o_orderkey AS dst, 1 AS depth,
   o_custkey || ' -> ' || o_orderkey AS provenance
 FROM orders WHERE o_custkey IN (1, 2, 3, 4, 5)""",
+    audit=[
+        ("start-set pushed as In filter", r"PushedFilters: \[.*In\(o_custkey"),
+    ],
 )
 def q_traverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = tpch_graph(spark, sf_dir)
@@ -212,6 +240,10 @@ SELECT c_custkey AS node_id, {_CUSTOMER_COLS},
   {', '.join(f'{c.strip()} AS orders_{c.strip()}' for c in _ORDERS_COLS.split(','))}
 FROM customer JOIN orders ON o_custkey = c_custkey
 WHERE c_custkey <= 50""",
+    audit=[
+        ("key filter pushed", r"PushedFilters: \[.*LessThanOrEqual\(c_custkey,50"),
+        ("hash join (broadcast or shuffled)", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+    ],
 )
 def q_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = tpch_graph(spark, sf_dir)
@@ -360,6 +392,10 @@ SELECT user_id, session_id, count(*) AS n_events,
   min(ts) AS start_ts, max(ts) AS end_ts,
   CAST(date_diff('second', min(ts), max(ts)) AS BIGINT) AS duration_s
 FROM sid GROUP BY user_id, session_id""",
+    audit=[
+        ("one shuffle on user_id", r"hashpartitioning\(user_id"),
+        ("window then aggregate", r"Window"),
+    ],
 )
 def q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.session_stats(T(spark, sf_dir, "events"))
@@ -400,6 +436,10 @@ SELECT e.event_id, e.user_id, e.ts, e.event_type,
 FROM events e JOIN r
   ON e.user_id = r.user_id
  AND e.ts >= r.trial_start AND e.ts < r.trial_end""",
+    audit=[
+        ("bucketed equi-join (not a theta nested loop)", r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"),
+        ("NO nested-loop join", r"!BroadcastNestedLoopJoin"),
+    ],
 )
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed point-in-interval range join (operators/asof.range_join):
@@ -464,6 +504,10 @@ WITH r AS (
 )
 SELECT l.event_id, l.ts, l.user_id, l.event_type, l.value, r.asof_value
 FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts""",
+    audit=[
+        ("one window pass, no join at all", r"Window"),
+        ("NO nested-loop join", r"!BroadcastNestedLoopJoin"),
+    ],
 )
 def q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (operators/asof.py): every non-purchase event carries
@@ -532,6 +576,10 @@ JOIN nation ON c_nationkey = n_nationkey
 WHERE l_returnflag = 'R'
 GROUP BY c_custkey, c_name, n_name
 ORDER BY revenue DESC, c_custkey LIMIT 20""",
+    audit=[
+        ("returnflag filter pushed", r"PushedFilters: \[.*EqualTo\(l_returnflag,R"),
+        ("nation dim broadcast", r"BroadcastHashJoin"),
+    ],
 )
 def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = T(spark, sf_dir, "customer")
@@ -562,6 +610,10 @@ SELECT * FROM (
     CAST(row_number() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey) AS BIGINT) AS rk
   FROM supplier
 ) WHERE rk <= 2""",
+    audit=[
+        ("single exchange on nation key", r"hashpartitioning\(s_nationkey"),
+        ("rank filter present", r"rk"),
+    ],
 )
 def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via window rank (no window top-k exists in the
@@ -946,6 +998,9 @@ FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#12' AND l_quantity BETWEEN 1 AND 11 AND p_size BETWEEN 1 AND 5)
    OR (p_brand = 'Brand#23' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10)
    OR (p_brand = 'Brand#34' AND l_quantity BETWEEN 20 AND 30 AND p_size BETWEEN 1 AND 15)""",
+    audit=[
+        ("part dim broadcast", r"BroadcastHashJoin"),
+    ],
 )
 def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: disjunction of conjunctive predicates across both
@@ -1168,6 +1223,11 @@ eligible AS (
 SELECT p_partkey, s_name, n_name, unit_cost FROM eligible e
 WHERE unit_cost = (SELECT min(unit_cost) FROM eligible m
                    WHERE m.p_partkey = e.p_partkey)""",
+    audit=[
+        ("p_size filter pushed", r"PushedFilters: \[.*EqualTo\(p_size,5"),
+        ("dimension joins broadcast", r"BroadcastHashJoin"),
+        ("correlated min as one window pass (no re-join)", r"Window"),
+    ],
 )
 def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: cheapest supplier per part within a region via a
@@ -1223,6 +1283,10 @@ JOIN nation n2 ON n2.n_nationkey = s_nationkey
 JOIN part ON p_partkey = l_partkey
 WHERE r_name = 'ASIA' AND p_type = 'ECONOMY'
 GROUP BY 1""",
+    audit=[
+        ("p_type filter pushed", r"PushedFilters: \[.*EqualTo\(p_type,ECONOMY"),
+        ("dimension joins broadcast", r"BroadcastHashJoin"),
+    ],
 )
 def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's market share of a part type within a
@@ -1281,6 +1345,11 @@ JOIN supplier ON s_suppkey = l_suppkey
 JOIN nation ON n_nationkey = s_nationkey
 WHERE p_name LIKE '%widget%'
 GROUP BY 1, 2""",
+    audit=[
+        ("p_name LIKE pushed as StringContains", r"PushedFilters: \[.*StringContains\(p_name,widget"),
+        ("all dims broadcast", r"BroadcastHashJoin"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit on a product line by supplier nation and
@@ -1320,6 +1389,10 @@ WITH val AS (
 )
 SELECT l_partkey, round(cents / 100.0, 2) AS part_value FROM val
 WHERE cents * (SELECT count(*) FROM val) > 2 * (SELECT sum(cents) FROM val)""",
+    audit=[
+        ("scalar threshold is a one-row broadcast (not a cartesian shuffle)", r"BroadcastNestedLoopJoin"),
+        ("partial aggregation", r"HashAggregate"),
+    ],
 )
 def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-part value with a global scalar-subquery
@@ -1366,6 +1439,10 @@ WITH c_orders AS (
   GROUP BY 1
 )
 SELECT c_count, count(*) AS custdist FROM c_orders GROUP BY 1""",
+    audit=[
+        ("zero-order customers kept (left outer)", r"LeftOuter"),
+        ("priority exclusion pushed to orders scan", r"PushedFilters: \[.*Not\(EqualTo\(o_orderpriority"),
+    ],
 )
 def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: customer order-count histogram through a
@@ -1393,6 +1470,10 @@ JOIN part ON p_partkey = l_partkey
 WHERE p_brand <> 'Brand#1' AND p_size IN (1, 2, 3, 4, 5)
   AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
 GROUP BY 1, 2, 3""",
+    audit=[
+        ("NOT IN as broadcast anti-join", r"LeftAnti"),
+        ("p_size IN pushed", r"PushedFilters: \[.*In\(p_size"),
+    ],
 )
 def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: supplier variety per part attribute triple with
@@ -1429,6 +1510,10 @@ WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3', 'NATION_4', 'NATION_5')
   AND s_suppkey IN (
     SELECT l_suppkey FROM shipped JOIN part ON p_partkey = l_partkey
     WHERE p_name LIKE 'small%' AND qty > 30)""",
+    audit=[
+        ("shipdate range pushed", r"PushedFilters: \[.*GreaterThanOrEqual\(l_shipdate"),
+        ("nested semi-join (IN subquery)", r"LeftSemi"),
+    ],
 )
 def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers who moved excess volume of a named
@@ -1479,6 +1564,11 @@ WHERE l1.l_returnflag = 'R' AND o_orderstatus = 'F'
                     AND l3.l_suppkey <> l1.l_suppkey
                     AND l3.l_returnflag = 'R')
 GROUP BY 1""",
+    audit=[
+        ("returnflag filter pushed", r"PushedFilters: \[.*EqualTo\(l_returnflag,R"),
+        ("EXISTS as left-semi self-join", r"LeftSemi"),
+        ("NOT EXISTS as left-anti self-join", r"LeftAnti"),
+    ],
 )
 def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: the sole-blame self-join — lines that are 'late'

@@ -163,7 +163,14 @@ def q_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("trustrank_scores", _trustrank_oracle(5))
+@_q(
+    "trustrank_scores",
+    _trustrank_oracle(5),
+    audit=[
+        ("seed membership folded in via broadcast join", r"BroadcastHashJoin"),
+        ("per-iteration partial aggregation", r"HashAggregate"),
+    ],
+)
 def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spam-demotion prior (Gyongyi et al., VLDB'04): 5 rounds of
     seed-biased fixed-point PageRank over the REAL extracted LINKS_TO
@@ -186,7 +193,16 @@ def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("hits_scores", _hits_oracle(4))
+@_q(
+    "hits_scores",
+    _hits_oracle(4),
+    audit=[
+        # The per-half-round sum aggregates sit BEFORE the localCheckpoint
+        # lineage cut (same situation as pagerank_links), so only the final
+        # score-assembly joins are visible in the returned plan.
+        ("final score assembly is a hash equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+    ],
+)
 def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hub/authority prior for corpus curation: 4 rounds of fixed-point
     HITS over the REAL extracted LINKS_TO graph (same edge set as
@@ -238,6 +254,11 @@ SELECT src AS url,
   CAST(CASE WHEN hops >= 40 THEN NULL ELSE hops END AS BIGINT) AS hops,
   hops >= 40 AS is_loop
 FROM fin""",
+    audit=[
+        # Pointer jumping: the final plan is post-checkpoint (lineage cut
+        # per round), so only the loop-flag join is visible here.
+        ("loop-flag membership is a hash equi-join", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
+    ],
 )
 def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Redirect-chain resolution by pointer jumping (operators/
@@ -315,7 +336,17 @@ WITH u AS (
 SELECT uu AS url, lab AS community FROM l{rounds}"""
 
 
-@_q("community_labels", _lpa_oracle(4))
+@_q(
+    "community_labels",
+    _lpa_oracle(4),
+    audit=[
+        # every round ends in a localCheckpoint lineage cut (same
+        # situation as hits/pagerank), so the returned plan is the final
+        # label scan; the per-round join+aggregate shape is pinned by
+        # the operator's code and the value oracle
+        ("final labels come off the checkpointed round", r"ExistingRDD"),
+    ],
+)
 def q_community_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection for link-farm/neighborhood curation: 4
     synchronous label-propagation rounds (Raghavan 2007, deterministic

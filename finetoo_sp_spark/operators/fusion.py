@@ -14,20 +14,12 @@ fixed point** (SCALE div (RRF_K + rank), summed as integers) so partial
 sums are order-independent and the whole operator is exactly portable
 to the SQL oracle.
 
-Scale shape: one window per signal — each is a single shuffle by the
-trivial (empty) partition... which would serialize at 10^12 rows, so
-NOT that: ranks here are computed with a GLOBAL sort-free two-phase
-trick — window over ``partitionBy()`` is only acceptable for
-dimension-sized frames. For corpus-scale inputs this operator ranks
-via ``percent_rank``-free dense rank within explicit RANGE BUCKETS:
-callers pass ``bucket_exprs`` mapping each signal to a coarse
-pre-bucket (e.g. score div 1000) when cardinality demands it; at that
-point ranks are per-bucket offsets + broadcast bucket-prefix counts.
-The default (buckets=None) uses the plain global window and is
-intended for post-gate candidate sets (the usual fusion input — the
-few-per-thousand survivors of the cheap gates), which are
-dimension-small by construction. The query registers the default
-path; the audit asserts the single-window shape.
+Scale shape: one global window per signal, ``Window.partitionBy()``
+ordered by (score DESC, id ASC). Each is a single-partition sort, so
+the input must be post-gate sized: the few-per-thousand survivors of
+the cheap gates (the usual fusion input), dimension-small by
+construction, never the raw corpus. The audit asserts the window shape
+on the registered query.
 """
 
 from __future__ import annotations

@@ -1,16 +1,15 @@
-"""Driver-contract smoke: every queries() entry runs and matches its
-DuckDB oracle at sf0.001 (same compare as the driver: row count + sorted
-columns + canonical value multiset). The full sf0.01 sweep lives in
-tools/verify_contract.py; this keeps the gate inside pytest."""
+"""Driver-contract smoke: the SUBSET sample of queries() runs and matches
+its DuckDB oracle at sf0.001, through the compare of
+tools/verify_contract.py (row count + sorted columns + canonical value
+multiset). That tool's sweep runs every registered query; this keeps a
+sample of the gate inside pytest."""
 
 from __future__ import annotations
-
-import math
 
 import duckdb
 import pytest
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+from tools.verify_contract import TABLES, frame_sig
 
 # cheap-but-representative subset for pytest (full set in tools/verify_contract.py)
 SUBSET = [
@@ -33,28 +32,6 @@ SUBSET = [
 ]
 
 
-def canon(val):
-    if isinstance(val, float):
-        return "NaN" if math.isnan(val) else f"{val:.6f}"
-    if isinstance(val, bool):
-        return str(bool(val)).lower()
-    if hasattr(val, "isoformat"):
-        try:
-            return val.isoformat(sep=" ").replace("+00:00", "")
-        except TypeError:
-            return val.isoformat() + " 00:00:00"
-    if isinstance(val, (bytes, bytearray)):
-        return val.hex()
-    return str(val)
-
-
-def sig(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return [cols[i] for i in order], sorted(
-        "|".join(canon(r[i]) for i in order) for r in rows
-    )
-
-
 @pytest.fixture(scope="module")
 def oracle_con(sf_dir):
     con = duckdb.connect()
@@ -71,8 +48,8 @@ def test_query_matches_oracle(spark, sf_dir, oracle_con, name):
     scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
     res = oracle_con.execute(contract.oracle_sql()[name])
     ocols, orows = [d[0] for d in res.description], res.fetchall()
-    sn, sv = sig(scols, srows)
-    on, ov = sig(ocols, orows)
+    sn, sv = frame_sig(scols, srows)
+    on, ov = frame_sig(ocols, orows)
     assert len(srows) == len(orows)
     assert sn == on
     assert sv == ov
@@ -98,14 +75,12 @@ def test_entry_smoke(spark):
 
 
 def test_every_oracle_parses_in_duckdb():
-    """EXPLAIN-only parse of all 155 oracle twins against the sf0.001
+    """EXPLAIN-only parse of every oracle twin against the sf0.001
     views — catches SQL drift in seconds without the full value sweep."""
-    import duckdb
-
     import __spark_entry__ as e
 
     con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('/root/testdata/sf0.001/{t}.parquet')"
         )
@@ -161,6 +136,31 @@ def test_every_registered_query_is_named_in_coverage():
         if not re.search(rf"(?<![\w]){re.escape(name)}(?![\w])", cov)
     ]
     assert not missing, missing
+
+
+def test_registered_audit_checks_compile_and_skip_universal():
+    """Every query's own plan check is a regex that compiles once a
+    leading "!" is stripped, and none repeats a check that
+    tools/audit_plans.py already applies to every query."""
+    import re
+
+    from finetoo_sp_spark import contract
+    from finetoo_sp_spark.contract._core import _AUDIT
+    from tools.audit_plans import UNIVERSAL
+
+    assert set(_AUDIT) == set(contract.queries())
+    universal = {pat for _desc, pat in UNIVERSAL}
+    bad, repeated = [], []
+    for name, checks in _AUDIT.items():
+        for desc, pat in checks:
+            try:
+                re.compile(pat.removeprefix("!"))
+            except re.error as e:
+                bad.append((name, desc, str(e)))
+            if pat in universal:
+                repeated.append((name, desc))
+    assert not bad, bad
+    assert not repeated, repeated
 
 
 # Defaulted parameters that no call varies but that stay settable: a
