@@ -8,7 +8,7 @@ $SPARK_GRAFT_SF_DIR.
 
 Env:
   SPARK_GRAFT_SF_DIR      parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS        local[N] parallelism (default 32)
+  SPARK_GRAFT_CPUS        local[N] parallelism (default: the host's CPU count)
   SPARK_GRAFT_BENCH_PAGES synthetic corpus size (default 40000)
 """
 
@@ -29,7 +29,7 @@ def main() -> None:
     from finetoo_sp_spark import contract
     from finetoo_sp_spark.datagen import gen_pages
     from finetoo_sp_spark.extraction.extract import extract_pages
-    from finetoo_sp_spark.session import get_spark
+    from finetoo_sp_spark.session import get_spark, local_cpus
 
     spark = get_spark(app_name="finetoo_sp_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -52,7 +52,7 @@ def main() -> None:
     # one task wave across all cores: the datagen default (n/2000 parts)
     # leaves a third of the slots idle at 40k pages / 32 cpus (measured
     # 59k -> 70k pages/s from this alone); more waves only add overhead
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     pages = gen_pages(spark, n_pages, partitions=cpus).select("url", "html").cache()
     pages.count()  # materialize: time extraction, not generation
     extract_s, best_leg_steal = float("inf"), None
@@ -147,17 +147,21 @@ def main() -> None:
         else None
     )
 
-    # -- regression gate: compare per-query times vs the last recorded
-    # round (BENCH_r{N}.json) and flag >1.3x slowdowns in the output so
-    # a regression can never ship silently (VERDICT r02 item 10).
+    # -- regression gate: compare per-query times vs the newest recorded
+    # round (BENCH_r{N}.json) at the same sf and cpus, and flag >1.3x
+    # slowdowns in the output so a regression can never ship silently
+    # (VERDICT r02 item 10).
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    baseline, prev_queries = _previous_round_queries(
+        os.path.dirname(os.path.abspath(__file__)), sf, cpus
+    )
     regressions: dict[str, dict] = {}
-    prev_queries = _previous_round_queries()
     for name, now in times.items():
         prev = prev_queries.get(name)
         if prev and prev > 0 and now > 1.3 * prev:
             regressions[name] = {"prev": prev, "now": now, "ratio": round(now / prev, 2)}
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(
         json.dumps(
             {
@@ -166,10 +170,11 @@ def main() -> None:
                 "unit": "pages/sec",
                 "queries": times,
                 "regressions": regressions,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "regression_baseline": baseline or "no baseline",
+                "sf": sf,
                 "n_pages": n_pages,
                 "extract_sec": round(extract_s, 3),
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                "cpus": cpus,
                 "query_reps": reps,
                 "host_steal_pct": steal_pct,
                 "steal_annotated": True,
@@ -229,29 +234,32 @@ def _cpu_steal_jiffies() -> tuple[int, int]:
         return (0, 0)
 
 
-def _previous_round_queries() -> dict[str, float]:
-    """Per-query seconds from the newest committed BENCH_r{N}.json
-    (driver-recorded), empty when none exists or parsing fails."""
+def _previous_round_queries(root: str, sf, cpus: int) -> tuple[str | None, dict[str, float]]:
+    """(file name, per-query seconds) of the newest BENCH_r{N}.json in
+    ``root`` recorded at this run's ``sf`` and ``cpus`` whose ``parsed``
+    result is a dict; (None, {}) when no record qualifies, so the gate
+    only ever compares like with like. An unreadable record is skipped."""
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[int, str] | None = None
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
+    records = []
+    for p in glob.glob(os.path.join(root, "BENCH_r*.json")):
         m = re.search(r"BENCH_r(\d+)\.json$", p)
         if m:
-            n = int(m.group(1))
-            if best is None or n > best[0]:
-                best = (n, p)
-    if best is None:
-        return {}
-    try:
-        with open(best[1]) as f:
-            doc = json.load(f)
-        q = doc.get("parsed", doc).get("queries", {})
-        return {k: float(v) for k, v in q.items()}
-    except Exception:  # noqa: BLE001 — a corrupt record must not break the bench
-        return {}
+            records.append((int(m.group(1)), p))
+    for _n, p in sorted(records, reverse=True):
+        try:
+            with open(p) as f:
+                doc = json.load(f)
+        except (OSError, ValueError):
+            continue
+        if not isinstance(doc, dict) or doc.get("sf") != sf or doc.get("cpus") != cpus:
+            continue
+        parsed = doc.get("parsed")
+        if isinstance(parsed, dict):
+            q = parsed.get("queries") or {}
+            return os.path.basename(p), {k: float(v) for k, v in q.items()}
+    return None, {}
 
 
 if __name__ == "__main__":

@@ -24,8 +24,6 @@ extraction engine) as an idiomatic Spark pipeline:
   (``multimodal.py``), JSON/CSV sinks (``operators/sinks.py``);
 - per-partition lineage manifests + checkpoint resume (``sources/lineage.py``)
   behind an Iceberg-or-parquet catalog seam (``sources/catalog.py``);
-- Structured Streaming ingestion with an idempotent micro-batch sink and a
-  custom stateful operator (``streaming/``);
 - a parallel PDF layout-analysis path (``extraction/pdf.py``) and binder
   generation (``extraction/binder.py``);
 - as-of and bucketed range joins (``operators/asof.py``);

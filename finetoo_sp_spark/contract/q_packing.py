@@ -62,9 +62,7 @@ FROM t""",
 def q_pack_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget sequence packing (pretraining shard assembly):
     quotient packing — shard by hash(id), bin = floor(exclusive token
-    cumsum / 2048) — fully declarative and engine-portable; the exact
-    greedy packer (sequential remainder reset) lives in
-    packing.pack_greedy_in_shards with a pytest contract."""
+    cumsum / 2048) — fully declarative and engine-portable."""
     from finetoo_sp_spark.operators.packing import pack_token_quota
 
     docs = T(spark, sf_dir, "documents")

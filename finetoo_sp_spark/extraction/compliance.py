@@ -44,8 +44,8 @@ def _has_token(directives, token: str):
 
 def with_compliance_cols(pages: DataFrame) -> DataFrame:
     """``pages`` with (robots, noindex, nofollow, noai, license) columns
-    APPENDED — the no-join form streaming composition needs (flags are
-    plain expressions over the html column, never a self-join)."""
+    APPENDED — plain expressions over the html column, so callers
+    compose the flags without a self-join."""
     html = F.col("html")
     if isinstance(pages.schema["html"].dataType, BinaryType):
         html = F.decode(html, "UTF-8")

@@ -77,13 +77,3 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .localCheckpoint(eager=False)
         )
     return lab.select(F.col("u").alias("id"), F.col("lab").alias("community"))
-
-
-def community_sizes(edges: DataFrame, rounds: int = 4) -> DataFrame:
-    """(community, n_members) rollup of ``label_propagation`` — the
-    quota/sampling view a curation mix planner consumes."""
-    return (
-        label_propagation(edges, rounds)
-        .groupBy("community")
-        .agg(F.count(F.lit(1)).alias("n_members"))
-    )

@@ -14,10 +14,7 @@ Two standard final-mile curation steps between "deduped corpus" and
   bin = floor(exclusive-cumsum / budget) within each shard — which is a
   pure window expression (one shuffle on the shard key), deterministic,
   engine-portable, and overfills a bin only by the one document that
-  straddles the boundary (bounded by max doc tokens). For byte-exact
-  greedy semantics run :func:`pack_greedy_in_shards` (applyInPandas,
-  per-shard sequential — same shard partitioning, Python only touches
-  (id, n_tokens) pairs, never text).
+  straddles the boundary (bounded by max doc tokens).
 """
 
 from __future__ import annotations
@@ -83,43 +80,6 @@ def pack_token_quota(
     excl = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     return sharded.select(
         "id", "n_tokens", "shard", F.floor(excl / budget).cast("long").alias("bin")
-    )
-
-
-def pack_greedy_in_shards(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    budget: int,
-    n_shards: int = 64,
-) -> DataFrame:
-    """Exact greedy packing per shard (bin closes when the next doc
-    would overflow; oversized docs get their own bin). applyInPandas —
-    the per-shard scan is inherently sequential, but a shard holds only
-    (id, n_tokens) longs, never text, so the Python boundary stays
-    metadata-sized."""
-    import pandas as pd
-
-    sharded = df.select(
-        F.col(id_col).alias("id"),
-        F.col(tokens_col).cast("long").alias("n_tokens"),
-        F.pmod(F.xxhash64(id_col), F.lit(n_shards)).cast("int").alias("shard"),
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("id", kind="mergesort").reset_index(drop=True)
-        bins, cur_bin, cur_fill = [], 0, 0
-        for t in pdf["n_tokens"]:
-            if cur_fill > 0 and cur_fill + t > budget:
-                cur_bin += 1
-                cur_fill = 0
-            bins.append(cur_bin)
-            cur_fill += t
-        pdf["bin"] = pd.Series(bins, dtype="int64")
-        return pdf[["id", "n_tokens", "shard", "bin"]]
-
-    return sharded.groupBy("shard").applyInPandas(
-        pack, schema="id long, n_tokens long, shard int, bin long"
     )
 
 

@@ -21,6 +21,11 @@ from pyspark.sql import SparkSession
 _ENV_DEFAULT = "__env_default__"
 
 
+def local_cpus() -> int:
+    """local[N] parallelism: ``$SPARK_GRAFT_CPUS``, else the host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "finetoo_sp_spark",
     master: str | None = _ENV_DEFAULT,
@@ -29,13 +34,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[N]``, N = :func:`local_cpus`.
     Pass ``master=None`` under spark-submit: the builder then inherits
     --master instead of overriding it (setting .master() here would
     silently win over the launch flag — the north-rule N-vs-4N runs
     depend on --master being authoritative).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if master == _ENV_DEFAULT:
         master = f"local[{cpus}]"
 

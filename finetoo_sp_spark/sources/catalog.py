@@ -21,10 +21,10 @@ bucket commit rides an Iceberg snapshot, so a crashed writer leaves no
 torn bucket at all.
 
 When Iceberg is absent and SNAPSHOT SEMANTICS are needed (atomic
-commits, time travel, rollback, merge-on-read upserts, exactly-once
-streaming epochs), ``sources/table.py`` supplies the same commit
-discipline on plain parquet — see its module docstring; it is the
-from-scratch stand-in this seam swaps out on a real cluster.
+commits, time travel, rollback, merge-on-read upserts),
+``sources/table.py`` supplies the same commit discipline on plain
+parquet — see its module docstring; it is the from-scratch stand-in
+this seam swaps out on a real cluster.
 
 Production config (cluster with the Iceberg runtime on the classpath)::
 

@@ -197,20 +197,3 @@ def read_zipnum_blocks(spark: SparkSession, path: str) -> DataFrame:
         return out
 
     return scan_archives(spark, path, rows, ZIPNUM_BLOCK_SCHEMA)
-
-
-def build_cdx(spark: SparkSession, path: str) -> DataFrame:
-    """The cdx table itself: (surt_key, ts14, url, filename, offset,
-    length, digest), sorted by (surt_key, ts14) like Common Crawl's
-    cc-index so range filters prune and merges are k-way. digest is
-    sha256 of the decoded payload (JVM-side sha2)."""
-    e = read_cdx_entries(spark, path)
-    return e.select(
-        surt_key(F.col("url")).alias("surt_key"),
-        F.date_format("warc_ts", "yyyyMMddHHmmss").alias("ts14"),
-        "url",
-        "filename",
-        "offset",
-        "length",
-        F.sha2("html", 256).alias("digest"),
-    ).orderBy("surt_key", "ts14")

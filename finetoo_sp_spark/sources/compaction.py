@@ -1,14 +1,13 @@
 """Small-file compaction planning (table-maintenance tier).
 
 Training-pipeline extension (no reference analogue): a 10^12-row
-corpus written incrementally (snapshot merges, churn-only refreshes,
-streaming ingest) accumulates small files; query latency then dies on
-open() overhead rather than scan throughput. This operator PLANS the
-compaction — the Spark-side analogue of Iceberg's binpack rewrite
-strategy: group each partition's files greedily (in stable file-id
-order) into target-size bins; every bin with more than one file is one
-merge task, files already at/above target land alone in their bin and
-are left untouched.
+corpus written incrementally (churn-only refreshes, appends) accumulates
+small files; query latency then dies on open() overhead rather than scan
+throughput. This operator PLANS the compaction — the Spark-side analogue
+of Iceberg's binpack rewrite strategy: group each partition's files
+greedily (in stable file-id order) into target-size bins; every bin with
+more than one file is one merge task, files already at/above target land
+alone in their bin and are left untouched.
 
 The greedy rule is one cumulative-sum window per partition:
 ``bin = cum_bytes_before_this_file div target`` — deterministic,

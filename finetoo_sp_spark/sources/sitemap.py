@@ -32,8 +32,7 @@ def parse_sitemaps(df: DataFrame) -> DataFrame:
     lastmod is NULL when absent or unparseable (try-cast semantics),
     priority is exposed as integer parts-per-million (decimal parse,
     never a float round-trip), changefreq '' -> NULL. <sitemapindex>
-    bodies yield zero rows here — their <sitemap><loc> children are new
-    sitemap fetch targets, surfaced by :func:`index_entries`.
+    bodies yield zero rows.
     """
     blocks = F.expr("regexp_extract_all(sitemap_xml, '(?s)<url>(.*?)</url>', 1)")
     e = df.select("host", F.explode(blocks).alias("_b"))
@@ -56,20 +55,6 @@ def parse_sitemaps(df: DataFrame) -> DataFrame:
         .cast("long")
         .alias("priority_ppm"),
     ).filter(F.col("loc") != "")
-
-
-def index_entries(df: DataFrame) -> DataFrame:
-    """(host, sitemap_loc) children of <sitemapindex> bodies — the next
-    round of sitemap fetches (the crawl loop unions them back into the
-    fetch frontier)."""
-    blocks = F.expr(
-        "regexp_extract_all(sitemap_xml, '(?s)<sitemap>(.*?)</sitemap>', 1)"
-    )
-    return (
-        df.select("host", F.explode(blocks).alias("_b"))
-        .select("host", _tag(F.col("_b"), "loc").alias("sitemap_loc"))
-        .filter(F.col("sitemap_loc") != "")
-    )
 
 
 def media_entries(df: DataFrame) -> DataFrame:

@@ -76,24 +76,3 @@ def changed_pages(
         .filter(F.col("_h_old").isNull() | (F.col("_h_old") != F.col("_h_new")))
         .drop("_h_old", "_h_new")
     )
-
-
-def merge_extracted(
-    old_extracted: DataFrame, delta_extracted: DataFrame, delta: DataFrame
-) -> DataFrame:
-    """Previous snapshot's extracted corpus + this snapshot's churn-only
-    extraction -> the full extracted corpus of the new snapshot, without
-    ever re-extracting an unchanged page:
-
-        merged = (old_extracted MINUS removed/changed urls) UNION delta_extracted
-
-    ``delta`` is snapshot_delta's (url, status) frame. The anti-join's
-    right side is churn-sized (typically a few percent of the corpus),
-    so Spark broadcasts it when it fits and the old output never
-    shuffles; with both extraction outputs in the lineage bucket layout
-    the union preserves bucketing for downstream consumers. Byte
-    identity of the merge vs a full re-extraction is pinned by
-    tests/test_snapshot.py.
-    """
-    stale = delta.filter(F.col("status").isin("removed", "changed")).select("url")
-    return old_extracted.join(stale, "url", "left_anti").unionByName(delta_extracted)

@@ -30,7 +30,7 @@ mechanics the north rule's sink story needs, built from scratch:
   table evolves in O(manifest), never O(data). Per-file [min, max]
   stats recorded under a column's old name simply stop pruning after a
   rename (a file without usable stats is always read — never lost
-  rows, only lost skipping, until files are rewritten by compaction).
+  rows, only lost skipping, until an overwrite commit rewrites the files).
 
 Not wire-compatible with Iceberg (no Avro manifests) — it is the
 discipline, not the format, and swaps out for the real thing through
@@ -370,9 +370,9 @@ def _publish(
     parent: int | None,
     extra: dict | None = None,
 ) -> int:
-    """Atomic commit point. ``extra`` fields (e.g. a streaming epoch id)
+    """Atomic commit point. ``extra`` fields (schema ids, file stats)
     ride the SAME atomic publish as the file list — a manifest is never
-    visible without them (exactly-once depends on this).
+    visible without them.
 
     The publish is a true CAS: ``os.link(tmp, final)`` atomically fails
     ``EEXIST`` when the version number is already taken (unlike
@@ -549,145 +549,3 @@ def _resolve(
             deletes = deletes.withColumnRenamed(key, cur_key)
             key = cur_key
     return parent.join(deletes, key, "left_anti").unionByName(new_rows)
-
-
-def _required_versions(path: str, version: int, acc: set[int]) -> None:
-    """Versions transitively needed to RESOLVE ``version``: rollback
-    targets, and the parent chain wherever merge-on-read deletes apply."""
-    if version in acc:
-        return
-    acc.add(version)
-    m = _load_manifest(path, version)
-    if m.get("resolve_as") is not None:
-        _required_versions(path, m["resolve_as"], acc)
-    if m.get("delete_files") and m.get("parent") is not None:
-        _required_versions(path, m["parent"], acc)
-
-
-def expire_versions(path: str, keep_last: int = 2) -> list[int]:
-    """Drop the manifests of versions older than the newest
-    ``keep_last`` — EXCEPT any version a kept version still resolves
-    through (rollback targets, merge-on-read parents), which must
-    survive or the kept versions would become unreadable (Iceberg's
-    ``expire_snapshots`` has the same reachability rule). Data files are
-    untouched; run :func:`vacuum` afterwards to reclaim them."""
-    latest = current_version(path)
-    if latest is None:
-        return []
-    vdir = _versions_dir(path)
-    existing = sorted(
-        int(f[1:-5]) for f in os.listdir(vdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
-    # intersect with what still exists: a prior expire with a smaller
-    # keep_last may already have dropped part of the nominal keep range
-    keep = set(range(max(0, latest - keep_last + 1), latest + 1)) & set(existing)
-    required: set[int] = set()
-    for v in keep:
-        _required_versions(path, v, required)
-    removed = [v for v in existing if v not in required]
-    for v in removed:
-        os.remove(os.path.join(vdir, f"v{v}.json"))
-    return removed
-
-
-def vacuum(path: str) -> list[str]:
-    """Delete data/delete files referenced by NO remaining manifest
-    (orphans from crashed writers + files owned only by expired
-    versions — Iceberg's ``remove_orphan_files``). Returns the deleted
-    relative paths."""
-    vdir = _versions_dir(path)
-    referenced: set[str] = set()
-    if os.path.isdir(vdir):
-        for f in os.listdir(vdir):
-            if f.startswith("v") and f.endswith(".json"):
-                m = _load_manifest(path, int(f[1:-5]))
-                referenced.update(m["files"])
-                referenced.update(m.get("delete_files") or [])
-    removed: list[str] = []
-    for sub in ("data", "deletes"):
-        root = os.path.join(path, sub)
-        if not os.path.isdir(root):
-            continue
-        for snap in sorted(os.listdir(root)):
-            snap_dir = os.path.join(root, snap)
-            if not os.path.isdir(snap_dir):
-                continue
-            kept_any = False
-            for f in sorted(os.listdir(snap_dir)):
-                rel = os.path.relpath(os.path.join(snap_dir, f), path)
-                if f.endswith(".parquet"):
-                    if rel in referenced:
-                        kept_any = True
-                    else:
-                        os.remove(os.path.join(snap_dir, f))
-                        removed.append(rel)
-            if not kept_any:
-                # snapshot dir owns no referenced data: drop sidecars too
-                import shutil
-
-                shutil.rmtree(snap_dir, ignore_errors=True)
-    return removed
-
-
-def compact_table(
-    spark: SparkSession, path: str, small_bytes: int = 8 * 1024 * 1024
-) -> int | None:
-    """Rewrite-data-files compaction: consolidate the CURRENT version's
-    small files (< ``small_bytes``) into one new snapshot and publish a
-    version that references the consolidated files plus the untouched
-    large ones — file-level surgery, the large files are never read or
-    moved (Iceberg's ``rewrite_data_files``). Resolves merge-on-read
-    chains first, so a compacted version reads with zero delete joins.
-    Returns the new version, or None when there is nothing to compact.
-
-    Scale note: at 10^12 rows this runs per partition-range with the
-    bin packing of sources/compaction.plan_compaction; here the bin is
-    simply "every small file" because local snapshots are single-digit
-    file counts.
-    """
-    latest = current_version(path)
-    if latest is None:
-        return None
-    m = _load_manifest(path, latest)
-    if m.get("delete_files") or m.get("resolve_as") is not None:
-        # MOR/rollback chain: materialize the resolved rows, then the
-        # new version is a clean overwrite (COW compaction).
-        return commit_version(read_version(spark, path, latest), path, "overwrite")
-    small = [
-        f for f in m["files"]
-        if os.path.getsize(os.path.join(path, f)) < small_bytes
-    ]
-    if len(small) < 2:
-        return None
-    big = [f for f in m["files"] if f not in set(small)]
-    # project each small file through its write-time schema: compaction
-    # rewrites mixed-schema files under the CURRENT schema (how stats
-    # pruning recovers after a rename)
-    consolidated = _read_projected(spark, path, m, small, _schema_of(m))
-    snap_dir = os.path.join(path, "data", uuid.uuid4().hex)
-    consolidated.coalesce(1).write.mode("error").parquet(snap_dir)
-    new_files = sorted(
-        os.path.join("data", os.path.basename(snap_dir), f)
-        for f in os.listdir(snap_dir)
-        if f.endswith(".parquet")
-    )
-    extra: dict = {}
-    if m.get("schemas"):
-        fs = {
-            f: sid
-            for f, sid in (m.get("file_schemas") or {}).items()
-            if f in set(big)
-        }
-        fs.update({f: m["schema_id"] for f in new_files})
-        extra = {
-            "schema_id": m["schema_id"],
-            "schemas": m["schemas"],
-            "file_schemas": fs,
-        }
-    if m.get("stats"):
-        keep = set(big)
-        extra["stats"] = {
-            f: b for f, b in m["stats"].items() if f in keep
-        }
-    return _publish(path, big + new_files, "compact", latest, extra=extra or None)

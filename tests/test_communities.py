@@ -8,7 +8,6 @@ from __future__ import annotations
 import pytest
 
 from finetoo_sp_spark.operators.communities import (
-    community_sizes,
     label_propagation,
 )
 
@@ -63,18 +62,6 @@ def test_partitioning_invariance(spark):
     one = _labels(label_propagation(_edges(spark, pairs, 1), rounds=3))
     many = _labels(label_propagation(_edges(spark, pairs, 7), rounds=3))
     assert one == many
-
-
-def test_community_sizes_rollup(spark):
-    pairs = [
-        ("a", "b"), ("b", "c"), ("a", "c"),
-        ("d", "e"), ("e", "f"), ("d", "f"),
-    ]
-    sizes = {
-        r["community"]: r["n_members"]
-        for r in community_sizes(_edges(spark, pairs), rounds=3).collect()
-    }
-    assert sorted(sizes.values()) == [3, 3]
 
 
 def test_rounds_validated(spark):

@@ -368,112 +368,6 @@ def test_upsert_mor_and_rollback_chain(spark, tmp_path):
     }
 
 
-def test_expire_and_vacuum_preserve_mor_chains(spark, tmp_path):
-    import os
-
-    from finetoo_sp_spark.sources.table import (
-        commit_version,
-        expire_versions,
-        read_version,
-        upsert_version,
-        vacuum,
-    )
-
-    path = str(tmp_path / "gc")
-    d = spark.createDataFrame([(i, i) for i in range(8)], "k long, v long")
-    commit_version(d, path, mode="overwrite")                        # v0
-    upsert_version(
-        spark.createDataFrame([(1, -1)], "k long, v long"), path, "k"
-    )                                                                # v1 (MOR -> needs v0)
-    commit_version(
-        spark.createDataFrame([(50, 50)], "k long, v long"), path, "append"
-    )                                                                # v2
-    # orphan from a "crashed writer"
-    d.limit(3).write.parquet(os.path.join(path, "data", "orphan"))
-    # keep only the newest 2 (v1, v2) -> v0 must SURVIVE (v1 resolves
-    # through it, and v2 appends its files)
-    removed = expire_versions(path, keep_last=2)
-    assert removed == []
-    gone = vacuum(path)
-    assert any("orphan" in g for g in gone)
-    assert {r.k for r in read_version(spark, path, 1).collect()} == set(range(8))
-    # now a compacting overwrite, then expire everything older
-    commit_version(read_version(spark, path, 2), path, "overwrite")  # v3
-    removed = expire_versions(path, keep_last=1)
-    assert removed == [0, 1, 2]
-    reclaimed = vacuum(path)
-    assert reclaimed  # old snapshot + delete files reclaimed
-    rows = {r.k: r.v for r in read_version(spark, path).collect()}
-    assert rows == {0: 0, 1: -1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 6, 7: 7, 50: 50}
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        read_version(spark, path, 0)
-
-
-def test_compact_table_small_file_surgery(spark, tmp_path):
-    import json
-    import os
-
-    from finetoo_sp_spark.sources.table import (
-        _load_manifest,
-        commit_version,
-        compact_table,
-        read_version,
-        upsert_version,
-    )
-
-    path = str(tmp_path / "cmp")
-    for i in range(4):  # four tiny append commits -> many small files
-        commit_version(
-            spark.range(i * 10, (i + 1) * 10).selectExpr("id AS k").coalesce(1),
-            path,
-            "overwrite" if i == 0 else "append",
-        )
-    before = _load_manifest(path, 3)["files"]
-    v = compact_table(spark, path)
-    after = _load_manifest(path, v)["files"]
-    assert len(after) < len(before)
-    assert read_version(spark, path).count() == 40
-    assert {r.k for r in read_version(spark, path).collect()} == set(range(40))
-    # history intact
-    assert read_version(spark, path, 1).count() == 20
-    # MOR chain compaction goes copy-on-write and reads clean after
-    upsert_version(spark.createDataFrame([(0, )], "k long"), path, "k")
-    v2 = compact_table(spark, path)
-    m2 = _load_manifest(path, v2)
-    assert not m2.get("delete_files") and read_version(spark, path).count() == 40
-    # compaction converges: repeated calls end at None (a single
-    # consolidated file is never "2+ small files") and rows never change
-    for _ in range(3):
-        if compact_table(spark, path) is None:
-            break
-    assert compact_table(spark, path) is None
-    assert read_version(spark, path).count() == 40
-
-
-def test_expire_widening_keep_after_narrow_expire(spark, tmp_path):
-    """expire(keep_last=5) after expire(keep_last=1) must not crash on
-    the already-expired part of the nominal keep range."""
-    from finetoo_sp_spark.sources.table import (
-        commit_version,
-        expire_versions,
-        read_version,
-    )
-
-    path = str(tmp_path / "exp")
-    for i in range(4):
-        commit_version(
-            spark.range(i, i + 1).selectExpr("id AS k"), path,
-            "overwrite" if i == 0 else "append",
-        )
-    # keep only v3 (append chain: v3 references ALL files, reads fine)
-    assert expire_versions(path, keep_last=1) == [0, 1, 2]
-    # widening the window later must be a no-op, not a crash
-    assert expire_versions(path, keep_last=5) == []
-    assert read_version(spark, path).count() == 4
-
-
 def test_trap_urls_hand_cases(spark):
     from finetoo_sp_spark.operators.traps import flag_trap_urls
 

@@ -1,12 +1,11 @@
-"""Schema evolution on the snapshot-log versioned table
-(sources/table.py — Iceberg column-ID semantics on plain parquet)."""
+"""Schema evolution and the commit point of the snapshot-log versioned
+table (sources/table.py — Iceberg column-ID semantics on plain parquet)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from finetoo_sp_spark.sources.table import (
     commit_version,
-    compact_table,
     evolve_schema,
     read_version,
     rollback,
@@ -105,18 +104,6 @@ def test_rollback_restores_schema(spark, tmp_path):
     assert {r["a"] for r in read_version(spark, path).collect()} == {10, 20}
 
 
-def test_compaction_rewrites_mixed_schema_files(spark, tmp_path):
-    path = str(tmp_path / "t")
-    commit_version(_df(spark, [(1, 10)], "id long, a long"), path, "overwrite")
-    evolve_schema(path, rename={"a": "b"}, add=[("c", "long")])
-    commit_version(_df(spark, [(2, 20, 200)], "id long, b long, c long"), path)
-    v = compact_table(spark, path, small_bytes=1 << 30)  # everything small
-    assert v is not None
-    rows = {r["id"]: r for r in read_version(spark, path).collect()}
-    assert rows[1]["b"] == 10 and rows[1]["c"] is None
-    assert rows[2]["b"] == 20 and rows[2]["c"] == 200
-
-
 def test_legacy_tables_stay_legacy(spark, tmp_path):
     """A table whose v0 predates schema tracking must keep reading and
     appending exactly as before (no schema keys, no validation)."""
@@ -159,3 +146,45 @@ def test_pruned_read_after_rename_keeps_all_rows(spark, tmp_path):
     rows = {r["id"] for r in df.collect()}
     assert rows == {2, 3, 4, 5, 6, 7, 100, 101}
     assert report["files_read"] == report["files_total"]  # conservative
+
+
+def test_publish_cas_two_writers_one_winner(tmp_path):
+    """The commit point is a true CAS (os.link, not exists-check +
+    replace): of N threads racing the same version number, exactly one
+    commits and the rest raise CommitConflict — the winner's manifest
+    is never silently overwritten."""
+    import json
+    import os
+    import threading
+
+    from finetoo_sp_spark.sources.table import CommitConflict, _publish
+
+    path = str(tmp_path / "race")
+    results = [None] * 8
+    barrier = threading.Barrier(8)
+
+    def writer(i):
+        barrier.wait()
+        try:
+            _publish(path, [f"data/w{i}.parquet"], "overwrite", None,
+                     extra={"writer": i})
+            results[i] = "won"
+        except CommitConflict:
+            results[i] = "lost"
+
+    threads = [threading.Thread(target=writer, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert results.count("won") == 1
+    assert results.count("lost") == 7
+    winner = results.index("won")
+    with open(os.path.join(path, "_versions", "v0.json")) as f:
+        m = json.load(f)
+    assert m["writer"] == winner
+    assert m["files"] == [f"data/w{winner}.parquet"]
+    # no temp files left behind by winners or losers
+    leftovers = [f for f in os.listdir(os.path.join(path, "_versions"))
+                 if f.endswith(".tmp")]
+    assert leftovers == []

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import Row
 
 from finetoo_sp_spark.codecs.wav import WavError, decode_wav, encode_wav
-from finetoo_sp_spark.sources.sitemap import index_entries, parse_sitemaps
+from finetoo_sp_spark.sources.sitemap import parse_sitemaps
 
 SITEMAP = """<?xml version="1.0" encoding="UTF-8"?>
 <urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
@@ -43,19 +43,9 @@ def test_parse_fields(spark):
     assert b["lastmod"] is None and b["changefreq"] is None and b["priority_ppm"] is None
     # unparseable lastmod -> NULL (try-cast), row survives
     assert rows["https://h.example.com/c"]["lastmod"] is None
-
-
-def test_index_entries(spark):
-    df = spark.createDataFrame([Row(host="h", sitemap_xml=INDEX)])
-    locs = sorted(r["sitemap_loc"] for r in index_entries(df).collect())
-    assert locs == [
-        "https://h.example.com/sitemap-1.xml",
-        "https://h.example.com/sitemap-2.xml",
-    ]
-    # a urlset body yields no index entries and vice versa
-    df2 = spark.createDataFrame([Row(host="h", sitemap_xml=SITEMAP)])
-    assert index_entries(df2).count() == 0
-    assert parse_sitemaps(df).count() == 0
+    # a <sitemapindex> body yields no url rows
+    idx = spark.createDataFrame([Row(host="h", sitemap_xml=INDEX)])
+    assert parse_sitemaps(idx).count() == 0
 
 
 def test_sitemap_narrow_plan(spark):
