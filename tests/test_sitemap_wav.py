@@ -43,9 +43,22 @@ def test_parse_fields(spark):
     assert b["lastmod"] is None and b["changefreq"] is None and b["priority_ppm"] is None
     # unparseable lastmod -> NULL (try-cast), row survives
     assert rows["https://h.example.com/c"]["lastmod"] is None
+
+
+def test_index_entries(spark):
     # a <sitemapindex> body yields no url rows
     idx = spark.createDataFrame([Row(host="h", sitemap_xml=INDEX)])
     assert parse_sitemaps(idx).count() == 0
+    # beside a urlset body, the index's <sitemap><loc> children never leak in
+    mixed = spark.createDataFrame(
+        [Row(host="h", sitemap_xml=INDEX), Row(host="h", sitemap_xml=SITEMAP)]
+    )
+    locs = sorted(r["loc"] for r in parse_sitemaps(mixed).collect())
+    assert locs == [
+        "https://h.example.com/a",
+        "https://h.example.com/b",
+        "https://h.example.com/c",
+    ]
 
 
 def test_sitemap_narrow_plan(spark):
