@@ -17,10 +17,16 @@ from BASELINE.json.
 
 from __future__ import annotations
 
+import atexit
+import itertools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from finetoo_sp_spark.extraction.docpages import documents_to_pages
 from finetoo_sp_spark.extraction.extract import extract_pages
@@ -45,8 +51,16 @@ from finetoo_sp_spark.sources.curation import MAX_DF as _CURATION_MAX_DF
 # ---------------------------------------------------------------- helpers
 
 
+# table path -> its parquet schema, inferred once per process: inference
+# is a Spark job, and builders call T() for the same tables again and again
+_SCHEMAS: dict[str, StructType] = {}
+
+
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    if path not in _SCHEMAS:
+        _SCHEMAS[path] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[path]).parquet(path)
 
 
 def tpch_schema() -> Schema:
@@ -495,14 +509,42 @@ _SANITIZE_SQL = (
 )
 
 
-def _tmp_out(name: str) -> str:
-    import os
-    import shutil
-    import tempfile
+_ROOT: list[str] = []  # this process's staging root, made on first use
+_SEQ = itertools.count()
 
-    path = os.path.join(tempfile.gettempdir(), f"finetoo_q_{name}")
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+
+def _tmp_out(name: str) -> str:
+    """A fresh, not-yet-existing path for a query's build-time files,
+    under one root this process creates once and removes at exit — so
+    two harnesses, or two builds in one process, never share a path."""
+    if not _ROOT:
+        _ROOT.append(tempfile.mkdtemp(prefix="finetoo_q_"))
+        atexit.register(shutil.rmtree, _ROOT[0], True)
+    return os.path.join(_ROOT[0], f"{name}-{next(_SEQ)}")
+
+
+# the usual fixture-archive membership for _stage: four files by doc_id
+_FILE_ID = "CAST(doc_id % 4 AS INT) AS file_id"
+
+
+def _stage(df: DataFrame, name: str, suffix: str, encode: Callable) -> str:
+    """Write one fixture file per ``file_id`` group of ``df`` — the bytes
+    ``encode(pdf)`` returns for that group's rows in doc_id order — to
+    ``part-<file_id><suffix>`` in a fresh _tmp_out directory; one small
+    action drives the write. Returns the directory."""
+    import pandas as pd  # noqa: PLC0415
+
+    out = _tmp_out(name)
+    os.makedirs(out)
+
+    def write(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("doc_id")
+        with open(os.path.join(out, f"part-{int(pdf['file_id'].iloc[0])}{suffix}"), "wb") as f:
+            f.write(encode(pdf))
+        return pd.DataFrame({"n": [len(pdf)]})
+
+    df.groupBy("file_id").applyInPandas(write, "n long").collect()
+    return out
 
 
 def _blocks_cte(where: str = "doc_id >= 0") -> str:

@@ -5,7 +5,7 @@ warc_roundtrip proved the container parses; these two prove the two
 things a consumer of a real crawl additionally relies on:
 
 * ``cdx_index`` — gzip-member offset indexing with SURT keys
-  (sources/cdx.py). The query writes real .warc.gz archives (one gzip
+  (sources/cdx.py). The query stages real .warc.gz archives (one gzip
   member per record, Common Crawl layout), scans member bounds by
   streaming inflate, then fetches EVERY record back through its own
   (offset, length) slice — so the oracle-matched payload sha is also a
@@ -20,6 +20,9 @@ things a consumer of a real crawl additionally relies on:
   modes cycle by doc_id % 4; the oracle recomputes the decoded bytes'
   sha/length straight from the documents table, so a missed or
   misordered decode can't hash-match.
+
+Every query here writes its fixture archives through ``_core._stage``
+and keeps only the function that encodes one file's records.
 """
 
 from __future__ import annotations
@@ -31,7 +34,8 @@ from finetoo_sp_spark.contract._core import (
     T,
     _docpages_expected_sql,
     _q,
-    _tmp_out,
+    _FILE_ID,
+    _stage,
     documents_to_pages,
     extract_pages,
 )
@@ -115,19 +119,11 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality proves member order == write order, and the sha proves the
     (offset, length) handles decode to the right record."""
     import datetime as _dt
-    import os as _os
-
-    import pandas as pd  # noqa: PLC0415
 
     from finetoo_sp_spark.sources.cdx import read_cdx_entries, surt_key
     from finetoo_sp_spark.sources.warc import make_warc
 
-    docs = T(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    out = _tmp_out("cdx")
-    _os.makedirs(out, exist_ok=True)
-
-    def write(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def encode(pdf) -> bytes:
         recs = [
             (
                 _cdx_write_urls(int(r.doc_id), r.source),
@@ -136,18 +132,10 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for r in pdf.itertuples()
         ]
-        fid = int(pdf["file_id"].iloc[0])
-        with open(_os.path.join(out, f"part-{fid}.warc.gz"), "wb") as f:
-            f.write(make_warc(recs, gzip_members=True))
-        return pd.DataFrame({"n": [len(recs)]})
+        return make_warc(recs, gzip_members=True)
 
-    (
-        docs.withColumn("file_id", (F.col("doc_id") % 4).cast("int"))
-        .groupBy("file_id")
-        .applyInPandas(write, "n long")
-        .collect()
-    )
-    idx = read_cdx_entries(spark, out)
+    docs = T(spark, sf_dir, "documents").selectExpr("doc_id", "source", "text", _FILE_ID)
+    idx = read_cdx_entries(spark, _stage(docs, "cdx", ".warc.gz", encode))
     return idx.select(
         "filename",
         "rec_seq",
@@ -193,26 +181,22 @@ def q_zipnum_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship a split file), so the oracle can recompute every block's line
     count, key range, and the sha of its exact decompressed text; the
     read side decodes each block from its own member slice."""
-    import os as _os
-
     import pandas as pd  # noqa: PLC0415
 
     from finetoo_sp_spark.sources.cdx import pack_zipnum, read_zipnum_blocks
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "source")
-    out = _tmp_out("zipnum")
-    _os.makedirs(out, exist_ok=True)
-
     surt = F.concat(
         F.lit("com,example,"), "source", F.lit(")/doc/"),
         F.col("doc_id").cast("string"),
     )
     keyed = docs.select(
         "doc_id", "source", surt.alias("surt"),
-        F.when(surt < "com,example,src5", 0).otherwise(1).alias("pid"),
+        F.when(surt < "com,example,src5", 0).otherwise(1).alias("file_id"),
     )
 
-    def write(pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(pdf: pd.DataFrame) -> bytes:
+        pdf = pdf.sort_values("surt")
         ts14 = (
             pd.Timestamp("2024-01-01")
             + pd.to_timedelta(pdf["doc_id"], "s")
@@ -221,22 +205,9 @@ def q_zipnum_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id"
         ].astype(str)
         lines = (pdf["surt"] + " " + ts14 + " " + url).tolist()
-        order = pdf["surt"].argsort(kind="stable").tolist()
-        lines = [lines[i] for i in order]
-        blob, cluster = pack_zipnum(lines, block_size=100)
-        pid = int(pdf["pid"].iloc[0])
-        with open(_os.path.join(out, f"part-{pid}.zipnum.gz"), "wb") as f:
-            f.write(blob)
-        return pd.DataFrame(
-            [(pid, k, b, o, ln) for (k, b, o, ln) in cluster],
-            columns=["pid", "first_key", "block_no", "offset", "length"],
-        )
+        return pack_zipnum(lines, block_size=100)[0]
 
-    cluster_idx = keyed.groupBy("pid").applyInPandas(
-        write,
-        "pid int, first_key string, block_no long, offset long, length long",
-    )
-    cluster_idx.collect()  # drives the distributed write
+    out = _stage(keyed, "zipnum", ".zipnum.gz", encode)
     return read_zipnum_blocks(spark, out).select(
         "filename", "block_no", "n_lines", "first_key", "last_key", "block_sha"
     )
@@ -264,38 +235,25 @@ def q_http_transfer_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decoded payload's sha256 and byte length must equal the
     original text's on every mode."""
     import datetime as _dt
-    import hashlib as _hl
-    import os as _os
-
-    import pandas as pd  # noqa: PLC0415
 
     from finetoo_sp_spark.sources.warc import make_warc_transfer, read_warc_pages_http
 
     _MODES = ["plain", "chunked", "gzip", "chunked+gzip"]
-    docs = T(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    out = _tmp_out("httpenc")
-    _os.makedirs(out, exist_ok=True)
 
-    def write(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = [
-                (
-                    f"https://{r.source}.example.com/doc/{int(r.doc_id)}",
-                    _dt.datetime(2024, 1, 1) + _dt.timedelta(seconds=int(r.doc_id)),
-                    r.text.encode("utf-8"),
-                    _MODES[int(r.doc_id) % 4],
-                )
-                for r in pdf.itertuples()
-            ]
-            name = _hl.sha256(recs[0][0].encode()).hexdigest()[:16]
-            with open(_os.path.join(out, f"{name}.warc"), "wb") as f:
-                f.write(make_warc_transfer(recs))
-            yield pd.DataFrame({"n": [len(recs)]})
+    def encode(pdf) -> bytes:
+        recs = [
+            (
+                f"https://{r.source}.example.com/doc/{int(r.doc_id)}",
+                _dt.datetime(2024, 1, 1) + _dt.timedelta(seconds=int(r.doc_id)),
+                r.text.encode("utf-8"),
+                _MODES[int(r.doc_id) % 4],
+            )
+            for r in pdf.itertuples()
+        ]
+        return make_warc_transfer(recs)
 
-    docs.repartition(4).mapInPandas(write, "n long").collect()
-    pages = read_warc_pages_http(spark, out)
+    docs = T(spark, sf_dir, "documents").selectExpr("doc_id", "source", "text", _FILE_ID)
+    pages = read_warc_pages_http(spark, _stage(docs, "httpenc", ".warc", encode))
     doc_id = F.regexp_extract("url", "([0-9]+)$", 1).cast("long")
     return pages.select(
         "url",
@@ -336,21 +294,13 @@ def q_cdx_fetch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes ranged GETs; the plan shape (index join -> grouped spans ->
     per-file slice fetch) is unchanged."""
     import datetime as _dt
-    import os as _os
 
     import pandas as pd  # noqa: PLC0415
 
     from finetoo_sp_spark.sources.cdx import fetch_warc_record, read_cdx_entries
     from finetoo_sp_spark.sources.warc import make_warc
 
-    pages = documents_to_pages(T(spark, sf_dir, "documents"))
-    doc_id = F.regexp_extract("url", "([0-9]+)$", 1).cast("long")
-    pages = pages.select("url", "html", doc_id.alias("doc_id"))
-    out = _tmp_out("cdxfetch")
-    _os.makedirs(out, exist_ok=True)
-
-    def write(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def encode(pdf: pd.DataFrame) -> bytes:
         recs = [
             (
                 r.url,
@@ -359,17 +309,12 @@ def q_cdx_fetch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for r in pdf.itertuples()
         ]
-        fid = int(pdf["file_id"].iloc[0])
-        with open(_os.path.join(out, f"part-{fid}.warc.gz"), "wb") as f:
-            f.write(make_warc(recs, gzip_members=True))
-        return pd.DataFrame({"n": [len(recs)]})
+        return make_warc(recs, gzip_members=True)
 
-    (
-        pages.withColumn("file_id", (F.col("doc_id") % 4).cast("int"))
-        .groupBy("file_id")
-        .applyInPandas(write, "n long")
-        .collect()
-    )
+    pages = documents_to_pages(T(spark, sf_dir, "documents"))
+    doc_id = F.regexp_extract("url", "([0-9]+)$", 1).cast("long")
+    pages = pages.select("url", "html", doc_id.alias("doc_id"))
+    out = _stage(pages.selectExpr("*", _FILE_ID), "cdxfetch", ".warc.gz", encode)
 
     # the index job runs once per crawl; consumers only touch it
     idx = read_cdx_entries(spark, out).select("filename", "offset", "length", "url")

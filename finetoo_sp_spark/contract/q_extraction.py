@@ -2,6 +2,8 @@
 
 Split from the round-3 contract.py monolith (VERDICT r03 item 7);
 every query keeps its original name, Spark plan, and DuckDB twin.
+The two WARC-corpus queries stage their archives through
+``_core._stage``.
 """
 
 from __future__ import annotations
@@ -17,7 +19,8 @@ from finetoo_sp_spark.contract._core import (
     _docpages_expected_sql,
     _q,
     _EXTRACT_ORACLE,
-    _tmp_out,
+    _FILE_ID,
+    _stage,
 )
 
 
@@ -866,61 +869,47 @@ def q_warc_http_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shift_JIS: transport must win or the page mojibakes. Class 1 has a
     bare Content-Type (falls to meta), class 2 an UNKNOWN transport
     label (falls through, per spec), class 3 a BOM that outranks a
-    lying transport header. WARC written per-partition
+    lying transport header. WARC staged four files by doc_id
     (make_warc_http), read via read_warc_pages_http, decoded through
     decode_pages(http_charset_col=...)."""
-    import hashlib as _hl
-    import os as _os
-
-    import pandas as pd  # noqa: PLC0415
+    import datetime as _dt
 
     from finetoo_sp_spark.extraction.charset import decode_pages
     from finetoo_sp_spark.sources.warc import make_warc_http, read_warc_pages_http
 
-    docs = T(spark, sf_dir, "documents").select("doc_id", "source")
-    out = _tmp_out("warc_http_charset")
-    _os.makedirs(out, exist_ok=True)
+    cases = [
+        ("text/html; charset=shift_jis", '<meta charset="utf-8">',
+         "shift_jis", "page {i} \u30c6\u30b9\u30c8", b""),
+        ("text/html", '<meta charset="iso-8859-1">',
+         "windows-1252", "page {i} caf\u00e9", b""),
+        ("text/html; charset=x-future-enc", '<meta charset="Shift_JIS">',
+         "shift_jis", "page {i} \u30ab\u30ca", b""),
+        ('text/html; charset="iso-8859-1"', "",
+         "utf-8", "page {i} bom \u2713", b"\xef\xbb\xbf"),
+    ]
 
-    def write(batches):
-        import datetime as _dt
-
-        cases = [
-            ("text/html; charset=shift_jis", '<meta charset="utf-8">',
-             "shift_jis", "page {i} \u30c6\u30b9\u30c8", b""),
-            ("text/html", '<meta charset="iso-8859-1">',
-             "windows-1252", "page {i} caf\u00e9", b""),
-            ("text/html; charset=x-future-enc", '<meta charset="Shift_JIS">',
-             "shift_jis", "page {i} \u30ab\u30ca", b""),
-            ('text/html; charset="iso-8859-1"', "",
-             "utf-8", "page {i} bom \u2713", b"\xef\xbb\xbf"),
-        ]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = []
-            for r in pdf.itertuples():
-                i = int(r.doc_id)
-                ctype, meta, codec, body_t, bom = cases[i % 4]
-                body = (
-                    f"<html><head>{meta}</head><body>"
-                    + body_t.format(i=i)
-                    + "</body></html>"
+    def encode(pdf) -> bytes:
+        recs = []
+        for r in pdf.itertuples():
+            i = int(r.doc_id)
+            ctype, meta, codec, body_t, bom = cases[i % 4]
+            body = (
+                f"<html><head>{meta}</head><body>"
+                + body_t.format(i=i)
+                + "</body></html>"
+            )
+            recs.append(
+                (
+                    f"https://{r.source}.example.com/doc/{i}",
+                    _dt.datetime(2024, 1, 1),
+                    bom + body.encode(codec),
+                    ctype,
                 )
-                recs.append(
-                    (
-                        f"https://{r.source}.example.com/doc/{i}",
-                        _dt.datetime(2024, 1, 1),
-                        bom + body.encode(codec),
-                        ctype,
-                    )
-                )
-            name = _hl.sha256(str(sorted(u for u, *_ in recs)).encode()).hexdigest()[:16]
-            with open(_os.path.join(out, f"{name}.warc"), "wb") as f:
-                f.write(make_warc_http(recs))
-            yield pd.DataFrame({"n": [len(recs)]})
+            )
+        return make_warc_http(recs)
 
-    docs.repartition(4).mapInPandas(write, "n long").collect()
-    pages = read_warc_pages_http(spark, out)
+    docs = T(spark, sf_dir, "documents").selectExpr("doc_id", "source", _FILE_ID)
+    pages = read_warc_pages_http(spark, _stage(docs, "warc_http_charset", ".warc", encode))
     return decode_pages(
         pages, passthrough=("url",), http_charset_col="http_charset"
     )
@@ -1008,51 +997,33 @@ def q_http_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines — the repeated-header CDN form; RFC 9110 §5.3 makes them one
     comma-joined list, so the parser must accumulate, not overwrite).
     The src_http/src_meta columns attribute each gate for audits."""
-    import hashlib as _hl
-    import os as _os
-
-    import pandas as pd  # noqa: PLC0415
+    import datetime as _dt
 
     from finetoo_sp_spark.extraction.compliance import with_http_compliance
-    from finetoo_sp_spark.sources.warc import read_warc_pages_http
+    from finetoo_sp_spark.sources.warc import read_warc_pages_http, warc_record
 
-    docs = T(spark, sf_dir, "documents").select("doc_id", "source")
-    out = _tmp_out("http_robots_gate")
-    _os.makedirs(out, exist_ok=True)
+    cases = [
+        (["noindex"], ""),
+        ([], '<meta name="robots" content="nofollow">'),
+        (["NOINDEX"], '<meta name="robots" content="noai">'),
+        ([], '<meta name="robots" content="noindex">'),
+        ([], '<meta name="robots" content="noimageai">'),
+        (["noindex", "noai"], ""),
+    ]
 
-    def write(batches):
-        import datetime as _dt
+    def encode(pdf) -> bytes:
+        buf = []
+        for r in pdf.itertuples():
+            i = int(r.doc_id)
+            xr, meta = cases[i % 6]
+            url = f"https://{r.source}.example.com/doc/{i}"
+            body = f"<html><head>{meta}</head><body>page {i}</body></html>".encode()
+            headers = ["Content-Type: text/html", *(f"X-Robots-Tag: {tok}" for tok in xr)]
+            buf.append(warc_record("response", url, _dt.datetime(2024, 1, 1), headers, body))
+        return b"".join(buf)
 
-        from finetoo_sp_spark.sources.warc import warc_record
-
-        cases = [
-            (["noindex"], ""),
-            ([], '<meta name="robots" content="nofollow">'),
-            (["NOINDEX"], '<meta name="robots" content="noai">'),
-            ([], '<meta name="robots" content="noindex">'),
-            ([], '<meta name="robots" content="noimageai">'),
-            (["noindex", "noai"], ""),
-        ]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            buf = []
-            urls = []
-            for r in pdf.itertuples():
-                i = int(r.doc_id)
-                xr, meta = cases[i % 6]
-                url = f"https://{r.source}.example.com/doc/{i}"
-                urls.append(url)
-                body = f"<html><head>{meta}</head><body>page {i}</body></html>".encode()
-                headers = ["Content-Type: text/html", *(f"X-Robots-Tag: {tok}" for tok in xr)]
-                buf.append(warc_record("response", url, _dt.datetime(2024, 1, 1), headers, body))
-            name = _hl.sha256(str(sorted(urls)).encode()).hexdigest()[:16]
-            with open(_os.path.join(out, f"{name}.warc"), "wb") as f:
-                f.write(b"".join(buf))
-            yield pd.DataFrame({"n": [len(buf)]})
-
-    docs.repartition(4).mapInPandas(write, "n long").collect()
-    pages = read_warc_pages_http(spark, out)
+    docs = T(spark, sf_dir, "documents").selectExpr("doc_id", "source", _FILE_ID)
+    pages = read_warc_pages_http(spark, _stage(docs, "http_robots_gate", ".warc", encode))
     return with_http_compliance(pages).select(
         "url", "noindex", "nofollow", "noai", "src_http", "src_meta"
     )

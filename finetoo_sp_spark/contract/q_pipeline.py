@@ -2,6 +2,11 @@
 
 Split from the round-3 contract.py monolith (VERDICT r03 item 7);
 every query keeps its original name, Spark plan, and DuckDB twin.
+
+The WARC queries stage their archives through ``_core._stage``. The
+round-trip queries' own writes (sinks, lineage, tables, WET/WAT) are
+declared staging too: they run at build time into fresh
+``_core._tmp_out`` paths, and the returned plan reads them back.
 """
 
 from __future__ import annotations
@@ -20,6 +25,8 @@ from finetoo_sp_spark.contract._core import (
     _STOP_LIST_SQL,
     _SANITIZE_SQL,
     _tmp_out,
+    _FILE_ID,
+    _stage,
     _snapshot_b,
     _CURATION_MAX_DF,
     _CURATION_JACCARD,
@@ -317,39 +324,23 @@ def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-kernel parser, and every record's url / WARC-Date / payload
     sha must match the oracle's recomputation — the archive format
     itself is the thing under test."""
-    import hashlib as _hl
-    import os as _os
-
-    import pandas as pd  # noqa: PLC0415
+    import datetime as _dt
 
     from finetoo_sp_spark.sources.warc import make_warc, read_warc_pages
 
-    docs = T(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    out = _tmp_out("warc")
-    _os.makedirs(out, exist_ok=True)
+    def encode(pdf) -> bytes:
+        recs = [
+            (
+                f"https://{r.source}.example.com/doc/{int(r.doc_id)}",
+                _dt.datetime(2024, 1, 1) + _dt.timedelta(seconds=int(r.doc_id)),
+                r.text.encode("utf-8"),
+            )
+            for r in pdf.itertuples()
+        ]
+        return make_warc(recs, gzip_members=True)
 
-    def write(batches):
-        import datetime as _dt
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            recs = [
-                (
-                    f"https://{r.source}.example.com/doc/{int(r.doc_id)}",
-                    _dt.datetime(2024, 1, 1) + _dt.timedelta(seconds=int(r.doc_id)),
-                    r.text.encode("utf-8"),
-                )
-                for r in pdf.itertuples()
-            ]
-            name = _hl.sha256(recs[0][0].encode()).hexdigest()[:16]
-            with open(_os.path.join(out, f"{name}.warc.gz"), "wb") as f:
-                f.write(make_warc(recs, gzip_members=True))
-            yield pd.DataFrame({"n": [len(recs)]})
-
-    # tiny action (one count row per file) drives the distributed write
-    docs.repartition(4).mapInPandas(write, "n long").collect()
-    pages = read_warc_pages(spark, out)
+    docs = T(spark, sf_dir, "documents").selectExpr("doc_id", "source", "text", _FILE_ID)
+    pages = read_warc_pages(spark, _stage(docs, "warc", ".warc.gz", encode))
     return pages.select("url", "warc_ts", F.sha2("html", 256).alias("payload_sha"))
 
 
@@ -393,9 +384,6 @@ def q_warc_revisit_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     responses pass through map-side."""
     import datetime as _dt
     import hashlib as _hl
-    import os as _os
-
-    import pandas as pd  # noqa: PLC0415
 
     from finetoo_sp_spark.sources.warc import make_warc_mixed, read_warc_resolved
 
@@ -405,14 +393,9 @@ def q_warc_revisit_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").alias("prev_text"),
         F.col("source").alias("prev_source"),
     )
-    staged = docs.join(prev, "doc_id", "left").withColumn(
-        "file_id", (F.col("doc_id") % 4).cast("int")
-    )
-    out = _tmp_out("warc_revisit")
-    _os.makedirs(out, exist_ok=True)
+    staged = docs.join(prev, "doc_id", "left").selectExpr("*", _FILE_ID)
 
-    def write(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def encode(pdf) -> bytes:
         t0 = _dt.datetime(2024, 1, 1)
         recs = []
         for r in pdf.itertuples():
@@ -438,13 +421,9 @@ def q_warc_revisit_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "sha256:" + digest,
                 )
             )
-        fid = int(pdf["file_id"].iloc[0])
-        with open(_os.path.join(out, f"part-{fid}.warc.gz"), "wb") as f:
-            f.write(make_warc_mixed(recs, gzip_members=True))
-        return pd.DataFrame({"n": [len(recs)]})
+        return make_warc_mixed(recs, gzip_members=True)
 
-    staged.groupBy("file_id").applyInPandas(write, "n long").collect()
-    pages = read_warc_resolved(spark, out)
+    pages = read_warc_resolved(spark, _stage(staged, "warc_revisit", ".warc.gz", encode))
     return pages.select(
         "url",
         "warc_ts",

@@ -128,7 +128,7 @@ SELECT pc.user_id, CAST(max(pc.true_cnt) AS BIGINT) AS true_cnt,
 FROM pc LEFT JOIN sk ON sk.row = pc.row AND sk.col = pc.col
 GROUP BY pc.user_id""",
     audit=[
-        ("probe side broadcast to the tiny sketch", r"BroadcastHashJoin"),
+        ("the tiny sketch is broadcast to the probes", r"BroadcastHashJoin"),
         ("partial aggregation", r"HashAggregate"),
     ],
 )

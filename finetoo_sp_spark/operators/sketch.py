@@ -143,8 +143,8 @@ def cms_sketch(df: DataFrame, key_col: str, w: int = 256) -> DataFrame:
 def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str, w: int = 256) -> DataFrame:
     """(key, est_cnt) — point-query the sketch for each probe key:
     min over the CMS_DEPTH cells the key hashes to. est >= true always
-    (one-sided error); probes are dimension-sized and broadcast, the
-    sketch itself is at most CMS_DEPTH*w rows — no large shuffle anywhere.
+    (one-sided error); the sketch is at most CMS_DEPTH*w rows and is
+    broadcast to the probes — no large shuffle anywhere.
     """
     coords = probes.select(
         F.col(key_col).alias("key"),
@@ -162,7 +162,7 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str, w: int = 25
             )
         ).alias("cell"),
     ).select("key", "cell.row", "cell.col")
-    joined = F.broadcast(coords).join(sketch, ["row", "col"], "left").fillna(0, ["cnt"])
+    joined = coords.join(F.broadcast(sketch), ["row", "col"], "left").fillna(0, ["cnt"])
     return joined.groupBy("key").agg(F.min("cnt").alias("est_cnt"))
 
 

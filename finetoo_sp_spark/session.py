@@ -43,6 +43,9 @@ def get_spark(
     cpus = local_cpus()
     if master == _ENV_DEFAULT:
         master = f"local[{cpus}]"
+    # a quarter of physical memory, capped at 16g, so that two harnesses
+    # fit on one host
+    heap_mb = min(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 22, 16 << 10)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -52,7 +55,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m"))
         # High-thread-count local mode stalls on G1's GCLocker: Arrow /
         # compression JNI critical sections block young-gen GC and tasks
         # fail with "Retried waiting for GCLocker too often". Parallel GC

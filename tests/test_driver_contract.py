@@ -316,6 +316,7 @@ _TEST_ONLY = {
     "extraction.dxf:parse_dxf_blocks": "parity with the reference parse_dxf report (its file.blocks)",
     "extraction.dxf:dxf_version": "parity with the reference parse_dxf report (its $ACADVER header)",
     "sources.catalog:read_table": "seam: the read half of the Iceberg-or-parquet catalog a cluster deployment swaps in",
+    "sources.catalog:write_table": "seam: the write half of the Iceberg-or-parquet catalog",
     "sources.cdx:zipnum_lookup": "seam: the lookup side of the ZipNum index that read_zipnum_blocks scans",
     "extraction.fields:register_field_schema": "seam: installs field rules into the schema registry operator discovery reads",
 }
@@ -330,44 +331,62 @@ def test_every_definition_is_reached_from_an_entry_point():
     and session.get_spark. Reachability closes over names: a Name or an
     Attribute.attr equal to a definition's name uses every definition of
     that name, and a reached definition uses every name in its body,
-    decorators and defaults. An import alone is not a use. A _TEST_ONLY
+    decorators and defaults. An import alone is not a use, nor is an
+    Attribute.attr whose base is a name the file binds by importing from
+    outside finetoo_sp_spark (``pq.write_table`` is pyarrow's). A _TEST_ONLY
     entry that no longer exists or that an entry point now reaches is
     stale and fails too."""
     trees = _source_trees()
     pkg = ROOT / "finetoo_sp_spark"
 
-    def names(node):
+    def library_names(tree):
+        """Names the file binds by importing from outside finetoo_sp_spark."""
+        out = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                out |= {
+                    a.asname or a.name.split(".")[0]
+                    for a in n.names
+                    if a.name.split(".")[0] != "finetoo_sp_spark"
+                }
+            elif isinstance(n, ast.ImportFrom) and n.level == 0 and n.module.split(".")[0] != "finetoo_sp_spark":
+                out |= {a.asname or a.name for a in n.names}
+        return out
+
+    def names(node, lib):
         return {
             n.id if isinstance(n, ast.Name) else n.attr
             for n in ast.walk(node)
-            if isinstance(n, (ast.Name, ast.Attribute))
+            if isinstance(n, ast.Name)
+            or (isinstance(n, ast.Attribute) and getattr(n.value, "id", None) not in lib)
         }
 
-    defs = {}  # "module:name" -> node
+    defs = {}  # "module:name" -> (node, its file's library names)
     roots = {"get_spark"}
     for p, tree in trees.items():
         rel = p.relative_to(ROOT)
+        lib = library_names(tree)
         if pkg in p.parents:
             mod = ".".join(rel.with_suffix("").parts[1:])
             for st in tree.body:
                 if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                    defs[f"{mod}:{st.name}"] = st
+                    defs[f"{mod}:{st.name}"] = (st, lib)
                     if any(
                         isinstance(d, ast.Call) and getattr(d.func, "id", None) == "_q"
                         for d in st.decorator_list
                     ):
                         roots.add(st.name)
                 else:
-                    roots |= names(st)
+                    roots |= names(st, lib)
         elif (
             (rel.parts[0] == "tools" and len(rel.parts) == 2)
             or str(rel) in ("bench.py", "__spark_entry__.py")
             or (rel.parts[0] == "extbench" and not rel.name.startswith("test_"))
         ):
-            roots |= names(tree)
+            roots |= names(tree, lib)
 
     by_name = {}
-    for key, st in defs.items():
+    for key, (st, _lib) in defs.items():
         by_name.setdefault(st.name, []).append(key)
 
     def reached(start):
@@ -378,7 +397,7 @@ def test_every_definition_is_reached_from_an_entry_point():
                 seen.add(n)
                 for key in by_name.get(n, []):
                     out.add(key)
-                    todo.extend(names(defs[key]))
+                    todo.extend(names(*defs[key]))
         return out
 
     from_entries = reached(roots)
