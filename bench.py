@@ -126,12 +126,9 @@ def main() -> None:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     prod = {
         "dedup_minhash_lsh_prod": lambda: dd.minhash_lsh_pairs(
-            docs.filter(F.col("doc_id") < 150), "doc_id", "text",
-            n=3, k=32, bands=8, threshold=0.12,
+            docs.filter(F.col("doc_id") < 150), "doc_id", "text", threshold=0.12
         ),
-        "dedup_simhash_prod": lambda: dd.simhash_pairs(
-            docs, "doc_id", "text", max_hamming=3
-        ),
+        "dedup_simhash_prod": lambda: dd.simhash_pairs(docs, "doc_id", "text"),
     }
     for _ in range(reps):
         for name, fn in prod.items():

@@ -34,6 +34,9 @@ from finetoo_sp_spark.operators import dedup as dd
 from finetoo_sp_spark.operators import similarity as sim
 from finetoo_sp_spark.operators import textstats as ts
 from finetoo_sp_spark.operators import windows as ev
+from finetoo_sp_spark.operators.pagerank import DAMP_NUM as RANK_DAMP_NUM
+from finetoo_sp_spark.operators.pagerank import ROUNDS as RANK_ROUNDS
+from finetoo_sp_spark.operators.pagerank import SCALE as RANK_SCALE
 from finetoo_sp_spark.operators.primitives import (
     PropertyGraphFrames,
     op_aggregate,
@@ -206,7 +209,7 @@ def _shingle_ctes(where: str, src: str = "documents") -> str:
 
 
 def _jaccard_sql(where: str, threshold: float, max_df: int | None = None) -> str:
-    """Oracle twin of dd.ngram_jaccard_pairs(n=3): shingle inverted-index
+    """Oracle twin of dd.ngram_jaccard_pairs (3-word shingles): shingle inverted-index
     self-join; with ``max_df``, the same stop-shingle pruning (index
     pruned, union sizes from the UNPRUNED sets — matching the Spark
     implementation exactly)."""
@@ -603,61 +606,29 @@ def _snapshot_b(docs: DataFrame) -> DataFrame:
 _CURATION_JACCARD = _jaccard_sql("doc_id >= 0", 0.5, max_df=_CURATION_MAX_DF)
 
 
-def _pagerank_oracle(iterations: int) -> str:
-    """Unrolled fixed-point PageRank twin (recursive CTEs can't hold the
-    per-round aggregation, so the rounds unroll as chained CTEs). The
-    edge rule is the docpages parent-link rule, as in the traverse
-    oracle; integer fixed-point makes every round exactly portable."""
-    scale, damp = 1_000_000_000, 85
-    base = (100 - damp) * scale // 100
-    ctes = [f"r0 AS (SELECT id, CAST({scale} AS BIGINT) AS rank_fp FROM nodes)"]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""r{i} AS (
-  SELECT n.id, {base} + ({damp} * COALESCE(s.s, 0)) // 100 AS rank_fp
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS id, sum(r.rank_fp // d.deg) AS s
-    FROM e JOIN deg d USING (src) JOIN r{i - 1} r ON r.id = e.src
-    GROUP BY e.dst) s ON s.id = n.id)"""
-        )
-    return f"""
-WITH u AS (
-  SELECT doc_id,
-    'https://src' || CAST(doc_id % 20 AS VARCHAR) || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents
-),
-e AS (
-  SELECT DISTINCT s.url AS src, t.url AS dst
-  FROM u s JOIN u t
-    ON t.doc_id IN (CAST(floor(s.doc_id / 2) AS BIGINT), CAST(floor(s.doc_id / 3) AS BIGINT))
-),
-deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-{",".join(ctes)}
-SELECT id AS url, CAST(rank_fp AS BIGINT) AS rank_fp FROM r{iterations}"""
-
-
-def _trustrank_oracle(iterations: int) -> str:
-    """Unrolled fixed-point TrustRank twin: the pagerank oracle's CTE
-    chain with the uniform teleport replaced by a seed-biased static
-    base (seed hosts src0..src3 <=> doc_id % 20 < 4 — the same rule the
-    Spark query applies by URL prefix). Round 0 is the pure seed
-    vector; each round is base + 85% of the propagated trust."""
-    scale, damp = 1_000_000_000, 85
-    base = (100 - damp) * scale // 100
+def _rank_oracle(seeds: str, rank_col: str) -> str:
+    """Unrolled fixed-point PageRank twin, seed-biased as TrustRank
+    (recursive CTEs can't hold the per-round aggregation, so the rounds
+    unroll as chained CTEs). ``seeds`` selects the seed ``id``s; PageRank
+    seeds every node. The edge rule is the docpages parent-link rule, as
+    in the traverse oracle. Round 0 is base * 100 // (100 - damp) per
+    seed (SCALE when every node is seeded); each round is base + damp% of
+    the propagated rank. Integer fixed-point makes every round exactly
+    portable."""
+    base = (100 - RANK_DAMP_NUM) * RANK_SCALE // 100
     ctes = [
         f"""nb AS MATERIALIZED (
   SELECT n.id,
     CASE WHEN s.id IS NOT NULL THEN CAST({base} AS BIGINT) ELSE CAST(0 AS BIGINT) END AS base_fp
   FROM nodes n LEFT JOIN seeds s ON s.id = n.id)""",
-        f"t0 AS MATERIALIZED (SELECT id, CAST((base_fp * 100) // {100 - damp} AS BIGINT) AS trust_fp FROM nb)",
+        f"t0 AS MATERIALIZED (SELECT id, CAST((base_fp * 100) // {100 - RANK_DAMP_NUM} AS BIGINT) AS rank_fp FROM nb)",
     ]
-    for i in range(1, iterations + 1):
+    for i in range(1, RANK_ROUNDS + 1):
         ctes.append(
             f"""t{i} AS MATERIALIZED (
-  SELECT n.id, CAST(n.base_fp + ({damp} * COALESCE(s.s, 0)) // 100 AS BIGINT) AS trust_fp
+  SELECT n.id, CAST(n.base_fp + ({RANK_DAMP_NUM} * COALESCE(s.s, 0)) // 100 AS BIGINT) AS rank_fp
   FROM nb n LEFT JOIN (
-    SELECT e.dst AS id, sum(t.trust_fp // d.deg) AS s
+    SELECT e.dst AS id, sum(t.rank_fp // d.deg) AS s
     FROM e JOIN deg d USING (src) JOIN t{i - 1} t ON t.id = e.src
     GROUP BY e.dst) s ON s.id = n.id)"""
         )
@@ -674,9 +645,9 @@ e AS MATERIALIZED (
 ),
 deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
 nodes AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-seeds AS (SELECT url AS id FROM u WHERE doc_id % 20 < 4),
+seeds AS ({seeds}),
 {",".join(ctes)}
-SELECT id AS url, trust_fp FROM t{iterations}"""
+SELECT id AS url, rank_fp AS {rank_col} FROM t{RANK_ROUNDS}"""
 
 
 def _hits_oracle(iterations: int) -> str:

@@ -99,7 +99,7 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 2 == 0, F.lit("#frag")).otherwise(F.lit("")),
     )
     messy = d.select(F.col("doc_id").alias("id"), url.alias("url"))
-    return canonicalize_urls(messy, "url", "url_canon")
+    return canonicalize_urls(messy)
 
 
 @_q(

@@ -56,7 +56,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return dd.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.05)
+    return dd.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.05)
 
 
 @_q(
@@ -81,7 +81,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.operators.components import connected_components
 
     docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    pairs = dd.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.05)
+    pairs = dd.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.05)
     return connected_components(pairs)
 
 
@@ -99,9 +99,7 @@ def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified Jaccard exactly. Production keeps hash_mode='xxhash64'
     (same plan shape, faster hash)."""
     docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return dd.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, k=32, bands=8, threshold=0.12, hash_mode="sha"
-    )
+    return dd.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.12, hash_mode="sha")
 
 
 @_q(
@@ -129,8 +127,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
     return dd.minhash_lsh_pairs_between(
-        old, upd.unionByName(fresh), "doc_id", "text",
-        n=3, k=32, bands=8, threshold=0.5, hash_mode="sha",
+        old, upd.unionByName(fresh), "doc_id", "text", threshold=0.5, hash_mode="sha"
     )
 
 
@@ -144,9 +141,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash banded near-dup under a FULL value oracle (60-bit 'sha'
     fingerprint mode; production uses the 64-bit xxhash64 mode)."""
-    return dd.simhash_pairs(
-        T(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=3, hash_mode="sha"
-    )
+    return dd.simhash_pairs(T(spark, sf_dir, "documents"), "doc_id", "text", hash_mode="sha")
 
 
 @_q(
@@ -167,8 +162,7 @@ def q_minhash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no salting — output identity is the check."""
     corpus = _template_heavy_corpus(spark, sf_dir)
     return dd.minhash_lsh_pairs(
-        corpus, "doc_id", "text", n=3, k=32, bands=8, threshold=0.12,
-        bucket_cap=16, hash_mode="sha",
+        corpus, "doc_id", "text", threshold=0.12, bucket_cap=16, hash_mode="sha"
     )
 
 
@@ -186,9 +180,7 @@ def q_simhash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncapped banding SQL: output identity proves the split drops and
     duplicates nothing."""
     corpus = _template_heavy_corpus(spark, sf_dir)
-    return dd.simhash_pairs(
-        corpus, "doc_id", "text", max_hamming=3, bucket_cap=16, hash_mode="sha"
-    )
+    return dd.simhash_pairs(corpus, "doc_id", "text", bucket_cap=16, hash_mode="sha")
 
 
 @_q(
@@ -244,9 +236,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("bench_id"),
         F.substring("text", 1, 200).alias("btext"),
     )
-    return dd.contamination_flags(
-        docs, benchmarks, "doc_id", "text", "bench_id", "btext", n=13
-    )
+    return dd.contamination_flags(docs, benchmarks, "doc_id", "text", "bench_id", "btext")
 
 
 @_q(
@@ -325,14 +315,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bucket equi-join + anti-join, no cross join."""
     from finetoo_sp_spark.operators import clustering as cl
 
-    return cl.semdedup_survivors(
-        T(spark, sf_dir, "embeddings"),
-        "vec_id",
-        "embedding",
-        k=4,
-        threshold=0.4,
-        n_bits=8,
-    )
+    return cl.semdedup_survivors(T(spark, sf_dir, "embeddings"), "vec_id", "embedding")
 
 
 @_q(
@@ -483,7 +466,7 @@ def q_dedup_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, never a global sort. Oracle recomputes every window hash."""
     from finetoo_sp_spark.operators.substrdedup import window_dup_stats
 
-    return window_dup_stats(_win_corpus(spark, sf_dir), k=8, hash_mode="sha")
+    return window_dup_stats(_win_corpus(spark, sf_dir), hash_mode="sha")
 
 
 @_q(
@@ -533,7 +516,7 @@ def q_dedup_window_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tails; byte-exact clean_text checked by the oracle."""
     from finetoo_sp_spark.operators.substrdedup import remove_duplicate_windows
 
-    return remove_duplicate_windows(_win_corpus(spark, sf_dir), k=8, hash_mode="sha")
+    return remove_duplicate_windows(_win_corpus(spark, sf_dir), hash_mode="sha")
 
 
 @_q(
@@ -594,9 +577,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") % 5).cast("string"),
         ).alias("text"),
     )
-    out = dd.host_boilerplate_strip(
-        corpus, "doc_id", "source", "text", min_host_docs=3, max_ratio_fp=5000
-    )
+    out = dd.host_boilerplate_strip(corpus, "doc_id", "source", "text")
     return out.select(F.col("id").alias("doc_id"), "text", "n_removed")
 
 
@@ -733,9 +714,7 @@ def q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle before the per-doc aggregate."""
     from finetoo_sp_spark.operators.cdc import cdc_chunks
 
-    chunks = cdc_chunks(
-        _win_corpus(spark, sf_dir), window=4, divisor=16, hash_mode="sha"
-    )
+    chunks = cdc_chunks(_win_corpus(spark, sf_dir), hash_mode="sha")
     return chunks.groupBy("id", "n_tokens").agg(
         F.count(F.lit(1)).alias("n_chunks"),
         F.max("chunk_tokens").alias("max_chunk_tokens"),

@@ -152,9 +152,7 @@ def q_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in range(20)
     }
-    return mix_epoch_weights(
-        T(spark, sf_dir, "documents"), "doc_id", "source", weights, hash_mode="sha"
-    )
+    return mix_epoch_weights(T(spark, sf_dir, "documents"), "doc_id", "source", weights)
 
 
 @_q(
@@ -247,7 +245,7 @@ def q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-ppm pad fraction. Dimension-sized output."""
     from finetoo_sp_spark.operators.packing import length_buckets
 
-    return length_buckets(T(spark, sf_dir, "documents"), "doc_id", "text", width=64)
+    return length_buckets(T(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @_q(
@@ -431,7 +429,4 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     all integer arithmetic. Upstream planner for mix_epochs."""
     from finetoo_sp_spark.operators.packing import temperature_mix
 
-    return temperature_mix(
-        T(spark, sf_dir, "documents"), "doc_id", "source",
-        alpha_quarters=2, budget_docs=1000,
-    )
+    return temperature_mix(T(spark, sf_dir, "documents"), "doc_id", "source")

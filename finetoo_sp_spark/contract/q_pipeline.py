@@ -30,7 +30,7 @@ from finetoo_sp_spark.contract._core import (
     _snapshot_b,
     _CURATION_MAX_DF,
     _CURATION_JACCARD,
-    _pagerank_oracle,
+    _rank_oracle,
     _SHA60_ID,
     _curation_v2_oracle,
 )
@@ -282,9 +282,7 @@ def q_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = T(spark, sf_dir, "documents")
     quality = ts.quality_scores(docs, "doc_id", "text").filter(F.col("keep"))
-    pairs = dd.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5, max_df=_CURATION_MAX_DF
-    )
+    pairs = dd.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5, max_df=_CURATION_MAX_DF)
     keep = dedup_keep_list(pairs, docs.select(F.col("doc_id").alias("id")))
     return (
         quality.join(keep.filter(F.col("keep")), quality.id == keep.id, "left_semi")
@@ -292,7 +290,7 @@ def q_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("pagerank_links", _pagerank_oracle(5))
+@_q("pagerank_links", _rank_oracle("SELECT id FROM nodes", "rank_fp"))
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-authority prior for corpus curation: 5 rounds of fixed-point
     PageRank over the REAL extracted LINKS_TO graph. Integer fixed-point

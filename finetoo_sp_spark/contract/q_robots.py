@@ -257,7 +257,7 @@ def q_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("robots_txt"),
     )
     delays = crawl_delays(robots).filter(F.col("agent") == "*")
-    out = frontier_schedule(frontier, delays, default_delay_s=1, budget_s=120)
+    out = frontier_schedule(frontier, delays, budget_s=120)
     return out.select(
         "url", "host",
         F.col("priority").cast("long").alias("priority"),

@@ -61,7 +61,7 @@ QUALIFY rank <= 5""",
 )
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings")
-    return sim.ann_lsh_bucketed(emb, emb.filter(F.col("vec_id") < 5), k=5, n_bits=8)
+    return sim.ann_lsh_bucketed(emb, emb.filter(F.col("vec_id") < 5))
 
 
 @_q(
@@ -170,9 +170,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     update shuffles only k*dims groups."""
     from finetoo_sp_spark.operators import clustering as cl
 
-    return cl.kmeans_assign(
-        T(spark, sf_dir, "embeddings"), "vec_id", "embedding", k=4, iters=2
-    )
+    return cl.kmeans_assign(T(spark, sf_dir, "embeddings"), "vec_id", "embedding")
 
 
 @_q(
@@ -223,7 +221,6 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         F.col("source") == "src0",
-        n_buckets=256,
     )
 
 
@@ -368,9 +365,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrdered), never a full sort."""
     from finetoo_sp_spark.operators.retrieval import bm25_topk
 
-    return bm25_topk(
-        T(spark, sf_dir, "documents"), "doc_id", "text", list(_BM25_TERMS), k=10
-    )
+    return bm25_topk(T(spark, sf_dir, "documents"), "doc_id", "text", list(_BM25_TERMS))
 
 
 @_q(
@@ -420,16 +415,16 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- IVF-PQ
 
-def _pq_oracle_ctes(m: int = 4, ksub: int = 4, dims: int = 64,
-                    nlist: int = 4, nprobe: int = 2,
-                    query_ids: str = "0, 1, 2") -> str:
+def _pq_oracle_ctes() -> str:
     """DuckDB twin of operators/pq.py, generated for the contract
-    parameters: fixed-point lift, per-subspace codebooks (init = the
-    ksub smallest ids' sub-vectors, one sum-div-count update, argmin
-    re-assignment with ties to the lowest centroid id), IVF coarse
-    k-means (the _KMEANS_CTE discipline), query probes and per-subspace
-    ADC tables. Every CTE that is referenced more than once is
+    parameters (m subspaces of ksub centroids over dims-wide vectors,
+    nlist IVF cells, nprobe probed per query): fixed-point lift,
+    per-subspace codebooks (init = the ksub smallest ids' sub-vectors,
+    one sum-div-count update, argmin re-assignment with ties to the
+    lowest centroid id), IVF coarse k-means (the _KMEANS_CTE
+    discipline), query probes and per-subspace ADC tables. Every CTE that is referenced more than once is
     MATERIALIZED (chained-CTE inlining is exponential otherwise)."""
+    m, ksub, dims, nlist, nprobe, query_ids = 4, 4, 64, 4, 2, "0, 1, 2"
     sub = dims // m
     parts = [
         "e AS MATERIALIZED (SELECT vec_id, list_transform(embedding,"
@@ -610,7 +605,7 @@ def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ADC distance."""
     from finetoo_sp_spark.operators.pq import ann_ivf_pq_topk
 
-    return ann_ivf_pq_topk(T(spark, sf_dir, "embeddings"), [0, 1, 2], k=10)
+    return ann_ivf_pq_topk(T(spark, sf_dir, "embeddings"), [0, 1, 2])
 
 
 @_q("ann_ivf_pq_recall", _IVF_PQ_RECALL_ORACLE)
@@ -621,4 +616,4 @@ def q_ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the oracle (both rankings are integer-deterministic)."""
     from finetoo_sp_spark.operators.pq import ivf_pq_recall
 
-    return ivf_pq_recall(T(spark, sf_dir, "embeddings"), [0, 1, 2], k=10)
+    return ivf_pq_recall(T(spark, sf_dir, "embeddings"), [0, 1, 2])

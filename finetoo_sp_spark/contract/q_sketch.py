@@ -140,14 +140,14 @@ def q_cms_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from finetoo_sp_spark.operators.sketch import cms_estimate, cms_sketch
 
     ev = T(spark, sf_dir, "events")
-    sk = cms_sketch(ev, "user_id", w=256)
+    sk = cms_sketch(ev, "user_id")
     probes = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("true_cnt"))
         .orderBy(F.col("true_cnt").desc(), F.col("user_id"))
         .limit(10)
     )
-    est = cms_estimate(sk, probes, "user_id", w=256)
+    est = cms_estimate(sk, probes, "user_id")
     return (
         probes.join(est, probes.user_id == est.key)
         .select("user_id", F.col("true_cnt").cast("long"), F.col("est_cnt").cast("long"))

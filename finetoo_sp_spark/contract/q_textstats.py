@@ -118,7 +118,7 @@ SELECT id, term, tf, df, round(score, 6) AS score, rk FROM r WHERE rk <= 5""",
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc top-5 TF-IDF terms (ratio-idf mode: exact integer-ratio
     arithmetic, cross-engine reproducible — the log variant is a flag)."""
-    return ts.tfidf_top_terms(T(spark, sf_dir, "documents"), "doc_id", "text", k=5)
+    return ts.tfidf_top_terms(T(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @_q(
@@ -357,10 +357,7 @@ def q_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg; with a trained weight table it is a broadcast probe."""
     from finetoo_sp_spark.operators.classifier import hashed_linear_scores
 
-    return hashed_linear_scores(
-        T(spark, sf_dir, "documents"), "doc_id", "text",
-        n_buckets=1 << 16, threshold_fp=0,
-    )
+    return hashed_linear_scores(T(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @_q(
@@ -668,7 +665,7 @@ SELECT pair, CAST(sum(n) AS BIGINT) AS cnt
 FROM p GROUP BY pair ORDER BY cnt DESC, pair LIMIT 30""",
 )
 def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.bpe_pair_counts(T(spark, sf_dir, "documents"), "text", k=30)
+    return ts.bpe_pair_counts(T(spark, sf_dir, "documents"), "text")
 
 
 @_q(

@@ -462,7 +462,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         start_col="trial_start",
         end_col="trial_end",
         by="user_id",
-        bucket_seconds=21600,
     )
     return out.select(
         "event_id", "user_id", "ts", "event_type", "trial_start", "trial_end"

@@ -15,7 +15,7 @@ from finetoo_sp_spark.contract._core import (
     T,
     _q,
     _hits_oracle,
-    _trustrank_oracle,
+    _rank_oracle,
 )
 
 
@@ -94,7 +94,7 @@ FROM u GROUP BY host""",
 def q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host rollup through the salted two-phase aggregation
     (operators/skew.py) — identical results to a naive groupBy, but the
-    reduce-side hot key is split n_salts ways."""
+    reduce-side hot key is split N_SALTS (16) ways."""
     from finetoo_sp_spark.operators.skew import salted_agg
 
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
@@ -112,7 +112,6 @@ def q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_chars": (F.sum("n_chars"), "sum"),
             "first_doc": (F.min("doc_id"), "min"),
         },
-        n_salts=16,
         salt_on="doc_id",
     )
 
@@ -165,7 +164,9 @@ def q_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "trustrank_scores",
-    _trustrank_oracle(5),
+    # seed hosts src0..src3 <=> doc_id % 20 < 4, the set the Spark query
+    # selects by URL prefix
+    _rank_oracle("SELECT url AS id FROM u WHERE doc_id % 20 < 4", "trust_fp"),
     audit=[
         ("seed membership folded in via broadcast join", r"BroadcastHashJoin"),
         ("per-iteration partial aggregation", r"HashAggregate"),
@@ -180,7 +181,7 @@ def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     when their raw PageRank is high — the (rank, trust) pair yields
     spam mass. Integer fixed point keeps every round exactly portable."""
     from finetoo_sp_spark.extraction.graph import build_web_graph
-    from finetoo_sp_spark.operators.trustrank import trustrank_fixed_point
+    from finetoo_sp_spark.operators.pagerank import pagerank_fixed_point
 
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
     g = build_web_graph(pages)
@@ -188,8 +189,8 @@ def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = pages.where(
         F.regexp_extract("url", r"^https://src(\d+)\.", 1).cast("int") < 4
     ).select(F.col("url").alias("id"))
-    return trustrank_fixed_point(edges, seeds, iterations=5).select(
-        F.col("id").alias("url"), "trust_fp"
+    return pagerank_fixed_point(edges, seeds).select(
+        F.col("id").alias("url"), F.col("rank_fp").alias("trust_fp")
     )
 
 
@@ -217,7 +218,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
     g = build_web_graph(pages)
     edges = g.edges.filter(F.col("edge_type") == "LINKS_TO")
-    return hits_fixed_point(edges, iterations=4).select(
+    return hits_fixed_point(edges).select(
         F.col("id").alias("url"), "hub_fp", "auth_fp"
     )
 
@@ -292,7 +293,7 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = docs.select(i.alias("tid"), _url(i).alias("dst"))
     edges = a.join(b, a.tgt == b.tid).select("src", "dst")
-    return resolve_redirects(edges, max_rounds=6)
+    return resolve_redirects(edges)
 
 
 def _lpa_oracle(rounds: int) -> str:
@@ -362,6 +363,6 @@ def q_community_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = documents_to_pages(T(spark, sf_dir, "documents"))
     g = build_web_graph(pages)
     edges = g.edges.filter(F.col("edge_type") == "LINKS_TO")
-    return label_propagation(edges, rounds=4).select(
+    return label_propagation(edges).select(
         F.col("id").alias("url"), "community"
     )

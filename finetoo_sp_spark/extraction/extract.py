@@ -68,7 +68,7 @@ def url_salt(n_buckets: int, hash_mode: str = "xxhash64") -> Column:
     return F.pmod(_base_hash(F.col("url"), hash_mode), F.lit(n_buckets)).cast("int")
 
 
-def _murmur3_int(k: int, seed: int = 42) -> int:
+def _murmur3_int(k: int) -> int:
     """Spark's ``hash()`` of an int (Murmur3_x86_32.hashInt, seed 42) —
     the hash ``HashPartitioning`` takes ``pmod`` of to pick a partition."""
     m = 0xFFFFFFFF
@@ -77,7 +77,7 @@ def _murmur3_int(k: int, seed: int = 42) -> int:
         return ((x << r) | (x >> (32 - r))) & m
 
     k = rotl(k * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
-    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & m
     h ^= 4  # input length in bytes
     h ^= h >> 16
     h = h * 0x85EBCA6B & m

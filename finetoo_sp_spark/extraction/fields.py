@@ -85,14 +85,13 @@ def field_expr(rule: FieldRule, html_col: Column) -> Column:
     return _typed(F.when(raw != "", raw), rule.dtype).alias(rule.name)
 
 
-def map_fields(pages: DataFrame, rules: list[FieldRule] | None = None) -> DataFrame:
-    """pages(url, html) -> (url, <one typed column per rule>). Pure Catalyst plan.
-    The decoded html is staged as a bound attribute so the N rules share
-    ONE decode instead of embedding (and re-evaluating) the decode
-    expression once per rule."""
-    rules = rules if rules is not None else WEB_FIELD_RULES
+def map_fields(pages: DataFrame) -> DataFrame:
+    """pages(url, html) -> (url, <one typed column per WEB_FIELD_RULES
+    rule>). Pure Catalyst plan. The decoded html is staged as a bound
+    attribute so the N rules share ONE decode instead of embedding (and
+    re-evaluating) the decode expression once per rule."""
     staged = pages.select("url", F.decode(F.col("html"), "UTF-8").alias("_html"))
-    return staged.select("url", *[field_expr(r, F.col("_html")) for r in rules])
+    return staged.select("url", *[field_expr(r, F.col("_html")) for r in WEB_FIELD_RULES])
 
 
 def register_field_schema(schema, node_type: str, rules: list[FieldRule]) -> None:

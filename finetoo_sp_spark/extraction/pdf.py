@@ -177,9 +177,10 @@ def extract_pages_any(
     The routing predicate is a JVM-side prefix check on the binary column
     (no Python touch for the split), so each path's mapInPandas sees only
     its own rows — a narrow, shuffle-free plan on both branches.
-    ``repartition_buckets``: optional hash(url) salt repartition of each
-    branch (same knob as extract_pages) — drop-in replacement for it in
-    the resumable pipeline.
+    ``repartition_buckets`` and ``keep_cols`` are extract_pages' own
+    (applied to each branch): the extractor protocol that
+    ``run_resumable_extraction(extractor=)`` calls every extractor with,
+    so this is a drop-in replacement for extract_pages there.
     """
     is_pdf = F.startswith(F.col("html"), F.lit(PDF_MAGIC))
     html_out = extract_pages(pages.filter(~is_pdf), repartition_buckets, keep_cols)

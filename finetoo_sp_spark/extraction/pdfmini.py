@@ -175,13 +175,13 @@ def _decode_hex_string(hexdigits: str, cmap: dict[int, str]) -> str:
     return bytes.fromhex(h).decode("latin-1")
 
 
-def _mostly_printable(text: str, min_ratio: float = 0.8) -> bool:
+def _mostly_printable(text: str) -> bool:
     """Guard against accidental BT..ET byte runs inside binary streams:
-    real show-strings are overwhelmingly printable."""
+    real show-strings are overwhelmingly (>= 80%) printable."""
     if not text:
         return False
     ok = sum(c.isprintable() or c in "\n\t" for c in text)
-    return ok / len(text) >= min_ratio
+    return ok / len(text) >= 0.8
 
 
 _OBJSTM_RE = re.compile(rb"/Type\s*/ObjStm")

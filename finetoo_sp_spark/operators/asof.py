@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+RANGE_BUCKET_SECONDS = 21600  # range_join's time bucket: 6 hours
+
 
 def asof_join(
     left: DataFrame,
@@ -102,25 +104,24 @@ def range_join(
     start_col: str,
     end_col: str,
     by: str | None = None,
-    bucket_seconds: int = 21600,
 ) -> DataFrame:
     """Point-in-interval range join without a cross product.
 
     Naive ``l.ts BETWEEN r.start AND r.end`` in Spark plans as a
     nested-loop join — quadratic at scale. The standard fix (what
     Databricks' range-join optimization does under the hood): quantize
-    time into ``bucket_seconds`` buckets, explode each right interval
+    time into ``RANGE_BUCKET_SECONDS`` buckets, explode each right interval
     onto the buckets it covers, equi-join on (by, bucket), then apply
     the exact interval predicate. Each left row matches a right row in
     exactly one bucket (the left point's), so no post-join dedup is
     needed. Interval semantics: half-open [start, end).
 
-    Pick ``bucket_seconds`` ~ the median interval length: larger wastes
-    filter work, smaller multiplies the right side's explode factor.
+    The bucket is ~ the median interval length: larger wastes filter
+    work, smaller multiplies the right side's explode factor.
     """
     from pyspark.sql import functions as F
 
-    w = F.lit(bucket_seconds)
+    w = F.lit(RANGE_BUCKET_SECONDS)
     lb = left.withColumn("_bkt", F.floor(F.unix_timestamp(point_col) / w))
     # Dirty interval data (null bounds, end < start) would make
     # F.sequence throw and fail the whole job; such rows can match no

@@ -3,14 +3,14 @@
 Storage-style CDC (LBFS, Muthitacharoen et al. SOSP'01; FastCDC,
 Xia et al. USENIX ATC'16) applied at token granularity for LLM corpus
 curation: a chunk boundary falls after token position p whenever the
-hash of the W-token window ending at p satisfies ``hash % divisor ==
-0``. Because the predicate depends only on LOCAL content, an edit
-(insertion/deletion) perturbs just the chunks overlapping it while
-every other chunk keeps its identity — the property fixed-size
-chunking lacks and the reason CDC is the standard tool for finding
-shared content between near-identical documents (mirrored pages,
-template revisions, syndicated articles) at sub-document granularity,
-complementing exact sha-dedup (whole doc) and window dedup
+hash of the W-token window ending at p (W = CDC_WINDOW) satisfies
+``hash % CDC_DIVISOR == 0``. Because the predicate depends only on
+LOCAL content, an edit (insertion/deletion) perturbs just the chunks
+overlapping it while every other chunk keeps its identity — the
+property fixed-size chunking lacks and the reason CDC is the standard
+tool for finding shared content between near-identical documents
+(mirrored pages, template revisions, syndicated articles) at
+sub-document granularity, complementing exact sha-dedup (whole doc) and window dedup
 (substrdedup.py — flat >=k-token matches).
 
 Deliberate departure from FastCDC: no min/max chunk-size clamping.
@@ -19,7 +19,7 @@ inherently sequential scan — while the pure local predicate evaluates
 every position independently: on Spark that is a narrow per-row
 array pipeline (split -> window hashes -> filter -> slice), zero
 shuffle until chunks group corpus-wide. Expected chunk length is
-``divisor`` tokens (geometric); the W-token window (not a single
+CDC_DIVISOR tokens (geometric); the W-token window (not a single
 token) keeps runs of one repeated token from degenerating into
 per-token cuts.
 
@@ -37,43 +37,40 @@ from pyspark.sql import functions as F
 
 from finetoo_sp_spark.operators.dedup import _base_hash, _norm_words
 
+CDC_WINDOW = 4  # tokens hashed per boundary test
+CDC_DIVISOR = 16  # a boundary where the window hash is 0 mod this
 
-def cdc_chunks(
-    df: DataFrame,
-    window: int = 4,
-    divisor: int = 16,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
+
+def cdc_chunks(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """(id, n_tokens, chunk_idx, start, chunk_tokens, chunk_hash) —
     every content-defined chunk of every non-empty document.
 
     chunk_idx is 1-based; ``start`` is the 0-based token offset;
-    chunk boundaries are the positions p in [window, n_tokens) where
-    the hash of the W-token window ending at p is ``0 (mod divisor)``,
-    plus the end of the document. Docs shorter than ``window`` tokens
-    (or empty) yield one whole-doc chunk / no chunk respectively.
+    chunk boundaries are the positions p in [CDC_WINDOW, n_tokens)
+    where the hash of the CDC_WINDOW-token window ending at p is
+    ``0 (mod CDC_DIVISOR)``, plus the end of the document. Docs shorter
+    than CDC_WINDOW tokens (or empty) yield one whole-doc chunk / no
+    chunk respectively.
     """
-    if window < 1 or divisor < 1:
-        raise ValueError("window and divisor must be >= 1")
     w = (
         df.filter(F.length(F.trim(F.col("text"))) > 0)
         .select(F.col("doc_id").alias("id"), _norm_words("text").alias("_w"))
         .withColumn("n_tokens", F.size("_w"))
     )
     # boundary positions: local window-hash predicate, end position
-    # p in [window, n_tokens) — evaluated with JVM array lambdas over a
+    # p in [CDC_WINDOW, n_tokens) — evaluated with JVM array lambdas over a
     # materialized token array (bound attribute: see dedup.shingles).
     cand = F.when(
-        F.col("n_tokens") - 1 >= window,
-        F.sequence(F.lit(window), F.col("n_tokens") - 1),
+        F.col("n_tokens") - 1 >= CDC_WINDOW,
+        F.sequence(F.lit(CDC_WINDOW), F.col("n_tokens") - 1),
     ).otherwise(F.array().cast("array<int>"))
     cuts = F.filter(
         cand,
         lambda p: _base_hash(
-            F.concat_ws(" ", F.slice(F.col("_w"), p - window + 1, window)),
+            F.concat_ws(" ", F.slice(F.col("_w"), p - CDC_WINDOW + 1, CDC_WINDOW)),
             hash_mode,
         )
-        % divisor
+        % CDC_DIVISOR
         == 0,
     )
     bounds = F.concat(

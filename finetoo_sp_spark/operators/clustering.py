@@ -30,6 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 1 << 20  # fixed-point coordinate scale
+K = 4  # k-means clusters
+ITERS = 2  # k-means assignment passes, counting the init
+SEMDEDUP_THRESHOLD = 0.4  # cosine at or above which a pair is a near-dup
 
 
 def _tdiv(a: int, b: int) -> int:
@@ -57,13 +60,7 @@ def _sqdist_to(v_col, centroid: list[int]):
     )
 
 
-def kmeans_fit(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 4,
-    iters: int = 2,
-) -> tuple[list[list[int]], DataFrame]:
+def kmeans_fit(emb: DataFrame, id_col: str, vec_col: str) -> tuple[list[list[int]], DataFrame]:
     """kmeans_assign that ALSO returns the final centroids (fixed-point
     int lists) — the piece IVF coarse quantizers need for probing.
     Same deterministic contract; the assigned frame is the labels
@@ -72,22 +69,22 @@ def kmeans_fit(
         F.col(id_col).alias("id"), _to_fixed(F.col(vec_col)).alias("v")
     )
 
-    # init: k smallest ids (tiny sorted collect — centroid-sized, not data-sized)
-    init_rows = e.orderBy("id").limit(k).collect()
+    # init: K smallest ids (tiny sorted collect — centroid-sized, not data-sized)
+    init_rows = e.orderBy("id").limit(K).collect()
     centroids = [list(r["v"]) for r in init_rows]
     dims = len(centroids[0])
 
     def assign(frame: DataFrame) -> DataFrame:
         keys = [
-            (_sqdist_to(F.col("v"), c) * k + F.lit(j)).cast("long")
+            (_sqdist_to(F.col("v"), c) * K + F.lit(j)).cast("long")
             for j, c in enumerate(centroids)
         ]
         key = F.least(*keys) if len(keys) > 1 else keys[0]
-        return frame.withColumn("cluster", (key % k).cast("int"))
+        return frame.withColumn("cluster", (key % K).cast("int"))
 
     assigned = assign(e)
-    for _ in range(iters - 1):
-        # centroid update: one shuffle over k*dims groups (size-invariant)
+    for _ in range(ITERS - 1):
+        # centroid update: one shuffle over K*dims groups (size-invariant)
         sums = (
             assigned.select("cluster", F.posexplode("v").alias("dim", "val"))
             .groupBy("cluster", "dim")
@@ -104,51 +101,39 @@ def kmeans_fit(
     return centroids, assigned.select("id", "cluster")
 
 
-def kmeans_assign(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 4,
-    iters: int = 2,
-) -> DataFrame:
-    """Lloyd's k-means over an ``array<float>`` column; returns
-    ``(id, cluster)`` after ``iters`` assignment passes.
+def kmeans_assign(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Lloyd's k-means (K clusters) over an ``array<float>`` column;
+    returns ``(id, cluster)`` after ITERS assignment passes.
 
     Deterministic contract (what the DuckDB oracle reproduces):
-    - init: centroids = the vectors of the ``k`` smallest ids;
+    - init: centroids = the vectors of the K smallest ids;
     - assignment: argmin of exact integer squared distance, ties to the
-      lowest centroid id (encoded as ``min(dist*k + cid)``);
+      lowest centroid id (encoded as ``min(dist*K + cid)``);
     - update: per-dimension ``sum div count`` in fixed point.
 
-    ``iters`` assignment passes means ``iters - 1`` centroid updates —
-    the returned labels are the assignment against the last update.
+    ITERS assignment passes means ITERS - 1 centroid updates — the
+    returned labels are the assignment against the last update.
     """
-    return kmeans_fit(emb, id_col, vec_col, k=k, iters=iters)[1]
+    return kmeans_fit(emb, id_col, vec_col)[1]
 
 
-def semdedup_survivors(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 4,
-    threshold: float = 0.4,
-    n_bits: int = 8,
-) -> DataFrame:
+def semdedup_survivors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """SemDeDup: k-means the embeddings, find cosine near-duplicates
-    *within* (cluster, sign-LSH bucket), keep the smallest id of each
-    duplicate pair. Returns surviving ``(id, cluster)`` rows.
+    (cosine >= SEMDEDUP_THRESHOLD) *within* (cluster, sign-LSH bucket),
+    keep the smallest id of each duplicate pair. Returns surviving
+    ``(id, cluster)`` rows.
 
-    The pair join key is (cluster, bucket) — at 10^12 rows both k and
-    n_bits scale up so per-key candidate groups stay bounded; the plan
-    is a bucket equi-join + anti-join, no cross join.
+    The pair join key is (cluster, bucket) — at 10^12 rows both K and
+    the bucket bits scale up so per-key candidate groups stay bounded;
+    the plan is a bucket equi-join + anti-join, no cross join.
     """
     from .similarity import sign_bucket, with_norm
 
-    labels = kmeans_assign(emb, id_col, vec_col, k=k)
+    labels = kmeans_assign(emb, id_col, vec_col)
     nd = (
         with_norm(emb, id_col, vec_col)
         .join(labels, "id")
-        .select("id", "unit", "cluster", sign_bucket(F.col("unit"), n_bits).alias("bucket"))
+        .select("id", "unit", "cluster", sign_bucket(F.col("unit")).alias("bucket"))
     )
 
     a = nd.select(
@@ -175,7 +160,7 @@ def semdedup_survivors(
         a.join(b, ["cluster", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= SEMDEDUP_THRESHOLD)
         .select(F.col("id_b").alias("id"))
         .distinct()
     )

@@ -17,7 +17,7 @@ Semantics (deterministic, synchronous variant):
   update is a pure function of the previous round — no partition-order
   dependence, which is what makes the unrolled SQL oracle exact (the
   classic asynchronous LPA is update-order dependent and untestable).
-- a FIXED number of rounds (default 4) rather than a convergence test:
+- a FIXED number of rounds (ROUNDS = 4) rather than a convergence test:
   synchronous LPA can 2-cycle on bipartite structures, so fixed rounds
   are both the portable and the honest termination rule.
 
@@ -39,16 +39,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+ROUNDS = 4
 
-def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
-    """(id, community) after ``rounds`` synchronous majority votes.
+
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """(id, community) after ROUNDS synchronous majority votes.
 
     ``edges`` needs (src, dst) columns; duplicate edges collapse (one
     vote per neighbor, not per anchor occurrence). Labels compare with
     the column's natural ordering (lexicographic for url ids), so the
     tie-break is deterministic for any id type."""
-    if rounds < 1:
-        raise ValueError("label_propagation needs rounds >= 1")
     fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     rev = edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
     e = (
@@ -58,7 +58,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
         .localCheckpoint()
     )
     lab = e.select(F.col("u"), F.col("u").alias("lab")).distinct()
-    for _ in range(rounds):
+    for _ in range(ROUNDS):
         votes = (
             e.join(lab.withColumnsRenamed({"u": "v", "lab": "vlab"}), "v")
             .groupBy("u", "vlab")

@@ -38,6 +38,13 @@ from pyspark.sql import functions as F
 # Small enough that a*h stays under 2^63 (no ANSI long overflow), large
 # enough for collision-free shingle hashing at banding granularity.
 _MERSENNE = (1 << 31) - 1
+MINHASH_K = 32  # permutations per signature
+MINHASH_BANDS = 8  # LSH bands of MINHASH_K // MINHASH_BANDS rows each
+N_CELLS = 8  # triangular-grid side of a salt-split hot bucket
+CONTAMINATION_N = 13  # benchmark n-gram width (GPT-3 appendix C)
+MAX_HOSTS_PER_SHA = 50  # mirror_hosts prunes shas on more hosts than this
+BOILERPLATE_MIN_HOST_DOCS = 3  # smaller hosts keep every line
+BOILERPLATE_RATIO_FP = 5000  # strip lines on >= 50.00% of a host's pages
 
 
 def _norm_words(text_col) -> "F.Column":
@@ -141,11 +148,10 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = 100_000,
 ) -> DataFrame:
-    """All pairs (id_a < id_b) with n-gram Jaccard >= threshold.
+    """All pairs (id_a < id_b) with 3-word-shingle Jaccard >= threshold.
 
     inverted index self-join: |A ∩ B| = count of shared shingles;
     |A ∪ B| = |A| + |B| - |A ∩ B|. One shuffle on shingle (candidate
@@ -162,7 +168,7 @@ def ngram_jaccard_pairs(
 
     Returns (id_a, id_b, jaccard) with jaccard rounded to 6dp.
     """
-    sh = shingles(df, id_col, text_col, n).cache()
+    sh = shingles(df, id_col, text_col)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     idx = sh
@@ -198,23 +204,22 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    k: int = 32,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
-    """(id, sig: array<bigint>[k]) MinHash signatures.
+    """(id, sig: array<bigint>[MINHASH_K]) MinHash signatures over
+    3-word shingles.
 
     Permutation i: h_i(x) = (a_i * base(x) + b_i) mod (2^31-1), with
     (a_i, b_i) drawn from a fixed deterministic stream (no RNG state —
-    byte-stable across runs/partitionings). k min-aggregates in one
-    groupBy pass (map-side partial min, so the shuffle carries only
-    k longs per doc per partition).
+    byte-stable across runs/partitionings). MINHASH_K min-aggregates in
+    one groupBy pass (map-side partial min, so the shuffle carries only
+    MINHASH_K longs per doc per partition).
 
     ``hash_mode``: 'xxhash64' (fast, production) or 'sha'
     (DuckDB-reproducible base hash — the full-oracle verification mode).
     """
-    sh = shingles(df, id_col, text_col, n)
-    params = minhash_params(k)
+    sh = shingles(df, id_col, text_col)
+    params = minhash_params(MINHASH_K)
     # materialize the base hash ONCE per shingle row: each of the k
     # min-aggregates otherwise evaluates the hash expression itself
     # (k sha256/xxhash calls per row instead of 1)
@@ -233,18 +238,16 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
     threshold: float = 0.7,
     bucket_cap: int | None = 10_000,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
 
-    b=bands, r=k/bands rows per band; candidate iff some band's r-slice
-    hashes equal. Shuffle keys: (band, bucket) for candidates — bucket
-    ids are xxhash64 of the slice so buckets distribute uniformly.
+    b=MINHASH_BANDS, r=MINHASH_K/b rows per band; candidate iff some
+    band's r-slice hashes equal. Shuffle keys: (band, bucket) for
+    candidates — bucket ids are xxhash64 of the slice so buckets
+    distribute uniformly.
     Verification re-joins the shingle index only for candidate pairs
     (semi-join pruning), so the expensive exact Jaccard runs on
     O(candidates), not O(n^2).
@@ -257,14 +260,14 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard) verified >= threshold.
     """
-    sig = minhash_signatures(df, id_col, text_col, n, k, hash_mode=hash_mode)
-    banded = _banded_sig(sig, k, bands)
+    sig = minhash_signatures(df, id_col, text_col, hash_mode=hash_mode)
+    banded = _banded_sig(sig)
 
     cand = _bucket_self_pairs(
         banded, ["band", "bucket"], bucket_cap=bucket_cap
     ).distinct()
 
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df, id_col, text_col)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.withColumnsRenamed({"id": "id_a"})
     b = sh.withColumnsRenamed({"id": "id_b"})
@@ -286,10 +289,10 @@ def minhash_lsh_pairs(
     )
 
 
-def _banded_sig(sig: DataFrame, k: int, bands: int) -> DataFrame:
+def _banded_sig(sig: DataFrame) -> DataFrame:
     """(id, band, bucket) — one row per band; bucket = xxhash64 of the
     band's r-slice of the signature, so buckets distribute uniformly."""
-    r = k // bands
+    r = MINHASH_K // MINHASH_BANDS
     return sig.select(
         "id",
         F.explode(
@@ -301,7 +304,7 @@ def _banded_sig(sig: DataFrame, k: int, bands: int) -> DataFrame:
                             F.concat_ws(",", *[F.element_at("sig", bi * r + j + 1).cast("string") for j in range(r)])
                         ).alias("bucket"),
                     )
-                    for bi in range(bands)
+                    for bi in range(MINHASH_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -313,9 +316,6 @@ def minhash_lsh_pairs_between(
     new_df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    k: int = 32,
-    bands: int = 8,
     threshold: float = 0.7,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
@@ -337,15 +337,15 @@ def minhash_lsh_pairs_between(
 
     Returns (id_new, id_old, jaccard) with jaccard >= threshold.
     """
-    sig_old = minhash_signatures(old_df, id_col, text_col, n, k, hash_mode=hash_mode)
-    sig_new = minhash_signatures(new_df, id_col, text_col, n, k, hash_mode=hash_mode)
-    b_old = _banded_sig(sig_old, k, bands).withColumnsRenamed({"id": "id_old"})
-    b_new = _banded_sig(sig_new, k, bands).withColumnsRenamed({"id": "id_new"})
+    sig_old = minhash_signatures(old_df, id_col, text_col, hash_mode=hash_mode)
+    sig_new = minhash_signatures(new_df, id_col, text_col, hash_mode=hash_mode)
+    b_old = _banded_sig(sig_old).withColumnsRenamed({"id": "id_old"})
+    b_new = _banded_sig(sig_new).withColumnsRenamed({"id": "id_new"})
     cand = (
         b_new.join(b_old, ["band", "bucket"]).select("id_new", "id_old").distinct()
     )
-    sh_old = shingles(old_df, id_col, text_col, n)
-    sh_new = shingles(new_df, id_col, text_col, n)
+    sh_old = shingles(old_df, id_col, text_col)
+    sh_new = shingles(new_df, id_col, text_col)
     sizes_old = (
         sh_old.groupBy("id")
         .agg(F.count(F.lit(1)).alias("sz_old"))
@@ -382,18 +382,17 @@ def _bucket_self_pairs(
     key_cols: list[str],
     payload_cols: list[str] | None = None,
     bucket_cap: int | None = None,
-    n_cells: int = 8,
 ) -> DataFrame:
     """Self-join on bucket keys producing (id_a, id_b [, payload_a/b]) with
     an optional hot-bucket defense.
 
     Without ``bucket_cap``: plain equi self-join on ``key_cols``. With it:
     buckets whose row count exceeds the cap are split into a triangular
-    grid of (i, j) cells, i <= j < n_cells — each row (group g =
-    hash(id) mod n_cells) lands on the LEFT side of cells (g, j>=g) and
+    grid of (i, j) cells, i <= j < N_CELLS — each row (group g =
+    hash(id) mod N_CELLS) lands on the LEFT side of cells (g, j>=g) and
     the RIGHT side of cells (i<=g, g), so every intra-bucket pair meets
     in exactly one cell and the largest task shrinks from O(m^2) to
-    O((m/n_cells)^2). Output is IDENTICAL to the uncapped join — the
+    O((m/N_CELLS)^2). Output is IDENTICAL to the uncapped join — the
     split redistributes work, it never drops pairs (a template-heavy
     corpus otherwise lands thousands of near-identical docs in one
     (band, bits) bucket and a single straggler task does all the work).
@@ -424,7 +423,7 @@ def _bucket_self_pairs(
     hot_keys = F.broadcast(sizes.filter(F.col("bkt_n") > bucket_cap).select(*key_cols))
     cold = banded.join(hot_keys, key_cols, "left_anti")
     hot = banded.join(hot_keys, key_cols, "left_semi").withColumn(
-        "g", F.pmod(F.xxhash64("id"), F.lit(n_cells)).cast("int")
+        "g", F.pmod(F.xxhash64("id"), F.lit(N_CELLS)).cast("int")
     )
     # LEFT carries cells (g, j >= g), RIGHT carries cells (i <= g, g):
     # a cross-group pair meets exactly once, in cell (min(g), max(g)) —
@@ -434,7 +433,7 @@ def _bucket_self_pairs(
     # then distinct to collapse the same-group (g, g) double emission.
     row = F.struct(F.col("id").alias("id"), *[F.col(c).alias(c) for c in payload_cols])
     left = hot.withColumn(
-        "cell_j", F.explode(F.sequence(F.col("g"), F.lit(n_cells - 1)))
+        "cell_j", F.explode(F.sequence(F.col("g"), F.lit(N_CELLS - 1)))
     ).withColumn("cell_i", F.col("g"))
     right = hot.withColumn(
         "cell_i", F.explode(F.sequence(F.lit(0), F.col("g")))
@@ -457,6 +456,7 @@ def _bucket_self_pairs(
 
 
 SIMHASH_BITS = {"xxhash64": 64, "sha": 60}
+SIMHASH_MAX_HAMMING = 3
 
 
 def simhash(
@@ -515,14 +515,13 @@ def simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_hamming: int = 3,
     bucket_cap: int | None = 10_000,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
-    """Pairs with hamming(simhash_a, simhash_b) <= max_hamming.
+    """Pairs with hamming(simhash_a, simhash_b) <= SIMHASH_MAX_HAMMING.
 
-    Pigeonhole banding: split 64 bits into (max_hamming+1) bands — any
-    pair within distance d shares at least one exact band. Shuffle key =
+    Pigeonhole banding: split 64 bits into (SIMHASH_MAX_HAMMING+1)
+    bands — any pair within distance d shares at least one exact band. Shuffle key =
     (band, band_bits); verify with bit_count(xor).
 
     ``bucket_cap``: hot-bucket defense — a template-heavy corpus puts
@@ -531,7 +530,7 @@ def simhash_pairs(
     salt-split into triangular cells (_bucket_self_pairs); the pair set
     is provably identical to the uncapped join (tests assert this).
     """
-    nb = max_hamming + 1
+    nb = SIMHASH_MAX_HAMMING + 1
     width = SIMHASH_BITS[hash_mode] // nb
     fps = simhash(df, id_col, text_col, hash_mode=hash_mode)
     banded = fps.select(
@@ -560,7 +559,7 @@ def simhash_pairs(
             "id_b",
             F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
 
@@ -627,11 +626,11 @@ def contamination_flags(
     text_col: str,
     bench_id_col: str,
     bench_text_col: str,
-    n: int = 13,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / PaLM protocol):
-    flag every training document sharing at least one n-gram (n=13 is
-    the published convention) with an evaluation benchmark.
+    flag every training document sharing at least one
+    CONTAMINATION_N-gram (13, the published convention) with an
+    evaluation benchmark.
 
     Scale shape: the benchmark side is dimension-sized (eval suites are
     thousands of examples, the corpus is billions of docs), so its
@@ -639,8 +638,12 @@ def contamination_flags(
     map-side hash probe — the 100 TB scan never shuffles. Returns one
     row per doc: (id, n_hits, contaminated).
     """
-    bsh = shingles(benchmarks, bench_id_col, bench_text_col, n).select("shingle").distinct()
-    dsh = shingles(docs, id_col, text_col, n)
+    bsh = (
+        shingles(benchmarks, bench_id_col, bench_text_col, CONTAMINATION_N)
+        .select("shingle")
+        .distinct()
+    )
+    dsh = shingles(docs, id_col, text_col, CONTAMINATION_N)
     hits = (
         dsh.join(F.broadcast(bsh), "shingle")
         .groupBy("id")
@@ -762,7 +765,6 @@ def mirror_hosts(
     id_col: str,
     text_col: str,
     min_shared: int = 2,
-    max_hosts_per_sha: int = 50,
 ) -> DataFrame:
     """(host_a, host_b, n_shared) — mirror-site detection: pairs of
     hosts sharing at least ``min_shared`` byte-identical documents
@@ -772,7 +774,7 @@ def mirror_hosts(
 
     Scale: distinct (host, sha) -> sha-keyed self-join. The quadratic
     risk is a sha shared by many hosts (blank/boilerplate pages), so
-    shas on more than ``max_hosts_per_sha`` hosts are pruned first —
+    shas on more than ``MAX_HOSTS_PER_SHA`` hosts are pruned first —
     the same finite-``max_df`` defense as the shingle inverted index;
     a sha that common is template noise, not mirror evidence.
     """
@@ -781,7 +783,7 @@ def mirror_hosts(
     ).distinct()
     degree = hs.groupBy("sha").agg(F.count("*").alias("_n_hosts"))
     pruned = hs.join(
-        degree.filter(F.col("_n_hosts") <= max_hosts_per_sha).select("sha"), "sha"
+        degree.filter(F.col("_n_hosts") <= MAX_HOSTS_PER_SHA).select("sha"), "sha"
     )
     a = pruned.select("sha", F.col("host").alias("host_a"))
     b = pruned.select("sha", F.col("host").alias("host_b"))
@@ -799,19 +801,17 @@ def host_boilerplate_strip(
     id_col: str,
     host_col: str,
     text_col: str,
-    min_host_docs: int = 3,
-    max_ratio_fp: int = 5000,
 ) -> DataFrame:
     """Per-host line-frequency boilerplate removal (the CCNet/OSCAR
     cleaner): a line is template boilerplate when it appears on a large
     FRACTION of its host's pages — ``doc_freq * 10000 >=
-    max_ratio_fp * host_docs`` (integer fixed point, default 50%) —
+    BOILERPLATE_RATIO_FP * host_docs`` (integer fixed point, 50%) —
     regardless of its absolute corpus count. This is the complement of
     ``line_dedup``'s global-count rule: a footer templated across one
     big host strips even though the corpus-wide count of any single
     variant is modest, while a famous quote shared by many hosts
     survives because no single host saturates on it. Hosts with fewer
-    than ``min_host_docs`` pages keep everything (a ratio over 2 pages
+    than ``BOILERPLATE_MIN_HOST_DOCS`` pages keep everything (a ratio over 2 pages
     is noise, per CCNet's shard-minimum).
 
     Scale shape: doc-frequency keys are (host, line_sha256) — a hot
@@ -847,8 +847,8 @@ def host_boilerplate_strip(
     hot = (
         dfreq.join(host_docs, "host")
         .filter(
-            (F.col("n_docs") >= min_host_docs)
-            & (F.col("doc_freq") * 10000 >= max_ratio_fp * F.col("n_docs"))
+            (F.col("n_docs") >= BOILERPLATE_MIN_HOST_DOCS)
+            & (F.col("doc_freq") * 10000 >= BOILERPLATE_RATIO_FP * F.col("n_docs"))
         )
         .select("host", "line_sha", F.lit(True).alias("is_hot"))
     )
@@ -886,7 +886,7 @@ def canonical_dedup(pages: DataFrame) -> DataFrame:
     variant-sized (a handful of rows), so the window is cheap. An
     adversarial corpus where millions of pages declare one canonical
     would hot-spot this key — production bounds that with the same
-    cap-then-salt discipline as mirror_hosts (max_hosts_per_sha); the
+    cap-then-salt discipline as mirror_hosts (MAX_HOSTS_PER_SHA); the
     declared-canonical key space is naturally per-page, so no cap is
     applied here.
 

@@ -30,17 +30,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+DEFAULT_DELAY_S = 1  # politeness delay of a host without a delays row
+
+
 def frontier_schedule(
     frontier: DataFrame,
     delays: DataFrame,
-    default_delay_s: int = 1,
     budget_s: int | None = None,
 ) -> DataFrame:
     """Schedule a crawl frontier under per-host politeness delays.
 
     frontier: (url, host, priority) — higher priority fetches first.
     delays: (host, delay_s) — e.g. robots crawl_delays filtered to the
-    fetching agent; hosts without a row use ``default_delay_s``.
+    fetching agent; hosts without a row use DEFAULT_DELAY_S.
 
     Returns (url, host, priority, rank_in_host, delay_s,
     scheduled_t_s[, within_budget]): rank_in_host is the 1-based fetch
@@ -52,7 +54,7 @@ def frontier_schedule(
     """
     d = delays.select("host", F.col("delay_s").cast("long").alias("delay_s"))
     j = frontier.select("url", "host", "priority").join(d, "host", "left")
-    eff = F.coalesce(F.col("delay_s"), F.lit(int(default_delay_s))).alias("delay_s")
+    eff = F.coalesce(F.col("delay_s"), F.lit(DEFAULT_DELAY_S)).alias("delay_s")
     w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url"))
     out = j.select(
         "url",

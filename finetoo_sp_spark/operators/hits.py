@@ -45,16 +45,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000
+ROUNDS = 4
 
 
-def hits_fixed_point(edges: DataFrame, iterations: int = 4) -> DataFrame:
-    """(id, hub_fp, auth_fp) after ``iterations`` full rounds; scores
-    are SCALE-fixed-point with the per-round maximum pinned to exactly
+def hits_fixed_point(edges: DataFrame) -> DataFrame:
+    """(id, hub_fp, auth_fp) after ROUNDS full rounds; scores are
+    SCALE-fixed-point with the per-round maximum pinned to exactly
     SCALE. ``edges`` needs (src, dst) columns; duplicate edges collapse
     (endorsement is per linking page, not per anchor occurrence)."""
-    if iterations < 1:
-        raise ValueError("hits_fixed_point needs iterations >= 1 (auth "
-                         "scores only exist after the first half-round)")
     e = edges.select("src", "dst").distinct()
     nodes = (
         e.select(F.col("src").alias("id"))
@@ -63,8 +61,7 @@ def hits_fixed_point(edges: DataFrame, iterations: int = 4) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     hubs = nodes.select("id", F.lit(SCALE).cast("long").alias("score"))
-    auths = None
-    for _ in range(iterations):
+    for _ in range(ROUNDS):
         auths = _half_round(e, nodes, hubs, from_col="src", to_col="dst")
         hubs = _half_round(e, nodes, auths, from_col="dst", to_col="src")
     return nodes.join(

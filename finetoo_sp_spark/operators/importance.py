@@ -15,16 +15,16 @@ the score is byte-stable and a DuckDB oracle reproduces it exactly;
 monotonicity in the target/raw ratio — all resampling needs — is
 preserved.
 
-Feature hash: bucket = int(md5(bigram)[:15 hex]) % n_buckets. md5 is
+Feature hash: bucket = int(md5(bigram)[:15 hex]) % DSIR_BUCKETS. md5 is
 identical across Spark (``conv(substr(md5(x),1,15),16,10)``) and DuckDB
 (``('0x' || substr(md5(x),1,15))::BIGINT``); 15 hex chars = 60 bits
 keeps the cast inside BIGINT range.
 
-Scale story (100 TB): the bucket ratio table has ``n_buckets`` rows
+Scale story (100 TB): the bucket ratio table has DSIR_BUCKETS rows
 regardless of corpus size — it broadcast-joins to the exploded bigram
 stream, so the corpus-side plan is explode -> map-side probe -> one
 partial-aggregating groupBy(doc). Counting the two distributions is one
-groupBy over n_buckets groups each. Nothing is quadratic and nothing
+groupBy over DSIR_BUCKETS groups each. Nothing is quadratic and nothing
 driver-side scales with the data.
 """
 
@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .textstats import _words
+
+DSIR_BUCKETS = 256  # hashed-bigram buckets of the importance ratio table
 
 
 def _bigrams(words_col):
@@ -60,7 +62,6 @@ def dsir_scores(
     id_col: str,
     text_col: str,
     target_filter,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """(id, n_bigrams, dsir_score) — higher score = more target-like.
 
@@ -76,7 +77,7 @@ def dsir_scores(
     )
     grams = staged.select(
         "id", "_is_target", F.explode(_bigrams(F.col("_w"))).alias("bigram")
-    ).withColumn("bucket", _bucket(F.col("bigram"), n_buckets))
+    ).withColumn("bucket", _bucket(F.col("bigram"), DSIR_BUCKETS))
 
     counts = grams.groupBy("bucket").agg(
         F.count("*").alias("cnt_raw"),

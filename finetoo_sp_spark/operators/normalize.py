@@ -77,14 +77,11 @@ _SPACE_CHARS = [" ", " ", " "]
 _ZERO_WIDTH = ["​", "‌", "‍", "﻿"]
 
 
-def normalize_text_col(col, fold_quotes: bool = True) -> Column:
+def normalize_text_col(col) -> Column:
     """Column expression applying the full repair chain to ``col``."""
     c = F.col(col) if isinstance(col, str) else col
-    for broken, fixed in MOJIBAKE_TABLE:
+    for broken, fixed in MOJIBAKE_TABLE + QUOTE_FOLD_TABLE:
         c = F.replace(c, F.lit(broken), F.lit(fixed))
-    if fold_quotes:
-        for broken, fixed in QUOTE_FOLD_TABLE:
-            c = F.replace(c, F.lit(broken), F.lit(fixed))
     for ch in _SPACE_CHARS:
         c = F.replace(c, F.lit(ch), F.lit(" "))
     for ch in _ZERO_WIDTH:
@@ -92,12 +89,10 @@ def normalize_text_col(col, fold_quotes: bool = True) -> Column:
     return c
 
 
-def normalize_text(
-    docs: DataFrame, id_col: str, text_col: str, fold_quotes: bool = True
-) -> DataFrame:
+def normalize_text(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, text, changed) — repaired text plus a flag marking rows the
     chain actually touched (cheap corpus-health signal: % mojibake)."""
-    fixed = normalize_text_col(text_col, fold_quotes=fold_quotes)
+    fixed = normalize_text_col(text_col)
     return docs.select(
         F.col(id_col).alias("id"),
         fixed.alias("text"),

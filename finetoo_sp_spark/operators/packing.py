@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 
 from finetoo_sp_spark.operators.dedup import is_sha, sha60
 
+VAL_PPM = 10_000  # assign_splits: 1% validation
+TEST_PPM = 10_000  # assign_splits: 1% test
+LENGTH_BUCKET_WIDTH = 64  # length_buckets: tokens per bucket
+MIX_BUDGET_DOCS = 1000  # temperature_mix: documents to sample
+
 
 def host_cap(
     df: DataFrame,
@@ -152,7 +157,6 @@ def mix_epoch_weights(
     id_col: str,
     group_col: str,
     weights_ppm: dict,
-    hash_mode: str = "sha",
 ) -> DataFrame:
     """Deterministic mixture re-weighting: replicate (or drop) documents
     so each group's expected share matches a target epoch weight — the
@@ -166,8 +170,9 @@ def mix_epoch_weights(
     w/1e6, the decision is a pure function of the document id
     (partition-order-proof and resume-safe — no rand()), and weights
     below 1e6 downsample.  Groups absent from the table are dropped
-    (the mixture is explicit).  All arithmetic is integer, so the gate
-    boundary is identical in any engine.
+    (the mixture is explicit).  The gate hash is sha60 and all
+    arithmetic is integer, so the gate boundary is identical in any
+    engine (DuckDB reproduces it).
 
     Output: one row per copy — (id, group, copy_id) with copy_id in
     [0, n_copies).  Scale: the weight table broadcasts (it is one row
@@ -179,11 +184,7 @@ def mix_epoch_weights(
         [(str(k), int(v)) for k, v in sorted(weights_ppm.items())],
         f"{group_col} string, _w_ppm long",
     )
-    if is_sha(hash_mode):  # DuckDB-reproducible (oracle mode)
-        h = sha60(F.col("id").cast("string"))
-    else:
-        h = F.abs(F.xxhash64(F.col("id")))
-    gate = h % F.lit(1_000_000)
+    gate = sha60(F.col("id").cast("string")) % F.lit(1_000_000)
     n_copies = F.expr("_w_ppm div 1000000") + F.when(
         gate < F.col("_w_ppm") % 1_000_000, F.lit(1)
     ).otherwise(F.lit(0))
@@ -202,17 +203,13 @@ def mix_epoch_weights(
     )
 
 
-def assign_splits(
-    df: DataFrame,
-    id_col: str,
-    val_ppm: int = 10_000,
-    test_ppm: int = 10_000,
-) -> DataFrame:
+def assign_splits(df: DataFrame, id_col: str) -> DataFrame:
     """Deterministic train/val/test assignment as a pure function of the
     row id: split = f(sha("split:" + id)) — identical across runs,
     partitionings and cluster sizes, so a resumed or re-run pipeline can
-    never leak a validation document into training. Rates are integer
-    parts-per-million (exact, engine-portable — no float thresholds).
+    never leak a validation document into training. Rates (VAL_PPM,
+    TEST_PPM) are integer parts-per-million (exact, engine-portable — no
+    float thresholds).
 
     The hash input is salted so the split gate is INDEPENDENT of the
     sampling gate (textstats.stratified_sample hashes the bare id; an
@@ -224,21 +221,20 @@ def assign_splits(
         F.lit(1_000_000),
     )
     split = (
-        F.when(h < F.lit(test_ppm), F.lit("test"))
-        .when(h < F.lit(test_ppm + val_ppm), F.lit("val"))
+        F.when(h < F.lit(TEST_PPM), F.lit("test"))
+        .when(h < F.lit(TEST_PPM + VAL_PPM), F.lit("val"))
         .otherwise(F.lit("train"))
     )
     return df.withColumn("split", split)
 
 
-def length_buckets(
-    docs: DataFrame, id_col: str, text_col: str, width: int = 64
-) -> DataFrame:
+def length_buckets(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(bucket, n_docs, max_tokens, sum_tokens, pad_ppm) — padding-waste
     analysis for length-bucketed batch shaping: documents grouped into
-    ``width``-token buckets (bucket = n_tokens div width), and per
-    bucket the exact integer-ppm fraction of a padded batch that would
-    be pad tokens (``(max*n - sum) * 1e6 div (max*n)``). Training
+    LENGTH_BUCKET_WIDTH-token buckets (bucket = n_tokens div
+    LENGTH_BUCKET_WIDTH), and per bucket the exact integer-ppm fraction
+    of a padded batch that would be pad tokens (``(max*n - sum) * 1e6
+    div (max*n)``). Training
     throughput dies on padding when batches mix lengths; this is the
     measurement that sizes the buckets. Token proxy = whitespace word
     count (the token_counts contract).
@@ -251,7 +247,7 @@ def length_buckets(
         F.col(id_col).alias("id"), F.size(_words(text_col)).cast("long").alias("n_tokens")
     )
     return (
-        staged.select(F.expr(f"n_tokens div {int(width)}").alias("bucket"), "n_tokens")
+        staged.select(F.expr(f"n_tokens div {LENGTH_BUCKET_WIDTH}").alias("bucket"), "n_tokens")
         .groupBy("bucket")
         .agg(
             F.count("*").alias("n_docs"),
@@ -275,20 +271,18 @@ def temperature_mix(
     df: DataFrame,
     id_col: str,
     source_col: str,
-    alpha_quarters: int = 2,
-    budget_docs: int = 1000,
 ) -> DataFrame:
     """Temperature-based source mixing planner (the XLM-R / mT5
     alpha-sampling rule): sampling weight w_s = n_s^alpha flattens the
     source distribution so head sources stop drowning the tail
     (alpha=1 keeps natural proportions, alpha->0 approaches uniform).
     This op DERIVES the weights from measured source sizes — the
-    upstream planner whose output feeds ``mix_epoch_weights``.
+    upstream planner whose output feeds ``mix_epoch_weights`` — with
+    alpha = 1/2 and a budget of MIX_BUDGET_DOCS documents.
 
-    Portability discipline: alpha is restricted to quarters
-    (alpha = alpha_quarters/4, 1..4) so n^alpha composes from sqrt —
-    the one libm call that IEEE 754 requires correctly rounded, hence
-    bit-identical across Spark and DuckDB (log/exp-based pow is not).
+    Portability discipline: n^(1/2) is sqrt — the one libm call that
+    IEEE 754 requires correctly rounded, hence bit-identical across
+    Spark and DuckDB (log/exp-based pow is not).
     The weight snaps to integer fixed point (floor(w * 10000)) before
     any aggregation, so sums stay order-independent; quotas and
     per-source sampling rates are integer `div` arithmetic; the
@@ -303,28 +297,19 @@ def temperature_mix(
     Returns one row per source:
     (source, n_docs, weight_fp, quota_docs, rate_ppm, sampled_docs).
     """
-    if alpha_quarters not in (1, 2, 3, 4):
-        raise ValueError("alpha_quarters must be 1..4 (alpha = q/4)")
     from pyspark.sql.window import Window
 
     n = df.groupBy(F.col(source_col).alias("source")).agg(
         F.count(F.lit(1)).alias("n_docs")
     )
-    nd = F.col("n_docs").cast("double")
-    root4 = F.sqrt(F.sqrt(nd))
-    w = {
-        1: root4,
-        2: F.sqrt(nd),
-        3: F.sqrt(nd) * root4,
-        4: nd,
-    }[alpha_quarters]
+    w = F.sqrt(F.col("n_docs").cast("double"))
     sized = n.withColumn("weight_fp", F.floor(w * F.lit(10000)).cast("long"))
     total_w = Window.partitionBy()  # dimension-sized frame: ~|sources| rows
     rates = (
         sized.withColumn("total_fp", F.sum("weight_fp").over(total_w))
         .withColumn(
             "quota_docs",
-            F.expr(f"({int(budget_docs)}L * weight_fp) div total_fp"),
+            F.expr(f"({MIX_BUDGET_DOCS}L * weight_fp) div total_fp"),
         )
         .withColumn(
             "rate_ppm",

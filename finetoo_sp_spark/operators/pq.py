@@ -44,12 +44,14 @@ M = 4  # subspaces per vector
 KSUB = 4  # centroids per subspace codebook
 ITERS = 2  # k-means rounds, counting the init
 NLIST = 4  # IVF coarse cells
+NPROBE = 2  # IVF cells probed per query
+TOP_K = 10  # neighbors returned per query
 
 
-def pq_train(emb: DataFrame, m: int = M) -> list[list[list[int]]]:
-    """Train m per-subspace codebooks of KSUB centroids; returns
+def pq_train(emb: DataFrame) -> list[list[list[int]]]:
+    """Train M per-subspace codebooks of KSUB centroids; returns
     codebooks[mi][j] = the j-th centroid of subspace mi as a fixed-point
-    int list (d/m dims).
+    int list (d/M dims).
     One pass per k-means round covers ALL subspaces (the per-dimension
     update groups by (subspace, cluster, dim) in a single aggregate)."""
     e = emb.select(
@@ -57,17 +59,17 @@ def pq_train(emb: DataFrame, m: int = M) -> list[list[list[int]]]:
     )
     init_rows = e.orderBy("id").limit(KSUB).collect()
     dims = len(init_rows[0]["v"])
-    if dims % m:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sub = dims // m
+    if dims % M:
+        raise ValueError(f"dims {dims} not divisible by M={M}")
+    sub = dims // M
     codebooks = [
         [list(r["v"])[mi * sub : (mi + 1) * sub] for r in init_rows]
-        for mi in range(m)
+        for mi in range(M)
     ]
 
     def code_cols(frame_v="v"):
         cols = []
-        for mi in range(m):
+        for mi in range(M):
             sl = F.slice(frame_v, mi * sub + 1, sub)
             keys = [
                 (_sqdist_to(sl, c) * KSUB + F.lit(j)).cast("long")
@@ -82,13 +84,13 @@ def pq_train(emb: DataFrame, m: int = M) -> list[list[list[int]]]:
         ex = (
             a.select(
                 F.posexplode("v").alias("dim", "val"),
-                *[f"c{mi}" for mi in range(m)],
+                *[f"c{mi}" for mi in range(M)],
             )
             .withColumn("mi", (F.col("dim") / sub).cast("int"))
             .withColumn(
                 "cl",
                 F.element_at(
-                    F.array(*[F.col(f"c{mi}") for mi in range(m)]),
+                    F.array(*[F.col(f"c{mi}") for mi in range(M)]),
                     F.col("mi") + 1,
                 ),
             )
@@ -96,7 +98,7 @@ def pq_train(emb: DataFrame, m: int = M) -> list[list[list[int]]]:
         sums = (
             ex.groupBy("mi", "cl", "dim")
             .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()  # m * ksub * dims rows: codebook-sized, not data-sized
+            .collect()  # M * KSUB * dims rows: codebook-sized, not data-sized
         )
         new_c = [[list(c) for c in cb] for cb in codebooks]
         for r in sums:
@@ -143,15 +145,10 @@ def _sqdist_lists(a: list[int], b: list[int]) -> int:
     return sum((x - y) * (x - y) for x, y in zip(a, b))
 
 
-def ann_ivf_pq_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF-PQ search: (query_id, neighbor_id, adc_dist, rank) — the k
+def ann_ivf_pq_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+    """IVF-PQ search: (query_id, neighbor_id, adc_dist, rank) — the TOP_K
     nearest candidates per query by asymmetric PQ distance among the
-    nprobe probed IVF cells, self-pairs excluded, ties to the lower id.
+    NPROBE probed IVF cells, self-pairs excluded, ties to the lower id.
 
     The coarse quantizer is clustering.kmeans_fit (NLIST cells) and the
     probe order is the exact integer distance from the query to each
@@ -160,7 +157,7 @@ def ann_ivf_pq_topk(
     array literals, so candidate scoring is ``element_at(table, code)``
     sums — a pure narrow expression; no vector math touches the corpus
     at query time (the PQ promise)."""
-    centroids, assigned = kmeans_fit(emb, "vec_id", "embedding", k=NLIST)
+    centroids, assigned = kmeans_fit(emb, "vec_id", "embedding")
     codebooks = pq_train(emb)
     sub = len(codebooks[0][0])
     codes = pq_assign(emb, codebooks)
@@ -179,7 +176,7 @@ def ann_ivf_pq_topk(
         order = sorted(
             (_sqdist_lists(qv, c) * NLIST + j) for j, c in enumerate(centroids)
         )
-        cells = [int(x % NLIST) for x in order[:nprobe]]
+        cells = [int(x % NLIST) for x in order[:NPROBE]]
         adc_tables = [
             [
                 _sqdist_lists(qv[mi * sub : (mi + 1) * sub], codebooks[mi][j])
@@ -208,22 +205,18 @@ def ann_ivf_pq_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "adc_dist", "rank")
     )
 
 
-def ivf_pq_recall(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Measured recall@k of IVF-PQ against the EXACT integer-L2 top-k:
-    (query_id, n_hits, k) where n_hits = |approx top-k ∩ exact top-k|.
+def ivf_pq_recall(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+    """Measured recall@k (k = TOP_K) of IVF-PQ against the EXACT
+    integer-L2 top-k: (query_id, n_hits, k) where n_hits = |approx
+    top-k ∩ exact top-k|.
     Both sides are integer-deterministic, so the oracle reproduces the
     recall number itself, not just the shape."""
-    approx = ann_ivf_pq_topk(emb, query_ids, k=k, nprobe=nprobe).select(
+    approx = ann_ivf_pq_topk(emb, query_ids).select(
         "query_id", "neighbor_id"
     )
 
@@ -250,7 +243,7 @@ def ivf_pq_recall(
     w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
     exact = (
         d.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id")
     )
     hits = approx.join(exact, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
@@ -262,6 +255,6 @@ def ivf_pq_recall(
         .select(
             "query_id",
             F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            F.lit(k).cast("long").alias("k"),
+            F.lit(TOP_K).cast("long").alias("k"),
         )
     )

@@ -27,10 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_ROUNDS = 6  # pointer-jumping rounds: chains up to 2**6 = 64 hops resolve
 
-def resolve_redirects(edges: DataFrame, max_rounds: int = 6) -> DataFrame:
+
+def resolve_redirects(edges: DataFrame) -> DataFrame:
     """edges(src, dst) — one outgoing edge per src — to
-    (url, final_url, hops, is_loop); chains up to 2**max_rounds hops
+    (url, final_url, hops, is_loop); chains up to 2**MAX_ROUNDS hops
     resolve exactly, longer-or-cyclic ones flag is_loop."""
     e = edges.select("src", "dst").dropDuplicates(["src"])
     r = e.select(
@@ -38,7 +40,7 @@ def resolve_redirects(edges: DataFrame, max_rounds: int = 6) -> DataFrame:
         F.col("dst").alias("cur"),
         F.lit(1).cast("long").alias("hops"),
     )
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         nxt = r.select(
             F.col("u").alias("ju"),
             F.col("cur").alias("jcur"),

@@ -40,17 +40,13 @@ from pyspark.sql import DataFrame, functions as F
 
 from .textstats import _words
 
+BM25_TOP_K = 10  # documents returned per query
 
-def bm25_topk(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    query_terms: list[str],
-    k: int = 10,
-) -> DataFrame:
-    """(id, score, rank) — top-k docs for ``query_terms`` by rational
-    BM25, rank 1..k, ties broken by ascending id. Docs matching no
-    query term never appear."""
+
+def bm25_topk(docs: DataFrame, id_col: str, text_col: str, query_terms: list[str]) -> DataFrame:
+    """(id, score, rank) — top-BM25_TOP_K docs for ``query_terms`` by
+    rational BM25, rank 1..BM25_TOP_K, ties broken by ascending id.
+    Docs matching no query term never appear."""
     staged = docs.select(
         F.col(id_col).alias("id"), _words(text_col).alias("_w")
     ).select("id", F.size("_w").alias("dl"), "_w")
@@ -86,7 +82,7 @@ def bm25_topk(
         .groupBy("id")
         .agg(F.sum("term_score").alias("score"))
     )
-    out = scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
+    out = scored.orderBy(F.desc("score"), F.asc("id")).limit(BM25_TOP_K)
     from pyspark.sql.window import Window
 
     w = Window.orderBy(F.desc("score"), F.asc("id"))

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+ANN_K = 5  # ann_lsh_bucketed: neighbors returned per query
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
@@ -94,17 +96,13 @@ def sign_bucket(vec_col, n_bits: int = 8):
     return F.concat_ws("", bits)
 
 
-def ann_lsh_bucketed(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_bits: int = 8,
-) -> DataFrame:
-    """Approximate top-k: exact cosine within the query's sign-LSH bucket.
+def ann_lsh_bucketed(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-ANN_K: exact cosine within the query's 8-bit
+    sign-LSH bucket.
 
     Returns (query_id, neighbor_id, cosine, rank) — rank within bucket.
     Scale: the corpus join key is the bucket id, so the cross product is
-    per-bucket (expected corpus/2^n_bits per side); one shuffle on bucket
+    per-bucket (expected corpus/2^8 per side); one shuffle on bucket
     + per-query window top-k.
 
     Already incremental by construction: the query side is a separate
@@ -119,12 +117,12 @@ def ann_lsh_bucketed(
     cb = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("cvec"),
-        sign_bucket("embedding", n_bits).alias("bucket"),
+        sign_bucket("embedding").alias("bucket"),
     )
     qb = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
-        sign_bucket("embedding", n_bits).alias("bucket"),
+        sign_bucket("embedding").alias("bucket"),
     )
     qn = with_norm(qb, "query_id", "qvec").withColumnsRenamed({"id": "query_id", "unit": "qv"})
     cn = with_norm(cb, "neighbor_id", "cvec").withColumnsRenamed(
@@ -141,7 +139,7 @@ def ann_lsh_bucketed(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= ANN_K)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 

@@ -7,10 +7,8 @@ Reference surface: src/export/bom_exporter.cc —
 - ExportDimensions (:261-285): handle/type/value/text/layer/drawing CSV.
 
 Spark mapping (SURVEY A6-A8, F9): `df.write.json` / `df.write.csv` with
-a column-level sanitize expression. Writers are distributed (one file
-per partition); `single_file=True` coalesces for small exports where a
-single artifact is wanted (driver-sized data only — never at corpus
-scale).
+a column-level sanitize expression. Writers are distributed: one file
+per partition, never a driver-side coalesce.
 """
 
 from __future__ import annotations
@@ -36,12 +34,9 @@ def _sanitized(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def write_json(df: DataFrame, path: str, single_file: bool = False) -> None:
+def write_json(df: DataFrame, path: str) -> None:
     """JSON-lines export with string sanitization (A6)."""
-    out = _sanitized(df)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").json(path)
+    _sanitized(df).write.mode("overwrite").json(path)
 
 
 def dim_type_decode(code: Column | str) -> Column:
@@ -60,11 +55,12 @@ def dim_type_decode(code: Column | str) -> Column:
     )
 
 
-def format_bom_lines(
-    bom: DataFrame,
-    part_width: int = 40,
-    qty_width: int = 8,
-) -> DataFrame:
+# FormatBOM column widths
+PART_WIDTH = 40
+QTY_WIDTH = 8
+
+
+def format_bom_lines(bom: DataFrame) -> DataFrame:
     """Fixed-width rendering of (part, quantity) BOM rows as (line_no,
     line) rows — an
     analogue of the reference's FormatBOM (query_service.cc:181-206:
@@ -72,7 +68,7 @@ def format_bom_lines(
     clone of its exact header/separator layout. line_no 0 = header,
     1 = separator, 2.. = entries; ties broken on part name so the
     rendering is byte-deterministic. Part names wider than
-    ``part_width`` are truncated to ``part_width - 3`` + '...' (the
+    ``PART_WIDTH`` are truncated to ``PART_WIDTH - 3`` + '...' (the
     reference's over-width rule) so fixed-width rows stay unambiguous
     instead of silently rpad-truncating.
 
@@ -85,37 +81,34 @@ def format_bom_lines(
     spark = bom.sparkSession
     header = spark.createDataFrame(
         [
-            (0, "PART".ljust(part_width) + "QTY".rjust(qty_width)),
-            (1, "-" * (part_width + qty_width)),
+            (0, "PART".ljust(PART_WIDTH) + "QTY".rjust(QTY_WIDTH)),
+            (1, "-" * (PART_WIDTH + QTY_WIDTH)),
         ],
         ["line_no", "line"],
     )
     w = Window.orderBy(F.desc("quantity"), F.asc("part"))
     shown_part = F.when(
-        F.length("part") > part_width,
-        F.concat(F.substring("part", 1, part_width - 3), F.lit("...")),
+        F.length("part") > PART_WIDTH,
+        F.concat(F.substring("part", 1, PART_WIDTH - 3), F.lit("...")),
     ).otherwise(F.col("part"))
     body = bom.select(
         (F.row_number().over(w) + 1).cast("long").alias("line_no"),
         F.concat(
-            F.rpad(shown_part, part_width, " "),
-            F.lpad(F.col("quantity").cast("string"), qty_width, " "),
+            F.rpad(shown_part, PART_WIDTH, " "),
+            F.lpad(F.col("quantity").cast("string"), QTY_WIDTH, " "),
         ).alias("line"),
     )
     return header.select(F.col("line_no").cast("long"), "line").unionByName(body)
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """Quoted CSV export with header + sanitization (A7/A8; reference
     quotes every field, bom_exporter.cc:230-240 -> quoteAll)."""
-    out = _sanitized(df)
-    if single_file:
-        out = out.coalesce(1)
     # escape='"' -> RFC-4180 doubled quotes (Spark defaults to backslash);
     # whitespace options off -> the writer defaults TRIM leading/trailing
     # whitespace even inside quoted fields, which breaks byte-identical
     # round trips (reference quotes fields verbatim)
-    out.write.mode("overwrite").option("header", True).option("quoteAll", True).option(
+    _sanitized(df).write.mode("overwrite").option("header", True).option("quoteAll", True).option(
         "escape", '"'
     ).option("ignoreLeadingWhiteSpace", False).option(
         "ignoreTrailingWhiteSpace", False

@@ -37,6 +37,7 @@ from finetoo_sp_spark.operators.dedup import sha60
 
 HASH_BITS = 60
 CMS_DEPTH = 4  # count-min hash rows
+CMS_WIDTH = 256  # count-min cells per row
 
 
 def hll_registers(df: DataFrame, key_col: str, group_col: str, p: int = 12) -> DataFrame:
@@ -109,23 +110,23 @@ def kmv_distinct(df: DataFrame, key_col: str, group_col: str, k: int = 256) -> D
     return agg.select("grp", "n_kept", "kth_hash", est.cast("long").alias("est_distinct"))
 
 
-def cms_sketch(df: DataFrame, key_col: str, w: int = 256) -> DataFrame:
+def cms_sketch(df: DataFrame, key_col: str) -> DataFrame:
     """(row, col, cnt) — count-min sketch (Cormode 2005): CMS_DEPTH
-    independent hash rows of width w; every key increments one cell per
-    row. One partially-aggregated groupBy on the (CMS_DEPTH*w)-cell
-    space — frequency state bounded regardless of key cardinality,
-    merged by cell-wise sum. Hash i = portable sha-60 over a salted key, so an external
-    engine rebuilds the identical sketch.
+    independent hash rows of width CMS_WIDTH; every key increments one
+    cell per row. One partially-aggregated groupBy on the
+    (CMS_DEPTH*CMS_WIDTH)-cell space — frequency state bounded
+    regardless of key cardinality, merged by cell-wise sum. Hash i =
+    portable sha-60 over a salted key, so an external engine rebuilds
+    the identical sketch.
     """
-    if w < 2:
-        raise ValueError("need w >= 2 columns")
     cells = F.explode(
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("row"),
                     (
-                        sha60(F.concat(F.lit(f"cms{i}:"), F.col(key_col).cast("string"))) % w
+                        sha60(F.concat(F.lit(f"cms{i}:"), F.col(key_col).cast("string")))
+                        % CMS_WIDTH
                     ).alias("col"),
                 )
                 for i in range(CMS_DEPTH)
@@ -140,10 +141,10 @@ def cms_sketch(df: DataFrame, key_col: str, w: int = 256) -> DataFrame:
     )
 
 
-def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str, w: int = 256) -> DataFrame:
+def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str) -> DataFrame:
     """(key, est_cnt) — point-query the sketch for each probe key:
     min over the CMS_DEPTH cells the key hashes to. est >= true always
-    (one-sided error); the sketch is at most CMS_DEPTH*w rows and is
+    (one-sided error); the sketch is at most CMS_DEPTH*CMS_WIDTH rows and is
     broadcast to the probes — no large shuffle anywhere.
     """
     coords = probes.select(
@@ -154,7 +155,8 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str, w: int = 25
                     F.struct(
                         F.lit(i).alias("row"),
                         (
-                            sha60(F.concat(F.lit(f"cms{i}:"), F.col(key_col).cast("string"))) % w
+                            sha60(F.concat(F.lit(f"cms{i}:"), F.col(key_col).cast("string")))
+                            % CMS_WIDTH
                         ).alias("col"),
                     )
                     for i in range(CMS_DEPTH)

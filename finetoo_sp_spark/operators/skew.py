@@ -3,7 +3,7 @@
 Host-level skew is a data property of web corpora (a few hosts own a
 large share of pages — the generator reproduces this). A plain
 ``groupBy(host)`` shuffles all of a hot host's rows into one reducer
-task; the salted two-phase form bounds any task at ~1/n_salts of the
+task; the salted two-phase form bounds any task at ~1/N_SALTS of the
 hot key for one extra (tiny) shuffle of partial aggregates:
 
     groupBy(key, salt).agg(partials)  ->  groupBy(key).agg(merge)
@@ -24,12 +24,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+N_SALTS = 16  # salted_agg: ways a hot key's reduce side splits
+
 
 def salted_agg(
     df: DataFrame,
     key: str | list[str],
     aggs: dict[str, tuple[Column, str]],
-    n_salts: int = 16,
     salt_on: str | Column | None = None,
 ) -> DataFrame:
     """Two-phase salted aggregation.
@@ -52,7 +53,7 @@ def salted_agg(
     salt_src = (
         F.col(salt_on) if isinstance(salt_on, str) else salt_on
     ) if salt_on is not None else F.xxhash64(*[F.col(c) for c in df.columns])
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(salt_src), F.lit(n_salts)))
+    salted = df.withColumn("__salt", F.pmod(F.xxhash64(salt_src), F.lit(N_SALTS)))
 
     partial = salted.groupBy(*keys, "__salt").agg(
         *[expr.alias(name) for name, (expr, _) in aggs.items()]
@@ -77,7 +78,7 @@ def skew_report(
     At 10^12 rows this is one partially-aggregated groupBy over the key
     (the same shuffle the real job pays anyway) plus a broadcast of a
     single total row — run it on a sample or yesterday's partition to
-    pick ``n_salts``/``bucket_cap`` before the expensive job."""
+    pick ``bucket_cap`` before the expensive job."""
     t = target_rows_per_task
     counts = df.groupBy(F.col(key).alias("key")).agg(F.count("*").alias("n_rows"))
     total = counts.agg(F.sum("n_rows").alias("total"))

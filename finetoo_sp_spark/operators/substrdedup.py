@@ -40,10 +40,12 @@ from pyspark.sql import functions as F
 
 from finetoo_sp_spark.operators.dedup import _base_hash, _norm_words
 
+WINDOW_K = 8  # tokens per window: the shortest duplicate the pass finds
 
-def _windows(df: DataFrame, k: int, hash_mode: str) -> DataFrame:
-    """(id, n_tokens, start, wh) — every positional k-token window of
-    (doc_id, text).
+
+def _windows(df: DataFrame, hash_mode: str) -> DataFrame:
+    """(id, n_tokens, start, wh) — every positional k-token window
+    (k = WINDOW_K) of (doc_id, text).
 
     Docs shorter than k tokens produce NO windows (a shorter-than-k
     window could false-match across docs); they still appear in the
@@ -53,7 +55,7 @@ def _windows(df: DataFrame, k: int, hash_mode: str) -> DataFrame:
     # materialize the words array first (lambda over the raw expression
     # would re-run regexp+split per position — see dedup.shingles)
     starts = F.when(
-        F.size("_w") >= k, F.sequence(F.lit(0), F.size("_w") - k)
+        F.size("_w") >= WINDOW_K, F.sequence(F.lit(0), F.size("_w") - WINDOW_K)
     ).otherwise(F.array().cast("array<int>"))
     return (
         w.select("id", F.size("_w").alias("n_tokens"), F.explode(starts).alias("start"), "_w")
@@ -62,7 +64,7 @@ def _windows(df: DataFrame, k: int, hash_mode: str) -> DataFrame:
             "n_tokens",
             "start",
             _base_hash(
-                F.concat_ws(" ", F.slice("_w", F.col("start") + 1, k)), hash_mode
+                F.concat_ws(" ", F.slice("_w", F.col("start") + 1, WINDOW_K)), hash_mode
             ).alias("wh"),
         )
     )
@@ -80,11 +82,7 @@ def _dup_windows(wins: DataFrame) -> DataFrame:
     )
 
 
-def window_dup_stats(
-    df: DataFrame,
-    k: int = 8,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
+def window_dup_stats(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """Per-doc duplicated-window statistics.
 
     Returns (id, n_tokens, n_windows, n_dup_windows, dup_tokens,
@@ -96,7 +94,7 @@ def window_dup_stats(
     removal run (and a quality signal on its own: boilerplate-heavy pages
     score high).
     """
-    wins = _windows(df, k, hash_mode)
+    wins = _windows(df, hash_mode)
     dup = _dup_windows(wins)
     # interval union per doc: each dup start covers min(k, next_start - start)
     nxt = Window.partitionBy("id").orderBy("start")
@@ -105,7 +103,10 @@ def window_dup_stats(
         .distinct()  # the same start can host only one window, but be safe
         .withColumn(
             "covered",
-            F.least(F.lit(k), F.coalesce(F.lead("start").over(nxt) - F.col("start"), F.lit(k))),
+            F.least(
+                F.lit(WINDOW_K),
+                F.coalesce(F.lead("start").over(nxt) - F.col("start"), F.lit(WINDOW_K)),
+            ),
         )
         .groupBy("id")
         .agg(F.sum("covered").alias("dup_tokens"))
@@ -134,11 +135,7 @@ def window_dup_stats(
     )
 
 
-def remove_duplicate_windows(
-    df: DataFrame,
-    k: int = 8,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
+def remove_duplicate_windows(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """Exact-substring removal: drop every token covered by a duplicated
     k-window occurrence EXCEPT the corpus-wide canonical one (minimum
     (id, start) within the hash group), then reassemble each doc from
@@ -149,12 +146,12 @@ def remove_duplicate_windows(
     stream (the same canonicalization every dedup path uses), so
     clean_text is normalized text minus removed spans.
     """
-    wins = _windows(df, k, hash_mode)
+    wins = _windows(df, hash_mode)
     removed = _dup_windows(wins).filter(~F.col("keeper"))
     # positions covered by any removed window occurrence in this doc
     pos = (
         removed.select(
-            "id", F.explode(F.sequence("start", F.col("start") + (k - 1))).alias("pos")
+            "id", F.explode(F.sequence("start", F.col("start") + (WINDOW_K - 1))).alias("pos")
         )
         .distinct()
     )

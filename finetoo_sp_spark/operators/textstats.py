@@ -207,20 +207,17 @@ def fingerprint_summary(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 5,
-    idf_mode: str = "ratio",
-) -> DataFrame:
-    """Per-document top-k TF-IDF terms.
+TFIDF_TOP_K = 5  # terms kept per document
+BPE_TOP_K = 30  # candidate pairs kept
 
-    tf = term count within the document; idf = N/df (``idf_mode='ratio'``,
-    exact integer-ratio arithmetic — cross-engine reproducible since no
-    transcendental is evaluated) or ln(N/df) (``'log'``, the classic
-    form — engines' libm ulp differences make it unsuitable for
-    value-hash oracles, so the registered query uses ratio mode).
+
+def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document top-``TFIDF_TOP_K`` TF-IDF terms.
+
+    tf = term count within the document; idf = N/df, exact integer-ratio
+    arithmetic — cross-engine reproducible since no transcendental is
+    evaluated (the classic ln(N/df) would put engines' libm ulp
+    differences under the value-hash oracle).
     Deterministic tie-break: (score desc, term asc).
 
     Scale: one shuffle for (id, term) counts, one vocabulary-sized
@@ -237,10 +234,6 @@ def tfidf_top_terms(
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.countDistinct(id_col).alias("n"))
     idf = F.col("n") / F.col("df")
-    if idf_mode == "log":
-        idf = F.log(idf)
-    elif idf_mode != "ratio":
-        raise ValueError(f"unknown idf_mode {idf_mode!r}")
     scored = (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))  # one scalar row broadcast
@@ -249,7 +242,7 @@ def tfidf_top_terms(
     w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= TFIDF_TOP_K)
         .select("id", "term", "tf", "df", F.round("score", 6).alias("score"), "rk")
     )
 
@@ -596,8 +589,9 @@ def gopher_rules(
     )
 
 
-def bpe_pair_counts(df: DataFrame, text_col: str, k: int = 30) -> DataFrame:
-    """(pair, cnt) — corpus-wide adjacent character-pair frequencies, i.e.
+def bpe_pair_counts(df: DataFrame, text_col: str) -> DataFrame:
+    """(pair, cnt) — the ``BPE_TOP_K`` most frequent corpus-wide adjacent
+    character pairs, i.e.
     the candidate table for the FIRST byte-pair-encoding merge (Sennrich
     2016): the foundation of vocabulary induction over a training corpus.
 
@@ -620,7 +614,7 @@ def bpe_pair_counts(df: DataFrame, text_col: str, k: int = 30) -> DataFrame:
         pairs.groupBy("pair")
         .agg(F.sum("n").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("pair"))
-        .limit(k)
+        .limit(BPE_TOP_K)
     )
 
 

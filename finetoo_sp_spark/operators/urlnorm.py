@@ -72,12 +72,8 @@ def _clean_query(query: Column, drop_params: tuple[str, ...]) -> Column:
     ).otherwise(F.lit(""))
 
 
-def canonicalize_urls(
-    df: DataFrame,
-    url_col: str = "url",
-    out_col: str = "url_canon",
-) -> DataFrame:
-    """Append ``out_col``: the RFC-3986-normalized form of ``url_col``.
+def canonicalize_urls(df: DataFrame) -> DataFrame:
+    """Append ``url_canon``: the RFC-3986-normalized form of ``url``.
 
     Normalizations applied (each a pure column expression):
 
@@ -95,7 +91,7 @@ def canonicalize_urls(
     projection — the staged temp columns below exist for readability
     and collapse in Catalyst's projection folding.
     """
-    u = F.trim(F.col(url_col))
+    u = F.trim(F.col("url"))
     no_frag = F.regexp_replace(u, "#.*", "")
     scheme = F.lower(F.regexp_extract(no_frag, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
     rest = F.regexp_replace(no_frag, r"^[A-Za-z][A-Za-z0-9+.-]*://", "")
@@ -140,7 +136,7 @@ def canonicalize_urls(
         _clean_query(F.col("_query"), DEFAULT_DROP_PARAMS),
     )
     out = stage.withColumn(
-        out_col, F.when(F.col("_scheme") != "", canon).otherwise(u)
+        "url_canon", F.when(F.col("_scheme") != "", canon).otherwise(u)
     )
     return out.drop(
         "_scheme", "_rest", "_auth", "_after", "_hostname", "_port", "_portout",

@@ -118,30 +118,21 @@ class QueryResponse:
     elapsed_ms: float = 0.0
 
 
-def process_plan(
-    g: PropertyGraphFrames,
-    plan: str | list[dict],
-    materialize: bool = True,
-) -> QueryResponse:
+def process_plan(g: PropertyGraphFrames, plan: str | list[dict]) -> QueryResponse:
     """Execute a plan (JSON string, possibly markdown-fenced, or a parsed
-    op list) and assemble the QueryResponse.
-
-    ``materialize=False`` skips the driver-side answer rendering (no
-    action is triggered) — the caller gets the lazy frame; use this at
-    corpus scale. With it on, only 10 rows (plus one to detect more)
-    cross the driver (take(), never collect()).
+    op list) and assemble the QueryResponse. The answer renders only 10
+    rows (plus one to detect more) on the driver (take(), never
+    collect()); the lazy frame rides along for corpus-scale use.
     """
     ops = parse_plan_json(plan) if isinstance(plan, str) else plan
     t0 = time.time()
     result = execute_plan(g, ops)
-    answer = ""
-    if materialize:
-        rows = result.df.take(11)  # the first 10 rows, plus one to detect more
-        shown = rows[:10]
-        cols = result.df.columns
-        body = "\n".join(" | ".join(str(r[c]) for c in cols) for r in shown)
-        suffix = "\n..." if len(rows) > 10 else ""
-        answer = " | ".join(cols) + "\n" + body + suffix
+    rows = result.df.take(11)  # the first 10 rows, plus one to detect more
+    shown = rows[:10]
+    cols = result.df.columns
+    body = "\n".join(" | ".join(str(r[c]) for c in cols) for r in shown)
+    suffix = "\n..." if len(rows) > 10 else ""
+    answer = " | ".join(cols) + "\n" + body + suffix
     elapsed_ms = (time.time() - t0) * 1000.0
     return QueryResponse(
         plan=ops, df=result.df, steps=result.steps, answer=answer, elapsed_ms=elapsed_ms

@@ -44,7 +44,7 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from finetoo_sp_spark.extraction.extract import extract_pages, place_buckets, url_salt
 from finetoo_sp_spark.operators.dedup import is_sha, sha60
@@ -52,12 +52,9 @@ from finetoo_sp_spark.operators.dedup import is_sha, sha60
 MANIFEST_DIRNAME = "_manifests"
 BUCKET_FIELD = StructField("bucket", IntegerType())
 # what the manifest pass reads back from the committed data: the stats
-# stamped at write time, or (verify_content) the bytes to re-hash
+# stamped at write time
 _STATS_SCHEMA = StructType(
     [BUCKET_FIELD, StructField("row_hash", LongType()), StructField("text_chars", IntegerType())]
-)
-_TEXT_SCHEMA = StructType(
-    [BUCKET_FIELD, StructField("url", StringType()), StructField("text", StringType())]
 )
 
 
@@ -116,13 +113,12 @@ def committed_buckets(out_dir: str) -> tuple[list[int], int]:
 
 
 def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The manifest table under ``out_dir``, or None when no manifest was
+    ever written. A manifest directory Spark cannot read raises."""
     path = os.path.join(out_dir, MANIFEST_DIRNAME)
     if not os.path.isdir(path):  # cheap driver-side check, no Spark job
         return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+    return spark.read.parquet(path)
 
 
 def write_with_manifests(
@@ -131,7 +127,6 @@ def write_with_manifests(
     input_counts: dict[int, int] | None = None,
     n_buckets: int | None = None,
     hash_mode: str = "xxhash64",
-    verify_content: bool = False,
 ) -> list[dict]:
     """Write a bucketed result + its manifest rows; return those rows.
 
@@ -162,10 +157,7 @@ def write_with_manifests(
       columns from disk (explicit schema: no inference job; parquet
       column pruning: the text bytes are decompressed once, not twice)
       and its <= n_buckets rows become the manifest files, written from
-      the driver (:func:`write_manifest_files`). ``verify_content=True``
-      switches to the strict audit that re-hashes the text actually on
-      disk (catches silent data-file corruption beyond parquet's own
-      page checksums, at the cost of a full second text scan).
+      the driver (:func:`write_manifest_files`).
     """
     spark = result.sparkSession
     data_path = os.path.join(out_dir, "data")
@@ -178,15 +170,7 @@ def write_with_manifests(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("bucket").parquet(data_path)
 
-    if verify_content:
-        written = (
-            spark.read.schema(_TEXT_SCHEMA)
-            .parquet(data_path)
-            .withColumn("row_hash", _row_hash(hash_mode))
-            .withColumn("text_chars", F.length("text"))
-        )
-    else:
-        written = spark.read.schema(_STATS_SCHEMA).parquet(data_path)
+    written = spark.read.schema(_STATS_SCHEMA).parquet(data_path)
     if input_counts is not None:  # prunes the read to this run's buckets
         written = written.filter(F.col("bucket").isin(list(input_counts)))
     stats = {
@@ -215,30 +199,22 @@ def run_resumable_extraction(
     pages: DataFrame,
     out_dir: str,
     n_buckets: int = 256,
-    keep_cols: list[str] | None = None,
-    strict_input_counts: bool = False,
-    pre_partition: bool = False,
     hash_mode: str = "xxhash64",
     extractor=None,
 ) -> dict:
     """Extract ``pages`` -> ``out_dir``, skipping buckets already committed.
 
-    ``strict_input_counts``: compute per-bucket input counts from the
-    *input* side as an independent cross-check against output counts (one
-    extra url-only scan + tiny shuffle). Off by default: the kernel is
-    row-preserving (exactly one output row per page), so output counts
-    are the input counts; the fresh-run row total still comes from the
-    parquet metadata count (no data scan, catches dropped-partition bugs).
+    Input counts: a fresh run takes its row total from the parquet
+    metadata count (no data scan, catches dropped-partition bugs), and the
+    kernel is row-preserving (exactly one output row per page), so each
+    bucket's output count is its input count. A resumed run counts the
+    remaining input per bucket (one url-only scan + tiny shuffle).
 
     Salting: the ``hash(url)`` bucket id is the shuffle key for the
     pre-write bucket placement (inside write_with_manifests), so
-    host-level skew never concentrates in an output partition.
-    ``pre_partition=True`` instead places the *raw* pages on the bucket
-    layout before the UDF — use when the input file layout itself is
-    host-clustered (e.g. WARC files grouped by crawl host) so that UDF
-    task sizes equalize; it costs a raw-byte shuffle, so leave off for
-    byte-balanced input splits. ``n_buckets`` should be >= 4x total
-    executor cores; it is also the resume granularity.
+    host-level skew never concentrates in an output partition; the
+    shuffle moves extracted text, not raw bytes. ``n_buckets`` should be
+    >= 4x total executor cores; it is also the resume granularity.
 
     Returns a metrics dict (extraction-rate metrics manifest): buckets
     total/committed/processed, rows in/out, phase timings.
@@ -250,7 +226,7 @@ def run_resumable_extraction(
     done, _ = committed_buckets(out_dir)
     todo = pages_b.filter(~F.col("bucket").isin(done)) if done else pages_b  # resume
     input_counts = None
-    if done or strict_input_counts:
+    if done:
         # resume path is rare + partial: always count the remaining input
         input_counts = {
             r["bucket"]: r["n"]
@@ -271,20 +247,12 @@ def run_resumable_extraction(
         }
 
     t = time.time()
-    if pre_partition:
-        todo = place_buckets(todo, n_buckets)
     # extractor is pluggable (same signature as extract_pages): pass
     # extraction.pdf.extract_pages_any for mixed HTML/PDF corpora
     extracted = (extractor or extract_pages)(
-        todo, repartition_buckets=None, keep_cols=(keep_cols or []) + ["bucket"]
+        todo, repartition_buckets=None, keep_cols=["bucket"]
     )
-    write_with_manifests(
-        extracted,
-        out_dir,
-        input_counts,
-        n_buckets=None if pre_partition else n_buckets,
-        hash_mode=hash_mode,
-    )
+    write_with_manifests(extracted, out_dir, input_counts, n_buckets=n_buckets, hash_mode=hash_mode)
     phases["extract_write_manifest"] = round(time.time() - t, 2)
 
     # the audit re-reads what is on disk, not the rows just returned

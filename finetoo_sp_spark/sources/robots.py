@@ -114,20 +114,14 @@ def _rule_regex(body):
     return F.concat(F.lit("^"), F.replace(out, F.lit("\\*"), F.lit(".*")))
 
 
-def compile_gate_rules(
-    rules: DataFrame,
-    agent: str = "*",
-    max_rules_per_host: int = 2048,
-    materialize: bool = False,
-) -> DataFrame:
+# rules kept per host, in file order (RFC 9309 truncation guidance)
+MAX_RULES_PER_HOST = 2048
+
+
+def compile_gate_rules(rules: DataFrame, agent: str) -> DataFrame:
     """The compiled rule side of ``gate_urls``: agent-group fallback
     resolved, per-host cap applied, wildcard/`$` paths lifted to
-    anchored Java regexes. With ``materialize=True`` the (dimension-
-    sized) frame is eagerly localCheckpoint'd, so REPEATED gating
-    against one robots snapshot pays the parse + compile chain once —
-    the second ``gate_urls(compiled=...)`` call's plan starts from the
-    materialized rows (lineage cut), not from re-running the robots
-    parser."""
+    anchored Java regexes."""
     r_agent = rules.filter(F.lower(F.col("agent")) == agent.lower())
     if agent != "*":
         star = rules.filter(F.col("agent") == "*")
@@ -139,7 +133,7 @@ def compile_gate_rules(
     cap_w = Window.partitionBy("_rh").orderBy("rule_idx")
     r = (
         r.withColumn("_cap_rn", F.row_number().over(cap_w))
-        .filter(F.col("_cap_rn") <= max_rules_per_host)
+        .filter(F.col("_cap_rn") <= MAX_RULES_PER_HOST)
         .drop("_cap_rn", "rule_idx")
     )
     anchored = F.col("path_prefix").endswith("$")
@@ -157,16 +151,10 @@ def compile_gate_rules(
             F.concat(_rule_regex(body), F.when(anchored, F.lit("$")).otherwise(F.lit(""))),
         ).alias("_rx"),
     )
-    return r.localCheckpoint(eager=True) if materialize else r
+    return r
 
 
-def gate_urls(
-    urls: DataFrame,
-    rules: DataFrame | None = None,
-    agent: str = "*",
-    max_rules_per_host: int = 2048,
-    compiled: DataFrame | None = None,
-) -> DataFrame:
+def gate_urls(urls: DataFrame, rules: DataFrame, agent: str = "*") -> DataFrame:
     """(host, path, allowed) — most-specific-match verdict per (host,
     path) URL row for ``agent``'s rule group; URLs with no matching rule are allowed.
 
@@ -175,21 +163,11 @@ def gate_urls(
     rule length with Allow winning ties. Per §2.1, a host where
     ``agent`` has no group of its own falls back to that host's ``*``
     group (an anti-join on the dimension-sized rules table). Rules
-    beyond ``max_rules_per_host`` (in file order, per RFC truncation
+    beyond ``MAX_RULES_PER_HOST`` (in file order, per RFC truncation
     guidance) are dropped before the join, bounding per-URL fanout on
     adversarial robots files; the join itself stays a host equi-join.
-
-    ``compiled``: a frame from ``compile_gate_rules`` — pass the same
-    materialized frame across calls to gate many URL batches against
-    one robots snapshot without re-parsing/compiling it each time.
     """
-    if compiled is None:
-        if rules is None:
-            raise ValueError("gate_urls needs rules= or compiled=")
-        compiled = compile_gate_rules(
-            rules, agent=agent, max_rules_per_host=max_rules_per_host
-        )
-    r = compiled
+    r = compile_gate_rules(rules, agent)
     u = urls.select("host", "path")
     match = F.when(F.col("_wild"), F.expr("rlike(path, _rx)")).otherwise(
         F.col("path").startswith(F.col("path_prefix"))

@@ -25,30 +25,28 @@ whole delta is shuffle-free; without bucketing it is one co-partitioned
 sort-merge exchange per side, still payload-free. No driver-side state,
 no collect.
 
-The fingerprint defaults to ``xxhash64`` of the raw payload column —
-change *detection* needs speed, not cryptographic strength (a false
+The fingerprint is ``xxhash64`` of the raw payload column — change
+*detection* needs speed, not cryptographic strength (a false
 "unchanged" needs a 64-bit collision on the SAME url between two
-crawls). Pass ``changed_pages`` a ``fingerprint_col`` to compare on
-extracted text or a stored content sha instead.
+crawls).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _slim(pages: DataFrame, fingerprint_col: Column | None, alias: str) -> DataFrame:
-    fp = fingerprint_col if fingerprint_col is not None else F.xxhash64("html")
-    return pages.select("url", fp.alias(alias))
+def _slim(pages: DataFrame, alias: str) -> DataFrame:
+    return pages.select("url", F.xxhash64("html").alias(alias))
 
 
 def snapshot_delta(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
     """(url, status) for every url in either snapshot — status in
     {added, removed, changed, unchanged}. One full-outer equi-join over
     the slim (url, hash) projections."""
-    o = _slim(old_pages, None, "_h_old")
-    n = _slim(new_pages, None, "_h_new")
+    o = _slim(old_pages, "_h_old")
+    n = _slim(new_pages, "_h_new")
     status = (
         F.when(F.col("_h_old").isNull(), F.lit("added"))
         .when(F.col("_h_new").isNull(), F.lit("removed"))
@@ -58,19 +56,14 @@ def snapshot_delta(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
     return o.join(n, "url", "full_outer").select("url", status.alias("status"))
 
 
-def changed_pages(
-    old_pages: DataFrame,
-    new_pages: DataFrame,
-    fingerprint_col: Column | None = None,
-) -> DataFrame:
+def changed_pages(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
     """The new snapshot restricted to urls that need (re-)extraction:
     added or changed vs the old snapshot. Returns new_pages rows
     unchanged (all columns). The old side joins in as a slim hash
     dimension, so only the fingerprints shuffle — the html payload of
     the new snapshot moves once, into its own extraction."""
-    fp = fingerprint_col if fingerprint_col is not None else F.xxhash64("html")
-    o = _slim(old_pages, fingerprint_col, "_h_old")
-    n = new_pages.withColumn("_h_new", fp)
+    o = _slim(old_pages, "_h_old")
+    n = new_pages.withColumn("_h_new", F.xxhash64("html"))
     return (
         n.join(o, "url", "left_outer")
         .filter(F.col("_h_old").isNull() | (F.col("_h_old") != F.col("_h_new")))

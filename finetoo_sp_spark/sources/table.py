@@ -23,10 +23,10 @@ mechanics the north rule's sink story needs, built from scratch:
   ``rollback_to_snapshot``.
 - **Schema evolution**: manifests carry a field-ID schema (Iceberg's
   column-ID model); :func:`evolve_schema` publishes a METADATA-ONLY
-  version that adds, renames, or drops columns without touching a data
+  version that adds or renames columns without touching a data
   file. Readers project every file through its write-time schema BY
   FIELD ID — renamed columns keep their data, added columns read as
-  NULL from pre-evolution files, dropped columns vanish — so a 100 TB
+  NULL from pre-evolution files — so a 100 TB
   table evolves in O(manifest), never O(data). Per-file [min, max]
   stats recorded under a column's old name simply stop pruning after a
   rename (a file without usable stats is always read — never lost
@@ -197,14 +197,12 @@ def evolve_schema(
     *,
     add: list[tuple[str, str]] | None = None,
     rename: dict[str, str] | None = None,
-    drop: list[str] | None = None,
 ) -> int:
     """Publish a METADATA-ONLY version with an evolved schema (Iceberg
     ``ALTER TABLE`` semantics): ``add`` appends (name, sparkTypeString)
     columns with fresh field ids (NULL in all pre-evolution files),
     ``rename`` re-labels columns keeping their field ids (data follows
-    the id, not the name), ``drop`` removes columns (files keep the
-    bytes; readers stop projecting them). No data file is touched —
+    the id, not the name). No data file is touched —
     O(manifest) at any table size. Raises on unknown/duplicate names;
     CommitConflict under concurrent writers like any commit."""
     v = current_version(path)
@@ -231,19 +229,12 @@ def evolve_schema(
                 f["name"] = new
         names.discard(old)
         names.add(new)
-    for name in drop or []:
-        if name not in names:
-            raise ValueError(f"drop of unknown column {name!r}")
-        fields = [f for f in fields if f["name"] != name]
-        names.discard(name)
     for name, typ in add or []:
         if name in names:
             raise ValueError(f"added column {name!r} already exists")
         fields.append({"id": next_id, "name": name, "type": _norm_type(typ)})
         next_id += 1
         names.add(name)
-    if not fields:
-        raise ValueError("schema evolution would drop every column")
     new_sid = m["schema_id"] + 1
     schemas[str(new_sid)] = {"fields": fields, "next_id": next_id}
     extra = {
@@ -540,11 +531,7 @@ def _resolve(
         # the key column may have been RENAMED since this upsert: the
         # delete file keeps the write-time name; map it by field id
         by_id = {f["id"]: f["name"] for f in cur}
-        cur_key = by_id.get(m["delete_key_id"])
-        if cur_key is None:
-            raise ValueError(
-                "merge-on-read key column was dropped by schema evolution"
-            )
+        cur_key = by_id[m["delete_key_id"]]
         if cur_key != key:
             deletes = deletes.withColumnRenamed(key, cur_key)
             key = cur_key

@@ -107,13 +107,13 @@ def make_warc(
     )
 
 
-def _chunk_encode(payload: bytes, size: int = 1000) -> bytes:
-    """Deterministic chunked transfer coding (fixed chunk size) for the
-    writer side — fixtures exercise multi-chunk bodies without any
+def _chunk_encode(payload: bytes) -> bytes:
+    """Deterministic chunked transfer coding (fixed 1000-byte chunks) for
+    the writer side — fixtures exercise multi-chunk bodies without any
     content-dependent framing choices."""
     out = bytearray()
-    for i in range(0, len(payload), size):
-        part = payload[i : i + size]
+    for i in range(0, len(payload), 1000):
+        part = payload[i : i + 1000]
         out += f"{len(part):x}".encode() + _CRLF + part + _CRLF
     out += b"0" + _CRLF + _CRLF
     return bytes(out)

@@ -1,10 +1,9 @@
 """Content-defined chunking: boundary determinism, insertion
 robustness (the CDC property), coverage invariants, plan shape."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from finetoo_sp_spark.operators.cdc import cdc_chunks, cdc_dedup_stats
+from finetoo_sp_spark.operators.cdc import CDC_DIVISOR, cdc_chunks, cdc_dedup_stats
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and then runs far "
@@ -82,20 +81,11 @@ def test_partitioning_invariance(spark):
 
 
 def test_expected_chunk_length_tracks_divisor(spark):
-    # geometric boundaries: mean chunk length ~ divisor tokens
+    # geometric boundaries: mean chunk length ~ CDC_DIVISOR tokens
     words = " ".join(f"w{i * 7919 % 10007}" for i in range(3000))
     df = _df(spark, [(0, words)])
-    for div in (8, 32):
-        n = cdc_chunks(df, divisor=div, hash_mode="sha").count()
-        mean = 3000 / n
-        assert div / 3 < mean < div * 3
-
-
-def test_rejects_bad_geometry(spark):
-    with pytest.raises(ValueError):
-        cdc_chunks(_df(spark, [(0, BASE)]), window=0)
-    with pytest.raises(ValueError):
-        cdc_chunks(_df(spark, [(0, BASE)]), divisor=0)
+    mean = 3000 / cdc_chunks(df, hash_mode="sha").count()
+    assert CDC_DIVISOR / 3 < mean < CDC_DIVISOR * 3
 
 
 def test_chunking_plan_is_narrow(spark):

@@ -84,12 +84,12 @@ def test_length_buckets_padding_math(spark):
     rows = [
         (1, "a b c"),              # 3 tokens -> bucket 0
         (2, "a b c d"),            # 4 tokens -> bucket 0
-        (3, " ".join(["w"] * 10)), # 10 tokens -> bucket 2 (width 5)
+        (3, " ".join(["w"] * 130)), # 130 tokens -> bucket 2 (width 64)
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     got = {r["bucket"]: (r["n_docs"], r["max_tokens"], r["sum_tokens"], r["pad_ppm"])
-           for r in length_buckets(df, "doc_id", "text", width=5).collect()}
+           for r in length_buckets(df, "doc_id", "text").collect()}
     # bucket 0: max 4, n 2, sum 7 -> pad = (8-7)/8 = 125000 ppm
     assert got[0] == (2, 4, 7, 125000)
     # bucket 2: single doc -> zero padding
-    assert got[2] == (1, 10, 10, 0)
+    assert got[2] == (1, 130, 130, 0)

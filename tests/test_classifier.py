@@ -4,7 +4,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from finetoo_sp_spark.operators.classifier import hashed_linear_scores
+from finetoo_sp_spark.operators.classifier import (
+    N_BUCKETS,
+    WEIGHT_SPAN,
+    hashed_linear_scores,
+)
 from finetoo_sp_spark.operators.importance import _bucket
 
 
@@ -18,30 +22,29 @@ def corpus(spark):
     return spark.createDataFrame(rows, "doc_id int, text string")
 
 
-def _weights_for(spark, n_buckets, mapping):
-    """(bucket, w) table assigning a weight to each feature string;
-    every other bucket is absent (-> weighs 0 via the left join)."""
-    feats = spark.createDataFrame(
-        list(mapping.items()), "feat string, w long"
-    )
-    return feats.select(_bucket(F.col("feat"), n_buckets).alias("bucket"), "w")
-
-
-def test_trained_weights_gate_documents(spark, corpus):
-    n_buckets = 1 << 16
-    weights = _weights_for(spark, n_buckets, {"good": 100, "spam": -100})
-    out = hashed_linear_scores(
-        corpus, "doc_id", "text", weights=weights, n_buckets=n_buckets
-    )
-    rows = {r["id"]: r for r in out.collect()}
-    # doc 1: feats = 3 unigrams + 2 bigrams = 5 instances; only 'good'
-    # carries weight -> margin +100, score_fp = 100*65536 div 5
-    assert rows[1]["n_feats"] == 5
-    assert rows[1]["score_fp"] == (100 * 65536) // 5 and rows[1]["keep"] is True
-    # doc 2: margin = 3 * -100 over 5 instances -> dropped (exact value)
-    assert rows[2]["score_fp"] == -(300 * 65536) // 5 and rows[2]["keep"] is False
-    # doc 3: +100 -100 = 0 margin -> score 0 -> kept at threshold 0
-    assert rows[3]["score_fp"] == 0 and rows[3]["keep"] is True
+def test_score_is_the_length_normalized_margin(spark, corpus):
+    """score_fp = (sum of the hash-derived weights of every unigram and
+    bigram instance) * 65536 div n_feats, and keep = score_fp >= 0."""
+    feats = {
+        1: ["good", "clean", "prose", "good clean", "clean prose"],
+        2: ["spam"] * 3 + ["spam spam"] * 2,
+        3: ["good", "spam", "good spam"],
+    }
+    names = sorted({f for fs in feats.values() for f in fs})
+    bucket = _bucket(F.col("feat"), N_BUCKETS)
+    w = _bucket(F.concat(F.lit("w#"), bucket), 2 * WEIGHT_SPAN + 1) - WEIGHT_SPAN
+    weight = {
+        r["feat"]: r["w"]
+        for r in spark.createDataFrame([(f,) for f in names], "feat string")
+        .select("feat", w.alias("w"))
+        .collect()
+    }
+    rows = {r["id"]: r for r in hashed_linear_scores(corpus, "doc_id", "text").collect()}
+    for doc, fs in feats.items():
+        margin = sum(weight[f] for f in fs)
+        score = abs(margin * 65536) // len(fs) * (1 if margin >= 0 else -1)  # div truncates
+        assert (rows[doc]["n_feats"], rows[doc]["score_fp"]) == (len(fs), score), doc
+        assert rows[doc]["keep"] is (score >= 0)
 
 
 def test_default_weights_deterministic_and_partition_invariant(spark, corpus):
@@ -50,14 +53,3 @@ def test_default_weights_deterministic_and_partition_invariant(spark, corpus):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     # every doc scored exactly once
     assert len(a) == 3
-
-
-def test_threshold_shifts_keep_boundary(spark, corpus):
-    n_buckets = 1 << 16
-    weights = _weights_for(spark, n_buckets, {"good": 100, "spam": -100})
-    strict = hashed_linear_scores(
-        corpus, "doc_id", "text", weights=weights, n_buckets=n_buckets,
-        threshold_fp=1,
-    )
-    rows = {r["id"]: r["keep"] for r in strict.collect()}
-    assert rows == {1: True, 2: False, 3: False}  # tie at 0 now drops

@@ -5,8 +5,6 @@ oracle row."""
 
 from __future__ import annotations
 
-import pytest
-
 from finetoo_sp_spark.operators.communities import (
     label_propagation,
 )
@@ -30,27 +28,29 @@ def test_two_triangles_with_bridge(spark):
         ("d", "e"), ("e", "f"), ("d", "f"),
         ("c", "d"),
     ]
-    lab = _labels(label_propagation(_edges(spark, pairs), rounds=4))
+    lab = _labels(label_propagation(_edges(spark, pairs)))
     assert lab["a"] == lab["b"] == lab["c"]
     assert lab["d"] == lab["e"] == lab["f"]
     assert lab["a"] != lab["d"]
 
 
-def test_one_round_votes(spark):
-    # star: center x with leaves a, b. After 1 round every leaf sees
-    # only {x}; x sees {a, b} — tie, so min label a wins.
+def test_star_votes_and_tie_break(spark):
+    # star: center x with leaves a, b. Synchronous rounds 2-cycle:
+    # odd rounds give the leaves x's label and x the a/b tie's min label
+    # a; even rounds give x its own label back (both leaves vote x) and
+    # the leaves x's odd-round label a.
     pairs = [("x", "a"), ("x", "b")]
-    lab = _labels(label_propagation(_edges(spark, pairs), rounds=1))
-    assert lab["a"] == "x" and lab["b"] == "x"
-    assert lab["x"] == "a"
+    lab = _labels(label_propagation(_edges(spark, pairs)))
+    assert lab == {"x": "x", "a": "a", "b": "a"}
 
 
 def test_duplicate_and_reverse_edges_collapse(spark):
-    # one vote per neighbor: duplicating (x,a) five times and adding the
-    # reverse must not outvote b's tie claim.
-    pairs = [("x", "a")] * 5 + [("a", "x"), ("x", "b")]
-    lab = _labels(label_propagation(_edges(spark, pairs), rounds=1))
-    assert lab["x"] == "a"  # still a tie broken by min label
+    # one vote per neighbor: duplicating (x,b) five times and adding the
+    # reverse must not outvote a's tie claim at x (counted per row, b
+    # would win x's odd rounds and become the leaves' label).
+    pairs = [("x", "b")] * 5 + [("b", "x"), ("x", "a")]
+    lab = _labels(label_propagation(_edges(spark, pairs)))
+    assert lab == {"x": "x", "a": "a", "b": "a"}
 
 
 def test_partitioning_invariance(spark):
@@ -59,11 +59,6 @@ def test_partitioning_invariance(spark):
         ("d", "e"), ("e", "f"), ("d", "f"),
         ("c", "d"), ("f", "g"), ("g", "h"),
     ]
-    one = _labels(label_propagation(_edges(spark, pairs, 1), rounds=3))
-    many = _labels(label_propagation(_edges(spark, pairs, 7), rounds=3))
+    one = _labels(label_propagation(_edges(spark, pairs, 1)))
+    many = _labels(label_propagation(_edges(spark, pairs, 7)))
     assert one == many
-
-
-def test_rounds_validated(spark):
-    with pytest.raises(ValueError, match="rounds"):
-        label_propagation(_edges(spark, [("a", "b")]), rounds=0)

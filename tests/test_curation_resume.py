@@ -39,7 +39,7 @@ def test_curation_fresh_run_and_full_resume(spark, docs, tmp_path):
     from finetoo_sp_spark.operators.components import dedup_keep_list
     from finetoo_sp_spark.operators.dedup import ngram_jaccard_pairs
 
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5, max_df=100)
+    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5, max_df=100)
     keep = dedup_keep_list(pairs, docs.select(F.col("doc_id").alias("id"))).filter("keep")
     quality = ts.quality_scores(docs, "doc_id", "text").filter("keep").select("id")
     expected = {

@@ -35,7 +35,7 @@ _SET = settings(
 @given(_corpus)
 def test_jaccard_bounds_and_identity(spark, docs):
     df = spark.createDataFrame(list(enumerate(docs)), ["doc_id", "text"])
-    pairs = dd.ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.0).collect()
+    pairs = dd.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.0).collect()
     texts = {i: " ".join(t.split()) for i, t in enumerate(docs)}
     for r in pairs:
         assert r["id_a"] < r["id_b"]
@@ -50,13 +50,11 @@ def test_lsh_subset_of_exact(spark, docs):
     df = spark.createDataFrame(list(enumerate(docs)), ["doc_id", "text"])
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dd.ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.5).collect()
+        for r in dd.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5).collect()
     }
     lsh = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dd.minhash_lsh_pairs(
-            df, "doc_id", "text", n=2, k=16, bands=4, threshold=0.5
-        ).collect()
+        for r in dd.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5).collect()
     }
     assert set(lsh) <= set(exact)
     for k, v in lsh.items():
@@ -95,25 +93,27 @@ def _py_shingles(text: str, n: int) -> set:
 
 
 def test_contamination_flags_matches_bruteforce(spark):
-    from finetoo_sp_spark.operators.dedup import contamination_flags
+    from finetoo_sp_spark.operators.dedup import CONTAMINATION_N, contamination_flags
 
+    words = [f"w{i}" for i in range(20)]
     docs = [
-        (0, "alpha beta gamma delta epsilon zeta"),
-        (1, "one two three four five six seven"),
-        (2, "alpha beta gamma delta nine ten"),  # shares 4-gram with doc 0? n=3 shares
-        (3, "totally unrelated words here indeed friend"),
+        (0, " ".join(words)),  # contains the whole benchmark text
+        (1, " ".join(f"x{i}" for i in range(20))),
+        (2, " ".join(words[:14] + ["nine", "ten"])),  # shares a prefix run
+        (3, " ".join(words[:12] + ["nine", "ten"])),  # run one word too short
     ]
-    bench = [(100, "alpha beta gamma delta epsilon")]
+    bench = [(100, " ".join(words[:16]))]
     ddf = spark.createDataFrame(docs, ["doc_id", "text"])
     bdf = spark.createDataFrame(bench, ["bid", "btext"])
     out = {
         r["id"]: (r["n_hits"], r["contaminated"])
-        for r in contamination_flags(ddf, bdf, "doc_id", "text", "bid", "btext", n=3).collect()
+        for r in contamination_flags(ddf, bdf, "doc_id", "text", "bid", "btext").collect()
     }
-    bsh = set().union(*[_py_shingles(t, 3) for _, t in bench])
+    bsh = set().union(*[_py_shingles(t, CONTAMINATION_N) for _, t in bench])
     for i, t in docs:
-        hits = len(_py_shingles(t, 3) & bsh)
+        hits = len(_py_shingles(t, CONTAMINATION_N) & bsh)
         assert out[i] == (hits, hits > 0), (i, out[i], hits)
+    assert [out[i][1] for i in range(4)] == [True, False, True, False]
 
 
 def test_containment_pairs_matches_bruteforce(spark):
@@ -155,7 +155,7 @@ def test_incremental_equals_restricted_selfjoin(spark):
         [(100, texts[0] + " update"), (101, "totally fresh words nothing shared here at all ok")],
         "doc_id long, text string",
     )
-    kw = dict(n=3, k=16, bands=4, threshold=0.3, hash_mode="sha")
+    kw = dict(threshold=0.3, hash_mode="sha")
     got = sorted(
         (r.id_new, r.id_old, r.jaccard)
         for r in dd.minhash_lsh_pairs_between(old, new, "doc_id", "text", **kw).collect()
@@ -178,23 +178,26 @@ def test_incremental_equals_restricted_selfjoin(spark):
 def test_mirror_hosts_detects_planted_mirrors_and_prunes_templates(spark):
     from pyspark.sql import functions as F
 
-    from finetoo_sp_spark.operators.dedup import mirror_hosts
+    from finetoo_sp_spark.operators.dedup import MAX_HOSTS_PER_SHA, mirror_hosts
 
-    rows = (
+    hosts = ["hostA", "hostB", "hostC"] + [f"filler{j}" for j in range(MAX_HOSTS_PER_SHA - 2)]
+    mirrors = (
         # hostA and hostB mirror 3 docs; hostC shares nothing
         [("hostA", i, f"shared doc {i}") for i in range(3)]
         + [("hostB", 100 + i, f"shared doc {i}") for i in range(3)]
         + [("hostC", 200, "unique text")]
-        # a blank-page template on EVERY host (would pair all hosts)
-        + [(h, 300 + j, "blank") for j, h in enumerate(["hostA", "hostB", "hostC"])]
     )
-    df = spark.createDataFrame(rows, "host string, doc_id int, text string")
-    got = {(r["host_a"], r["host_b"]): r["n_shared"]
-           for r in mirror_hosts(df, "host", "doc_id", "text",
-                                 min_shared=1, max_hosts_per_sha=2).collect()}
-    # the 3 mirrored docs pair A-B; the 3-host 'blank' sha is pruned
+
+    def pairs(template_hosts):
+        # a blank-page template on each of ``template_hosts``
+        rows = mirrors + [(h, 300 + j, "blank") for j, h in enumerate(template_hosts)]
+        df = spark.createDataFrame(rows, "host string, doc_id int, text string")
+        return mirror_hosts(df, "host", "doc_id", "text", min_shared=1)
+
+    # a sha on MAX_HOSTS_PER_SHA + 1 hosts is pruned: only the 3 mirrored
+    # docs pair A-B
+    got = {(r["host_a"], r["host_b"]): r["n_shared"] for r in pairs(hosts).collect()}
     assert got == {("hostA", "hostB"): 3}
-    # with the prune relaxed the template pairs appear
-    loose = mirror_hosts(df, "host", "doc_id", "text", min_shared=1,
-                         max_hosts_per_sha=50)
-    assert loose.count() == 3  # A-B, A-C, B-C (blank) with A-B also sharing docs
+    # on exactly MAX_HOSTS_PER_SHA hosts the template pairs every two of them
+    n = MAX_HOSTS_PER_SHA
+    assert pairs(hosts[:n]).count() == n * (n - 1) // 2

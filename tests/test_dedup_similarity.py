@@ -41,15 +41,24 @@ def test_shingles_short_doc(spark):
 
 
 def test_ngram_jaccard_exact_pair(docs):
-    pairs = dd.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5).collect()
+    pairs = dd.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs}
     assert got[(1, 2)] == 1.0  # identical docs
     assert (1, 3) in got  # near dup: shares most shingles
     assert all(j <= 1.0 for j in got.values())
 
 
+def test_ngram_jaccard_leaves_nothing_cached(spark, docs):
+    """The operator pins no cache: once its result is collected, the
+    session's cache manager holds nothing (a pinned .cache() would stay
+    until session end and re-warn on every later call)."""
+    spark.catalog.clearCache()
+    dd.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_minhash_contains_exact_dups(docs):
-    pairs = dd.minhash_lsh_pairs(docs, "doc_id", "text", n=3, k=32, bands=8, threshold=0.5)
+    pairs = dd.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got  # identical signature -> every band collides
 
@@ -77,7 +86,7 @@ def test_simhash_deterministic_and_dup_sensitive(docs):
     assert fp1 == fp2  # partition-order independence
     assert fp1[1] == fp1[2]  # identical docs -> identical fingerprint
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-             dd.simhash_pairs(docs, "doc_id", "text", max_hamming=6).collect()}
+             dd.simhash_pairs(docs, "doc_id", "text").collect()}
     assert pairs.get((1, 2)) == 0
 
 
@@ -110,7 +119,7 @@ def test_brute_force_topk(emb):
 
 
 def test_ann_lsh_same_bucket_only(emb):
-    out = sim.ann_lsh_bucketed(emb, emb.filter(F.col("vec_id") == 0), k=5, n_bits=4)
+    out = sim.ann_lsh_bucketed(emb, emb.filter(F.col("vec_id") == 0))
     got = [r["neighbor_id"] for r in out.collect()]
     # vec 3 ([-1,0,0,0]) hashes to a different sign bucket than vec 0
     assert 3 not in got

@@ -171,29 +171,59 @@ def test_registered_audit_checks_compile_and_skip_universal():
     assert not repeated, repeated
 
 
-# Defaulted parameters that no call varies but that stay settable: a
-# deployment's own resource or secret, or a value that must match one
-# that calls do vary.
+# Defaulted parameters that no call outside the tests varies but that stay
+# settable. A key ``fn(param)`` keeps one parameter; a bare ``fn`` keeps
+# every defaulted parameter of ``fn``.
+_FIXTURE = "fixture encoder: the decoder tests build inputs with each of its settings"
 _KEPT_DEFAULTS = {
-    "read_table(catalog)": "the Spark catalog name is the deployment's",
-    "write_table(catalog)": "the Spark catalog name is the deployment's",
+    "encode_bmp_bitfields": _FIXTURE,
+    "encode_ico": _FIXTURE,
+    "encode_flac": _FIXTURE,
+    "encode_jpeg_baseline": _FIXTURE,
+    "encode_jpeg_progressive": _FIXTURE,
+    "encode_png_interlaced": _FIXTURE,
+    "encode_webp_anim": _FIXTURE,
+    "encode_wav_g711": _FIXTURE,
+    "make_wav_g711_codes": _FIXTURE,
+    "make_pdf_objstm": _FIXTURE,
+    "gen_pages(pdf_every)": "fixture knob: the mixed HTML/PDF corpus the PDF-routing tests read",
+    "decrypt_pdf(password)": "a password is a credential, never a constant",
     "encrypt_pdf(owner_pw)": "a password is a credential, never a constant",
+    "encrypt_pdf(user_pw)": "a password is a credential, never a constant",
+    "get_spark(shuffle_partitions)": "a deployment setting: the shuffle width is the cluster's",
+    "read_table(catalog)": "the Spark catalog name is the deployment's",
+    "write_table": "seam (on _TEST_ONLY): the write side of the catalog a cluster deployment swaps in",
+    "extract_pages_sniffed(repartition_buckets)": "extractor protocol: run_resumable_extraction(extractor=) "
+    "calls every extractor with extract_pages' signature",
+    "extract_pages_sniffed(keep_cols)": "extractor protocol: run_resumable_extraction(extractor=) "
+    "calls every extractor with extract_pages' signature",
+    "hll_registers(p)": "must equal the hll_estimate_py(p) that reads the registers back",
     "hll_estimate_py(p)": "must equal the hll_registers(p) the registers were built with",
 }
 
 
+def _is_test_file(rel: Path) -> bool:
+    return rel.parts[0] == "tests" or (rel.parts[0] == "extbench" and rel.name.startswith("test_"))
+
+
 def test_no_defaulted_parameter_that_no_call_varies():
-    """Every defaulted parameter of a public top-level function under
-    finetoo_sp_spark/ must be passed a value other than its default by
-    some call in the repository (by keyword, by position, or through a
-    ``*``/``**`` splat); otherwise it is a constant and belongs in the
-    body. "Other" compares values where both sides fold to a constant
-    (module-level constants, own or imported, replaced by their values,
-    so ``SCALE`` equals a default of ``1 << 20`` when SCALE is that) and
-    source text otherwise, so passing a column name its own default does
-    not count. A call through ``functools.partial`` counts as a call,
-    and a function used as a value (passed around, stored) counts as
-    varying every parameter. _KEPT_DEFAULTS lists the exceptions."""
+    """Every defaulted parameter of a top-level function under
+    finetoo_sp_spark/ (private ones included) must be passed a value
+    other than its default by some call outside the tests (by keyword,
+    by position, or through a ``*``/``**`` splat); otherwise it is a
+    constant and belongs in the body. Calls in tests/ and in
+    extbench/test_*.py do not count: an option only a test sets is a
+    second code path the product never runs. "Other" compares values
+    where both sides fold to a constant (module-level constants, own or
+    imported, replaced by their values, so ``SCALE`` equals a default of
+    ``1 << 20`` when SCALE is that) and source text otherwise, so passing
+    a column name its own default does not count. A call through
+    ``functools.partial`` counts as a call, and a function used as a
+    value (passed around, stored) outside the tests counts as varying
+    every parameter. _KEPT_DEFAULTS lists the exceptions; an entry that
+    keeps no such parameter (none exists, or a non-test call now varies
+    it) is stale and fails. The failure names the test files whose calls
+    vary each finding."""
     trees = _source_trees()
 
     # Fold an expression to its value when it is built only from literals,
@@ -252,7 +282,7 @@ def test_no_defaulted_parameter_that_no_call_varies():
         if ROOT / "finetoo_sp_spark" not in p.parents:
             continue
         for fn in tree.body:
-            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+            if not isinstance(fn, ast.FunctionDef):
                 continue
             a = fn.args
             pos = a.posonlyargs + a.args
@@ -266,20 +296,21 @@ def test_no_defaulted_parameter_that_no_call_varies():
     def name_of(node):
         return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
 
-    calls, as_value = {}, set()
+    calls, as_value = {}, {}  # name -> [(args, keywords, consts, file)], name -> {file}
     for p, tree in trees.items():
+        rel = p.relative_to(ROOT)
         callees = set()
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
                 callees.add(id(n.func))
-                calls.setdefault(name_of(n.func), []).append((n.args, n.keywords, consts[p]))
+                calls.setdefault(name_of(n.func), []).append((n.args, n.keywords, consts[p], rel))
                 if name_of(n.func) == "partial" and n.args:
                     callees.add(id(n.args[0]))
                     target = name_of(n.args[0])
-                    calls.setdefault(target, []).append((n.args[1:], n.keywords, consts[p]))
+                    calls.setdefault(target, []).append((n.args[1:], n.keywords, consts[p], rel))
         for n in ast.walk(tree):
             if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in callees:
-                as_value.add(name_of(n))
+                as_value.setdefault(name_of(n), set()).add(rel)
 
     def varies(args, keywords, call_consts, param, idx, default):
         for k in keywords:
@@ -291,16 +322,30 @@ def test_no_defaulted_parameter_that_no_call_varies():
             return True
         return len(args) > idx and not same(args[idx], call_consts, default)
 
-    fixed = [
-        f"{mod}::{fn}({param})"
-        for mod, fn, param, idx, default in knobs
-        if fn not in as_value
-        and f"{fn}({param})" not in _KEPT_DEFAULTS
-        and not any(varies(*call, param, idx, default) for call in calls.get(fn, []))
-    ]
-    assert not fixed, fixed
-    declared = {f"{fn}({param})" for _mod, fn, param, _idx, _d in knobs}
-    assert set(_KEPT_DEFAULTS) <= declared, set(_KEPT_DEFAULTS) - declared
+    def varied_in(fn, param, idx, default):
+        """The files whose calls vary the parameter, or use fn as a value."""
+        files = {
+            rel
+            for args, keywords, call_consts, rel in calls.get(fn, [])
+            if varies(args, keywords, call_consts, param, idx, default)
+        }
+        return files | as_value.get(fn, set())
+
+    findings = {}  # "module::fn(param)" -> the test files that vary it
+    kept_hits = {}  # _KEPT_DEFAULTS key -> [whether each parameter it covers is a finding]
+    for mod, fn, param, idx, default in knobs:
+        files = varied_in(fn, param, idx, default)
+        fixed = all(_is_test_file(rel) for rel in files)
+        key = next((k for k in (f"{fn}({param})", fn) if k in _KEPT_DEFAULTS), None)
+        if key is not None:
+            kept_hits.setdefault(key, []).append(fixed)
+        elif fixed:
+            findings[f"{mod}::{fn}({param})"] = sorted(str(rel) for rel in files)
+    assert not findings, f"{sorted(findings)}\n" + "\n".join(
+        f"{k} is varied only by {', '.join(v) or 'no call'}" for k, v in sorted(findings.items())
+    )
+    stale = sorted(k for k in _KEPT_DEFAULTS if not any(kept_hits.get(k, [])))
+    assert not stale, stale
 
 
 # Definitions under finetoo_sp_spark/ that only tests reach, by design.

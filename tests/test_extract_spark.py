@@ -4,6 +4,7 @@ lineage manifests, checkpoint resume."""
 import pandas as pd
 import pytest
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from finetoo_sp_spark.datagen import gen_pages
@@ -105,16 +106,6 @@ def test_lineage_write_and_resume(spark, pages, tmp_path):
     )
     for r in recomputed:
         assert stored[r["bucket"]] == r["c"]
-
-
-def _manifest_rows(spark, out):
-    return sorted(
-        tuple(r)
-        for r in read_manifests(spark, out)
-        .select("bucket", "input_count", "output_count", "content_checksum",
-                "output_chars", "status")
-        .collect()
-    )
 
 
 def test_fresh_commit_job_count(spark, pages, tmp_path):
@@ -291,25 +282,14 @@ def test_resume_reads_spark_written_manifests(spark, pages, tmp_path):
     assert run_resumable_extraction(pages, out, n_buckets=8)["rows_in"] == 0
 
 
-def test_commit_options_give_default_manifests(spark, pages, tmp_path):
-    """strict_input_counts, pre_partition and verify_content each
-    produce exactly the default run's manifest rows."""
-    base = str(tmp_path / "default")
-    run_resumable_extraction(pages, base, n_buckets=8)
-    expect = _manifest_rows(spark, base)
-    assert len(expect) == 8
-
-    for opt in ("strict_input_counts", "pre_partition"):
-        out = str(tmp_path / opt)
-        m = run_resumable_extraction(pages, out, n_buckets=8, **{opt: True})
-        assert m["rows_out"] == N_PAGES, opt
-        assert _manifest_rows(spark, out) == expect, opt
-
-    out = str(tmp_path / "verify")
-    ext = extract_pages(pages.withColumn("bucket", url_salt(8)), keep_cols=["bucket"])
-    rows = write_with_manifests(ext, out, n_buckets=8, verify_content=True)
-    assert _manifest_rows(spark, out) == expect
-    assert sorted(tuple(r.values()) for r in rows) == expect
+def test_unreadable_manifest_directory_raises(spark, tmp_path):
+    """A _manifests directory Spark cannot read is an error the caller
+    sees, not a None that fails later on ``.select``."""
+    d = tmp_path / "out" / MANIFEST_DIRNAME / "bucket=0"
+    d.mkdir(parents=True)
+    (d / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        read_manifests(spark, str(tmp_path / "out"))
 
 
 def test_anchor_extraction_edge_cases(spark):

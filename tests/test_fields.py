@@ -7,6 +7,7 @@ import datetime as dt
 from finetoo_sp_spark.extraction.fields import (
     WEB_FIELD_RULES,
     FieldRule,
+    field_expr,
     map_fields,
     register_field_schema,
 )
@@ -48,14 +49,15 @@ def test_missing_and_malformed_fields_are_null(spark):
 def test_custom_rule_and_schema_registration(spark):
     from finetoo_sp_spark.schema.registry import Schema
 
-    rules = WEB_FIELD_RULES + [
-        FieldRule("og_image", r'(?is)property=["\']og:image["\'][^>]*content=["\']([^"\']*)')
-    ]
+    from pyspark.sql import functions as F
+
+    og = FieldRule("og_image", r'(?is)property=["\']og:image["\'][^>]*content=["\']([^"\']*)')
+    rules = WEB_FIELD_RULES + [og]
     pages = spark.createDataFrame(
         [("u", bytearray(b'<meta property="og:image" content="https://img/x.png">'))],
         ["url", "html"],
     )
-    r = map_fields(pages, rules).collect()[0]
+    r = pages.select(field_expr(og, F.decode("html", "UTF-8"))).collect()[0]
     assert r["og_image"] == "https://img/x.png"
 
     s = Schema("web")

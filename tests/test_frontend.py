@@ -49,9 +49,6 @@ def test_process_plan_assembles_response(spark):
     header, *rows = resp.answer.splitlines()
     assert header == "o_orderstatus | count_nodes"
     assert rows
-    # lazy mode triggers no action and renders no answer
-    lazy = process_plan(g, resp.plan, materialize=False)
-    assert lazy.answer == "" and lazy.df.columns == resp.df.columns
 
 
 def test_answer_query_end_to_end_with_fake_client(spark):

@@ -10,7 +10,7 @@ def test_frontier_schedule_hand_case(spark):
             ("http://a/c", "a", 9),
             ("http://a/a", "a", 3),
             ("http://a/b", "a", 3),
-            # host b: no delay row -> default 2
+            # host b: no delay row -> DEFAULT_DELAY_S (1)
             ("http://b/x", "b", 1),
             ("http://b/y", "b", 7),
         ],
@@ -19,17 +19,15 @@ def test_frontier_schedule_hand_case(spark):
     delays = spark.createDataFrame([("a", 5)], ["host", "delay_s"])
     out = {
         r["url"]: r.asDict()
-        for r in frontier_schedule(
-            frontier, delays, default_delay_s=2, budget_s=6
-        ).collect()
+        for r in frontier_schedule(frontier, delays, budget_s=6).collect()
     }
     # host a: rank by (priority desc, url asc): c, a, b at t = 0, 5, 10
     assert (out["http://a/c"]["rank_in_host"], out["http://a/c"]["scheduled_t_s"]) == (1, 0)
     assert (out["http://a/a"]["rank_in_host"], out["http://a/a"]["scheduled_t_s"]) == (2, 5)
     assert (out["http://a/b"]["rank_in_host"], out["http://a/b"]["scheduled_t_s"]) == (3, 10)
-    # host b: default delay 2; y (priority 7) first
-    assert (out["http://b/y"]["scheduled_t_s"], out["http://b/y"]["delay_s"]) == (0, 2)
-    assert (out["http://b/x"]["scheduled_t_s"], out["http://b/x"]["delay_s"]) == (2, 2)
+    # host b: default delay 1; y (priority 7) first
+    assert (out["http://b/y"]["scheduled_t_s"], out["http://b/y"]["delay_s"]) == (0, 1)
+    assert (out["http://b/x"]["scheduled_t_s"], out["http://b/x"]["delay_s"]) == (1, 1)
     # budget 6: a/b at t=10 misses; everything else fits
     assert out["http://a/b"]["within_budget"] is False
     for u in ("http://a/c", "http://a/a", "http://b/x", "http://b/y"):

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from finetoo_sp_spark.extraction.extract import url_salt
-from finetoo_sp_spark.operators.packing import mix_epoch_weights, pack_token_quota
+from finetoo_sp_spark.operators.packing import pack_token_quota
 from finetoo_sp_spark.sources.curation import run_resumable_curation
 from finetoo_sp_spark.sources.lineage import run_resumable_extraction
 
@@ -30,13 +30,6 @@ ENTRY_POINTS = {
     ),
     "pack_token_quota": lambda spark, out, mode: pack_token_quota(
         spark.createDataFrame([(1, 10)], "id long, n long"), "id", "n", 100, hash_mode=mode
-    ),
-    "mix_epoch_weights": lambda spark, out, mode: mix_epoch_weights(
-        spark.createDataFrame([(1, "a")], "id long, g string"),
-        "id",
-        "g",
-        {"a": 1_500_000},
-        hash_mode=mode,
     ),
 }
 

@@ -6,10 +6,10 @@ docstring alone — dict arithmetic, no Spark — so a bug in the Spark
 plan can't propagate into the expectation.
 """
 
-from finetoo_sp_spark.operators.hits import SCALE, hits_fixed_point
+from finetoo_sp_spark.operators.hits import ROUNDS, SCALE, hits_fixed_point
 
 
-def _hits_twin(edges, iterations):
+def _hits_twin(edges):
     edges = sorted(set(edges))
     nodes = sorted({u for e in edges for u in e})
     hub = {n: SCALE for n in nodes}
@@ -24,15 +24,15 @@ def _hits_twin(edges, iterations):
         m = max(raw.values()) if raw else 1
         return {n: (raw.get(n, 0) * SCALE) // m for n in nodes}
 
-    for _ in range(iterations):
+    for _ in range(ROUNDS):
         auth = half(hub, fwd=True)
         hub = half(auth, fwd=False)
     return {n: (hub[n], auth[n]) for n in nodes}
 
 
-def _run(spark, edges, iterations):
+def _run(spark, edges):
     df = spark.createDataFrame(edges, "src string, dst string")
-    rows = hits_fixed_point(df, iterations=iterations).collect()
+    rows = hits_fixed_point(df).collect()
     return {r["id"]: (r["hub_fp"], r["auth_fp"]) for r in rows}
 
 
@@ -43,9 +43,8 @@ def test_hits_matches_twin_on_portal_graph(spark):
         ("h0", "a0"), ("h0", "m1"), ("h0", "m2"), ("h0", "a0"),
         ("m1", "a0"), ("m2", "a0"), ("m1", "m2"),
     ]
-    got = _run(spark, edges, 3)
-    want = _hits_twin(edges, 3)
-    assert got == want
+    got = _run(spark, edges)
+    assert got == _hits_twin(edges)
     # Structural sanity: the portal is the max hub, a0 the max authority,
     # and pure-sink a0 has zero hub score.
     assert got["h0"][0] == SCALE
@@ -60,13 +59,4 @@ def test_hits_matches_twin_on_two_components(spark):
         ("p1", "q"), ("p2", "q"), ("p3", "q"),
         ("x", "y"), ("y", "x"), ("z", "z"),
     ]
-    for it in (1, 4):
-        assert _run(spark, edges, it) == _hits_twin(edges, it)
-
-
-def test_zero_iterations_is_a_clear_error(spark):
-    import pytest
-
-    df = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with pytest.raises(ValueError, match="iterations"):
-        hits_fixed_point(df, iterations=0)
+    assert _run(spark, edges) == _hits_twin(edges)

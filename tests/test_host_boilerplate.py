@@ -3,9 +3,9 @@
 from finetoo_sp_spark.operators.dedup import host_boilerplate_strip
 
 
-def _run(spark, rows, **kw):
+def _run(spark, rows):
     df = spark.createDataFrame(rows, "id long, host string, text string")
-    out = host_boilerplate_strip(df, "id", "host", "text", **kw)
+    out = host_boilerplate_strip(df, "id", "host", "text")
     return {r["id"]: (r["text"], r["n_removed"]) for r in out.collect()}
 
 

@@ -41,8 +41,8 @@ def _pairs_set(df):
 
 def test_simhash_capped_equals_uncapped(spark, template_corpus):
     docs = spark.createDataFrame(template_corpus, ["doc_id", "text"])
-    uncapped = dd.simhash_pairs(docs, "doc_id", "text", max_hamming=3, bucket_cap=None)
-    capped = dd.simhash_pairs(docs, "doc_id", "text", max_hamming=3, bucket_cap=8)
+    uncapped = dd.simhash_pairs(docs, "doc_id", "text", bucket_cap=None)
+    capped = dd.simhash_pairs(docs, "doc_id", "text", bucket_cap=8)
     a, b = _pairs_set(uncapped), _pairs_set(capped)
     assert a == b
     # the pathological bucket really is hot: the 80 template docs should
@@ -52,12 +52,8 @@ def test_simhash_capped_equals_uncapped(spark, template_corpus):
 
 def test_minhash_capped_equals_uncapped(spark, template_corpus):
     docs = spark.createDataFrame(template_corpus, ["doc_id", "text"])
-    uncapped = dd.minhash_lsh_pairs(
-        docs, "doc_id", "text", k=16, bands=4, threshold=0.5, bucket_cap=None
-    )
-    capped = dd.minhash_lsh_pairs(
-        docs, "doc_id", "text", k=16, bands=4, threshold=0.5, bucket_cap=8
-    )
+    uncapped = dd.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5, bucket_cap=None)
+    capped = dd.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5, bucket_cap=8)
     assert _pairs_set(uncapped) == _pairs_set(capped)
 
 
@@ -67,7 +63,7 @@ def test_bucket_self_pairs_direct(spark):
     rows = [(i, "hot") for i in range(60)] + [(100 + i, "cold") for i in range(5)]
     df = spark.createDataFrame(rows, ["id", "bits"]).withColumn("band", F.lit(0))
     uncapped = dd._bucket_self_pairs(df, ["band", "bits"], bucket_cap=None)
-    capped = dd._bucket_self_pairs(df, ["band", "bits"], bucket_cap=10, n_cells=4)
+    capped = dd._bucket_self_pairs(df, ["band", "bits"], bucket_cap=10)
     expect = {(a, b) for a in range(60) for b in range(60) if a < b}
     expect |= {(100 + a, 100 + b) for a in range(5) for b in range(5) if a < b}
     assert _pairs_set(uncapped.select("id_a", "id_b")) == expect
@@ -78,7 +74,7 @@ def test_bucket_self_pairs_payload(spark):
     rows = [(i, "hot", float(i) * 2.0) for i in range(40)]
     df = spark.createDataFrame(rows, ["id", "bits", "w"]).withColumn("band", F.lit(0))
     capped = dd._bucket_self_pairs(
-        df, ["band", "bits"], payload_cols=["w"], bucket_cap=5, n_cells=4
+        df, ["band", "bits"], payload_cols=["w"], bucket_cap=5
     )
     got = {tuple(r) for r in capped.collect()}
     expect = {
@@ -119,7 +115,7 @@ def test_registered_salted_queries_engage_hot_branch(spark, sf_dir):
     )
     assert max_bucket > 16, f"salting branch would NOT engage (max bucket {max_bucket})"
 
-    sig = dd.minhash_signatures(corpus, "doc_id", "text", n=3, k=32, hash_mode="sha")
+    sig = dd.minhash_signatures(corpus, "doc_id", "text", hash_mode="sha")
     r = 4
     mh_banded = sig.select(
         "id",

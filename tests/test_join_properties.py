@@ -76,13 +76,15 @@ def test_asof_join_matches_bruteforce(sp, left, right):
     ),
 )
 def test_range_join_matches_bruteforce(sp, points, ivals):
-    from finetoo_sp_spark.operators.asof import range_join
+    from finetoo_sp_spark.operators.asof import RANGE_BUCKET_SECONDS, range_join
 
+    # time unit: 1/60 of a bucket, so intervals span up to ~7 buckets
+    u = RANGE_BUCKET_SECONDS // 60
     ldf = sp.createDataFrame(
-        [(k, _ts(t), i) for i, (k, t) in enumerate(points)], ["k", "t", "pid"]
+        [(k, _ts(t * u), i) for i, (k, t) in enumerate(points)], ["k", "t", "pid"]
     )
     rdf = sp.createDataFrame(
-        [(k, _ts(s), _ts(s + d), j) for j, (k, s, d) in enumerate(ivals)]
+        [(k, _ts(s * u), _ts((s + d) * u), j) for j, (k, s, d) in enumerate(ivals)]
         or [(99, _ts(0), _ts(1), 0)],
         ["k", "s", "e", "iid"],
     )
@@ -91,7 +93,7 @@ def test_range_join_matches_bruteforce(sp, points, ivals):
     got = {
         (r["pid"], r["iid"])
         for r in range_join(
-            ldf, rdf, point_col="t", start_col="s", end_col="e", by="k", bucket_seconds=60
+            ldf, rdf, point_col="t", start_col="s", end_col="e", by="k"
         ).collect()
     }
     expect = {

@@ -35,12 +35,6 @@ def test_repair_fold_and_strip(spark):
     assert got[4] == ('curly "quote"', True)
 
 
-def test_fold_quotes_off_keeps_proper_typography(spark):
-    df = spark.createDataFrame([(1, "a’b")], "doc_id int, text string")
-    out = normalize_text(df, "doc_id", "text", fold_quotes=False).collect()[0]
-    assert out["text"] == "a’b" and out["changed"] is False
-
-
 def test_oracle_chain_is_byte_identical(spark):
     texts = [
         "it" + _mojibake("’") + "s caf" + _mojibake("é"),

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from finetoo_sp_spark.operators.pq import (
+    TOP_K,
     ann_ivf_pq_topk,
     ivf_pq_recall,
     pq_assign,
@@ -54,7 +55,7 @@ def test_planted_clusters_recover_per_subspace(spark):
     scatter across the near-zero centroids — jitter decides — so full
     codes are NOT expected to match.)"""
     emb = _planted(spark, n=40, k=4)
-    cb = pq_train(emb, m=4)
+    cb = pq_train(emb)
     codes = {r["id"]: tuple(r[f"c{i}"] for i in range(4))
              for r in pq_assign(emb, cb).collect()}
     for s in range(4):
@@ -67,26 +68,27 @@ def test_planted_clusters_recover_per_subspace(spark):
 
 
 def test_ivf_pq_topk_on_planted_clusters(spark):
-    """Neighbors of a planted query are its own cluster: IVF-PQ top-9
-    must be exactly the 9 other members (ADC distance 0 within the
-    cluster, huge across)."""
-    emb = _planted(spark, n=40, k=4)
-    got = ann_ivf_pq_topk(emb, [0, 1], k=9, nprobe=1).collect()
+    """Neighbors of a planted query are its own cluster: with TOP_K + 1
+    members per cluster, IVF-PQ top-k must be exactly the TOP_K other
+    members (ADC distance 0 within the cluster, huge across)."""
+    n = 4 * (TOP_K + 1)
+    emb = _planted(spark, n=n, k=4)
+    got = ann_ivf_pq_topk(emb, [0, 1]).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
-    assert sorted(by_q[0]) == [i for i in range(4, 40, 4)]
-    assert sorted(by_q[1]) == [i for i in range(5, 40, 4)]
+    assert sorted(by_q[0]) == [i for i in range(4, n, 4)]
+    assert sorted(by_q[1]) == [i for i in range(5, n, 4)]
 
 
 def test_recall_is_perfect_on_planted_clusters(spark):
-    emb = _planted(spark, n=40, k=4)
+    emb = _planted(spark, n=4 * (TOP_K + 1), k=4)
     got = {r["query_id"]: (r["n_hits"], r["k"])
-           for r in ivf_pq_recall(emb, [0, 1, 2], k=9, nprobe=1).collect()}
-    assert got == {0: (9, 9), 1: (9, 9), 2: (9, 9)}
+           for r in ivf_pq_recall(emb, [0, 1, 2]).collect()}
+    assert got == {q: (TOP_K, TOP_K) for q in (0, 1, 2)}
 
 
 def test_dims_not_divisible_raises(spark):
-    emb = _planted(spark, n=8, dims=16)
+    emb = _planted(spark, n=8, dims=18, k=2)
     with pytest.raises(ValueError, match="divisible"):
-        pq_train(emb, m=3)
+        pq_train(emb)

@@ -1,13 +1,13 @@
 """Redirect resolution by pointer jumping: hand-built chains/cycles."""
 
-from finetoo_sp_spark.operators.redirects import resolve_redirects
+from finetoo_sp_spark.operators.redirects import MAX_ROUNDS, resolve_redirects
 
 
-def _run(spark, edges, rounds=6):
+def _run(spark, edges):
     df = spark.createDataFrame(edges, "src string, dst string")
     return {
         r["url"]: (r["final_url"], r["hops"], r["is_loop"])
-        for r in resolve_redirects(df, max_rounds=rounds).collect()
+        for r in resolve_redirects(df).collect()
     }
 
 
@@ -24,14 +24,13 @@ def test_chains_cycles_and_feeders(spark):
 
 
 def test_exact_power_of_two_boundary(spark):
-    # max_rounds=2 resolves chains up to 4 hops; a 5-hop chain is
-    # (documented) flagged as unresolved/loop at that budget.
-    edges = [(f"n{i}", f"n{i + 1}") for i in range(5)]
-    got4 = _run(spark, edges, rounds=2)
-    assert got4["n1"] == ("n5", 4, False)  # exactly 4 hops: resolved
-    assert got4["n0"] == (None, None, True)  # 5 hops: over budget
-    got8 = _run(spark, edges, rounds=3)
-    assert got8["n0"] == ("n5", 5, False)
+    # MAX_ROUNDS rounds resolve chains up to 2**MAX_ROUNDS hops; one hop
+    # more is (documented) flagged as unresolved/loop at that budget.
+    n = 2**MAX_ROUNDS + 1
+    edges = [(f"n{i}", f"n{i + 1}") for i in range(n)]
+    got = _run(spark, edges)
+    assert got["n1"] == (f"n{n}", n - 1, False)  # exactly 2**MAX_ROUNDS hops: resolved
+    assert got["n0"] == (None, None, True)  # one hop over budget
 
 
 def test_self_loop_and_duplicate_edges(spark):

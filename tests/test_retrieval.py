@@ -2,7 +2,7 @@
 
 import pytest
 
-from finetoo_sp_spark.operators.retrieval import bm25_topk
+from finetoo_sp_spark.operators.retrieval import BM25_TOP_K, bm25_topk
 
 
 @pytest.fixture(scope="module")
@@ -19,7 +19,7 @@ def corpus(spark):
 
 
 def test_rank_and_membership(corpus):
-    out = bm25_topk(corpus, "doc_id", "text", ["zebra", "data"], k=10)
+    out = bm25_topk(corpus, "doc_id", "text", ["zebra", "data"])
     rows = {r["id"]: r for r in out.collect()}
     # doc 5 matches no query term -> absent
     assert set(rows) == {1, 2, 3, 4}
@@ -39,23 +39,21 @@ def test_rank_and_membership(corpus):
 
 
 def test_k_truncates_and_ties_break_by_id(spark):
-    rows = [(i, "same same words") for i in range(1, 8)]
+    rows = [(i, "same same words") for i in range(1, BM25_TOP_K + 5)]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    out = bm25_topk(df, "doc_id", "text", ["same"], k=3).collect()
+    out = bm25_topk(df, "doc_id", "text", ["same"]).collect()
     # identical docs -> identical scores -> ties broken ascending id
-    assert [(r["id"], r["rank"]) for r in out] == [(1, 1), (2, 2), (3, 3)]
+    assert [(r["id"], r["rank"]) for r in out] == [(i, i) for i in range(1, BM25_TOP_K + 1)]
     assert len({r["score"] for r in out}) == 1
 
 
 def test_partition_invariance(corpus):
-    base = bm25_topk(corpus, "doc_id", "text", ["zebra", "data"], k=10)
-    shuffled = bm25_topk(
-        corpus.repartition(7), "doc_id", "text", ["zebra", "data"], k=10
-    )
+    base = bm25_topk(corpus, "doc_id", "text", ["zebra", "data"])
+    shuffled = bm25_topk(corpus.repartition(7), "doc_id", "text", ["zebra", "data"])
     assert sorted(map(tuple, base.collect())) == sorted(
         map(tuple, shuffled.collect())
     )
 
 
 def test_no_match_returns_empty(corpus):
-    assert bm25_topk(corpus, "doc_id", "text", ["absent"], k=5).count() == 0
+    assert bm25_topk(corpus, "doc_id", "text", ["absent"]).count() == 0

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
 from finetoo_sp_spark.operators import similarity as sim
@@ -20,7 +18,7 @@ def test_tfidf_ratio_vs_hand_computed(spark):
         ],
         ["doc_id", "text"],
     )
-    out = ts.tfidf_top_terms(docs, "doc_id", "text", k=2)
+    out = ts.tfidf_top_terms(docs, "doc_id", "text")
     rows = {(r["id"], r["rk"]): (r["term"], r["tf"], r["df"], r["score"]) for r in out.collect()}
     # doc 1: apple tf=2 df=1 -> 2*(3/1)=6; banana tf=1 df=2 -> 1.5
     assert rows[(1, 1)] == ("apple", 2, 1, 6.0)
@@ -31,25 +29,15 @@ def test_tfidf_ratio_vs_hand_computed(spark):
     assert rows[(3, 1)][3] == rows[(3, 2)][3] == 3.0
 
 
-def test_tfidf_log_mode(spark):
-    docs = spark.createDataFrame(
-        [(1, "apple banana"), (2, "banana")], ["doc_id", "text"]
-    )
-    out = ts.tfidf_top_terms(docs, "doc_id", "text", k=2, idf_mode="log")
-    d1 = {r["term"]: r["score"] for r in out.filter(F.col("id") == 1).collect()}
-    assert abs(d1["apple"] - math.log(2.0)) < 1e-6
-    assert d1["banana"] == 0.0  # in every doc -> ln(1) = 0
-
-
 def test_multiprobe_superset_of_single_table(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
-    single = sim.ann_lsh_bucketed(emb, q, k=50, n_bits=8)
-    multi = sim.ann_lsh_multiprobe(emb, q, k=50, n_tables=3)
+    single = sim.ann_lsh_bucketed(emb, q)
+    multi = sim.ann_lsh_multiprobe(emb, q, k=emb.count(), n_tables=3)
     s_pairs = {(r["query_id"], r["neighbor_id"]) for r in single.collect()}
     m_pairs = {(r["query_id"], r["neighbor_id"]) for r in multi.collect()}
     # table 0 of the multiprobe IS the single-table bucketing, so with a
-    # k large enough to avoid truncation the candidate set is a superset
+    # k that truncates nothing its candidate set is a superset
     assert s_pairs <= m_pairs
     # and the extra tables actually add recall on this corpus
     assert len(m_pairs) >= len(s_pairs)
@@ -102,13 +90,11 @@ def test_range_join_hand_case(spark):
     right = spark.createDataFrame(
         [(1, ts(2), ts(8))], ["k", "s", "e"]
     )
-    out = range_join(left, right, point_col="t", start_col="s", end_col="e",
-                     by="k", bucket_seconds=3600)
+    out = range_join(left, right, point_col="t", start_col="s", end_col="e", by="k")
     assert [r["tag"] for r in out.collect()] == ["in"]
     # boundary semantics: start inclusive, end exclusive
     edge = spark.createDataFrame([(1, ts(2), "lo"), (1, ts(8), "hi")], ["k", "t", "tag"])
-    got = {r["tag"] for r in range_join(edge, right, "t", "s", "e", by="k",
-                                        bucket_seconds=3600).collect()}
+    got = {r["tag"] for r in range_join(edge, right, "t", "s", "e", by="k").collect()}
     assert got == {"lo"}
 
 

@@ -17,7 +17,7 @@ def _df(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
 
 
-def test_add_rename_drop_roundtrip(spark, tmp_path):
+def test_add_rename_roundtrip(spark, tmp_path):
     path = str(tmp_path / "t")
     commit_version(
         _df(spark, [(1, 10), (2, 20)], "id long, a long"), path, "overwrite"
@@ -35,9 +35,6 @@ def test_add_rename_drop_roundtrip(spark, tmp_path):
     v0 = read_version(spark, path, 0)
     assert v0.columns == ["id", "a"]
     assert {r["a"] for r in v0.collect()} == {10, 20}
-    # drop: the column vanishes without touching data files
-    evolve_schema(path, drop=["c"])
-    assert read_version(spark, path).columns == ["id", "b"]
 
 
 def test_commit_schema_mismatch_raises(spark, tmp_path):
@@ -58,8 +55,6 @@ def test_evolve_errors(spark, tmp_path):
         evolve_schema(path, add=[("a", "long")])
     with pytest.raises(ValueError, match="already exists"):
         evolve_schema(path, rename={"a": "id"})
-    with pytest.raises(ValueError, match="every column"):
-        evolve_schema(path, drop=["id", "a"])
 
 
 def test_upsert_after_rename_maps_key_by_field_id(spark, tmp_path):

@@ -21,7 +21,7 @@ def test_sanitize_ascii(spark):
 def test_write_json_sanitized(spark, tmp_path):
     df = spark.createDataFrame([(1, "part\nA\x01"), (2, "ok")], ["part_id", "name"])
     out = str(tmp_path / "j")
-    write_json(df, out, single_file=True)
+    write_json(df, out)
     rows = [json.loads(line) for f in glob.glob(out + "/part-*") for line in open(f)]
     got = {r["part_id"]: r["name"] for r in rows}
     assert got == {1: "part A", 2: "ok"}
@@ -32,7 +32,7 @@ def test_write_csv_quoted_header(spark, tmp_path):
         [(1, 'say "hi", ok', 2.5)], ["id", "name", "qty"]
     )
     out = str(tmp_path / "c")
-    write_csv(df, out, single_file=True)
+    write_csv(df.coalesce(1), out)
     f = glob.glob(out + "/part-*.csv")[0]
     raw = open(f).read()
     assert raw.splitlines()[0] == '"id","name","qty"'
@@ -70,17 +70,15 @@ def test_format_bom_golden(spark):
     )
     lines = [
         r["line"]
-        for r in format_bom_lines(bom, part_width=12, qty_width=5)
-        .orderBy("line_no")
-        .collect()
+        for r in format_bom_lines(bom).orderBy("line_no").collect()
     ]
-    assert "\n".join(lines) == (
-        "PART          QTY\n"
-        "-----------------\n"
-        "AXLE           12\n"
-        "BOLT-M6        12\n"
-        "PANEL-A         3"
-    )
+    assert lines == [
+        "PART" + " " * 36 + "     QTY",
+        "-" * 48,
+        "AXLE" + " " * 36 + "      12",
+        "BOLT-M6" + " " * 33 + "      12",
+        "PANEL-A" + " " * 33 + "       3",
+    ]
 
 
 def test_dim_type_decode(spark):
@@ -95,17 +93,14 @@ def test_dim_type_decode(spark):
 
 
 def test_format_bom_overwidth_ellipsis(spark):
-    """Part names wider than part_width are truncated to width-3 + '...'
-    (reference over-width rule) instead of being silently rpad-cut."""
+    """Part names wider than PART_WIDTH (40) are truncated to width-3 +
+    '...' (reference over-width rule) instead of being silently rpad-cut."""
     from finetoo_sp_spark.operators.sinks import format_bom_lines
 
     bom = spark.createDataFrame(
-        [("A-VERY-LONG-PART-NAME", 7), ("SHORT", 1)], ["part", "quantity"]
+        [("ASSEMBLY-" + "X" * 40, 7), ("SHORT", 1)], ["part", "quantity"]
     )
-    lines = {
-        r["line_no"]: r["line"]
-        for r in format_bom_lines(bom, part_width=12, qty_width=5).collect()
-    }
-    assert lines[2] == "A-VERY-LO...    7"
-    assert lines[3] == "SHORT           1"
-    assert all(len(v) == 17 for v in lines.values())
+    lines = {r["line_no"]: r["line"] for r in format_bom_lines(bom).collect()}
+    assert lines[2] == "ASSEMBLY-" + "X" * 28 + "..." + "       7"
+    assert lines[3] == "SHORT" + " " * 35 + "       1"
+    assert all(len(v) == 48 for v in lines.values())

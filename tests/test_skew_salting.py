@@ -25,7 +25,7 @@ def pages(spark):
     ).cache()
 
 
-def salted_host_rollup(pages, n_salts: int = 16):
+def salted_host_rollup(pages):
     """Two-phase salted aggregate via the library operator."""
     from finetoo_sp_spark.operators.skew import salted_agg
 
@@ -36,7 +36,6 @@ def salted_host_rollup(pages, n_salts: int = 16):
             "n_pages": (F.count(F.lit(1)), "sum"),
             "total_bytes": (F.sum("n_bytes"), "sum"),
         },
-        n_salts=n_salts,
         salt_on="url",
     )
 
@@ -63,8 +62,10 @@ def test_salted_equals_naive(pages):
 
 
 def test_salt_bounds_partition_share(pages):
-    """The first-shuffle key (host, salt) splits the hot host ~n_salts ways."""
-    n_salts = 16
+    """The first-shuffle key (host, salt) splits the hot host ~N_SALTS ways."""
+    from finetoo_sp_spark.operators.skew import N_SALTS
+
+    n_salts = N_SALTS
     salted = pages.withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
     by_key = salted.groupBy("host", "salt").count().toPandas()
     hot = by_key.groupby("host")["count"].sum().idxmax()

@@ -1,10 +1,8 @@
-"""Temperature mixing planner: flattening property + alpha ladder."""
+"""Temperature mixing planner: the alpha = 1/2 flattening property."""
 
 import math
 
-import pytest
-
-from finetoo_sp_spark.operators.packing import temperature_mix
+from finetoo_sp_spark.operators.packing import MIX_BUDGET_DOCS, temperature_mix
 
 
 def _corpus(spark):
@@ -21,9 +19,7 @@ def test_alpha_half_flattens_head_tail_ratio(spark):
     df = _corpus(spark)
     out = {
         r["source"]: r
-        for r in temperature_mix(
-            df, "doc_id", "source", alpha_quarters=2, budget_docs=504
-        ).collect()
+        for r in temperature_mix(df, "doc_id", "source").collect()
     }
     # weight_fp = floor(sqrt(n) * 10000), exactly.
     for s, n in (("a", 400), ("b", 100), ("c", 4)):
@@ -34,26 +30,7 @@ def test_alpha_half_flattens_head_tail_ratio(spark):
     assert out["a"]["weight_fp"] == 10 * out["c"]["weight_fp"]
     assert out["a"]["quota_docs"] // out["c"]["quota_docs"] == 10
     # Quotas never exceed budget; sampled counts never exceed n_docs.
-    assert sum(r["quota_docs"] for r in out.values()) <= 504
+    assert sum(r["quota_docs"] for r in out.values()) <= MIX_BUDGET_DOCS
     for r in out.values():
         assert 0 <= r["sampled_docs"] <= r["n_docs"]
         assert r["rate_ppm"] <= 1_000_000
-
-
-def test_alpha_ladder_monotone(spark):
-    # Lower alpha -> flatter: head share shrinks as alpha drops.
-    df = _corpus(spark)
-    shares = []
-    for q in (4, 3, 2, 1):
-        rows = {
-            r["source"]: r["weight_fp"]
-            for r in temperature_mix(
-                df, "doc_id", "source", alpha_quarters=q, budget_docs=1000
-            ).collect()
-        }
-        shares.append(rows["a"] / rows["c"])
-    assert shares == sorted(shares, reverse=True)
-    assert shares[0] == 100  # alpha=1: natural 400/4
-    assert abs(shares[2] - 10) < 1e-3  # alpha=1/2: sqrt(100)
-    with pytest.raises(ValueError):
-        temperature_mix(df, "doc_id", "source", alpha_quarters=5)

@@ -54,15 +54,17 @@ def test_gopher_ellipsis_lines(spark):
 def test_bpe_pair_counts_weighted_by_occurrence(spark):
     # 'abab' x3 -> pairs ab,ba,ab per occurrence = ab:6, ba:3; 'cd' x2 -> cd:2
     df = _docs(spark, [(1, "abab abab cd"), (2, "abab cd")])
-    out = {r["pair"]: r["cnt"] for r in ts.bpe_pair_counts(df, "text", k=10).collect()}
+    out = {r["pair"]: r["cnt"] for r in ts.bpe_pair_counts(df, "text").collect()}
     assert out == {"ab": 6, "ba": 3, "cd": 2}
 
 
 def test_bpe_pair_counts_deterministic_tiebreak(spark):
-    df = _docs(spark, [(1, "xy za xy za")])
-    rows = ts.bpe_pair_counts(df, "text", k=1).collect()
-    # xy and za tie at 2 -> lexicographically smaller pair wins the cut
-    assert [(r["pair"], r["cnt"]) for r in rows] == [("xy", 2)]
+    # 34 two-letter words, each one pair seen once: all tie at 1, and the
+    # BPE_TOP_K lexicographically smallest pairs win the cut
+    words = [a + b for a in "pq" for b in "abcdefghijklmnopq"]
+    df = _docs(spark, [(1, " ".join(words))])
+    rows = ts.bpe_pair_counts(df, "text").collect()
+    assert [(r["pair"], r["cnt"]) for r in rows] == [(w, 1) for w in sorted(words)[: ts.BPE_TOP_K]]
 
 
 def test_sentence_stats(spark):

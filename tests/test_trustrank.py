@@ -1,14 +1,15 @@
-"""TrustRank operator vs an independent pure-Python twin, plus the
-spam-demotion property the operator exists for."""
+"""Seeded pagerank_fixed_point (TrustRank) vs an independent pure-Python
+twin, plus the spam-demotion property the seeds exist for."""
 
-from finetoo_sp_spark.operators.trustrank import (
+from finetoo_sp_spark.operators.pagerank import (
     DAMP_NUM,
+    ROUNDS,
     SCALE,
-    trustrank_fixed_point,
+    pagerank_fixed_point,
 )
 
 
-def _twin(edges, seeds, iterations):
+def _twin(edges, seeds):
     edges = sorted(set(edges))
     nodes = sorted({u for e in edges for u in e})
     deg = {}
@@ -17,7 +18,7 @@ def _twin(edges, seeds, iterations):
     base_unit = (100 - DAMP_NUM) * SCALE // 100
     base = {n: (base_unit if n in seeds else 0) for n in nodes}
     trust = {n: (base[n] * 100) // (100 - DAMP_NUM) for n in nodes}
-    for _ in range(iterations):
+    for _ in range(ROUNDS):
         s = {}
         for u, v in edges:
             s[v] = s.get(v, 0) + trust[u] // deg[u]
@@ -25,11 +26,10 @@ def _twin(edges, seeds, iterations):
     return trust
 
 
-def _run(spark, edges, seeds, iterations):
+def _run(spark, edges, seeds=None):
     e = spark.createDataFrame(edges, "src string, dst string")
-    s = spark.createDataFrame([(x,) for x in seeds], "id string")
-    rows = trustrank_fixed_point(e, s, iterations=iterations).collect()
-    return {r["id"]: r["trust_fp"] for r in rows}
+    s = None if seeds is None else spark.createDataFrame([(x,) for x in seeds], "id string")
+    return {r["id"]: r["rank_fp"] for r in pagerank_fixed_point(e, s).collect()}
 
 
 def test_trustrank_matches_twin(spark):
@@ -39,8 +39,15 @@ def test_trustrank_matches_twin(spark):
         ("good", "a"),  # duplicate edge collapses
     ]
     seeds = {"good"}
-    for it in (1, 5):
-        assert _run(spark, edges, seeds, it) == _twin(edges, seeds, it)
+    assert _run(spark, edges, seeds) == _twin(edges, seeds)
+
+
+def test_pagerank_is_trustrank_with_every_node_seeded(spark):
+    """Without seeds every node is one: round 0 is SCALE everywhere."""
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")]
+    nodes = {u for e in edges for u in e}
+    assert (100 - DAMP_NUM) * SCALE // 100 * 100 // (100 - DAMP_NUM) == SCALE
+    assert _run(spark, edges) == _run(spark, edges, nodes) == _twin(edges, nodes)
 
 
 def test_trustrank_demotes_spam_farm(spark):
@@ -51,10 +58,9 @@ def test_trustrank_demotes_spam_farm(spark):
         + [(f"p{i}", f"p{(i + 1) % 3}") for i in range(3)]
         + [(f"farm{i}", f"farm{j}") for i in range(4) for j in range(4) if i != j]
     )
-    got = _run(spark, edges, {"seed"}, 5)
-    assert got == _twin(edges, {"seed"}, 5)
+    got = _run(spark, edges, {"seed"})
+    assert got == _twin(edges, {"seed"})
     assert all(got[f"farm{i}"] == 0 for i in range(4))
     assert min(got[f"p{i}"] for i in range(3)) > 0
     # Seeds absent from the graph contribute nothing and don't crash.
-    got2 = _run(spark, edges, {"seed", "not-in-graph"}, 2)
-    assert got2 == _twin(edges, {"seed"}, 2)
+    assert _run(spark, edges, {"seed", "not-in-graph"}) == got

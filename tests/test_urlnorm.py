@@ -2,6 +2,7 @@
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from finetoo_sp_spark.operators.urlnorm import canonicalize_urls
 
@@ -49,12 +50,9 @@ def test_non_url_passthrough(spark):
 def test_idempotent(spark):
     raws = [c[0] for c in CASES]
     df = spark.createDataFrame([Row(url=u) for u in raws])
-    once = canonicalize_urls(df, out_col="c1")
-    twice = canonicalize_urls(
-        once.select("url", "c1").withColumnRenamed("c1", "url2"), "url2", "c2"
-    )
-    for r in twice.collect():
-        assert r["c2"] == r["url2"]
+    once = canonicalize_urls(df).select(F.col("url_canon").alias("url"))
+    for r in canonicalize_urls(once).collect():
+        assert r["url_canon"] == r["url"]
 
 
 def test_narrow_plan_no_exchange(spark):
