@@ -28,7 +28,7 @@ from finetoo_sp_spark.contract._core import (
     "extract_main_text",
     _EXTRACT_ORACLE,
     audit=[
-        ("arrow-batched python stage", r"(MapInPandas|ArrowEvalPython)"),
+        ("arrow-batched python stage", r"MapInArrow"),
         ("only url/html/doc_id scanned", r"ReadSchema: struct<doc_id:bigint,text:string,lang:string,source:string>"),
     ],
 )
@@ -209,7 +209,7 @@ SELECT url, text, CAST(nb AS BIGINT) AS n_blocks,
   CAST(length(text) - seps AS BIGINT) AS content_chars
 FROM exp""",
     audit=[
-        ("both branches arrow-batched", r"MapInPandas"),
+        ("both branches arrow-batched", r"\(\d+\) MapInArrow[\s\S]*\(\d+\) MapInArrow"),
         ("union of routed branches", r"Union"),
     ],
 )
@@ -738,10 +738,10 @@ SELECT
   'windows-1252' AS charset
 FROM documents""",
     audit=[
-        ("ONE fused Arrow kernel (sniff+decode+extract)", r"MapInPandas"),
-        # formatted explain prints each node once in the tree ("MapInPandas (3)")
-        # and once in details ("(3) MapInPandas") — count details lines only.
-        ("NOT two kernels — sniff is fused, not chained", r"!\(\d+\) MapInPandas[\s\S]*\(\d+\) MapInPandas"),
+        ("ONE fused Arrow kernel (sniff+decode+extract)", r"MapInArrow"),
+        # formatted explain prints each node once in the tree ("MapInArrow (3)")
+        # and once in details ("(3) MapInArrow") — count details lines only.
+        ("NOT two kernels — sniff is fused, not chained", r"!\(\d+\) MapIn(Pandas|Arrow)[\s\S]*\(\d+\) MapIn(Pandas|Arrow)"),
         ("NO shuffle end-to-end", r"!Exchange"),
     ],
 )
@@ -812,7 +812,7 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
        ELSE 'ok' END AS reason
 FROM documents""",
     audit=[
-        ("flags compose onto the extraction kernel output", r"MapInPandas"),
+        ("flags compose onto the extraction kernel output", r"MapInArrow"),
         ("NO shuffle (column-op flags)", r"!Exchange"),
     ],
 )
@@ -1039,7 +1039,7 @@ SELECT 'https://pdfenc.example.com/' || doc_id AS url,
     AS content_chars
 FROM documents WHERE doc_id < 120""",
     audit=[
-        ("decrypt+parse is one Arrow pass", r"MapInPandas"),
+        ("decrypt+parse is one Arrow pass", r"MapInArrow"),
         ("NO shuffle", r"!Exchange hashpartitioning"),
     ],
 )
@@ -1096,7 +1096,7 @@ SELECT 'https://pdf15.example.com/' || doc_id AS url,
   CAST(length('HZpacked body ' || doc_id) AS BIGINT) AS content_chars
 FROM documents WHERE doc_id < 120""",
     audit=[
-        ("expansion+parse is one Arrow pass", r"MapInPandas"),
+        ("expansion+parse is one Arrow pass", r"MapInArrow"),
         ("NO shuffle", r"!Exchange hashpartitioning"),
     ],
 )

@@ -211,7 +211,7 @@ SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
 FROM work""",
     audit=[
         ("old side joins as slim hash dimension", r"xxhash64"),
-        ("extraction kernel only after the delta filter", r"MapInPandas"),
+        ("extraction kernel only after the delta filter", r"MapInArrow"),
     ],
 )
 def q_incremental_extract(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -190,10 +190,9 @@ def documents_to_variant_pages(documents: DataFrame) -> DataFrame:
             F.lit(".example.com/doc/"),
             F.col("doc_id"),
         )
-        omit = (F.lit(prefix) == "amp") & (F.col("doc_id") % 5 == 0)
-        link = F.when(omit, F.lit("")).otherwise(
-            F.concat(F.lit('<link rel="canonical" href="'), www, F.lit('">'))
-        )
+        link = F.concat(F.lit('<link rel="canonical" href="'), www, F.lit('">'))
+        if prefix == "amp":
+            link = F.when(F.col("doc_id") % 5 == 0, F.lit("")).otherwise(link)
         html = F.concat(
             F.lit("<html><head>"),
             link,

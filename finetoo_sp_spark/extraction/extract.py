@@ -2,7 +2,9 @@
 
 Scale design (BASELINE.json north_rule, 10^12-row design point):
 
-- all per-page work happens inside ``mapInPandas`` over Arrow batches —
+- all per-page work happens inside ``mapInArrow``: the kernel takes
+  Spark's Arrow batch and returns a ``pa.RecordBatch`` in the output's
+  Arrow schema, so no column goes through a per-row pandas conversion —
   a narrow, shuffle-free map stage that scales linearly with executors;
 - optional explicit ``repartition(n, xxhash64(url))`` *before* the map
   stage defuses host-level skew (many pages per host landing in one input
@@ -18,40 +20,17 @@ from collections.abc import Callable, Iterator
 from functools import lru_cache
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StringType, StructField, StructType
 
-from finetoo_sp_spark.extraction.kernel import extract_batch
+from finetoo_sp_spark.extraction.kernel import EXTRACT_ARROW_SCHEMA, extract_batch
 
-SPAN_TYPE = StructType(
-    [
-        StructField("start", LongType(), False),
-        StructField("end", LongType(), False),
-        StructField("tag", StringType(), True),
-    ]
-)
-
-EXTRACT_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), True),  # a null-url page is kept, not fatal
-        StructField("text", StringType(), False),
-        StructField("spans", ArrayType(SPAN_TYPE), False),
-        StructField("title", StringType(), True),
-        StructField("h1", StringType(), True),
-        StructField("lang_attr", StringType(), True),
-        StructField("n_blocks", LongType(), False),
-        StructField("n_content_blocks", LongType(), False),
-        StructField("content_chars", LongType(), False),
-    ]
-)
+# The kernel's output schema is the one declaration; Spark's is read off it.
+EXTRACT_SCHEMA = from_arrow_schema(EXTRACT_ARROW_SCHEMA)
 
 
 def url_salt(n_buckets: int, hash_mode: str = "xxhash64") -> Column:
@@ -146,16 +125,16 @@ def _map_pages(
     pages: DataFrame,
     repartition_buckets: int | None,
     keep_cols: list[str] | None,
-    batch: Callable[[pd.Series, pd.Series], pd.DataFrame],
+    batch: Callable[[pd.Series, pd.Series], pa.RecordBatch],
     extra_fields: tuple[StructField, ...] = (),
 ) -> DataFrame:
     """The one extraction plan: optional url-hash repartition, then one
-    ``mapInPandas`` over ``select(url, html, *keep_cols)``.
+    ``mapInArrow`` over ``select(url, html, *keep_cols)``.
 
-    ``batch(urls, html)`` returns EXTRACT_SCHEMA columns followed by
-    ``extra_fields``; ``keep_cols`` are appended unchanged. The output
-    schema is rebuilt per call (``StructType.add`` would mutate the
-    shared EXTRACT_SCHEMA)."""
+    ``batch(urls, html)`` returns a RecordBatch of EXTRACT_ARROW_SCHEMA
+    columns followed by ``extra_fields``; the ``keep_cols`` Arrow columns
+    are appended unchanged. The output schema is rebuilt per call
+    (``StructType.add`` would mutate the shared EXTRACT_SCHEMA)."""
     keep_cols = keep_cols or []
     src = pages.select("url", "html", *keep_cols)
     if repartition_buckets:
@@ -165,16 +144,16 @@ def _map_pages(
         EXTRACT_SCHEMA.fields + list(extra_fields) + [pages.schema[c] for c in keep_cols]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            res = batch(pdf["url"], pdf["html"])
+            res = batch(rb.column("url").to_pandas(), rb.column("html").to_pandas())
             for c in keep_cols:
-                res[c] = pdf[c].reset_index(drop=True)
+                res = res.append_column(rb.schema.field(c), rb.column(c))
             yield res
 
-    return src.mapInPandas(run, schema=out_schema)
+    return src.mapInArrow(run, schema=out_schema)
 
 
 def extract_pages_sniffed(
@@ -187,18 +166,21 @@ def extract_pages_sniffed(
     the extractor to plug into ``run_resumable_extraction(extractor=)``
     for corpora with legacy-encoded pages. Sniff + decode + tokenize +
     classify run FUSED in one Arrow kernel (no intermediate re-encode,
-    no second mapInPandas); the detected ``charset`` is appended as an
+    no second mapInArrow); the detected ``charset`` is appended as an
     output column so downstream audits can stratify by encoding.
     """
+    return _map_pages(
+        pages, repartition_buckets, keep_cols, sniffed_batch,
+        (StructField("charset", StringType(), True),),
+    )
+
+
+def sniffed_batch(urls: pd.Series, html: pd.Series) -> pa.RecordBatch:
+    """:func:`extract_batch` over the charset-sniffed decode of ``html``,
+    with the detected ``charset`` appended."""
     from finetoo_sp_spark.extraction.charset import sniff_decode_pandas
 
-    def batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
-        sniffed = sniff_decode_pandas(html)
-        res = extract_batch(urls, sniffed["text"])
-        res["charset"] = sniffed["charset"].reset_index(drop=True)
-        return res
-
-    return _map_pages(
-        pages, repartition_buckets, keep_cols, batch,
-        (StructField("charset", StringType(), True),),
+    sniffed = sniff_decode_pandas(html)
+    return extract_batch(urls, sniffed["text"]).append_column(
+        pa.field("charset", pa.string()), pa.array(sniffed["charset"], pa.string())
     )

@@ -7,7 +7,7 @@ node conversion, REFERENCES edge pass, stats):
 - page nodes   <- extract_pages() rows, node_id = url, plus a SHA-256
   content hash of the extracted text (reference: source_file_hash,
   proto/graph.proto:163);
-- block nodes  <- blocks_batch() rows, node_id = '<url>#b<block_id>',
+- block nodes  <- blocks_arrow() rows, node_id = '<url>#b<block_id>',
   plus a per-block SHA-256 content hash (reference:
   BlockContent.content_hash, proto/graph.proto:172, hashed over
   deterministically-ordered content, block_analyzer.cc:22-30 — our block
@@ -27,21 +27,17 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StringType, StructField, StructType
 
 from finetoo_sp_spark.extraction.extract import extract_pages
 from finetoo_sp_spark.extraction.kernel import (
-    blocks_batch,
+    BLOCKS_ARROW_SCHEMA,
+    blocks_arrow,
     decode_html,
     extract_anchors,
     extract_links,
@@ -49,20 +45,7 @@ from finetoo_sp_spark.extraction.kernel import (
 from finetoo_sp_spark.operators.primitives import PropertyGraphFrames
 from finetoo_sp_spark.schema.registry import web_graph_schema
 
-BLOCKS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), True),  # a null-url page is kept, not fatal
-        StructField("block_id", LongType(), False),
-        StructField("tag", StringType(), True),
-        StructField("text", StringType(), False),
-        StructField("n_words", LongType(), False),
-        StructField("n_chars", LongType(), False),
-        StructField("link_density", DoubleType(), False),
-        StructField("is_content", BooleanType(), False),
-        StructField("span_start", LongType(), False),
-        StructField("span_end", LongType(), False),
-    ]
-)
+BLOCKS_SCHEMA = from_arrow_schema(BLOCKS_ARROW_SCHEMA)
 
 LINKS_SCHEMA = StructType(
     [
@@ -73,14 +56,15 @@ LINKS_SCHEMA = StructType(
 
 
 def extract_blocks(pages: DataFrame) -> DataFrame:
-    """Block-level extraction as a DataFrame (one row per DOM region)."""
+    """Block-level extraction as a DataFrame (one row per DOM region):
+    ``mapInArrow`` over the kernel's Arrow blocks batch."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not pdf.empty:
-                yield blocks_batch(pdf["url"], pdf["html"])
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows:
+                yield blocks_arrow(rb.column("url").to_pandas(), rb.column("html").to_pandas())
 
-    return pages.select("url", "html").mapInPandas(run, schema=BLOCKS_SCHEMA)
+    return pages.select("url", "html").mapInArrow(run, schema=BLOCKS_SCHEMA)
 
 
 def extract_link_pairs(pages: DataFrame) -> DataFrame:

@@ -1,7 +1,10 @@
 """Vectorized extraction kernels (no Spark imports).
 
-This module is the per-batch "inner loop" that runs inside Arrow-batched
-``mapInPandas`` on executors. It re-expresses the reference's *stateful,
+This module is the per-batch "inner loop" that runs inside ``mapInArrow``
+on executors. It returns a ``pa.RecordBatch`` in the Arrow schema Spark
+expects back (:data:`EXTRACT_ARROW_SCHEMA`, :data:`BLOCKS_ARROW_SCHEMA`),
+built from the Arrow arrays it computes, so no output column goes through
+a per-row pandas conversion. It re-expresses the reference's *stateful,
 per-row* C++ parser as *per-batch columnar* ops:
 
 - reference pair tokenizer (src/parser/dxf_text_parser.cc:124-156, 2-line
@@ -22,7 +25,11 @@ url"): every output column is a pure function of (url, html) — no wall
 clock, no partition order, no dict iteration order. The same page yields
 the same bytes under any partitioning. Whitespace collapsing uses RE2's
 ASCII ``\\s`` class (pyarrow); exotic unicode whitespace is preserved —
-deterministically — rather than collapsed.
+deterministically — rather than collapsed. The collapse and the entity
+unescape run only on the rows they can change (:func:`_on_rows`): rows
+with a ``[\\t\\n\\f\\r]`` or two spaces in a row, rows with an ``&``. The
+gate tests the same ASCII class, so every other row is left as the
+ungated pass would leave it.
 """
 
 from __future__ import annotations
@@ -84,12 +91,77 @@ _HOST_RE = re.compile(r"^(https?://[^/]+)", re.I)
 
 _STR = pa.large_string()
 _EMPTY = pa.scalar("", type=_STR)
+# a row the ``\s+`` -> " " collapse changes: one of RE2's ASCII ``\s``
+# other than the space, or two spaces in a row
+_COLLAPSIBLE_PAT = r"[\t\n\f\r]|  "
+
+# The output batches, in the Arrow types Spark's ``to_arrow_schema`` gives
+# for the Spark schemas derived from them (extract.EXTRACT_SCHEMA,
+# graph.BLOCKS_SCHEMA): ``string`` not ``large_string``, and the span
+# offsets non-nullable inside their nullable list element.
+_SPAN_TYPE = pa.struct(
+    [
+        pa.field("start", pa.int64(), nullable=False),
+        pa.field("end", pa.int64(), nullable=False),
+        pa.field("tag", pa.string()),
+    ]
+)
+EXTRACT_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("url", pa.string()),  # a null-url page is kept, not fatal
+        pa.field("text", pa.string(), nullable=False),
+        pa.field("spans", pa.list_(pa.field("element", _SPAN_TYPE)), nullable=False),
+        pa.field("title", pa.string()),
+        pa.field("h1", pa.string()),
+        pa.field("lang_attr", pa.string()),
+        pa.field("n_blocks", pa.int64(), nullable=False),
+        pa.field("n_content_blocks", pa.int64(), nullable=False),
+        pa.field("content_chars", pa.int64(), nullable=False),
+    ]
+)
+BLOCKS_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("url", pa.string()),  # a null-url page is kept, not fatal
+        pa.field("block_id", pa.int64(), nullable=False),
+        pa.field("tag", pa.string()),
+        pa.field("text", pa.string(), nullable=False),
+        pa.field("n_words", pa.int64(), nullable=False),
+        pa.field("n_chars", pa.int64(), nullable=False),
+        pa.field("link_density", pa.float64(), nullable=False),
+        pa.field("is_content", pa.bool_(), nullable=False),
+        pa.field("span_start", pa.int64(), nullable=False),
+        pa.field("span_end", pa.int64(), nullable=False),
+    ]
+)
 
 
-def _unescape_arrow(arr: pa.Array) -> pa.Array:
+def _on_rows(arr: pa.Array, mask: pa.Array, fn) -> pa.Array:
+    """``fn(arr)``, computed only on the rows where ``mask`` is true: the
+    other rows must be ones ``fn`` leaves unchanged."""
+    mask = mask.fill_null(False)
+    if not pc.any(mask).as_py():
+        return arr
+    return pc.replace_with_mask(arr, mask, fn(arr.filter(mask)))
+
+
+def _unescape_all(arr: pa.Array) -> pa.Array:
     for ent, ch in _ENTITIES:
         arr = pc.replace_substring(arr, pattern=ent, replacement=ch)
     return arr
+
+
+def _unescape_arrow(arr: pa.Array) -> pa.Array:
+    """Decode the entities of ``_ENTITIES``; every one starts with ``&``."""
+    return _on_rows(arr, pc.match_substring(arr, pattern="&"), _unescape_all)
+
+
+def _collapse_ws(arr: pa.Array) -> pa.Array:
+    """Replace each run of RE2's ASCII ``\\s`` with one space."""
+    return _on_rows(
+        arr,
+        pc.match_substring_regex(arr, pattern=_COLLAPSIBLE_PAT),
+        lambda a: pc.replace_substring_regex(a, pattern=r"\s+", replacement=" "),
+    )
 
 
 def _extract_named(arr: pa.Array, pattern: str) -> pa.Array:
@@ -101,9 +173,7 @@ def _extract_named(arr: pa.Array, pattern: str) -> pa.Array:
 
 def _norm_arrow(arr: pa.Array) -> pa.Array:
     """Unescape entities, collapse whitespace runs, trim."""
-    arr = _unescape_arrow(arr)
-    arr = pc.replace_substring_regex(arr, pattern=r"\s+", replacement=" ")
-    return pc.utf8_trim_whitespace(arr)
+    return pc.utf8_trim_whitespace(_collapse_ws(_unescape_arrow(arr)))
 
 
 def _seg_cumsum_multi(rows: list[np.ndarray], offsets: np.ndarray, doc: np.ndarray) -> list[np.ndarray]:
@@ -291,9 +361,7 @@ def classify_arrays(tf: TokenFrame) -> BlockFrame:
     doc_b = doc_f[starts]
     block_id_b = block_f[starts]
 
-    text = pc.utf8_trim_whitespace(
-        pc.replace_substring_regex(raw, pattern=r"\s+", replacement=" ")
-    )
+    text = pc.utf8_trim_whitespace(_collapse_ws(raw))
     n_chars = pc.utf8_length(text).to_numpy(zero_copy_only=False).astype(np.int64)
 
     nonempty = n_chars > 0
@@ -386,43 +454,47 @@ def extract_anchors(urls: pd.Series, html_text: pd.Series) -> pd.DataFrame:
     return _resolve_hrefs(out)[["url", "target", "anchor"]].reset_index(drop=True)
 
 
-def blocks_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
-    """Per-batch block-level extraction: one row per non-empty DOM region.
+def blocks_arrow(urls: pd.Series, html: pd.Series) -> pa.RecordBatch:
+    """Per-batch block-level extraction: one row per non-empty DOM region,
+    as a :data:`BLOCKS_ARROW_SCHEMA` batch with ``tag`` null-filled to ''.
 
     The relational 'block node' feed for the property graph (reference
     analogue: DXFBlock -> block nodes, graph_builder.cc:137-170).
     """
-    urls = urls.reset_index(drop=True)
-    html_text = decode_html(html.reset_index(drop=True))
-    b = classify_arrays(tokenize_arrays(html_text))
-    tags = b.block_tag.fill_null("").to_pandas().astype(object) if len(b.doc) else pd.Series(dtype=object)
-    return pd.DataFrame(
-        {
-            "url": urls.to_numpy(dtype=object)[b.doc] if len(b.doc) else pd.Series(dtype=object),
-            "block_id": b.block_id,
-            "tag": tags,
-            "text": b.text.to_pandas().astype(object) if len(b.doc) else pd.Series(dtype=object),
-            "n_words": b.n_words,
-            "n_chars": b.n_chars,
-            "link_density": b.link_density,
-            "is_content": b.is_content,
-            "span_start": b.span_start,
-            "span_end": b.span_end,
-        }
+    b = classify_arrays(tokenize_arrays(decode_html(html.reset_index(drop=True))))
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(urls, pa.string(), from_pandas=True).take(pa.array(b.doc)),
+            pa.array(b.block_id),
+            b.block_tag.fill_null("").cast(pa.string()),
+            b.text.cast(pa.string()),
+            pa.array(b.n_words),
+            pa.array(b.n_chars),
+            pa.array(b.link_density),
+            pa.array(b.is_content),
+            pa.array(b.span_start),
+            pa.array(b.span_end),
+        ],
+        schema=BLOCKS_ARROW_SCHEMA,
     )
 
 
-def extract_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
-    """Full per-batch extraction: (url, html) -> one row per page.
+def blocks_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
+    """:func:`blocks_arrow` as a pandas DataFrame."""
+    return blocks_arrow(urls, html).to_pandas()
+
+
+def extract_batch(urls: pd.Series, html: pd.Series) -> pa.RecordBatch:
+    """Full per-batch extraction: (url, html) -> one row per page, as an
+    :data:`EXTRACT_ARROW_SCHEMA` batch.
 
     Output columns: url, text (main content, blocks joined by '\\n'),
-    spans (Arrow list of (start, end, tag) structs, read back as lists of
-    dicts — char offsets into the decoded, comment-stripped HTML), title,
-    h1, lang_attr, n_blocks, n_content_blocks, content_chars.
+    spans (list of (start, end, tag) structs — char offsets into the
+    decoded, comment-stripped HTML), title, h1, lang_attr, n_blocks,
+    n_content_blocks, content_chars.
     """
-    urls = urls.reset_index(drop=True)
     html_text = decode_html(html.reset_index(drop=True))
-    n_docs = len(urls)
+    n_docs = len(html_text)
 
     tf = tokenize_arrays(html_text)
     b = classify_arrays(tf)
@@ -440,7 +512,7 @@ def extract_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
 
     content_chars = np.zeros(n_docs, dtype=np.int64)
     np.add.at(content_chars, doc_c, b.n_chars[content])
-    n_blocks = np.bincount(b.doc, minlength=n_docs) if len(b.doc) else np.zeros(n_docs, np.int64)
+    n_blocks = np.bincount(b.doc, minlength=n_docs)
 
     # spans: the content blocks as list<struct<start,end,tag>>, sharing
     # the per-doc offsets of the text join above
@@ -450,9 +522,11 @@ def extract_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
             pa.array(b.span_end[content], pa.int64()),
             b.block_tag.take(pa.array(content)).fill_null("").cast(pa.string()),
         ],
-        names=["start", "end", "tag"],
+        fields=list(_SPAN_TYPE),
     )
-    spans = pa.ListArray.from_arrays(join_offsets.astype(np.int32), span_items)
+    spans = pa.ListArray.from_arrays(
+        join_offsets.astype(np.int32), span_items, type=EXTRACT_ARROW_SCHEMA.field("spans").type
+    )
 
     # typed schema fields (reference analogue: typed field mapping,
     # proto/graph.proto:213-298 CAD messages; here: title/h1/lang).
@@ -460,25 +534,24 @@ def extract_batch(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
     title = _norm_arrow(_extract_named(doc_arrow, _TITLE_PAT).fill_null(""))
     lang_attr = _extract_named(doc_arrow, _LANG_PAT).fill_null("")
 
-    h1 = np.full(n_docs, "", dtype=object)
-    if len(b.doc):
-        is_h1 = pc.equal(b.block_tag, "h1").fill_null(False).to_numpy(zero_copy_only=False)
-        h1_idx = np.flatnonzero(is_h1)
-        if len(h1_idx):
-            docs_h1, first_pos = np.unique(b.doc[h1_idx], return_index=True)
-            h1_text = b.text.take(pa.array(h1_idx[first_pos])).to_pylist()
-            h1[docs_h1] = h1_text
+    # h1: the text of each doc's first h1 block, '' where it has none
+    h1_idx = np.flatnonzero(pc.equal(b.block_tag, "h1").fill_null(False).to_numpy(zero_copy_only=False))
+    docs_h1, first_pos = np.unique(b.doc[h1_idx], return_index=True)
+    h1_pos = np.full(n_docs, -1, dtype=np.int64)
+    h1_pos[docs_h1] = h1_idx[first_pos]
+    h1 = b.text.take(pa.array(h1_pos, mask=h1_pos < 0)).fill_null("")
 
-    return pd.DataFrame(
-        {
-            "url": urls,
-            "text": text_per_doc.to_pandas().astype(object),
-            "spans": pd.arrays.ArrowExtensionArray(spans),
-            "title": title.to_pandas().astype(object),
-            "h1": h1,
-            "lang_attr": lang_attr.to_pandas().astype(object),
-            "n_blocks": n_blocks.astype(np.int64),
-            "n_content_blocks": counts_c.astype(np.int64),
-            "content_chars": content_chars,
-        }
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(urls, pa.string(), from_pandas=True),
+            text_per_doc.cast(pa.string()),
+            spans,
+            title.cast(pa.string()),
+            h1.cast(pa.string()),
+            lang_attr.cast(pa.string()),
+            pa.array(n_blocks, pa.int64()),
+            pa.array(counts_c, pa.int64()),
+            pa.array(content_chars),
+        ],
+        schema=EXTRACT_ARROW_SCHEMA,
     )

@@ -21,8 +21,8 @@ separator) instead of the flat extractor's single '\\n'.
 Vectorization: the prefix is a dictionary lookup on the block tag
 column (pandas map on the per-batch block frame) and one string
 concat; the per-doc assembly reuses the Arrow list-join pattern from
-extract_batch. Plan shape: identical to extract_main_text — one
-mapInPandas, embarrassingly parallel, no shuffle.
+extract_batch. Plan shape: one mapInPandas, embarrassingly parallel,
+no shuffle.
 """
 
 from __future__ import annotations

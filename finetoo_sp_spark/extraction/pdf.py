@@ -33,11 +33,13 @@ FAKEPDF format (text, utf-8)::
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from finetoo_sp_spark.extraction.extract import _map_pages, extract_pages
+from finetoo_sp_spark.extraction.kernel import EXTRACT_ARROW_SCHEMA
 
 FAKE_MAGIC = b"%PDF-FAKE"
 PDF_MAGIC = b"%PDF-"
@@ -93,10 +95,8 @@ def _have_pdfminer() -> bool:
         return False
 
 
-def extract_pdf_batch(urls: pd.Series, payload: pd.Series) -> pd.DataFrame:
-    """(url, payload) -> EXTRACT_SCHEMA-shaped rows via layout analysis."""
-    urls = urls.reset_index(drop=True)
-    payload = payload.reset_index(drop=True)
+def extract_pdf_batch(urls: pd.Series, payload: pd.Series) -> pa.RecordBatch:
+    """(url, payload) -> an EXTRACT_ARROW_SCHEMA batch via layout analysis."""
     use_real = _have_pdfminer()
 
     out_rows = []
@@ -163,7 +163,7 @@ def extract_pdf_batch(urls: pd.Series, payload: pd.Series) -> pd.DataFrame:
                 "content_chars": len(text) - (n_blocks - 1 if n_blocks else 0),
             }
         )
-    return pd.DataFrame(out_rows)
+    return pa.RecordBatch.from_pylist(out_rows, schema=EXTRACT_ARROW_SCHEMA)
 
 
 def extract_pages_any(
@@ -175,7 +175,7 @@ def extract_pages_any(
     tokenizer path; union into one EXTRACT_SCHEMA output.
 
     The routing predicate is a JVM-side prefix check on the binary column
-    (no Python touch for the split), so each path's mapInPandas sees only
+    (no Python touch for the split), so each path's mapInArrow sees only
     its own rows — a narrow, shuffle-free plan on both branches.
     ``repartition_buckets`` and ``keep_cols`` are extract_pages' own
     (applied to each branch): the extractor protocol that

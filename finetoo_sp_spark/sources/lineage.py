@@ -114,11 +114,16 @@ def committed_buckets(out_dir: str) -> tuple[list[int], int]:
 
 def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The manifest table under ``out_dir``, or None when no manifest was
-    ever written. A manifest directory Spark cannot read raises."""
+    ever written. A manifest directory Spark cannot read raises.
+
+    Spark's file listing treats the ``_``-prefixed root as hidden, so the
+    read names its ``bucket=*`` children, and ``basePath`` keeps
+    ``bucket`` a partition column."""
     path = os.path.join(out_dir, MANIFEST_DIRNAME)
     if not os.path.isdir(path):  # cheap driver-side check, no Spark job
         return None
-    return spark.read.parquet(path)
+    buckets = [os.path.join(path, d) for d in sorted(os.listdir(path)) if d.startswith("bucket=")]
+    return spark.read.option("basePath", path).parquet(*buckets)
 
 
 def write_with_manifests(

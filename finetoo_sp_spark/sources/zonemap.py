@@ -66,8 +66,11 @@ def scan_range(
     make the elimination observable (and testable): buckets_total vs
     buckets_scanned. The manifest is bucket-count-sized, so the driver
     collect is O(n_buckets), never O(rows)."""
-    man = spark.read.parquet(os.path.join(out_dir, MANIFEST_DIRNAME))
-    rows = man.collect()
+    # Spark's file listing treats the ``_``-prefixed dir as hidden: name
+    # the part files it holds
+    path = os.path.join(out_dir, MANIFEST_DIRNAME)
+    parts = [os.path.join(path, f) for f in sorted(os.listdir(path)) if f.startswith("part-")]
+    rows = spark.read.parquet(*parts).collect()
     keep = [
         r["bucket"] for r in rows if not (r["max_key"] < lo or r["min_key"] >= hi)
     ]

@@ -11,6 +11,7 @@ from finetoo_sp_spark.datagen import gen_pages
 from finetoo_sp_spark.extraction.extract import extract_pages, place_buckets, url_salt
 from finetoo_sp_spark.sources.lineage import (
     MANIFEST_DIRNAME,
+    committed_buckets,
     read_manifests,
     run_resumable_extraction,
     write_with_manifests,
@@ -280,6 +281,20 @@ def test_resume_reads_spark_written_manifests(spark, pages, tmp_path):
         "status": "string", "bucket": "int",
     }
     assert run_resumable_extraction(pages, out, n_buckets=8)["rows_in"] == 0
+
+
+def test_read_manifests_yields_every_committed_bucket(spark, pages, tmp_path):
+    """read_manifests names the bucket dirs under the ``_``-prefixed root,
+    which Spark's listing treats as hidden, and returns exactly the
+    buckets the driver-side resume check counts, ``bucket`` a column."""
+    out = str(tmp_path / "out")
+    run_resumable_extraction(pages, out, n_buckets=8)
+    committed, n_out = committed_buckets(out)
+    man = read_manifests(spark, out)
+    got = sorted(r["bucket"] for r in man.select("bucket").distinct().collect())
+    assert got == committed == list(range(8))
+    assert man.agg(F.sum("output_count")).first()[0] == n_out == N_PAGES
+    assert all(f"/{MANIFEST_DIRNAME}/bucket=" in f for f in man.inputFiles())
 
 
 def test_unreadable_manifest_directory_raises(spark, tmp_path):

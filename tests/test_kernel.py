@@ -7,6 +7,7 @@ hand-computed fixtures, no Spark session needed.
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from finetoo_sp_spark.extraction.kernel import (
@@ -93,7 +94,7 @@ def test_heading_rule():
 
 
 def test_fixture_extraction_byte_identical():
-    out = extract_batch(pd.Series(["u1"]), pd.Series([FIXTURE_HTML.encode()]))
+    out = extract_batch(pd.Series(["u1"]), pd.Series([FIXTURE_HTML.encode()])).to_pandas()
     assert out["text"].iloc[0] == FIXTURE_EXPECTED
     assert out["title"].iloc[0] == "My Title"
     assert out["h1"].iloc[0] == "Big Headline"
@@ -102,7 +103,7 @@ def test_fixture_extraction_byte_identical():
 
 
 def test_spans_point_into_decoded_html():
-    out = extract_batch(pd.Series(["u1"]), pd.Series([FIXTURE_HTML]))
+    out = extract_batch(pd.Series(["u1"]), pd.Series([FIXTURE_HTML])).to_pandas()
     spans = out["spans"].iloc[0]
     assert len(spans) == 3
     h1_span = spans[0]
@@ -116,7 +117,7 @@ def test_empty_and_degenerate_inputs():
     out = extract_batch(
         pd.Series(["a", "b", "c"]),
         pd.Series([b"", b"no tags at all plain text", b"<p></p>"]),
-    )
+    ).to_pandas()
     assert list(out["url"]) == ["a", "b", "c"]
     assert (out["text"] == "").iloc[0]
     assert (out["text"] == "").iloc[2]
@@ -127,15 +128,14 @@ def test_batch_boundary_independence():
     partition-independence half of byte-identical determinism)."""
     htmls = [FIXTURE_HTML, "<p>" + LONG + "</p>", "<div><a href='/'>x</a></div>"]
     urls = [f"u{i}" for i in range(3)]
-    whole = extract_batch(pd.Series(urls), pd.Series(htmls))
-    parts = pd.concat(
+    whole = pa.Table.from_batches([extract_batch(pd.Series(urls), pd.Series(htmls))])
+    parts = pa.Table.from_batches(
         [
             extract_batch(pd.Series(urls[:1]), pd.Series(htmls[:1])),
             extract_batch(pd.Series(urls[1:]), pd.Series(htmls[1:])),
-        ],
-        ignore_index=True,
+        ]
     )
-    pd.testing.assert_frame_equal(whole, parts)
+    assert whole.equals(parts)
 
 
 def test_datagen_expected_matches_extractor():
@@ -144,7 +144,7 @@ def test_datagen_expected_matches_extractor():
     from finetoo_sp_spark.datagen import gen_pages_pandas
 
     pages = gen_pages_pandas(np.arange(200))
-    out = extract_batch(pages["url"], pages["html"])
+    out = extract_batch(pages["url"], pages["html"]).to_pandas()
     mismatches = (out["text"] != pages["expected_text"]).sum()
     assert mismatches == 0
 

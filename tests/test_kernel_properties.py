@@ -17,6 +17,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -58,21 +59,20 @@ def test_tokenizer_partitions_any_input(doc):
 @given(st.lists(_doc, min_size=1, max_size=6))
 def test_batch_composition_independence(docs):
     urls = pd.Series([f"u{i}" for i in range(len(docs))])
-    whole = extract_batch(urls, pd.Series(docs))
-    parts = pd.concat(
+    whole = pa.Table.from_batches([extract_batch(urls, pd.Series(docs))])
+    parts = pa.Table.from_batches(
         [
             extract_batch(urls[i : i + 1].reset_index(drop=True), pd.Series([docs[i]]))
             for i in range(len(docs))
-        ],
-        ignore_index=True,
+        ]
     )
-    pd.testing.assert_frame_equal(whole, parts)
+    assert whole.equals(parts)
 
 
 @settings(max_examples=100, deadline=None)
 @given(_doc)
 def test_spans_inside_document(doc):
-    out = extract_batch(pd.Series(["u"]), pd.Series([doc]))
+    out = extract_batch(pd.Series(["u"]), pd.Series([doc])).to_pandas()
     stripped = _COMMENT_RE.sub("", doc)
     for span in out["spans"].iloc[0]:
         assert 0 <= span["start"] < span["end"] <= len(stripped)
@@ -84,7 +84,7 @@ def test_spans_inside_document(doc):
 @settings(max_examples=50, deadline=None)
 @given(st.binary(min_size=0, max_size=200))
 def test_binary_garbage_never_raises(payload):
-    out = extract_batch(pd.Series(["u"]), pd.Series([payload]))
+    out = extract_batch(pd.Series(["u"]), pd.Series([payload])).to_pandas()
     assert len(out) == 1
     assert isinstance(out["text"].iloc[0], str)
 
@@ -92,7 +92,7 @@ def test_binary_garbage_never_raises(payload):
 @settings(max_examples=50, deadline=None)
 @given(st.lists(_doc, min_size=1, max_size=4))
 def test_counters_consistent(docs):
-    out = extract_batch(pd.Series([f"u{i}" for i in range(len(docs))]), pd.Series(docs))
+    out = extract_batch(pd.Series([f"u{i}" for i in range(len(docs))]), pd.Series(docs)).to_pandas()
     assert (out["n_content_blocks"] <= out["n_blocks"]).all()
     assert (out["n_content_blocks"] == out["spans"].map(len)).all()
     # text is the newline-join of n_content_blocks blocks

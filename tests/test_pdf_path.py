@@ -26,7 +26,7 @@ def payload():
 
 
 def test_reading_order_and_blocks(payload):
-    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([payload]))
+    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([payload])).to_pandas()
     r = out.iloc[0]
     # same-y fragments join left->right; y-gap starts a new block; page break too
     assert r["text"] == "left header right header\nbody paragraph one continues close below\nsecond page"
@@ -35,7 +35,7 @@ def test_reading_order_and_blocks(payload):
 
 
 def test_unknown_binary_yields_empty_not_error():
-    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([b"\x89PNG not a pdf"]))
+    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([b"\x89PNG not a pdf"])).to_pandas()
     assert out.iloc[0]["text"] == ""
     assert out.iloc[0]["n_blocks"] == 0
 
@@ -43,7 +43,7 @@ def test_unknown_binary_yields_empty_not_error():
 def test_deterministic(payload):
     a = extract_pdf_batch(pd.Series(["u"]), pd.Series([payload]))
     b = extract_pdf_batch(pd.Series(["u"]), pd.Series([payload]))
-    pd.testing.assert_frame_equal(a, b)
+    assert a.equals(b)
 
 
 def test_spark_routing_union(spark):
@@ -119,7 +119,7 @@ def test_real_pdf_roundtrip_through_layout_path():
         ]
     )
     assert pdf.startswith(b"%PDF-1.4")
-    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([pdf]))
+    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([pdf])).to_pandas()
     r = out.iloc[0]
     assert r["text"] == "left header right header\nbody paragraph one continues close below"
     assert r["n_blocks"] == 2
@@ -179,7 +179,7 @@ def test_reference_model_pdfs_extract():
     if not pdfs:
         pytest.skip("reference PDFs not present")
     payloads = [open(p, "rb").read() for p in pdfs]
-    out = extract_pdf_batch(pd.Series([os.path.basename(p) for p in pdfs]), pd.Series(payloads))
+    out = extract_pdf_batch(pd.Series([os.path.basename(p) for p in pdfs]), pd.Series(payloads)).to_pandas()
     assert (out["n_blocks"] > 0).all()
     assert out["text"].str.contains("AS RECORDED").all()
 

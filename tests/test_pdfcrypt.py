@@ -89,5 +89,5 @@ def test_failed_decrypt_falls_back_to_original_bytes():
     forged = plain.replace(b"trailer<<", b"trailer<</Encrypt 99 0 R")
     with pytest.raises(ValueError, match="not found"):
         decrypt_pdf(forged)
-    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([forged]))
+    out = extract_pdf_batch(pd.Series(["u"]), pd.Series([forged])).to_pandas()
     assert out.iloc[0]["text"] == "kept"

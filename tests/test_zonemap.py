@@ -48,6 +48,9 @@ def test_zonemap_manifest_is_bucket_sized(spark, sf_dir, tmp_path):
     assert 1 <= len(man) <= 8
     assert all(r["min_key"] <= r["max_key"] and r["n_rows"] > 0 for r in man)
     assert sum(r["n_rows"] for r in man) == ev.count()
+    # scan_range reads every manifest row of the ``_``-prefixed dir
+    _, stats = scan_range(spark, out, "ts", dt.datetime(1970, 1, 1), dt.datetime(2100, 1, 1))
+    assert stats["buckets_total"] == stats["buckets_scanned"] == len(man)
 
 
 def test_compaction_plan_bins_and_flags(spark):
